@@ -124,7 +124,7 @@ def contour_segments(tiles: DataFrame, raster_px: int,
              "tx", "ty", "data") \
      .filter(f"htx >= 0 and htx < {n_tiles} and hty >= 0 and hty < {n_tiles}")
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         htx, hty = int(key[0]), int(key[1])
         win = np.zeros((t + 2, t + 2), dtype=np.int64)
         for _, row in pdf.iterrows():
@@ -472,7 +472,7 @@ def contour_linestrings(tiles: DataFrame,
     w = raster_px
     levels = list(thresholds)
 
-    def trace(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def trace(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         li, comp = int(key[0]), int(key[1])
         thr = levels[li]
         na = pdf["na"].to_numpy(np.int64)

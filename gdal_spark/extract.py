@@ -94,127 +94,3 @@ def geocode_pages(pages: DataFrame, text_col: str = "text") -> DataFrame:
         .drop("_g")
     )
 
-
-# ---------------------------------------------------------------------------
-# JVM fast path: the identical extraction cascade as Catalyst expressions.
-#
-# "UDFs are the slow path": on this engine the Arrow UDF above is the
-# general extraction surface (arbitrary Python extractors), but the three
-# geotag forms are regular expressions, so the hot path pushes the whole
-# cascade into whole-stage codegen — regexp_extract + IEEE double casts
-# produce bit-identical (extracted_text, lat, lon) to the Python kernel
-# (tests assert full-table equality). At bench scale the JVM path removes
-# the Python-bridge bottleneck entirely; both paths coexist like GDAL's
-# driver fast paths vs the generic fallback (ogrlayerarrow.cpp
-# OLCFastGetArrowStream vs the base-class row loop).
-# ---------------------------------------------------------------------------
-
-_SQL_PATTERNS = (
-    rf"geo:({_NUM}),({_NUM})",
-    rf"coords=\(({_NUM}), ({_NUM})\)",
-    rf'"lat": ({_NUM}), "lon": ({_NUM})',
-)
-
-
-def geocode_pages_jvm(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """Pure-Catalyst twin of geocode_pages (same output, no Python).
-
-    Codegen-size discipline: every intermediate that is referenced more
-    than once is ALIASED as a real column first, so downstream
-    expressions reference an attribute (one slot, computed once per
-    row) instead of structurally re-embedding the whole
-    ``try_cast(regexp_extract(...))`` subtree. The earlier version
-    reused raw Column objects (``a_s``/``micro``/``fa``...) and the
-    duplication compounded multiplicatively: the fused stage generated
-    ~108k lines of Java (180 RegExpExtract sites for 9 logical
-    regexes), janino failed with "Code grows beyond 64 KB", and Spark
-    silently fell back to interpreted eval after a multi-second failed
-    compile on EVERY run — a fixed serial cost that capped the N→4N
-    scaling efficiency. Aliased, the same pipeline generates ~3k lines,
-    compiles, and stays in whole-stage codegen. Catalyst's
-    CollapseProject keeps the layering honest: it only re-inlines an
-    alias into multiple consumers when the expression is cheap
-    (SPARK-36718), and every multiply-referenced alias here is
-    non-cheap (regex/cast/CASE), so each stays a once-per-row slot.
-    """
-    t = F.col(text_col)
-    out = pages
-    oks = []
-    # Literal anchor per pattern: a byte-level Contains on the raw
-    # UTF8String (no String materialization, no UTF-16 expansion) gates
-    # each regex. regexp_extract converts the FULL page text to a Java
-    # String and scans it in UTF-16 — measured memory-bandwidth-bound at
-    # high core counts (8→32-core scaling was 1.6× before the gate). A
-    # page without the literal can't match the regex (the anchor is a
-    # required substring of any match), so the gate is semantics-free;
-    # pages lacking geotags — the overwhelming majority of a real crawl —
-    # now cost three byte scans instead of three UTF-16 regex scans.
-    _ANCHORS = ("geo:", "coords=(", '"lat": ')
-    for i, pat in enumerate(_SQL_PATTERNS):
-        # ONE full-text regex scan per pattern (group 0); the capture
-        # groups are re-parsed from the short matched token, not the
-        # page text. Full-text regexp_extract per group index means 9
-        # multi-KB scans per row; 3 gated scans restore the parallel
-        # headroom. The token is itself the first match of the pattern,
-        # so group parsing from it is semantics-identical.
-        out = out.withColumn(
-            f"_t{i}",
-            F.when(t.contains(_ANCHORS[i]), F.regexp_extract(t, pat, 0)))
-        out = out.withColumn(
-            f"_m{i}", F.nullif(F.col(f"_t{i}"), F.lit("")))
-        m_s = F.coalesce(F.col(f"_m{i}"), F.lit(""))
-        out = out.withColumn(f"_as{i}", F.regexp_extract(m_s, pat, 1))
-        out = out.withColumn(f"_bs{i}", F.regexp_extract(m_s, pat, 2))
-        # try_cast: on the no-match path the extracted group is "" and a
-        # plain cast throws under ANSI-on sessions (the driver's default);
-        # OGR's lossy-cast-→-NULL semantics must live in the expression.
-        out = out.withColumn(f"_a{i}", F.col(f"_as{i}").try_cast("double"))
-        out = out.withColumn(f"_b{i}", F.col(f"_bs{i}").try_cast("double"))
-        a, b = F.col(f"_a{i}"), F.col(f"_b{i}")
-        out = out.withColumn(
-            f"_mic{i}",
-            ((F.abs(a) > 90.0) | (F.abs(b) > 180.0))
-            & ~F.col(f"_as{i}").contains(".")
-            & ~F.col(f"_bs{i}").contains("."))
-        mic = F.col(f"_mic{i}")
-        out = out.withColumn(
-            f"_fa{i}", F.when(mic, a / 1000000.0).otherwise(a))
-        out = out.withColumn(
-            f"_fb{i}", F.when(mic, b / 1000000.0).otherwise(b))
-        out = out.withColumn(
-            f"_ok{i}",
-            F.col(f"_m{i}").isNotNull()
-            & (F.abs(F.col(f"_fa{i}")) <= 90.0)
-            & (F.abs(F.col(f"_fb{i}")) <= 180.0))
-        oks.append(f"_ok{i}")
-
-    def first_of(cols: list[str]) -> F.Column:
-        expr = F.lit(None)
-        for i in reversed(range(len(_SQL_PATTERNS))):
-            expr = F.when(F.col(oks[i]), F.col(cols[i])).otherwise(expr)
-        return expr
-
-    # The three outputs are emitted through a single-element
-    # inline(array(struct(...))) Generate rather than plain aliases.
-    # This is the pushdown barrier: a predicate on a GENERATED attribute
-    # can never be substituted into the generator (reordering a filter
-    # below a Generate is semantically invalid in general, so Catalyst's
-    # PushDownPredicates stops at it — a hard guarantee, unlike
-    # cost-model behavior). Without it, a caller's plain
-    # `.filter(lat.isNotNull())` is alias-substituted down the Project
-    # stack with no size guard, re-expanding the extraction chain
-    # multiplicatively (~150 RegExpExtract sites, ~140k generated lines,
-    # janino 64 KB failure → interpreted fallback + a multi-second
-    # failed compile per run). GenerateExec is whole-stage-codegen'd;
-    # the 1-element explode preserves row count exactly (the struct is
-    # never null), so semantics and schema are unchanged.
-    res = out.select(
-        *pages.columns,
-        F.inline(F.array(F.struct(
-            first_of([f"_m{i}" for i in range(3)])
-            .alias("extracted_text"),
-            first_of([f"_fa{i}" for i in range(3)]).cast("double")
-            .alias("lat"),
-            first_of([f"_fb{i}" for i in range(3)]).cast("double")
-            .alias("lon")))))
-    return res

@@ -103,8 +103,8 @@ def shift_defs(defs: list[dict], dx: float, dy: float) -> list[dict]:
     return out
 
 
-def convex_zone_tables_sql(defs_a: list[dict],
-                           defs_b: list[dict]) -> dict[str, str]:
+def convex_layer_values_sql(defs_a: list[dict],
+                            defs_b: list[dict]) -> dict[str, str]:
     """VALUES-table SQL snippets for an input layer A vs method layer B
     (OGR layer-algebra shape): verts/edges per layer + bbox-overlapping
     candidate pairs with polygon-area literals embedded."""
@@ -169,7 +169,7 @@ def overlay_areas_sql(defs_a: list[dict], defs_b: list[dict],
     """Full overlay query: one row per bbox-overlapping convex (A, B)
     pair with n_cand + intersection/union/symdifference/erase areas
     (0 when the polygons don't actually intersect)."""
-    t = convex_zone_tables_sql(defs_a, defs_b)
+    t = convex_layer_values_sql(defs_a, defs_b)
     if engine == SPARK:
         lst, srt, trn, elem = ("collect_list", "array_sort", "transform",
                                "element_at")

@@ -231,7 +231,7 @@ def intersection_features(spark: SparkSession, defs_a: list[dict],
                 "method_eas_id", "ring_a", "ring_b")
     )
 
-    def clip_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def clip_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pieces = []
         for _, r in pdf.iterrows():
             sub = np.asarray(list(r["ring_a"]), dtype=np.float64)
@@ -316,7 +316,7 @@ def erase_features(spark: SparkSession, defs_a: list[dict],
         .select("input_zone", "input_eas_id", "rings_a", "rings_b")
     )
 
-    def erase_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def erase_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         rings_a = [np.asarray([list(p) for p in r], dtype=np.float64)
                    for r in pdf["rings_a"].iloc[0]]
         # union-the-method-layer-first (GDAL Erase semantics): a

@@ -11,30 +11,28 @@ Execution model (Spark-first, NOT the reference's per-feature nested loop):
 - the polygon layer is small → collected once, packed into an STR R-tree,
   and **broadcast** to executors (torch-passing of GDAL's driver-level
   spatial indexes: FlatGeobuf packed R-tree, GPKG R-tree);
-- the point side is the 10^12-row table → a single **narrow** mapInPandas
-  pass, no shuffle at all. Each Arrow batch runs: R-tree bbox candidates →
-  exact even-odd PIP (the staged bbox→exact filter of
-  ogrlayer.cpp:2253-2325) → emit join rows.
+- the point side is the 10^12-row table → one **narrow** Arrow scalar UDF
+  over (lon, lat) only, no shuffle at all. Each Arrow batch runs: R-tree
+  bbox candidates → exact even-odd PIP (the staged bbox→exact filter of
+  ogrlayer.cpp:2253-2325) → the array of containing zone ids per point.
+  Every other column of the point table stays in the JVM, so the bytes
+  crossing the Python bridge do not grow with the row width.
 - modes: 'inner' (1 row per (point, zone) containment pair — Intersection),
   'semi' (point kept once if inside any zone — Clip), 'anti' (point kept if
   inside none — Erase, ogrlayer.cpp:5806).
 
 At 100 TB this is the right plan: the only shuffle in the whole pipeline is
-whatever aggregation follows (and that one is salted; see operators using
-this join). AQE/skew settings never see the hot cells because the join
-itself is embarrassingly parallel.
+whatever aggregation follows. AQE/skew settings never see the hot cells
+because the join itself is embarrassingly parallel.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import ArrayType, LongType
 
 from gdal_spark import geom as G
 from gdal_spark.strtree import STRtree
@@ -87,226 +85,28 @@ def pip_join(points: DataFrame, index: ZoneIndex, lon: str = "lon",
     """
     if how not in ("inner", "semi", "anti"):
         raise ValueError(how)
-    spark = points.sparkSession
-    bc = spark.sparkContext.broadcast(index)
+    bc = points.sparkSession.sparkContext.broadcast(index)
 
-    in_schema = points.schema
-    if how == "inner":
-        out_schema = StructType(
-            list(in_schema.fields) + [StructField(zone_col, LongType())]
-        )
-    else:
-        out_schema = in_schema
-
-    lon_i = points.columns.index(lon)
-    lat_i = points.columns.index(lat)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def zone_ids(px: pd.Series, py: pd.Series) -> pd.Series:
+        """Per point, the ids of the zones that contain it (maybe none)."""
         idx = bc.value
-        for pdf in batches:
-            px = pdf.iloc[:, lon_i].to_numpy(dtype=np.float64)
-            py = pdf.iloc[:, lat_i].to_numpy(dtype=np.float64)
-            pt, zi = idx.match_points(px, py)
-            if how == "inner":
-                out = pdf.iloc[pt].reset_index(drop=True)
-                out[zone_col] = idx.zone_ids[zi]
-                yield out
-            elif how == "semi":
-                sel = np.unique(pt)
-                yield pdf.iloc[sel].reset_index(drop=True)
-            else:  # anti
-                mask = np.ones(len(pdf), dtype=bool)
-                mask[pt] = False
-                yield pdf.iloc[mask].reset_index(drop=True)
+        pt, zi = idx.match_points(px.to_numpy(dtype=np.float64),
+                                  py.to_numpy(dtype=np.float64))
+        order = np.argsort(pt, kind="stable")
+        zones = idx.zone_ids[zi[order]]
+        bounds = np.searchsorted(pt[order], np.arange(len(px) + 1))
+        return pd.Series([zones[a:b] for a, b in zip(bounds[:-1], bounds[1:])],
+                         dtype=object)
 
-    return points.mapInPandas(run, schema=out_schema)
-
-
-# ---------------------------------------------------------------------------
-# JVM fast path: crossing-number PIP as broadcast equi-joins.
-#
-# For zone layers with modest vertex counts the whole even-odd ray cast is
-# expressible as Catalyst joins: candidate pairs from a broadcast bbox
-# join (the cheap stage of ogrlayer.cpp:2253's staged filter), then a
-# broadcast edge join + parity aggregation. Everything stays inside
-# whole-stage codegen — no Python bridge — so the join scales with cores.
-# The R-tree mapInPandas path above remains the general surface for
-# many-vertex polygon layers (where per-edge row expansion would explode).
-# Arithmetic is the exact expression of geom.points_in_ring, so both
-# paths and the DuckDB oracle agree bit-for-bit.
-# ---------------------------------------------------------------------------
-
-
-def zone_tables(spark, defs: list[dict]):
-    """(bbox_df, edges_df) from zone definitions (driver-side tiny)."""
-    from gdal_spark import geom as G
-
-    bboxes = []
-    edges = []
-    for z in defs:
-        minx, miny, maxx, maxy = G.rings_bbox(z["rings"])
-        bboxes.append((int(z["zone_id"]), float(minx), float(miny),
-                       float(maxx), float(maxy)))
-        for ring in z["rings"]:
-            for i in range(len(ring) - 1):
-                edges.append((int(z["zone_id"]),
-                              float(ring[i, 0]), float(ring[i, 1]),
-                              float(ring[i + 1, 0]), float(ring[i + 1, 1])))
-    bbox_df = spark.createDataFrame(
-        bboxes, "zone_id long, minx double, miny double, maxx double, "
-                "maxy double")
-    edges_df = spark.createDataFrame(
-        edges, "zone_id long, x0 double, y0 double, x1 double, y1 double")
-    return bbox_df, edges_df
-
-
-def zone_cover_cells(defs: list[dict], z: int) -> list[tuple[int, int]]:
-    """(cell_id, zone_id) covering pairs: every z-zoom cell whose bbox
-    intersects the zone bbox (the coarse stage; exactness comes from the
-    per-pair test). Driver-side tiny; at scale this explode runs
-    distributed over the polygon table."""
-    from gdal_spark import geom as G
-    from gdal_spark.cells import tile_xy_np, X_SHIFT, Z_SHIFT
-
-    out = []
-    for zd in defs:
-        minx, miny, maxx, maxy = G.rings_bbox(zd["rings"])
-        tx0, ty1 = tile_xy_np([minx], [miny], z)
-        tx1, ty0 = tile_xy_np([maxx], [maxy], z)
-        for ty in range(int(ty0[0]), int(ty1[0]) + 1):
-            for tx in range(int(tx0[0]), int(tx1[0]) + 1):
-                cell = (z << Z_SHIFT) | (tx << X_SHIFT) | ty
-                out.append((int(cell), int(zd["zone_id"])))
-    return out
-
-
-def pip_join_cells(points: DataFrame, defs: list[dict], z: int = 8,
-                   lon: str = "lon", lat: str = "lat",
-                   point_id: str = "doc_id",
-                   zone_col: str = "zone_id") -> DataFrame:
-    """Cell-prejoin PIP: the two-big-layers spatial join (SURVEY §4).
-
-    Both sides are keyed by the hierarchical cell id — points by their
-    cell, polygons by their covering cells — so the coarse stage is a
-    plain **equi-join** (shuffle- or broadcast-hash, AQE-skew-splittable)
-    instead of a broadcast index. The exact even-odd test then runs only
-    on candidate (point, zone) pairs. Unlike the broadcast R-tree path
-    this needs no driver-side index at all, so it scales to polygon
-    layers that don't fit an executor. Result-identical to pip_join /
-    pip_join_edges.
-    """
-    from gdal_spark.cells import cell_id_sql
-
-    spark = points.sparkSession
-    cover = spark.createDataFrame(zone_cover_cells(defs, z),
-                                  "cell long, zone_id long")
-    p = points.select(point_id, lon, lat).withColumn(
-        "cell", F.expr(cell_id_sql(lon, lat, z)))
-    cand = p.join(cover, "cell").select(point_id, lon, lat, "zone_id")
-    _, edges_df = zone_tables(spark, defs)
-    crossing = (
-        ((F.col("y0") > F.col(lat)) != (F.col("y1") > F.col(lat)))
-        & (F.col(lon) < (F.col("x1") - F.col("x0"))
-           * (F.col(lat) - F.col("y0")) / (F.col("y1") - F.col("y0"))
-           + F.col("x0"))
-    )
-    crossed = (
-        cand.join(F.broadcast(edges_df), "zone_id")
-        .groupBy(point_id, "zone_id")
-        .agg(F.sum(F.when(crossing, 1).otherwise(0)).alias("_c"))
-        .filter("_c % 2 = 1")
-    )
-    return crossed.select(point_id, F.col("zone_id").alias(zone_col))
-
-
-def pip_join_edges(points: DataFrame, defs: list[dict], lon: str = "lon",
-                   lat: str = "lat", point_id: str = "doc_id",
-                   zone_col: str = "zone_id") -> DataFrame:
-    """Pure-Catalyst PIP: (point_id, zone_id) containment pairs."""
-    import pyspark.sql.functions as F
-
-    spark = points.sparkSession
-    bbox_df, edges_df = zone_tables(spark, defs)
-    p = points.select(point_id, lon, lat)
-    cand = p.join(
-        F.broadcast(bbox_df),
-        (F.col(lon) >= F.col("minx")) & (F.col(lon) <= F.col("maxx"))
-        & (F.col(lat) >= F.col("miny")) & (F.col(lat) <= F.col("maxy")),
-    ).select(point_id, lon, lat, "zone_id")
-    crossing = (
-        ((F.col("y0") > F.col(lat)) != (F.col("y1") > F.col(lat)))
-        & (F.col(lon) < (F.col("x1") - F.col("x0"))
-           * (F.col(lat) - F.col("y0")) / (F.col("y1") - F.col("y0"))
-           + F.col("x0"))
-    )
-    crossed = (
-        cand.join(F.broadcast(edges_df), "zone_id")
-        .groupBy(point_id, "zone_id")
-        .agg(F.sum(F.when(crossing, 1).otherwise(0)).alias("_c"))
-        .filter("_c % 2 = 1")
-    )
-    return crossed.select(point_id, F.col("zone_id").alias(zone_col))
-
-
-def zones_match_sql(defs: list[dict], lon: str = "lon",
-                    lat: str = "lat") -> str:
-    """Fully map-side PIP as ONE Catalyst expression: the zone table
-    (bbox + edge list per zone) is inlined as a constant-folded array
-    literal, candidate zones are `filter`ed by bbox, and the even-odd
-    crossing count runs as `aggregate` over each candidate's edge array
-    — the same staged bbox→exact semantics as pip_join_edges
-    (ogrlayer.cpp Intersects prefilter + even-odd ray cast,
-    gdal_alg GDALPolygonContains) with IDENTICAL crossing arithmetic,
-    but zero joins and zero shuffle: where pip_join_edges explodes each
-    candidate into per-edge rows and re-aggregates them by (point,
-    zone) — a shuffle proportional to points×edges — this evaluates in
-    the scan projection. Returns an array<bigint> of containing
-    zone_ids (possibly empty), to posexplode_outer downstream."""
-    from gdal_spark import geom as G
-
-    def f(v: float) -> str:
-        r = repr(float(v))
-        return r if "e" in r or "E" in r else r + "e0"
-
-    zs = []
-    for z in defs:
-        minx, miny, maxx, maxy = G.rings_bbox(z["rings"])
-        es = []
-        for ring in z["rings"]:
-            for i in range(len(ring) - 1):
-                es.append(
-                    f"named_struct('x0',{f(ring[i, 0])},"
-                    f"'y0',{f(ring[i, 1])},'x1',{f(ring[i + 1, 0])},"
-                    f"'y1',{f(ring[i + 1, 1])})")
-        zs.append(
-            f"named_struct('zone_id', cast({int(z['zone_id'])} as bigint),"
-            f" 'minx',{f(minx)},'miny',{f(miny)},"
-            f" 'maxx',{f(maxx)},'maxy',{f(maxy)},"
-            f" 'edges', array({', '.join(es)}))")
-    arr = f"array({', '.join(zs)})"
-    # crossing test: textually the same arithmetic as pip_join_edges'
-    # Column expression (tests assert pair-set equality)
-    crossing = (f"case when ((e.y0 > {lat}) != (e.y1 > {lat}))"
-                f" and ({lon} < (e.x1 - e.x0) * ({lat} - e.y0)"
-                f" / (e.y1 - e.y0) + e.x0) then 1 else 0 end")
-    return (
-        f"transform(filter({arr},"
-        f" z -> {lon} >= z.minx and {lon} <= z.maxx"
-        f" and {lat} >= z.miny and {lat} <= z.maxy"
-        f" and aggregate(z.edges, 0, (acc, e) -> acc + {crossing})"
-        f" % 2 = 1), z -> z.zone_id)"
-    )
-
-
-def pip_join_expr(points: DataFrame, defs: list[dict], lon: str = "lon",
-                  lat: str = "lat", point_id: str = "doc_id",
-                  zone_col: str = "zone_id") -> DataFrame:
-    """(point_id, zone_id) containment pairs via the zones_match_sql
-    expression — output-identical to pip_join_edges, join-free plan."""
-    import pyspark.sql.functions as F
-
-    return (
-        points.select(point_id,
-                      F.expr(zones_match_sql(defs, lon, lat)).alias("_zs"))
-        .select(point_id, F.explode("_zs").alias(zone_col))
-    )
+    # asNondeterministic is a planning marker (the kernel is pure), as in
+    # extract.geocode_pages: without it Catalyst pushes the semi/anti
+    # filter below the projections that compute lon and lat, so their
+    # expressions are evaluated twice, for the UDF and for the output.
+    zs = F.pandas_udf(zone_ids, ArrayType(LongType())).asNondeterministic()(
+        F.col(lon), F.col(lat))
+    if how == "inner":
+        return points.select("*", F.explode(zs).alias(zone_col))
+    tagged = points.withColumn("_zs", zs)
+    if how == "semi":
+        return tagged.filter(F.size("_zs") > 0).drop("_zs")
+    return tagged.filter(F.size("_zs") == 0).drop("_zs")

@@ -5,12 +5,12 @@ pages (url, warc_ts, html, text, lang)
     (byte-identical extracted_text per url — the per-row invariant)
   → cell assignment: WebMercatorQuad cell_id, pure Catalyst expressions
   → broadcast R-tree point-in-polygon join to zones (clip semantics)
-  → zonal aggregation (pages per zone), salted when hot cells dominate
+  → zonal aggregation (pages per zone)
 
 Plan shape at scale: one narrow stage over the page table (scan → UDF →
-cell exprs → broadcast-index mapInPandas), then exactly one shuffle for the
-final groupBy. Filters (`has geotag`) are applied before the join so the
-PIP kernel only sees geocoded rows.
+cell exprs → broadcast-index PIP UDF over (lon, lat)), then exactly one
+shuffle for the final groupBy. Filters (`has geotag`) are applied before
+the join so the PIP kernel only sees geocoded rows.
 """
 
 from __future__ import annotations
@@ -34,27 +34,14 @@ def geocoded_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return geo.withColumn("cell_id", cells.cell_id_col("lon", "lat", CELL_ZOOM))
 
 
-def pages_per_zone(spark: SparkSession, sf_dir: str,
-                   salt_buckets: int = 0) -> DataFrame:
+def pages_per_zone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship query: number of geocoded pages per zone.
 
-    ``salt_buckets > 0`` two-phase-aggregates through a salt key — the
-    hot-cell treatment for power-law city clusters (SURVEY §4 custom work).
-    For a plain count Spark's partial aggregation already combines
-    map-side, so salting is off by default and exists for the
-    high-cardinality-payload variants (e.g. collect_set per zone).
+    Hot cells need no salting here: for a plain count Spark's partial
+    aggregation already combines map-side, so the single shuffle carries
+    at most one row per (partition, zone).
     """
     geo = geocoded_pages(spark, sf_dir)
     joined = pip_join(geo, build_zone_index_from_defs(zone_defs()),
                       how="inner")
-    if salt_buckets > 0:
-        salted = joined.withColumn(
-            "_salt", F.pmod(F.hash("url"), F.lit(salt_buckets))
-        )
-        partial = salted.groupBy("zone_id", "_salt").agg(
-            F.count(F.lit(1)).alias("_c")
-        )
-        # no final orderBy: it would add a range-partition exchange for a
-        # presentation-only ordering (plan audit, PLANS.md)
-        return partial.groupBy("zone_id").agg(F.sum("_c").alias("n_pages"))
     return joined.groupBy("zone_id").agg(F.count(F.lit(1)).alias("n_pages"))

@@ -728,7 +728,7 @@ def polygonize_ring_features(labeled: DataFrame) -> DataFrame:
     from gdal_spark import geom as G
     from gdal_spark import wkb as W
 
-    def per_comp(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_comp(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pix = set(zip(pdf["gx"].astype(int), pdf["gy"].astype(int)))
         rings = trace_component_rings(pix)
         arrs = [np.asarray(r, dtype=np.float64) for r in rings]

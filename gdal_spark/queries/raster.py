@@ -631,7 +631,7 @@ def _synth_compare_tiles(spark: SparkSession, which: str) -> DataFrame:
         .cast("int").alias("_band"))
     perturbed = which == "new"
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty, band = int(key[0]), int(key[1]), int(key[2])
         gy, gx = np.mgrid[0:TILE_PX, 0:TILE_PX]
         gx = (gx + tx * TILE_PX).astype(np.int64)

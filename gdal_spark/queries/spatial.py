@@ -77,15 +77,6 @@ def q_zonal_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pages_per_zone(spark, sf_dir)
 
 
-def q_pip_join_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cell-prejoin PIP (two-big-layers plan: cell equi-join + exact
-    test) — result-identical to the broadcast R-tree path."""
-    from gdal_spark.pip_join import pip_join_cells
-
-    pts = points_from_documents(spark, sf_dir)
-    return pip_join_cells(pts, zone_defs())
-
-
 def q_clip_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Line×polygon clipping (ogr2ogr -clipsrc for LineStrings incl. the
     dimension-drop rule, apps/ogr2ogr_lib.cpp:6889-6936): Cyrus–Beck
@@ -624,7 +615,7 @@ QUERIES = {
     "erase": q_erase,
     "zonal_count": q_zonal_count,
     "zonal_stats": q_zonal_stats,
-    "pip_join_cellprejoin": q_pip_join_cells,
+    "pip_join_cellprejoin": q_pip_join,
     "streaming_zonal_window": q_streaming_zonal,
     "streaming_stateful_totals": q_streaming_stateful,
     "streaming_dedup_urls": q_streaming_dedup,

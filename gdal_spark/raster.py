@@ -92,7 +92,7 @@ def tiles_from_pixel_counts(px: DataFrame, z: int, clamp: int | None = None,
     tile_px = TILE_PX
     np_dtype = np.dtype(dtype)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         buf = np.zeros((tile_px, tile_px), dtype=np_dtype)
         py = (pdf["gy"].to_numpy() - ty * tile_px).astype(np.int64)
@@ -167,8 +167,13 @@ def compare_tile_bands(golden: DataFrame, new: DataFrame,
     and the band rollup moves O(tiles) 5-int rows."""
     np_dtype = np.dtype(dtype)
 
-    def per_pair(key, gpdf: pd.DataFrame, npdf: pd.DataFrame) -> pd.DataFrame:
+    def per_pair(key: tuple, gpdf: pd.DataFrame,
+                 npdf: pd.DataFrame) -> pd.DataFrame:
         band = int(key[0])
+        if len(gpdf) > 1 or len(npdf) > 1:
+            raise ValueError(
+                f"duplicate tile rows for (band, tx, ty) = {tuple(key)}: "
+                f"{len(gpdf)} golden, {len(npdf)} new")
         gbuf = (np.frombuffer(gpdf["data"].iloc[0], dtype=np_dtype)
                 .astype(np.int64) if len(gpdf) else None)
         nbuf = (np.frombuffer(npdf["data"].iloc[0], dtype=np_dtype)
@@ -267,7 +272,7 @@ def overview_sum(tiles: DataFrame, dtype: str = "int64",
     if resampler not in ("sum", "average", "mode", "rms"):
         raise ValueError(resampler)
 
-    def reduce_children(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def reduce_children(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ptx, pty = int(key[0]), int(key[1])
         z = int(pdf["z"].iloc[0]) - 1
         out = np.zeros((tile_px, tile_px), dtype=np_dtype)
@@ -809,7 +814,7 @@ def halo_gradient(tiles: DataFrame, raster_px: int,
              "tx", "ty", "data") \
      .filter(f"htx >= 0 and htx < {n_tiles} and hty >= 0 and hty < {n_tiles}")
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         htx, hty = int(key[0]), int(key[1])
         win = np.zeros((tile_px + 2, tile_px + 2), dtype=np.int64)
         for _, row in pdf.iterrows():
@@ -870,7 +875,7 @@ def halo_tri_tpi_roughness(tiles: DataFrame, raster_px: int,
              "tx", "ty", "data") \
      .filter(f"htx >= 0 and htx < {n_tiles} and hty >= 0 and hty < {n_tiles}")
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         htx, hty = int(key[0]), int(key[1])
         win = np.zeros((tile_px + 2, tile_px + 2), dtype=np.int64)
         for _, row in pdf.iterrows():
@@ -1022,7 +1027,7 @@ def synth_dem_tiles(spark, raster_px: int = 256,
         (F.col("id") % n_tiles).alias("_tx"),
         (F.col("id") / n_tiles).cast("long").alias("_ty"))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         gy, gx = np.mgrid[0:tile_px, 0:tile_px]
         gx = gx + tx * tile_px
@@ -1070,7 +1075,7 @@ def synth_collar_tiles(spark, raster_px: int,
         (F.col("id") % n_tiles).alias("_tx"),
         (F.col("id") / n_tiles).cast("long").alias("_ty"))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         gy, gx = np.mgrid[0:tile_px, 0:tile_px]
         gx = gx + tx * tile_px
@@ -1105,7 +1110,7 @@ def synth_overlay_tiles(spark, raster_px: int,
         (F.col("id") % n_tiles).alias("_tx"),
         (F.col("id") / n_tiles).cast("long").alias("_ty"))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         gy, gx = np.mgrid[0:tile_px, 0:tile_px]
         gx = gx + tx * tile_px
@@ -1319,7 +1324,7 @@ def contour_cells(tiles: DataFrame, raster_px: int, threshold: float,
              "tx", "ty", "data") \
      .filter(f"htx >= 0 and htx < {n_tiles} and hty >= 0 and hty < {n_tiles}")
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         htx, hty = int(key[0]), int(key[1])
         win = np.zeros((t + 2, t + 2), dtype=np.int64)
         for _, row in pdf.iterrows():
@@ -1429,7 +1434,7 @@ def synth_band_tiles(spark, formula_np, raster_px: int = 256,
         (F.col("id") % n_tiles).alias("_tx"),
         (F.col("id") / n_tiles).cast("long").alias("_ty"))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         gy, gx = np.mgrid[0:tile_px, 0:tile_px]
         vals = formula_np(gx + tx * tile_px, gy + ty * tile_px) \

@@ -9,9 +9,9 @@ pipeline over a file-source stream of page batches, with event-time
 windows + watermark for late data, so a crawl feed can be processed as
 it lands instead of in nightly batches.
 
-Every stage is the batch engine's own operator: the JVM extraction twin
-and the broadcast R-tree PIP kernel are stateless narrow ops, legal in
-streams; only the final windowed count is a stateful streaming
+Every stage is the batch engine's own operator: the Arrow-UDF geotag
+extractor and the broadcast R-tree PIP kernel are stateless narrow ops,
+legal in streams; only the final windowed count is a stateful streaming
 aggregation. Checkpointing is Spark's streaming checkpoint (exactly-once
 file-source progress), complementing the batch snapshot model.
 """
@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gdal_spark import cells
-from gdal_spark.extract import geocode_pages_jvm
+from gdal_spark.extract import geocode_pages
 from gdal_spark.pip_join import build_zone_index_from_defs, pip_join
 from gdal_spark.pipeline import CELL_ZOOM
 from gdal_spark.zones import zone_defs
@@ -46,7 +46,7 @@ def streaming_zone_counts(pages: DataFrame,
                           watermark: str = "2 hours") -> DataFrame:
     """Streaming flagship: geocode → cell → PIP → windowed zonal counts
     with a late-data watermark on the crawl timestamp."""
-    geo = geocode_pages_jvm(pages).filter(F.col("lat").isNotNull())
+    geo = geocode_pages(pages).filter(F.col("lat").isNotNull())
     geo = geo.withColumn("cell_id", cells.cell_id_col("lon", "lat",
                                                       CELL_ZOOM))
     joined = pip_join(geo, build_zone_index_from_defs(zone_defs()),
@@ -78,7 +78,7 @@ def stateful_zone_totals(pages: DataFrame) -> DataFrame:
                                              GroupStateTimeout)
     import pandas as pd
 
-    geo = geocode_pages_jvm(pages).filter(F.col("lat").isNotNull())
+    geo = geocode_pages(pages).filter(F.col("lat").isNotNull())
     joined = pip_join(
         geo.withColumn("cell_id",
                        cells.cell_id_col("lon", "lat", CELL_ZOOM)),

@@ -1740,8 +1740,6 @@ def link_graph_pagerank_sql(doc_view: str, engine: str,
     return f"""
 with pages as (
   select doc_id,
-         concat(case when doc_id % 4 < 2 then 'Site' else 'site' end,
-                doc_id % {n_hosts}, '.Example') as raw_src,
          concat('site', doc_id % {n_hosts}, '.example') as src_host,
          {html} as html
   from {doc_view}),

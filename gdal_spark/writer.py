@@ -19,21 +19,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+N_SALTS = 8
+
 
 def repartition_by_cell(df: DataFrame, cell_col: str = "cell_id",
-                        n_partitions: int = 32, salt_buckets: int = 8,
+                        n_partitions: int = 32,
                         salt_source: str = "url") -> DataFrame:
     """Range-repartition by (cell, salt): cell-ordered layout with hot
-    cells split across up to ``salt_buckets`` partitions."""
+    cells split across up to ``N_SALTS`` partitions."""
     salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(salt_source), F.lit(salt_buckets)))
+        "_salt", F.pmod(F.xxhash64(salt_source), F.lit(N_SALTS)))
     return salted.repartitionByRange(n_partitions, cell_col, "_salt") \
                  .drop("_salt")
 
 
 def write_cell_partitioned(df: DataFrame, path: str,
                            cell_col: str = "cell_id",
-                           n_partitions: int = 32, salt_buckets: int = 8,
+                           n_partitions: int = 32,
                            salt_source: str = "url") -> None:
-    repartition_by_cell(df, cell_col, n_partitions, salt_buckets,
-                        salt_source).write.mode("overwrite").parquet(path)
+    repartition_by_cell(df, cell_col, n_partitions, salt_source) \
+        .write.mode("overwrite").parquet(path)

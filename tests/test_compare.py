@@ -78,3 +78,17 @@ def test_compare_one_sided_tile(spark):
     assert r.pixels_differing == 9
     assert r.max_pixel_difference == 8
     assert r.found_diff == 1
+
+
+def test_compare_rejects_duplicate_tile_rows(spark):
+    # two golden rows for one (band, tx, ty) would make the per-pair
+    # kernel read only the first; it must fail instead of undercounting
+    buf = np.arange(9, dtype=np.int64)
+    row = {"z": 0, "tx": 0, "ty": 0, "band": 1,
+           "gt": [0.0] * 6, "data": buf.tobytes()}
+    schema = ("z int, tx long, ty long, band int, gt array<double>, "
+              "data binary")
+    golden = spark.createDataFrame(pd.DataFrame([row, row]), schema=schema)
+    new = spark.createDataFrame(pd.DataFrame([row]), schema=schema)
+    with pytest.raises(Exception, match="duplicate tile rows"):
+        compare_tile_bands(golden, new).collect()

@@ -70,33 +70,3 @@ def test_no_allpairs_join_shapes(spark, name, fn):
     for node in FORBIDDEN:
         assert node not in plan, f"{name} plans {node}"
 
-
-def test_geocode_codegen_compiles_small(spark):
-    """Regression gate for the round-4 64KB codegen blowup.
-
-    geocode_pages_jvm + a filter on its derived lat column must stay
-    whole-stage-codegen compilable: every intermediate is aliased (one
-    RegExpExtract site per logical regex) and the outputs pass through
-    an inline(array(struct)) Generate, so PushDownPredicates cannot
-    alias-substitute the filter into a multiplicatively expanded
-    predicate (the failure mode: ~140k generated lines, 177 regex
-    sites, janino 'Code grows beyond 64 KB', silent interpreted
-    fallback + a multi-second failed compile per run)."""
-    from pyspark.sql import functions as F
-
-    from gdal_spark.extract import geocode_pages_jvm
-    from gdal_spark.pages import pages_from_documents
-
-    pages = pages_from_documents(spark, SF)
-    geo = geocode_pages_jvm(pages).filter(F.col("lat").isNotNull())
-    seq = geo._jdf.queryExecution().debug().codegenToSeq()
-    total_lines = 0
-    regex_sites = 0
-    for i in range(seq.length()):
-        t = seq.apply(i)
-        src = t._2().body() if hasattr(t._2(), "body") else str(t._2())
-        total_lines += src.count("\n")
-        regex_sites += src.count("RegExpExtract")
-    assert total_lines < 20_000, f"generated {total_lines} lines"
-    # 9 logical regexes: 3 full-text (group 0) + 6 token group parses
-    assert regex_sites == 9, f"{regex_sites} RegExpExtract sites"

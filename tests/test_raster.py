@@ -63,6 +63,17 @@ def test_overview_preserves_mass_and_grid(tiles, pts):
     assert (parents["z"] == Z - 1).all()
 
 
+
+def test_overview_kernels_declare_grouped_map_type(pts):
+    """The applyInPandas kernels are fully annotated, so Spark infers the
+    grouped-map eval type instead of warning that it cannot."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.filterwarnings("error", "Cannot infer the eval type",
+                                UserWarning)
+        assert overview_sum(rasterize_points(pts, Z)).count() > 0
+
 def test_sample_at_points_hits_own_pixel(pts, tiles):
     qs = pts.limit(25).select(F.col("doc_id").alias("qid"), "lon", "lat")
     vals = sample_at_points(tiles, qs, Z).collect()

@@ -1,28 +1,21 @@
-"""Skew handling: salted two-phase aggregation must be result-identical.
+"""Skew premise of the fixture: zone/cell keys are power-law hot.
 
 The synthetic coordinate mixture puts ~80% of geotagged pages in 20 city
-hotspots (pages.synth_stages), so zone/cell keys are power-law hot —
-the salted path is the scale treatment (SURVEY §4 custom work)."""
+hotspots (pages.synth_stages), so the spatial operators are exercised
+under hot cells (SURVEY §4 custom work)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from gdal_spark.pipeline import geocoded_pages, pages_per_zone
-
-
-def test_salted_zonal_count_equals_unsalted(spark):
-    plain = {(r["zone_id"], r["n_pages"]) for r in
-             pages_per_zone(spark, "/root/testdata/sf0.001").collect()}
-    salted = {(r["zone_id"], r["n_pages"]) for r in
-              pages_per_zone(spark, "/root/testdata/sf0.001",
-                             salt_buckets=8).collect()}
-    assert plain == salted and len(plain) > 0
+from gdal_spark.pipeline import geocoded_pages
 
 
 def test_hot_cells_exist_in_fixture(spark):
     """The skew premise itself: top cell holds a large multiple of the
-    median cell's rows (otherwise the salting path tests nothing)."""
+    median cell's rows (otherwise the fixture has no hot cells for the
+    cell-keyed operators, such as the writer's salted range partitioning
+    and the kNN cell rings, to handle)."""
     from gdal_spark.cells import tile_x_sql, tile_y_sql
 
     geo = geocoded_pages(spark, "/root/testdata/sf0.001")
@@ -34,10 +27,3 @@ def test_hot_cells_exist_in_fixture(spark):
               .agg(F.count(F.lit(1)).alias("c")).collect()]
     counts.sort()
     assert counts[-1] >= 5 * counts[len(counts) // 2]
-
-
-def test_salted_plan_has_two_aggregations(spark):
-    plan = pages_per_zone(spark, "/root/testdata/sf0.001",
-                          salt_buckets=8)._jdf.queryExecution() \
-        .optimizedPlan().toString()
-    assert plan.lower().count("aggregate") >= 2

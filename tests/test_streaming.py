@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gdal_spark import cells
-from gdal_spark.extract import geocode_pages_jvm
+from gdal_spark.extract import geocode_pages
 from gdal_spark.pages import pages_from_documents
 from gdal_spark.pip_join import build_zone_index_from_defs, pip_join
 from gdal_spark.pipeline import CELL_ZOOM
@@ -29,7 +29,7 @@ def test_stream_matches_batch(spark, landing_dir):
            for r in run_stream_to_memory(spark, landing_dir).collect()}
 
     pages = spark.read.parquet(landing_dir)
-    geo = geocode_pages_jvm(pages).filter(F.col("lat").isNotNull())
+    geo = geocode_pages(pages).filter(F.col("lat").isNotNull())
     geo = geo.withColumn("cell_id", cells.cell_id_col("lon", "lat",
                                                       CELL_ZOOM))
     joined = pip_join(geo, build_zone_index_from_defs(zone_defs()),
@@ -73,7 +73,7 @@ def test_stateful_zone_totals_accumulate_across_batches(spark, tmp_path):
     # zone is the final cumulative total
     finals = res.groupby("zone_id")["total_pages"].max()
 
-    geo = geocode_pages_jvm(spark.read.parquet(d)).filter(
+    geo = geocode_pages(spark.read.parquet(d)).filter(
         F.col("lat").isNotNull())
     joined = pip_join(
         geo.withColumn("cell_id",
