@@ -1650,6 +1650,39 @@ from binned where w_milli < (select w_milli from thr)
 # ---------------------------------------------------------------------------
 
 
+def href_host_ctes(hr: str) -> str:
+    """CTEs ``dst0`` … ``resolved``: the canonical destination host of
+    every (src_host, href) row of ``hr``. Absolute hrefs (containing
+    ``://``) lose their scheme, everything from the first ``/``, a
+    ``:443`` / ``:80`` port and a leading ``www.``, and are lowercased.
+    Every other href — root-relative ``/x``, scheme-relative ``//host/x``,
+    ``mailto:…``, bare relative ``a/b`` — resolves to the page's own host
+    (RFC 3986 §5.1 base resolution, collapsed to the host level). Shared
+    SQL text for Spark and DuckDB."""
+    return f"""dst0 as (
+  select src_host,
+         case when position('://' in href) > 0
+              then lower(substr(href, position('://' in href) + 3))
+              else src_host end as rest
+  from {hr}),
+dst1 as (
+  select src_host,
+         case when position('/' in rest) = 0 then rest
+              else substr(rest, 1, position('/' in rest) - 1) end as hp
+  from dst0),
+dst2 as (
+  select src_host,
+         case when hp like '%:443' then substr(hp, 1, length(hp) - 4)
+              when hp like '%:80' then substr(hp, 1, length(hp) - 3)
+              else hp end as hp2
+  from dst1),
+resolved as (
+  select src_host,
+         case when hp2 like 'www.%' then substr(hp2, 5) else hp2 end
+           as dst_host
+  from dst2)"""
+
+
 def link_graph_pagerank_sql(doc_view: str, engine: str,
                             n_hosts: int = 50, rounds: int = 3,
                             damp_milli: int = 850) -> str:
@@ -1714,9 +1747,7 @@ def link_graph_pagerank_sql(doc_view: str, engine: str,
     else:
         href_rows = ("select src_host, unnest(regexp_extract_all("
                      "html, 'href=\"([^\"]*)\"', 1)) as href from pages")
-    # canonical dst host: strip scheme, take up-to-first-/, lowercase,
-    # strip :443 / :80 and leading www.; relative hrefs resolve to the
-    # page's own host (RFC 3986 §5.1)
+    dst_ctes = href_host_ctes("hr")
     rounds_ctes = []
     prev = "r0"
     for i in range(1, rounds + 1):
@@ -1744,28 +1775,7 @@ with pages as (
          {html} as html
   from {doc_view}),
 hr as ({href_rows}),
-dst0 as (
-  select src_host,
-         case when href like '/%' then src_host
-              else lower(substr(href, position('://' in href) + 3)) end
-           as rest
-  from hr),
-dst1 as (
-  select src_host,
-         case when position('/' in rest) = 0 then rest
-              else substr(rest, 1, position('/' in rest) - 1) end as hp
-  from dst0),
-dst2 as (
-  select src_host,
-         case when hp like '%:443' then substr(hp, 1, length(hp) - 4)
-              when hp like '%:80' then substr(hp, 1, length(hp) - 3)
-              else hp end as hp2
-  from dst1),
-resolved as (
-  select src_host,
-         case when hp2 like 'www.%' then substr(hp2, 5) else hp2 end
-           as dst_host
-  from dst2),
+{dst_ctes},
 edges as (
   select src_host as src, dst_host as dst,
          cast(count(*) as bigint) as w

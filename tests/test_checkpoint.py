@@ -4,19 +4,21 @@ from __future__ import annotations
 
 import glob
 import os
+import signal
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-from gdal_spark.checkpoint import (committed_keys, lineage, read_committed,
-                                   run_checkpointed)
+from gdal_spark.checkpoint import (committed_keys, lineage, metrics,
+                                   read_committed, run_checkpointed)
 from gdal_spark.pages import points_from_documents
 from gdal_spark.pipeline import geocoded_pages
 from gdal_spark.raster import rasterize_points
 
 
-@pytest.fixture()
-def workload(spark):
+def tile_workload(spark):
     """Tile-assignment output keyed by tile id — the north-star resumable
     job (pages → tiles), small zoom so key count is modest."""
     pts = points_from_documents(spark, "/root/testdata/sf0.001")
@@ -24,6 +26,11 @@ def workload(spark):
     return tiles.select(
         (F.col("tx") * 1000 + F.col("ty")).alias("tile_key"),
         "z", "tx", "ty", "data")
+
+
+@pytest.fixture()
+def workload(spark):
+    return tile_workload(spark)
 
 
 def test_resume_after_partial_run(spark, tmp_path, workload):
@@ -127,3 +134,109 @@ def test_snapshot_time_travel(spark, tmp_path, workload):
     assert read_committed(spark, root, "tile_key", snapshot=0).count() == 0
     with pytest.raises(ValueError):
         read_committed(spark, root, "tile_key", snapshot=9).count()
+
+
+def test_layout_files_track_partitions_not_keys(spark, tmp_path):
+    """A commit writes one file per input partition, however many keys
+    it holds; read-back returns the input's columns (no partition
+    column leaks in); snapshot 0 of a populated root is empty."""
+    df = spark.range(0, 1000, 1, 2).select(
+        (F.col("id") * 3).alias("v"), (F.col("id") % 250).alias("k"),
+        F.concat(F.lit("s"), F.col("id")).alias("s"))
+    root = str(tmp_path / "ckpt_layout")
+    r = run_checkpointed(df, root, "k")
+    assert r == {"snapshot": 1, "keys_written": 250, "rows_written": 1000}
+    files = glob.glob(os.path.join(root, "data", "*", "*.parquet"))
+    assert 1 <= len(files) <= 2
+    back = read_committed(spark, root, "k")
+    assert back.columns == df.columns
+    assert sorted(back.collect()) == sorted(df.collect())
+    assert read_committed(spark, root, "k", snapshot=0).count() == 0
+
+
+# Child process for the crash test: commits snapshot 1 (even tile keys),
+# then dies by SIGKILL inside the commit of snapshot 2 at the named point,
+# always before the `_latest` pointer flip.
+CRASH_CHILD = r"""
+import os, signal, sys
+
+from pyspark.sql import DataFrameWriter
+
+from gdal_spark.checkpoint import run_checkpointed
+from gdal_spark.session import get_spark
+from test_checkpoint import tile_workload
+
+root, point = sys.argv[1], sys.argv[2]
+spark = get_spark("crash_child", master="local[2]", shuffle_partitions=2)
+tiles = tile_workload(spark)
+run_checkpointed(tiles, root, "tile_key", key_filter="tile_key % 2 = 0")
+
+
+def die():
+    os.kill(os.getpid(), signal.SIGKILL)
+
+
+write_parquet = DataFrameWriter.parquet
+
+
+def write_then_die(self, path, *args, **kwargs):
+    write_parquet(self, path, *args, **kwargs)
+    if os.path.relpath(path, root).split(os.sep)[0] == point:
+        die()  # after the data ("data") or manifest ("snapshots") write
+
+
+replace = os.replace
+
+
+def replace_or_die(src, dst):
+    if os.path.basename(dst) == "_latest":
+        die()  # metrics written, pointer not flipped
+    replace(src, dst)
+
+
+DataFrameWriter.parquet = write_then_die
+if point == "metrics":
+    os.replace = replace_or_die
+run_checkpointed(tiles, root, "tile_key")
+raise SystemExit("commit finished without reaching the crash point")
+"""
+
+
+@pytest.mark.parametrize("point", ["data", "snapshots", "metrics"])
+def test_sigkill_before_pointer_flip_resumes_exactly_once(
+        spark, tmp_path, workload, point):
+    """A commit SIGKILLed after its data, manifest or metrics write (each
+    before the pointer flip) leaves snapshot 1 authoritative: lineage
+    and metrics show no row of the killed snapshot, and a resume plus
+    read-back gives the one-shot tile set exactly once."""
+    root = str(tmp_path / f"ckpt_kill_{point}")
+    here = os.path.dirname(os.path.abspath(__file__))
+    path = (os.path.dirname(here), here, os.environ.get("PYTHONPATH"))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(p for p in path if p))
+    child = subprocess.run([sys.executable, "-c", CRASH_CHILD, root, point],
+                           env=env, capture_output=True, text=True,
+                           timeout=600)
+    assert child.returncode == -signal.SIGKILL, child.stderr[-2000:]
+    if point == "metrics":
+        assert glob.glob(os.path.join(root, "metrics", "snap=2", "*"))
+
+    even = {r["tile_key"] for r in workload.filter("tile_key % 2 = 0")
+            .select("tile_key").collect()}
+    lin = lineage(spark, root).collect()
+    assert {r["snap"] for r in lin} == {1}
+    assert {r["tile_key"] for r in lin} == even
+    assert {r["snap"] for r in metrics(spark, root).collect()} == {1}
+
+    r2 = run_checkpointed(workload, root, "tile_key")
+    assert r2["snapshot"] == 2
+    assert r2["rows_written"] == workload.count() - len(even)
+    want = sorted(tuple(r) for r in workload.collect())
+    got = sorted(tuple(r) for r in read_committed(spark, root, "tile_key")
+                 .select(*workload.columns).collect())
+    assert len(got) == len(want)  # each tile exactly once
+    assert got == want
+    lin = lineage(spark, root).collect()
+    assert sorted(r["tile_key"] for r in lin) == sorted(
+        r["tile_key"] for r in workload.collect())
+    assert {r["snap"] for r in metrics(spark, root).collect()} == {1, 2}

@@ -1306,6 +1306,36 @@ def test_pagerank_matches_python_transcription(spark):
         assert out[h].r3 == ranks[2][h]
 
 
+def test_href_hosts_hand_derived(spark):
+    """Destination hosts of hand-picked hrefs, written out by hand rather
+    than taken from the shared SQL: only absolute hrefs (with ``://``)
+    leave the page's host; root-relative, scheme-relative, mailto and
+    bare relative hrefs all fall back to it. Both engines run the same
+    CTE text and must both give the hand-written hosts."""
+    import duckdb
+
+    from gdal_spark.textops import href_host_ctes
+
+    cases = {  # one page host per href: src_host -> (href, dst_host)
+        "p1.example": ("HTTPS://WWW.Site3.EXAMPLE:443/c/1", "site3.example"),
+        "p2.example": ("http://Bar.example", "bar.example"),
+        "p3.example": ("http://x.example:80/", "x.example"),
+        "p4.example": ("ftp://www.files.example/pub", "files.example"),
+        "p5.example": ("/local/3", "p5.example"),
+        "p6.example": ("//cdn.example/x", "p6.example"),
+        "p7.example": ("mailto:ann@mail.example", "p7.example"),
+        "p8.example": ("a/b", "p8.example"),
+    }
+    values = ", ".join(f"('{src}', '{href}')"
+                       for src, (href, _) in cases.items())
+    sql = (f"with hr as (select * from (values {values})"
+           f" as t(src_host, href)),\n{href_host_ctes('hr')}\n"
+           f"select src_host, dst_host from resolved")
+    want = {src: dst for src, (_, dst) in cases.items()}
+    assert {r.src_host: r.dst_host for r in spark.sql(sql).collect()} == want
+    assert dict(duckdb.connect().execute(sql).fetchall()) == want
+
+
 def test_bpe_merges_matches_python_transcription(spark):
     """BPE merge learning pinned against an independent Python
     transcription of Sennrich's algorithm (overlap-counting get_stats,
