@@ -197,7 +197,7 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = pts.filter(QUERY_FILTER).select(
         F.col("doc_id").alias("qid"), "lon", "lat")
     # z0 passed explicitly (the scale-correct call shape — the density
-    # heuristic otherwise spends a count() action on the point table);
+    # heuristic otherwise guesses the row count from plan statistics);
     # z0=4 ≈ 12 points/cell for the synthetic densities at sf0.01-0.1
     out = knn_join(pts, queries, k=K, z0=4)
     return out.select("qid", "doc_id", "rank",

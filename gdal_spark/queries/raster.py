@@ -67,12 +67,6 @@ def q_rasterize_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tile_checksums(tiles)
 
 
-def q_overview_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = points_from_documents(spark, sf_dir)
-    tiles = rasterize_points(pts, RASTER_Z)
-    return tile_checksums(overview_sum(tiles))
-
-
 def q_raster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = points_from_documents(spark, sf_dir)
     tiles = rasterize_points(pts, RASTER_Z)
@@ -103,11 +97,6 @@ def q_polygonize_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid_w = 1 << (RASTER_Z + 6)
     labeled = label_pixels(pixel_counts(pts, RASTER_Z), grid_w)
     return polygonize_rings_summary(labeled, grid_w)
-
-
-def q_dem_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _ = sf_dir  # fixed-size synthetic DEM exercises the focal machinery
-    return halo_gradient(synth_dem_tiles(spark, DEM_PX), DEM_PX)
 
 
 def q_dem_tri_tpi_roughness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,14 +163,6 @@ def q_color_relief(spark: SparkSession, sf_dir: str) -> DataFrame:
     return color_relief(synth_dem_tiles(spark, DEM_PX), 1, 2)
 
 
-def q_grid_idw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Points → raster IDW interpolation (GDALGridInverseDistanceToAPower,
-    alg/gdalgrid.cpp:109) over the city-0 hotspot region."""
-    from gdal_spark.gridding import idw_grid
-
-    return idw_grid(spark, sf_dir)
-
-
 # bilinear fixture: fractional pixel coords synthesized from doc_id by
 # integer-exact arithmetic (identical SQL text in both engines)
 _BILIN_Q = ("select doc_id as qid,"
@@ -190,22 +171,6 @@ _BILIN_Q = ("select doc_id as qid,"
             " cast(doc_id * 11 % 249 as double)"
             " + cast(doc_id % 8 as double) / 8e0 as qy"
             " from documents")
-
-
-def q_overview_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mode overview resampler (overview.cpp Mode kernel, first-wins tie
-    rule): z5 → z4 checksummed."""
-    pts = points_from_documents(spark, sf_dir)
-    tiles = rasterize_points(pts, RASTER_Z)
-    return tile_checksums(overview_sum(tiles, resampler="mode"))
-
-
-def q_overview_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RMS overview resampler (overview.cpp RMS kernel): z5 → z4 with
-    round-half-up integer root-mean-square, checksummed."""
-    pts = points_from_documents(spark, sf_dir)
-    tiles = rasterize_points(pts, RASTER_Z)
-    return tile_checksums(overview_sum(tiles, resampler="rms"))
 
 
 def q_raster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -265,37 +230,12 @@ def q_sample_cubic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_cubic(synth_dem_tiles(spark, DEM_PX), queries, DEM_PX)
 
 
-def q_grid_moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Points → raster moving-average (GDALGridMovingAverage,
-    alg/gdalgrid.cpp:629) over the city-0 hotspot region."""
-    from gdal_spark.gridding import moving_average_grid
-
-    return moving_average_grid(spark, sf_dir)
-
-
-def q_grid_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Points → raster nearest-neighbor value (GDALGridNearestNeighbor,
-    alg/gdalgrid.cpp:879), doc_id tie-break pinned."""
-    from gdal_spark.gridding import nearest_grid
-
-    return nearest_grid(spark, sf_dir)
-
-
-def q_grid_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-metric kernels (GDALGridDataMetric*): per-pixel count,
-    min/max distance, value range."""
-    from gdal_spark.gridding import data_metrics_grid
-
-    return data_metrics_grid(spark, sf_dir)
-
-
 # ---------------------------------------------------------------------------
 # Merged contract queries: one oracle-checked entry per operator FAMILY.
 # The correctness driver budgets ~50 oracle checks per round, so sibling
 # kernels that share a verified plan shape are exposed as a single union/
 # join query (method column) instead of one entry each — every kernel
-# still reaches the driver. The individual q_* functions above remain the
-# unit-test surface.
+# still gets an oracle check.
 # ---------------------------------------------------------------------------
 
 
@@ -1118,14 +1058,6 @@ def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def q_overview_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AVERAGE overview resampler (GDAL default, overview.cpp Average
-    kernels): z5 → z4 with rounded-half-up integer averaging."""
-    pts = points_from_documents(spark, sf_dir)
-    tiles = rasterize_points(pts, RASTER_Z)
-    return tile_checksums(overview_sum(tiles, resampler="average"))
-
-
 def q_sieve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sieve filter: singleton occupancy components removed, then the
     checksum of the surviving count raster per tile."""
@@ -1570,22 +1502,6 @@ def _polygonize8_oracle() -> str:
 
     return polygonize_values_oracle_sql(CONTOUR_LINES_PX, band_np,
                                         connect8=True)
-
-
-def q_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Proximity raster: per-pixel distance to the nearest point within
-    the search radius (alg/gdalproximity.cpp:94)."""
-    from gdal_spark.gridding import proximity_grid
-
-    return proximity_grid(spark, sf_dir)
-
-
-def q_warp_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """gdalwarp nearest: DEM tiles resampled onto a shifted 1.37×-scaled
-    grid (dst→world→src pixel path in Catalyst, gather per tile)."""
-    _ = sf_dir
-    tiles = synth_dem_tiles(spark, DEM_PX)
-    return warp_nearest(tiles, _SRC_GT, DEM_PX, _DST_GT, _DST_PX)
 
 
 # cross-CRS warp fixture: the synthetic DEM's affine grid lives in

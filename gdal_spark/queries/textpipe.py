@@ -387,14 +387,6 @@ def q_rare_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return payload_meta(pages_from_documents(spark, sf_dir))
-
-
-def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return decode_stub_meta(pages_from_documents(spark, sf_dir))
-
-
 def q_multimodal_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Payload metadata + stub decode as one contract entry (the
     correctness driver budgets ~50 checks per round): typed metadata of

@@ -276,8 +276,8 @@ def overview_sum(tiles: DataFrame, dtype: str = "int64",
         ptx, pty = int(key[0]), int(key[1])
         z = int(pdf["z"].iloc[0]) - 1
         out = np.zeros((tile_px, tile_px), dtype=np_dtype)
-        for _, row in pdf.iterrows():
-            child = np.frombuffer(row["data"], dtype=np_dtype).reshape(
+        for tx, ty, buf in zip(pdf["tx"], pdf["ty"], pdf["data"]):
+            child = np.frombuffer(buf, dtype=np_dtype).reshape(
                 tile_px, tile_px)
             if resampler in ("mode", "rms"):
                 # blocks[..., k] in window scan order (dy, dx):
@@ -296,8 +296,8 @@ def overview_sum(tiles: DataFrame, dtype: str = "int64",
                             .sum(axis=(1, 3))
                 if resampler == "average":
                     half = (half + 2) // 4
-            oy = (int(row["ty"]) % 2) * (tile_px // 2)
-            ox = (int(row["tx"]) % 2) * (tile_px // 2)
+            oy = (int(ty) % 2) * (tile_px // 2)
+            ox = (int(tx) % 2) * (tile_px // 2)
             out[oy:oy + tile_px // 2, ox:ox + tile_px // 2] = half
         return pd.DataFrame({
             "z": [z], "tx": [ptx], "ty": [pty], "band": [1],

@@ -59,6 +59,50 @@ def test_knn_fewer_points_than_k(spark):
     assert len(got) == 2  # only 2 points exist — both returned
 
 
+_KNN_HAND_CASES = {
+    # one query at (0, 80): a point 10° south on its meridian, then three
+    # near (0..2, -80) — ~160° of arc away, so only a level covering the
+    # whole grid finds them (a 5×5 ring at z2 misses row 3 from row 0)
+    "far_south": ([(0, 70), (0, -80), (1, -80), (2, -80)], (0, 80), 4,
+                  [None, 2, 4, 6], [0, 1, 2, 3]),
+    # polar cap: (0, 89.9) is 0.2° of arc over the pole (22.26 km), while
+    # (180, 89.5) on the query's own meridian is 0.4° (44.53 km); the
+    # mercator clamp puts both in tile row 0, columns n/2 apart
+    "polar_cap": ([(180 - 1e-9, 89.5), (0, 89.9), (10, 0)],
+                  (180 - 1e-9, 89.9), 1, [None, 4, 6, 8, 14], [1]),
+    # two points ±0.05° of lon from the query (doc 1 nearer by rounding),
+    # then the far cluster by lon distance from -120 (all at lat -30)
+    "far_cluster": ([(10, 10), (10.1, 10), (-120, -30), (-120.1, -30),
+                     (-121, -30)], (10.05, 10), 4,
+                    [None, 0, 1, 2, 3, 4, 5], [1, 0, 2, 3]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_KNN_HAND_CASES))
+def test_knn_hand_derived_exact(spark, case):
+    """Cases the ring levels cannot resolve alone: the brute-force final
+    level, odd / tiny z0, and the polar guard must all give the exact
+    answer. Expected ids are derived by hand, cross-checked with the
+    numpy haversine (not the shared oracle SQL)."""
+    from gdal_spark.knn import knn_join
+
+    pts, (qlon, qlat), k, z0s, want = _KNN_HAND_CASES[case]
+    lon = np.array([p[0] for p in pts], dtype=np.float64)
+    lat = np.array([p[1] for p in pts], dtype=np.float64)
+    d = crs.haversine_m(qlon, qlat, lon, lat)
+    assert np.lexsort((np.arange(len(pts)), d))[:k].tolist() == want
+
+    pdf = spark.createDataFrame(
+        pd.DataFrame({"doc_id": np.arange(len(pts)), "lon": lon, "lat": lat}))
+    qdf = spark.createDataFrame(
+        pd.DataFrame({"qid": [0], "lon": [qlon], "lat": [qlat]}))
+    for z0 in z0s:
+        got = knn_join(pdf, qdf, k=k, z0=z0).toPandas().sort_values("rank")
+        assert got.doc_id.tolist() == want, (z0, got.doc_id.tolist())
+        assert got["rank"].tolist() == list(range(1, k + 1)), z0
+        assert np.allclose(got.dist_m.to_numpy(), d[want], rtol=0, atol=1e-6)
+
+
 def test_tmerc_jvm_matches_numpy(spark):
     """The staged Catalyst Krüger pipeline ≡ the numpy kernel (≤ 1e-6 m)."""
     rng = np.random.default_rng(5)

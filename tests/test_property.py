@@ -1,10 +1,11 @@
-"""Property-based tests (hypothesis) over the pure geometry kernels.
+"""Property-based tests (hypothesis) over the geometry kernels and joins.
 
 The reference test suite is golden-assertion style (SURVEY §5 — no
 property testing); these add the invariants golden cases can't sweep:
 serialization round-trips over arbitrary coordinates, hull/clip
-containment, simplify monotonicity. Pure numpy/python — no Spark
-session, so the whole module runs in seconds.
+containment, simplify monotonicity, and the exact kNN join against a
+numpy brute force. The kernel tests are pure numpy/python; the HTML
+and kNN tests use the Spark session with few, small examples.
 """
 
 from __future__ import annotations
@@ -152,3 +153,54 @@ def test_html_extract_roundtrip_hostile_text(spark, text):
     r = spark.sql(textops.html_extract_sql(
         "documents", textops.SPARK)).collect()[0]
     assert r.byte_identical, repr(text)
+
+
+_lonlat = st.tuples(st.floats(-180, 180), st.floats(-90, 90))
+
+
+def _dist_tol(d):
+    """Distance tolerance between the JVM and numpy haversines: 1e-6 m,
+    plus the ill-conditioning of asin(sqrt(h)) near antipodes, where a
+    last-bit difference of h (libm sin/cos differ by an ulp) moves the
+    distance by ~a·ulp/sqrt(1-h) — up to ~0.2 m when 1-h ≈ ulp."""
+    from gdal_spark.crs import WGS84_A
+
+    eps = np.finfo(np.float64).eps
+    one_minus_h = np.cos(np.asarray(d) / (2.0 * WGS84_A)) ** 2
+    return 1e-6 + WGS84_A * 4 * eps / np.sqrt(np.maximum(one_minus_h, eps))
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(_lonlat, min_size=1, max_size=12),
+       st.lists(_lonlat, min_size=1, max_size=4),
+       st.integers(1, 6), st.integers(0, 10))
+def test_knn_matches_numpy_bruteforce(spark, pts, qs, k, z0):
+    """knn_join ≡ a numpy brute force (lexsort by distance, then id) for
+    any points on the sphere — poles, antimeridian, duplicates, fewer
+    points than k — and any start zoom."""
+    import pandas as pd
+
+    from gdal_spark.crs import haversine_m
+    from gdal_spark.knn import knn_join
+
+    p = np.asarray(pts, dtype=np.float64)
+    q = np.asarray(qs, dtype=np.float64)
+    pdf = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": np.arange(len(p)), "lon": p[:, 0], "lat": p[:, 1]}))
+    qdf = spark.createDataFrame(pd.DataFrame(
+        {"qid": np.arange(len(q)), "lon": q[:, 0], "lat": q[:, 1]}))
+    got = knn_join(pdf, qdf, k=k, z0=z0).toPandas()
+    m = min(k, len(p))
+    for qi in range(len(q)):
+        d = haversine_m(q[qi, 0], q[qi, 1], p[:, 0], p[:, 1])
+        order = np.lexsort((np.arange(len(p)), d))
+        ds = d[order]
+        tol = _dist_tol(ds)
+        mine = got[got.qid == qi].sort_values("rank")
+        assert mine["rank"].tolist() == list(range(1, m + 1)), (qi, mine)
+        assert np.all(np.abs(mine.dist_m.to_numpy() - ds[:m]) <= tol[:m]), (
+            qi, mine.dist_m.tolist(), ds[:m].tolist())
+        gaps = np.diff(ds) > tol[1:]  # gaps[i]: ds[i] < ds[i+1] for sure
+        for i in range(m):
+            if (i == 0 or gaps[i - 1]) and (i == len(p) - 1 or gaps[i]):
+                assert mine.doc_id.iloc[i] == order[i], (qi, i, mine, order)
