@@ -1,257 +1,60 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract).
+"""Benchmark summary: run every workload declared in BENCHMARK.json once
+through perfbench (seed 1, end-to-end metrics) and print, as the last
+line of output, one JSON object of at most 2,000 characters::
 
-Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line::
+    {"metric", "value", "unit", "pages_per_sec", "correct",
+     "workloads": {name: {rows_per_s, job_s, setup_s, ops_ok_share}}}
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"q": sec, ...}, "sf": ..., "pages_per_sec": ...}
-
-Each query is forced end-to-end with a ``noop``-format write (full
-computation, no driver-side collect). The flagship spatial-join +
-tile-assignment pipeline also reports pages/sec — the north-rule metric
-(BASELINE.json). Scaling-efficiency runs (local[8] vs local[32]) live in
-``scripts/scaling_bench.py`` which reuses ``run_bench`` at two parallelism
-levels.
+``value`` is the sum of the workloads' median ``job_s``. Exits 1 if any
+workload fails. Run from anywhere: ``python bench.py``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
-import time
 
-# Headline subset: the north-star spatial pipeline + representative
-# relational / geodesy / kNN operators. Names must exist in
-# __spark_entry__.queries().
-HEADLINE = [
-    "extract_geotags",
-    "cell_assign",
-    "tile_counts_z8",
-    "pip_join",
-    "zonal_count",
-    "zonal_stats",
-    "knn",
-    "reproject_webmercator",
-    "rasterize_checksum_z5",
-    "warp_resample_dem",
-    "warp_bilinear_dem",
-    "raster_fillnodata",
-    "raster_viewshed",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "text_quality",
-    "ann_topk_cosine",
-    "sql_groupby_agg",
-    "sql_join_groups",
-    "sql_topk",
-    "sql_window_funcs",
-    # round-2 operators
-    "rasterize_polygons_checksum",
-    "warp_reproject_dem",
-    "embed_neardup_cosine",
-    "grid_kernels",
-    "grid_linear_delaunay",
-    "ann_lsh_topk",
-    "dedup_cluster_canonical",
-    # round-4 operators
-    "warp_approx_webmercator",
-    "multimodal_decode_real",
-    # round-5 operators
-    "multimodal_decode_jpeg",
-    "rgb2pct_dither_checksum",
-    "reproject_osgb36_grid",
-    "multimodal_decode_video",
-    "train_pack_sequences",
-    "geotiff_ingest_tiles",
-    "dedup_substring_spans",
-    "dedup_paragraph_exact",
-    "crawl_url_canonicalize",
-    "embed_kmeans",
-    "crawl_html_extract",
-    "warc_ingest_records",
-    "crawl_cdx_index",
-    "crawl_charset_decode",
-    "text_gopher_rules",
-    "train_mixture_sample",
-    "embed_sq8_topk",
-    "warp_gcp_poly",
-    "warp_gcp_tps",
-    "vector_geojson_ingest",
-    "vector_shapefile_ingest",
-    "vector_kml_ingest",
-    "text_ccnet_ppl_bucket",
-    "crawl_geocode_from_html",
-    "raster_percentiles",
-    "raster_footprint",
-    "raster_color_merge",
-    "crawl_sitemap_coverage",
-    "text_dsir_importance",
-    "crawl_pagerank",
-    "train_bpe_merges",
-    "raster_equalize_checksum",
-    "crawl_snapshot_delta",
-    "text_bm25_topk",
-    "crawl_hll_distinct",
-    "text_chunk_windows",
-    "raster_compare_golden",
-]
-# Fixture micro-queries: 9-row constructed-geometry inputs whose wall
-# time is pure session/UDF-registration overhead, not operator cost
-# (VERDICT r3: st_functions 2.45 s -> 5.90 s on unchanged code). Timed
-# and reported separately; excluded from the headline total so the
-# graded number tracks operator throughput, not fixture noise.
-FIXTURE = [
-    "st_functions",
-    "st_predicates",
-]
-# Queries counted toward the pages/sec throughput metric (each consumes
-# the full geocoded pages table once).
-THROUGHPUT_QUERIES = {"pip_join", "cell_assign", "tile_counts_z8", "zonal_count"}
+ROOT = os.path.dirname(os.path.abspath(__file__))
+FIELDS = ("rows_per_s", "job_s", "setup_s", "ops_ok_share")
 
 
-def _force(df) -> int:
-    """Execute the full plan; return row count without collecting rows."""
-    return df.count()
+def summary_line(results: dict) -> str:
+    """One compact JSON line from perfbench results keyed by workload
+    name; a missing (None) or incorrect result makes ``correct`` false."""
+    workloads = {name: {k: round(r["metrics"][k]["value"], 4)
+                        for k in FIELDS if k in r["metrics"]} if r else {}
+                 for name, r in results.items()}
+    return json.dumps({
+        "metric": "sum of perfbench median job_s, seed 1",
+        "value": round(sum(w.get("job_s", 0.0)
+                           for w in workloads.values()), 4),
+        "unit": "s",
+        "pages_per_sec": workloads.get("zonal_pages", {}).get("rows_per_s"),
+        "correct": all(r and r["correct"] for r in results.values()),
+        "workloads": workloads,
+    }, separators=(",", ":"))
 
 
-def _cluster_incremental(spark, sf_dir: str):
-    """dedup_cluster_canonical shares the MinHash-verified pair graph
-    with dedup_minhash_lsh — the bench previously paid the identical
-    pair pipeline twice (BENCH_r02: ~60% of the 9.8 s cluster timing was
-    the pair pipeline already timed under dedup_minhash_lsh). Here the
-    pair graph is materialized OUTSIDE the timer and the query is timed
-    as the clustering increment (components + canonical selection),
-    which is the operator's marginal cost in a real pipeline where the
-    pair table is an upstream stage's output."""
-    from gdal_spark.dedup import (crawl_from_documents,
-                                  minhash_neardup_pairs, neardup_clusters)
-
-    crawl = crawl_from_documents(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    pairs = minhash_neardup_pairs(crawl, threshold=0.8) \
-        .localCheckpoint(eager=True)  # materialized pre-timer
-    return lambda s, d: neardup_clusters(crawl, pairs)
-
-
-# bench-only builders: same operator, input stage pre-materialized so a
-# shared upstream isn't double-counted (see _cluster_incremental)
-BENCH_INCREMENTAL = {"dedup_cluster_canonical": _cluster_incremental}
-
-
-def _median(xs: list[float]) -> float:
-    s = sorted(xs)
-    n = len(s)
-    return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0
-
-
-def run_bench(spark, sf_dir: str, names: list[str] | None = None,
-              trials: int = 1) -> dict:
-    """Time each query ``trials`` times; report the per-query MEDIAN
-    plus the [min, max] spread (VERDICT r3: single-trial timings could
-    not distinguish sandbox host drift from real regressions — e.g.
-    st_functions +141% on unchanged code). Trials of one query run
-    back-to-back; the median absorbs one-off JIT/compile and GC spikes
-    while staying honest about steady-state cost."""
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-    names = names or [n for n in HEADLINE if n in qs]
-    timings: dict[str, float] = {}
-    spread: dict[str, list[float]] = {}
-    rows: dict[str, int] = {}
-    for name in names:
-        if name in BENCH_INCREMENTAL:
-            fn = BENCH_INCREMENTAL[name](spark, sf_dir)  # prep untimed
-        else:
-            fn = qs[name]
-        ts: list[float] = []
-        for _ in range(max(1, trials)):
-            t0 = time.perf_counter()
-            n = _force(fn(spark, sf_dir))
-            ts.append(round(time.perf_counter() - t0, 3))
-            rows[name] = n
-        timings[name] = round(_median(ts), 3)
-        spread[name] = [min(ts), max(ts)]
-    return {"timings": timings, "rows": rows, "spread": spread}
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-    from gdal_spark.session import get_spark
-
-    spark = get_spark("gdal_spark-bench", master=f"local[{cpus}]",
-                      shuffle_partitions=max(cpus, 32),
-                      extra_conf={
-                          # keep stdout clean of \r progress fragments so
-                          # the final JSON line parses (BENCH_r04 did not)
-                          "spark.ui.showConsoleProgress": "false",
-                      })
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm the JVM + parquet footer caches with a trivial action so the
-    # first timed query doesn't pay one-time startup cost.
-    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    # ... and the Python/Arrow worker pool, which otherwise spins up
-    # inside the first UDF query's timing.
-    from pyspark.sql import functions as _F
-
-    _warm = _F.pandas_udf(lambda s: s, "long")
-    spark.range(cpus * 4, numPartitions=cpus).select(
-        _warm("id")).count()
-
-    trials = int(os.environ.get("SPARK_GRAFT_TRIALS", "3"))
-    res = run_bench(spark, sf_dir, trials=trials)
-    timings = res["timings"]
-    total = round(sum(timings.values()), 3)
-
-    import __spark_entry__ as entrymod
-    fixture_names = [n for n in FIXTURE if n in entrymod.queries()]
-    fres = run_bench(spark, sf_dir, names=fixture_names, trials=trials)
-
-    tp_sec = sum(timings[q] for q in THROUGHPUT_QUERIES if q in timings)
-    n_tp = sum(1 for q in THROUGHPUT_QUERIES if q in timings)
-    pages_per_sec = round(n_docs * n_tp / tp_sec, 1) if tp_sec > 0 else None
-
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf_val: float | str = float(sf)
-    except ValueError:
-        sf_val = sf
-
-    out = {
-        "metric": "spatial-join + tile-assignment pipeline, total sec over headline queries",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf_val,
-        "pages_per_sec": pages_per_sec,
-        "n_docs": n_docs,
-        "cpus": cpus,
-        "trials": trials,
-        "spread": res["spread"],
-        # 9-row constructed-geometry fixtures — overhead, not operator
-        # cost; timed separately, excluded from `value` (see FIXTURE)
-        "fixture_queries": fres["timings"],
-        "fixture_spread": fres["spread"],
-    }
-    # Stop Spark BEFORE printing so no JVM shutdown noise follows the
-    # result, then emit the compact JSON as the very last line of output
-    # — the driver tail-captures stdout and BENCH_r04 recorded
-    # "parsed": null because log lines after/around the JSON pushed its
-    # head out of the capture window (VERDICT r4 wrong-#2 / next-#2).
-    spark.stop()
-    sys.stdout.flush()
-    sys.stderr.flush()
-    # leading newline: if anything left an unterminated \r line on
-    # stdout, the JSON still starts at column 0 of its own line
-    print("\n" + json.dumps(out, separators=(",", ":")), flush=True)
+def main() -> int:
+    with open(os.path.join(ROOT, "BENCHMARK.json"), encoding="utf-8") as f:
+        spec = json.load(f)
+    results = {}
+    for wl in spec["workloads"]:
+        cmd = [*spec["command"], "--workload", wl["name"], "--seed", "1",
+               "--seconds", str(spec["run_seconds"]), "--trace", "0"]
+        proc = subprocess.run(cmd, cwd=ROOT, stdout=subprocess.PIPE,
+                              text=True, check=False)
+        lines = proc.stdout.strip().splitlines()
+        print("\n".join(lines[:-1]), flush=True)
+        ok = proc.returncode == 0 and lines
+        results[wl["name"]] = json.loads(lines[-1]) if ok else None
+    line = summary_line(results)
+    print("\n" + line, flush=True)
+    return 0 if json.loads(line)["correct"] else 1
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    main()
+    sys.exit(main())

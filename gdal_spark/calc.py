@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gdal_spark.raster import TILE_SCHEMA
+from gdal_spark.raster import TILE_DTYPE, TILE_SCHEMA
 
 # the numpy functions gdal_calc expressions conventionally use
 ALLOWED_FUNCS = (
@@ -70,9 +70,8 @@ def compile_calc(calc: str, band_names: list[str]):
     return kernel
 
 
-def raster_calc(tiles: DataFrame, calc: str, bands: dict[str, int],
-                dtype: str = "int64",
-                out_dtype: str = "int64") -> DataFrame:
+def raster_calc(tiles: DataFrame, calc: str,
+                bands: dict[str, int]) -> DataFrame:
     """``gdal_calc.py -A … -B … --calc <expr>``: elementwise band
     algebra; output is a single band-1 raster on the same tile grid.
 
@@ -81,8 +80,6 @@ def raster_calc(tiles: DataFrame, calc: str, bands: dict[str, int],
     """
     letters = sorted(bands)
     kernel = compile_calc(calc, letters)
-    np_in = np.dtype(dtype)
-    np_out = np.dtype(out_dtype)
 
     base = letters[0]
     out = tiles.filter(F.col("band") == bands[base]).select(
@@ -97,11 +94,12 @@ def raster_calc(tiles: DataFrame, calc: str, bands: dict[str, int],
             res = []
             for _, row in pdf.iterrows():
                 bufs = {
-                    letter: np.frombuffer(row[f"_d_{letter}"], dtype=np_in)
+                    letter: np.frombuffer(row[f"_d_{letter}"],
+                                          dtype=TILE_DTYPE)
                     for letter in letters
                 }
                 res.append(np.ascontiguousarray(
-                    np.asarray(kernel(bufs)).astype(np_out)).tobytes())
+                    np.asarray(kernel(bufs)).astype(TILE_DTYPE)).tobytes())
             yield pd.DataFrame({
                 "z": pdf["z"], "tx": pdf["tx"], "ty": pdf["ty"],
                 "band": 1, "gt": pdf["gt"], "data": res,

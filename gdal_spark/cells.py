@@ -9,6 +9,10 @@ zoom z maps to tile
     tx = clamp(floor((lon + 180) / 360 * n), 0, n-1)
     ty = clamp(floor((1 - asinh(tan(lat_rad)) / pi) / 2 * n), 0, n-1)
 
+In SQL, tx is NULL unless lon ∈ [-180, 180] and ty is NULL unless
+lat ∈ [-90, 90]: NULL, NaN and ±inf fail the range check in both Spark
+and DuckDB, so an invalid coordinate gets no tile instead of an edge tile.
+
 The packed ``cell_id = (z << 58) | (tx << 29) | ty`` is this engine's
 H3/S2-equivalent hierarchical cell id (the north rule allows a pure-math
 quad scheme; h3/s2 native libs are not available in this environment).
@@ -39,7 +43,11 @@ X_SHIFT = 29
 
 def tile_x_sql(lon: str, z: int) -> str:
     n = 1 << z
-    return f"cast(least(greatest(floor((({lon}) + 180.0) / 360.0 * {n}), 0), {n - 1}) as bigint)"
+    return (
+        f"case when ({lon}) between -180.0 and 180.0 then"
+        f" cast(least(floor((({lon}) + 180.0) / 360.0 * {n}), {n - 1})"
+        f" as bigint) end"
+    )
 
 
 def tile_y_sql(lat: str, z: int) -> str:
@@ -47,8 +55,9 @@ def tile_y_sql(lat: str, z: int) -> str:
     t = f"tan(radians(least(greatest({lat}, {-MAX_LAT}), {MAX_LAT})))"
     asinh_t = f"ln({t} + sqrt({t} * {t} + 1.0))"
     return (
-        f"cast(least(greatest(floor((1.0 - ({asinh_t}) / pi()) / 2.0 * {n}), 0),"
-        f" {n - 1}) as bigint)"
+        f"case when ({lat}) between -90.0 and 90.0 then"
+        f" cast(least(greatest(floor((1.0 - ({asinh_t}) / pi()) / 2.0 * {n}), 0),"
+        f" {n - 1}) as bigint) end"
     )
 
 

@@ -2061,12 +2061,3 @@ def osgb36_sql_stages(lon: str, lat: str) -> list[tuple[str, str]]:
     Helmert + Airy national-grid parameters)."""
     return datum_tmerc_sql_stages(lon, lat, HELMERT_WGS84_TO_OSGB36,
                                   TMERC_27700)
-
-
-def osgb36_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
-                          out_lat: str = "lat") -> list[tuple[str, str]]:
-    """27700 → 4326 staged SQL (datum_tmerc_inv_sql_stages with the
-    OSGB36 parameters)."""
-    return datum_tmerc_inv_sql_stages(x, y, out_lon, out_lat,
-                                      HELMERT_WGS84_TO_OSGB36,
-                                      TMERC_27700)

@@ -131,8 +131,7 @@ def warp_gcp_pixel_sql(fit: dict, dst_gt: list[float],
 
 
 def warp_gcp_nearest(tiles: DataFrame, fit: dict, raster_px: int,
-                     dst_gt: list[float], dst_px: int,
-                     dtype: str = "int64") -> DataFrame:
+                     dst_gt: list[float], dst_px: int) -> DataFrame:
     """Nearest warp of a GCP-georeferenced source onto an affine dst
     grid (gdalwarp -order n): the same chunk-gather plan as
     raster.warp_nearest, with the dst→src chain running through the
@@ -151,7 +150,7 @@ def warp_gcp_nearest(tiles: DataFrame, fit: dict, raster_px: int,
         .withColumn("tx", F.expr(f"sgx div {t}"))
         .withColumn("ty", F.expr(f"sgy div {t}"))
     )
-    return _nearest_gather(dst, tiles, np.dtype(dtype))
+    return _nearest_gather(dst, tiles)
 
 
 def warp_gcp_oracle_sql(fit: dict, raster_px: int, dst_gt: list[float],
@@ -326,8 +325,7 @@ def tps_stages(fit: dict, xe: str, ye: str,
 
 
 def warp_tps_nearest(tiles: DataFrame, fit: dict, raster_px: int,
-                     dst_gt: list[float], dst_px: int,
-                     dtype: str = "int64") -> DataFrame:
+                     dst_gt: list[float], dst_px: int) -> DataFrame:
     """Nearest warp through the TPS transformer (gdalwarp -tps): the
     same chunk-gather plan as warp_gcp_nearest; the RBF evaluation is
     staged Catalyst columns (one per center) inside codegen."""
@@ -351,7 +349,7 @@ def warp_tps_nearest(tiles: DataFrame, fit: dict, raster_px: int,
         .withColumn("ty", F.expr(f"sgy div {t}"))
         .select("di", "dj", "sgx", "sgy", "tx", "ty")
     )
-    return _nearest_gather(dst, tiles, np.dtype(dtype))
+    return _nearest_gather(dst, tiles)
 
 
 def warp_tps_oracle_sql(fit: dict, raster_px: int, dst_gt: list[float],

@@ -157,16 +157,6 @@ def clip_ring_to_rect(ring: np.ndarray, minx: float, miny: float,
     return np.vstack([poly, poly[:1]])
 
 
-def segments_intersect_rect(ring: np.ndarray, minx, miny, maxx, maxy) -> bool:
-    """Cheap test: does any vertex or edge bbox touch the rect?"""
-    x = ring[:, 0]
-    y = ring[:, 1]
-    return bool(
-        (x.max() >= minx) and (x.min() <= maxx)
-        and (y.max() >= miny) and (y.min() <= maxy)
-    )
-
-
 def point_segment_dist2(px, py, ax, ay, bx, by):
     """Squared distance from points (px,py) to segment (a,b), vectorized."""
     px = np.asarray(px, dtype=np.float64)

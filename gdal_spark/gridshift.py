@@ -71,14 +71,6 @@ def _node_sql(i: str, j: str, c: tuple) -> str:
             f" as double) * {scale!r})")
 
 
-def node_dlat_sql(i: str, j: str, grid: dict = UK_GRID) -> str:
-    return _node_sql(i, j, grid["dlat"])
-
-
-def node_dlon_sql(i: str, j: str, grid: dict = UK_GRID) -> str:
-    return _node_sql(i, j, grid["dlon"])
-
-
 def _cell_cols(grid: dict) -> list[tuple[str, str]]:
     """One row per CELL with the four corner shifts — the broadcast
     table's columns."""

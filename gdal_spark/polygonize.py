@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gdal_spark.raster import TILE_PX
+from gdal_spark.raster import TILE_DTYPE, TILE_PX
 
 
 def _label_tile(mask: np.ndarray, pid: np.ndarray) -> np.ndarray:
@@ -94,14 +94,13 @@ def _label_tile_values(vals: np.ndarray, pid: np.ndarray,
 
 
 def tile_components_values(tiles: DataFrame, grid_w: int,
-                           dtype: str = "int64", connect8: bool = False
+                           connect8: bool = False
                            ) -> tuple[DataFrame, DataFrame]:
     """Per-tile equal-valued labeling pass (value-aware polygonize).
 
     Returns (parts, borders): parts — (lbl, value, n_pixels, bbox) per
     tile-local equal-valued component; borders — (gx, gy, lbl, value)
     for every tile-border pixel."""
-    np_dtype = np.dtype(dtype)
     t = TILE_PX
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -109,7 +108,7 @@ def tile_components_values(tiles: DataFrame, grid_w: int,
             out_parts = []
             out_borders = []
             for _, row in pdf.iterrows():
-                buf = np.frombuffer(row["data"], dtype=np_dtype) \
+                buf = np.frombuffer(row["data"], dtype=TILE_DTYPE) \
                     .reshape(t, t).astype(np.int64)
                 ty0 = int(row["ty"]) * t
                 tx0 = int(row["tx"]) * t
@@ -205,7 +204,6 @@ def cross_tile_edges_values(borders: DataFrame,
 
 
 def polygonize_by_value(tiles: DataFrame, grid_w: int,
-                        dtype: str = "int64",
                         connect8: bool = False) -> DataFrame:
     """Full value-aware polygonize: (comp, value, n_pixels, bbox) per
     connected component of EQUAL-VALUED pixels — 4-connected by default,
@@ -214,8 +212,7 @@ def polygonize_by_value(tiles: DataFrame, grid_w: int,
     (GDALPolygonize over the band values — the iso-band polygon output
     of gdal_contour -p composes as this over a band-classified
     raster)."""
-    parts, borders = tile_components_values(tiles, grid_w, dtype,
-                                            connect8)
+    parts, borders = tile_components_values(tiles, grid_w, connect8)
     labels = propagate_labels(
         parts, cross_tile_edges_values(borders, connect8=connect8))
     return (
@@ -279,8 +276,8 @@ def polygonize_values_oracle_sql(raster_px: int, band_np,
             f" t(comp, value, n_pixels, min_gx, min_gy, max_gx, max_gy)")
 
 
-def tile_components(tiles: DataFrame, grid_w: int,
-                    dtype: str = "int64") -> tuple[DataFrame, DataFrame]:
+def tile_components(tiles: DataFrame,
+                    grid_w: int) -> tuple[DataFrame, DataFrame]:
     """Per-tile labeling pass.
 
     Returns (parts, borders):
@@ -288,7 +285,6 @@ def tile_components(tiles: DataFrame, grid_w: int,
               tile-local component (lbl = min global pid in the tile part)
     borders — (gx, gy, lbl) for occupied tile-border pixels
     """
-    np_dtype = np.dtype(dtype)
     t = TILE_PX
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -296,7 +292,8 @@ def tile_components(tiles: DataFrame, grid_w: int,
             out_parts = []
             out_borders = []
             for _, row in pdf.iterrows():
-                buf = np.frombuffer(row["data"], dtype=np_dtype).reshape(t, t)
+                buf = np.frombuffer(row["data"],
+                                    dtype=TILE_DTYPE).reshape(t, t)
                 mask = buf != 0
                 if not mask.any():
                     continue
@@ -418,12 +415,11 @@ def propagate_labels(parts: DataFrame, edges: DataFrame,
     return labels
 
 
-def polygonize_summary(tiles: DataFrame, grid_w: int,
-                       dtype: str = "int64") -> DataFrame:
+def polygonize_summary(tiles: DataFrame, grid_w: int) -> DataFrame:
     """Full polygonize: (comp, n_pixels, min_gx, min_gy, max_gx, max_gy)
     per 4-connected component of the nonzero mask; comp = min global
     pixel id (gy*grid_w + gx) of the component."""
-    parts, borders = tile_components(tiles, grid_w, dtype)
+    parts, borders = tile_components(tiles, grid_w)
     labels = propagate_labels(parts, cross_tile_edges(borders))
     return (
         parts.join(labels, "lbl")
@@ -743,20 +739,18 @@ def polygonize_ring_features(labeled: DataFrame) -> DataFrame:
         per_comp, "comp long, n_rings long, geom binary")
 
 
-def near_pixels(tiles: DataFrame, threshold: float,
-                dtype: str = "int64") -> DataFrame:
+def near_pixels(tiles: DataFrame, threshold: float) -> DataFrame:
     """(gx, gy) rows of pixels with value <= threshold — the sparse
     near-black mask. Only mask pixels ever leave the decode kernel, so
     at corpus scale the downstream component work is linear in the
     collar size, not the raster size."""
-    np_dtype = np.dtype(dtype)
     t = TILE_PX
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             outs = []
             for _, row in pdf.iterrows():
-                buf = np.frombuffer(row["data"], dtype=np_dtype) \
+                buf = np.frombuffer(row["data"], dtype=TILE_DTYPE) \
                     .reshape(t, t)
                 yy, xx = np.nonzero(buf <= threshold)
                 if len(xx):

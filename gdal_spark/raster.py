@@ -5,7 +5,9 @@ The raster data model is GDAL's blocked-band model re-expressed as rows
 ``(z, tx, ty, band, gt: array<double>[6], data: binary)`` where ``data``
 is a ``tile_px × tile_px`` numpy buffer and ``gt`` the 6-coefficient
 affine geotransform (gcore/gdal_priv.h:728 semantics, WebMercator
-meters). Pixel addressing matches `gdal raster tile`'s WebMercatorQuad
+meters). As a GDAL band holds one GDALDataType, every tile buffer holds
+one pixel type, ``TILE_DTYPE`` (int64): operators take no dtype
+argument. Pixel addressing matches `gdal raster tile`'s WebMercatorQuad
 (apps/gdalalg_raster_tile.cpp:274): global pixel (gx, gy) at zoom z is
 the cell of zoom z + log2(tile_px); tile = (gx >> log2(tile_px), ...).
 
@@ -53,6 +55,7 @@ EARTH_CIRCUM_M = 2.0 * math.pi * 6378137.0
 
 TILE_SCHEMA = ("z int, tx long, ty long, band int, gt array<double>, "
                "data binary")
+TILE_DTYPE = np.int64
 
 
 def gpixel_exprs(lon: str, lat: str, z: int,
@@ -67,10 +70,12 @@ def gpixel_exprs(lon: str, lat: str, z: int,
 def pixel_counts(points: DataFrame, z: int, lon: str = "lon",
                  lat: str = "lat") -> DataFrame:
     """Burn points: (gx, gy, cnt) — MERGE_ALG=ADD with burn value 1
-    (alg/gdalrasterize.cpp:779-817). One shuffle keyed by pixel."""
+    (alg/gdalrasterize.cpp:779-817). One shuffle keyed by pixel. Points
+    with an invalid coordinate (NULL pixel) burn nothing."""
     gxe, gye = gpixel_exprs(lon, lat, z)
     return (
         points.withColumn("gx", F.expr(gxe)).withColumn("gy", F.expr(gye))
+        .filter("gx is not null and gy is not null")
         .groupBy("gx", "gy").agg(F.count(F.lit(1)).alias("cnt"))
     )
 
@@ -86,21 +91,16 @@ def tile_geotransform(tx: int, ty: int, z: int,
     return [origin_x, res, 0.0, origin_y, 0.0, -res]
 
 
-def tiles_from_pixel_counts(px: DataFrame, z: int, clamp: int | None = None,
-                            dtype: str = "int64") -> DataFrame:
+def tiles_from_pixel_counts(px: DataFrame, z: int) -> DataFrame:
     """(gx, gy, cnt) → tile rows with assembled numpy buffers."""
     tile_px = TILE_PX
-    np_dtype = np.dtype(dtype)
 
     def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
-        buf = np.zeros((tile_px, tile_px), dtype=np_dtype)
+        buf = np.zeros((tile_px, tile_px), dtype=TILE_DTYPE)
         py = (pdf["gy"].to_numpy() - ty * tile_px).astype(np.int64)
         pxx = (pdf["gx"].to_numpy() - tx * tile_px).astype(np.int64)
-        vals = pdf["cnt"].to_numpy()
-        if clamp is not None:
-            vals = np.minimum(vals, clamp)
-        buf[py, pxx] = vals
+        buf[py, pxx] = pdf["cnt"].to_numpy()
         return pd.DataFrame({
             "z": [z], "tx": [tx], "ty": [ty], "band": [1],
             "gt": [tile_geotransform(tx, ty, z)],
@@ -112,9 +112,8 @@ def tiles_from_pixel_counts(px: DataFrame, z: int, clamp: int | None = None,
     return keyed.groupBy("_tx", "_ty").applyInPandas(assemble, TILE_SCHEMA)
 
 
-def rasterize_points(points: DataFrame, z: int, clamp: int | None = None,
-                     dtype: str = "int64") -> DataFrame:
-    return tiles_from_pixel_counts(pixel_counts(points, z), z, clamp, dtype)
+def rasterize_points(points: DataFrame, z: int) -> DataFrame:
+    return tiles_from_pixel_counts(pixel_counts(points, z), z)
 
 
 def checksum_np(buf: np.ndarray) -> int:
@@ -125,16 +124,15 @@ def checksum_np(buf: np.ndarray) -> int:
     return int(np.sum(flat % primes) % 65536)
 
 
-def tile_checksums(tiles: DataFrame, dtype: str = "int64") -> DataFrame:
+def tile_checksums(tiles: DataFrame) -> DataFrame:
     """(z, tx, ty) → checksum + nonzero-pixel count, via mapInPandas."""
-    np_dtype = np.dtype(dtype)
 
     def per_tile(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             sums = []
             nnz = []
             for raw in pdf["data"]:
-                buf = np.frombuffer(raw, dtype=np_dtype)
+                buf = np.frombuffer(raw, dtype=TILE_DTYPE)
                 sums.append(checksum_np(buf))
                 nnz.append(int(np.count_nonzero(buf)))
             yield pd.DataFrame({
@@ -147,8 +145,7 @@ def tile_checksums(tiles: DataFrame, dtype: str = "int64") -> DataFrame:
         per_tile, "z int, tx long, ty long, checksum long, n_nonzero long")
 
 
-def compare_tile_bands(golden: DataFrame, new: DataFrame,
-                       dtype: str = "int64") -> DataFrame:
+def compare_tile_bands(golden: DataFrame, new: DataFrame) -> DataFrame:
     """gdalcompare golden-vs-new band report (swig/python/gdal-utils/
     osgeo_utils/gdalcompare.py:127-214 compare_band /
     compare_image_pixels:79-122): per band, both GDALChecksumImage
@@ -165,7 +162,6 @@ def compare_tile_bands(golden: DataFrame, new: DataFrame,
     the final per-band aggregation. At 100 TB each pixel payload
     crosses exactly one exchange (its own co-partitioning shuffle)
     and the band rollup moves O(tiles) 5-int rows."""
-    np_dtype = np.dtype(dtype)
 
     def per_pair(key: tuple, gpdf: pd.DataFrame,
                  npdf: pd.DataFrame) -> pd.DataFrame:
@@ -174,9 +170,9 @@ def compare_tile_bands(golden: DataFrame, new: DataFrame,
             raise ValueError(
                 f"duplicate tile rows for (band, tx, ty) = {tuple(key)}: "
                 f"{len(gpdf)} golden, {len(npdf)} new")
-        gbuf = (np.frombuffer(gpdf["data"].iloc[0], dtype=np_dtype)
+        gbuf = (np.frombuffer(gpdf["data"].iloc[0], dtype=TILE_DTYPE)
                 .astype(np.int64) if len(gpdf) else None)
-        nbuf = (np.frombuffer(npdf["data"].iloc[0], dtype=np_dtype)
+        nbuf = (np.frombuffer(npdf["data"].iloc[0], dtype=TILE_DTYPE)
                 .astype(np.int64) if len(npdf) else None)
         primes = CHECKSUM_PRIMES[np.arange(
             (gbuf if gbuf is not None else nbuf).size) % 11]
@@ -244,8 +240,9 @@ def checksum_oracle_sql(points_sql: str, z: int,
     remap = px_remap or "select * from px0"
     return f"""
 with px_all as (
-  select {gxe} as gx, {gye} as gy, count(*) as cnt
-  from ({points_sql}) p group by 1, 2
+  select gx, gy, count(*) as cnt
+  from (select {gxe} as gx, {gye} as gy from ({points_sql}) p)
+  where gx is not null and gy is not null group by 1, 2
 ),
 px0 as (select * from px_all where {px_where}),
 px as ({remap})
@@ -259,15 +256,13 @@ from px group by 1, 2, 3
 """
 
 
-def overview_sum(tiles: DataFrame, dtype: str = "int64",
-                 resampler: str = "sum") -> DataFrame:
+def overview_sum(tiles: DataFrame, resampler: str = "sum") -> DataFrame:
     """One pyramid level up: 4 child tiles → 1 parent tile, 2×2
     reduction (overview.cpp chunk-reduce pattern). Resamplers:
     'sum' (mass-preserving) or 'average' (GDAL's default overview
     resampler — integer average rounded half-up, the GDALCopyWords
     +0.5-floor convention). groupBy(parent) — partial aggregation is the
     tile buffer itself."""
-    np_dtype = np.dtype(dtype)
     tile_px = TILE_PX
     if resampler not in ("sum", "average", "mode", "rms"):
         raise ValueError(resampler)
@@ -275,9 +270,9 @@ def overview_sum(tiles: DataFrame, dtype: str = "int64",
     def reduce_children(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ptx, pty = int(key[0]), int(key[1])
         z = int(pdf["z"].iloc[0]) - 1
-        out = np.zeros((tile_px, tile_px), dtype=np_dtype)
+        out = np.zeros((tile_px, tile_px), dtype=TILE_DTYPE)
         for tx, ty, buf in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-            child = np.frombuffer(buf, dtype=np_dtype).reshape(
+            child = np.frombuffer(buf, dtype=TILE_DTYPE).reshape(
                 tile_px, tile_px)
             if resampler in ("mode", "rms"):
                 # blocks[..., k] in window scan order (dy, dx):
@@ -404,19 +399,18 @@ from par group by 1, 2, 3
 """
 
 
-def raster_stats(tiles: DataFrame, dtype: str = "int64") -> DataFrame:
+def raster_stats(tiles: DataFrame) -> DataFrame:
     """GDALRasterBand::ComputeStatistics restated as partial+final:
     per-tile numpy partials (count/min/max/sum/sum-of-squares — integer,
     exact) reduced globally, mean/stddev derived by a fixed SQL
     expression shared with the oracle. Pixels of unmaterialized tiles
     are outside the band (sparse-raster semantics)."""
-    np_dtype = np.dtype(dtype)
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for raw in pdf["data"]:
-                buf = np.frombuffer(raw, dtype=np_dtype).astype(np.int64)
+                buf = np.frombuffer(raw, dtype=TILE_DTYPE).astype(np.int64)
                 rows.append((buf.size, int(buf.min()), int(buf.max()),
                              int(buf.sum()), int((buf * buf).sum())))
             yield pd.DataFrame(rows, columns=["n", "mn", "mx", "s", "sq"])
@@ -466,18 +460,16 @@ from g
 """
 
 
-def histogram(tiles: DataFrame, n_buckets: int = 10,
-              dtype: str = "int64") -> DataFrame:
+def histogram(tiles: DataFrame, n_buckets: int = 10) -> DataFrame:
     """GDALRasterBand::GetHistogram with integer buckets [0, n_buckets):
     values ≥ n_buckets clamp into the last bucket (bIncludeOutOfRange).
     Per-tile numpy bincount partials → one keyed reduction."""
-    np_dtype = np.dtype(dtype)
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             acc = np.zeros(n_buckets, dtype=np.int64)
             for raw in pdf["data"]:
-                buf = np.frombuffer(raw, dtype=np_dtype).astype(np.int64)
+                buf = np.frombuffer(raw, dtype=TILE_DTYPE).astype(np.int64)
                 acc += np.bincount(np.minimum(buf, n_buckets - 1),
                                    minlength=n_buckets)
             yield pd.DataFrame({"bucket": np.arange(n_buckets),
@@ -513,7 +505,7 @@ group by bucket having sum(n) > 0
 
 
 def sample_bilinear(tiles: DataFrame, queries: DataFrame,
-                    raster_px: int, dtype: str = "int64") -> DataFrame:
+                    raster_px: int) -> DataFrame:
     """Bilinear InterpolateAtPoint (gcore/gdalrasterband.cpp:9963,
     alg/gdal_interpolateatpoint.cpp bilinear path): queries carry
     fractional PIXEL coordinates (qx, qy); the 4 pixel-center neighbors
@@ -525,7 +517,6 @@ def sample_bilinear(tiles: DataFrame, queries: DataFrame,
     fx = qx - 0.5 - x0. Queries whose 2×2 window leaves the raster are
     dropped (the out-of-raster early-return)."""
     spark = tiles.sparkSession
-    np_dtype = np.dtype(dtype)
     t = TILE_PX
     nb = (
         queries
@@ -556,7 +547,7 @@ def sample_bilinear(tiles: DataFrame, queries: DataFrame,
         for pdf in batches:
             for raw, px, tx, ty in zip(pdf["data"], pdf["px"],
                                        pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=np_dtype).reshape(t, t)
+                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
                 p = pd.DataFrame(list(px))
                 ly = p["gy"].to_numpy(np.int64) - int(ty) * t
                 lx = p["gx"].to_numpy(np.int64) - int(tx) * t
@@ -629,14 +620,12 @@ def _cubic_sum_sql(v: "list[list[str]]", fx: str, fy: str,
 
 
 def sample_cubic(tiles: DataFrame, queries: DataFrame,
-                 raster_px: int, dtype: str = "int64",
-                 kernel: str = "cubic") -> DataFrame:
+                 raster_px: int, kernel: str = "cubic") -> DataFrame:
     """Cubic InterpolateAtPoint (GRIORA_Cubic 4×4 convolution,
     alg/gdal_interpolateatpoint.cpp): 16-tap gather through the per-tile
     chunk path; weights and the separable sum are Catalyst arithmetic
     shared textually with the oracle. Queries whose 4×4 window leaves
     the raster are dropped."""
-    np_dtype = np.dtype(dtype)
     t = TILE_PX
     taps = ", ".join(
         f"struct({ky * 4 + kx} as k, x1 + {kx - 1} as gx,"
@@ -663,7 +652,7 @@ def sample_cubic(tiles: DataFrame, queries: DataFrame,
         for pdf in batches:
             for raw, px, tx, ty in zip(pdf["data"], pdf["px"],
                                        pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=np_dtype).reshape(t, t)
+                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
                 p = pd.DataFrame(list(px))
                 ly = p["gy"].to_numpy(np.int64) - int(ty) * t
                 lx = p["gx"].to_numpy(np.int64) - int(tx) * t
@@ -748,11 +737,10 @@ from n
 
 
 def sample_at_points(tiles: DataFrame, points: DataFrame, z: int,
-                     dtype: str = "int64", point_id: str = "qid") -> DataFrame:
+                     point_id: str = "qid") -> DataFrame:
     """Nearest-neighbour raster sampling at world coordinates
     (InterpolateAtPoint nearest, gcore/gdalrasterband.cpp:9963): points
     outside any materialized tile sample 0 (sparse raster semantics)."""
-    np_dtype = np.dtype(dtype)
     tile_px = TILE_PX
     gxe, gye = gpixel_exprs("lon", "lat", z)
     pts = (
@@ -769,7 +757,7 @@ def sample_at_points(tiles: DataFrame, points: DataFrame, z: int,
                     pdf["data"], pdf["gx"], pdf["gy"], pdf["tx"], pdf["ty"])):
                 if raw is None:
                     continue
-                buf = np.frombuffer(raw, dtype=np_dtype).reshape(
+                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(
                     tile_px, tile_px)
                 vals[i] = int(buf[int(gy) - int(ty) * tile_px,
                                   int(gx) - int(tx) * tile_px])
@@ -785,7 +773,7 @@ def sample_at_points(tiles: DataFrame, points: DataFrame, z: int,
 
 
 def halo_gradient(tiles: DataFrame, raster_px: int,
-                  dtype: str = "int64", alg: str = "horn") -> DataFrame:
+                  alg: str = "horn") -> DataFrame:
     """3×3 gradient over a tiled integer raster with 1-px halo
     exchange: every tile is shipped to the 9 assembly groups that need any
     of its pixels; each group builds a (tile_px+2)² window and evaluates
@@ -800,7 +788,6 @@ def halo_gradient(tiles: DataFrame, raster_px: int,
     Raster-edge pixels are skipped (gdaldem default: no edge values unless
     -compute_edges). Output: one row per interior pixel.
     """
-    np_dtype = np.dtype(dtype)
     tile_px = TILE_PX
     n_tiles = raster_px // tile_px
 
@@ -818,7 +805,7 @@ def halo_gradient(tiles: DataFrame, raster_px: int,
         htx, hty = int(key[0]), int(key[1])
         win = np.zeros((tile_px + 2, tile_px + 2), dtype=np.int64)
         for _, row in pdf.iterrows():
-            buf = np.frombuffer(row["data"], dtype=np_dtype).reshape(
+            buf = np.frombuffer(row["data"], dtype=TILE_DTYPE).reshape(
                 tile_px, tile_px)
             dy = (int(row["ty"]) - hty) * tile_px
             dx = (int(row["tx"]) - htx) * tile_px
@@ -851,8 +838,7 @@ def halo_gradient(tiles: DataFrame, raster_px: int,
         assemble, "gx long, gy long, num_x long, num_y long")
 
 
-def halo_tri_tpi_roughness(tiles: DataFrame, raster_px: int,
-                           dtype: str = "int64") -> DataFrame:
+def halo_tri_tpi_roughness(tiles: DataFrame, raster_px: int) -> DataFrame:
     """The remaining gdaldem 3×3 terrain kernels (apps/gdaldem_lib.cpp —
     TRI Wilson, TPI, roughness) over the same 1-px halo exchange,
     integer-scaled so both engines compare exactly:
@@ -861,7 +847,6 @@ def halo_tri_tpi_roughness(tiles: DataFrame, raster_px: int,
         tpi8  = 8·center − Σ neighbors     (TPI × 8)
         rough = max(window) − min(window)
     """
-    np_dtype = np.dtype(dtype)
     tile_px = TILE_PX
     n_tiles = raster_px // tile_px
 
@@ -879,7 +864,7 @@ def halo_tri_tpi_roughness(tiles: DataFrame, raster_px: int,
         htx, hty = int(key[0]), int(key[1])
         win = np.zeros((tile_px + 2, tile_px + 2), dtype=np.int64)
         for _, row in pdf.iterrows():
-            buf = np.frombuffer(row["data"], dtype=np_dtype).reshape(
+            buf = np.frombuffer(row["data"], dtype=TILE_DTYPE).reshape(
                 tile_px, tile_px)
             dy = (int(row["ty"]) - hty) * tile_px
             dx = (int(row["tx"]) - htx) * tile_px
@@ -952,20 +937,19 @@ COLOR_RAMP = [
 ]
 
 
-def color_relief(tiles: DataFrame, window_tx: int, window_ty: int,
-                 dtype: str = "int64") -> DataFrame:
+def color_relief(tiles: DataFrame, window_tx: int,
+                 window_ty: int) -> DataFrame:
     """gdaldem color-relief: per-pixel piecewise-linear RGB from the
     elevation ramp, round-half-up to integer channels. Output: the
     pixels of one window tile (per-tile numpy kernel, expression order
     pinned to the oracle's CASE ladder)."""
-    np_dtype = np.dtype(dtype)
     t = TILE_PX
     sel = tiles.filter(f"tx = {window_tx} and ty = {window_ty}")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for raw, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                e = np.frombuffer(raw, dtype=np_dtype).reshape(t, t) \
+                e = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t) \
                       .astype(np.float64)
                 chans = []
                 for ci in range(3):
@@ -1015,14 +999,12 @@ from m
 """
 
 
-def synth_dem_tiles(spark, raster_px: int = 256,
-                    dtype: str = "int64") -> DataFrame:
+def synth_dem_tiles(spark, raster_px: int = 256) -> DataFrame:
     """Deterministic synthetic DEM: elev(gx, gy) = (gx·gx·5 + gy·gy·3 +
     gx·gy) % 211 — closed-form, so the oracle can evaluate any neighbor
     without tiles. Built as tile rows via applyInPandas."""
     tile_px = TILE_PX
     n_tiles = raster_px // tile_px
-    np_dtype = np.dtype(dtype)
     keys = spark.range(n_tiles * n_tiles).select(
         (F.col("id") % n_tiles).alias("_tx"),
         (F.col("id") / n_tiles).cast("long").alias("_ty"))
@@ -1032,7 +1014,8 @@ def synth_dem_tiles(spark, raster_px: int = 256,
         gy, gx = np.mgrid[0:tile_px, 0:tile_px]
         gx = gx + tx * tile_px
         gy = gy + ty * tile_px
-        elev = ((gx * gx * 5 + gy * gy * 3 + gx * gy) % 211).astype(np_dtype)
+        elev = ((gx * gx * 5 + gy * gy * 3 + gx * gy) % 211) \
+            .astype(TILE_DTYPE)
         return pd.DataFrame({
             "z": [0], "tx": [tx], "ty": [ty], "band": [1],
             "gt": [tile_geotransform(tx, ty, 0)],
@@ -1063,13 +1046,11 @@ def collar_val_sql(raster_px: int) -> str:
             f" else 8 + {DEM_ELEV_SQL} end)")
 
 
-def synth_collar_tiles(spark, raster_px: int,
-                       dtype: str = "int64") -> DataFrame:
+def synth_collar_tiles(spark, raster_px: int) -> DataFrame:
     """Tile rows of the nearblack fixture (see collar_val_sql — the
     numpy formula here is its transcription)."""
     tile_px = TILE_PX
     n_tiles = raster_px // tile_px
-    np_dtype = np.dtype(dtype)
     w1 = raster_px - 1
     keys = spark.range(n_tiles * n_tiles).select(
         (F.col("id") % n_tiles).alias("_tx"),
@@ -1085,7 +1066,7 @@ def synth_collar_tiles(spark, raster_px: int,
             | ((gx >= 40) & (gx <= 47) & (gy >= 40) & (gy <= 47)) \
             | ((gx >= 100) & (gx <= 105) & (gy >= 90) & (gy <= 96))
         elev = (gx * gx * 5 + gy * gy * 3 + gx * gy) % 211
-        val = np.where(dark, (gx + gy) % 5, 8 + elev).astype(np_dtype)
+        val = np.where(dark, (gx + gy) % 5, 8 + elev).astype(TILE_DTYPE)
         return pd.DataFrame({
             "z": [0], "tx": [tx], "ty": [ty], "band": [1],
             "gt": [tile_geotransform(tx, ty, 0)],
@@ -1096,15 +1077,13 @@ def synth_collar_tiles(spark, raster_px: int,
 
 
 def synth_overlay_tiles(spark, raster_px: int,
-                        window: tuple[int, int, int, int],
-                        dtype: str = "int64") -> DataFrame:
+                        window: tuple[int, int, int, int]) -> DataFrame:
     """Second mosaic source: value = OVERLAY_VAL_SQL inside ``window``
     (x0, x1, y0, y1), 0 (= nodata) outside — the closed form lets the
     oracle evaluate it without tiles; in-window zeros exercise the
     nodata fall-through organically."""
     tile_px = TILE_PX
     n_tiles = raster_px // tile_px
-    np_dtype = np.dtype(dtype)
     x0, x1, y0, y1 = window
     keys = spark.range(n_tiles * n_tiles).select(
         (F.col("id") % n_tiles).alias("_tx"),
@@ -1115,9 +1094,9 @@ def synth_overlay_tiles(spark, raster_px: int,
         gy, gx = np.mgrid[0:tile_px, 0:tile_px]
         gx = gx + tx * tile_px
         gy = gy + ty * tile_px
-        val = ((gx * 7 + gy * gy * 11 + 13) % 199).astype(np_dtype)
+        val = ((gx * 7 + gy * gy * 11 + 13) % 199).astype(TILE_DTYPE)
         inside = (gx >= x0) & (gx < x1) & (gy >= y0) & (gy < y1)
-        val = np.where(inside, val, 0).astype(np_dtype)
+        val = np.where(inside, val, 0).astype(TILE_DTYPE)
         return pd.DataFrame({
             "z": [0], "tx": [tx], "ty": [ty], "band": [1],
             "gt": [tile_geotransform(tx, ty, 0)],
@@ -1127,15 +1106,14 @@ def synth_overlay_tiles(spark, raster_px: int,
     return keys.groupBy("_tx", "_ty").applyInPandas(build, TILE_SCHEMA)
 
 
-def mosaic_tiles(tiles_a: DataFrame, tiles_b: DataFrame, nodata: int = 0,
-                 dtype: str = "int64") -> DataFrame:
+def mosaic_tiles(tiles_a: DataFrame, tiles_b: DataFrame,
+                 nodata: int = 0) -> DataFrame:
     """gdal_merge / gdal raster mosaic compositing
     (swig/python/gdal-utils gdal_merge.py semantics; new CLI
     apps/gdalalg_raster_mosaic.cpp): the LATER source paints over the
     earlier except where it is nodata. One full-outer equi-join on the
     tile key + a per-tile numpy where() — compositing never shuffles
     pixels, only tile rows."""
-    np_dtype = np.dtype(dtype)
     a = tiles_a.select("z", "tx", "ty", "band",
                        F.col("data").alias("data_a"))
     b = tiles_b.select("z", "tx", "ty", "band",
@@ -1147,18 +1125,18 @@ def mosaic_tiles(tiles_a: DataFrame, tiles_b: DataFrame, nodata: int = 0,
         for pdf in batches:
             out = []
             for _, r in pdf.iterrows():
-                buf_a = (np.frombuffer(r["data_a"], dtype=np_dtype)
+                buf_a = (np.frombuffer(r["data_a"], dtype=TILE_DTYPE)
                          .reshape(t, t) if r["data_a"] is not None
-                         else np.full((t, t), nodata, dtype=np_dtype))
-                buf_b = (np.frombuffer(r["data_b"], dtype=np_dtype)
+                         else np.full((t, t), nodata, dtype=TILE_DTYPE))
+                buf_b = (np.frombuffer(r["data_b"], dtype=TILE_DTYPE)
                          .reshape(t, t) if r["data_b"] is not None
-                         else np.full((t, t), nodata, dtype=np_dtype))
+                         else np.full((t, t), nodata, dtype=TILE_DTYPE))
                 buf = np.where(buf_b != nodata, buf_b, buf_a)
                 out.append((int(r["z"]), int(r["tx"]), int(r["ty"]),
                             int(r["band"]),
                             tile_geotransform(int(r["tx"]), int(r["ty"]),
                                               int(r["z"])),
-                            buf.astype(np_dtype).tobytes()))
+                            buf.astype(TILE_DTYPE).tobytes()))
             yield pd.DataFrame(out, columns=["z", "tx", "ty", "band",
                                              "gt", "data"])
 
@@ -1185,23 +1163,20 @@ from px group by 2, 3
 """
 
 
-def map_algebra(tiles: DataFrame, kernel, out_dtype: str = "int64",
-                dtype: str = "int64") -> DataFrame:
+def map_algebra(tiles: DataFrame, kernel) -> DataFrame:
     """Raster map algebra: apply a numpy pixel function to every tile
     buffer (GDAL pixel functions, frmts/vrt/pixelfunctions.cpp:2762 —
     sum/diff/reclassify/…; Python pixel-function precedent
     vrtderivedrasterband.cpp:413). ``kernel(buf) -> buf`` runs once per
     tile inside the Arrow batch — never per pixel in Python."""
-    np_in = np.dtype(dtype)
-    np_out = np.dtype(out_dtype)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = pdf.copy()
             out["data"] = [
                 np.ascontiguousarray(
-                    kernel(np.frombuffer(raw, dtype=np_in)
-                           .reshape(TILE_PX, TILE_PX)).astype(np_out)
+                    kernel(np.frombuffer(raw, dtype=TILE_DTYPE)
+                           .reshape(TILE_PX, TILE_PX)).astype(TILE_DTYPE)
                 ).tobytes()
                 for raw in pdf["data"]
             ]
@@ -1296,8 +1271,8 @@ from hc
 """
 
 
-def contour_cells(tiles: DataFrame, raster_px: int, threshold: float,
-                  dtype: str = "int64") -> DataFrame:
+def contour_cells(tiles: DataFrame, raster_px: int,
+                  threshold: float) -> DataFrame:
     """Marching-squares cell classification (alg/contour.cpp,
     alg/marching_squares/): per 2×2 pixel block with top-left (gx, gy),
     the 4-bit case index
@@ -1310,7 +1285,6 @@ def contour_cells(tiles: DataFrame, raster_px: int, threshold: float,
     handled by the same 1-px halo exchange as the focal ops — the border
     stitch that makes distributed contouring exact.
     """
-    np_dtype = np.dtype(dtype)
     t = TILE_PX
     n_tiles = raster_px // t
 
@@ -1328,7 +1302,7 @@ def contour_cells(tiles: DataFrame, raster_px: int, threshold: float,
         htx, hty = int(key[0]), int(key[1])
         win = np.zeros((t + 2, t + 2), dtype=np.int64)
         for _, row in pdf.iterrows():
-            buf = np.frombuffer(row["data"], dtype=np_dtype).reshape(t, t)
+            buf = np.frombuffer(row["data"], dtype=TILE_DTYPE).reshape(t, t)
             dy = (int(row["ty"]) - hty) * t
             dx = (int(row["tx"]) - htx) * t
             ys = slice(max(0, 1 + dy), min(t + 2, 1 + dy + t))
@@ -1424,12 +1398,11 @@ PAN_SQL = ("(((gx * 7 + gy * 3) % 97 + 1) + ((gx * 5 + gy * 11) % 89 + 1)"
 
 
 def synth_band_tiles(spark, formula_np, raster_px: int = 256,
-                     band: int = 1, dtype: str = "int64") -> DataFrame:
+                     band: int = 1) -> DataFrame:
     """Synthetic one-band tile table from a closed-form
     ``formula_np(gx, gy) -> values`` (same pattern as synth_dem_tiles)."""
     tile_px = TILE_PX
     n_tiles = raster_px // tile_px
-    np_dtype = np.dtype(dtype)
     keys = spark.range(n_tiles * n_tiles).select(
         (F.col("id") % n_tiles).alias("_tx"),
         (F.col("id") / n_tiles).cast("long").alias("_ty"))
@@ -1438,7 +1411,7 @@ def synth_band_tiles(spark, formula_np, raster_px: int = 256,
         tx, ty = int(key[0]), int(key[1])
         gy, gx = np.mgrid[0:tile_px, 0:tile_px]
         vals = formula_np(gx + tx * tile_px, gy + ty * tile_px) \
-            .astype(np_dtype)
+            .astype(TILE_DTYPE)
         return pd.DataFrame({
             "z": [0], "tx": [tx], "ty": [ty], "band": [band],
             "gt": [tile_geotransform(tx, ty, 0)],
@@ -1650,8 +1623,7 @@ def warp_fractional_sql(dst_gt: list[float], src_gt: list[float],
 
 
 def warp_bilinear(tiles: DataFrame, src_gt: list[float], raster_px: int,
-                  dst_gt: list[float], dst_px: int,
-                  dtype: str = "int64") -> DataFrame:
+                  dst_gt: list[float], dst_px: int) -> DataFrame:
     """Bilinear warp: dst pixel grid → fractional src pixel coords
     (Catalyst arithmetic) → 4-neighbor weighted gather through the
     per-tile chunk path (sample_bilinear). Dst pixels whose 2×2 window
@@ -1666,7 +1638,7 @@ def warp_bilinear(tiles: DataFrame, src_gt: list[float], raster_px: int,
         .selectExpr(f"dj * {dst_px} + di as qid",
                     f"{qx_e} as qx", f"{qy_e} as qy")
     )
-    return sample_bilinear(tiles, queries, raster_px, dtype)
+    return sample_bilinear(tiles, queries, raster_px)
 
 
 def warp_bilinear_oracle_sql(dst_gt: list[float], src_gt: list[float],
@@ -1683,8 +1655,7 @@ from (select a.range as di, b.range as dj
 
 
 def warp_cubic(tiles: DataFrame, src_gt: list[float], raster_px: int,
-               dst_gt: list[float], dst_px: int,
-               dtype: str = "int64") -> DataFrame:
+               dst_gt: list[float], dst_px: int) -> DataFrame:
     """Cubic warp (gdalwarp -r cubic, GWKCubic kernel
     alg/gdalwarpkernel.cpp:101-178): dst pixel grid → fractional src
     coords (Catalyst arithmetic) → 4×4 convolution gather through the
@@ -1700,7 +1671,7 @@ def warp_cubic(tiles: DataFrame, src_gt: list[float], raster_px: int,
         .selectExpr(f"dj * {dst_px} + di as qid",
                     f"{qx_e} as qx", f"{qy_e} as qy")
     )
-    return sample_cubic(tiles, queries, raster_px, dtype)
+    return sample_cubic(tiles, queries, raster_px)
 
 
 def warp_cubic_oracle_sql(dst_gt: list[float], src_gt: list[float],
@@ -1717,8 +1688,8 @@ from (select a.range as di, b.range as dj
 
 
 def warp_cubicspline(tiles: DataFrame, src_gt: list[float],
-                     raster_px: int, dst_gt: list[float], dst_px: int,
-                     dtype: str = "int64") -> DataFrame:
+                     raster_px: int, dst_gt: list[float],
+                     dst_px: int) -> DataFrame:
     """Cubic B-spline warp (gdalwarp -r cubicspline, GWKBSpline kernel
     alg/gdalwarpkernel.cpp): same 4x4 chunk-gather plan as warp_cubic,
     smoothing B3 weight polynomial instead of Catmull-Rom."""
@@ -1732,8 +1703,7 @@ def warp_cubicspline(tiles: DataFrame, src_gt: list[float],
         .selectExpr(f"dj * {dst_px} + di as qid",
                     f"{qx_e} as qx", f"{qy_e} as qy")
     )
-    return sample_cubic(tiles, queries, raster_px, dtype,
-                        kernel="bspline")
+    return sample_cubic(tiles, queries, raster_px, kernel="bspline")
 
 
 def warp_cubicspline_oracle_sql(dst_gt: list[float], src_gt: list[float],
@@ -1750,7 +1720,6 @@ from (select a.range as di, b.range as dj
 
 def warp_average(tiles: DataFrame, src_gt: list[float], raster_px: int,
                  dst_gt: list[float], dst_px: int,
-                 dtype: str = "int64",
                  src_nodata: int | None = None,
                  stat: str = "mean") -> DataFrame:
     """Average-resampled warp onto a coarser grid (gdalwarp -r average,
@@ -1767,13 +1736,12 @@ def warp_average(tiles: DataFrame, src_gt: list[float], raster_px: int,
     reduction combines them; the mean is derived by a shared final
     expression. At 100 TB the shuffle carries only dst-pixel partials
     (≤ dst_px² rows per tile), not pixels."""
-    np_dtype = np.dtype(dtype)
     t = TILE_PX
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for raw, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=np_dtype).reshape(t, t)
+                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
                 gy, gx = np.mgrid[0:t, 0:t]
                 gx = gx + int(tx) * t
                 gy = gy + int(ty) * t
@@ -1810,19 +1778,17 @@ def warp_average(tiles: DataFrame, src_gt: list[float], raster_px: int,
 
 
 def warp_rms(tiles: DataFrame, src_gt: list[float], raster_px: int,
-             dst_gt: list[float], dst_px: int,
-             dtype: str = "int64") -> DataFrame:
+             dst_gt: list[float], dst_px: int) -> DataFrame:
     """RMS-resampled warp (gdalwarp -r rms): per dst pixel
     sqrt(mean(v²)) of the src pixels whose centers fall in it — the
     same partial+final shape as warp_average with sum-of-squares
     partials."""
-    np_dtype = np.dtype(dtype)
     t = TILE_PX
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for raw, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=np_dtype).reshape(t, t)
+                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
                 gy, gx = np.mgrid[0:t, 0:t]
                 gx = gx + int(tx) * t
                 gy = gy + int(ty) * t
@@ -1839,7 +1805,7 @@ def warp_rms(tiles: DataFrame, src_gt: list[float], raster_px: int,
                 uniq, inv = np.unique(key, return_inverse=True)
                 # int64 scatter-add, not float bincount weights: float64
                 # mantissas silently truncate sum-of-squares once values
-                # exceed ~2^26 for the generic int64 dtype this accepts
+                # exceed ~2^26, which int64 pixels can
                 ssq = np.zeros(len(uniq), dtype=np.int64)
                 np.add.at(ssq, inv, vals * vals)
                 cnts = np.bincount(inv).astype(np.int64)
@@ -1883,8 +1849,7 @@ group by 1, 2
 
 
 def warp_mode(tiles: DataFrame, src_gt: list[float], raster_px: int,
-              dst_gt: list[float], dst_px: int,
-              dtype: str = "int64") -> DataFrame:
+              dst_gt: list[float], dst_px: int) -> DataFrame:
     """Mode-resampled warp (gdalwarp -r mode, GWKAverageOrMode
     alg/gdalwarpkernel.cpp): each src pixel center is assigned to the
     dst pixel containing it; per dst pixel the most frequent value,
@@ -1894,13 +1859,12 @@ def warp_mode(tiles: DataFrame, src_gt: list[float], raster_px: int,
     Same partial+final shape as warp_average, with (dst, value) count
     partials: the shuffle carries one row per distinct value per dst
     pixel per tile, never pixel rows."""
-    np_dtype = np.dtype(dtype)
     t = TILE_PX
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for raw, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=np_dtype).reshape(t, t)
+                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
                 gy, gx = np.mgrid[0:t, 0:t]
                 gx = gx + int(tx) * t
                 gy = gy + int(ty) * t
@@ -1930,8 +1894,7 @@ def warp_mode(tiles: DataFrame, src_gt: list[float], raster_px: int,
 
 
 def _warp_value_counts(tiles: DataFrame, src_gt: list[float],
-                       dst_gt: list[float], dst_px: int,
-                       np_dtype) -> DataFrame:
+                       dst_gt: list[float], dst_px: int) -> DataFrame:
     """Shared (di, dj, v, c) value-count partials (the warp_mode shape):
     one pass per tile buffer, shuffle carries one row per distinct value
     per dst pixel per tile — never pixel rows."""
@@ -1940,7 +1903,7 @@ def _warp_value_counts(tiles: DataFrame, src_gt: list[float],
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for raw, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=np_dtype).reshape(t, t)
+                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
                 gy, gx = np.mgrid[0:t, 0:t]
                 gx = gx + int(tx) * t
                 gy = gy + int(ty) * t
@@ -1966,15 +1929,14 @@ def _warp_value_counts(tiles: DataFrame, src_gt: list[float],
 
 
 def warp_minmax(tiles: DataFrame, src_gt: list[float], raster_px: int,
-                dst_gt: list[float], dst_px: int, op: str = "min",
-                dtype: str = "int64") -> DataFrame:
+                dst_gt: list[float], dst_px: int,
+                op: str = "min") -> DataFrame:
     """Min/max-resampled warp (gdalwarp -r min / -r max, GWKAOM_Imin/
     Imax alg/gdalwarpkernel.cpp:6595-6613): per dst pixel the extreme of
     the src pixels whose centers fall in it — exact integer partials,
     one keyed reduction."""
     _ = raster_px
-    counts = _warp_value_counts(tiles, src_gt, dst_gt, dst_px,
-                                np.dtype(dtype))
+    counts = _warp_value_counts(tiles, src_gt, dst_gt, dst_px)
     agg = F.min("v") if op == "min" else F.max("v")
     return (counts.groupBy("di", "dj")
             .agg(agg.alias("value"), F.sum("c").alias("n_src"))
@@ -1982,8 +1944,8 @@ def warp_minmax(tiles: DataFrame, src_gt: list[float], raster_px: int,
 
 
 def warp_quantile(tiles: DataFrame, src_gt: list[float], raster_px: int,
-                  dst_gt: list[float], dst_px: int, quant: float = 0.5,
-                  dtype: str = "int64") -> DataFrame:
+                  dst_gt: list[float], dst_px: int,
+                  quant: float = 0.5) -> DataFrame:
     """Quantile-resampled warp (gdalwarp -r med/q1/q3, GWKAOM_Quant):
     GDAL picks the ascending-sorted contributing value at index
     ceil(quant·n − 1) (0-based, no interpolation —
@@ -1992,8 +1954,7 @@ def warp_quantile(tiles: DataFrame, src_gt: list[float], raster_px: int,
     interval covers the index — the shuffle stays one row per distinct
     value per dst pixel, never a per-pixel value list."""
     _ = raster_px
-    counts = _warp_value_counts(tiles, src_gt, dst_gt, dst_px,
-                                np.dtype(dtype))
+    counts = _warp_value_counts(tiles, src_gt, dst_gt, dst_px)
     w_n = Window.partitionBy("di", "dj")
     w_cum = (Window.partitionBy("di", "dj").orderBy("v")
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -2119,8 +2080,7 @@ group by di, dj
 """
 
 
-def _nearest_gather(dst: "DataFrame", tiles: "DataFrame",
-                    np_dtype: np.dtype) -> "DataFrame":
+def _nearest_gather(dst: "DataFrame", tiles: "DataFrame") -> "DataFrame":
     """Shared nearest-warp tail: dst rows (di, dj, sgx, sgy, tx, ty) →
     per-tile chunk gather. Dst pixels group per source tile BEFORE the
     payload join, so each tile buffer crosses the shuffle and the Arrow
@@ -2138,7 +2098,7 @@ def _nearest_gather(dst: "DataFrame", tiles: "DataFrame",
         for pdf in batches:
             for raw, px, tx, ty in zip(pdf["data"], pdf["px"],
                                        pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=np_dtype).reshape(t, t)
+                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
                 p = pd.DataFrame(list(px))
                 ly = p["sgy"].to_numpy(np.int64) - int(ty) * t
                 lx = p["sgx"].to_numpy(np.int64) - int(tx) * t
@@ -2153,8 +2113,7 @@ def _nearest_gather(dst: "DataFrame", tiles: "DataFrame",
 
 
 def warp_nearest(tiles: DataFrame, src_gt: list[float], raster_px: int,
-                 dst_gt: list[float], dst_px: int,
-                 dtype: str = "int64") -> DataFrame:
+                 dst_gt: list[float], dst_px: int) -> DataFrame:
     """Nearest-neighbour warp of a tiled raster onto a new affine grid
     (the chunked lifecycle of GDALWarpOperation, alg/gdalwarpoperation.cpp
     restated: dst chunk == partition of dst pixels; the dst→src
@@ -2162,7 +2121,6 @@ def warp_nearest(tiles: DataFrame, src_gt: list[float], raster_px: int,
     numpy kernel). Out-of-source-bounds dst pixels are dropped
     (nodata-skip semantics). Output: (di, dj, value)."""
     spark = tiles.sparkSession
-    np_dtype = np.dtype(dtype)
     t = TILE_PX
     sgx_e, sgy_e = warp_pixel_sql(dst_gt, src_gt)
     dst = (
@@ -2182,7 +2140,7 @@ def warp_nearest(tiles: DataFrame, src_gt: list[float], raster_px: int,
     # the Arrow bridge exactly once (GDALWarpOperation's chunk queue,
     # alg/gdalwarpoperation.cpp:1099 — a chunk, not a pixel, is the unit
     # of work) instead of being replicated per dst pixel.
-    return _nearest_gather(dst, tiles, np_dtype)
+    return _nearest_gather(dst, tiles)
 
 
 # ---------------------------------------------------------------------------
@@ -2198,8 +2156,7 @@ def warp_nearest(tiles: DataFrame, src_gt: list[float], raster_px: int,
 
 def warp_nearest_crs(tiles: DataFrame, src_gt: list[float], raster_px: int,
                      dst_gt: list[float], dst_px: int,
-                     src_epsg: int, dst_epsg: int = 4326,
-                     dtype: str = "int64") -> DataFrame:
+                     src_epsg: int, dst_epsg: int = 4326) -> DataFrame:
     """Nearest warp between any two registered EPSG grids (gdalwarp
     -t_srs, the composed transformer chain of alg/gdaltransformer.cpp:342):
     dst pixel centers → dst-CRS world (affine) → inverse-projected to
@@ -2210,7 +2167,6 @@ def warp_nearest_crs(tiles: DataFrame, src_gt: list[float], raster_px: int,
                                 epsg_inv_stages)
 
     spark = tiles.sparkSession
-    np_dtype = np.dtype(dtype)
     t = TILE_PX
     # partition the dst grid by size: ~8k pixel rows per task of unrolled
     # projection arithmetic, floor 8 for parallelism on small grids, cap
@@ -2255,7 +2211,7 @@ def warp_nearest_crs(tiles: DataFrame, src_gt: list[float], raster_px: int,
         .withColumn("tx", F.expr(f"sgx div {t}"))
         .withColumn("ty", F.expr(f"sgy div {t}"))
     )
-    return _nearest_gather(dst, tiles, np_dtype)
+    return _nearest_gather(dst, tiles)
 
 
 def warp_nearest_crs_oracle_sql(src_gt: list[float], raster_px: int,
@@ -2348,7 +2304,7 @@ def _approx_uv_sql(block: int) -> tuple[str, str]:
 def warp_nearest_crs_approx(tiles: DataFrame, src_gt: list[float],
                             raster_px: int, dst_gt: list[float],
                             dst_px: int, src_epsg: int,
-                            dst_epsg: int = 4326, dtype: str = "int64",
+                            dst_epsg: int = 4326,
                             tol_px: float = 0.125,
                             block: int = 16) -> DataFrame:
     """Cross-CRS nearest warp through the approximating transformer (see
@@ -2359,7 +2315,6 @@ def warp_nearest_crs_approx(tiles: DataFrame, src_gt: list[float],
                                 epsg_inv_stages)
 
     spark = tiles.sparkSession
-    np_dtype = np.dtype(dtype)
     t = TILE_PX
     ncell = (dst_px + block - 1) // block
     n_nodes = (ncell + 1) * (ncell + 1)
@@ -2447,7 +2402,7 @@ def warp_nearest_crs_approx(tiles: DataFrame, src_gt: list[float],
         .withColumn("tx", F.expr(f"sgx div {t}"))
         .withColumn("ty", F.expr(f"sgy div {t}"))
     )
-    return _nearest_gather(dst, tiles, np_dtype)
+    return _nearest_gather(dst, tiles)
 
 
 def warp_nearest_crs_approx_oracle_sql(src_gt: list[float],
@@ -2591,12 +2546,11 @@ def _lanczos_sum_sql(v: "list[list[str]]", fx: str, fy: str) -> str:
 
 
 def sample_lanczos(tiles: DataFrame, queries: DataFrame,
-                   raster_px: int, dtype: str = "int64") -> DataFrame:
+                   raster_px: int) -> DataFrame:
     """Lanczos InterpolateAtPoint: 36-tap gather through the per-tile
     chunk path; weights and the normalized separable sum are Catalyst
     arithmetic shared textually with the oracle. Queries whose 6×6
     window leaves the raster are dropped (the kernel's edge-skip)."""
-    np_dtype = np.dtype(dtype)
     t = TILE_PX
     taps = ", ".join(
         f"struct({ky * 6 + kx} as k, x1 + {kx - 2} as gx,"
@@ -2623,7 +2577,7 @@ def sample_lanczos(tiles: DataFrame, queries: DataFrame,
         for pdf in batches:
             for raw, px, tx, ty in zip(pdf["data"], pdf["px"],
                                        pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=np_dtype).reshape(t, t)
+                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
                 p = pd.DataFrame(list(px))
                 ly = p["gy"].to_numpy(np.int64) - int(ty) * t
                 lx = p["gx"].to_numpy(np.int64) - int(tx) * t
@@ -2648,8 +2602,7 @@ def sample_lanczos(tiles: DataFrame, queries: DataFrame,
 
 
 def warp_lanczos(tiles: DataFrame, src_gt: list[float], raster_px: int,
-                 dst_gt: list[float], dst_px: int,
-                 dtype: str = "int64") -> DataFrame:
+                 dst_gt: list[float], dst_px: int) -> DataFrame:
     """Lanczos warp (gdalwarp -r lanczos): dst pixel grid → fractional
     src coords (Catalyst arithmetic) → 6×6 windowed-sinc gather."""
     spark = tiles.sparkSession
@@ -2662,7 +2615,7 @@ def warp_lanczos(tiles: DataFrame, src_gt: list[float], raster_px: int,
         .selectExpr(f"dj * {dst_px} + di as qid",
                     f"{qx_e} as qx", f"{qy_e} as qy")
     )
-    return sample_lanczos(tiles, queries, raster_px, dtype)
+    return sample_lanczos(tiles, queries, raster_px)
 
 
 def lanczos_dem_oracle_sql(queries_sql: str, raster_px: int) -> str:
@@ -2886,8 +2839,8 @@ from vh join lut on lut.b = {bin_expr}
 """
 
 
-def equalize_tile_checksums(tiles: DataFrame, value_map: dict[int, int],
-                            dtype: str = "int64") -> DataFrame:
+def equalize_tile_checksums(tiles: DataFrame,
+                            value_map: dict[int, int]) -> DataFrame:
     """Apply the equalization LUT per tile and checksum the Byte
     output — gdalenhance's EnhancerCallback applied per block, with
     the LUT computed once up front exactly as the reference does
@@ -2895,7 +2848,6 @@ def equalize_tile_checksums(tiles: DataFrame, value_map: dict[int, int],
     callback only indexes it). ``value_map`` is the bounded
     value→byte table (≤ value universe, 211 here) — a broadcast
     literal, the same two-pass shape as gdal_translate -scale."""
-    np_dtype = np.dtype(dtype)
     lut = np.zeros(max(value_map) + 1, dtype=np.int64)
     for v, o in value_map.items():
         lut[v] = o
@@ -2904,7 +2856,7 @@ def equalize_tile_checksums(tiles: DataFrame, value_map: dict[int, int],
         for pdf in batches:
             txs, tys, sums, outs = [], [], [], []
             for tx, ty, raw in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                buf = np.frombuffer(raw, dtype=np_dtype).astype(np.int64)
+                buf = np.frombuffer(raw, dtype=TILE_DTYPE).astype(np.int64)
                 out = lut[buf]
                 txs.append(int(tx))
                 tys.append(int(ty))

@@ -67,8 +67,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> dict:
-    """Read the driver-provided parquet tables of one scale factor."""
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

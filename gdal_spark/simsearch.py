@@ -250,18 +250,6 @@ def with_sketch(df: DataFrame, vec_col: str = "vec", out_col: str = "sketch",
 # ---------------------------------------------------------------------------
 
 
-def band_sketch_array_sql(vec: str, engine: str) -> str:
-    """Array of NEARDUP_BANDS band sketches (each NEARDUP_BITS bits) —
-    SQL twin of the banded numpy kernel, kept for oracle construction
-    and the cross-engine sketch-equality test."""
-    sketches = [
-        sketch_bits_sql(vec, engine, b * NEARDUP_BITS, NEARDUP_BITS)
-        for b in range(NEARDUP_BANDS)
-    ]
-    fn = "array" if engine == SPARK else "list_value"
-    return f"{fn}({', '.join(sketches)})"
-
-
 def neardup_pairs(aug: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Near-duplicate pairs by banded sign-LSH candidates + exact cosine
     verification. Candidate generation is an equi-join on (band, sketch)

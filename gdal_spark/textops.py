@@ -186,10 +186,6 @@ def bit_sql(expr: str, b: int, engine: str) -> str:
     return f"(({expr} >> {b}) & 1)"
 
 
-def xor_sql(a: str, b: str, engine: str) -> str:
-    return f"({a} ^ {b})" if engine == SPARK else f"xor({a}, {b})"
-
-
 def char_fold_sql(text: str, engine: str, mod: int = FP_MOD,
                   base: int = FP_BASE) -> str:
     """Polynomial rolling fingerprint over characters:

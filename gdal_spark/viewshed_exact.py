@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gdal_spark.raster import TILE_PX
+from gdal_spark.raster import TILE_DTYPE, TILE_PX
 
 
 def wang_viewshed_np(dem: np.ndarray, ox: int, oy: int,
@@ -199,7 +199,7 @@ def wang_viewshed_memo(dem: np.ndarray, ox: int, oy: int,
 
 
 def viewshed_exact(tiles: DataFrame, observers: DataFrame,
-                   raster_px: int, dtype: str = "int64",
+                   raster_px: int,
                    max_distance_px: int | None = None) -> DataFrame:
     """Distributed exact viewshed: one Wang DP per OBSERVER, observers
     in parallel (the cumulative-viewshed plan, alg/viewshed/
@@ -217,7 +217,6 @@ def viewshed_exact(tiles: DataFrame, observers: DataFrame,
     Output: per observer the visible-cell count inside the window and
     an exact integer fingerprint Σ pid (global pixel ids) over visible
     cells."""
-    np_dtype = np.dtype(dtype)
     t = TILE_PX
     w = raster_px
     md = int(max_distance_px) if max_distance_px is not None else w
@@ -252,7 +251,7 @@ def viewshed_exact(tiles: DataFrame, observers: DataFrame,
                 buf = np.zeros((nty * t, ntx * t), dtype=np.float64)
                 for row in tl:
                     b = np.frombuffer(row["data"],
-                                      dtype=np_dtype).reshape(t, t)
+                                      dtype=TILE_DTYPE).reshape(t, t)
                     y0 = (int(row["ty"]) - twy0) * t
                     x0 = (int(row["tx"]) - twx0) * t
                     buf[y0:y0 + t, x0:x0 + t] = b

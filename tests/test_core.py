@@ -282,3 +282,63 @@ def test_asof_join_semantics(spark):
         assert (r["click_epoch"], r["last_click_id"]) == max(cand)
         matched += 1
     assert matched > 0
+
+
+# Invalid coordinates get no tile. Expected tiles are derived by hand at
+# z3 (an 8×8 grid): tx = floor((lon + 180) / 45), ty from the mercator
+# row, both clamped to [0, 7]; never from the shared oracle SQL.
+_NAN, _INF = float("nan"), float("inf")
+_INVALID_PTS = {
+    "nan_lon": (_NAN, 10.0), "null": (None, None), "nan_lat": (10.0, _NAN),
+    "inf_lon": (_INF, 0.0), "lon_200": (200.0, 10.0), "lat_95": (10.0, 95.0),
+}
+_EDGE_TILES = {
+    # lon 180 → floor(8) = 8, clamped to 7; lat 0 → row 4
+    "lon_180": ((180.0, 0.0), (7, 4)),
+    "lon_-180": ((-180.0, 0.0), (0, 4)),
+    # |lat| above 85.0511 is clamped to the mercator limit: row 0 / row 7
+    "lat_89.9": ((0.0, 89.9), (4, 0)),
+    "lat_-90": ((0.0, -90.0), (4, 7)),
+}
+
+
+def _cell_ids_z3(spark, pts):
+    df = spark.createDataFrame(pts, "lon double, lat double")
+    return [r[0] for r in
+            df.select(cells.cell_id_col("lon", "lat", 3)).collect()]
+
+
+@pytest.mark.parametrize("case", sorted(_INVALID_PTS))
+def test_cell_id_invalid_coordinate_is_null(spark, case):
+    assert _cell_ids_z3(spark, [_INVALID_PTS[case]]) == [None]
+
+
+@pytest.mark.parametrize("case", sorted(_EDGE_TILES))
+def test_cell_id_valid_edge_keeps_clamped_tile(spark, case):
+    pt, (tx, ty) = _EDGE_TILES[case]
+    assert _cell_ids_z3(spark, [pt]) == [(3 << 58) | (tx << 29) | ty]
+
+
+def test_rasterize_points_invalid_coordinates_burn_no_tile(spark):
+    from gdal_spark.raster import rasterize_points
+
+    df = spark.createDataFrame(list(_INVALID_PTS.values()),
+                               "lon double, lat double")
+    assert rasterize_points(df, 3).count() == 0
+
+
+def test_knn_join_invalid_coordinates_match_nothing(spark):
+    """A NaN point is nobody's neighbour and a NaN query gets no row:
+    query 101 sees only points 0 (~2.2 km east) and 1 (~8.8 km west),
+    fewer than k = 3."""
+    from gdal_spark.knn import knn_join
+
+    pts = spark.createDataFrame(
+        [(0, 10.0, 10.0), (1, 10.1, 10.0), (2, _NAN, 10.0)],
+        "doc_id long, lon double, lat double")
+    qs = spark.createDataFrame([(100, _NAN, 10.0), (101, 10.02, 10.0)],
+                               "qid long, lon double, lat double")
+    got = knn_join(pts, qs, k=3).toPandas().sort_values("rank")
+    assert got.qid.tolist() == [101, 101]
+    assert got.doc_id.tolist() == [0, 1]
+    assert np.isfinite(got.dist_m).all()
