@@ -41,22 +41,34 @@ X_SHIFT = 29
 # ---------------------------------------------------------------------------
 
 
+def tile_x_floor_sql(lon: str, n: str) -> str:
+    """Unclamped, unwrapped tile column of ``lon`` on an n-wide grid
+    (``n`` is SQL: a literal or a column)."""
+    return f"floor((({lon}) + 180.0) / 360.0 * {n})"
+
+
+def tile_y_floor_sql(lat: str, n: str) -> str:
+    """Unclamped tile row of ``lat`` (itself clamped to ±MAX_LAT) on an
+    n-high grid (``n`` is SQL: a literal or a column)."""
+    t = f"tan(radians(least(greatest({lat}, {-MAX_LAT}), {MAX_LAT})))"
+    asinh_t = f"ln({t} + sqrt({t} * {t} + 1.0))"
+    return f"floor((1.0 - ({asinh_t}) / pi()) / 2.0 * {n})"
+
+
 def tile_x_sql(lon: str, z: int) -> str:
     n = 1 << z
     return (
         f"case when ({lon}) between -180.0 and 180.0 then"
-        f" cast(least(floor((({lon}) + 180.0) / 360.0 * {n}), {n - 1})"
+        f" cast(least({tile_x_floor_sql(lon, str(n))}, {n - 1})"
         f" as bigint) end"
     )
 
 
 def tile_y_sql(lat: str, z: int) -> str:
     n = 1 << z
-    t = f"tan(radians(least(greatest({lat}, {-MAX_LAT}), {MAX_LAT})))"
-    asinh_t = f"ln({t} + sqrt({t} * {t} + 1.0))"
     return (
         f"case when ({lat}) between -90.0 and 90.0 then"
-        f" cast(least(greatest(floor((1.0 - ({asinh_t}) / pi()) / 2.0 * {n}), 0),"
+        f" cast(least(greatest({tile_y_floor_sql(lat, str(n))}, 0),"
         f" {n - 1}) as bigint) end"
     )
 
@@ -92,20 +104,25 @@ def cell_id_col(lon: str, lat: str, z: int) -> Column:
 
 
 def tile_xy_np(lon: np.ndarray, lat: np.ndarray, z: int):
+    """Twin of tile_x_sql/tile_y_sql; where SQL gives NULL (NaN, ±inf,
+    lon ∉ [-180, 180] or lat ∉ [-90, 90]) both tx and ty are -1."""
     n = 1 << z
-    lat = np.clip(np.asarray(lat, dtype=np.float64), -MAX_LAT, MAX_LAT)
     lon = np.asarray(lon, dtype=np.float64)
-    tx = np.floor((lon + 180.0) / 360.0 * n)
-    t = np.tan(np.radians(lat))
-    ty = np.floor((1.0 - np.log(t + np.sqrt(t * t + 1.0)) / np.pi) / 2.0 * n)
-    tx = np.clip(tx, 0, n - 1).astype(np.int64)
-    ty = np.clip(ty, 0, n - 1).astype(np.int64)
+    lat = np.asarray(lat, dtype=np.float64)
+    ok = (np.abs(lon) <= 180.0) & (np.abs(lat) <= 90.0)  # False for NaN
+    with np.errstate(invalid="ignore"):
+        tx = np.floor((lon + 180.0) / 360.0 * n)
+        t = np.tan(np.radians(np.clip(lat, -MAX_LAT, MAX_LAT)))
+        ty = np.floor((1.0 - np.log(t + np.sqrt(t * t + 1.0)) / np.pi) / 2.0 * n)
+    tx = np.where(ok, np.clip(tx, 0, n - 1), -1).astype(np.int64)
+    ty = np.where(ok, np.clip(ty, 0, n - 1), -1).astype(np.int64)
     return tx, ty
 
 
 def cell_id_np(lon: np.ndarray, lat: np.ndarray, z: int) -> np.ndarray:
+    """Twin of cell_id_sql; -1 where SQL gives NULL."""
     tx, ty = tile_xy_np(lon, lat, z)
-    return (np.int64(z) << Z_SHIFT) | (tx << X_SHIFT) | ty
+    return np.where(tx < 0, -1, (np.int64(z) << Z_SHIFT) | (tx << X_SHIFT) | ty)
 
 
 def unpack_cell_id(cell_id: np.ndarray):

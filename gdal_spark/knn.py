@@ -1,86 +1,75 @@
-"""Exact kNN join via iterative cell-ring expansion (the north-star op).
+"""Exact kNN join as one lazy plan over a count-bounded candidate cover.
 
-Semantics: GDAL's gridding nearest-neighbor search — a quadtree-assisted
-expanding search until k neighbors are guaranteed
-(alg/gdalgrid.cpp:879-923 GDALGridNearestNeighbor + CPLQuadTreeSearch,
-tree port/cpl_quad_tree.cpp). Here the quadtree is the WebMercatorQuad
-cell grid itself and the search is a *join*, not a per-point probe.
+Semantics: GDAL's gridding nearest-neighbour search, which expands until
+k neighbours are guaranteed (alg/gdalgrid.cpp:879-923
+GDALGridNearestNeighbor + CPLQuadTreeSearch, tree
+port/cpl_quad_tree.cpp). Here the quadtree is the WebMercatorQuad grid
+and the search is one pruned join, as "Distributed Stream KNN Join"
+(SIGMOD 2021) prunes with a partition summary. No step runs a Spark
+action; the plan is:
 
-Ring levels, zoom z ∈ (z0, z0-2, z0-4, …) while z ≥ 3, each one pass:
-  1. explode each pending query onto the 5×5 cell neighborhood (ring r=2)
-     of its cell at z (x wraps at the antimeridian; from z3 up the grid
-     is ≥ 8 tiles wide, so the ring never aliases a cell twice)
-  2. left equi-join to points on cell id — a query with no candidate
-     keeps one null row and so stays pending
-  3. rank candidates per query by (haversine, point id), keep the top k,
-     and mark the query DONE if it has k candidates, its kth distance is
-     below the guarantee radius — the ground distance to the nearest
-     possible point *outside* the 5×5 block (a tile at the block's
-     worst-case latitude) — and the block touches neither tile row 0 nor
-     row n-1 (the mercator clamp folds each polar cap into those rows,
-     where columns far apart in x meet)
-  4. one localCheckpoint holds the level's status: results are its done
-     rows, the next level's pending queries its undone rank-1 rows.
-Final level, z2: brute force — each still-pending query joins every
-tile of the 4×4 grid, so it meets every point once (still an equi-join,
-no all-pairs plan node), and every query resolves.
+  1. counts: each point's tile at the finest zoom z0 and, by bit shift
+     (floor-consistent, n is a power of two), its tiles at every level
+     z0, z0-1, …, 2. One count per level cell is the count pyramid.
+  2. level: per query, the finest level whose 3×3 block around its tile
+     holds ≥ k points and whose cover (4.) has ≤ MAX_COVER tiles; the
+     cap only bites where a fine block reaches a pole, whose cover
+     takes every column. The coarsest level always qualifies: with
+     fewer than k points in its block its cover is the whole grid.
+  3. bound: the block's points lie within U of the query, with
+     hav(U/R) ≤ hav(Δφmax) + cos φq·hav(min(Δλmax, π)) over the block's
+     edges (rows 0 and n-1 reach the poles), widened for rounding.
+  4. cover: every tile of the level that meets the bounding box of the
+     cap of radius U (all columns once the cap holds a pole); x wraps.
+  5. one cell equi-join of the covers to the points, then the k first by
+     (dist_m, point id).
 
-All distance math is JVM-side Catalyst expressions sharing the exact
-expression text with the DuckDB brute-force oracle → bit-identical
-distances → identical top-k sets (ties broken by point id).
-
-Scale notes: each level joins only *pending* queries (hotspot queries —
-the vast majority under power-law skew — resolve at the first level); the
-join is a cell-id equi-join, so AQE handles hot-cell skew; candidate
-ranking is a window over qid (bounded by k per query after the rank
-filter).
+Exactness rests on 3 and 4 alone: the k-th distance is ≤ U, and every
+point within U is in the cover. z0 only bounds how fine a level can be.
+A step of one zoom between levels keeps the cover within ~4× the area
+that holds k points. Distances are ``haversine_sql``, the expression text
+the DuckDB brute-force oracle shares, so distances and ties match it bit
+for bit.
 """
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gdal_spark.cells import (X_SHIFT, Z_SHIFT, cell_id_sql, tile_x_sql,
-                              tile_y_sql)
+from gdal_spark.cells import (X_SHIFT, Z_SHIFT, tile_x_floor_sql,
+                              tile_x_sql, tile_y_floor_sql, tile_y_sql)
 from gdal_spark.crs import WGS84_A, haversine_sql
 
-EARTH_CIRCUM = 2.0 * math.pi * WGS84_A
-RING = 2  # 5x5 neighborhood per level
+Z0 = 14          # finest level of the count pyramid
+# a larger cover means a cap over a pole at a fine level; every grid up to
+# z5 (32×32) fits, so the coarsest level (z2) always qualifies
+MAX_COVER = 1024
 
 
-def _cell_expr(z: int, tx: str, ty: str) -> str:
-    n = 1 << z
-    return (f"(cast({z} as bigint) * {1 << Z_SHIFT}"
-            f" + ((({tx}) % {n} + {n}) % {n}) * {1 << X_SHIFT} + ({ty}))")
+def _cell(z: str, tx: str, ty: str) -> str:
+    return (f"shiftleft(cast({z} as bigint), {Z_SHIFT})"
+            f" + shiftleft({tx}, {X_SHIFT}) + {ty}")
 
 
-def _guarantee_expr(z: int, ty: str) -> str:
-    """Ground meters to the nearest point outside the 5×5 block: one full
-    tile width at the block's worst-case (highest-|lat|) row. Tile rows
-    [ty-2, ty+2] lie inside [1, n-2] (the polar guard); evaluate mercator
-    edge latitudes of the block's top and bottom, take the larger |lat|."""
-    n = 1 << z
-    lat_n = f"degrees(atan(sinh(pi() * (1.0 - 2.0 * ({ty} - {RING}) / {n}))))"
-    lat_s = f"degrees(atan(sinh(pi() * (1.0 - 2.0 * ({ty} + {RING + 1}) / {n}))))"
-    maxlat = f"greatest(abs({lat_n}), abs({lat_s}))"
-    # 0.45: a full tile at worst-case latitude, halved for safety — at very
-    # coarse zooms the geodesic between two points on a parallel undercuts
-    # the parallel arc, so the naive one-tile bound is not a true lower
-    # bound; 0.45 < 2/pi (the worst chord/arc ratio) keeps it rigorous.
-    return f"(0.45 * {EARTH_CIRCUM!r} / {n} * cos(radians({maxlat})))"
+def _edge_lat(row: str) -> str:
+    """North edge (deg) of tile row ``row`` of an _n-high grid; rows ≤ 0
+    reach +90 and row _n (south of the last) -90: the clamp's caps."""
+    return (f"case when {row} <= 0 then 90.0 when {row} >= _n then -90.0"
+            f" else degrees(atan(sinh(pi() * (1.0 - 2.0 * ({row}) / _n)))) end")
 
 
-def _estimate_rows(df: DataFrame) -> int:
-    """Row-count estimate from the optimized plan's statistics — reads
-    only metadata (Parquet footers / CBO stats), never launches a job."""
-    stats = df._jdf.queryExecution().optimizedPlan().stats()
-    rc = stats.rowCount()
-    if rc.isDefined():
-        return max(1, int(str(rc.get())))
-    return max(1, int(str(stats.sizeInBytes())) // 64)
+# 3. U (radians) from the block around tile (_bx, _by) of an _n-wide grid
+_DPHI = f"greatest({_edge_lat('_by - 1')} - q_lat, q_lat - {_edge_lat('_by + 2')})"
+_DLAM = ("least(greatest(q_lon + 180.0 - (_bx - 1) * 360.0 / _n,"
+         " (_bx + 2) * 360.0 / _n - 180.0 - q_lon), 180.0)")
+_BOUND = (f"2.0 * asin(sqrt(least(pow(sin(radians({_DPHI}) / 2.0), 2)"
+          f" + cos(radians(q_lat)) * pow(sin(radians({_DLAM}) / 2.0), 2), 1.0)))"
+          f" * (1.0 + 1e-9) + 1.0 / {WGS84_A!r}")
+# 4. the cap's latitude and longitude half-widths (deg)
+_R = "(degrees(_u) + 1e-9)"
+_DL = (f"if(abs(q_lat) + {_R} >= 90.0, 180.0,"
+       " degrees(asin(least(sin(_u) / cos(radians(q_lat)), 1.0))) + 1e-9)")
 
 
 def knn_join(points: DataFrame, queries: DataFrame, k: int,
@@ -91,95 +80,70 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int,
     points:  (point_id, lon, lat, …);  queries: (query_id, lon, lat, …)
     returns: (query_id, point_id, rank, dist_m)
 
-    ``z0`` (start zoom) defaults to a density heuristic: ~12 points per
-    starting cell, so the first 5×5 ring already resolves typical
-    queries, while sparse datasets skip straight to coarse levels
-    instead of burning join rounds that cannot find k candidates.
-    Exactness does not depend on z0 — only the number of rounds does.
+    ``z0`` is the finest zoom of the count pyramid (default ``Z0``;
+    values below 2 are raised to 2). Exactness does not depend on it.
+    Rows with NULL, NaN or out-of-range coordinates match nothing.
     """
-    if z0 is None:
-        # density heuristic from CATALYST PLAN STATISTICS — no Spark
-        # action: exact rowCount when CBO stats exist, else the
-        # metadata sizeInBytes (file footers) over an assumed ~64 B/row.
-        # z0 enters through log base 4, so an order-of-magnitude
-        # estimate lands within one level; exactness never depends on
-        # it, only round count does. Production callers should still
-        # pass z0 (a static property of dataset density).
-        n = _estimate_rows(points)
-        z0 = min(14, max(2, round(math.log(max(n, 13) / 12.0, 4.0))))
-        if z0 % 2 == 1:
-            z0 += 1
-    # no blind cache of the full point table: each level's join re-reads
-    # the narrow (id, lon, lat) scan — at 100 TB a cache of every point
-    # would evict everything else for a ≤3-level reuse; the columnar
-    # re-scan is the cheaper, bounded choice
-    pts = points.select(
-        point_id,
-        F.col("lon").alias("p_lon"), F.col("lat").alias("p_lat"),
-    )
+    zf = max(2, Z0 if z0 is None else z0)
+    nlev = zf - 1  # levels zf - j for j < nlev: zf, zf - 1, …, 2
+    tiles = (f"{tile_x_sql('lon', zf)} as _tx", f"{tile_y_sql('lat', zf)} as _ty")
 
-    pending = queries.select(
-        query_id,
-        F.col("lon").alias("q_lon"), F.col("lat").alias("q_lat"),
-    )
-    dist_expr = haversine_sql("q_lon", "q_lat", "p_lon", "p_lat")
-    by_dist = Window.partitionBy(query_id).orderBy(
-        F.col("dist_m").asc_nulls_last(), point_id)
-    by_q = Window.partitionBy(query_id)
-    results = []
+    # 1. the count pyramid (an invalid point's cells are NULL: no
+    # equi-join matches them)
+    pts = (points.selectExpr(point_id, "lon as p_lon", "lat as p_lat", *tiles)
+           .selectExpr(point_id, "p_lon", "p_lat", "explode(array({})) as _cell".format(
+               ", ".join(_cell(str(zf - j), f"shiftright(_tx, {j})", f"shiftright(_ty, {j})")
+                         for j in range(nlev)))))
+    counts = pts.groupBy("_cell").count()
 
-    for z in [*range(z0, 2, -2), 2]:
-        n = 1 << z
-        last = z == 2
-        if last:
-            # brute force, kept an equi-join (no all-pairs plan node):
-            # each query explodes onto every tile of the 4×4 z2 grid, so
-            # it meets every point exactly once, and every query is done
-            span_x = ("-_tx", f"{n - 1} - _tx")
-            span_y = ("-_ty", f"{n - 1} - _ty")
-            done = "true"
-        else:
-            span_x = span_y = (f"{-RING}", f"{RING}")
-            done = (f"_nc >= {k} and _kth < {_guarantee_expr(z, '_ty')}"
-                    f" and _ty > {RING} and _ty < {n - 1 - RING}")
-        cand = (
-            pending
-            .withColumn("_tx", F.expr(tile_x_sql("q_lon", z)))
-            .withColumn("_ty", F.expr(tile_y_sql("q_lat", z)))
-            .withColumn("_dx", F.explode(F.sequence(*map(F.expr, span_x))))
-            .withColumn("_dy", F.explode(F.sequence(*map(F.expr, span_y))))
-            .filter(f"_ty + _dy >= 0 and _ty + _dy < {n}")
-            .withColumn("_cell", F.expr(_cell_expr(z, "_tx + _dx", "_ty + _dy")))
-        )
-        p = pts.withColumn("_pcell", F.expr(cell_id_sql("p_lon", "p_lat", z)))
-        # the level's one heavy job: cell join + top-k window + per-query
-        # status, then localCheckpoint — the result is tiny (≤ k rows per
-        # pending query), and both the level's results and the next
-        # level's pending queries read the materialized rows
-        ranked = (
-            cand.join(p, cand._cell == p._pcell, "left")
-            .withColumn("dist_m", F.expr(dist_expr))
-            .withColumn("_rn", F.row_number().over(by_dist))
-            .filter(F.col("_rn") <= k)
-            .withColumn("_nc", F.count(point_id).over(by_q))
-            .withColumn("_kth", F.max("dist_m").over(by_q))
-            .withColumn("_done", F.expr(done))
-            .localCheckpoint(eager=True)
-        )
-        # a query with fewer than k points keeps null rows from empty cells
-        results.append(
-            ranked.filter(F.col("_done") & F.col(point_id).isNotNull())
-            .select(query_id, point_id, F.col("_rn").alias("rank"), "dist_m"))
-        if last:
-            break
-        pending = ranked.filter("not _done and _rn = 1") \
-                        .select(query_id, "q_lon", "q_lat")
-        # iterative deepening stops as soon as the frontier drains
-        # (gdalgrid.cpp:879 stops expanding once k are guaranteed)
-        if pending.isEmpty():
-            break
+    # 2. each query's count in its 3×3 block at every level j. Grouped by
+    # the query id alone, the rows stay hash-partitioned by it through
+    # the top-k window, which then needs no shuffle of its own when the
+    # candidate join broadcasts the points.
+    qcols = (query_id, "q_lon", "q_lat", "_tx", "_ty")
+    n = f"shiftleft(1L, {zf} - _i div 9)"
+    bx, by = "shiftright(_tx, _i div 9) + _i % 3 - 1", "shiftright(_ty, _i div 9) + _i div 3 % 3 - 1"
+    blk = (queries.selectExpr(query_id, "lon as q_lon", "lat as q_lat", *tiles)
+           .where("_tx is not null and _ty is not null")
+           .selectExpr(*qcols, f"explode(sequence(0, {9 * nlev - 1})) as _i")
+           .selectExpr(*qcols, "_i div 9 as _j", f"if({by} between 0 and {n} - 1,"
+                       f" {_cell(f'{zf} - _i div 9', f'pmod({bx}, {n})', by)}, null) as _cell")
+           .join(counts, "_cell", "left")
+           .groupBy(query_id)
+           .agg(*(F.expr(f"any_value({c}) as {c}") for c in qcols[1:]),
+                F.expr("array({}) as _c".format(", ".join(
+                    f"sum(if(_j = {j}, count, 0))" for j in range(nlev))))))
 
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out
+    # 3.-4. per level: the bound U, then the tile box of the cap
+    lcols = (*qcols, "_z", "_n")
+    lv = (blk.selectExpr(*qcols, "posexplode(_c) as (_j, _cnt)")
+          .selectExpr(*qcols, "_cnt", f"{zf} - _j as _z", f"shiftleft(1L, {zf} - _j) as _n",
+                      "shiftright(_tx, _j) as _bx", "shiftright(_ty, _j) as _by")
+          .selectExpr(*lcols, f"_cnt >= {k} or _z = 2 as _ok",
+                      f"if(_cnt >= {k}, {_BOUND}, pi()) as _u")
+          .selectExpr(*lcols, "_ok",
+                      f"greatest({tile_y_floor_sql(f'q_lat + {_R}', '_n')}, 0) as _y0",
+                      f"least({tile_y_floor_sql(f'q_lat - {_R}', '_n')}, _n - 1) as _y1",
+                      f"{tile_x_floor_sql(f'q_lon - {_DL}', '_n')} as _x0",
+                      f"{tile_x_floor_sql(f'q_lon + {_DL}', '_n')} as _x1")
+          .selectExpr(query_id, "q_lon", "q_lat",
+                      f"if(_ok and (_y1 - _y0 + 1) * least(_x1 - _x0 + 1, _n) <= {MAX_COVER},"
+                      " named_struct('z', _z, 'n', _n, 'y0', _y0, 'x0', _x0,"
+                      " 'ny', _y1 - _y0 + 1, 'nx', least(_x1 - _x0 + 1, _n)), null) as _cv"))
+
+    # 2. the finest qualifying level (max compares z first), then 4. its
+    # cover's cells
+    cov = (lv.groupBy(query_id, "q_lon", "q_lat")
+           .agg(F.expr("max(_cv) as _cv"))
+           .selectExpr(query_id, "q_lon", "q_lat", "_cv",
+                       "explode(sequence(0L, _cv.ny * _cv.nx - 1)) as _i")
+           .selectExpr(query_id, "q_lon", "q_lat", _cell(
+               "_cv.z", "pmod(_cv.x0 + _i % _cv.nx, _cv.n)", "_cv.y0 + _i div _cv.nx") + " as _cell"))
+
+    # 5. one equi-join, one top-k window
+    dist = haversine_sql("q_lon", "q_lat", "p_lon", "p_lat")
+    return (cov.join(pts, "_cell")
+            .selectExpr(query_id, point_id, f"{dist} as dist_m")
+            .selectExpr(query_id, point_id, f"row_number() over (partition by {query_id}"
+                        f" order by dist_m, {point_id}) as rank", "dist_m")
+            .where(f"rank <= {k}"))

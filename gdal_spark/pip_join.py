@@ -81,7 +81,9 @@ def pip_join(points: DataFrame, index: ZoneIndex, lon: str = "lon",
 
     inner → output = input columns + zone_col (one row per containment)
     semi  → input rows inside ≥1 zone (deduplicated)
-    anti  → input rows inside no zone
+    anti  → input rows inside no zone; a row whose lon/lat is NULL, NaN
+            or out of range is inside nothing and outside nothing, so
+            no mode returns it
     """
     if how not in ("inner", "semi", "anti"):
         raise ValueError(how)
@@ -109,4 +111,6 @@ def pip_join(points: DataFrame, index: ZoneIndex, lon: str = "lon",
     tagged = points.withColumn("_zs", zs)
     if how == "semi":
         return tagged.filter(F.size("_zs") > 0).drop("_zs")
-    return tagged.filter(F.size("_zs") == 0).drop("_zs")
+    # NaN fails `between` in Spark (NaN sorts above every number)
+    return tagged.filter(f"size(_zs) = 0 and {lon} between -180.0 and 180.0"
+                         f" and {lat} between -90.0 and 90.0").drop("_zs")

@@ -5,9 +5,9 @@ Reprojection replicates gdalwarp's EPSG transform semantics
 expressions; the identical SQL text runs under DuckDB, so parity is
 bit-level before the mm-rounding applied for display.
 
-kNN is the iterative cell-ring expansion join (gdal_spark.knn) checked
-against a brute-force cross-join oracle — exactness of the expansion
-guarantee is what's under test.
+kNN is the count-bounded candidate-cover join (gdal_spark.knn) checked
+against a brute-force cross-join oracle — exactness of its distance
+bound and cap cover is what's under test.
 """
 
 from __future__ import annotations
@@ -188,18 +188,14 @@ def q_reproject_nad27(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact kNN: every 13th doc queries the geotagged point set."""
     # cache the NARROW projection (id, lon, lat ≈ 24 B/row — bounded even
-    # at 10^10 points), not the full-width table: the level loop re-reads
-    # the point side once per level+action, and uncached that re-runs the
-    # whole geotag-extraction expression each time (measured 8.3s → 4.0s
-    # first-run at sf0.1)
+    # at 10^10 points), not the full-width table: the plan reads the
+    # point side for both the count pyramid and the candidate join, and
+    # uncached each read re-runs the geotag-extraction expression
     pts = points_from_documents(spark, sf_dir) \
         .select("doc_id", "lon", "lat").cache()
     queries = pts.filter(QUERY_FILTER).select(
         F.col("doc_id").alias("qid"), "lon", "lat")
-    # z0 passed explicitly (the scale-correct call shape — the density
-    # heuristic otherwise guesses the row count from plan statistics);
-    # z0=4 ≈ 12 points/cell for the synthetic densities at sf0.01-0.1
-    out = knn_join(pts, queries, k=K, z0=4)
+    out = knn_join(pts, queries, k=K)
     return out.select("qid", "doc_id", "rank",
                       F.round("dist_m", 6).alias("dist_m"))
 

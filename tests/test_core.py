@@ -319,6 +319,34 @@ def test_cell_id_valid_edge_keeps_clamped_tile(spark, case):
     assert _cell_ids_z3(spark, [pt]) == [(3 << 58) | (tx << 29) | ty]
 
 
+def _np_z3(pts):
+    lon, lat = (np.array([np.nan if v is None else v for v in vs])
+                for vs in zip(*pts))
+    tx, ty = cells.tile_xy_np(lon, lat, 3)
+    return tx.tolist(), ty.tolist(), cells.cell_id_np(lon, lat, 3).tolist()
+
+
+@pytest.mark.parametrize("case", sorted(_INVALID_PTS))
+def test_cell_id_np_invalid_coordinate_is_minus_one(case):
+    """The numpy twins follow the SQL rule: -1 wherever SQL gives NULL."""
+    assert _np_z3([_INVALID_PTS[case]]) == ([-1], [-1], [-1])
+
+
+@pytest.mark.parametrize("case", sorted(_EDGE_TILES))
+def test_cell_id_np_valid_edge_keeps_clamped_tile(case):
+    pt, (tx, ty) = _EDGE_TILES[case]
+    assert _np_z3([pt]) == ([tx], [ty], [(3 << 58) | (tx << 29) | ty])
+
+
+def test_cell_id_np_mixed_batch():
+    """Invalid rows do not disturb their valid neighbours: (-inf, 0) and
+    (0, -90.5) get -1; (-22.5, 45) is column floor(157.5 / 45) = 3 and
+    row floor((1 - asinh(tan 45°) / π) / 2 · 8) = floor(2.88) = 2."""
+    tx, ty, cid = _np_z3([(-_INF, 0.0), (-22.5, 45.0), (0.0, -90.5)])
+    assert (tx, ty) == ([-1, 3, -1], [-1, 2, -1])
+    assert cid == [-1, (3 << 58) | (3 << 29) | 2, -1]
+
+
 def test_rasterize_points_invalid_coordinates_burn_no_tile(spark):
     from gdal_spark.raster import rasterize_points
 

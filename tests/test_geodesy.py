@@ -103,6 +103,83 @@ def test_knn_hand_derived_exact(spark, case):
         assert np.allclose(got.dist_m.to_numpy(), d[want], rtol=0, atol=1e-6)
 
 
+def test_knn_join_launches_no_job_before_an_action(spark):
+    """knn_join only builds a plan: no checkpoint, count or emptiness
+    probe runs a Spark job until the caller's own action."""
+    from gdal_spark.knn import knn_join
+
+    pdf = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": [0, 1, 2], "lon": [10.0, 10.1, 40.0], "lat": [50.0] * 3}))
+    qdf = spark.createDataFrame(pd.DataFrame(
+        {"qid": [0], "lon": [10.02], "lat": [50.0]}))
+    sc = spark.sparkContext
+    group = "knn-lazy-plan"
+    sc.setJobGroup(group, "knn_join must not run a job")
+    try:
+        out = knn_join(pdf, qdf, k=2)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        got = out.toPandas().sort_values("rank")
+        assert list(sc.statusTracker().getJobIdsForGroup(group))  # sees jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got.doc_id.tolist() == [0, 1]
+
+
+def _assert_knn(spark, pts, qs, k, z0s, want):
+    """knn_join over (lon, lat) lists gives the hand-derived ids ``want``
+    ({qid: ids}); the numpy haversine must agree with the hand ranking."""
+    from gdal_spark.knn import knn_join
+
+    lon, lat = (np.array(v, dtype=np.float64) for v in zip(*pts))
+    for qi, (qlon, qlat) in enumerate(qs):
+        d = crs.haversine_m(qlon, qlat, lon, lat)
+        assert np.lexsort((np.arange(len(pts)), d))[:k].tolist() == want[qi]
+    pdf = spark.createDataFrame(
+        pd.DataFrame({"doc_id": np.arange(len(pts)), "lon": lon, "lat": lat}))
+    qdf = spark.createDataFrame(pd.DataFrame(
+        {"qid": np.arange(len(qs)), "lon": [q[0] for q in qs],
+         "lat": [q[1] for q in qs]}))
+    for z0 in z0s:
+        got = knn_join(pdf, qdf, k=k, z0=z0).toPandas()
+        for qi in range(len(qs)):
+            mine = got[got.qid == qi].sort_values("rank")
+            assert mine.doc_id.tolist() == want[qi], (z0, qi, mine)
+            assert mine["rank"].tolist() == list(range(1, k + 1)), (z0, qi)
+
+
+def test_knn_cap_crosses_antimeridian(spark):
+    """From (179.99, 0) the point at -179.99 is 0.02° of longitude away
+    across the antimeridian (2.2 km), 179.9 is 0.09° (10.0 km) and -179.5
+    is 0.51° (56.8 km): the cover must wrap to find the nearest."""
+    _assert_knn(spark, [(-179.99, 0.0), (179.9, 0.0), (-179.5, 0.0)],
+                [(179.99, 0.0)], 2, [None, 2, 3, 8, 14], {0: [0, 1]})
+
+
+def test_knn_nearest_lies_past_the_block(spark):
+    """At z6 (5.625° tiles) the query (2.8125, 2.8) sits mid-tile (32, 31);
+    its 3×3 block spans lon -5.625..11.25 and lat -5.6..11.18, and holds
+    only point 0 at its corner (11, 11), 11.6° of arc away. Point 1 at
+    (11.6, 2.8) is in column 34, past the block, yet only 8.8° away: the
+    cover of the block's bound (11.9°) must reach it."""
+    _assert_knn(spark, [(11.0, 11.0), (11.6, 2.8)], [(2.8125, 2.8)], 1,
+                [None, 2, 6], {0: [1]})
+
+
+def test_knn_hot_cluster_and_isolated_query(spark):
+    """50 points spiral out from (10, 50): point i sits 2e-4·(i+1)° of
+    arc from the centre (all within 0.01°), so a query at the centre has
+    points 0-4 as its 5 nearest. Points 50-54 lie due north of the
+    isolated query (-80, -40) at 15°, 30°, …, 75°; the cluster is over
+    90° of arc from it, so its 5 nearest are 50-54 in order."""
+    golden = np.radians(137.5)
+    pts = [(10.0 + 2e-4 * (i + 1) * np.cos(i * golden) / np.cos(np.radians(50.0)),
+            50.0 + 2e-4 * (i + 1) * np.sin(i * golden)) for i in range(50)]
+    pts += [(-80.0, -40.0 + 15.0 * j) for j in range(1, 6)]
+    _assert_knn(spark, pts, [(10.0, 50.0), (-80.0, -40.0)], 5,
+                [None, 2, 3, 14], {0: [0, 1, 2, 3, 4], 1: [50, 51, 52, 53, 54]})
+
+
 def test_tmerc_jvm_matches_numpy(spark):
     """The staged Catalyst Krüger pipeline ≡ the numpy kernel (≤ 1e-6 m)."""
     rng = np.random.default_rng(5)

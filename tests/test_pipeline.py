@@ -159,6 +159,29 @@ def test_pip_modes_partition_points(spark):
     assert sorted(semi + anti) == sorted(every)
 
 
+def test_pip_modes_drop_invalid_points(spark):
+    """A point with NULL, NaN or out-of-range lon/lat is neither inside
+    nor outside a zone. Zone 1 is the square [0, 10]²: (5, 5) is inside
+    it, (20, 5) outside; (NaN, 0), (NULL, NULL) and (200, 10) are
+    invalid, so no mode returns them."""
+    from gdal_spark.pip_join import build_zone_index_from_defs, pip_join
+
+    square = np.array([[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]], dtype=float)
+    index = build_zone_index_from_defs([{"zone_id": 1, "rings": [square]}])
+    pts = spark.createDataFrame(
+        [(0, float("nan"), 0.0), (1, None, None), (2, 200.0, 10.0),
+         (3, 20.0, 5.0), (4, 5.0, 5.0)], "doc_id long, lon double, lat double")
+
+    def rows(how):
+        df = pip_join(pts, index, how=how)
+        cols = ["doc_id", "zone_id"] if how == "inner" else ["doc_id"]
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    assert rows("inner") == [(4, 1)]
+    assert rows("semi") == [(4,)]
+    assert rows("anti") == [(3,)]
+
+
 def test_pages_per_zone_large_doc_ids(spark, tmp_path):
     """doc_id ≥ 2·10^9 puts the synthetic warc_ts past pandas'
     nanosecond range (year 2262). The flagship only sends (lon, lat)
