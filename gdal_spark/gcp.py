@@ -27,8 +27,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gdal_spark.raster import (TILE_PX, _lit, _nearest_gather,
-                               dst_grid_parts)
+from gdal_spark.raster import (_lit, dst_grid, dst_grid_sql,
+                               gather_dem_oracle_sql, gather_pixels)
 
 # ground-truth quadratic georeferencing used by the synthetic GCP set:
 # a mildly non-affine camera model (the case -order exists for)
@@ -136,21 +136,10 @@ def warp_gcp_nearest(tiles: DataFrame, fit: dict, raster_px: int,
     grid (gdalwarp -order n): the same chunk-gather plan as
     raster.warp_nearest, with the dst→src chain running through the
     fitted polynomial instead of an inverted affine."""
-    spark = tiles.sparkSession
-    t = TILE_PX
     sgx_e, sgy_e = warp_gcp_pixel_sql(fit, dst_gt)
-    dst = (
-        spark.range(dst_px * dst_px, numPartitions=dst_grid_parts(dst_px))
-        .select((F.col("id") % dst_px).alias("di"),
-                (F.col("id") / dst_px).cast("long").alias("dj"))
-        .withColumn("sgx", F.expr(sgx_e))
-        .withColumn("sgy", F.expr(sgy_e))
-        .filter(f"sgx >= 0 and sgx < {raster_px}"
-                f" and sgy >= 0 and sgy < {raster_px}")
-        .withColumn("tx", F.expr(f"sgx div {t}"))
-        .withColumn("ty", F.expr(f"sgy div {t}"))
-    )
-    return _nearest_gather(dst, tiles)
+    dst = dst_grid(tiles.sparkSession, dst_px).selectExpr(
+        "di", "dj", f"{sgx_e} as gx", f"{sgy_e} as gy")
+    return gather_pixels(dst, tiles, raster_px, ["di", "dj"])
 
 
 def warp_gcp_oracle_sql(fit: dict, raster_px: int, dst_gt: list[float],
@@ -158,15 +147,9 @@ def warp_gcp_oracle_sql(fit: dict, raster_px: int, dst_gt: list[float],
     """DuckDB oracle: identical dst→world→poly→floor chain over a range
     grid, closed-form DEM values."""
     sgx_e, sgy_e = warp_gcp_pixel_sql(fit, dst_gt)
-    elev = elev_sql.replace("gx", "sgx").replace("gy", "sgy")
-    return f"""
-with d as (
-  select a.range as di, b.range as dj
-  from range(0, {dst_px}) a cross join range(0, {dst_px}) b),
-m as (select di, dj, {sgx_e} as sgx, {sgy_e} as sgy from d)
-select di, dj, {elev} as value from m
-where sgx >= 0 and sgx < {raster_px} and sgy >= 0 and sgy < {raster_px}
-"""
+    return gather_dem_oracle_sql(
+        f"(select di, dj, {sgx_e} as gx, {sgy_e} as gy"
+        f" from {dst_grid_sql(dst_px)} d) m", raster_px, elev_sql)
 
 
 def default_dst_grid(raster_px: int, dst_px: int) -> list[float]:
@@ -329,27 +312,14 @@ def warp_tps_nearest(tiles: DataFrame, fit: dict, raster_px: int,
     """Nearest warp through the TPS transformer (gdalwarp -tps): the
     same chunk-gather plan as warp_gcp_nearest; the RBF evaluation is
     staged Catalyst columns (one per center) inside codegen."""
-    spark = tiles.sparkSession
-    t = TILE_PX
     wx = f"({_lit(dst_gt[0])} + (di + 0.5) * {_lit(dst_gt[1])})"
     wy = f"({_lit(dst_gt[3])} + (dj + 0.5) * {_lit(dst_gt[5])})"
-    dst = (
-        spark.range(dst_px * dst_px, numPartitions=dst_grid_parts(dst_px))
-        .select((F.col("id") % dst_px).alias("di"),
-                (F.col("id") / dst_px).cast("long").alias("dj"))
-    )
+    dst = dst_grid(tiles.sparkSession, dst_px)
     for name, expr in tps_stages(fit, wx, wy, "spark"):
         dst = dst.withColumn(name, F.expr(expr))
-    dst = (
-        dst.withColumn("sgx", F.expr("cast(floor(_spx) as bigint)"))
-        .withColumn("sgy", F.expr("cast(floor(_spy) as bigint)"))
-        .filter(f"sgx >= 0 and sgx < {raster_px}"
-                f" and sgy >= 0 and sgy < {raster_px}")
-        .withColumn("tx", F.expr(f"sgx div {t}"))
-        .withColumn("ty", F.expr(f"sgy div {t}"))
-        .select("di", "dj", "sgx", "sgy", "tx", "ty")
-    )
-    return _nearest_gather(dst, tiles)
+    dst = dst.selectExpr("di", "dj", "cast(floor(_spx) as bigint) as gx",
+                         "cast(floor(_spy) as bigint) as gy")
+    return gather_pixels(dst, tiles, raster_px, ["di", "dj"])
 
 
 def warp_tps_oracle_sql(fit: dict, raster_px: int, dst_gt: list[float],
@@ -359,15 +329,10 @@ def warp_tps_oracle_sql(fit: dict, raster_px: int, dst_gt: list[float],
 
     wx = f"({_lit(dst_gt[0])} + (di + 0.5) * {_lit(dst_gt[1])})"
     wy = f"({_lit(dst_gt[3])} + (dj + 0.5) * {_lit(dst_gt[5])})"
-    base = (f"select a.range as di, b.range as dj"
-            f" from range(0, {dst_px}) a cross join range(0, {dst_px}) b")
     stages = tps_stages(fit, wx, wy, "duckdb") + [
-        ("sgx", "cast(floor(_spx) as bigint)"),
-        ("sgy", "cast(floor(_spy) as bigint)"),
+        ("gx", "cast(floor(_spx) as bigint)"),
+        ("gy", "cast(floor(_spy) as bigint)"),
     ]
-    inner = stages_to_duckdb_sql(base, stages, ["di", "dj", "sgx", "sgy"])
-    elev = elev_sql.replace("gx", "sgx").replace("gy", "sgy")
-    return f"""
-select di, dj, {elev} as value from ({inner}) m
-where sgx >= 0 and sgx < {raster_px} and sgy >= 0 and sgy < {raster_px}
-"""
+    inner = stages_to_duckdb_sql(f"select * from {dst_grid_sql(dst_px)} g",
+                                 stages, ["di", "dj", "gx", "gy"])
+    return gather_dem_oracle_sql(f"({inner}) m", raster_px, elev_sql)

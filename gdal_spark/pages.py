@@ -27,8 +27,10 @@ HASH_MOD = 1000000007
 def synth_stages(d: str = "doc_id") -> list[tuple[str, str]]:
     """Staged shared-SQL derivation of (has_geo, lat_mic, lon_mic, lon, lat).
 
-    lat_mic/lon_mic are integer microdegrees; lon/lat the float view.
-    Valid in both Spark SQL and DuckDB.
+    lat_mic/lon_mic are integer microdegrees; lon/lat the float view,
+    DOUBLE in both engines (``1e6`` is a double literal in Spark SQL and
+    DuckDB; ``1000000.0`` would make Spark's lon a DECIMAL). Valid in
+    both Spark SQL and DuckDB.
     """
     return [
         ("_h1", f"({d} * {HASH_MULT}) % {HASH_MOD}"),
@@ -44,8 +46,8 @@ def synth_stages(d: str = "doc_id") -> list[tuple[str, str]]:
         ("_ulat", "((_h1 * 89) % 160000001) - 80000000"),
         ("lon_mic", "case when _hot then _clon + _dlon else _ulon end"),
         ("lat_mic", "case when _hot then _clat + _dlat else _ulat end"),
-        ("lon", "lon_mic / 1000000.0"),
-        ("lat", "lat_mic / 1000000.0"),
+        ("lon", "lon_mic / 1e6"),
+        ("lat", "lat_mic / 1e6"),
     ]
 
 
@@ -58,12 +60,18 @@ def geotag_text_sql(text: str = "text") -> str:
     )
 
 
-def points_from_documents(spark: SparkSession, sf_dir: str,
-                          geotagged_only: bool = True) -> DataFrame:
-    """documents → (doc_id, lon, lat, lang) point table (JVM-only math)."""
+def _staged_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents with the synth_stages columns added (JVM-only math)."""
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     for name, expr in synth_stages("doc_id"):
         df = df.withColumn(name, F.expr(expr))
+    return df
+
+
+def points_from_documents(spark: SparkSession, sf_dir: str,
+                          geotagged_only: bool = True) -> DataFrame:
+    """documents → (doc_id, lon, lat, lang) point table (JVM-only math)."""
+    df = _staged_documents(spark, sf_dir)
     if geotagged_only:
         df = df.filter("has_geo")
     return df.select("doc_id", "lon", "lat", "lang", "lon_mic", "lat_mic")
@@ -75,10 +83,8 @@ def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the input-contract adapter: downstream operators only see the
     pages schema from BASELINE.json input_hint.
     """
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    for name, expr in synth_stages("doc_id"):
-        df = df.withColumn(name, F.expr(expr))
-    df = df.withColumn("text", F.expr(geotag_text_sql("text")))
+    df = _staged_documents(spark, sf_dir).withColumn(
+        "text", F.expr(geotag_text_sql("text")))
     return df.select(
         F.expr("concat('https://site', doc_id % 100, '.example/p/', doc_id)")
         .alias("url"),

@@ -22,21 +22,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gdal_spark.pages import points_from_documents, points_oracle_sql
-from gdal_spark.raster import (DEM_ELEV_SQL, bilinear_dem_oracle_sql,
-                               checksum_oracle_sql, color_relief_oracle_sql,
-                               contour_cells, cubic_dem_oracle_sql,
-                               fillnodata_sql, gpixel_exprs, halo_gradient,
-                               hillshade_aspect_sql, histogram,
-                               histogram_oracle_sql,
+from gdal_spark.raster import (DEM_ELEV_SQL, checksum_oracle_sql,
+                               color_relief_oracle_sql, contour_cells,
+                               dem_elev_sql, dst_grid_sql, fillnodata_sql,
+                               gather_dem_oracle_sql, gpixel_exprs,
+                               halo_gradient, hillshade_aspect_sql,
+                               histogram, histogram_oracle_sql,
+                               interp_dem_oracle_sql,
                                overview_checksum_oracle_sql, overview_sum,
                                raster_stats, raster_stats_oracle_sql,
                                rasterize_points, sample_at_points,
-                               sample_bilinear, synth_dem_tiles,
+                               sample_interp, synth_dem_tiles,
                                tile_checksums, tile_geotransform,
-                               tri_tpi_roughness_oracle_sql,
-                               warp_average_oracle_sql, warp_bilinear,
-                               warp_bilinear_oracle_sql, warp_nearest,
-                               warp_pixel_sql)
+                               tri_tpi_roughness_oracle_sql, warp_average,
+                               warp_average_oracle_sql, warp_interp,
+                               warp_nearest, warp_order_stats_oracle_sql,
+                               warp_pixel_sql, warp_queries_sql)
 
 CONTOUR_T = 105
 
@@ -50,6 +51,9 @@ _DST_GT = [
     _SRC_GT[0] + 13.7 * _SRC_GT[1], _SRC_GT[1] * 1.37, 0.0,
     _SRC_GT[3] - 9.3 * abs(_SRC_GT[5]), 0.0, _SRC_GT[5] * 1.37,
 ]
+
+# the warp fixture's dst grid as tap-kernel queries (DuckDB side)
+_WARP_Q = warp_queries_sql(_DST_GT, _SRC_GT, _DST_PX)
 
 # average-warp fixture: 3.7×-coarser shifted dst grid, 70×70 px
 _AVG_DST_PX = 70
@@ -187,20 +191,19 @@ def q_raster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return histogram(rasterize_points(pts, RASTER_Z))
 
 
-def q_sample_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bilinear InterpolateAtPoint over the synthetic DEM
-    (alg/gdal_interpolateatpoint.cpp bilinear path)."""
+def _sample_dem(spark: SparkSession, sf_dir: str, kernel: str) -> DataFrame:
+    """InterpolateAtPoint with a tap ``kernel`` over the synthetic DEM
+    (alg/gdal_interpolateatpoint.cpp) at the _BILIN_Q probes."""
     spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .createOrReplaceTempView("documents")
     queries = spark.sql(_BILIN_Q)
-    return sample_bilinear(synth_dem_tiles(spark, DEM_PX), queries, DEM_PX)
+    return sample_interp(synth_dem_tiles(spark, DEM_PX), queries, DEM_PX,
+                         kernel)
 
 
 def q_warp_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     """gdalwarp -r average (GWKAverageOrMode): DEM downsampled 3.7× by
     per-tile integer partials + one keyed reduction."""
-    from gdal_spark.raster import warp_average
-
     _ = sf_dir
     tiles = synth_dem_tiles(spark, DEM_PX)
     return warp_average(tiles, _SRC_GT, DEM_PX, _AVG_DST_GT, _AVG_DST_PX)
@@ -211,23 +214,10 @@ def q_warp_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-tile integer partials + keyed reduction as -r average, final
     expression keeps the sum instead of dividing — total DEM mass is
     conserved across the resolution change."""
-    from gdal_spark.raster import warp_average
-
     _ = sf_dir
     tiles = synth_dem_tiles(spark, DEM_PX)
     return warp_average(tiles, _SRC_GT, DEM_PX, _AVG_DST_GT, _AVG_DST_PX,
                         stat="sum")
-
-
-def q_sample_cubic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cubic InterpolateAtPoint over the synthetic DEM (GRIORA_Cubic
-    4×4 convolution, a = -0.5)."""
-    from gdal_spark.raster import sample_cubic
-
-    spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .createOrReplaceTempView("documents")
-    queries = spark.sql(_BILIN_Q)
-    return sample_cubic(synth_dem_tiles(spark, DEM_PX), queries, DEM_PX)
 
 
 # ---------------------------------------------------------------------------
@@ -281,9 +271,9 @@ def q_sample_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     near = q_raster_sample(spark, sf_dir).select(
         F.lit("nearest").alias("method"), "qid",
         F.col("value").cast("double").alias("value"))
-    bil = q_sample_bilinear(spark, sf_dir).select(
+    bil = _sample_dem(spark, sf_dir, "bilinear").select(
         F.lit("bilinear").alias("method"), "qid", "value")
-    cub = q_sample_cubic(spark, sf_dir).select(
+    cub = _sample_dem(spark, sf_dir, "cubic").select(
         F.lit("cubic").alias("method"), "qid", "value")
     return near.unionByName(bil).unionByName(cub)
 
@@ -297,8 +287,6 @@ def q_warp_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel chunking)."""
     _ = sf_dir
     tiles = synth_dem_tiles(spark, DEM_PX)
-    from gdal_spark.raster import warp_average
-
     wn = warp_nearest(tiles, _SRC_GT, DEM_PX, _DST_GT, _DST_PX).select(
         F.lit("nearest").alias("method"), "di", "dj",
         F.lit(-1).cast("long").alias("n_src"),
@@ -306,15 +294,15 @@ def q_warp_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     wa = warp_average(tiles, _SRC_GT, DEM_PX, _AVG_DST_GT,
                       _AVG_DST_PX).select(
         F.lit("average").alias("method"), "di", "dj", "n_src", "value")
-    from gdal_spark.raster import warp_mode, warp_rms
+    from gdal_spark.raster import warp_mode
 
     wm = warp_mode(tiles, _SRC_GT, DEM_PX, _AVG_DST_GT,
                    _AVG_DST_PX).select(
         F.lit("mode").alias("method"), "di", "dj",
         F.col("n_mode").alias("n_src"),
         F.col("value").cast("double").alias("value"))
-    wr = warp_rms(tiles, _SRC_GT, DEM_PX, _AVG_DST_GT,
-                  _AVG_DST_PX).select(
+    wr = warp_average(tiles, _SRC_GT, DEM_PX, _AVG_DST_GT,
+                      _AVG_DST_PX, stat="rms").select(
         F.lit("rms").alias("method"), "di", "dj", "n_src", "value")
     return wn.unionByName(wa).unionByName(wm).unionByName(wr)
 
@@ -363,8 +351,6 @@ def q_warp_average_nodata(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mean; dst pixels whose every contributor is nodata vanish (the
     sparse dstnodata representation). Same partial+final plan as
     warp_average."""
-    from gdal_spark.raster import warp_average
-
     _ = sf_dir
     tiles = synth_dem_tiles(spark, DEM_PX)
     return warp_average(tiles, _SRC_GT, DEM_PX, _AVG_DST_GT, _AVG_DST_PX,
@@ -402,11 +388,9 @@ def q_warp_lanczos(spark: SparkSession, sf_dir: str) -> DataFrame:
     taps normalized by their sum, fractional src coords in Catalyst,
     chunk-gather per tile — completes the gdalwarp -r kernel matrix
     (nearest/bilinear/cubic/lanczos/average/mode/rms/min/max/med/q1/q3)."""
-    from gdal_spark.raster import warp_lanczos
-
     _ = sf_dir
     tiles = synth_dem_tiles(spark, DEM_PX)
-    out = warp_lanczos(tiles, _SRC_GT, DEM_PX, _DST_GT, _DST_PX)
+    out = warp_interp(tiles, _SRC_GT, DEM_PX, _DST_GT, _DST_PX, "lanczos")
     return out.selectExpr("qid", "round(value, 6) as value")
 
 
@@ -834,11 +818,10 @@ def q_warp_cubicspline(spark: SparkSession, sf_dir: str) -> DataFrame:
     smoothing cubic B-spline 4x4 kernel (B3 partition of unity; not
     interpolating — B3(0)=2/3) on the shifted scaled grid; same
     chunk-gather plan as cubic, different weight polynomial."""
-    from gdal_spark.raster import warp_cubicspline
-
     _ = sf_dir
     tiles = synth_dem_tiles(spark, DEM_PX)
-    out = warp_cubicspline(tiles, _SRC_GT, DEM_PX, _DST_GT, _DST_PX)
+    out = warp_interp(tiles, _SRC_GT, DEM_PX, _DST_GT, _DST_PX,
+                      "cubicspline")
     return out.selectExpr("qid", "round(value, 6) as value")
 
 
@@ -889,8 +872,6 @@ def q_warp_cutline(spark: SparkSession, sf_dir: str) -> DataFrame:
     falls outside are dropped (nodata-skip, sparse form). The
     crossing-number mask is one shared SQL text over the warp output,
     so the DuckDB oracle compares bit-exactly."""
-    from gdal_spark.raster import warp_nearest
-
     _ = sf_dir
     tiles = synth_dem_tiles(spark, DEM_PX)
     w = warp_nearest(tiles, _SRC_GT, DEM_PX, _DST_GT, _DST_PX)
@@ -1677,14 +1658,11 @@ def q_warp_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
     alg/gdalwarpkernel.cpp): DEM resampled onto the shifted
     1.37×-scaled grid with fractional src coords, unioned with a method
     column — both kernels share the chunk-gather plan shape."""
-    from gdal_spark.raster import warp_cubic
-
     _ = sf_dir
     tiles = synth_dem_tiles(spark, DEM_PX)
-    wb = warp_bilinear(tiles, _SRC_GT, DEM_PX, _DST_GT, _DST_PX).select(
-        F.lit("bilinear").alias("method"), "qid", "value")
-    wc = warp_cubic(tiles, _SRC_GT, DEM_PX, _DST_GT, _DST_PX).select(
-        F.lit("cubic").alias("method"), "qid", "value")
+    wb, wc = (warp_interp(tiles, _SRC_GT, DEM_PX, _DST_GT, _DST_PX, k)
+              .select(F.lit(k).alias("method"), "qid", "value")
+              for k in ("bilinear", "cubic"))
     return wb.unionByName(wc)
 
 
@@ -1758,12 +1736,8 @@ from q left join px using (gx, gy)
 """
 
 
-def _dem_elev(x: str, y: str) -> str:
-    return DEM_ELEV_SQL.replace("gx", f"({x})").replace("gy", f"({y})")
-
-
 def _dem_slope_oracle() -> str:
-    e = _dem_elev
+    e = dem_elev_sql
     num_x = (
         f"(({e('gx-1', 'gy-1')}) + 2*({e('gx-1', 'gy')})"
         f" + ({e('gx-1', 'gy+1')}))"
@@ -1789,7 +1763,7 @@ select gx, gy, {num_x} as num_x, {num_y} as num_y from g
 def _dem_slope_zt_oracle() -> str:
     """The Horn-numerator oracle rel extended with the Zevenbergen–
     Thorne numerators (w3 − w5, w7 − w1)."""
-    e = _dem_elev
+    e = dem_elev_sql
     zt_x = f"(({e('gx-1', 'gy')}) - ({e('gx+1', 'gy')}))"
     zt_y = f"(({e('gx', 'gy+1')}) - ({e('gx', 'gy-1')}))"
     return (f"select gx, gy, num_x, num_y, {zt_x} as zt_x,"
@@ -1862,7 +1836,7 @@ _RECLS = " + ".join(
 
 
 def _contour_oracle() -> str:
-    e = _dem_elev
+    e = dem_elev_sql
     bit = [f"(case when ({e('gx', 'gy')}) > {CONTOUR_T} then 8 else 0 end)",
            f"(case when ({e('gx+1', 'gy')}) > {CONTOUR_T} then 4 else 0 end)",
            f"(case when ({e('gx+1', 'gy+1')}) > {CONTOUR_T} then 2 else 0 end)",
@@ -1884,18 +1858,9 @@ from m where ms_case <> 0 and ms_case <> 15
 
 def _warp_oracle() -> str:
     sgx_e, sgy_e = warp_pixel_sql(_DST_GT, _SRC_GT, "di", "dj")
-    elev = DEM_ELEV_SQL.replace("gx", "sgx").replace("gy", "sgy")
-    return f"""
-with d as (
-  select a.range as di, b.range as dj
-  from range(0, {_DST_PX}) a cross join range(0, {_DST_PX}) b
-),
-m as (
-  select di, dj, {sgx_e} as sgx, {sgy_e} as sgy from d
-)
-select di, dj, {elev} as value from m
-where sgx >= 0 and sgx < {DEM_PX} and sgy >= 0 and sgy < {DEM_PX}
-"""
+    return gather_dem_oracle_sql(
+        f"(select di, dj, {sgx_e} as gx, {sgy_e} as gy"
+        f" from {dst_grid_sql(_DST_PX)} d) m", DEM_PX)
 
 
 def _polygonize_oracle() -> str:
@@ -1925,10 +1890,10 @@ select 'nearest' as method, qid, cast(value as double) as value
 from ({_sample_oracle()}) sn
 union all
 select 'bilinear' as method, qid, value
-from ({bilinear_dem_oracle_sql(_BILIN_Q, DEM_PX)}) sb
+from ({interp_dem_oracle_sql(_BILIN_Q, DEM_PX, "bilinear")}) sb
 union all
 select 'cubic' as method, qid, value
-from ({cubic_dem_oracle_sql(_BILIN_Q, DEM_PX)}) sc
+from ({interp_dem_oracle_sql(_BILIN_Q, DEM_PX, "cubic")}) sc
 """
 
 
@@ -1942,18 +1907,13 @@ select 'average' as method, di, dj, n_src, value
 from ({warp_average_oracle_sql(_AVG_DST_GT, _SRC_GT,
                                _AVG_DST_PX, DEM_PX)}) wa
 union all
-select 'mode' as method, di, dj, n_mode as n_src,
-       cast(value as double) as value
-from ({__import__("gdal_spark.raster",
-                  fromlist=["warp_mode_oracle_sql"])
-       .warp_mode_oracle_sql(_AVG_DST_GT, _SRC_GT,
-                             _AVG_DST_PX, DEM_PX)}) wm
+select 'mode' as method, di, dj, n_src, cast(value as double) as value
+from ({warp_order_stats_oracle_sql(_AVG_DST_GT, _SRC_GT, _AVG_DST_PX,
+                                   DEM_PX, [("mode", "mode")])}) wm
 union all
 select 'rms' as method, di, dj, n_src, value
-from ({__import__("gdal_spark.raster",
-                  fromlist=["warp_rms_oracle_sql"])
-       .warp_rms_oracle_sql(_AVG_DST_GT, _SRC_GT,
-                            _AVG_DST_PX, DEM_PX)}) wr
+from ({warp_average_oracle_sql(_AVG_DST_GT, _SRC_GT, _AVG_DST_PX, DEM_PX,
+                               stat="rms")}) wr
 """
 
 
@@ -2065,13 +2025,11 @@ ORACLES = {
     ).collar_val_sql(DEM_PX), NEARBLACK_TOL),
     "warp_lanczos_dem": f"""
 select qid, round(value, 6) as value from (
-{__import__("gdal_spark.raster", fromlist=["warp_lanczos_oracle_sql"])
- .warp_lanczos_oracle_sql(_DST_GT, _SRC_GT, _DST_PX, DEM_PX)}) l
+{interp_dem_oracle_sql(_WARP_Q, DEM_PX, "lanczos")}) l
 """,
     "warp_cubicspline_dem": f"""
 select qid, round(value, 6) as value from (
-{__import__("gdal_spark.raster", fromlist=["warp_cubicspline_oracle_sql"])
- .warp_cubicspline_oracle_sql(_DST_GT, _SRC_GT, _DST_PX, DEM_PX)}) s
+{interp_dem_oracle_sql(_WARP_Q, DEM_PX, "cubicspline")}) s
 """,
     "warp_gcp_poly": _warp_gcp_oracle(),
     "warp_gcp_tps": _warp_gcp_tps_oracle(),
@@ -2080,23 +2038,18 @@ select qid, round(value, 6) as value from (
     "raster_compare_golden": _raster_compare_oracle(),
     "raster_footprint": _raster_footprint_oracle(),
     "raster_color_merge": _color_merge_sql("duckdb"),
-    "warp_average_nodata": __import__(
-        "gdal_spark.raster", fromlist=["warp_average_oracle_sql"]
-    ).warp_average_oracle_sql(_AVG_DST_GT, _SRC_GT, _AVG_DST_PX, DEM_PX,
-                              src_nodata=42),
-    "warp_order_stats": __import__(
-        "gdal_spark.raster", fromlist=["warp_order_stats_oracle_sql"]
-    ).warp_order_stats_oracle_sql(
+    "warp_average_nodata": warp_average_oracle_sql(
+        _AVG_DST_GT, _SRC_GT, _AVG_DST_PX, DEM_PX, src_nodata=42),
+    "warp_order_stats": warp_order_stats_oracle_sql(
         _AVG_DST_GT, _SRC_GT, _AVG_DST_PX, DEM_PX,
         [("min", "min"), ("max", "max"), ("med", "0.5"),
          ("q1", "0.25"), ("q3", "0.75")]),
     "warp_bilinear_dem": f"""
 select 'bilinear' as method, qid, value from (
-{warp_bilinear_oracle_sql(_DST_GT, _SRC_GT, _DST_PX, DEM_PX)}) b
+{interp_dem_oracle_sql(_WARP_Q, DEM_PX, "bilinear")}) b
 union all
 select 'cubic' as method, qid, value from (
-{__import__("gdal_spark.raster", fromlist=["warp_cubic_oracle_sql"])
- .warp_cubic_oracle_sql(_DST_GT, _SRC_GT, _DST_PX, DEM_PX)}) c
+{interp_dem_oracle_sql(_WARP_Q, DEM_PX, "cubic")}) c
 """,
     "translate_ops": _translate_ops_oracle(),
     "raster_fillnodata": fillnodata_sql(_PTS, RASTER_Z, "duckdb"),
@@ -2171,8 +2124,6 @@ select *, 'calc' as op from (
         "gdal_spark.zones", fromlist=["zone_defs"]).zone_defs()),
     "rgb2pct_checksum": _rgb2pct_oracle(),
     "rgb2pct_dither_checksum": _rgb2pct_dither_oracle(),
-    "warp_sum_dem": __import__(
-        "gdal_spark.raster", fromlist=["warp_average_oracle_sql"]
-    ).warp_average_oracle_sql(_AVG_DST_GT, _SRC_GT, _AVG_DST_PX,
-                              DEM_PX, stat="sum"),
+    "warp_sum_dem": warp_average_oracle_sql(
+        _AVG_DST_GT, _SRC_GT, _AVG_DST_PX, DEM_PX, stat="sum"),
 }

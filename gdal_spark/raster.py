@@ -24,6 +24,12 @@ Operators:
 - sample_at_points  — InterpolateAtPoint nearest
   (gcore/gdalrasterband.cpp:9963): join points → tiles on tile id, numpy
   gather from the buffer.
+- resampling, one core per direction (gdalwarp -r, alg/gdalwarpkernel.cpp):
+  dst→src taps — sample_interp / warp_interp with ``kernel`` ∈
+  INTERP_KERNELS (bilinear, cubic, cubicspline, lanczos) and the nearest
+  warps, all fetching values through gather_pixels; src→dst areas —
+  _area_partials behind warp_average (mean/sum/rms), warp_mode,
+  warp_minmax and warp_quantile.
 - halo_exchange + slope gradient — the 3×3 focal pattern of gdaldem
   (apps/gdaldem_lib.cpp:767-772, Horn 1981): every tile ships its buffer
   to its 8 neighbors' assembly groups; kernels see tile_px+2 halos.
@@ -504,42 +510,23 @@ group by bucket having sum(n) > 0
 """
 
 
-def sample_bilinear(tiles: DataFrame, queries: DataFrame,
-                    raster_px: int) -> DataFrame:
-    """Bilinear InterpolateAtPoint (gcore/gdalrasterband.cpp:9963,
-    alg/gdal_interpolateatpoint.cpp bilinear path): queries carry
-    fractional PIXEL coordinates (qx, qy); the 4 pixel-center neighbors
-    and weights are Catalyst arithmetic, the value gather reuses the
-    per-tile chunk pattern, and the weighted sum is a fixed 4-term
-    expression (textually shared with the oracle).
-
-    GDAL convention: pixel centers at integer+0.5; x0 = floor(qx - 0.5),
-    fx = qx - 0.5 - x0. Queries whose 2×2 window leaves the raster are
-    dropped (the out-of-raster early-return)."""
-    spark = tiles.sparkSession
+def gather_pixels(pixels: DataFrame, tiles: DataFrame, raster_px: int,
+                  keys: list[str]) -> DataFrame:
+    """The value fetch of every dst→src resampler: rows (*keys, gx, gy)
+    addressing source pixels → (*keys, value). Pixels outside the
+    raster are dropped (nodata-skip semantics); the rest group per
+    source tile BEFORE the payload join, so each tile buffer crosses the
+    shuffle and the Arrow bridge exactly once (GDALWarpOperation's chunk
+    queue, alg/gdalwarpoperation.cpp:1099 — a chunk, not a pixel, is the
+    unit of work) instead of being replicated per pixel."""
     t = TILE_PX
-    nb = (
-        queries
-        .withColumn("x0", F.expr("cast(floor(qx - 0.5e0) as bigint)"))
-        .withColumn("y0", F.expr("cast(floor(qy - 0.5e0) as bigint)"))
-        .withColumn("fx", F.expr("qx - 0.5e0 - x0"))
-        .withColumn("fy", F.expr("qy - 0.5e0 - y0"))
-        .filter(f"x0 >= 0 and x0 + 1 < {raster_px}"
-                f" and y0 >= 0 and y0 + 1 < {raster_px}")
-        .selectExpr(
-            "qid", "fx", "fy",
-            "explode(array(struct(0 as k, x0 as gx, y0 as gy),"
-            " struct(1 as k, x0 + 1 as gx, y0 as gy),"
-            " struct(2 as k, x0 as gx, y0 + 1 as gy),"
-            " struct(3 as k, x0 + 1 as gx, y0 + 1 as gy))) as nb")
-        .selectExpr("qid", "fx", "fy", "nb.k as k", "nb.gx as gx",
-                    "nb.gy as gy")
+    chunks = (
+        pixels.filter(f"gx >= 0 and gx < {raster_px}"
+                      f" and gy >= 0 and gy < {raster_px}")
         .withColumn("tx", F.expr(f"gx div {t}"))
         .withColumn("ty", F.expr(f"gy div {t}"))
-    )
-    chunks = (
-        nb.groupBy("tx", "ty")
-        .agg(F.collect_list(F.struct("qid", "k", "gx", "gy")).alias("px"))
+        .groupBy("tx", "ty")
+        .agg(F.collect_list(F.struct(*keys, "gx", "gy")).alias("px"))
         .join(tiles.select("tx", "ty", "data"), ["tx", "ty"])
     )
 
@@ -551,25 +538,20 @@ def sample_bilinear(tiles: DataFrame, queries: DataFrame,
                 p = pd.DataFrame(list(px))
                 ly = p["gy"].to_numpy(np.int64) - int(ty) * t
                 lx = p["gx"].to_numpy(np.int64) - int(tx) * t
-                yield pd.DataFrame({
-                    "qid": p["qid"].astype("int64"),
-                    "k": p["k"].astype("int64"),
-                    "value": buf[ly, lx].astype(np.int64),
-                })
+                out = {k: p[k].astype("int64") for k in keys}
+                out["value"] = buf[ly, lx].astype(np.int64)
+                yield pd.DataFrame(out)
 
-    vals = chunks.mapInPandas(gather, "qid long, k long, value long")
-    wsum = (
-        vals.groupBy("qid").pivot("k", [0, 1, 2, 3]).sum("value")
-        .withColumnRenamed("0", "v00").withColumnRenamed("1", "v10")
-        .withColumnRenamed("2", "v01").withColumnRenamed("3", "v11")
-        .join(queries.selectExpr(
-            "qid", "qx - 0.5e0 - cast(floor(qx - 0.5e0) as bigint) as fx",
-            "qy - 0.5e0 - cast(floor(qy - 0.5e0) as bigint) as fy"), "qid")
-    )
-    return wsum.selectExpr(
-        "qid",
-        "v00 * (1e0 - fx) * (1e0 - fy) + v10 * fx * (1e0 - fy)"
-        " + v01 * (1e0 - fx) * fy + v11 * fx * fy as value")
+    schema = ", ".join(f"{k} long" for k in keys) + ", value long"
+    return chunks.mapInPandas(gather, schema)
+
+
+def _bilinear_sum_sql(v: "list[list[str]]", fx: str, fy: str) -> str:
+    """Bilinear 4-term weighted sum (alg/gdal_interpolateatpoint.cpp
+    bilinear path), term order pinned."""
+    return (f"{v[0][0]} * (1e0 - {fx}) * (1e0 - {fy}) + {v[0][1]} * {fx}"
+            f" * (1e0 - {fy}) + {v[1][0]} * (1e0 - {fx}) * {fy}"
+            f" + {v[1][1]} * {fx} * {fy}")
 
 
 def _cubic_weights_sql(f: str) -> list[str]:
@@ -601,118 +583,122 @@ def _bspline_weights_sql(f: str) -> list[str]:
     ]
 
 
-_TAP_WEIGHTS = {"cubic": _cubic_weights_sql, "bspline": _bspline_weights_sql}
+def _cubic_sum_sql(wfn):
+    """Separable 4×4 tap sum over the weight polynomial ``wfn``:
+    horizontal pass then vertical, term order pinned. ``v[ky][kx]`` are
+    the 16 tap-value expressions."""
+    def wsum(v: "list[list[str]]", fx: str, fy: str) -> str:
+        wx = wfn(fx)
+        wy = wfn(fy)
+        rows = [
+            "(" + " + ".join(f"{v[ky][kx]} * {wx[kx]}" for kx in range(4))
+            + ")"
+            for ky in range(4)
+        ]
+        return " + ".join(f"{rows[ky]} * {wy[ky]}" for ky in range(4))
+
+    return wsum
 
 
-def _cubic_sum_sql(v: "list[list[str]]", fx: str, fy: str,
-                   kernel: str = "cubic") -> str:
-    """Separable 4×4 tap sum: horizontal pass then vertical, term
-    order pinned. ``v[ky][kx]`` are the 16 tap-value expressions;
-    ``kernel`` picks the weight polynomial (cubic | bspline)."""
-    wfn = _TAP_WEIGHTS[kernel]
-    wx = wfn(fx)
-    wy = wfn(fy)
+LANCZOS_R = 3
+
+
+def _lanczos_weight_sql(d: str) -> str:
+    """Windowed sinc weight, shared text: 3·sin(πd)·sin(πd/3)/(π²d²),
+    1 at d=0, 0 at |d| ≥ 3 (the radius). The d≈0 case guards the 0/0."""
+    return (f"case when abs({d}) < 1e-12 then 1.0"
+            f" when abs({d}) >= {float(LANCZOS_R)!r} then 0.0"
+            f" else {float(LANCZOS_R)!r} * sin(pi() * ({d}))"
+            f" * sin(pi() * ({d}) / {float(LANCZOS_R)!r})"
+            f" / (pi() * pi() * ({d}) * ({d})) end")
+
+
+def _lanczos_sum_sql(v: "list[list[str]]", fx: str, fy: str) -> str:
+    """GWKLanczosSinc radius 3 (alg/gdalwarpkernel.cpp): separable 6×6
+    windowed-sinc sum normalized by the weight sums (the
+    truncated-window renormalization GDAL applies), term order pinned:
+    Σ_ky Σ_kx v·wx·wy / (Σwx · Σwy)."""
+    wx = [_lanczos_weight_sql(f"({fx}) - {float(kx - 2)!r}")
+          for kx in range(6)]
+    wy = [_lanczos_weight_sql(f"({fy}) - {float(ky - 2)!r}")
+          for ky in range(6)]
     rows = [
-        "(" + " + ".join(f"{v[ky][kx]} * {wx[kx]}" for kx in range(4)) + ")"
-        for ky in range(4)
+        "(" + " + ".join(f"{v[ky][kx]} * ({wx[kx]})" for kx in range(6))
+        + ")"
+        for ky in range(6)
     ]
-    return " + ".join(f"{rows[ky]} * {wy[ky]}" for ky in range(4))
+    num = " + ".join(f"{rows[ky]} * ({wy[ky]})" for ky in range(6))
+    sx = "(" + " + ".join(f"({w})" for w in wx) + ")"
+    sy = "(" + " + ".join(f"({w})" for w in wy) + ")"
+    return f"({num}) / ({sx} * {sy})"
 
 
-def sample_cubic(tiles: DataFrame, queries: DataFrame,
-                 raster_px: int, kernel: str = "cubic") -> DataFrame:
-    """Cubic InterpolateAtPoint (GRIORA_Cubic 4×4 convolution,
-    alg/gdal_interpolateatpoint.cpp): 16-tap gather through the per-tile
-    chunk path; weights and the separable sum are Catalyst arithmetic
-    shared textually with the oracle. Queries whose 4×4 window leaves
-    the raster are dropped."""
-    t = TILE_PX
+# gdalwarp -r name → (taps per axis n, weighted-sum SQL over the n×n tap
+# values v[ky][kx] and the fractions fx, fy — text shared with the oracle)
+INTERP_KERNELS = {
+    "bilinear": (2, _bilinear_sum_sql),
+    "cubic": (4, _cubic_sum_sql(_cubic_weights_sql)),
+    "cubicspline": (4, _cubic_sum_sql(_bspline_weights_sql)),
+    "lanczos": (6, _lanczos_sum_sql),
+}
+
+
+def _tap_window(kernel: str, raster_px: int) -> tuple[int, str, int]:
+    """(n, in-raster predicate on the window anchor x0/y0, tap offset
+    of kx = 0): the n×n window spans x0 − n/2 + 1 … x0 + n/2."""
+    n = INTERP_KERNELS[kernel][0]
+    r = n // 2
+    inside = (f"x0 >= {r - 1} and x0 + {r} < {raster_px}"
+              f" and y0 >= {r - 1} and y0 + {r} < {raster_px}")
+    return n, inside, 1 - r
+
+
+def sample_interp(tiles: DataFrame, queries: DataFrame, raster_px: int,
+                  kernel: str) -> DataFrame:
+    """InterpolateAtPoint with a tap kernel (gcore/gdalrasterband.cpp:9963,
+    alg/gdal_interpolateatpoint.cpp; gdalwarp's GWKBilinear / GWKCubic /
+    GWKBSpline / GWKLanczosSinc): ``kernel`` ∈ INTERP_KERNELS. Queries
+    carry fractional PIXEL coordinates (qid, qx, qy); GDAL convention:
+    pixel centers at integer+0.5, x0 = floor(qx - 0.5),
+    fx = qx - 0.5 - x0. The tap window is Catalyst arithmetic, the
+    values come through gather_pixels, and the weighted sum is the
+    kernel's fixed expression (textually shared with the oracle).
+    Queries whose window leaves the raster are dropped (the kernel's
+    edge-skip)."""
+    n, inside, o = _tap_window(kernel, raster_px)
     taps = ", ".join(
-        f"struct({ky * 4 + kx} as k, x1 + {kx - 1} as gx,"
-        f" y1 + {ky - 1} as gy)"
-        for ky in range(4) for kx in range(4))
+        f"struct({ky * n + kx} as k, x0 + {kx + o} as gx,"
+        f" y0 + {ky + o} as gy)"
+        for ky in range(n) for kx in range(n))
     nb = (
         queries
-        .withColumn("x1", F.expr("cast(floor(qx - 0.5e0) as bigint)"))
-        .withColumn("y1", F.expr("cast(floor(qy - 0.5e0) as bigint)"))
-        .filter(f"x1 - 1 >= 0 and x1 + 2 < {raster_px}"
-                f" and y1 - 1 >= 0 and y1 + 2 < {raster_px}")
+        .selectExpr("qid", "cast(floor(qx - 0.5e0) as bigint) as x0",
+                    "cast(floor(qy - 0.5e0) as bigint) as y0")
+        .filter(inside)
         .selectExpr("qid", f"explode(array({taps})) as nb")
         .selectExpr("qid", "nb.k as k", "nb.gx as gx", "nb.gy as gy")
-        .withColumn("tx", F.expr(f"gx div {t}"))
-        .withColumn("ty", F.expr(f"gy div {t}"))
     )
-    chunks = (
-        nb.groupBy("tx", "ty")
-        .agg(F.collect_list(F.struct("qid", "k", "gx", "gy")).alias("px"))
-        .join(tiles.select("tx", "ty", "data"), ["tx", "ty"])
+    wsum = (
+        gather_pixels(nb, tiles, raster_px, ["qid", "k"])
+        .groupBy("qid").pivot("k", list(range(n * n))).sum("value")
+        .withColumnsRenamed({str(k): f"v{k}" for k in range(n * n)})
+        .join(queries.selectExpr(
+            "qid", "qx - 0.5e0 - cast(floor(qx - 0.5e0) as bigint) as fx",
+            "qy - 0.5e0 - cast(floor(qy - 0.5e0) as bigint) as fy"), "qid")
     )
-
-    def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for raw, px, tx, ty in zip(pdf["data"], pdf["px"],
-                                       pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
-                p = pd.DataFrame(list(px))
-                ly = p["gy"].to_numpy(np.int64) - int(ty) * t
-                lx = p["gx"].to_numpy(np.int64) - int(tx) * t
-                yield pd.DataFrame({
-                    "qid": p["qid"].astype("int64"),
-                    "k": p["k"].astype("int64"),
-                    "value": buf[ly, lx].astype(np.int64),
-                })
-
-    vals = chunks.mapInPandas(gather, "qid long, k long, value long")
-    pivoted = (
-        vals.groupBy("qid").pivot("k", list(range(16))).sum("value")
-    )
-    for ky in range(4):
-        for kx in range(4):
-            pivoted = pivoted.withColumnRenamed(
-                str(ky * 4 + kx), f"v{ky}{kx}")
-    wsum = pivoted.join(queries.selectExpr(
-        "qid", "qx - 0.5e0 - cast(floor(qx - 0.5e0) as bigint) as fx",
-        "qy - 0.5e0 - cast(floor(qy - 0.5e0) as bigint) as fy"), "qid")
-    v = [[f"v{ky}{kx}" for kx in range(4)] for ky in range(4)]
+    v = [[f"v{ky * n + kx}" for kx in range(n)] for ky in range(n)]
     return wsum.selectExpr(
-        "qid", _cubic_sum_sql(v, "fx", "fy", kernel) + " as value")
+        "qid", INTERP_KERNELS[kernel][1](v, "fx", "fy") + " as value")
 
 
-def cubic_dem_oracle_sql(queries_sql: str, raster_px: int,
-                         kernel: str = "cubic") -> str:
-    """Oracle: closed-form DEM at the 16 taps, identical weight/sum
-    expression text (``kernel``: cubic | bspline)."""
-    def elev(x: str, y: str) -> str:
-        return ("(" + DEM_ELEV_SQL.replace("gx", f"({x})")
-                .replace("gy", f"({y})") + ")")
-
-    v = [[elev(f"x1 + {kx - 1}", f"y1 + {ky - 1}") for kx in range(4)]
-         for ky in range(4)]
-    return f"""
-with q as ({queries_sql}),
-n as (
-  select qid,
-         cast(floor(qx - 0.5e0) as bigint) as x1,
-         cast(floor(qy - 0.5e0) as bigint) as y1,
-         qx - 0.5e0 - cast(floor(qx - 0.5e0) as bigint) as fx,
-         qy - 0.5e0 - cast(floor(qy - 0.5e0) as bigint) as fy
-  from q
-  where cast(floor(qx - 0.5e0) as bigint) - 1 >= 0
-    and cast(floor(qx - 0.5e0) as bigint) + 2 < {raster_px}
-    and cast(floor(qy - 0.5e0) as bigint) - 1 >= 0
-    and cast(floor(qy - 0.5e0) as bigint) + 2 < {raster_px}
-)
-select qid, {_cubic_sum_sql(v, "fx", "fy", kernel)} as value
-from n
-"""
-
-
-def bilinear_dem_oracle_sql(queries_sql: str, raster_px: int) -> str:
-    """Oracle: evaluate the synthetic DEM closed form at the 4 neighbors
-    and apply the textually-identical 4-term weighted sum."""
-    def elev(x: str, y: str) -> str:
-        return DEM_ELEV_SQL.replace("gx", f"({x})").replace("gy", f"({y})")
-
+def interp_dem_oracle_sql(queries_sql: str, raster_px: int,
+                          kernel: str) -> str:
+    """Oracle of sample_interp over the synthetic DEM: the closed form
+    evaluated at the n×n taps, identical window predicate and
+    weight/sum expression text."""
+    n, inside, o = _tap_window(kernel, raster_px)
+    v = [[dem_elev_sql(f"x0 + {kx + o}", f"y0 + {ky + o}")
+          for kx in range(n)] for ky in range(n)]
     return f"""
 with q as ({queries_sql}),
 n as (
@@ -722,17 +708,10 @@ n as (
          qx - 0.5e0 - cast(floor(qx - 0.5e0) as bigint) as fx,
          qy - 0.5e0 - cast(floor(qy - 0.5e0) as bigint) as fy
   from q
-  where cast(floor(qx - 0.5e0) as bigint) >= 0
-    and cast(floor(qx - 0.5e0) as bigint) + 1 < {raster_px}
-    and cast(floor(qy - 0.5e0) as bigint) >= 0
-    and cast(floor(qy - 0.5e0) as bigint) + 1 < {raster_px}
 )
-select qid,
-       ({elev('x0', 'y0')}) * (1e0 - fx) * (1e0 - fy)
-     + ({elev('x0 + 1', 'y0')}) * fx * (1e0 - fy)
-     + ({elev('x0', 'y0 + 1')}) * (1e0 - fx) * fy
-     + ({elev('x0 + 1', 'y0 + 1')}) * fx * fy as value
+select qid, {INTERP_KERNELS[kernel][1](v, "fx", "fy")} as value
 from n
+where {inside}
 """
 
 
@@ -901,10 +880,7 @@ def halo_tri_tpi_roughness(tiles: DataFrame, raster_px: int) -> DataFrame:
 def tri_tpi_roughness_oracle_sql(raster_px: int) -> str:
     """Oracle: the 9 closed-form DEM elevations per interior pixel with
     the identical integer kernels."""
-    def e(x: str, y: str) -> str:
-        return ("(" + DEM_ELEV_SQL.replace("gx", f"({x})")
-                .replace("gy", f"({y})") + ")")
-
+    e = dem_elev_sql
     nbs = [e(f"gx{sx:+d}", f"gy{sy:+d}")
            for sy in (-1, 0, 1) for sx in (-1, 0, 1)
            if not (sx == 0 and sy == 0)]
@@ -1026,6 +1002,11 @@ def synth_dem_tiles(spark, raster_px: int = 256) -> DataFrame:
 
 
 DEM_ELEV_SQL = "((gx * gx * 5 + gy * gy * 3 + gx * gy) % 211)"
+
+
+def dem_elev_sql(x: str, y: str) -> str:
+    """DEM_ELEV_SQL at the pixel (x, y) — SQL expressions of gx, gy."""
+    return DEM_ELEV_SQL.replace("gx", f"({x})").replace("gy", f"({y})")
 
 OVERLAY_VAL_SQL = "((gx * 7 + gy * gy * 11 + 13) % 199)"
 
@@ -1590,31 +1571,33 @@ def warp_pixel_sql(dst_gt: list[float], src_gt: list[float],
     gcore/gdal_misc.cpp:3297 GDALApplyGeoTransform) with the inverted
     src geotransform (:3371 GDALInvGeoTransform) and nearest rounding
     (floor — GDALRasterIO nearest convention)."""
-    wx = f"({_lit(dst_gt[0])} + ({di} + 0.5) * {_lit(dst_gt[1])})"
-    wy = f"({_lit(dst_gt[3])} + ({dj} + 0.5) * {_lit(dst_gt[5])})"
-    sgx = (f"cast(floor(({wx} - {_lit(src_gt[0])}) / {_lit(src_gt[1])})"
-           f" as bigint)")
-    sgy = (f"cast(floor(({wy} - {_lit(src_gt[3])}) / {_lit(src_gt[5])})"
-           f" as bigint)")
-    return sgx, sgy
+    qx, qy = warp_fractional_sql(dst_gt, src_gt, di, dj)
+    return f"cast(floor({qx}) as bigint)", f"cast(floor({qy}) as bigint)"
 
 
-def dst_grid_parts(dst_px: int, px_per_task: int = 65536) -> int:
-    """Partition count for a dst_px² warp destination grid: ~64k pixel
-    rows per task of affine arithmetic (the same-CRS warps; the
-    cross-CRS warp uses 8k because each row carries an unrolled
-    inverse-projection chain), floor 8 for parallelism on small test
-    grids, cap 2048 so a continent-scale grid doesn't explode the task
-    count — the scale knob VERDICT r3 flagged as hardcoded."""
-    return max(8, min(2048, (dst_px * dst_px + px_per_task - 1)
-                      // px_per_task))
+def dst_grid(spark, dst_px: int, px_per_task: int = 65536) -> DataFrame:
+    """The (di, dj) pixel grid of a dst_px² warp destination: ~64k pixel
+    rows per task of affine arithmetic (the cross-CRS warp passes 8k
+    because each row carries an unrolled inverse-projection chain),
+    floor 8 tasks for parallelism on small test grids, cap 2048 so a
+    continent-scale grid doesn't explode the task count."""
+    n_parts = max(8, min(2048, (dst_px * dst_px + px_per_task - 1)
+                         // px_per_task))
+    return spark.range(dst_px * dst_px, numPartitions=n_parts).selectExpr(
+        f"id % {dst_px} as di", f"cast(id / {dst_px} as bigint) as dj")
+
+
+def dst_grid_sql(dst_px: int) -> str:
+    """DuckDB twin of dst_grid: the (di, dj) relation."""
+    return (f"(select a.range as di, b.range as dj"
+            f" from range(0, {dst_px}) a cross join range(0, {dst_px}) b)")
 
 
 def warp_fractional_sql(dst_gt: list[float], src_gt: list[float],
                         di: str = "di", dj: str = "dj") -> tuple[str, str]:
     """Continuous dst pixel (di, dj) → fractional source pixel coords
-    (no rounding — the bilinear warp kernel input,
-    alg/gdalwarpkernel.cpp GWKBilinear path)."""
+    (no rounding — the tap-kernel input, alg/gdalwarpkernel.cpp
+    GWKBilinear path)."""
     wx = f"({_lit(dst_gt[0])} + ({di} + 0.5) * {_lit(dst_gt[1])})"
     wy = f"({_lit(dst_gt[3])} + ({dj} + 0.5) * {_lit(dst_gt[5])})"
     qx = f"(({wx} - {_lit(src_gt[0])}) / {_lit(src_gt[1])})"
@@ -1622,120 +1605,43 @@ def warp_fractional_sql(dst_gt: list[float], src_gt: list[float],
     return qx, qy
 
 
-def warp_bilinear(tiles: DataFrame, src_gt: list[float], raster_px: int,
-                  dst_gt: list[float], dst_px: int) -> DataFrame:
-    """Bilinear warp: dst pixel grid → fractional src pixel coords
-    (Catalyst arithmetic) → 4-neighbor weighted gather through the
-    per-tile chunk path (sample_bilinear). Dst pixels whose 2×2 window
-    leaves the source are dropped (the kernel's edge-skip)."""
-    spark = tiles.sparkSession
+def warp_queries_sql(dst_gt: list[float], src_gt: list[float],
+                     dst_px: int) -> str:
+    """DuckDB twin of warp_interp's query grid: (qid, qx, qy) per dst
+    pixel, for interp_dem_oracle_sql."""
     qx_e, qy_e = warp_fractional_sql(dst_gt, src_gt)
-    queries = (
-        spark.range(dst_px * dst_px,
-                    numPartitions=dst_grid_parts(dst_px))
-        .selectExpr(f"id % {dst_px} as di",
-                    f"cast(id / {dst_px} as bigint) as dj")
-        .selectExpr(f"dj * {dst_px} + di as qid",
-                    f"{qx_e} as qx", f"{qy_e} as qy")
-    )
-    return sample_bilinear(tiles, queries, raster_px)
+    return (f"select dj * {dst_px} + di as qid, {qx_e} as qx, {qy_e} as qy"
+            f" from {dst_grid_sql(dst_px)} g")
 
 
-def warp_bilinear_oracle_sql(dst_gt: list[float], src_gt: list[float],
-                             dst_px: int, raster_px: int) -> str:
-    """Oracle: identical dst→src arithmetic over a DuckDB range grid,
-    bilinear closed-form DEM evaluation."""
+def warp_interp(tiles: DataFrame, src_gt: list[float], raster_px: int,
+                dst_gt: list[float], dst_px: int, kernel: str) -> DataFrame:
+    """gdalwarp -r bilinear / cubic / cubicspline / lanczos: the dst pixel
+    grid → fractional src pixel coords (Catalyst arithmetic) →
+    sample_interp with that tap kernel. Output (qid = dj·dst_px + di,
+    value); dst pixels whose tap window leaves the source are dropped
+    (the kernel's edge-skip)."""
     qx_e, qy_e = warp_fractional_sql(dst_gt, src_gt)
-    queries_sql = f"""
-select dj * {dst_px} + di as qid, {qx_e} as qx, {qy_e} as qy
-from (select a.range as di, b.range as dj
-      from range(0, {dst_px}) a cross join range(0, {dst_px}) b) g
-"""
-    return bilinear_dem_oracle_sql(queries_sql, raster_px)
+    queries = dst_grid(tiles.sparkSession, dst_px).selectExpr(
+        f"dj * {dst_px} + di as qid", f"{qx_e} as qx", f"{qy_e} as qy")
+    return sample_interp(tiles, queries, raster_px, kernel)
 
 
-def warp_cubic(tiles: DataFrame, src_gt: list[float], raster_px: int,
-               dst_gt: list[float], dst_px: int) -> DataFrame:
-    """Cubic warp (gdalwarp -r cubic, GWKCubic kernel
-    alg/gdalwarpkernel.cpp:101-178): dst pixel grid → fractional src
-    coords (Catalyst arithmetic) → 4×4 convolution gather through the
-    per-tile chunk path (sample_cubic). Dst pixels whose 4×4 window
-    leaves the source are dropped (the kernel's edge-skip)."""
-    spark = tiles.sparkSession
-    qx_e, qy_e = warp_fractional_sql(dst_gt, src_gt)
-    queries = (
-        spark.range(dst_px * dst_px,
-                    numPartitions=dst_grid_parts(dst_px))
-        .selectExpr(f"id % {dst_px} as di",
-                    f"cast(id / {dst_px} as bigint) as dj")
-        .selectExpr(f"dj * {dst_px} + di as qid",
-                    f"{qx_e} as qx", f"{qy_e} as qy")
-    )
-    return sample_cubic(tiles, queries, raster_px)
+def _area_partials(tiles: DataFrame, src_gt: list[float],
+                   dst_gt: list[float], dst_px: int, part: str,
+                   src_nodata: int | None = None) -> DataFrame:
+    """The src→dst assignment of every area resampler (gdalwarp -r
+    average/sum/rms/mode/min/max/med/q1/q3, GWKAverageOrMode): each SRC
+    pixel center is assigned to the dst pixel containing it, and
+    ``src_nodata`` masks source pixels (gdalwarp -srcnodata, the
+    pabSuccess path). Canonical partial+final shape: a per-tile numpy
+    kernel emits integer partials — one pass over each tile buffer, no
+    pixel rows ever shuffled — and one keyed reduction combines them. At
+    100 TB the shuffle carries only dst-pixel partials (≤ dst_px² rows
+    per tile).
 
-
-def warp_cubic_oracle_sql(dst_gt: list[float], src_gt: list[float],
-                          dst_px: int, raster_px: int) -> str:
-    """Oracle: identical dst→src arithmetic over a DuckDB range grid,
-    cubic closed-form DEM evaluation."""
-    qx_e, qy_e = warp_fractional_sql(dst_gt, src_gt)
-    queries_sql = f"""
-select dj * {dst_px} + di as qid, {qx_e} as qx, {qy_e} as qy
-from (select a.range as di, b.range as dj
-      from range(0, {dst_px}) a cross join range(0, {dst_px}) b) g
-"""
-    return cubic_dem_oracle_sql(queries_sql, raster_px)
-
-
-def warp_cubicspline(tiles: DataFrame, src_gt: list[float],
-                     raster_px: int, dst_gt: list[float],
-                     dst_px: int) -> DataFrame:
-    """Cubic B-spline warp (gdalwarp -r cubicspline, GWKBSpline kernel
-    alg/gdalwarpkernel.cpp): same 4x4 chunk-gather plan as warp_cubic,
-    smoothing B3 weight polynomial instead of Catmull-Rom."""
-    spark = tiles.sparkSession
-    qx_e, qy_e = warp_fractional_sql(dst_gt, src_gt)
-    queries = (
-        spark.range(dst_px * dst_px,
-                    numPartitions=dst_grid_parts(dst_px))
-        .selectExpr(f"id % {dst_px} as di",
-                    f"cast(id / {dst_px} as bigint) as dj")
-        .selectExpr(f"dj * {dst_px} + di as qid",
-                    f"{qx_e} as qx", f"{qy_e} as qy")
-    )
-    return sample_cubic(tiles, queries, raster_px, kernel="bspline")
-
-
-def warp_cubicspline_oracle_sql(dst_gt: list[float], src_gt: list[float],
-                                dst_px: int, raster_px: int) -> str:
-    """Oracle: identical dst->src arithmetic, B-spline weight text."""
-    qx_e, qy_e = warp_fractional_sql(dst_gt, src_gt)
-    queries_sql = f"""
-select dj * {dst_px} + di as qid, {qx_e} as qx, {qy_e} as qy
-from (select a.range as di, b.range as dj
-      from range(0, {dst_px}) a cross join range(0, {dst_px}) b) g
-"""
-    return cubic_dem_oracle_sql(queries_sql, raster_px, kernel="bspline")
-
-
-def warp_average(tiles: DataFrame, src_gt: list[float], raster_px: int,
-                 dst_gt: list[float], dst_px: int,
-                 src_nodata: int | None = None,
-                 stat: str = "mean") -> DataFrame:
-    """Average-resampled warp onto a coarser grid (gdalwarp -r average,
-    GWKAverageOrMode): each SRC pixel center is assigned to the dst
-    pixel containing it; per dst pixel the mean of its source pixels.
-    ``src_nodata`` masks source pixels (gdalwarp -srcnodata,
-    GWKAverageOrMode's pabSuccess path): masked pixels contribute
-    nothing, and a dst pixel whose every contributor is nodata emits no
-    row (≡ dstnodata in the sparse representation).
-
-    Execution is the canonical partial+final shape: a per-tile numpy
-    kernel emits integer (dst, sum, count) partials — one pass over each
-    tile buffer, no pixel rows ever shuffled — and a single keyed
-    reduction combines them; the mean is derived by a shared final
-    expression. At 100 TB the shuffle carries only dst-pixel partials
-    (≤ dst_px² rows per tile), not pixels."""
+    ``part``: 'sum' → (di, dj, s = Σv, c); 'sumsq' → (di, dj, s = Σv², c);
+    'count' → (di, dj, v, c), one row per distinct value per dst pixel."""
     t = TILE_PX
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1757,175 +1663,71 @@ def warp_average(tiles: DataFrame, src_gt: list[float], raster_px: int,
                     continue
                 key = dj[keep] * dst_px + di[keep]
                 vals = buf[keep].astype(np.int64)
-                uniq, inv = np.unique(key, return_inverse=True)
-                sums = np.bincount(inv, weights=vals).astype(np.int64)
-                cnts = np.bincount(inv).astype(np.int64)
-                yield pd.DataFrame({
-                    "di": uniq % dst_px, "dj": uniq // dst_px,
-                    "s": sums, "c": cnts,
-                })
+                if part == "count":
+                    uniq, cnts = np.unique(np.stack([key, vals], axis=1),
+                                           axis=0, return_counts=True)
+                    key, cols = uniq[:, 0], {"v": uniq[:, 1]}
+                else:
+                    key, inv, cnts = np.unique(key, return_inverse=True,
+                                               return_counts=True)
+                    # int64 scatter-add, not float bincount weights:
+                    # float64 mantissas silently truncate sums past 2^53
+                    # (sums of squares once values exceed ~2^26), which
+                    # int64 pixels can reach
+                    s = np.zeros(len(key), dtype=np.int64)
+                    np.add.at(s, inv, vals * vals if part == "sumsq"
+                              else vals)
+                    cols = {"s": s}
+                yield pd.DataFrame({"di": key % dst_px, "dj": key // dst_px,
+                                    **cols, "c": cnts.astype(np.int64)})
 
-    # stat: "mean" = gdalwarp -r average; "sum" = gdalwarp -r sum
-    # (GDAL >= 3.1, GWKSumPreserving's center-assignment simplification
-    # shared with the average path — coverage weights are 1 per
-    # contributing pixel in this tiling model, documented)
-    final = ("cast(s as double) / c as value" if stat == "mean"
-             else "cast(s as double) as value")
-    p = tiles.mapInPandas(partials, "di long, dj long, s long, c long")
-    return (p.groupBy("di", "dj")
-            .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
-            .selectExpr("di", "dj", "c as n_src", final))
-
-
-def warp_rms(tiles: DataFrame, src_gt: list[float], raster_px: int,
-             dst_gt: list[float], dst_px: int) -> DataFrame:
-    """RMS-resampled warp (gdalwarp -r rms): per dst pixel
-    sqrt(mean(v²)) of the src pixels whose centers fall in it — the
-    same partial+final shape as warp_average with sum-of-squares
-    partials."""
-    t = TILE_PX
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for raw, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
-                gy, gx = np.mgrid[0:t, 0:t]
-                gx = gx + int(tx) * t
-                gy = gy + int(ty) * t
-                wx = src_gt[0] + (gx + 0.5) * src_gt[1]
-                wy = src_gt[3] + (gy + 0.5) * src_gt[5]
-                di = np.floor((wx - dst_gt[0]) / dst_gt[1]).astype(np.int64)
-                dj = np.floor((wy - dst_gt[3]) / dst_gt[5]).astype(np.int64)
-                keep = ((di >= 0) & (di < dst_px)
-                        & (dj >= 0) & (dj < dst_px))
-                if not keep.any():
-                    continue
-                key = dj[keep] * dst_px + di[keep]
-                vals = buf[keep].astype(np.int64)
-                uniq, inv = np.unique(key, return_inverse=True)
-                # int64 scatter-add, not float bincount weights: float64
-                # mantissas silently truncate sum-of-squares once values
-                # exceed ~2^26, which int64 pixels can
-                ssq = np.zeros(len(uniq), dtype=np.int64)
-                np.add.at(ssq, inv, vals * vals)
-                cnts = np.bincount(inv).astype(np.int64)
-                yield pd.DataFrame({
-                    "di": uniq % dst_px, "dj": uniq // dst_px,
-                    "ss": ssq, "c": cnts,
-                })
-
-    p = tiles.mapInPandas(partials, "di long, dj long, ss long, c long")
-    return (p.groupBy("di", "dj")
-            .agg(F.sum("ss").alias("ss"), F.sum("c").alias("c"))
-            .selectExpr("di", "dj", "c as n_src",
-                        "sqrt(cast(ss as double) / c) as value"))
+    if part == "count":
+        return (tiles.mapInPandas(partials, "di long, dj long, v long, c long")
+                .groupBy("di", "dj", "v").agg(F.sum("c").alias("c")))
+    return (tiles.mapInPandas(partials, "di long, dj long, s long, c long")
+            .groupBy("di", "dj")
+            .agg(F.sum("s").alias("s"), F.sum("c").alias("c")))
 
 
-def warp_rms_oracle_sql(dst_gt: list[float], src_gt: list[float],
-                        dst_px: int, raster_px: int) -> str:
-    """Oracle: enumerate src pixels, identical dst assignment and
-    sqrt-of-mean-of-squares expression."""
-    wx = f"({_lit(src_gt[0])} + (gx + 0.5) * {_lit(src_gt[1])})"
-    wy = f"({_lit(src_gt[3])} + (gy + 0.5) * {_lit(src_gt[5])})"
-    di = (f"cast(floor(({wx} - {_lit(dst_gt[0])}) / {_lit(dst_gt[1])})"
-          f" as bigint)")
-    dj = (f"cast(floor(({wy} - {_lit(dst_gt[3])}) / {_lit(dst_gt[5])})"
-          f" as bigint)")
-    return f"""
-with s as (
-  select a.range as gx, b.range as gy
-  from range(0, {raster_px}) a cross join range(0, {raster_px}) b
-),
-m as (
-  select {di} as di, {dj} as dj, {DEM_ELEV_SQL} as v from s
-)
-select di, dj, cast(count(*) as bigint) as n_src,
-       sqrt(cast(sum(cast(v as bigint) * cast(v as bigint)) as double)
-            / count(*)) as value
-from m
-where di >= 0 and di < {dst_px} and dj >= 0 and dj < {dst_px}
-group by 1, 2
-"""
+# warp_average's per-dst-pixel final expression over the (s, c) partials
+_AREA_FINAL = {
+    "mean": "cast(s as double) / c",          # gdalwarp -r average
+    "sum": "cast(s as double)",               # gdalwarp -r sum
+    "rms": "sqrt(cast(s as double) / c)",     # gdalwarp -r rms
+}
+
+
+def warp_average(tiles: DataFrame, src_gt: list[float], raster_px: int,
+                 dst_gt: list[float], dst_px: int,
+                 src_nodata: int | None = None,
+                 stat: str = "mean") -> DataFrame:
+    """Area-resampled warp onto a coarser grid (gdalwarp -r average,
+    GWKAverageOrMode): per dst pixel the ``stat`` of the src pixels whose
+    centers fall in it — 'mean'; 'sum' (gdalwarp -r sum, GDAL >= 3.1,
+    GWKSumPreserving's center-assignment simplification: coverage
+    weights are 1 per contributing pixel in this tiling model); 'rms'
+    (gdalwarp -r rms, sqrt(mean(v²))). A dst pixel whose every
+    contributor is ``src_nodata`` emits no row (≡ dstnodata in the
+    sparse representation). Output (di, dj, n_src, value)."""
+    return _area_partials(
+        tiles, src_gt, dst_gt, dst_px, "sumsq" if stat == "rms" else "sum",
+        src_nodata).selectExpr("di", "dj", "c as n_src",
+                               f"{_AREA_FINAL[stat]} as value")
 
 
 def warp_mode(tiles: DataFrame, src_gt: list[float], raster_px: int,
               dst_gt: list[float], dst_px: int) -> DataFrame:
     """Mode-resampled warp (gdalwarp -r mode, GWKAverageOrMode
-    alg/gdalwarpkernel.cpp): each src pixel center is assigned to the
-    dst pixel containing it; per dst pixel the most frequent value,
-    ties broken by the SMALLEST value (deterministic — the reference's
-    tie order is scan order, unstable under parallel chunking).
-
-    Same partial+final shape as warp_average, with (dst, value) count
-    partials: the shuffle carries one row per distinct value per dst
-    pixel per tile, never pixel rows."""
-    t = TILE_PX
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for raw, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
-                gy, gx = np.mgrid[0:t, 0:t]
-                gx = gx + int(tx) * t
-                gy = gy + int(ty) * t
-                wx = src_gt[0] + (gx + 0.5) * src_gt[1]
-                wy = src_gt[3] + (gy + 0.5) * src_gt[5]
-                di = np.floor((wx - dst_gt[0]) / dst_gt[1]).astype(np.int64)
-                dj = np.floor((wy - dst_gt[3]) / dst_gt[5]).astype(np.int64)
-                keep = ((di >= 0) & (di < dst_px)
-                        & (dj >= 0) & (dj < dst_px))
-                if not keep.any():
-                    continue
-                key = dj[keep] * dst_px + di[keep]
-                vals = buf[keep].astype(np.int64)
-                pair = np.stack([key, vals], axis=1)
-                uniq, cnts = np.unique(pair, axis=0, return_counts=True)
-                yield pd.DataFrame({
-                    "di": uniq[:, 0] % dst_px, "dj": uniq[:, 0] // dst_px,
-                    "v": uniq[:, 1], "c": cnts.astype(np.int64),
-                })
-
-    p = tiles.mapInPandas(partials, "di long, dj long, v long, c long")
-    counts = p.groupBy("di", "dj", "v").agg(F.sum("c").alias("c"))
+    alg/gdalwarpkernel.cpp): per dst pixel the most frequent value of
+    the src pixels whose centers fall in it, ties broken by the SMALLEST
+    value (deterministic — the reference's tie order is scan order,
+    unstable under parallel chunking). The shuffle carries one row per
+    distinct value per dst pixel per tile, never pixel rows."""
+    counts = _area_partials(tiles, src_gt, dst_gt, dst_px, "count")
     w = Window.partitionBy("di", "dj").orderBy(F.desc("c"), F.asc("v"))
     return (counts.withColumn("_rn", F.row_number().over(w))
             .filter("_rn = 1")
             .selectExpr("di", "dj", "v as value", "c as n_mode"))
-
-
-def _warp_value_counts(tiles: DataFrame, src_gt: list[float],
-                       dst_gt: list[float], dst_px: int) -> DataFrame:
-    """Shared (di, dj, v, c) value-count partials (the warp_mode shape):
-    one pass per tile buffer, shuffle carries one row per distinct value
-    per dst pixel per tile — never pixel rows."""
-    t = TILE_PX
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for raw, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
-                gy, gx = np.mgrid[0:t, 0:t]
-                gx = gx + int(tx) * t
-                gy = gy + int(ty) * t
-                wx = src_gt[0] + (gx + 0.5) * src_gt[1]
-                wy = src_gt[3] + (gy + 0.5) * src_gt[5]
-                di = np.floor((wx - dst_gt[0]) / dst_gt[1]).astype(np.int64)
-                dj = np.floor((wy - dst_gt[3]) / dst_gt[5]).astype(np.int64)
-                keep = ((di >= 0) & (di < dst_px)
-                        & (dj >= 0) & (dj < dst_px))
-                if not keep.any():
-                    continue
-                key = dj[keep] * dst_px + di[keep]
-                vals = buf[keep].astype(np.int64)
-                pair = np.stack([key, vals], axis=1)
-                uniq, cnts = np.unique(pair, axis=0, return_counts=True)
-                yield pd.DataFrame({
-                    "di": uniq[:, 0] % dst_px, "dj": uniq[:, 0] // dst_px,
-                    "v": uniq[:, 1], "c": cnts.astype(np.int64),
-                })
-
-    return tiles.mapInPandas(partials, "di long, dj long, v long, c long") \
-        .groupBy("di", "dj", "v").agg(F.sum("c").alias("c"))
 
 
 def warp_minmax(tiles: DataFrame, src_gt: list[float], raster_px: int,
@@ -1935,8 +1737,7 @@ def warp_minmax(tiles: DataFrame, src_gt: list[float], raster_px: int,
     Imax alg/gdalwarpkernel.cpp:6595-6613): per dst pixel the extreme of
     the src pixels whose centers fall in it — exact integer partials,
     one keyed reduction."""
-    _ = raster_px
-    counts = _warp_value_counts(tiles, src_gt, dst_gt, dst_px)
+    counts = _area_partials(tiles, src_gt, dst_gt, dst_px, "count")
     agg = F.min("v") if op == "min" else F.max("v")
     return (counts.groupBy("di", "dj")
             .agg(agg.alias("value"), F.sum("c").alias("n_src"))
@@ -1953,8 +1754,7 @@ def warp_quantile(tiles: DataFrame, src_gt: list[float], raster_px: int,
     histogram: a running count locates the value whose cumulative
     interval covers the index — the shuffle stays one row per distinct
     value per dst pixel, never a per-pixel value list."""
-    _ = raster_px
-    counts = _warp_value_counts(tiles, src_gt, dst_gt, dst_px)
+    counts = _area_partials(tiles, src_gt, dst_gt, dst_px, "count")
     w_n = Window.partitionBy("di", "dj")
     w_cum = (Window.partitionBy("di", "dj").orderBy("v")
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -1968,43 +1768,75 @@ def warp_quantile(tiles: DataFrame, src_gt: list[float], raster_px: int,
             .selectExpr("di", "dj", "n as n_src", "v as value"))
 
 
-def warp_order_stats_oracle_sql(dst_gt: list[float], src_gt: list[float],
-                                dst_px: int, raster_px: int,
-                                methods: list[tuple[str, str]]) -> str:
-    """Oracle for the min/max/med/q1/q3 suite: identical dst assignment,
-    identical ceil(q·n − 1) index rule over the per-pixel value counts.
-    ``methods`` is a list of (label, op) with op ∈ {'min','max'} or a
-    quantile literal like '0.5'."""
+def _src_pixels_cte(dst_gt: list[float], src_gt: list[float], dst_px: int,
+                    raster_px: int, src_nodata: int | None = None) -> str:
+    """DuckDB twin of _area_partials' assignment over the closed-form
+    DEM: CTE ``m(di, dj, v)``, one row per unmasked src pixel whose
+    center falls inside the dst grid."""
     wx = f"({_lit(src_gt[0])} + (gx + 0.5) * {_lit(src_gt[1])})"
     wy = f"({_lit(src_gt[3])} + (gy + 0.5) * {_lit(src_gt[5])})"
-    di = (f"cast(floor(({wx} - {_lit(dst_gt[0])}) / {_lit(dst_gt[1])})"
-          f" as bigint)")
-    dj = (f"cast(floor(({wy} - {_lit(dst_gt[3])}) / {_lit(dst_gt[5])})"
-          f" as bigint)")
-    base = f"""
+    di = f"cast(floor(({wx} - {_lit(dst_gt[0])}) / {_lit(dst_gt[1])}) as bigint)"
+    dj = f"cast(floor(({wy} - {_lit(dst_gt[3])}) / {_lit(dst_gt[5])}) as bigint)"
+    nd = "" if src_nodata is None else f" and v <> {int(src_nodata)}"
+    return f"""
 with s as (
   select a.range as gx, b.range as gy
   from range(0, {raster_px}) a cross join range(0, {raster_px}) b
 ),
 m as (
-  select {di} as di, {dj} as dj, {DEM_ELEV_SQL} as v from s
-),
-c as (
-  select di, dj, v, count(*) as c from m
-  where di >= 0 and di < {dst_px} and dj >= 0 and dj < {dst_px}
-  group by 1, 2, 3
-),
+  select * from (select {di} as di, {dj} as dj, {DEM_ELEV_SQL} as v from s)
+  where di >= 0 and di < {dst_px} and dj >= 0 and dj < {dst_px}{nd}
+)"""
+
+
+def warp_average_oracle_sql(dst_gt: list[float], src_gt: list[float],
+                            dst_px: int, raster_px: int,
+                            src_nodata: int | None = None,
+                            stat: str = "mean") -> str:
+    """Oracle of warp_average: identical dst assignment, the ``stat``
+    expression over integer sums."""
+    value = {
+        "mean": "cast(sum(v) as double) / count(*)",
+        "sum": "cast(sum(v) as double)",
+        "rms": "sqrt(cast(sum(cast(v as bigint) * cast(v as bigint))"
+               " as double) / count(*))",
+    }[stat]
+    return f"""{_src_pixels_cte(dst_gt, src_gt, dst_px, raster_px, src_nodata)}
+select di, dj, cast(count(*) as bigint) as n_src, {value} as value
+from m group by di, dj
+"""
+
+
+def warp_order_stats_oracle_sql(dst_gt: list[float], src_gt: list[float],
+                                dst_px: int, raster_px: int,
+                                methods: list[tuple[str, str]]) -> str:
+    """Oracle of the value-count resamplers (warp_mode / warp_minmax /
+    warp_quantile): identical dst assignment; mode via count-desc/
+    value-asc row_number, quantiles via the identical ceil(q·n − 1)
+    index rule over the per-pixel value counts. ``methods`` is a list
+    of (label, op) with op ∈ {'mode', 'min', 'max'} or a quantile
+    literal like '0.5'; output (method, di, dj, n_src, value), n_src the
+    winning count for mode."""
+    base = f"""{_src_pixels_cte(dst_gt, src_gt, dst_px, raster_px)},
+c as (select di, dj, v, count(*) as c from m group by 1, 2, 3),
 r as (
   select di, dj, v, c,
          sum(c) over (partition by di, dj) as n,
          sum(c) over (partition by di, dj order by v
-                      rows unbounded preceding) as cum
+                      rows unbounded preceding) as cum,
+         row_number() over (partition by di, dj
+                            order by c desc, v asc) as rn
   from c
 )
 """
     parts = []
     for label, op in methods:
-        if op in ("min", "max"):
+        if op == "mode":
+            parts.append(
+                f"select '{label}' as method, di, dj,"
+                f" cast(c as bigint) as n_src, v as value from r"
+                f" where rn = 1")
+        elif op in ("min", "max"):
             parts.append(
                 f"select '{label}' as method, di, dj,"
                 f" cast(sum(c) as bigint) as n_src, {op}(v) as value"
@@ -2018,100 +1850,6 @@ r as (
     return base + "\nunion all\n".join(parts)
 
 
-def warp_mode_oracle_sql(dst_gt: list[float], src_gt: list[float],
-                         dst_px: int, raster_px: int) -> str:
-    """Oracle: enumerate src pixels, identical dst assignment, mode via
-    count-desc/value-asc row_number."""
-    wx = f"({_lit(src_gt[0])} + (gx + 0.5) * {_lit(src_gt[1])})"
-    wy = f"({_lit(src_gt[3])} + (gy + 0.5) * {_lit(src_gt[5])})"
-    di = (f"cast(floor(({wx} - {_lit(dst_gt[0])}) / {_lit(dst_gt[1])})"
-          f" as bigint)")
-    dj = (f"cast(floor(({wy} - {_lit(dst_gt[3])}) / {_lit(dst_gt[5])})"
-          f" as bigint)")
-    return f"""
-with s as (
-  select a.range as gx, b.range as gy
-  from range(0, {raster_px}) a cross join range(0, {raster_px}) b
-),
-m as (
-  select {di} as di, {dj} as dj, {DEM_ELEV_SQL} as v from s
-),
-c as (
-  select di, dj, v, count(*) as c from m
-  where di >= 0 and di < {dst_px} and dj >= 0 and dj < {dst_px}
-  group by 1, 2, 3
-),
-r as (
-  select di, dj, v, c,
-         row_number() over (partition by di, dj
-                            order by c desc, v asc) as rn
-  from c
-)
-select di, dj, v as value, c as n_mode from r where rn = 1
-"""
-
-
-def warp_average_oracle_sql(dst_gt: list[float], src_gt: list[float],
-                            dst_px: int, raster_px: int,
-                            src_nodata: int | None = None,
-                            stat: str = "mean") -> str:
-    """Oracle: enumerate src pixels, closed-form DEM values, identical
-    dst assignment arithmetic and mean expression (optionally with the
-    -srcnodata mask)."""
-    wx = f"({_lit(src_gt[0])} + (gx + 0.5) * {_lit(src_gt[1])})"
-    wy = f"({_lit(src_gt[3])} + (gy + 0.5) * {_lit(src_gt[5])})"
-    di = f"cast(floor(({wx} - {_lit(dst_gt[0])}) / {_lit(dst_gt[1])}) as bigint)"
-    dj = f"cast(floor(({wy} - {_lit(dst_gt[3])}) / {_lit(dst_gt[5])}) as bigint)"
-    nd = "" if src_nodata is None else f" and v <> {int(src_nodata)}"
-    return f"""
-with s as (
-  select a.range as gx, b.range as gy
-  from range(0, {raster_px}) a cross join range(0, {raster_px}) b
-),
-m as (
-  select {di} as di, {dj} as dj, {DEM_ELEV_SQL} as v from s
-)
-select di, dj, cast(count(*) as bigint) as n_src,
-       {"cast(sum(v) as double) / count(*)" if stat == "mean"
-        else "cast(sum(v) as double)"} as value
-from m
-where di >= 0 and di < {dst_px} and dj >= 0 and dj < {dst_px}{nd}
-group by di, dj
-"""
-
-
-def _nearest_gather(dst: "DataFrame", tiles: "DataFrame") -> "DataFrame":
-    """Shared nearest-warp tail: dst rows (di, dj, sgx, sgy, tx, ty) →
-    per-tile chunk gather. Dst pixels group per source tile BEFORE the
-    payload join, so each tile buffer crosses the shuffle and the Arrow
-    bridge exactly once (GDALWarpOperation's chunk queue,
-    alg/gdalwarpoperation.cpp:1099 — a chunk, not a pixel, is the unit
-    of work) instead of being replicated per dst pixel."""
-    t = TILE_PX
-    chunks = (
-        dst.groupBy("tx", "ty")
-        .agg(F.collect_list(F.struct("di", "dj", "sgx", "sgy")).alias("px"))
-        .join(tiles.select("tx", "ty", "data"), ["tx", "ty"])
-    )
-
-    def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for raw, px, tx, ty in zip(pdf["data"], pdf["px"],
-                                       pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
-                p = pd.DataFrame(list(px))
-                ly = p["sgy"].to_numpy(np.int64) - int(ty) * t
-                lx = p["sgx"].to_numpy(np.int64) - int(tx) * t
-                yield pd.DataFrame({
-                    "di": p["di"].astype("int64"),
-                    "dj": p["dj"].astype("int64"),
-                    "value": buf[ly, lx].astype(np.int64),
-                })
-
-    return chunks.mapInPandas(gather, "di long, dj long, value long")
-
-
-
 def warp_nearest(tiles: DataFrame, src_gt: list[float], raster_px: int,
                  dst_gt: list[float], dst_px: int) -> DataFrame:
     """Nearest-neighbour warp of a tiled raster onto a new affine grid
@@ -2120,27 +1858,20 @@ def warp_nearest(tiles: DataFrame, src_gt: list[float], raster_px: int,
     coordinate path is Catalyst arithmetic; only the buffer gather is a
     numpy kernel). Out-of-source-bounds dst pixels are dropped
     (nodata-skip semantics). Output: (di, dj, value)."""
-    spark = tiles.sparkSession
-    t = TILE_PX
     sgx_e, sgy_e = warp_pixel_sql(dst_gt, src_gt)
-    dst = (
-        spark.range(dst_px * dst_px,
-                    numPartitions=dst_grid_parts(dst_px))
-        .select((F.col("id") % dst_px).alias("di"),
-                (F.col("id") / dst_px).cast("long").alias("dj"))
-        .withColumn("sgx", F.expr(sgx_e))
-        .withColumn("sgy", F.expr(sgy_e))
-        .filter(f"sgx >= 0 and sgx < {raster_px}"
-                f" and sgy >= 0 and sgy < {raster_px}")
-        .withColumn("tx", F.expr(f"sgx div {t}"))
-        .withColumn("ty", F.expr(f"sgy div {t}"))
-    )
-    # Gather dst pixels per source tile BEFORE joining the tile payload:
-    # one chunk row per tile, so each tile buffer crosses the shuffle and
-    # the Arrow bridge exactly once (GDALWarpOperation's chunk queue,
-    # alg/gdalwarpoperation.cpp:1099 — a chunk, not a pixel, is the unit
-    # of work) instead of being replicated per dst pixel.
-    return _nearest_gather(dst, tiles)
+    dst = dst_grid(tiles.sparkSession, dst_px).selectExpr(
+        "di", "dj", f"{sgx_e} as gx", f"{sgy_e} as gy")
+    return gather_pixels(dst, tiles, raster_px, ["di", "dj"])
+
+
+def gather_dem_oracle_sql(rel: str, raster_px: int,
+                          elev_sql: str = DEM_ELEV_SQL) -> str:
+    """Oracle twin of a nearest warp's gather_pixels over a closed-form
+    raster: ``rel(di, dj, gx, gy)`` → (di, dj, value), out-of-raster
+    source pixels dropped."""
+    return (f"select di, dj, {elev_sql} as value from {rel}"
+            f" where gx >= 0 and gx < {raster_px}"
+            f" and gy >= 0 and gy < {raster_px}")
 
 
 # ---------------------------------------------------------------------------
@@ -2166,21 +1897,10 @@ def warp_nearest_crs(tiles: DataFrame, src_gt: list[float], raster_px: int,
     from gdal_spark.crs import (apply_sql_stages, epsg_fwd_stages,
                                 epsg_inv_stages)
 
-    spark = tiles.sparkSession
-    t = TILE_PX
-    # partition the dst grid by size: ~8k pixel rows per task of unrolled
-    # projection arithmetic, floor 8 for parallelism on small grids, cap
-    # 2048 so huge grids don't explode the task count.
-    n_parts = max(8, min(2048, (dst_px * dst_px + 8191) // 8192))
     dx_e = f"({_lit(dst_gt[0])} + (di + 0.5) * {_lit(dst_gt[1])})"
     dy_e = f"({_lit(dst_gt[3])} + (dj + 0.5) * {_lit(dst_gt[5])})"
-    dst = (
-        spark.range(dst_px * dst_px, numPartitions=n_parts)
-        .select((F.col("id") % dst_px).alias("di"),
-                (F.col("id") / dst_px).cast("long").alias("dj"))
-        .withColumn("dwx", F.expr(dx_e))
-        .withColumn("dwy", F.expr(dy_e))
-    )
+    dst = dst_grid(tiles.sparkSession, dst_px, px_per_task=8192) \
+        .selectExpr("di", "dj", f"{dx_e} as dwx", f"{dy_e} as dwy")
     dst = apply_sql_stages(dst, epsg_inv_stages(dst_epsg, "dwx", "dwy",
                                                 "lon", "lat",
                                                 ok_col="inv_ok"))
@@ -2198,20 +1918,13 @@ def warp_nearest_crs(tiles: DataFrame, src_gt: list[float], raster_px: int,
     # (di, dj, coords) — O(dst_px²) small rows — so the checkpointed
     # partitions are a fraction of the warp output itself.
     dst = dst.localCheckpoint(eager=False)
-    dst = (
-        dst.filter("inv_ok and ok")
-        .withColumn("sgx", F.expr(
-            f"cast(floor((wx - {_lit(src_gt[0])}) / {_lit(src_gt[1])})"
-            f" as bigint)"))
-        .withColumn("sgy", F.expr(
-            f"cast(floor((wy - {_lit(src_gt[3])}) / {_lit(src_gt[5])})"
-            f" as bigint)"))
-        .filter(f"sgx >= 0 and sgx < {raster_px}"
-                f" and sgy >= 0 and sgy < {raster_px}")
-        .withColumn("tx", F.expr(f"sgx div {t}"))
-        .withColumn("ty", F.expr(f"sgy div {t}"))
-    )
-    return _nearest_gather(dst, tiles)
+    dst = dst.filter("inv_ok and ok").selectExpr(
+        "di", "dj",
+        f"cast(floor((wx - {_lit(src_gt[0])}) / {_lit(src_gt[1])}) as bigint)"
+        f" as gx",
+        f"cast(floor((wy - {_lit(src_gt[3])}) / {_lit(src_gt[5])}) as bigint)"
+        f" as gy")
+    return gather_pixels(dst, tiles, raster_px, ["di", "dj"])
 
 
 def warp_nearest_crs_oracle_sql(src_gt: list[float], raster_px: int,
@@ -2226,8 +1939,7 @@ def warp_nearest_crs_oracle_sql(src_gt: list[float], raster_px: int,
     dy_e = f"({_lit(dst_gt[3])} + (dj + 0.5) * {_lit(dst_gt[5])})"
     base = f"""
 select di, dj, {dx_e} as dwx, {dy_e} as dwy
-from (select a.range as di, b.range as dj
-      from range(0, {dst_px}) a cross join range(0, {dst_px}) b) g
+from {dst_grid_sql(dst_px)} g
 """
     stages = (epsg_inv_stages(dst_epsg, "dwx", "dwy", "lon", "lat",
                               ok_col="inv_ok")
@@ -2248,9 +1960,7 @@ s as (
            as gy
   from q where inv_ok and ok
 )
-select di, dj, {DEM_ELEV_SQL} as value
-from s
-where gx >= 0 and gx < {raster_px} and gy >= 0 and gy < {raster_px}
+{gather_dem_oracle_sql("s", raster_px)}
 """
 
 
@@ -2315,7 +2025,6 @@ def warp_nearest_crs_approx(tiles: DataFrame, src_gt: list[float],
                                 epsg_inv_stages)
 
     spark = tiles.sparkSession
-    t = TILE_PX
     ncell = (dst_px + block - 1) // block
     n_nodes = (ncell + 1) * (ncell + 1)
     n_mids = ncell * ncell
@@ -2392,17 +2101,10 @@ def warp_nearest_crs_approx(tiles: DataFrame, src_gt: list[float],
         "di", "dj",
         f"(wx - {_lit(src_gt[0])}) / {_lit(src_gt[1])} as sxf",
         f"(wy - {_lit(src_gt[3])}) / {_lit(src_gt[5])} as syf")
-    dst = (
-        apx.unionByName(ex)
-        .selectExpr("di", "dj",
-                    "cast(floor(sxf) as bigint) as sgx",
-                    "cast(floor(syf) as bigint) as sgy")
-        .filter(f"sgx >= 0 and sgx < {raster_px}"
-                f" and sgy >= 0 and sgy < {raster_px}")
-        .withColumn("tx", F.expr(f"sgx div {t}"))
-        .withColumn("ty", F.expr(f"sgy div {t}"))
-    )
-    return _nearest_gather(dst, tiles)
+    dst = apx.unionByName(ex).selectExpr(
+        "di", "dj", "cast(floor(sxf) as bigint) as gx",
+        "cast(floor(syf) as bigint) as gy")
+    return gather_pixels(dst, tiles, raster_px, ["di", "dj"])
 
 
 def warp_nearest_crs_approx_oracle_sql(src_gt: list[float],
@@ -2501,160 +2203,8 @@ s as (
          cast(floor(syf) as bigint) as gy
   from (select * from apx union all select * from expx) un
 )
-select di, dj, {DEM_ELEV_SQL} as value
-from s
-where gx >= 0 and gx < {raster_px} and gy >= 0 and gy < {raster_px}
+{gather_dem_oracle_sql("s", raster_px)}
 """
-
-
-# ---------------------------------------------------------------------------
-# Lanczos warp kernel (gdalwarp -r lanczos, GWKLanczosSinc radius 3 —
-# alg/gdalwarpkernel.cpp GWKLanczosSinc / GWKResample): 6×6 windowed-
-# sinc taps, weights normalized by their sum (the truncated-window
-# renormalization GDAL applies). Same chunk-gather plan as cubic.
-# ---------------------------------------------------------------------------
-
-LANCZOS_R = 3
-
-
-def _lanczos_weight_sql(d: str) -> str:
-    """Windowed sinc weight, shared text: 3·sin(πd)·sin(πd/3)/(π²d²),
-    1 at d=0, 0 at |d| ≥ 3 (the radius). The d≈0 case guards the 0/0."""
-    return (f"case when abs({d}) < 1e-12 then 1.0"
-            f" when abs({d}) >= {float(LANCZOS_R)!r} then 0.0"
-            f" else {float(LANCZOS_R)!r} * sin(pi() * ({d}))"
-            f" * sin(pi() * ({d}) / {float(LANCZOS_R)!r})"
-            f" / (pi() * pi() * ({d}) * ({d})) end")
-
-
-def _lanczos_sum_sql(v: "list[list[str]]", fx: str, fy: str) -> str:
-    """Separable 6×6 normalized lanczos sum, term order pinned:
-    Σ_ky Σ_kx v·wx·wy / (Σwx · Σwy)."""
-    wx = [_lanczos_weight_sql(f"({fx}) - {float(kx - 2)!r}")
-          for kx in range(6)]
-    wy = [_lanczos_weight_sql(f"({fy}) - {float(ky - 2)!r}")
-          for ky in range(6)]
-    rows = [
-        "(" + " + ".join(f"{v[ky][kx]} * ({wx[kx]})" for kx in range(6))
-        + ")"
-        for ky in range(6)
-    ]
-    num = " + ".join(f"{rows[ky]} * ({wy[ky]})" for ky in range(6))
-    sx = "(" + " + ".join(f"({w})" for w in wx) + ")"
-    sy = "(" + " + ".join(f"({w})" for w in wy) + ")"
-    return f"({num}) / ({sx} * {sy})"
-
-
-def sample_lanczos(tiles: DataFrame, queries: DataFrame,
-                   raster_px: int) -> DataFrame:
-    """Lanczos InterpolateAtPoint: 36-tap gather through the per-tile
-    chunk path; weights and the normalized separable sum are Catalyst
-    arithmetic shared textually with the oracle. Queries whose 6×6
-    window leaves the raster are dropped (the kernel's edge-skip)."""
-    t = TILE_PX
-    taps = ", ".join(
-        f"struct({ky * 6 + kx} as k, x1 + {kx - 2} as gx,"
-        f" y1 + {ky - 2} as gy)"
-        for ky in range(6) for kx in range(6))
-    nb = (
-        queries
-        .withColumn("x1", F.expr("cast(floor(qx - 0.5e0) as bigint)"))
-        .withColumn("y1", F.expr("cast(floor(qy - 0.5e0) as bigint)"))
-        .filter(f"x1 - 2 >= 0 and x1 + 3 < {raster_px}"
-                f" and y1 - 2 >= 0 and y1 + 3 < {raster_px}")
-        .selectExpr("qid", f"explode(array({taps})) as nb")
-        .selectExpr("qid", "nb.k as k", "nb.gx as gx", "nb.gy as gy")
-        .withColumn("tx", F.expr(f"gx div {t}"))
-        .withColumn("ty", F.expr(f"gy div {t}"))
-    )
-    chunks = (
-        nb.groupBy("tx", "ty")
-        .agg(F.collect_list(F.struct("qid", "k", "gx", "gy")).alias("px"))
-        .join(tiles.select("tx", "ty", "data"), ["tx", "ty"])
-    )
-
-    def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for raw, px, tx, ty in zip(pdf["data"], pdf["px"],
-                                       pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
-                p = pd.DataFrame(list(px))
-                ly = p["gy"].to_numpy(np.int64) - int(ty) * t
-                lx = p["gx"].to_numpy(np.int64) - int(tx) * t
-                yield pd.DataFrame({
-                    "qid": p["qid"].astype("int64"),
-                    "k": p["k"].astype("int64"),
-                    "value": buf[ly, lx].astype(np.int64),
-                })
-
-    vals = chunks.mapInPandas(gather, "qid long, k long, value long")
-    pivoted = vals.groupBy("qid").pivot("k", list(range(36))).sum("value")
-    for ky in range(6):
-        for kx in range(6):
-            pivoted = pivoted.withColumnRenamed(
-                str(ky * 6 + kx), f"lv{ky}{kx}")
-    wsum = pivoted.join(queries.selectExpr(
-        "qid", "qx - 0.5e0 - cast(floor(qx - 0.5e0) as bigint) as fx",
-        "qy - 0.5e0 - cast(floor(qy - 0.5e0) as bigint) as fy"), "qid")
-    v = [[f"lv{ky}{kx}" for kx in range(6)] for ky in range(6)]
-    return wsum.selectExpr(
-        "qid", _lanczos_sum_sql(v, "fx", "fy") + " as value")
-
-
-def warp_lanczos(tiles: DataFrame, src_gt: list[float], raster_px: int,
-                 dst_gt: list[float], dst_px: int) -> DataFrame:
-    """Lanczos warp (gdalwarp -r lanczos): dst pixel grid → fractional
-    src coords (Catalyst arithmetic) → 6×6 windowed-sinc gather."""
-    spark = tiles.sparkSession
-    qx_e, qy_e = warp_fractional_sql(dst_gt, src_gt)
-    queries = (
-        spark.range(dst_px * dst_px,
-                    numPartitions=dst_grid_parts(dst_px))
-        .selectExpr(f"id % {dst_px} as di",
-                    f"cast(id / {dst_px} as bigint) as dj")
-        .selectExpr(f"dj * {dst_px} + di as qid",
-                    f"{qx_e} as qx", f"{qy_e} as qy")
-    )
-    return sample_lanczos(tiles, queries, raster_px)
-
-
-def lanczos_dem_oracle_sql(queries_sql: str, raster_px: int) -> str:
-    """Oracle: closed-form DEM at the 36 taps, identical weight/sum
-    expression text."""
-    def elev(x: str, y: str) -> str:
-        return ("(" + DEM_ELEV_SQL.replace("gx", f"({x})")
-                .replace("gy", f"({y})") + ")")
-
-    v = [[elev(f"x1 + {kx - 2}", f"y1 + {ky - 2}") for kx in range(6)]
-         for ky in range(6)]
-    return f"""
-with q as ({queries_sql}),
-n as (
-  select qid,
-         cast(floor(qx - 0.5e0) as bigint) as x1,
-         cast(floor(qy - 0.5e0) as bigint) as y1,
-         qx - 0.5e0 - cast(floor(qx - 0.5e0) as bigint) as fx,
-         qy - 0.5e0 - cast(floor(qy - 0.5e0) as bigint) as fy
-  from q
-  where cast(floor(qx - 0.5e0) as bigint) - 2 >= 0
-    and cast(floor(qx - 0.5e0) as bigint) + 3 < {raster_px}
-    and cast(floor(qy - 0.5e0) as bigint) - 2 >= 0
-    and cast(floor(qy - 0.5e0) as bigint) + 3 < {raster_px}
-)
-select qid, {_lanczos_sum_sql(v, "fx", "fy")} as value
-from n
-"""
-
-
-def warp_lanczos_oracle_sql(dst_gt: list[float], src_gt: list[float],
-                            dst_px: int, raster_px: int) -> str:
-    qx_e, qy_e = warp_fractional_sql(dst_gt, src_gt)
-    queries_sql = f"""
-select dj * {dst_px} + di as qid, {qx_e} as qx, {qy_e} as qy
-from (select a.range as di, b.range as dj
-      from range(0, {dst_px}) a cross join range(0, {dst_px}) b) g
-"""
-    return lanczos_dem_oracle_sql(queries_sql, raster_px)
 
 
 # ---------------------------------------------------------------------------

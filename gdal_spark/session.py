@@ -33,11 +33,9 @@ def get_spark(
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
-        master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+        master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 32)))
-        )
+        shuffle_partitions = max(cpus, 32)
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -42,7 +42,6 @@ class STRtree:
         cx = (boxes[:, 0] + boxes[:, 2]) * 0.5
         cy = (boxes[:, 1] + boxes[:, 3]) * 0.5
         by_x = np.argsort(cx, kind="stable")
-        slice_rows = n_slices * NODE_CAP * max(1, math.ceil(n_nodes / n_slices))
         slice_size = math.ceil(n / n_slices)
         order = np.empty(n, dtype=np.int64)
         pos = 0
@@ -51,7 +50,6 @@ class STRtree:
             chunk = chunk[np.argsort(cy[chunk], kind="stable")]
             order[pos:pos + len(chunk)] = chunk
             pos += len(chunk)
-        del slice_rows
         self.order = order  # leaf slot -> original item index
 
         # build levels bottom-up: levels[0] = leaf boxes in packed order

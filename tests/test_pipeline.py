@@ -210,3 +210,47 @@ def test_pages_per_zone_large_doc_ids(spark, tmp_path):
     finally:
         con.close()
     assert got == exp and len(got) > 0
+
+
+def test_point_coordinates_are_double(spark, ddb):
+    """lon/lat are DOUBLE on both engines, so every downstream
+    coordinate expression runs in the same float type (a DECIMAL lon
+    made Spark run decimal arithmetic where DuckDB runs double)."""
+    from gdal_spark.pages import points_from_documents, points_oracle_sql
+
+    types = dict(points_from_documents(spark, SF_SMOKE).dtypes)
+    assert (types["lon"], types["lat"]) == ("double", "double")
+    rel = ddb.sql(points_oracle_sql())
+    duck = dict(zip(rel.columns, (str(t) for t in rel.types)))
+    assert (duck["lon"], duck["lat"]) == ("DOUBLE", "DOUBLE")
+
+
+def test_synth_stages_doc_id_overflow_raises(spark, tmp_path):
+    """doc_id · 2654435761 leaves int64 once doc_id > ~3.47e9: both
+    engines raise instead of returning rows — not even the valid
+    doc_id 7 next to doc_id 4e9 comes back."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gdal_spark.pages import points_from_documents, points_oracle_sql
+
+    pq.write_table(pa.table({
+        "doc_id": pa.array([7, 4_000_000_000], pa.int64()),
+        "text": ["a", "b"], "lang": ["en", "en"]}),
+        tmp_path / "documents.parquet")
+    rows = None
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW") as err:
+        rows = points_from_documents(spark, str(tmp_path),
+                                     geotagged_only=False).collect()
+    assert "2654435761" in str(err.value) and rows is None
+    con = duckdb.connect()
+    try:
+        con.execute("create view documents as select * from read_parquet("
+                    f"'{tmp_path}/documents.parquet')")
+        with pytest.raises(duckdb.OutOfRangeException):
+            rows = con.execute(
+                points_oracle_sql(geotagged_only=False)).fetchall()
+    finally:
+        con.close()
+    assert rows is None

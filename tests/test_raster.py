@@ -214,7 +214,7 @@ def test_bilinear_interpolation_exact_cases(spark):
     import numpy as np
     import pandas as pd
 
-    from gdal_spark.raster import sample_bilinear, synth_dem_tiles
+    from gdal_spark.raster import sample_interp, synth_dem_tiles
 
     def elev(gx, gy):
         return (gx * gx * 5 + gy * gy * 3 + gx * gy) % 211
@@ -226,7 +226,7 @@ def test_bilinear_interpolation_exact_cases(spark):
         "qy": [12.5, 30.0, 99.5],
     }))
     got = {r["qid"]: r["value"]
-           for r in sample_bilinear(tiles, q, 256).collect()}
+           for r in sample_interp(tiles, q, 256, "bilinear").collect()}
     # qid 1: pixel center (10, 12)
     assert got[1] == elev(10, 12)
     # qid 2: midpoint of pixels (19..20, 29..30) → mean of 4
@@ -357,7 +357,7 @@ def test_cubic_interpolation_properties(spark):
     import numpy as np
     import pandas as pd
 
-    from gdal_spark.raster import sample_cubic, synth_dem_tiles
+    from gdal_spark.raster import sample_interp, synth_dem_tiles
 
     def elev(gx, gy):
         return (gx * gx * 5 + gy * gy * 3 + gx * gy) % 211
@@ -369,7 +369,7 @@ def test_cubic_interpolation_properties(spark):
         "qy": [60.5, 90.75],
     }))
     got = {r["qid"]: r["value"]
-           for r in sample_cubic(tiles, q, 256).collect()}
+           for r in sample_interp(tiles, q, 256, "cubic").collect()}
     assert abs(got[1] - elev(50, 60)) < 1e-9
 
     def w(f):
@@ -678,7 +678,7 @@ def test_warp_mode_and_rms_direct(spark):
 
     from gdal_spark.queries.raster import (_AVG_DST_GT, _AVG_DST_PX,
                                            _SRC_GT)
-    from gdal_spark.raster import synth_dem_tiles, warp_mode, warp_rms
+    from gdal_spark.raster import synth_dem_tiles, warp_average, warp_mode
 
     px = 128
     tiles = synth_dem_tiles(spark, px)
@@ -705,12 +705,152 @@ def test_warp_mode_and_rms_direct(spark):
              warp_mode(tiles, _SRC_GT, px, _AVG_DST_GT,
                        _AVG_DST_PX).collect()}
     got_r = {(r["di"], r["dj"]): r["value"] for r in
-             warp_rms(tiles, _SRC_GT, px, _AVG_DST_GT,
-                      _AVG_DST_PX).collect()}
+             warp_average(tiles, _SRC_GT, px, _AVG_DST_GT,
+                          _AVG_DST_PX, stat="rms").collect()}
     assert set(got_m) == set(want_mode) and len(got_m) > 100
     for k in want_mode:
         assert got_m[k] == want_mode[k], k
         assert abs(got_r[k] - want_rms[k]) < 1e-9, k
+
+
+def _tiles_from_array(spark, arr: np.ndarray):
+    """Tile rows cut from a numpy raster indexed [gy, gx]."""
+    from gdal_spark.raster import TILE_DTYPE, TILE_SCHEMA, tile_geotransform
+
+    t = TILE_PX
+    rows = [(0, tx, ty, 1, tile_geotransform(tx, ty, 0),
+             np.ascontiguousarray(arr[ty * t:(ty + 1) * t,
+                                      tx * t:(tx + 1) * t],
+                                  dtype=TILE_DTYPE).tobytes())
+            for ty in range(arr.shape[0] // t)
+            for tx in range(arr.shape[1] // t)]
+    return spark.createDataFrame(rows, TILE_SCHEMA)
+
+
+def _dst_groups(vals: np.ndarray, src_gt, dst_gt, dst_px) -> dict:
+    """{(di, dj): [src values]} — each src pixel center assigned to the
+    dst pixel containing it (GWKAverageOrMode), straight numpy."""
+    n = vals.shape[0]
+    gy, gx = np.mgrid[0:n, 0:n]
+    wx = src_gt[0] + (gx + 0.5) * src_gt[1]
+    wy = src_gt[3] + (gy + 0.5) * src_gt[5]
+    di = np.floor((wx - dst_gt[0]) / dst_gt[1]).astype(int)
+    dj = np.floor((wy - dst_gt[3]) / dst_gt[5]).astype(int)
+    keep = (di >= 0) & (di < dst_px) & (dj >= 0) & (dj < dst_px)
+    groups: dict = {}
+    for d_i, d_j, v in zip(di[keep], dj[keep], vals[keep]):
+        groups.setdefault((int(d_i), int(d_j)), []).append(int(v))
+    return groups
+
+
+def test_warp_minmax_and_quantile_direct(spark):
+    """Min/max warps are the extremes of each dst pixel's src values;
+    med/q1/q3 pick the ascending value at index ceil(q·n − 1)
+    (GWKAOM_Quant, 0-based, no interpolation — e.g. n = 4, q = 0.5 →
+    index 1, the lower median). Expected values come from a numpy
+    aggregation of the closed-form DEM, not from the oracle SQL."""
+    import math
+
+    from gdal_spark.queries.raster import (_AVG_DST_GT, _AVG_DST_PX,
+                                           _SRC_GT)
+    from gdal_spark.raster import warp_minmax, warp_quantile
+
+    px = 128
+    tiles = synth_dem_tiles(spark, px)
+    gy, gx = np.mgrid[0:px, 0:px]
+    elev = (gx * gx * 5 + gy * gy * 3 + gx * gy) % 211
+    groups = _dst_groups(elev, _SRC_GT, _AVG_DST_GT, _AVG_DST_PX)
+    assert len(groups) > 100
+    assert {len(vs) for vs in groups.values()} >= {12, 16}
+
+    def run(df):
+        return {(r["di"], r["dj"]): (r["n_src"], r["value"])
+                for r in df.collect()}
+
+    for op, fn in (("min", min), ("max", max)):
+        got = run(warp_minmax(tiles, _SRC_GT, px, _AVG_DST_GT,
+                              _AVG_DST_PX, op=op))
+        assert got == {k: (len(vs), fn(vs)) for k, vs in groups.items()}
+    for q in (0.5, 0.25, 0.75):
+        got = run(warp_quantile(tiles, _SRC_GT, px, _AVG_DST_GT,
+                                _AVG_DST_PX, quant=q))
+        want = {k: (len(vs), sorted(vs)[math.ceil(q * len(vs) - 1)])
+                for k, vs in groups.items()}
+        assert got == want, q
+
+
+def test_warp_average_src_nodata_direct(spark):
+    """-srcnodata: masked src pixels add nothing to a dst pixel's count
+    or mean, and a dst pixel whose every contributor is nodata emits no
+    row. The raster is the DEM with a 16×16 nodata block, which covers
+    whole dst pixels (3.7 src px each)."""
+    from gdal_spark.queries.raster import (_AVG_DST_GT, _AVG_DST_PX,
+                                           _SRC_GT)
+    from gdal_spark.raster import warp_average
+
+    px, nodata = 128, 42
+    gy, gx = np.mgrid[0:px, 0:px]
+    arr = (gx * gx * 5 + gy * gy * 3 + gx * gy) % 211
+    arr[40:56, 60:76] = nodata
+    groups = _dst_groups(arr, _SRC_GT, _AVG_DST_GT, _AVG_DST_PX)
+    want = {}
+    for k, vs in groups.items():
+        kept = [v for v in vs if v != nodata]
+        if kept:
+            want[k] = (len(kept), sum(kept) / len(kept))
+    assert 0 < len(want) < len(groups)  # some dst pixels are all nodata
+
+    got = {(r["di"], r["dj"]): (r["n_src"], r["value"]) for r in
+           warp_average(_tiles_from_array(spark, arr), _SRC_GT, px,
+                        _AVG_DST_GT, _AVG_DST_PX,
+                        src_nodata=nodata).collect()}
+    assert set(got) == set(want)
+    for k, (n, mean) in want.items():
+        assert got[k][0] == n, k
+        assert abs(got[k][1] - mean) < 1e-12, k
+
+
+# tap window per axis of each gdalwarp -r kernel (GWKBilinear 2,
+# GWKCubic / GWKBSpline 4, GWKLanczosSinc radius 3 → 6)
+_TAPS = {"bilinear": 2, "cubic": 4, "cubicspline": 4, "lanczos": 6}
+
+
+@pytest.mark.parametrize("kernel", sorted(_TAPS))
+def test_warp_interp_on_known_rasters(spark, kernel):
+    """Every tap kernel returns a constant raster's value (weights sum to
+    one); bilinear, cubic and cubicspline reproduce a linear ramp
+    v = gx exactly, i.e. value = qx − 0.5 (pixel centers at integer +
+    0.5). The dst grid overhangs the 128-px source on both sides, so the
+    edge-skip is checked too: exactly the dst pixels whose n×n window
+    fits the source come back."""
+    from gdal_spark.raster import warp_interp
+
+    px, dst_px = 128, 180
+    src_gt = [0.0, 1.0, 0.0, 0.0, 0.0, -1.0]   # world = pixel coords
+    dst_gt = [-1.3, 0.77, 0.0, 2.9, 0.0, -0.77]
+    dj, di = np.mgrid[0:dst_px, 0:dst_px]
+    qx = ((dst_gt[0] + (di + 0.5) * dst_gt[1]) - src_gt[0]) / src_gt[1]
+    qy = ((dst_gt[3] + (dj + 0.5) * dst_gt[5]) - src_gt[3]) / src_gt[5]
+    r = _TAPS[kernel] // 2
+    x0, y0 = np.floor(qx - 0.5), np.floor(qy - 0.5)
+    inside = ((x0 - r + 1 >= 0) & (x0 + r < px)
+              & (y0 - r + 1 >= 0) & (y0 + r < px))
+    qids = (dj * dst_px + di)[inside]
+    assert 0 < len(qids) < dst_px * dst_px
+
+    gx = np.mgrid[0:px, 0:px][1]
+    const = _tiles_from_array(spark, np.full((px, px), 7))
+    got = warp_interp(const, src_gt, px, dst_gt, dst_px, kernel).toPandas()
+    assert sorted(got["qid"]) == sorted(qids.tolist())
+    assert np.abs(got["value"] - 7.0).max() < 1e-9
+    if kernel == "lanczos":
+        return  # the windowed sinc does not reproduce a ramp exactly
+    ramp = _tiles_from_array(spark, gx)
+    got = warp_interp(ramp, src_gt, px, dst_gt, dst_px, kernel) \
+        .toPandas().set_index("qid")["value"]
+    want = (qx - 0.5).ravel()[got.index.to_numpy()]
+    assert len(got) == len(qids)
+    assert np.abs(got.to_numpy() - want).max() < 1e-9
 
 
 def test_lanczos_interpolating_and_normalized(spark):
@@ -723,7 +863,7 @@ def test_lanczos_interpolating_and_normalized(spark):
     import pandas as pd
 
     from gdal_spark.queries.raster import DEM_PX
-    from gdal_spark.raster import sample_lanczos, synth_dem_tiles
+    from gdal_spark.raster import sample_interp, synth_dem_tiles
 
     tiles = synth_dem_tiles(spark, DEM_PX)
     # pixel-center queries: qx = gx + 0.5
@@ -732,7 +872,7 @@ def test_lanczos_interpolating_and_normalized(spark):
         "qid": range(len(centers)),
         "qx": [x + 0.5 for x, _ in centers],
         "qy": [y + 0.5 for _, y in centers]}))
-    got = sample_lanczos(tiles, q, DEM_PX).toPandas() \
+    got = sample_interp(tiles, q, DEM_PX, "lanczos").toPandas() \
         .set_index("qid").sort_index()
     for qid, (x, y) in enumerate(centers):
         want = float((x * x * 5 + y * y * 3 + x * y) % 211)
@@ -741,7 +881,7 @@ def test_lanczos_interpolating_and_normalized(spark):
     # overshoot slack (windowed sinc has negative lobes)
     q2 = spark.createDataFrame(pd.DataFrame(
         {"qid": [0], "qx": [50.37], "qy": [80.61]}))
-    v = sample_lanczos(tiles, q2, DEM_PX).toPandas()["value"][0]
+    v = sample_interp(tiles, q2, DEM_PX, "lanczos").toPandas()["value"][0]
     gy, gx = np.mgrid[78:84, 47:54]
     w = (gx * gx * 5 + gy * gy * 3 + gx * gy) % 211
     lo, hi = w.min(), w.max()
