@@ -31,17 +31,42 @@ enough to audit a resumed run without re-reading its output.
 Resume = left_anti join of the input's keys against the manifest — a
 parquet table, so at 10^12 scale (16M tile keys) the skip test is a
 broadcast or shuffle join, never a driver loop.
+
+Commit = three Spark jobs of its own on a fresh root (the input's
+shuffles add theirs): the data write, then the lineage aggregate over
+the re-read data files streamed straight into the manifest write (a
+shuffle plus the write); the key and row counts come from an
+Observation on that write. A resume adds one, the manifest broadcast of
+the anti-join.
+
+Read path: every parquet table Spark wrote here is read with the schema
+Spark stored in its footer (`_read_spark_parquet`), so no reader runs a
+schema-inference job. `read_committed(s)` scans data/snap=1…s by path —
+no partition discovery, no `snap` filter and no manifest semi-join. The
+semi-join was redundant: each attempt writes snapshot latest + 1 with
+`overwrite`, and the pointer moves only after its manifest is written, so
+the data directory of every snapshot at or below the pointer holds
+exactly the keys its manifest added.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# the footer key under which Spark's parquet writer stores its row schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+METRICS_SCHEMA = ("keys_written long, rows_written long, wall_sec double,"
+                  " rows_per_sec double, files_written long,"
+                  " bytes_written long, snap int")
 
 
 def _snapshot(root: str, snapshot: int | None = None) -> int:
@@ -57,9 +82,26 @@ def _snapshot(root: str, snapshot: int | None = None) -> int:
     return snap
 
 
+def _parquet_files(path: str) -> list[str]:
+    """The visible parquet files of one Spark-written directory."""
+    return sorted(os.path.join(path, f) for f in os.listdir(path)
+                  if f.endswith(".parquet"))
+
+
+def _read_spark_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """Read directories Spark wrote with the schema Spark stored in the
+    footer of the first one's first file — no schema-inference job."""
+    meta = pq.read_metadata(_parquet_files(paths[0])[0]).metadata
+    schema = StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def _manifest_path(root: str, snap: int) -> str:
+    return os.path.join(root, "snapshots", f"snap-{snap}.parquet")
+
+
 def _manifest(spark: SparkSession, root: str, snap: int) -> DataFrame:
-    return spark.read.parquet(
-        os.path.join(root, "snapshots", f"snap-{snap}.parquet"))
+    return _read_spark_parquet(spark, _manifest_path(root, snap))
 
 
 def committed_keys(spark: SparkSession, root: str, key_col: str,
@@ -80,13 +122,32 @@ def lineage(spark: SparkSession, root: str) -> DataFrame:
 
 def metrics(spark: SparkSession, root: str) -> DataFrame:
     """Per-snapshot run metrics (keys/rows written, wall time,
-    throughput) — one row per commit. Bounded by the latest committed
-    snapshot (mirroring committed_keys): a crash between the metrics
-    write and the pointer flip must not surface a phantom commit."""
+    throughput, parquet files and bytes the commit wrote) — one row per
+    commit. Bounded by the latest committed snapshot (mirroring
+    committed_keys): a crash between the metrics write and the pointer
+    flip must not surface a phantom commit."""
     latest = _snapshot(root)
-    return spark.read.option("basePath", os.path.join(root, "metrics")) \
-        .parquet(os.path.join(root, "metrics")) \
-        .filter(F.col("snap") <= F.lit(latest))
+    base = os.path.join(root, "metrics")
+    return spark.read.schema(METRICS_SCHEMA).option("basePath", base) \
+        .parquet(base).filter(F.col("snap") <= F.lit(latest))
+
+
+def _metrics_parquet(row: dict, n_files: int, n_bytes: int) -> pa.Buffer:
+    """The metrics row as parquet bytes, counting itself in
+    ``files_written`` and ``bytes_written``. Uncompressed, one int64 or
+    double per column: its size does not depend on the values, so the
+    second encoding is final."""
+    size = 0
+    while True:
+        sink = pa.BufferOutputStream()
+        pq.write_table(pa.table({
+            **{k: [v] for k, v in row.items()},
+            "files_written": [n_files + 1],
+            "bytes_written": [n_bytes + size]}), sink, compression="none")
+        buf = sink.getvalue()
+        if buf.size == size:
+            return buf
+        size = buf.size
 
 
 def run_checkpointed(df: DataFrame, root: str, key_col: str,
@@ -114,33 +175,41 @@ def run_checkpointed(df: DataFrame, root: str, key_col: str,
     # uncommitted attempt at this snapshot number left here
     data_path = os.path.join(root, "data", f"snap={snap}")
     pending.sortWithinPartitions(key_col).write.parquet(data_path, "overwrite")
-    written = spark.read.schema(df.schema).parquet(data_path)
-    lin = written.groupBy(key_col).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        # xxhash64(key, other columns...) summed as decimal(38,0): order-
-        # independent, and no ANSI long overflow below ~1e19 rows per key
-        F.sum(F.xxhash64(key_col, *(c for c in df.columns if c != key_col))
-              .cast("decimal(38,0)"))
-        .alias("fingerprint")).withColumn("snap", F.lit(snap)).cache()
-    n_keys, n_rows = lin.agg(F.count(F.lit(1)), F.sum("n_rows")).first()
-    if n_keys == 0:
-        lin.unpersist()
-        return {"snapshot": prev, "keys_written": 0, "rows_written": 0}
 
+    # lineage of what was written, aggregated into the manifest write
+    obs = Observation("commit")
+    lin = spark.read.schema(df.schema).parquet(data_path).groupBy(key_col) \
+        .agg(F.count(F.lit(1)).alias("n_rows"),
+             # xxhash64(key, other columns...) summed as decimal(38,0):
+             # order-independent, and no ANSI long overflow below ~1e19
+             # rows per key
+             F.sum(F.xxhash64(key_col,
+                              *(c for c in df.columns if c != key_col))
+                   .cast("decimal(38,0)")).alias("fingerprint")) \
+        .withColumn("snap", F.lit(snap)) \
+        .observe(obs, F.count(F.lit(1)).alias("keys"),
+                 F.sum("n_rows").alias("rows"))
     manifest = lin if done is None else done.unionByName(lin)
-    manifest.coalesce(1).write.parquet(
-        os.path.join(root, "snapshots", f"snap-{snap}.parquet"), "overwrite")
-    lin.unpersist()
+    manifest_path = _manifest_path(root, snap)
+    manifest.coalesce(1).write.parquet(manifest_path, "overwrite")
+    counts = obs.get
+    n_keys, n_rows = counts["keys"], counts["rows"] or 0
+    if n_keys == 0:  # nothing pending: the pointer stays at prev
+        return {"snapshot": prev, "keys_written": 0, "rows_written": 0}
 
     # one metrics row per commit, written by the driver (no Spark job);
     # metrics() bounds by the pointer, so a crash before the flip hides it
+    written = _parquet_files(data_path) + _parquet_files(manifest_path)
     wall = time.monotonic() - t0
+    buf = _metrics_parquet(
+        {"keys_written": n_keys, "rows_written": n_rows, "wall_sec": wall,
+         "rows_per_sec": n_rows / wall},
+        len(written), sum(os.path.getsize(f) for f in written))
     metrics_dir = os.path.join(root, "metrics", f"snap={snap}")
     os.makedirs(metrics_dir, exist_ok=True)
     tmp = os.path.join(metrics_dir, ".part-0.tmp")
-    pq.write_table(pa.table({
-        "keys_written": [n_keys], "rows_written": [n_rows],
-        "wall_sec": [wall], "rows_per_sec": [n_rows / wall]}), tmp)
+    with open(tmp, "wb") as f:
+        f.write(buf)
     os.replace(tmp, os.path.join(metrics_dir, "part-0.parquet"))
 
     # atomic pointer flip — the commit point; until it, prev is the latest
@@ -155,10 +224,10 @@ def read_committed(spark: SparkSession, root: str, key_col: str,
                    snapshot: int | None = None) -> DataFrame:
     """Read back exactly the committed data, with the input's columns.
     ``snapshot`` reads an earlier commit's view — time travel: only
-    data/snap<=s is scanned, semi-joined against manifest s's keys."""
+    data/snap=1…s is scanned. Launches no Spark job before the caller's
+    action (``key_col`` names the key; the scan needs no key filter)."""
     snap = _snapshot(root, snapshot)
-    base = os.path.join(root, "data")
-    data = spark.read.option("basePath", base).parquet(base) \
-        .filter(F.col("snap") <= F.lit(snap)).drop("snap")
-    keys = F.broadcast(committed_keys(spark, root, key_col, snap))
-    return data.join(keys, data[key_col] == keys[key_col], "left_semi")
+    data = [os.path.join(root, "data", f"snap={n}")
+            for n in range(1, max(snap, 1) + 1)]
+    back = _read_spark_parquet(spark, *data)
+    return back if snap else back.limit(0)  # snapshot 0: no row, same columns

@@ -154,6 +154,65 @@ def test_layout_files_track_partitions_not_keys(spark, tmp_path):
     assert read_committed(spark, root, "k", snapshot=0).count() == 0
 
 
+def keyed_range(spark):
+    """1,000 rows over 250 keys in 2 partitions; no shuffle of its own."""
+    return spark.range(0, 1000, 1, 2).select(
+        (F.col("id") * 3).alias("v"), (F.col("id") % 250).alias("k"))
+
+
+def jobs_launched(sc, group, fn):
+    """(fn(), ids of the Spark jobs fn launched)."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_commit_resume_and_read_launch_few_jobs(spark, tmp_path):
+    """A fresh-root commit is three Spark jobs (data write, lineage
+    shuffle, manifest write); a resume adds one, the manifest broadcast
+    of its anti-join; read_committed runs none before the caller's
+    action, and that action is one job."""
+    df = keyed_range(spark)
+    root = str(tmp_path / "ckpt_jobs")
+    sc = spark.sparkContext
+    r1, jobs = jobs_launched(sc, "ckpt-commit", lambda: run_checkpointed(
+        df, root, "k", key_filter="k % 3 = 0"))
+    assert r1["keys_written"] == 84 and len(jobs) <= 3, jobs
+    r2, jobs = jobs_launched(sc, "ckpt-resume",
+                             lambda: run_checkpointed(df, root, "k"))
+    assert r2["keys_written"] == 250 - 84 and len(jobs) <= 4, jobs
+    back, jobs = jobs_launched(sc, "ckpt-read",
+                               lambda: read_committed(spark, root, "k"))
+    assert jobs == []
+    rows, jobs = jobs_launched(sc, "ckpt-read-action", back.collect)
+    assert len(jobs) == 1, jobs
+    assert sorted(rows) == sorted(df.collect())
+
+
+def test_metrics_count_the_parquet_files_a_commit_wrote(spark, tmp_path):
+    """files_written / bytes_written of snapshot n are the parquet files
+    under data/snap=n, snapshots/snap-n.parquet and metrics/snap=n,
+    the metrics file itself included."""
+    df = keyed_range(spark)
+    root = str(tmp_path / "ckpt_bytes")
+    run_checkpointed(df, root, "k", key_filter="k < 100")
+    run_checkpointed(df, root, "k")
+    m = {r["snap"]: r for r in metrics(spark, root).collect()}
+    assert set(m) == {1, 2}
+    for n, row in m.items():
+        files = [os.path.join(d, f)
+                 for sub in (f"data/snap={n}", f"snapshots/snap-{n}.parquet",
+                             f"metrics/snap={n}")
+                 for d, _, fs in os.walk(os.path.join(root, sub))
+                 for f in fs if f.endswith(".parquet")]
+        assert row["files_written"] == len(files) >= 3
+        assert row["bytes_written"] == sum(map(os.path.getsize, files))
+
+
 # Child process for the crash test: commits snapshot 1 (even tile keys),
 # then dies by SIGKILL inside the commit of snapshot 2 at the named point,
 # always before the `_latest` pointer flip.
