@@ -35,9 +35,10 @@ broadcast or shuffle join, never a driver loop.
 Commit = three Spark jobs of its own on a fresh root (the input's
 shuffles add theirs): the data write, then the lineage aggregate over
 the re-read data files streamed straight into the manifest write (a
-shuffle plus the write); the key and row counts come from an
-Observation on that write. A resume adds one, the manifest broadcast of
-the anti-join.
+shuffle plus the write). The row count comes from an Observation on the
+data write and the key count from one on the manifest write; a run with
+no pending row stops after the data write and writes no manifest. A
+resume adds one job, the manifest broadcast of the anti-join.
 
 Read path: every parquet table Spark wrote here is read with the schema
 Spark stored in its footer (`_read_spark_parquet`), so no reader runs a
@@ -46,7 +47,9 @@ no partition discovery, no `snap` filter and no manifest semi-join. The
 semi-join was redundant: each attempt writes snapshot latest + 1 with
 `overwrite`, and the pointer moves only after its manifest is written, so
 the data directory of every snapshot at or below the pointer holds
-exactly the keys its manifest added.
+exactly the keys its manifest added. The one exception is a NULL key:
+it never matches the anti-join, so every snapshot rewrites its rows, and
+the scan drops them as the `==` semi-join did.
 """
 
 from __future__ import annotations
@@ -174,10 +177,15 @@ def run_checkpointed(df: DataFrame, root: str, key_col: str,
     # the one pass over the input; overwrite replaces whatever a crashed,
     # uncommitted attempt at this snapshot number left here
     data_path = os.path.join(root, "data", f"snap={snap}")
-    pending.sortWithinPartitions(key_col).write.parquet(data_path, "overwrite")
+    rows = Observation("rows")
+    pending.observe(rows, F.count(F.lit(1)).alias("n")) \
+        .sortWithinPartitions(key_col).write.parquet(data_path, "overwrite")
+    n_rows = rows.get["n"]
+    if n_rows == 0:  # nothing pending: no manifest, the pointer stays
+        return {"snapshot": prev, "keys_written": 0, "rows_written": 0}
 
     # lineage of what was written, aggregated into the manifest write
-    obs = Observation("commit")
+    keys = Observation("keys")
     lin = spark.read.schema(df.schema).parquet(data_path).groupBy(key_col) \
         .agg(F.count(F.lit(1)).alias("n_rows"),
              # xxhash64(key, other columns...) summed as decimal(38,0):
@@ -187,15 +195,11 @@ def run_checkpointed(df: DataFrame, root: str, key_col: str,
                               *(c for c in df.columns if c != key_col))
                    .cast("decimal(38,0)")).alias("fingerprint")) \
         .withColumn("snap", F.lit(snap)) \
-        .observe(obs, F.count(F.lit(1)).alias("keys"),
-                 F.sum("n_rows").alias("rows"))
+        .observe(keys, F.count(F.lit(1)).alias("n"))
     manifest = lin if done is None else done.unionByName(lin)
     manifest_path = _manifest_path(root, snap)
     manifest.coalesce(1).write.parquet(manifest_path, "overwrite")
-    counts = obs.get
-    n_keys, n_rows = counts["keys"], counts["rows"] or 0
-    if n_keys == 0:  # nothing pending: the pointer stays at prev
-        return {"snapshot": prev, "keys_written": 0, "rows_written": 0}
+    n_keys = keys.get["n"]
 
     # one metrics row per commit, written by the driver (no Spark job);
     # metrics() bounds by the pointer, so a crash before the flip hides it
@@ -224,10 +228,11 @@ def read_committed(spark: SparkSession, root: str, key_col: str,
                    snapshot: int | None = None) -> DataFrame:
     """Read back exactly the committed data, with the input's columns.
     ``snapshot`` reads an earlier commit's view — time travel: only
-    data/snap=1…s is scanned. Launches no Spark job before the caller's
-    action (``key_col`` names the key; the scan needs no key filter)."""
+    data/snap=1…s is scanned, without its NULL-key rows. Launches no
+    Spark job before the caller's action."""
     snap = _snapshot(root, snapshot)
     data = [os.path.join(root, "data", f"snap={n}")
             for n in range(1, max(snap, 1) + 1)]
-    back = _read_spark_parquet(spark, *data)
+    # NULL-key rows are rewritten by every snapshot (see the module doc)
+    back = _read_spark_parquet(spark, *data).filter(F.col(key_col).isNotNull())
     return back if snap else back.limit(0)  # snapshot 0: no row, same columns

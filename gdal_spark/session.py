@@ -8,27 +8,49 @@ sets declarative intent: AQE on, skew-join on, sane shuffle partitioning,
 Arrow batching for the pandas-UDF kernels.
 
 Python workers fork from `gdal_spark.pydaemon` instead of
-`pyspark.daemon`. Before each task PySpark invalidates the import caches,
-and on CPython < 3.13 that re-reads the whole directory of
-`pyspark.zip` once per zip-backed package path the worker has imported
-(130-320 ms per task measured on a 4-core host); the engine's daemon
-re-reads an archive only when it changed. The UDFs already need
-`gdal_spark` importable on the workers (cloudpickle ships them by module
-reference), so the daemon adds no deployment requirement there; a cluster
-that puts `gdal_spark` on the workers only through task-time `--py-files`
-sets `spark.python.daemon.module` back to `pyspark.daemon` via
-``extra_conf``.
+`pyspark.daemon` where that daemon is sure to start (`_worker_daemon`).
+Before each task PySpark invalidates the import caches, and on
+CPython < 3.13 that re-reads the whole directory of `pyspark.zip` once
+per zip-backed package path the worker has imported (130-320 ms per task
+measured on a 4-core host); the engine's daemon re-reads an archive only
+when it changed.
 """
 
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
 # One Arrow batch per UDF call; 65,536 rows/batch mirrors OGR's default
 # Arrow stream batch size (ogr/ogrsf_frmts/generic/ogrlayerarrow.cpp:1947).
 ARROW_BATCH_ROWS = 65536
+
+
+def _worker_daemon(master: str, package_dir: str) -> str:
+    """The module Python workers fork from: `gdal_spark.pydaemon` when its
+    daemon can import the package at ``package_dir``, else the stock
+    `pyspark.daemon`.
+
+    Spark starts the daemon as ``python -m <module>`` before any task
+    runs, so it sees only a worker's start-up path: its working
+    directory, PYTHONPATH and site-packages. That UDFs import
+    `gdal_spark` on the workers proves nothing: they are unpickled per
+    task, after `--py-files` archives were put on sys.path. And a
+    cluster's workers start from paths this process cannot see. Hence the
+    engine's daemon needs a local master (workers start in this working
+    directory with this environment) and a package directory, not an
+    archive, on that start-up path.
+    """
+    if not (master == "local" or master.startswith("local[")):
+        return "pyspark.daemon"
+    home = os.path.dirname(os.path.realpath(package_dir))
+    start = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+             *site.getsitepackages(), site.getusersitepackages()]
+    if os.path.isdir(home) and home in {os.path.realpath(p) for p in start}:
+        return "gdal_spark.pydaemon"
+    return "pyspark.daemon"
 
 
 def get_spark(
@@ -69,8 +91,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         # Fork Python workers from a daemon that stops each task from
-        # re-reading pyspark.zip (see the module docstring).
-        .config("spark.python.daemon.module", "gdal_spark.pydaemon")
+        # re-reading pyspark.zip, where it can start (_worker_daemon).
+        .config("spark.python.daemon.module", _worker_daemon(
+            master, os.path.dirname(os.path.abspath(__file__))))
         # ANSI mode stays at the Spark 4 default (on) so the engine behaves
         # identically under any caller's session. OGR SQL's non-ANSI
         # arithmetic (division by zero → NULL, lossy string casts → NULL,

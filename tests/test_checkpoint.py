@@ -213,6 +213,32 @@ def test_metrics_count_the_parquet_files_a_commit_wrote(spark, tmp_path):
         assert row["bytes_written"] == sum(map(os.path.getsize, files))
 
 
+def test_noop_resume_writes_no_manifest(spark, tmp_path):
+    """A re-run with nothing pending leaves the pointer and writes no
+    manifest for the next snapshot."""
+    df = keyed_range(spark)
+    root = str(tmp_path / "ckpt_noop")
+    run_checkpointed(df, root, "k")
+    assert run_checkpointed(df, root, "k") == {
+        "snapshot": 1, "keys_written": 0, "rows_written": 0}
+    assert os.path.exists(os.path.join(root, "snapshots", "snap-1.parquet"))
+    assert not os.path.exists(
+        os.path.join(root, "snapshots", "snap-2.parquet"))
+
+
+def test_null_key_rows_are_not_read_back(spark, tmp_path):
+    """A NULL key never matches the resume's anti-join, so each snapshot
+    rewrites its rows; the read-back keeps none of them."""
+    df = spark.range(0, 40, 1, 2).select(
+        F.when(F.col("id") % 10 != 0, F.col("id") % 8).alias("k"), "id")
+    root = str(tmp_path / "ckpt_null")
+    run_checkpointed(df, root, "k", key_filter="k < 4 or k is null")
+    run_checkpointed(df, root, "k")
+    got = sorted(tuple(r) for r in read_committed(spark, root, "k").collect())
+    assert got == sorted(tuple(r) for r in
+                         df.filter(F.col("k").isNotNull()).collect())
+
+
 # Child process for the crash test: commits snapshot 1 (even tile keys),
 # then dies by SIGKILL inside the commit of snapshot 2 at the named point,
 # always before the `_latest` pointer flip.

@@ -1,5 +1,6 @@
-"""The worker daemon's zipimporter patch: an unchanged archive is not
-re-read, a rewritten one is read once and its new modules are found."""
+"""The worker daemon: where get_spark chooses it, and its zipimporter
+patch (an unchanged archive is not re-read, a rewritten one is read once
+and its new modules are found)."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gdal_spark import pydaemon
+from gdal_spark.session import _worker_daemon
 
 EAGER = sys.version_info < (3, 13)  # 3.13 defers the re-read itself
 
@@ -41,23 +43,13 @@ def reads(monkeypatch, tmp_path):
 
 
 @pytest.mark.skipif(not EAGER, reason="3.13 zipimport reads lazily")
-def test_stock_invalidate_rereads_per_importer(reads):
-    """The cost being removed: each importer re-reads the archive."""
-    archive, seen = reads
-    top = zipimport.zipimporter(archive)
-    sub = zipimport.zipimporter(os.path.join(archive, "pkg") + os.sep)
-    seen.clear()
-    top.invalidate_caches()
-    sub.invalidate_caches()
-    assert len(seen) == 2
-
-
-@pytest.mark.skipif(not EAGER, reason="3.13 zipimport reads lazily")
 def test_stamped_invalidate_reads_only_a_changed_archive(reads,
                                                          monkeypatch):
     archive, seen = reads
     monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
                         pydaemon.stamped_invalidate())
+    # the stock method would read the archive once per importer, twice
+    # per invalidate_caches() round here
     top = zipimport.zipimporter(archive)
     sub = zipimport.zipimporter(os.path.join(archive, "pkg") + os.sep)
     seen.clear()
@@ -78,6 +70,38 @@ def test_stamped_invalidate_reads_only_a_changed_archive(reads,
 
 def test_import_patches_nothing():
     assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = os.path.join(REPO, "gdal_spark")
+
+
+def test_daemon_follows_the_worker_start_up_path(monkeypatch, tmp_path):
+    """The engine's daemon only where a local worker started in this
+    working directory with this PYTHONPATH can import the package."""
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    monkeypatch.chdir(REPO)  # the package is in the working directory
+    assert _worker_daemon("local[2]", PACKAGE) == "gdal_spark.pydaemon"
+    assert _worker_daemon("local", PACKAGE) == "gdal_spark.pydaemon"
+    assert _worker_daemon("local-cluster[2,1,1024]", PACKAGE) \
+        == "pyspark.daemon"
+    assert _worker_daemon("spark://host:7077", PACKAGE) == "pyspark.daemon"
+    monkeypatch.chdir(tmp_path)  # nowhere on the start-up path
+    assert _worker_daemon("local[2]", PACKAGE) == "pyspark.daemon"
+    monkeypatch.setenv("PYTHONPATH", REPO)
+    assert _worker_daemon("local[2]", PACKAGE) == "gdal_spark.pydaemon"
+
+
+def test_py_files_keep_the_stock_daemon(monkeypatch, tmp_path):
+    """spark-submit --py-files puts the archive on the driver's PYTHONPATH
+    only; a worker sees it per task, after its daemon started."""
+    archive = str(tmp_path / "deps.zip")
+    write_zip(archive, ["gdal_spark/__init__.py", "gdal_spark/pydaemon.py"])
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setenv("PYTHONPATH", archive)
+    package = os.path.join(archive, "gdal_spark")
+    assert _worker_daemon("local[2]", package) == "pyspark.daemon"
+    assert _worker_daemon("yarn", package) == "pyspark.daemon"
 
 
 def test_workers_fork_from_the_engine_daemon(spark):
