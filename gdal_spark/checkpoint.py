@@ -41,7 +41,7 @@ no pending row stops after the data write and writes no manifest. A
 resume adds one job, the manifest broadcast of the anti-join.
 
 Read path: every parquet table Spark wrote here is read with the schema
-Spark stored in its footer (`_read_spark_parquet`), so no reader runs a
+Spark stored in its footer (`read_parquet`), so no reader runs a
 schema-inference job. `read_committed(s)` scans data/snap=1…s by path —
 no partition discovery, no `snap` filter and no manifest semi-join. The
 semi-join was redundant: each attempt writes snapshot latest + 1 with
@@ -62,6 +62,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
 # the footer key under which Spark's parquet writer stores its row schema
@@ -91,11 +92,26 @@ def _parquet_files(path: str) -> list[str]:
                   if f.endswith(".parquet"))
 
 
-def _read_spark_parquet(spark: SparkSession, *paths: str) -> DataFrame:
-    """Read directories Spark wrote with the schema Spark stored in the
-    footer of the first one's first file — no schema-inference job."""
-    meta = pq.read_metadata(_parquet_files(paths[0])[0]).metadata
-    schema = StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """Read parquet files or directories with the schema of the first
+    path's (first) file, read from its footer on the driver — no
+    schema-inference job. That is the schema Spark stored in the footer
+    when Spark wrote the file, else the file's Arrow schema, which
+    Spark's inference maps to the same types for every engine table
+    (documents, TPC-H, events, embeddings). A path not on the local file
+    system, or a type Arrow cannot convert, is left to Spark's inference."""
+    first = paths[0]
+    files = _parquet_files(first) if os.path.isdir(first) else [first]
+    if not files or not os.path.isfile(files[0]):
+        return spark.read.parquet(*paths)
+    meta = pq.read_metadata(files[0])
+    stored = (meta.metadata or {}).get(SPARK_SCHEMA_KEY)
+    try:
+        schema = StructType.fromJson(json.loads(stored)) if stored else \
+            from_arrow_schema(meta.schema.to_arrow_schema(),
+                              prefer_timestamp_ntz=True)
+    except TypeError:  # e.g. unsigned ints, which Spark reads widened
+        return spark.read.parquet(*paths)
     return spark.read.schema(schema).parquet(*paths)
 
 
@@ -104,7 +120,7 @@ def _manifest_path(root: str, snap: int) -> str:
 
 
 def _manifest(spark: SparkSession, root: str, snap: int) -> DataFrame:
-    return _read_spark_parquet(spark, _manifest_path(root, snap))
+    return read_parquet(spark, _manifest_path(root, snap))
 
 
 def committed_keys(spark: SparkSession, root: str, key_col: str,
@@ -234,5 +250,5 @@ def read_committed(spark: SparkSession, root: str, key_col: str,
     data = [os.path.join(root, "data", f"snap={n}")
             for n in range(1, max(snap, 1) + 1)]
     # NULL-key rows are rewritten by every snapshot (see the module doc)
-    back = _read_spark_parquet(spark, *data).filter(F.col(key_col).isNotNull())
+    back = read_parquet(spark, *data).filter(F.col(key_col).isNotNull())
     return back if snap else back.limit(0)  # snapshot 0: no row, same columns

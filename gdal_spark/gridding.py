@@ -24,7 +24,7 @@ engines, so Spark and the DuckDB oracle produce identical IEEE doubles.
 
 from __future__ import annotations
 
-from gdal_spark.pages import points_oracle_sql
+from gdal_spark.pages import points_oracle_sql, read_documents
 
 SPARK = "spark"
 DUCKDB = "duckdb"
@@ -136,8 +136,7 @@ from packed
 
 def idw_grid(spark, sf_dir: str):
     """Spark DataFrame of the IDW grid over the fixture region."""
-    spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .createOrReplaceTempView("documents")
+    read_documents(spark, sf_dir).createOrReplaceTempView("documents")
     return spark.sql(idw_sql(SPARK))
 
 
@@ -155,8 +154,7 @@ from c group by i, j
 
 
 def proximity_grid(spark, sf_dir: str):
-    spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .createOrReplaceTempView("documents")
+    read_documents(spark, sf_dir).createOrReplaceTempView("documents")
     return spark.sql(proximity_sql(SPARK))
 
 
@@ -286,8 +284,7 @@ from packed
 
 def _grid_runner(sql_builder):
     def run(spark, sf_dir: str):
-        spark.read.parquet(f"{sf_dir}/documents.parquet") \
-            .createOrReplaceTempView("documents")
+        read_documents(spark, sf_dir).createOrReplaceTempView("documents")
         return spark.sql(sql_builder(SPARK))
     return run
 

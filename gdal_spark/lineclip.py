@@ -30,7 +30,7 @@ from __future__ import annotations
 import numpy as np
 
 from gdal_spark import geom as G
-from gdal_spark.pages import points_oracle_sql
+from gdal_spark.pages import points_oracle_sql, read_documents
 
 SPARK = "spark"
 DUCKDB = "duckdb"
@@ -128,8 +128,7 @@ from kept
 
 
 def clip_lines(spark, sf_dir: str, defs: list[dict]):
-    spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .createOrReplaceTempView("documents")
+    read_documents(spark, sf_dir).createOrReplaceTempView("documents")
     return spark.sql(clip_lines_sql(defs, SPARK))
 
 

@@ -28,8 +28,11 @@ because the join itself is embarrassingly parallel.
 
 from __future__ import annotations
 
+import weakref
+
 import numpy as np
 import pandas as pd
+from pyspark import Broadcast, SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
@@ -74,6 +77,22 @@ def build_zone_index_from_defs(defs: list[dict]) -> ZoneIndex:
     return ZoneIndex([z["zone_id"] for z in defs], [z["rings"] for z in defs])
 
 
+# index → (SparkContext, its broadcast of the index): one broadcast per
+# index and context, however many joins use it. The driver keeps each
+# broadcast's pickled file until the context stops, so a broadcast per
+# join would grow its temp directory with every join. Weak keys: the
+# entry goes with the index.
+_BROADCASTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _broadcast(index: ZoneIndex, sc: SparkContext) -> Broadcast:
+    owner, bc = _BROADCASTS.get(index, (None, None))
+    if owner is not sc:
+        bc = sc.broadcast(index)
+        _BROADCASTS[index] = (sc, bc)
+    return bc
+
+
 def pip_join(points: DataFrame, index: ZoneIndex, lon: str = "lon",
              lat: str = "lat", how: str = "inner",
              zone_col: str = "zone_id") -> DataFrame:
@@ -87,7 +106,7 @@ def pip_join(points: DataFrame, index: ZoneIndex, lon: str = "lon",
     """
     if how not in ("inner", "semi", "anti"):
         raise ValueError(how)
-    bc = points.sparkSession.sparkContext.broadcast(index)
+    bc = _broadcast(index, points.sparkSession.sparkContext)
 
     def zone_ids(px: pd.Series, py: pd.Series) -> pd.Series:
         """Per point, the ids of the zones that contain it (maybe none)."""

@@ -15,23 +15,34 @@ the join so the PIP kernel only sees geocoded rows.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gdal_spark import cells
-from gdal_spark.extract import geocode_pages
+from gdal_spark.extract import geocode_pages_with
 from gdal_spark.pages import pages_from_documents
-from gdal_spark.pip_join import build_zone_index_from_defs, pip_join
+from gdal_spark.pip_join import ZoneIndex, build_zone_index_from_defs, pip_join
 from gdal_spark.zones import zone_defs
 
 CELL_ZOOM = 12
 
 
+@functools.cache
+def zone_index() -> ZoneIndex:
+    """The R-tree over `zone_defs()`, built once per process, so every
+    `pages_per_zone` reuses one index and hence one broadcast of it."""
+    return build_zone_index_from_defs(zone_defs())
+
+
 def geocoded_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pages → geocoded subset with (lon, lat, cell_id)."""
-    pages = pages_from_documents(spark, sf_dir)
-    geo = geocode_pages(pages).filter(F.col("lat").isNotNull())
-    return geo.withColumn("cell_id", cells.cell_id_col("lon", "lat", CELL_ZOOM))
+    """pages → geocoded subset with (lon, lat, cell_id). The cell id is
+    added in the geocode projection; the filter still runs below it, as
+    the optimizer pushes it through that deterministic projection."""
+    return geocode_pages_with(pages_from_documents(spark, sf_dir), {
+        "cell_id": cells.cell_id_col("_g.lon", "_g.lat", CELL_ZOOM),
+    }).filter(F.col("lat").isNotNull())
 
 
 def pages_per_zone(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -41,7 +52,5 @@ def pages_per_zone(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation already combines map-side, so the single shuffle carries
     at most one row per (partition, zone).
     """
-    geo = geocoded_pages(spark, sf_dir)
-    joined = pip_join(geo, build_zone_index_from_defs(zone_defs()),
-                      how="inner")
+    joined = pip_join(geocoded_pages(spark, sf_dir), zone_index(), how="inner")
     return joined.groupBy("zone_id").agg(F.count(F.lit(1)).alias("n_pages"))

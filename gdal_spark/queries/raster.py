@@ -21,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gdal_spark.pages import points_from_documents, points_oracle_sql
+from gdal_spark.pages import (points_from_documents, points_oracle_sql,
+                              read_documents)
 from gdal_spark.raster import (DEM_ELEV_SQL, checksum_oracle_sql,
                                color_relief_oracle_sql, contour_cells,
                                dem_elev_sql, dst_grid_sql, fillnodata_sql,
@@ -194,8 +195,7 @@ def q_raster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sample_dem(spark: SparkSession, sf_dir: str, kernel: str) -> DataFrame:
     """InterpolateAtPoint with a tap ``kernel`` over the synthetic DEM
     (alg/gdal_interpolateatpoint.cpp) at the _BILIN_Q probes."""
-    spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .createOrReplaceTempView("documents")
+    read_documents(spark, sf_dir).createOrReplaceTempView("documents")
     queries = spark.sql(_BILIN_Q)
     return sample_interp(synth_dem_tiles(spark, DEM_PX), queries, DEM_PX,
                          kernel)
@@ -1691,8 +1691,7 @@ def q_translate_srcwin(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_fillnodata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GDALFillNodata (alg/rasterfill.cpp:394) window-IDW variant over
     the z5 count raster."""
-    spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .createOrReplaceTempView("documents")
+    read_documents(spark, sf_dir).createOrReplaceTempView("documents")
     return spark.sql(fillnodata_sql(points_oracle_sql("documents"),
                                     RASTER_Z, "spark"))
 

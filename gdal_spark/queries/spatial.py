@@ -18,7 +18,8 @@ from gdal_spark.extract import geocode_pages
 from gdal_spark.pages import (geotag_text_sql, pages_from_documents,
                               points_from_documents, points_oracle_sql,
                               synth_stages)
-from gdal_spark.pip_join import build_zone_index_from_defs, pip_join
+from gdal_spark.pip_join import pip_join
+from gdal_spark.pipeline import zone_index
 from gdal_spark.zones import pip_oracle_sql, zone_defs
 
 
@@ -53,21 +54,21 @@ def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast R-tree PIP inner join (layer-algebra Intersection for
     points, ogrlayer.cpp:3345)."""
     pts = points_from_documents(spark, sf_dir)
-    joined = pip_join(pts, build_zone_index_from_defs(zone_defs()), how="inner")
+    joined = pip_join(pts, zone_index(), how="inner")
     return joined.select("doc_id", "zone_id")
 
 
 def q_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clip semantics (ogrlayer.cpp:5497): keep points inside ≥1 zone."""
     pts = points_from_documents(spark, sf_dir)
-    return pip_join(pts, build_zone_index_from_defs(zone_defs()),
+    return pip_join(pts, zone_index(),
                     how="semi").select("doc_id", "lon_mic", "lat_mic")
 
 
 def q_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Erase semantics (ogrlayer.cpp:5806): anti spatial join."""
     pts = points_from_documents(spark, sf_dir)
-    return pip_join(pts, build_zone_index_from_defs(zone_defs()),
+    return pip_join(pts, zone_index(),
                     how="anti").select("doc_id", "lon_mic", "lat_mic")
 
 
@@ -344,7 +345,7 @@ def q_ogr2ogr_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.crs import apply_sql_stages, webmercator_sql_stages
 
     pts = points_from_documents(spark, sf_dir).filter(OGR2OGR_WHERE)
-    clipped = pip_join(pts, build_zone_index_from_defs(zone_defs()),
+    clipped = pip_join(pts, zone_index(),
                        how="semi")
     out = apply_sql_stages(clipped, webmercator_sql_stages("lon", "lat"))
     return out.select(
@@ -358,7 +359,7 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zonal summary after the PIP join (groupBy(zone).agg — SURVEY §2.4
     'zonal-style summaries'): count + integer-exact coordinate stats."""
     pts = points_from_documents(spark, sf_dir)
-    joined = pip_join(pts, build_zone_index_from_defs(zone_defs()), how="inner")
+    joined = pip_join(pts, zone_index(), how="inner")
     return joined.groupBy("zone_id").agg(
         F.count(F.lit(1)).alias("n_points"),
         F.min("lon_mic").alias("min_lon_mic"),
@@ -449,7 +450,7 @@ def q_lineref_position(spark, sf_dir):
     from gdal_spark.rasterize_poly import _MX, _MY, _zone_rows
 
     pts = points_from_documents(spark, sf_dir)
-    joined = pip_join(pts, build_zone_index_from_defs(zone_defs()),
+    joined = pip_join(pts, zone_index(),
                       how="inner")
     points = joined.selectExpr(
         "doc_id as pid",

@@ -19,7 +19,8 @@ from gdal_spark.dedup import (crawl_from_documents, dedup_exact,
                               minhash_neardup_pairs, ngram_jaccard_pairs,
                               simhash_neardup_pairs)
 from gdal_spark.multimodal import decode_stub_meta, payload_meta
-from gdal_spark.pages import geotag_text_sql, pages_from_documents, synth_stages
+from gdal_spark.pages import (geotag_text_sql, pages_from_documents,
+                              read_documents, synth_stages)
 from gdal_spark.simsearch import (aug_embeddings, brute_topk, lsh_bucket_topk,
                                   neardup_pairs)
 from gdal_spark.textops import DUCKDB
@@ -29,7 +30,7 @@ ANN_QUERY_FILTER = "vec_id % 100 = 0 and vec_id < 100000"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return read_documents(spark, sf_dir)
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -829,7 +830,7 @@ def q_vector_shapefile_ingest(spark: SparkSession,
     arithmetically (codec-blind)."""
     from gdal_spark.multimodal import shapefile_ingest_stats
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     ids = docs.select("doc_id").repartition(
         spark.sparkContext.defaultParallelism)
     return shapefile_ingest_stats(ids)
@@ -984,7 +985,7 @@ def q_multimodal_decode_real(spark: SparkSession,
     round-trip breaks the hash."""
     from gdal_spark.multimodal import decode_real_stats, synth_payloads
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     # the CPU-bound codec work inherits the input's split count; the
     # fixture id table is one parquet split, so spread the 8-byte ids
     # across cores BEFORE payloads exist (the exchange carries ids
@@ -1008,7 +1009,7 @@ def q_multimodal_decode_jpeg(spark: SparkSession,
     from gdal_spark.multimodal import decode_real_stats, \
         synth_jpeg_payloads
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     # spread the CPU-bound encode+decode across cores: the fixture id
     # table is a single parquet split, so without this the whole codec
     # pass serializes onto one task (measured 5.4 s -> the id shuffle
@@ -1051,7 +1052,7 @@ def q_multimodal_decode_video(spark: SparkSession,
     from gdal_spark.multimodal import decode_real_stats, \
         synth_avi_payloads
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     # id-only repartition before payloads exist: the fixture id table
     # is one parquet split and the encode+decode pass is CPU-bound
     ids = docs.select("doc_id").repartition(
@@ -1069,7 +1070,7 @@ def q_multimodal_video_framestats(spark: SparkSession,
     from gdal_spark.multimodal import frame_sample_real_stats, \
         synth_avi_payloads
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     ids = docs.select("doc_id").repartition(
         spark.sparkContext.defaultParallelism)
     return frame_sample_real_stats(synth_avi_payloads(ids), step=2)
@@ -1087,7 +1088,7 @@ def q_multimodal_decode_tiff(spark: SparkSession,
     from gdal_spark.multimodal import decode_real_stats, \
         synth_geotiff_payloads
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     ids = docs.select("doc_id").repartition(
         spark.sparkContext.defaultParallelism)
     return decode_real_stats(synth_geotiff_payloads(ids))
@@ -1104,7 +1105,7 @@ def q_multimodal_decode_png_variants(spark: SparkSession,
     from gdal_spark.multimodal import decode_real_stats, \
         synth_png_variant_payloads
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     ids = docs.select("doc_id").repartition(
         spark.sparkContext.defaultParallelism)
     return decode_real_stats(synth_png_variant_payloads(ids))
@@ -1170,7 +1171,7 @@ def q_multimodal_decode_gif(spark: SparkSession,
     from gdal_spark.multimodal import decode_real_stats, \
         synth_gif_payloads
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     ids = docs.select("doc_id").repartition(
         spark.sparkContext.defaultParallelism)
     return decode_real_stats(synth_gif_payloads(ids))
@@ -1209,7 +1210,7 @@ def q_multimodal_decode_wav_variants(spark: SparkSession,
     from gdal_spark.multimodal import decode_real_stats, \
         synth_wav_variant_payloads
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     ids = docs.select("doc_id").repartition(
         spark.sparkContext.defaultParallelism)
     return decode_real_stats(synth_wav_variant_payloads(ids))
@@ -1277,7 +1278,7 @@ def q_geotiff_ingest_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.multimodal import geotiff_tile_partials, \
         synth_geotiff_payloads
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     ids = docs.select("doc_id").repartition(
         spark.sparkContext.defaultParallelism)
     partials = geotiff_tile_partials(synth_geotiff_payloads(ids),

@@ -80,7 +80,7 @@ def pixel_counts(points: DataFrame, z: int, lon: str = "lon",
     with an invalid coordinate (NULL pixel) burn nothing."""
     gxe, gye = gpixel_exprs(lon, lat, z)
     return (
-        points.withColumn("gx", F.expr(gxe)).withColumn("gy", F.expr(gye))
+        points.withColumns({"gx": F.expr(gxe), "gy": F.expr(gye)})
         .filter("gx is not null and gy is not null")
         .groupBy("gx", "gy").agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -113,8 +113,8 @@ def tiles_from_pixel_counts(px: DataFrame, z: int) -> DataFrame:
             "data": [buf.tobytes()],
         })
 
-    keyed = px.withColumn("_tx", F.expr(f"gx div {tile_px}")) \
-              .withColumn("_ty", F.expr(f"gy div {tile_px}"))
+    keyed = px.withColumns({"_tx": F.expr(f"gx div {tile_px}"),
+                            "_ty": F.expr(f"gy div {tile_px}")})
     return keyed.groupBy("_tx", "_ty").applyInPandas(assemble, TILE_SCHEMA)
 
 
@@ -306,8 +306,8 @@ def overview_sum(tiles: DataFrame, resampler: str = "sum") -> DataFrame:
             "data": [out.tobytes()],
         })
 
-    keyed = tiles.withColumn("_ptx", F.expr("tx div 2")) \
-                 .withColumn("_pty", F.expr("ty div 2"))
+    keyed = tiles.withColumns({"_ptx": F.expr("tx div 2"),
+                               "_pty": F.expr("ty div 2")})
     return keyed.groupBy("_ptx", "_pty").applyInPandas(
         reduce_children, TILE_SCHEMA)
 

@@ -14,6 +14,23 @@ CPython < 3.13 that re-reads the whole directory of `pyspark.zip` once
 per zip-backed package path the worker has imported (130-320 ms per task
 measured on a 4-core host); the engine's daemon re-reads an archive only
 when it changed.
+
+Scan splits: Spark sizes a file split as ``min(maxPartitionBytes,
+max(openCostInBytes, (bytes + openCostInBytes per file) / cores))``, so
+under the 4 MB default open cost a scan of one file below 4 MB × cores
+gets fewer tasks than cores. That is the engine's usual case: a few MB
+of documents whose scan stage also runs the Python UDFs (geotag
+extraction, the PIP join), so each task costs far more than its bytes
+suggest. The 6.8 MB, 3-row-group `zonal_pages` input ran its UDF stage
+as 2 tasks on 4 cores; with a 1 MB open cost it runs 3 busy tasks (one
+per row group, the finest a parquet scan splits). Large scans are
+unaffected: their splits stay at ``bytes / cores`` or
+``maxPartitionBytes``.
+
+Master: an explicit ``master`` wins; otherwise the launcher's
+(``spark-submit --master``, spark-defaults.conf) is kept and only a
+process with none falls back to ``local[SPARK_GRAFT_CPUS]``
+(`_launcher_master`).
 """
 
 from __future__ import annotations
@@ -21,6 +38,7 @@ from __future__ import annotations
 import os
 import site
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 # One Arrow batch per UDF call; 65,536 rows/batch mirrors OGR's default
@@ -53,6 +71,28 @@ def _worker_daemon(master: str, package_dir: str) -> str:
     return "pyspark.daemon"
 
 
+def _launcher_master(configured: str | None, submitted: bool,
+                    cpus: int) -> str:
+    """The master of a session that names none: the one its launcher
+    configured (``--master``, spark-defaults.conf, ``MASTER``), else
+    ``local[cpus]``. ``configured`` is the JVM's ``spark.master``;
+    spark-submit sets it to ``local[*]`` when given none, and PySpark
+    starts its own JVM through spark-submit, so ``local[*]`` counts as
+    configured only when spark-submit started this process
+    (``submitted``)."""
+    if configured and (submitted or configured != "local[*]"):
+        return configured
+    return f"local[{cpus}]"
+
+
+def _default_master(cpus: int) -> str:
+    """`_launcher_master` for this process, read from the launching JVM
+    (started here if need be, as getOrCreate would)."""
+    SparkContext._ensure_initialized()
+    return _launcher_master(SparkConf().get("spark.master", None),
+                           "PYSPARK_GATEWAY_PORT" in os.environ, cpus)
+
+
 def get_spark(
     app_name: str = "gdal_spark",
     master: str | None = None,
@@ -62,12 +102,12 @@ def get_spark(
     """Build (or reuse) a SparkSession tuned for the spatial workload.
 
     In production this engine is submitted via ``spark-submit --py-files``
-    and inherits master/executors from the cluster; locally tests pass
-    ``master='local[N]'``.
+    and inherits master/executors from the cluster (``master=None``);
+    locally tests pass ``master='local[N]'``.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
-        master = f"local[{cpus}]"
+        master = _default_master(cpus)
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 32)
 
@@ -85,8 +125,11 @@ def get_spark(
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS)
         )
-        # Keep parquet scan splits reasonable for the tile/doc tables.
+        # Keep parquet scan splits reasonable for the tile/doc tables; a
+        # small scan splits by cores, not by the 4 MB default open cost
+        # (module docstring).
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -23,9 +23,8 @@ from pyspark.sql import functions as F
 
 from gdal_spark import cells
 from gdal_spark.extract import geocode_pages
-from gdal_spark.pip_join import build_zone_index_from_defs, pip_join
-from gdal_spark.pipeline import CELL_ZOOM
-from gdal_spark.zones import zone_defs
+from gdal_spark.pip_join import pip_join
+from gdal_spark.pipeline import CELL_ZOOM, zone_index
 
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, text string, "
                 "lang string, doc_id long")
@@ -49,7 +48,7 @@ def streaming_zone_counts(pages: DataFrame,
     geo = geocode_pages(pages).filter(F.col("lat").isNotNull())
     geo = geo.withColumn("cell_id", cells.cell_id_col("lon", "lat",
                                                       CELL_ZOOM))
-    joined = pip_join(geo, build_zone_index_from_defs(zone_defs()),
+    joined = pip_join(geo, zone_index(),
                       how="inner")
     return (
         joined.withWatermark("warc_ts", watermark)
@@ -82,7 +81,7 @@ def stateful_zone_totals(pages: DataFrame) -> DataFrame:
     joined = pip_join(
         geo.withColumn("cell_id",
                        cells.cell_id_col("lon", "lat", CELL_ZOOM)),
-        build_zone_index_from_defs(zone_defs()), how="inner")
+        zone_index(), how="inner")
 
     def update(key, pdfs, state: GroupState):
         n_new = sum(len(p) for p in pdfs)

@@ -32,6 +32,17 @@ def ddb():
     con.close()
 
 
+def jobs_launched(sc, group, fn):
+    """(fn(), ids of the Spark jobs fn launched)."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def compare_frames(spark_df, ddb_con, sql, float_tol=0.0):
     """Driver-style compare: sort columns by name, order-insensitive rows."""
     import pandas as pd

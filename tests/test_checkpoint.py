@@ -12,10 +12,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from gdal_spark.checkpoint import (committed_keys, lineage, metrics,
-                                   read_committed, run_checkpointed)
+                                   read_committed, read_parquet,
+                                   run_checkpointed)
 from gdal_spark.pages import points_from_documents
 from gdal_spark.pipeline import geocoded_pages
 from gdal_spark.raster import rasterize_points
+from tests.conftest import jobs_launched
 
 
 def tile_workload(spark):
@@ -160,15 +162,35 @@ def keyed_range(spark):
         (F.col("id") * 3).alias("v"), (F.col("id") % 250).alias("k"))
 
 
-def jobs_launched(sc, group, fn):
-    """(fn(), ids of the Spark jobs fn launched)."""
-    sc.setJobGroup(group, group)
+def test_read_parquet_takes_the_schema_from_the_footer(spark, tmp_path):
+    """read_parquet gives the schema Spark's inference gives, without its
+    job: from Spark's stored row schema (a Spark-written directory) or
+    the Arrow schema (a pyarrow-written file; a DuckDB one with NOT NULL
+    and timestamp columns). A uint32 column, which Arrow cannot convert,
+    is left to the inference."""
+    import duckdb
+
+    spark_dir = str(tmp_path / "spark_dir")
+    keyed_range(spark).write.parquet(spark_dir)
+    duck = str(tmp_path / "duck.parquet")
+    con = duckdb.connect()
     try:
-        out = fn()
-        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+        con.execute("create table t (a bigint not null, s varchar not null,"
+                    " ts timestamp, d decimal(10, 2))")
+        con.execute("insert into t values (1, 'x', '2020-01-01', 1.5)")
+        con.execute(f"copy t to '{duck}' (format parquet)")
+        con.execute("create table u as select 7::uinteger as n")
+        con.execute(f"copy u to '{tmp_path}/uint.parquet' (format parquet)")
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+        con.close()
+    sc = spark.sparkContext
+    for path in (spark_dir, duck, "/root/testdata/sf0.01/documents.parquet"):
+        df, jobs = jobs_launched(sc, "footer",
+                                 lambda: read_parquet(spark, path))
+        assert jobs == [] and df.schema == spark.read.parquet(path).schema
+    uint = str(tmp_path / "uint.parquet")
+    assert read_parquet(spark, uint).collect() == \
+        spark.read.parquet(uint).collect()
 
 
 def test_commit_resume_and_read_launch_few_jobs(spark, tmp_path):

@@ -254,3 +254,87 @@ def test_synth_stages_doc_id_overflow_raises(spark, tmp_path):
     finally:
         con.close()
     assert rows is None
+
+
+def test_page_layer_plans_launch_no_job(spark):
+    """Building the page tables and the flagship query reads the
+    documents schema from the parquet footer, not with an inference
+    job; collecting the flagship on sf0.01 is then its scan-and-UDF job
+    plus the aggregate's."""
+    from gdal_spark import pipeline
+    from gdal_spark.pages import pages_from_documents, points_from_documents
+    from tests.conftest import SF_CORRECT, jobs_launched
+
+    sc = spark.sparkContext
+    for name, build in (("pages", pages_from_documents),
+                        ("points", points_from_documents),
+                        ("zonal", pipeline.pages_per_zone)):
+        _, jobs = jobs_launched(sc, f"plan-{name}",
+                                lambda: build(spark, SF_CORRECT))
+        assert jobs == [], name
+    rows, jobs = jobs_launched(
+        sc, "zonal-collect",
+        lambda: pipeline.pages_per_zone(spark, SF_CORRECT).collect())
+    assert rows and len(jobs) <= 2, jobs
+
+
+def test_page_tables_keep_columns_types_and_rows(spark):
+    """pages_from_documents and points_from_documents on sf0.01: the
+    same columns in the same order and types, lon/lat DOUBLE, and the
+    rows of the shared SQL run by DuckDB."""
+    import duckdb
+
+    from gdal_spark.crs import stages_to_duckdb_sql
+    from gdal_spark.pages import (geotag_text_sql, pages_from_documents,
+                                  points_from_documents, points_oracle_sql,
+                                  synth_stages)
+    from tests.conftest import SF_CORRECT
+
+    pages = pages_from_documents(spark, SF_CORRECT)
+    assert pages.dtypes == [
+        ("url", "string"), ("warc_ts", "timestamp"), ("html", "binary"),
+        ("text", "string"), ("lang", "string"), ("doc_id", "bigint")]
+    points = points_from_documents(spark, SF_CORRECT)
+    assert points.dtypes == [
+        ("doc_id", "bigint"), ("lon", "double"), ("lat", "double"),
+        ("lang", "string"), ("lon_mic", "bigint"), ("lat_mic", "bigint")]
+
+    con = duckdb.connect()
+    try:
+        con.execute("create view documents as select * from read_parquet("
+                    f"'{SF_CORRECT}/documents.parquet')")
+        assert compare_frames(points, con, points_oracle_sql()) > 0
+        gtext = stages_to_duckdb_sql(
+            "select doc_id, text, lang from documents",
+            synth_stages("doc_id") + [("gtext", geotag_text_sql("text"))],
+            ["doc_id", "lang", "gtext"])
+        want = sorted(con.execute(
+            "select concat('https://site', doc_id % 100, '.example/p/',"
+            " doc_id), 1735689600 + doc_id * 7,"
+            " encode(concat('<html><body><p>', gtext, '</p></body></html>')),"
+            f" gtext, lang, doc_id from ({gtext}) g").fetchall())
+    finally:
+        con.close()
+    got = sorted(
+        (r.url, r.ts, bytes(r.html), r.text, r.lang, r.doc_id)
+        for r in pages.selectExpr("url", "unix_seconds(warc_ts) as ts",
+                                  "html", "text", "lang",
+                                  "doc_id").collect())
+    assert got == want and len(got) == 500
+
+
+def test_pip_join_reuses_one_broadcast(spark):
+    """Every pip_join with one index shares one broadcast: the driver
+    keeps a pickled file per broadcast until the context stops."""
+    import os
+
+    from gdal_spark.pip_join import build_zone_index_from_defs, pip_join
+    from gdal_spark.zones import zone_defs
+
+    index = build_zone_index_from_defs(zone_defs())
+    pts = spark.createDataFrame([(1.0, 2.0)], "lon double, lat double")
+    tmp = spark.sparkContext._temp_dir
+    before = len(os.listdir(tmp))
+    for how in ("inner", "semi", "anti", "inner", "semi") * 2:
+        pip_join(pts, index, how=how)
+    assert len(os.listdir(tmp)) - before <= 1
