@@ -26,7 +26,7 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, StringType, StructField, StructType)
 
@@ -86,15 +86,5 @@ _extract_udf = F.pandas_udf(extract_geotags_batch,
 def geocode_pages(pages: DataFrame, text_col: str = "text") -> DataFrame:
     """pages → pages + (extracted_text, lat, lon); rows without a geotag
     keep NULL coordinates (caller filters or left-joins as needed)."""
-    return geocode_pages_with(pages, {}, text_col)
-
-
-def geocode_pages_with(pages: DataFrame, extra: dict[str, Column],
-                       text_col: str = "text") -> DataFrame:
-    """`geocode_pages` plus the ``extra`` columns, all added in one
-    projection over the UDF's output struct, which ``extra`` reads as
-    ``_g`` (``_g.lon``, ``_g.lat``)."""
     return pages.withColumn("_g", _extract_udf(F.col(text_col))).withColumns(
-        {**{c: F.col(f"_g.{c}") for c in EXTRACT_SCHEMA.names}, **extra}
-    ).drop("_g")
-
+        {c: F.col(f"_g.{c}") for c in EXTRACT_SCHEMA.names}).drop("_g")

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gdal_spark import cells
-from gdal_spark.extract import geocode_pages_with
+from gdal_spark.extract import geocode_pages
 from gdal_spark.pages import pages_from_documents
 from gdal_spark.pip_join import ZoneIndex, build_zone_index_from_defs, pip_join
 from gdal_spark.zones import zone_defs
@@ -37,12 +37,10 @@ def zone_index() -> ZoneIndex:
 
 
 def geocoded_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pages → geocoded subset with (lon, lat, cell_id). The cell id is
-    added in the geocode projection; the filter still runs below it, as
-    the optimizer pushes it through that deterministic projection."""
-    return geocode_pages_with(pages_from_documents(spark, sf_dir), {
-        "cell_id": cells.cell_id_col("_g.lon", "_g.lat", CELL_ZOOM),
-    }).filter(F.col("lat").isNotNull())
+    """pages → geocoded subset with (lon, lat, cell_id)."""
+    pages = pages_from_documents(spark, sf_dir)
+    geo = geocode_pages(pages).filter(F.col("lat").isNotNull())
+    return geo.withColumn("cell_id", cells.cell_id_col("lon", "lat", CELL_ZOOM))
 
 
 def pages_per_zone(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,10 +27,10 @@ per row group, the finest a parquet scan splits). Large scans are
 unaffected: their splits stay at ``bytes / cores`` or
 ``maxPartitionBytes``.
 
-Master: an explicit ``master`` wins; otherwise the launcher's
-(``spark-submit --master``, spark-defaults.conf) is kept and only a
-process with none falls back to ``local[SPARK_GRAFT_CPUS]``
-(`_launcher_master`).
+Master: an explicit ``master`` wins; otherwise a process started by
+spark-submit keeps the launcher's (``--master``, spark-defaults.conf)
+and any other falls back to ``local[SPARK_GRAFT_CPUS]``
+(`_default_master`).
 """
 
 from __future__ import annotations
@@ -71,26 +71,19 @@ def _worker_daemon(master: str, package_dir: str) -> str:
     return "pyspark.daemon"
 
 
-def _launcher_master(configured: str | None, submitted: bool,
-                    cpus: int) -> str:
-    """The master of a session that names none: the one its launcher
-    configured (``--master``, spark-defaults.conf, ``MASTER``), else
-    ``local[cpus]``. ``configured`` is the JVM's ``spark.master``;
-    spark-submit sets it to ``local[*]`` when given none, and PySpark
-    starts its own JVM through spark-submit, so ``local[*]`` counts as
-    configured only when spark-submit started this process
-    (``submitted``)."""
-    if configured and (submitted or configured != "local[*]"):
-        return configured
-    return f"local[{cpus}]"
-
-
 def _default_master(cpus: int) -> str:
-    """`_launcher_master` for this process, read from the launching JVM
-    (started here if need be, as getOrCreate would)."""
-    SparkContext._ensure_initialized()
-    return _launcher_master(SparkConf().get("spark.master", None),
-                           "PYSPARK_GATEWAY_PORT" in os.environ, cpus)
+    """The master of a session that names none: the launcher's when
+    spark-submit started this process (its JVM gateway is already up,
+    ``PYSPARK_GATEWAY_PORT``, and holds ``--master`` or spark-defaults'
+    ``spark.master``), else ``local[cpus]``. It never starts a JVM itself:
+    one started without the builder's conf would drop every launch-time
+    key (``spark.driver.memory``, ``spark.jars.packages``, ...)."""
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        SparkContext._ensure_initialized()  # connects to the running JVM
+        master = SparkConf().get("spark.master", None)
+        if master:
+            return master
+    return f"local[{cpus}]"
 
 
 def get_spark(

@@ -1,5 +1,6 @@
-"""get_spark defaults: the master a session without one gets, and scan
-splits of a small file by cores."""
+"""get_spark defaults: the master a session without one gets, the
+driver conf its JVM starts with, and scan splits of a small file by
+cores."""
 
 from __future__ import annotations
 
@@ -12,23 +13,62 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark import SparkContext
 
-from gdal_spark.session import _launcher_master
+from gdal_spark.session import _default_master
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_launcher_master_keeps_a_configured_master():
-    assert _launcher_master("local[1]", False, 8) == "local[1]"
-    assert _launcher_master("spark://h:7077", True, 8) == "spark://h:7077"
-    assert _launcher_master("local[*]", True, 8) == "local[*]"
+def _child_env(**extra):
+    """This environment for a child Python that imports the repo, minus
+    any JVM gateway this process was handed."""
+    env = {k: v for k, v in os.environ.items()
+           if not k.startswith("PYSPARK_GATEWAY_")}
+    env.update(extra, PYSPARK_PYTHON=sys.executable,
+               PYSPARK_DRIVER_PYTHON=sys.executable,
+               PYTHONPATH=os.pathsep.join(
+                   p for p in (REPO, os.environ.get("PYTHONPATH")) if p))
+    return env
 
 
-def test_launcher_master_falls_back_without_one():
-    # PySpark's own JVM gets spark-submit's default master, local[*]
-    assert _launcher_master("local[*]", False, 8) == "local[8]"
-    assert _launcher_master(None, False, 3) == "local[3]"
-    assert _launcher_master(None, True, 3) == "local[3]"
+def test_default_master_starts_no_jvm_without_a_launcher(monkeypatch):
+    """Outside spark-submit the fallback is local[cpus], decided without
+    touching a JVM (one started here would lack the builder's conf)."""
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+
+    def started(*a, **k):
+        raise AssertionError("a JVM was started to read the master")
+
+    monkeypatch.setattr(SparkContext, "_ensure_initialized", started)
+    assert _default_master(3) == "local[3]"
+
+
+PLAIN = r"""
+from gdal_spark.session import get_spark
+spark = get_spark("plain")
+rt = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
+print("HEAP", rt.maxMemory(), spark.sparkContext.master)
+spark.stop()
+"""
+
+
+def test_plain_python_session_gets_the_driver_memory(tmp_path):
+    """`python script.py` calling get_spark() with no master starts its
+    driver JVM with the builder's conf: the heap is
+    SPARK_GRAFT_DRIVER_MEM (2g), not Spark's 1g default, and the master
+    is local[SPARK_GRAFT_CPUS]."""
+    script = tmp_path / "plain.py"
+    script.write_text(PLAIN)
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=REPO, capture_output=True,
+        text=True, timeout=300,
+        env=_child_env(SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="2g"))
+    line = [x.split() for x in out.stdout.splitlines()
+            if x.startswith("HEAP")]
+    assert len(line) == 1, out.stderr[-2000:]
+    _, heap, master = line[0]
+    assert int(heap) > 1.5 * 2**30 and master == "local[1]", line
 
 
 SUBMITTED = r"""
@@ -51,10 +91,7 @@ def test_spark_submit_master_reaches_the_session(tmp_path):
         pytest.skip("no spark-submit")
     script = tmp_path / "submitted.py"
     script.write_text(SUBMITTED)
-    env = dict(os.environ, SPARK_GRAFT_CPUS="2", PYSPARK_PYTHON=sys.executable,
-               PYSPARK_DRIVER_PYTHON=sys.executable,
-               PYTHONPATH=os.pathsep.join(
-                   p for p in (REPO, os.environ.get("PYTHONPATH")) if p))
+    env = _child_env(SPARK_GRAFT_CPUS="2")
     out = subprocess.run(
         [submit, "--master", "local[1]", "--driver-memory", "512m",
          str(script)], cwd=REPO, env=env, capture_output=True, text=True,
