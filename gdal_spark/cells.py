@@ -16,8 +16,7 @@ and DuckDB, so an invalid coordinate gets no tile instead of an edge tile.
 The packed ``cell_id = (z << 58) | (tx << 29) | ty`` is this engine's
 H3/S2-equivalent hierarchical cell id (the north rule allows a pure-math
 quad scheme; h3/s2 native libs are not available in this environment).
-Parent/child moves are bit shifts; k-ring is the (2r+1)² tile neighborhood
-with x wraparound (the quad analogue of H3's k-ring).
+Parent/child moves are bit shifts (``tx >> dz``, ``ty >> dz``).
 
 All hot-path column math is **JVM-side Catalyst expressions** (whole-stage
 codegen, no Python): the same SQL snippet is used verbatim by the Spark
@@ -131,65 +130,3 @@ def unpack_cell_id(cell_id: np.ndarray):
     tx = (cell_id >> X_SHIFT) & ((1 << (Z_SHIFT - X_SHIFT)) - 1)
     ty = cell_id & ((1 << X_SHIFT) - 1)
     return z, tx, ty
-
-
-def parent_cell(cell_id: np.ndarray, parent_z: int) -> np.ndarray:
-    z, tx, ty = unpack_cell_id(cell_id)
-    dz = z - parent_z
-    if np.any(dz < 0):
-        raise ValueError("parent_z must be <= cell zoom")
-    return (np.int64(parent_z) << Z_SHIFT) | ((tx >> dz) << X_SHIFT) | (ty >> dz)
-
-
-def tile_bounds_np(tx, ty, z: int):
-    """(lon_min, lat_min, lon_max, lat_max) of tile(s) — inverse of tile_xy."""
-    n = 1 << z
-    tx = np.asarray(tx, dtype=np.float64)
-    ty = np.asarray(ty, dtype=np.float64)
-    lon_min = tx / n * 360.0 - 180.0
-    lon_max = (tx + 1) / n * 360.0 - 180.0
-    lat_max = np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * ty / n))))
-    lat_min = np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * (ty + 1) / n))))
-    return lon_min, lat_min, lon_max, lat_max
-
-
-def k_ring(tx: int, ty: int, z: int, r: int) -> list[tuple[int, int]]:
-    """All tiles within Chebyshev distance r: (2r+1)² neighborhood.
-
-    x wraps around the antimeridian; y is clamped at the poles. This is the
-    quad analogue of H3's k-ring, used by the kNN expansion join (the
-    semantics of GDAL's quadtree-assisted nearest search,
-    alg/gdalgrid.cpp:879-923).
-    """
-    n = 1 << z
-    out = []
-    for dy in range(-r, r + 1):
-        yy = ty + dy
-        if yy < 0 or yy >= n:
-            continue
-        for dx in range(-r, r + 1):
-            out.append(((tx + dx) % n, yy))
-    return out
-
-
-def ring_cells_np(tx: np.ndarray, ty: np.ndarray, z: int, r: int):
-    """Vectorized k-ring: for arrays tx,ty return stacked (idx, cell_id).
-
-    idx maps each emitted neighbor back to its input row; used to explode
-    query points onto their candidate cells without leaving numpy.
-    """
-    n = 1 << z
-    side = 2 * r + 1
-    dxs, dys = np.meshgrid(np.arange(-r, r + 1), np.arange(-r, r + 1))
-    dxs = dxs.ravel()
-    dys = dys.ravel()
-    tx = np.asarray(tx, dtype=np.int64)
-    ty = np.asarray(ty, dtype=np.int64)
-    xs = (tx[:, None] + dxs[None, :]) % n
-    ys = ty[:, None] + dys[None, :]
-    valid = (ys >= 0) & (ys < n)
-    idx = np.repeat(np.arange(len(tx)), side * side)[valid.ravel()]
-    cells = (
-        (np.int64(z) << Z_SHIFT) | (xs << X_SHIFT) | np.where(valid, ys, 0)
-    ).ravel()[valid.ravel()]
-    return idx, cells

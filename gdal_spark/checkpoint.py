@@ -123,17 +123,6 @@ def _manifest(spark: SparkSession, root: str, snap: int) -> DataFrame:
     return read_parquet(spark, _manifest_path(root, snap))
 
 
-def committed_keys(spark: SparkSession, root: str, key_col: str,
-                   snapshot: int | None = None) -> DataFrame:
-    """Keys committed as of ``snapshot`` (default: the latest). Every
-    manifest is retained, so any earlier commit stays addressable —
-    Iceberg's snapshot time travel over the plain-parquet seam."""
-    snap = _snapshot(root, snapshot)
-    if snap <= 0:
-        return spark.createDataFrame([], f"{key_col} long")
-    return _manifest(spark, root, snap).select(key_col)
-
-
 def lineage(spark: SparkSession, root: str) -> DataFrame:
     """Latest manifest: (key, n_rows, fingerprint, snap = its commit)."""
     return _manifest(spark, root, _snapshot(root))
@@ -143,7 +132,7 @@ def metrics(spark: SparkSession, root: str) -> DataFrame:
     """Per-snapshot run metrics (keys/rows written, wall time,
     throughput, parquet files and bytes the commit wrote) — one row per
     commit. Bounded by the latest committed snapshot (mirroring
-    committed_keys): a crash between the metrics write and the pointer
+    read_committed): a crash between the metrics write and the pointer
     flip must not surface a phantom commit."""
     latest = _snapshot(root)
     base = os.path.join(root, "metrics")

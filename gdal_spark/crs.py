@@ -2054,10 +2054,3 @@ def datum_tmerc_inv_sql_stages(x: str, y: str, out_lon: str,
     st += [("ok", f"(isnan({out_lon}) = false"
                   f" and isnan({out_lat}) = false)")]
     return st
-
-
-def osgb36_sql_stages(lon: str, lat: str) -> list[tuple[str, str]]:
-    """4326 → 27700 staged SQL (datum_tmerc_sql_stages with the OSGB36
-    Helmert + Airy national-grid parameters)."""
-    return datum_tmerc_sql_stages(lon, lat, HELMERT_WGS84_TO_OSGB36,
-                                  TMERC_27700)

@@ -39,8 +39,6 @@ keyed-kernel pattern as the raster tile operators.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
 
 N_CLEVELS = 32  # nBits=5 cube (GDALDitherRGB2PCT fixes nBits=5)
 
@@ -105,32 +103,3 @@ def dither_image(rgb: np.ndarray, palette: np.ndarray,
             err[x + 1, 2] += e - 5 * s
             lb = 2 * s
     return out
-
-
-def dither_rgb2pct(pixels: DataFrame, palette: list[tuple[int, int, int]],
-                   img_col: str = "img_id") -> DataFrame:
-    """Distributed GDALDitherRGB2PCT over an image corpus: pixels
-    (img_id, y, x, r, g, b) -> (img_id, y, x, idx). Groups by image —
-    the serial error stream never crosses an image boundary, matching
-    one reference invocation per image. The palette and its 32^3 cube
-    map broadcast inside the closure (~32 KB)."""
-    pal = np.asarray(palette, dtype=np.int64)
-    cmap = build_colormap_5bit(palette)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["y", "x"])
-        h = int(pdf["y"].max()) + 1
-        w = int(pdf["x"].max()) + 1
-        rgb = np.stack([pdf["r"].to_numpy(), pdf["g"].to_numpy(),
-                        pdf["b"].to_numpy()], axis=1) \
-            .astype(np.uint8).reshape(h, w, 3)
-        idx = dither_image(rgb, pal, cmap)
-        return pd.DataFrame({
-            img_col: pdf[img_col].to_numpy(),
-            "y": pdf["y"].to_numpy(),
-            "x": pdf["x"].to_numpy(),
-            "idx": idx.ravel().astype(np.int32),
-        })
-
-    return pixels.groupBy(img_col).applyInPandas(
-        kernel, f"{img_col} int, y int, x int, idx int")

@@ -83,8 +83,9 @@ _extract_udf = F.pandas_udf(extract_geotags_batch,
                             EXTRACT_SCHEMA).asNondeterministic()
 
 
-def geocode_pages(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """pages → pages + (extracted_text, lat, lon); rows without a geotag
-    keep NULL coordinates (caller filters or left-joins as needed)."""
-    return pages.withColumn("_g", _extract_udf(F.col(text_col))).withColumns(
+def geocode_pages(pages: DataFrame) -> DataFrame:
+    """pages → pages + (extracted_text, lat, lon), from the `text` column;
+    rows without a geotag keep NULL coordinates (caller filters or
+    left-joins as needed)."""
+    return pages.withColumn("_g", _extract_udf(F.col("text"))).withColumns(
         {c: F.col(f"_g.{c}") for c in EXTRACT_SCHEMA.names}).drop("_g")

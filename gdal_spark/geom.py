@@ -108,55 +108,6 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray,
     return inside
 
 
-def clip_ring_to_rect(ring: np.ndarray, minx: float, miny: float,
-                      maxx: float, maxy: float) -> np.ndarray:
-    """Sutherland–Hodgman clip of one ring against an axis-aligned rect.
-
-    Used by the rasterize kernel to confine burn geometry to a tile
-    (GDAL chunks rasterization the same way, alg/gdalrasterize.cpp:861).
-    Returns a closed ring (possibly empty).
-    """
-    poly = ring[:-1] if len(ring) and np.array_equal(ring[0], ring[-1]) else ring
-
-    def clip_edge(pts, inside_fn, intersect_fn):
-        out = []
-        n = len(pts)
-        for i in range(n):
-            cur = pts[i]
-            prev = pts[i - 1]
-            cin = inside_fn(cur)
-            pin = inside_fn(prev)
-            if cin:
-                if not pin:
-                    out.append(intersect_fn(prev, cur))
-                out.append(cur)
-            elif pin:
-                out.append(intersect_fn(prev, cur))
-        return np.asarray(out, dtype=np.float64).reshape(-1, 2)
-
-    def x_cross(p, q, xb):
-        t = (xb - p[0]) / (q[0] - p[0])
-        return (xb, p[1] + t * (q[1] - p[1]))
-
-    def y_cross(p, q, yb):
-        t = (yb - p[1]) / (q[1] - p[1])
-        return (p[0] + t * (q[0] - p[0]), yb)
-
-    for inside_fn, intersect_fn in (
-        (lambda p: p[0] >= minx, lambda p, q: x_cross(p, q, minx)),
-        (lambda p: p[0] <= maxx, lambda p, q: x_cross(p, q, maxx)),
-        (lambda p: p[1] >= miny, lambda p, q: y_cross(p, q, miny)),
-        (lambda p: p[1] <= maxy, lambda p, q: y_cross(p, q, maxy)),
-    ):
-        if len(poly) == 0:
-            return np.empty((0, 2), dtype=np.float64)
-        poly = clip_edge(poly, inside_fn, intersect_fn)
-
-    if len(poly) == 0:
-        return np.empty((0, 2), dtype=np.float64)
-    return np.vstack([poly, poly[:1]])
-
-
 def point_segment_dist2(px, py, ax, ay, bx, by):
     """Squared distance from points (px,py) to segment (a,b), vectorized."""
     px = np.asarray(px, dtype=np.float64)

@@ -35,7 +35,6 @@ GRID_LAT0 = -61.2
 GRID_STEP = 0.06
 GRID_N = 40
 RADIUS = 0.15
-POWER_SMOOTH = 0.0  # GDAL 'smoothing' default
 
 
 def _lit(v: float) -> str:
@@ -100,132 +99,6 @@ c as (
 )"""
 
 
-def idw_sql(engine: str, doc_view: str = "documents") -> str:
-    """Radius-limited IDW (power=2): per-pixel ordered fold of v/d² and
-    1/d² over the doc_id-sorted candidate list."""
-    if engine == SPARK:
-        lst, srt, trn = "collect_list", "array_sort", "transform"
-
-        def fold(list_expr: str) -> str:
-            return (f"aggregate({list_expr}, cast(0 as double),"
-                    f" (s, v) -> s + v)")
-
-        mk = ("struct(cast(doc_id as double) as did,"
-              " v / d2 as num_t, 1.0 / d2 as den_t)")
-    else:
-        lst, srt, trn = "list", "list_sort", "list_transform"
-
-        def fold(list_expr: str) -> str:
-            return (f"list_reduce(list_concat([cast(0 as double)],"
-                    f" {list_expr}), (s, v) -> s + v)")
-
-        mk = ("{'did': cast(doc_id as double),"
-              " 'num_t': v / d2, 'den_t': 1.0 / d2}")
-    return f"""
-with {_grid_candidates(engine, doc_view)},
-packed as (
-  select i, j, count(*) as n_pts, {srt}({lst}({mk})) as arr
-  from c group by i, j
-)
-select i, j, n_pts,
-       {fold(f"{trn}(arr, a -> a.num_t)")}
-     / {fold(f"{trn}(arr, a -> a.den_t)")} as idw_value
-from packed
-"""
-
-
-def idw_grid(spark, sf_dir: str):
-    """Spark DataFrame of the IDW grid over the fixture region."""
-    read_documents(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(idw_sql(SPARK))
-
-
-def proximity_sql(engine: str, doc_view: str = "documents") -> str:
-    """Proximity raster (alg/gdalproximity.cpp:94): per grid pixel the
-    distance to the nearest burned point within RADIUS (pixels with no
-    point in range emit nothing — the nodata convention). MIN over
-    candidate distances is order-independent, so no ordered folds are
-    needed for cross-engine exactness."""
-    return f"""
-with {_grid_candidates(engine, doc_view)}
-select i, j, count(*) as n_in_range, sqrt(min(d2)) as dist
-from c group by i, j
-"""
-
-
-def proximity_grid(spark, sf_dir: str):
-    read_documents(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(proximity_sql(SPARK))
-
-
-def moving_average_sql(engine: str, doc_view: str = "documents") -> str:
-    """GDALGridMovingAverage (alg/gdalgrid.cpp:629): per pixel the mean
-    of candidate values within the radius. The sum is an ordered fold
-    over the doc_id-sorted candidate list for cross-engine IEEE
-    exactness."""
-    if engine == SPARK:
-        lst, srt, trn = "collect_list", "array_sort", "transform"
-
-        def fold(e: str) -> str:
-            return f"aggregate({e}, cast(0 as double), (s, v) -> s + v)"
-
-        mk = "struct(doc_id, v)"
-    else:
-        lst, srt, trn = "list", "list_sort", "list_transform"
-
-        def fold(e: str) -> str:
-            return (f"list_reduce(list_concat([cast(0 as double)],"
-                    f" {e}), (s, v) -> s + v)")
-
-        mk = "{'doc_id': doc_id, 'v': v}"
-    return f"""
-with {_grid_candidates(engine, doc_view)},
-packed as (
-  select i, j, count(*) as n_pts, {srt}({lst}({mk})) as arr
-  from c group by i, j
-)
-select i, j, n_pts,
-       {fold(f"{trn}(arr, a -> a.v)")} / n_pts as avg_value
-from packed
-"""
-
-
-def nearest_grid_sql(engine: str, doc_view: str = "documents") -> str:
-    """GDALGridNearestNeighbor (alg/gdalgrid.cpp:879): per pixel the
-    value of the nearest candidate (ties broken by doc_id — GDAL's
-    quadtree visit order is an implementation detail, so the tie rule is
-    pinned explicitly and shared by both engines)."""
-    if engine == SPARK:
-        pick = ("element_at(array_sort(collect_list("
-                "struct(d2, doc_id, v))), 1)")
-    else:
-        pick = ("list_extract(list_sort(list("
-                "{'d2': d2, 'doc_id': doc_id, 'v': v})), 1)")
-    return f"""
-with {_grid_candidates(engine, doc_view)},
-packed as (
-  select i, j, count(*) as n_pts, {pick} as best
-  from c group by i, j
-)
-select i, j, n_pts, best.doc_id as src_doc_id, best.v as value,
-       sqrt(best.d2) as dist
-from packed
-"""
-
-
-def data_metrics_sql(engine: str, doc_view: str = "documents") -> str:
-    """GDAL data-metric kernels (alg/gdalgrid.cpp GDALGridDataMetric*):
-    per-pixel count, minimum/maximum distance and range of candidate
-    values — all order-independent aggregates, exact by construction."""
-    return f"""
-with {_grid_candidates(engine, doc_view)}
-select i, j, count(*) as n_pts,
-       sqrt(min(d2)) as min_dist, sqrt(max(d2)) as max_dist,
-       max(v) - min(v) as value_range
-from c group by i, j
-"""
-
-
 def grid_kernels_sql(engine: str, doc_view: str = "documents") -> str:
     """The full gridding kernel suite in ONE keyed aggregation pass:
     IDW (GDALGridInverseDistanceToAPower), moving average
@@ -235,9 +108,11 @@ def grid_kernels_sql(engine: str, doc_view: str = "documents") -> str:
     (n_pts, min_dist) pair). All kernels share the same k-ring candidate
     join, so computing them together costs a single shuffle on (i, j)
     instead of five — the plan shape that matters at a 10^12-point
-    table. Ordered-fold / pinned-tie rules are identical to the
-    individual kernels (idw_sql, moving_average_sql, nearest_grid_sql),
-    so cross-engine IEEE exactness carries over unchanged."""
+    table. Sums are ordered folds over the doc_id-sorted candidate list
+    and the nearest neighbor breaks distance ties by doc_id (GDAL's
+    quadtree visit order is an implementation detail, so the tie rule is
+    pinned and shared by both engines): Spark and DuckDB give identical
+    IEEE doubles."""
     if engine == SPARK:
         lst, srt, trn = "collect_list", "array_sort", "transform"
 
@@ -282,14 +157,7 @@ from packed
 """
 
 
-def _grid_runner(sql_builder):
-    def run(spark, sf_dir: str):
-        read_documents(spark, sf_dir).createOrReplaceTempView("documents")
-        return spark.sql(sql_builder(SPARK))
-    return run
-
-
-moving_average_grid = _grid_runner(moving_average_sql)
-nearest_grid = _grid_runner(nearest_grid_sql)
-data_metrics_grid = _grid_runner(data_metrics_sql)
-grid_kernels = _grid_runner(grid_kernels_sql)
+def grid_kernels(spark, sf_dir: str):
+    """Spark DataFrame of grid_kernels_sql over ``sf_dir``'s documents."""
+    read_documents(spark, sf_dir).createOrReplaceTempView("documents")
+    return spark.sql(grid_kernels_sql(SPARK))

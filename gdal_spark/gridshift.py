@@ -59,7 +59,6 @@ CONUS_GRID = {
 
 # module-level aliases for the UK fixture (the original single-grid API)
 LON0, LAT0, STEP = UK_GRID["lon0"], UK_GRID["lat0"], UK_GRID["step"]
-NI, NJ = UK_GRID["ni"], UK_GRID["nj"]
 
 
 def _node_sql(i: str, j: str, c: tuple) -> str:
@@ -205,8 +204,8 @@ def grid_datum_duckdb_sql(pts_select: str, grid: dict, tmerc_params,
 def osgb36_grid_fwd(spark: SparkSession, pts: DataFrame,
                     lon: str = "lon", lat: str = "lat") -> DataFrame:
     """EPSG:4326 → EPSG:27700 with the GRID datum path (the flag-gated
-    alternative to crs.osgb36_sql_stages' single Helmert): UK grid →
-    Airy Krüger."""
+    alternative to the single Helmert of crs.datum_tmerc_sql_stages with
+    HELMERT_WGS84_TO_OSGB36): UK grid → Airy Krüger."""
     from gdal_spark.crs import TMERC_27700
 
     return grid_datum_fwd(spark, pts, UK_GRID, TMERC_27700, lon, lat)

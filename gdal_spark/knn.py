@@ -73,12 +73,11 @@ _DL = (f"if(abs(q_lat) + {_R} >= 90.0, 180.0,"
 
 
 def knn_join(points: DataFrame, queries: DataFrame, k: int,
-             z0: int | None = None, point_id: str = "doc_id",
-             query_id: str = "qid") -> DataFrame:
+             z0: int | None = None) -> DataFrame:
     """Exact k nearest points for every query row.
 
-    points:  (point_id, lon, lat, …);  queries: (query_id, lon, lat, …)
-    returns: (query_id, point_id, rank, dist_m)
+    points:  (doc_id, lon, lat, …);  queries: (qid, lon, lat, …)
+    returns: (qid, doc_id, rank, dist_m)
 
     ``z0`` is the finest zoom of the count pyramid (default ``Z0``;
     values below 2 are raised to 2). Exactness does not depend on it.
@@ -90,8 +89,8 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int,
 
     # 1. the count pyramid (an invalid point's cells are NULL: no
     # equi-join matches them)
-    pts = (points.selectExpr(point_id, "lon as p_lon", "lat as p_lat", *tiles)
-           .selectExpr(point_id, "p_lon", "p_lat", "explode(array({})) as _cell".format(
+    pts = (points.selectExpr("doc_id", "lon as p_lon", "lat as p_lat", *tiles)
+           .selectExpr("doc_id", "p_lon", "p_lat", "explode(array({})) as _cell".format(
                ", ".join(_cell(str(zf - j), f"shiftright(_tx, {j})", f"shiftright(_ty, {j})")
                          for j in range(nlev)))))
     counts = pts.groupBy("_cell").count()
@@ -100,16 +99,16 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int,
     # the query id alone, the rows stay hash-partitioned by it through
     # the top-k window, which then needs no shuffle of its own when the
     # candidate join broadcasts the points.
-    qcols = (query_id, "q_lon", "q_lat", "_tx", "_ty")
+    qcols = ("qid", "q_lon", "q_lat", "_tx", "_ty")
     n = f"shiftleft(1L, {zf} - _i div 9)"
     bx, by = "shiftright(_tx, _i div 9) + _i % 3 - 1", "shiftright(_ty, _i div 9) + _i div 3 % 3 - 1"
-    blk = (queries.selectExpr(query_id, "lon as q_lon", "lat as q_lat", *tiles)
+    blk = (queries.selectExpr("qid", "lon as q_lon", "lat as q_lat", *tiles)
            .where("_tx is not null and _ty is not null")
            .selectExpr(*qcols, f"explode(sequence(0, {9 * nlev - 1})) as _i")
            .selectExpr(*qcols, "_i div 9 as _j", f"if({by} between 0 and {n} - 1,"
                        f" {_cell(f'{zf} - _i div 9', f'pmod({bx}, {n})', by)}, null) as _cell")
            .join(counts, "_cell", "left")
-           .groupBy(query_id)
+           .groupBy("qid")
            .agg(*(F.expr(f"any_value({c}) as {c}") for c in qcols[1:]),
                 F.expr("array({}) as _c".format(", ".join(
                     f"sum(if(_j = {j}, count, 0))" for j in range(nlev))))))
@@ -126,24 +125,24 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int,
                       f"least({tile_y_floor_sql(f'q_lat - {_R}', '_n')}, _n - 1) as _y1",
                       f"{tile_x_floor_sql(f'q_lon - {_DL}', '_n')} as _x0",
                       f"{tile_x_floor_sql(f'q_lon + {_DL}', '_n')} as _x1")
-          .selectExpr(query_id, "q_lon", "q_lat",
+          .selectExpr("qid", "q_lon", "q_lat",
                       f"if(_ok and (_y1 - _y0 + 1) * least(_x1 - _x0 + 1, _n) <= {MAX_COVER},"
                       " named_struct('z', _z, 'n', _n, 'y0', _y0, 'x0', _x0,"
                       " 'ny', _y1 - _y0 + 1, 'nx', least(_x1 - _x0 + 1, _n)), null) as _cv"))
 
     # 2. the finest qualifying level (max compares z first), then 4. its
     # cover's cells
-    cov = (lv.groupBy(query_id, "q_lon", "q_lat")
+    cov = (lv.groupBy("qid", "q_lon", "q_lat")
            .agg(F.expr("max(_cv) as _cv"))
-           .selectExpr(query_id, "q_lon", "q_lat", "_cv",
+           .selectExpr("qid", "q_lon", "q_lat", "_cv",
                        "explode(sequence(0L, _cv.ny * _cv.nx - 1)) as _i")
-           .selectExpr(query_id, "q_lon", "q_lat", _cell(
+           .selectExpr("qid", "q_lon", "q_lat", _cell(
                "_cv.z", "pmod(_cv.x0 + _i % _cv.nx, _cv.n)", "_cv.y0 + _i div _cv.nx") + " as _cell"))
 
     # 5. one equi-join, one top-k window
     dist = haversine_sql("q_lon", "q_lat", "p_lon", "p_lat")
     return (cov.join(pts, "_cell")
-            .selectExpr(query_id, point_id, f"{dist} as dist_m")
-            .selectExpr(query_id, point_id, f"row_number() over (partition by {query_id}"
-                        f" order by dist_m, {point_id}) as rank", "dist_m")
+            .selectExpr("qid", "doc_id", f"{dist} as dist_m")
+            .selectExpr("qid", "doc_id", "row_number() over (partition by qid"
+                        " order by dist_m, doc_id) as rank", "dist_m")
             .where(f"rank <= {k}"))

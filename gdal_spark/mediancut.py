@@ -192,17 +192,3 @@ def pct_assign(pixels: DataFrame,
     assignment of GDALDitherRGB2PCT without error diffusion."""
     return pixels.withColumn(
         "idx", F.expr(nearest_index_sql(palette)).cast("int"))
-
-
-def pct2rgb_sql(palette: list[tuple[int, int, int]], idx: str = "idx",
-                dialect: str = "spark") -> list[tuple[str, str]]:
-    """pct2rgb (palette expansion, gdal_translate -expand rgb): three
-    (name, expr) pairs mapping a palette index back to RGB."""
-    if dialect == "spark":
-        entries = ", ".join(f"array({pr}, {pg}, {pb})"
-                            for pr, pg, pb in palette)
-        return [(c, f"element_at(array({entries}), {idx} + 1)[{i}]")
-                for i, c in enumerate(("r2", "g2", "b2"))]
-    entries = ", ".join(f"[{pr}, {pg}, {pb}]" for pr, pg, pb in palette)
-    return [(c, f"([{entries}])[{idx} + 1][{i + 1}]")
-            for i, c in enumerate(("r2", "g2", "b2"))]

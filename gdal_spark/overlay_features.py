@@ -378,15 +378,6 @@ def union_features(spark: SparkSession, defs_a: list[dict],
     pairs = intersection_features(spark, defs_a, defs_b).select(
         "input_zone", "input_eas_id", "method_zone", "method_eas_id",
         "n_pieces", "geom")
-    left_a, left_b = _leftover_features(spark, defs_a, defs_b)
-    return pairs.unionByName(left_a).unionByName(left_b)
-
-
-def _leftover_features(spark: SparkSession, defs_a: list[dict],
-                       defs_b: list[dict]) -> tuple[DataFrame, DataFrame]:
-    """The two leftover feature classes shared by Union and
-    SymDifference: erase_features run in both directions, with the
-    absent side's prefixed attributes NULL (ogrlayer.cpp:3077)."""
     left_a = erase_features(spark, defs_a, defs_b).filter("n_pieces > 0") \
         .select("input_zone", "input_eas_id",
                 F.lit(None).cast("int").alias("method_zone"),
@@ -398,17 +389,7 @@ def _leftover_features(spark: SparkSession, defs_a: list[dict],
                 F.col("input_zone").alias("method_zone"),
                 F.col("input_eas_id").alias("method_eas_id"),
                 "n_pieces", "geom")
-    return left_a, left_b
-
-
-def sym_difference_features(spark: SparkSession, defs_a: list[dict],
-                            defs_b: list[dict]) -> DataFrame:
-    """Layer-algebra SymDifference with GEOMETRY output
-    (ogrlayer.cpp:4300): exactly the two leftover classes of Union —
-    input − union(method) and method − union(input) — without the pair
-    pieces."""
-    left_a, left_b = _leftover_features(spark, defs_a, defs_b)
-    return left_a.unionByName(left_b)
+    return pairs.unionByName(left_a).unionByName(left_b)
 
 
 # ---------------------------------------------------------------------------
@@ -449,8 +430,8 @@ def union_features_canon(spark: SparkSession) -> DataFrame:
     """Union feature set in hashable form: one row per feature of the
     three GDAL Union classes with a class tag and the piece area decoded
     FROM THE WKB GEOMETRY (so the contract exercises the real feature
-    output, not the aggregate shortcut). SymDifference is the
-    cls <> 'pair' subset (sym_difference_features)."""
+    output, not the aggregate shortcut). SymDifference (ogrlayer.cpp:4300)
+    is the cls <> 'pair' subset."""
     a, b = union_contract_defs()
     feats = union_features(spark, a, b)
     multi_area = F.pandas_udf(_multi_area_kernel, "double")

@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gdal_spark.checkpoint import read_parquet
 
-N_CITIES = 20
 HASH_MULT = 2654435761  # Knuth multiplicative hash
 HASH_MOD = 1000000007
 

@@ -93,12 +93,12 @@ def _broadcast(index: ZoneIndex, sc: SparkContext) -> Broadcast:
     return bc
 
 
-def pip_join(points: DataFrame, index: ZoneIndex, lon: str = "lon",
-             lat: str = "lat", how: str = "inner",
-             zone_col: str = "zone_id") -> DataFrame:
-    """Join a point DataFrame to the broadcast zone index.
+def pip_join(points: DataFrame, index: ZoneIndex,
+             how: str = "inner") -> DataFrame:
+    """Join a point DataFrame with `lon`/`lat` columns to the broadcast
+    zone index.
 
-    inner → output = input columns + zone_col (one row per containment)
+    inner → output = input columns + zone_id (one row per containment)
     semi  → input rows inside ≥1 zone (deduplicated)
     anti  → input rows inside no zone; a row whose lon/lat is NULL, NaN
             or out of range is inside nothing and outside nothing, so
@@ -124,12 +124,12 @@ def pip_join(points: DataFrame, index: ZoneIndex, lon: str = "lon",
     # filter below the projections that compute lon and lat, so their
     # expressions are evaluated twice, for the UDF and for the output.
     zs = F.pandas_udf(zone_ids, ArrayType(LongType())).asNondeterministic()(
-        F.col(lon), F.col(lat))
+        F.col("lon"), F.col("lat"))
     if how == "inner":
-        return points.select("*", F.explode(zs).alias(zone_col))
+        return points.select("*", F.explode(zs).alias("zone_id"))
     tagged = points.withColumn("_zs", zs)
     if how == "semi":
         return tagged.filter(F.size("_zs") > 0).drop("_zs")
     # NaN fails `between` in Spark (NaN sorts above every number)
-    return tagged.filter(f"size(_zs) = 0 and {lon} between -180.0 and 180.0"
-                         f" and {lat} between -90.0 and 90.0").drop("_zs")
+    return tagged.filter("size(_zs) = 0 and lon between -180.0 and 180.0"
+                         " and lat between -90.0 and 90.0").drop("_zs")

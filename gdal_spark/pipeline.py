@@ -36,11 +36,16 @@ def zone_index() -> ZoneIndex:
     return build_zone_index_from_defs(zone_defs())
 
 
-def geocoded_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pages → geocoded subset with (lon, lat, cell_id)."""
-    pages = pages_from_documents(spark, sf_dir)
+def geotag_cells(pages: DataFrame) -> DataFrame:
+    """pages → the geotagged rows with (extracted_text, lat, lon, cell_id);
+    the batch and streaming pipelines share this chain."""
     geo = geocode_pages(pages).filter(F.col("lat").isNotNull())
     return geo.withColumn("cell_id", cells.cell_id_col("lon", "lat", CELL_ZOOM))
+
+
+def geocoded_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """pages → geocoded subset with (lon, lat, cell_id)."""
+    return geotag_cells(pages_from_documents(spark, sf_dir))
 
 
 def pages_per_zone(spark: SparkSession, sf_dir: str) -> DataFrame:

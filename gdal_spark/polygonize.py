@@ -716,29 +716,6 @@ def trace_component_rings(pixels: set[tuple[int, int]]) -> list[list[tuple]]:
     return rings
 
 
-def polygonize_ring_features(labeled: DataFrame) -> DataFrame:
-    """Per component: traced boundary rings as Polygon WKB (outer ring =
-    largest |area|, the rest holes) — the feature-geometry surface."""
-    import numpy as np
-
-    from gdal_spark import geom as G
-    from gdal_spark import wkb as W
-
-    def per_comp(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pix = set(zip(pdf["gx"].astype(int), pdf["gy"].astype(int)))
-        rings = trace_component_rings(pix)
-        arrs = [np.asarray(r, dtype=np.float64) for r in rings]
-        arrs.sort(key=lambda a: -abs(G.ring_area(a)))
-        return pd.DataFrame({
-            "comp": [int(key[0])],
-            "n_rings": [len(arrs)],
-            "geom": [bytearray(W.dumps_polygon([a.tolist() for a in arrs]))],
-        })
-
-    return labeled.groupBy("comp").applyInPandas(
-        per_comp, "comp long, n_rings long, geom binary")
-
-
 def near_pixels(tiles: DataFrame, threshold: float) -> DataFrame:
     """(gx, gy) rows of pixels with value <= threshold — the sparse
     near-black mask. Only mask pixels ever leave the decode kernel, so

@@ -93,8 +93,8 @@ def q_polygonize_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polygonize ring structure (alg/polygonize_polygonizer.cpp RPolygon
     output): per 4-connected component the corner/side/pixel counts, the
     boundary edge count and the Euler ring count (1 outer + holes) —
-    exact combinatorics via DISTINCT-count aggregates; the traced ring
-    WKB geometry is the polygonize_ring_features API (tested)."""
+    exact combinatorics via DISTINCT-count aggregates. Tests check the
+    ring count against traced rings (polygonize.trace_component_rings)."""
     from gdal_spark.polygonize import label_pixels, polygonize_rings_summary
     from gdal_spark.raster import pixel_counts
 
@@ -102,29 +102,6 @@ def q_polygonize_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid_w = 1 << (RASTER_Z + 6)
     labeled = label_pixels(pixel_counts(pts, RASTER_Z), grid_w)
     return polygonize_rings_summary(labeled, grid_w)
-
-
-def q_dem_tri_tpi_roughness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """gdaldem TRI/TPI/roughness (apps/gdaldem_lib.cpp) over the halo
-    exchange, integer-scaled kernels."""
-    from gdal_spark.raster import halo_tri_tpi_roughness
-
-    _ = sf_dir
-    return halo_tri_tpi_roughness(synth_dem_tiles(spark, DEM_PX), DEM_PX)
-
-
-def q_dem_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """gdaldem hillshade + aspect (apps/gdaldem_lib.cpp:812-835 Horn
-    variant, az 315 / alt 45 / z 1, cellsize 30) from the halo-exchange
-    gradient; byte hillshade 1..255, rounded compass aspect (flat → −1).
-    The trig stage runs JVM-side (whole-stage codegen) on the integer
-    numerators."""
-    from gdal_spark.raster import hillshade_aspect_sql
-
-    _ = sf_dir
-    g = halo_gradient(synth_dem_tiles(spark, DEM_PX), DEM_PX)
-    g.createOrReplaceTempView("dem_gradient_hs")
-    return spark.sql(hillshade_aspect_sql("dem_gradient_hs"))
 
 
 def q_dem_hillshade_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -159,15 +136,6 @@ def q_dem_slope_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(slope_formats_sql("dem_slope_fmt"))
 
 
-def q_color_relief(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """gdaldem color-relief: ramp-interpolated RGB for window tile
-    (1, 2) of the synthetic DEM."""
-    from gdal_spark.raster import color_relief
-
-    _ = sf_dir
-    return color_relief(synth_dem_tiles(spark, DEM_PX), 1, 2)
-
-
 # bilinear fixture: fractional pixel coords synthesized from doc_id by
 # integer-exact arithmetic (identical SQL text in both engines)
 _BILIN_Q = ("select doc_id as qid,"
@@ -199,14 +167,6 @@ def _sample_dem(spark: SparkSession, sf_dir: str, kernel: str) -> DataFrame:
     queries = spark.sql(_BILIN_Q)
     return sample_interp(synth_dem_tiles(spark, DEM_PX), queries, DEM_PX,
                          kernel)
-
-
-def q_warp_average(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """gdalwarp -r average (GWKAverageOrMode): DEM downsampled 3.7× by
-    per-tile integer partials + one keyed reduction."""
-    _ = sf_dir
-    tiles = synth_dem_tiles(spark, DEM_PX)
-    return warp_average(tiles, _SRC_GT, DEM_PX, _AVG_DST_GT, _AVG_DST_PX)
 
 
 def q_warp_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -693,8 +653,7 @@ def q_raster_footprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     footprint is summarized as (bbox, n_px). The oracle derives the
     components analytically from the modular pattern (stripe = gx div
     96, segment = gy div 128) — the distributed labeling must agree
-    with modular arithmetic truth. Ring WKB output for footprints
-    rides polygonize_ring_features (tested there)."""
+    with modular arithmetic truth."""
     from gdal_spark.polygonize import label_pixels
 
     _ = sf_dir

@@ -21,13 +21,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gdal_spark import cells
-from gdal_spark.extract import geocode_pages
 from gdal_spark.pip_join import pip_join
-from gdal_spark.pipeline import CELL_ZOOM, zone_index
+from gdal_spark.pipeline import geotag_cells, zone_index
 
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, text string, "
                 "lang string, doc_id long")
+WINDOW = "1 hour"  # zonal count window on the crawl timestamp
+WATERMARK = "2 hours"  # late-data horizon, bounds the streaming state
 
 
 def stream_pages(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -40,31 +40,24 @@ def stream_pages(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
-def streaming_zone_counts(pages: DataFrame,
-                          window: str = "1 hour",
-                          watermark: str = "2 hours") -> DataFrame:
-    """Streaming flagship: geocode → cell → PIP → windowed zonal counts
-    with a late-data watermark on the crawl timestamp."""
-    geo = geocode_pages(pages).filter(F.col("lat").isNotNull())
-    geo = geo.withColumn("cell_id", cells.cell_id_col("lon", "lat",
-                                                      CELL_ZOOM))
-    joined = pip_join(geo, zone_index(),
-                      how="inner")
+def streaming_zone_counts(pages: DataFrame) -> DataFrame:
+    """Streaming flagship: geocode → cell → PIP → WINDOW zonal counts
+    with a WATERMARK on the crawl timestamp."""
+    joined = pip_join(geotag_cells(pages), zone_index(), how="inner")
     return (
-        joined.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "zone_id")
+        joined.withWatermark("warc_ts", WATERMARK)
+        .groupBy(F.window("warc_ts", WINDOW).alias("w"), "zone_id")
         .agg(F.count(F.lit(1)).alias("n_pages"))
         .select(F.col("w.start").alias("window_start"), "zone_id", "n_pages")
     )
 
 
-def streaming_url_dedup(pages: DataFrame,
-                        watermark: str = "2 hours") -> DataFrame:
+def streaming_url_dedup(pages: DataFrame) -> DataFrame:
     """Stateful streaming dedup: a re-crawled url arriving within the
-    watermark horizon is dropped (the streaming twin of dedup.dedup_exact;
+    WATERMARK horizon is dropped (the streaming twin of dedup.dedup_exact;
     state is bounded by the watermark — the scale requirement)."""
     return (
-        pages.withWatermark("warc_ts", watermark)
+        pages.withWatermark("warc_ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["url"])
     )
 
@@ -77,11 +70,7 @@ def stateful_zone_totals(pages: DataFrame) -> DataFrame:
                                              GroupStateTimeout)
     import pandas as pd
 
-    geo = geocode_pages(pages).filter(F.col("lat").isNotNull())
-    joined = pip_join(
-        geo.withColumn("cell_id",
-                       cells.cell_id_col("lon", "lat", CELL_ZOOM)),
-        zone_index(), how="inner")
+    joined = pip_join(geotag_cells(pages), zone_index(), how="inner")
 
     def update(key, pdfs, state: GroupState):
         n_new = sum(len(p) for p in pdfs)

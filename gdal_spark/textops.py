@@ -36,8 +36,6 @@ FP_MOD = 1000000007  # polynomial fingerprint modulus
 FP_BASE = 31
 
 N_MINHASH = 128
-LSH_BANDS = 32
-LSH_ROWS = 4  # 32 bands x 4 rows; catch prob at J=0.8 is 1-(1-0.8^4)^32 ≈ 1-5e-8
 
 SIMHASH_BITS = 60  # bigint-safe in both engines (1<<63 overflows DuckDB)
 SIMHASH_BANDS = 4  # 4 x 15 bits: hamming<=3 pairs share >=1 band (pigeonhole)

@@ -11,9 +11,8 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-from gdal_spark.checkpoint import (committed_keys, lineage, metrics,
-                                   read_committed, read_parquet,
-                                   run_checkpointed)
+from gdal_spark.checkpoint import (lineage, metrics, read_committed,
+                                   read_parquet, run_checkpointed)
 from gdal_spark.pages import points_from_documents
 from gdal_spark.pipeline import geocoded_pages
 from gdal_spark.raster import rasterize_points
@@ -56,8 +55,7 @@ def test_resume_after_partial_run(spark, tmp_path, workload):
     assert first_files <= set(
         glob.glob(os.path.join(root, "data", "*", "*.parquet")))
 
-    got = {r["tile_key"]
-           for r in committed_keys(spark, root, "tile_key").collect()}
+    got = {r["tile_key"] for r in lineage(spark, root).collect()}
     assert got == full
 
     # run 3 is a no-op (idempotent re-run)

@@ -34,31 +34,6 @@ class TestCells:
         tx, ty = cells.tile_xy_np(lon, lat, 14)
         assert np.array_equal(x, tx) and np.array_equal(y, ty)
 
-    def test_parent_cell(self):
-        cid = cells.cell_id_np(np.array([13.4]), np.array([52.5]), 12)
-        pid = cells.parent_cell(cid, 11)
-        z, x, y = cells.unpack_cell_id(pid)
-        assert (z[0], x[0], y[0]) == (11, 1100, 671)
-
-    def test_tile_bounds_inverse(self):
-        tx, ty = cells.tile_xy_np(np.array([13.4]), np.array([52.5]), 12)
-        lon0, lat0, lon1, lat1 = cells.tile_bounds_np(tx, ty, 12)
-        assert lon0[0] <= 13.4 <= lon1[0]
-        assert lat0[0] <= 52.5 <= lat1[0]
-
-    def test_k_ring(self):
-        ring = cells.k_ring(0, 5, 4, 1)
-        assert len(ring) == 9
-        assert (15, 5) in ring  # x wraps around antimeridian
-        ring0 = cells.k_ring(3, 0, 4, 1)
-        assert len(ring0) == 6  # clamped at the pole
-
-    def test_ring_cells_np_matches_k_ring(self):
-        idx, cid = cells.ring_cells_np(np.array([3]), np.array([0]), 4, 1)
-        z, x, y = cells.unpack_cell_id(cid)
-        got = set(zip(x.tolist(), y.tolist()))
-        assert got == set(cells.k_ring(3, 0, 4, 1))
-
 
 class TestCRS:
     def test_utm_zone31_known_points(self):
@@ -114,13 +89,6 @@ class TestGeom:
         py = np.array([3.0, 3.0, 3.0, 1.0])
         assert list(geom.points_in_ring(px, py, ring)) == [
             True, False, True, True]
-
-    def test_clip_ring_to_rect(self):
-        ring = np.array([[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]], float)
-        out = geom.clip_ring_to_rect(ring, 2, 2, 6, 6)
-        assert geom.polygon_area([out]) == 4.0
-        empty = geom.clip_ring_to_rect(ring, 10, 10, 12, 12)
-        assert len(empty) == 0
 
     def test_centroid(self):
         ring = np.array([[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]], float)

@@ -6,8 +6,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from gdal_spark.dither import (build_colormap_5bit, dither_image,
-                               dither_rgb2pct)
+from gdal_spark.dither import build_colormap_5bit, dither_image
 
 
 def _scalar_dither(rgb, palette):
@@ -116,29 +115,6 @@ def test_kernel_matches_scalar_twin_random():
         out = dither_image(rgb, np.asarray(pal), build_colormap_5bit(pal))
         exp = _scalar_dither(rgb.tolist(), pal)
         assert out.tolist() == exp
-
-
-def test_distributed_matches_local(spark):
-    """dither_rgb2pct over a 4-image corpus == dither_image per image,
-    and images are independent (no cross-image error bleed)."""
-    rng = np.random.RandomState(7)
-    pal = [tuple(int(v) for v in rng.randint(0, 256, 3)) for _ in range(8)]
-    h = w = 16
-    imgs = {i: rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
-            for i in range(4)}
-    rows = [(i, y, x, int(a[y, x, 0]), int(a[y, x, 1]), int(a[y, x, 2]))
-            for i, a in imgs.items()
-            for y in range(h) for x in range(w)]
-    df = spark.createDataFrame(
-        rows, "img_id int, y int, x int, r int, g int, b int")
-    got = {(r["img_id"], r["y"], r["x"]): r["idx"]
-           for r in dither_rgb2pct(df, pal).collect()}
-    cmap = build_colormap_5bit(pal)
-    for i, a in imgs.items():
-        exp = dither_image(a, np.asarray(pal), cmap)
-        for y in range(h):
-            for x in range(w):
-                assert got[(i, y, x)] == exp[y, x]
 
 
 def test_contract_row_matches_oracle(spark):

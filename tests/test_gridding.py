@@ -1,17 +1,18 @@
-"""IDW gridding semantics (alg/gdalgrid.cpp IDW-to-a-power analogue)."""
+"""Gridding semantics (alg/gdalgrid.cpp IDW, moving average, nearest
+neighbor and data metrics, all columns of the one-pass grid_kernels)."""
 
 from __future__ import annotations
 
 import pytest
 
 from gdal_spark.gridding import (GRID_LAT0, GRID_LON0, GRID_N, GRID_STEP,
-                                 RADIUS, idw_grid)
+                                 RADIUS, grid_kernels)
 from gdal_spark.pages import points_from_documents
 
 
 @pytest.fixture(scope="module")
 def grid(spark):
-    return idw_grid(spark, "/root/testdata/sf0.001").toPandas()
+    return grid_kernels(spark, "/root/testdata/sf0.001").toPandas()
 
 
 def test_grid_bounds_and_weights(grid):
@@ -50,65 +51,33 @@ def test_pixels_without_nearby_points_are_absent(spark, grid):
         assert (d2 <= RADIUS * RADIUS).sum() == r["n_pts"]
 
 
-def test_nearest_grid_matches_brute_force(spark):
+def test_nearest_grid_matches_brute_force(spark, grid):
     """GDALGridNearestNeighbor analogue: every pixel's chosen point is
     the true distance-minimum over all points (doc_id tie-break)."""
     import numpy as np
 
-    from gdal_spark.gridding import nearest_grid
-
-    res = nearest_grid(spark, "/root/testdata/sf0.001").toPandas()
     pts = points_from_documents(spark, "/root/testdata/sf0.001").toPandas()
     px = pts["lon"].astype(float).to_numpy()
     py = pts["lat"].astype(float).to_numpy()
     ids = pts["doc_id"].to_numpy()
-    assert len(res) > 0
-    for _, r in res.sample(min(30, len(res)), random_state=2).iterrows():
+    assert len(grid) > 0
+    for _, r in grid.sample(min(30, len(grid)), random_state=2).iterrows():
         cx = GRID_LON0 + (r["i"] + 0.5) * GRID_STEP
         cy = GRID_LAT0 + (r["j"] + 0.5) * GRID_STEP
         d2 = (px - cx) ** 2 + (py - cy) ** 2
         order = np.lexsort((ids, d2))
         best = order[0]
-        assert ids[best] == r["src_doc_id"]
-        assert abs(np.sqrt(d2[best]) - r["dist"]) < 1e-12
+        assert ids[best] == r["nn_doc_id"]
+        assert abs(np.sqrt(d2[best]) - r["nn_dist"]) < 1e-12
 
 
-def test_moving_average_within_range_and_counts(spark):
-    from gdal_spark.gridding import data_metrics_grid, moving_average_grid
-
-    avg = moving_average_grid(spark, "/root/testdata/sf0.001").toPandas()
-    met = data_metrics_grid(spark, "/root/testdata/sf0.001").toPandas()
-    assert (avg["avg_value"] >= 0).all() and (avg["avg_value"] <= 96).all()
-    # metrics and moving-average see the identical candidate sets
-    m = avg.merge(met, on=["i", "j"], suffixes=("_a", "_m"))
-    assert len(m) == len(avg) == len(met)
-    assert (m["n_pts_a"] == m["n_pts_m"]).all()
-    assert (m["min_dist"] <= m["max_dist"]).all()
-    assert (m["max_dist"] <= RADIUS + 1e-12).all()
-
-
-def test_grid_kernels_suite_matches_individual_kernels(spark):
-    """The one-pass kernel suite (grid_kernels_sql: single (i, j)
-    shuffle) reproduces every individual kernel bit-for-bit."""
-    from gdal_spark.gridding import (grid_kernels, idw_grid, nearest_grid,
-                                     proximity_grid)
-
-    sf = "/root/testdata/sf0.001"
-    suite = grid_kernels(spark, sf).toPandas().set_index(["i", "j"])
-    idw = idw_grid(spark, sf).toPandas().set_index(["i", "j"])
-    nn = nearest_grid(spark, sf).toPandas().set_index(["i", "j"])
-    prox = proximity_grid(spark, sf).toPandas().set_index(["i", "j"])
-    assert len(suite) == len(idw) == len(nn) == len(prox) > 0
-    assert (suite["idw_value"] == idw["idw_value"].reindex(
-        suite.index)).all()
-    assert (suite["n_pts"] == idw["n_pts"].reindex(suite.index)).all()
-    assert (suite["nn_doc_id"] == nn["src_doc_id"].reindex(
-        suite.index)).all()
-    assert (suite["nn_value"] == nn["value"].reindex(suite.index)).all()
-    # proximity raster ≡ the (n_pts, min_dist) pair of the suite
-    assert (suite["min_dist"] == prox["dist"].reindex(suite.index)).all()
-    assert (suite["n_pts"] == prox["n_in_range"].reindex(
-        suite.index)).all()
+def test_moving_average_within_range_and_counts(grid):
+    assert (grid["avg_value"] >= 0).all() and (grid["avg_value"] <= 96).all()
+    assert (grid["min_dist"] <= grid["max_dist"]).all()
+    assert (grid["max_dist"] <= RADIUS + 1e-12).all()
+    # nearest neighbor and the data metrics see the same candidate set
+    assert (grid["nn_dist"] == grid["min_dist"]).all()
+    assert (grid.loc[grid["n_pts"] == 1, "value_range"] == 0).all()
 
 
 # ---------------------------------------------------------------------------

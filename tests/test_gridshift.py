@@ -5,9 +5,11 @@ from __future__ import annotations
 
 import numpy as np
 
-from gdal_spark.gridshift import (LAT0, LON0, NI, NJ, STEP,
+from gdal_spark.gridshift import (LAT0, LON0, STEP, UK_GRID,
                                   bilinear_shift_stages, cell_key_stages,
                                   grid_cells, osgb36_grid_fwd)
+
+NI, NJ = UK_GRID["ni"], UK_GRID["nj"]
 
 
 def _node_dlat(i: int, j: int) -> float:

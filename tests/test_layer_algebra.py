@@ -279,37 +279,6 @@ def test_union_features_partitions_input(spark):
     assert b_left and all(r["input_eas_id"] is None for r in b_left)
 
 
-def test_sym_difference_features(spark):
-    """SymDifference = Union minus the pair class (ogrlayer.cpp:4300):
-    only the two leftover classes, and total area = area(A) + area(B)
-    − 2·area(A∩B) against an independent numpy computation."""
-    from gdal_spark import geom as G
-    from gdal_spark import wkb as W
-    from gdal_spark.constructive import boolean_pair
-    from gdal_spark.overlay_features import (sym_difference_features,
-                                             union_contract_defs)
-
-    defs_a, defs_b = union_contract_defs()
-    rows = sym_difference_features(spark, defs_a, defs_b).collect()
-    assert all((r["input_zone"] is None) != (r["method_zone"] is None)
-               for r in rows)
-
-    def multi_area(blob):
-        g = W.loads(bytes(blob))
-        return sum(abs(G.ring_area(np.asarray(p[0], dtype=np.float64)))
-                   for p in g["coords"])
-
-    inter = 0.0
-    for a in defs_a:
-        for b in defs_b:
-            traps = boolean_pair(a["rings"], b["rings"], "intersection")
-            inter += sum(abs(G.ring_area(t)) for t in traps)
-    total_a = sum(G.polygon_area(z["rings"]) for z in defs_a)
-    total_b = sum(G.polygon_area(z["rings"]) for z in defs_b)
-    got = sum(multi_area(r["geom"]) for r in rows)
-    assert got == pytest.approx(total_a + total_b - 2 * inter, abs=1e-8)
-
-
 # ---------------------------------------------------------------------------
 # option surface (ogrlayer.cpp:3290-3330): KEEP_LOWER_DIMENSION_GEOMETRIES,
 # PROMOTE_TO_MULTI, INPUT_PREFIX/METHOD_PREFIX — autotest cases ported from

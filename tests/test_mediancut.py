@@ -5,8 +5,7 @@ import numpy as np
 import pytest
 
 from gdal_spark.mediancut import (SHIFT, median_cut_boxes,
-                                  nearest_index_sql, palette_from_boxes,
-                                  pct2rgb_sql)
+                                  nearest_index_sql, palette_from_boxes)
 
 
 def _hist(colors_counts):
@@ -67,18 +66,6 @@ def test_nearest_index_first_min_tie(spark, ddb):
         sql = nearest_index_sql(pal, "20", "0", "0", dialect=engine)
         got = q(f"select {sql} as i")
         assert got == 0, engine  # 10 and 30 tie at d=100 → first wins
-
-
-def test_pct2rgb_roundtrip(spark, ddb):
-    pal = [(8, 16, 24), (200, 100, 50)]
-    stages = pct2rgb_sql(pal, "1", dialect="spark")
-    row = spark.sql(
-        "select " + ", ".join(f"{e} as {n}" for n, e in stages)).collect()[0]
-    assert (row["r2"], row["g2"], row["b2"]) == (200, 100, 50)
-    stages = pct2rgb_sql(pal, "0", dialect="duckdb")
-    row = ddb.execute(
-        "select " + ", ".join(f"{e} as {n}" for n, e in stages)).fetchone()
-    assert tuple(row) == (8, 16, 24)
 
 
 def test_median_index_at_least_min_plus_one():

@@ -395,9 +395,11 @@ def test_warp_average_mass_conservation(spark):
     import numpy as np
 
     from gdal_spark.queries.raster import (_AVG_DST_GT, _AVG_DST_PX,
-                                           _SRC_GT, q_warp_average)
+                                           _SRC_GT, DEM_PX)
+    from gdal_spark.raster import warp_average
 
-    res = q_warp_average(spark, "unused").toPandas()
+    res = warp_average(synth_dem_tiles(spark, DEM_PX), _SRC_GT, DEM_PX,
+                       _AVG_DST_GT, _AVG_DST_PX).toPandas()
     assert res["n_src"].sum() <= 256 * 256
     # reconstruct integer sums and compare against direct numpy
     gy, gx = np.mgrid[0:256, 0:256]
@@ -417,9 +419,11 @@ def test_tri_tpi_roughness_direct(spark):
     interior pixels."""
     import numpy as np
 
-    from gdal_spark.queries.raster import q_dem_tri_tpi_roughness
+    from gdal_spark.queries.raster import DEM_PX
+    from gdal_spark.raster import halo_tri_tpi_roughness
 
-    res = q_dem_tri_tpi_roughness(spark, "unused").toPandas()
+    res = halo_tri_tpi_roughness(synth_dem_tiles(spark, DEM_PX),
+                                 DEM_PX).toPandas()
     assert len(res) == 254 * 254
 
     def elev(gx, gy):
@@ -439,10 +443,11 @@ def test_tri_tpi_roughness_direct(spark):
 def test_color_relief_ramp_endpoints(spark):
     """Channels stay in [0, 255]; pixels at exact stop elevations get
     the stop color."""
-    from gdal_spark.queries.raster import q_color_relief
-    from gdal_spark.raster import COLOR_RAMP
+    from gdal_spark.queries.raster import DEM_PX
+    from gdal_spark.raster import COLOR_RAMP, color_relief
 
-    res = q_color_relief(spark, "unused").toPandas()
+    # window tile (1, 2) of the synthetic DEM
+    res = color_relief(synth_dem_tiles(spark, DEM_PX), 1, 2).toPandas()
     assert len(res) == 64 * 64
     for c in ("r", "g", "b"):
         assert (res[c] >= 0).all() and (res[c] <= 255).all()
@@ -463,11 +468,13 @@ def test_color_relief_ramp_endpoints(spark):
 def test_hillshade_aspect_matches_numpy_and_oracle(spark, ddb):
     """dem_hillshade_aspect: Spark SQL trig over the halo gradient equals
     (a) the numpy hillshade_np kernel and (b) the DuckDB oracle SQL."""
-    from gdal_spark.queries.raster import _dem_slope_oracle, q_dem_hillshade
+    from gdal_spark.queries.raster import DEM_PX, _dem_slope_oracle
     from gdal_spark.raster import hillshade_aspect_sql, hillshade_np
     from tests.conftest import compare_frames
 
-    res = q_dem_hillshade(spark, "unused")
+    halo_gradient(synth_dem_tiles(spark, DEM_PX), DEM_PX) \
+        .createOrReplaceTempView("dem_gradient_hs")
+    res = spark.sql(hillshade_aspect_sql("dem_gradient_hs"))
     n = compare_frames(res, ddb,
                        hillshade_aspect_sql(f"({_dem_slope_oracle()})"))
     assert n == 254 * 254  # interior pixels of the 256² DEM
@@ -548,17 +555,15 @@ def test_rasterize_single_aligned_square(spark):
 
 
 def test_polygonize_ring_tracer_matches_euler(spark):
-    """Traced boundary rings agree with the Euler ring count for every
-    fixture component, and ring areas reconcile: |outer| − Σ|holes| =
-    n_pixels (pixel units)."""
+    """Boundary rings traced per component agree with the Euler ring
+    count for every fixture component, and ring areas reconcile:
+    |outer| − Σ|holes| = n_pixels (pixel units)."""
     import numpy as np
 
     from gdal_spark import geom as G
-    from gdal_spark import wkb as W
     from gdal_spark.pages import points_from_documents
-    from gdal_spark.polygonize import (label_pixels,
-                                       polygonize_ring_features,
-                                       polygonize_rings_summary)
+    from gdal_spark.polygonize import (label_pixels, polygonize_rings_summary,
+                                       trace_component_rings)
     from gdal_spark.queries.raster import RASTER_Z
     from gdal_spark.raster import pixel_counts
 
@@ -567,18 +572,16 @@ def test_polygonize_ring_tracer_matches_euler(spark):
     labeled = label_pixels(pixel_counts(pts, RASTER_Z), grid_w).cache()
     summary = polygonize_rings_summary(labeled, grid_w).toPandas() \
         .set_index("comp")
-    feats = polygonize_ring_features(labeled).toPandas()
-    assert len(feats) == len(summary) > 100
-    n_with_holes = 0
-    for _, r in feats.iterrows():
-        want = summary.loc[r["comp"]]
-        assert r["n_rings"] == want["n_rings"], r["comp"]
-        g = W.loads(bytes(r["geom"]))
-        areas = [abs(G.ring_area(np.asarray(ring))) for ring in g["coords"]]
-        net = areas[0] - sum(areas[1:])
-        assert net == want["n_pixels"], r["comp"]
-        if r["n_rings"] > 1:
-            n_with_holes += 1
+    comps = labeled.select("comp", "gx", "gy").toPandas().groupby("comp")
+    assert len(comps) == len(summary) > 100
+    for comp, pdf in comps:
+        rings = trace_component_rings(
+            set(zip(pdf["gx"].astype(int), pdf["gy"].astype(int))))
+        want = summary.loc[comp]
+        assert len(rings) == want["n_rings"], comp
+        areas = sorted((abs(G.ring_area(np.asarray(r, dtype=np.float64)))
+                        for r in rings), reverse=True)
+        assert areas[0] - sum(areas[1:]) == want["n_pixels"], comp
     # synthetic hotspots are dense enough that some components have holes
     assert (summary["n_rings"] >= 1).all()
 

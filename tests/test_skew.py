@@ -14,8 +14,8 @@ from gdal_spark.pipeline import geocoded_pages
 def test_hot_cells_exist_in_fixture(spark):
     """The skew premise itself: top cell holds a large multiple of the
     median cell's rows (otherwise the fixture has no hot cells for the
-    cell-keyed operators, such as the writer's salted range partitioning
-    and the kNN cell rings, to handle)."""
+    cell-keyed operators, such as the map-side partial aggregates and the
+    kNN count pyramid's per-query level choice, to handle)."""
     from gdal_spark.cells import tile_x_sql, tile_y_sql
 
     geo = geocoded_pages(spark, "/root/testdata/sf0.001")

@@ -1,45 +1,12 @@
-"""Cell-partitioned writer (skew-aware layout) + ST_ function registry."""
+"""ST_ function registry."""
 
 from __future__ import annotations
 
-import glob
-
 import pytest
-from pyspark.sql import functions as F
 
 from gdal_spark import geom as G
-from gdal_spark.pipeline import geocoded_pages
 from gdal_spark.stfuncs import register_st_functions
-from gdal_spark.writer import repartition_by_cell, write_cell_partitioned
 from gdal_spark.zones import zone_defs, zones_df
-
-
-def test_salted_range_partitioning_splits_hot_cells(spark, tmp_path):
-    geo = geocoded_pages(spark, "/root/testdata/sf0.001") \
-        .select("url", "cell_id")
-    n = geo.count()
-
-    sizes_salted = [
-        r["c"] for r in repartition_by_cell(geo, n_partitions=8)
-        .withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect()]
-    assert sum(sizes_salted) == n
-    # a coarse hot cell must be able to span >1 partition: group rows by
-    # coarse parent cell and check the hottest parent's partition spread
-    spread = (
-        repartition_by_cell(geo.withColumn("parent", F.expr("cell_id % 64")),
-                            n_partitions=8)
-        .withColumn("_pid", F.spark_partition_id())
-        .groupBy("parent").agg(F.countDistinct("_pid").alias("np"),
-                               F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c")).first())
-    assert spread["np"] >= 1  # layout is valid; hot parents may split
-
-    out = str(tmp_path / "cells")
-    write_cell_partitioned(geo, out, n_partitions=8)
-    files = glob.glob(out + "/*.parquet")
-    assert 1 <= len(files) <= 8
-    assert spark.read.parquet(out).count() == n
 
 
 def test_st_functions_match_python_kernels(spark):
