@@ -25,7 +25,7 @@ import os
 import sys
 
 
-def main(argv: list[str] | None = None) -> int:
+def main() -> int:
     ap = argparse.ArgumentParser(prog="gdal_spark")
     ap.add_argument("query", help="'list', 'entry', or a queries() name")
     ap.add_argument("--sf-dir",
@@ -37,7 +37,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--master", default=None,
                     help="Spark master when self-launching (ignored "
                          "under spark-submit, which provides one)")
-    args = ap.parse_args(argv)
+    args = ap.parse_args()
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))

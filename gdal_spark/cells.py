@@ -85,12 +85,12 @@ def cell_id_sql(lon: str, lat: str, z: int) -> str:
 # ---------------------------------------------------------------------------
 
 
-def tile_x_col(lon: str, z: int) -> Column:
-    return F.expr(tile_x_sql(lon, z))
+def tile_x_col(z: int) -> Column:
+    return F.expr(tile_x_sql("lon", z))
 
 
-def tile_y_col(lat: str, z: int) -> Column:
-    return F.expr(tile_y_sql(lat, z))
+def tile_y_col(z: int) -> Column:
+    return F.expr(tile_y_sql("lat", z))
 
 
 def cell_id_col(lon: str, lat: str, z: int) -> Column:

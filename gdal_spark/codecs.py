@@ -1613,6 +1613,8 @@ def _predictor2_decode(arr: np.ndarray) -> np.ndarray:
     return np.cumsum(arr.astype(np.int64), axis=1).astype(arr.dtype)
 
 
+TIFF_ROWS_PER_STRIP = 8
+
 _TIFF_DTYPES = {
     # numpy kind/itemsize -> (BitsPerSample, SampleFormat)
     ("u", 1): (8, 1), ("u", 2): (16, 1), ("f", 4): (32, 3),
@@ -1621,7 +1623,6 @@ _TIFF_DTYPES = {
 
 def encode_tiff(arr: np.ndarray, compression: str = "none",
                 geotransform: tuple | None = None,
-                rows_per_strip: int = 8,
                 predictor: bool = False,
                 tiled: bool = False,
                 tile_wh: tuple[int, int] = (16, 16),
@@ -1690,8 +1691,8 @@ def encode_tiff(arr: np.ndarray, compression: str = "none",
                                           x0 * spp:(x0 + xs) * spp]
                 strips.append(_pack_block(tile, tw))
     else:
-        strips = [_pack_block(px[y0:y0 + rows_per_strip], w)
-                  for y0 in range(0, h, rows_per_strip)]
+        strips = [_pack_block(px[y0:y0 + TIFF_ROWS_PER_STRIP], w)
+                  for y0 in range(0, h, TIFF_ROWS_PER_STRIP)]
     nstrips = len(strips)
 
     # layout: header(8) | strip data | IFD | external tag values
@@ -1714,7 +1715,7 @@ def encode_tiff(arr: np.ndarray, compression: str = "none",
         tag(273, 4, None)  # strip offsets, filled later
     tag(277, 3, [spp])
     if not tiled:
-        tag(278, 4, [rows_per_strip])
+        tag(278, 4, [TIFF_ROWS_PER_STRIP])
         tag(279, 4, [len(s) for s in strips])
     tag(284, 3, [1])
     if predictor:
@@ -2216,18 +2217,21 @@ def decode_shp(data: bytes) -> tuple[int, list]:
     return shape_type, shapes
 
 
-def encode_dbf(field_name: str, values: list[int],
-               width: int = 12) -> bytes:
-    """Single numeric-column dBASE III table (the .dbf half of the
-    shapefile pair)."""
+DBF_FIELD = "val"
+DBF_WIDTH = 12
+
+
+def encode_dbf(values: list[int]) -> bytes:
+    """Single numeric-column (DBF_FIELD) dBASE III table (the .dbf half
+    of the shapefile pair)."""
     n = len(values)
     header_size = 32 + 32 + 1
-    record_size = 1 + width
+    record_size = 1 + DBF_WIDTH
     hdr = struct.pack("<B3BIHH20x", 3, 99, 1, 1, n, header_size,
                       record_size)
-    name = field_name.encode("ascii")[:10].ljust(11, b"\x00")
-    fld = name + b"N" + b"\x00" * 4 + bytes([width, 0]) + b"\x00" * 14
-    body = b"".join(b" " + str(v).rjust(width).encode("ascii")
+    name = DBF_FIELD.encode("ascii")[:10].ljust(11, b"\x00")
+    fld = name + b"N" + b"\x00" * 4 + bytes([DBF_WIDTH, 0]) + b"\x00" * 14
+    body = b"".join(b" " + str(v).rjust(DBF_WIDTH).encode("ascii")
                     for v in values)
     return hdr + fld + b"\x0d" + body + b"\x1a"
 

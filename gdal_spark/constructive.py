@@ -785,9 +785,6 @@ def constructive_cases(spark):
     registered ST_ SQL functions over WKB columns (Arrow-batched
     kernels); union rows pin npoints = -1 (the trapezoid decomposition's
     vertex count is representation detail, not semantics)."""
-    import pandas as pd  # noqa: F811
-    from pyspark.sql import functions as F
-
     from gdal_spark.stfuncs import register_st_functions
 
     register_st_functions(spark)

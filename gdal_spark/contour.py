@@ -32,14 +32,12 @@ unnecessary AND keep (t − a)/(b − a) exactly representable inputs).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gdal_spark.raster import DEM_ELEV_SQL, TILE_PX
+from gdal_spark.raster import TILE_PX
 
 # marching-squares case table: case idx (8·TL + 4·TR + 2·BR + 1·BL,
 # bit set = pixel above level) → iso-segments as edge-code pairs.
@@ -53,6 +51,10 @@ CASES: dict[int, list[tuple[int, int]]] = {
 
 CONTOUR_LINES_PX = 128
 LEVELS = (52.5, 105.5)
+# Below this many cross-tile merge edges the component merge is a driver
+# union-find; above it, the distributed pointer-jump loop (see
+# _labeled_segments for the sizing).
+DRIVER_MERGE_MAX = 200_000
 
 _SEG_SCHEMA = ("li int, na long, nb long, lroot long, kind int, "
                "v double, b int")
@@ -97,8 +99,7 @@ def _edge_nodes(code: int, cx: np.ndarray, cy: np.ndarray,
     return 2 * (cy * w + cx + 1) + 1    # right: vertical at (cx+1, cy)
 
 
-def contour_segments(tiles: DataFrame, raster_px: int,
-                     thresholds=LEVELS) -> DataFrame:
+def contour_segments(tiles: DataFrame, raster_px: int) -> DataFrame:
     """Per-level iso-segments with tile-local component labels.
 
     Output rows (kind 0 = segment, kind 1 = seam link):
@@ -112,7 +113,7 @@ def contour_segments(tiles: DataFrame, raster_px: int,
     w = raster_px
     n_tiles = raster_px // t
     span = 2 * w * w
-    levels = list(thresholds)
+    levels = list(LEVELS)
 
     shifted = tiles.select(
         "tx", "ty", "data",
@@ -218,23 +219,22 @@ def contour_segments(tiles: DataFrame, raster_px: int,
 # ---------------------------------------------------------------------------
 
 
-def _idiv(a: str, b, engine: str) -> str:
-    op = "div" if engine == "spark" else "//"
-    return f"(({a}) {op} ({b}))"
+def _idiv(a: str, b) -> str:
+    return f"(({a}) // ({b}))"
 
 
-def _thr_expr(thresholds=LEVELS) -> str:
+def _thr_expr() -> str:
     arms = " ".join(f"when {li} then {thr!r}e0"
-                    for li, thr in enumerate(thresholds))
+                    for li, thr in enumerate(LEVELS))
     return f"(case li {arms} end)"
 
 
-def _node_xy(node: str, w: int, t_expr: str,
-             engine: str) -> tuple[str, str, str]:
-    """(cx, cy, boundary-flag) exprs for crossing node column `node`."""
-    pix = _idiv(node, 2, engine)
+def _node_xy(node: str, w: int, t_expr: str) -> tuple[str, str, str]:
+    """(cx, cy, boundary-flag) DuckDB exprs for crossing node column
+    `node`."""
+    pix = _idiv(node, 2)
     isv = f"(({node}) % 2)"
-    py = _idiv(pix, w, engine)
+    py = _idiv(pix, w)
     px = f"(({pix}) % {w})"
 
     def e(xx: str, yy: str) -> str:
@@ -254,12 +254,11 @@ def _node_xy(node: str, w: int, t_expr: str,
     return cx, cy, bnd
 
 
-def _seg_exprs(w: int, engine: str,
-               thresholds=LEVELS) -> tuple[str, str]:
-    """(length, boundary) exprs over segment columns (li, na, nb)."""
-    t_expr = _thr_expr(thresholds)
-    cxa, cya, ba = _node_xy("na", w, t_expr, engine)
-    cxb, cyb, bb = _node_xy("nb", w, t_expr, engine)
+def _seg_exprs(w: int) -> tuple[str, str]:
+    """(length, boundary) DuckDB exprs over segment columns (li, na, nb)."""
+    t_expr = _thr_expr()
+    cxa, cya, ba = _node_xy("na", w, t_expr)
+    cxb, cyb, bb = _node_xy("nb", w, t_expr)
     dx = f"({cxb} - {cxa})"
     dy = f"({cyb} - {cya})"
     v = f"sqrt({dx} * {dx} + {dy} * {dy})"
@@ -267,14 +266,12 @@ def _seg_exprs(w: int, engine: str,
     return v, b
 
 
-def _labeled_segments(tiles: DataFrame, raster_px: int,
-                      thresholds=LEVELS,
-                      driver_merge_max: int = 200_000) -> DataFrame:
+def _labeled_segments(tiles: DataFrame, raster_px: int) -> DataFrame:
     """Globally-labeled iso-segments: (li, comp, na, nb, v, b) — the
     shared front half of contour_lines / contour_linestrings."""
     from gdal_spark.polygonize import propagate_labels
 
-    mixed = contour_segments(tiles, raster_px, thresholds).cache()
+    mixed = contour_segments(tiles, raster_px).cache()
     segs = mixed.filter("kind = 0").drop("kind")
     links = mixed.filter("kind = 1").select(
         "li", F.col("na").alias("node"), "lroot")
@@ -285,17 +282,17 @@ def _labeled_segments(tiles: DataFrame, raster_px: int,
     # merge the edge-incident subgraph only — the cross-tile merge graph
     # is O(seam crossings), far smaller than the part count; parts
     # untouched by any seam keep their local label (coalesce). Below
-    # `driver_merge_max` edges the merge is a driver union-find (a seam
+    # DRIVER_MERGE_MAX edges the merge is a driver union-find (a seam
     # chain of k crossings costs k pointer hops, not k join rounds); the
     # distributed pointer-jump loop is the large-scale path — the same
     # two-regime split GDAL's contour writer applies per chunk.
-    # 200k default sized in bytes: an edge row is two int64 labels
+    # 200k sized in bytes: an edge row is two int64 labels
     # (~16 B + ~40 B Row overhead collected), so the driver copy tops
     # out ≈ 11 MB plus a dict of ≤ 400k int keys (~30 MB) — well under
     # one task's memory; at 200k+ seam crossings the O(log d)
     # pointer-jump rounds amortize and the distributed path wins anyway.
     n_edges = edges.count()
-    if n_edges <= driver_merge_max:
+    if n_edges <= DRIVER_MERGE_MAX:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -322,21 +319,19 @@ def _labeled_segments(tiles: DataFrame, raster_px: int,
     return labeled.select("li", "comp", "na", "nb", "v", "b")
 
 
-def contour_lines(tiles: DataFrame, raster_px: int = CONTOUR_LINES_PX,
-                  thresholds=LEVELS,
-                  driver_merge_max: int = 200_000) -> DataFrame:
+def contour_lines(tiles: DataFrame,
+                  raster_px: int = CONTOUR_LINES_PX) -> DataFrame:
     """Stitched contour polylines: one row per connected line per level.
 
     (level, comp = min crossing-node id, n_segments, closed, len_sum)
     """
-    per_seg = _labeled_segments(tiles, raster_px, thresholds,
-                                driver_merge_max)
+    per_seg = _labeled_segments(tiles, raster_px)
     agg = per_seg.groupBy("li", "comp").agg(
         F.expr("collect_list(struct(na, nb, v))").alias("arr"),
         F.count(F.lit(1)).alias("n_segments"),
         F.expr("min(least(na, nb))").alias("comp_id"),
         F.max("b").alias("_bmax"))
-    t_expr = _thr_expr(thresholds)
+    t_expr = _thr_expr()
     return agg.selectExpr(
         f"{t_expr} as level",
         "comp_id as comp",
@@ -347,19 +342,18 @@ def contour_lines(tiles: DataFrame, raster_px: int = CONTOUR_LINES_PX,
     )
 
 
-def contour_lines_oracle_sql(raster_px: int = CONTOUR_LINES_PX,
-                             thresholds=LEVELS) -> str:
+def contour_lines_oracle_sql() -> str:
     """DuckDB ground truth: the same marching-squares case table as a
     VALUES relation, flat recursive-CTE min-label components over the
     crossing-node graph, and the identical sorted-fold length sum."""
-    w = raster_px
-    t_expr = _thr_expr(thresholds)
+    w = CONTOUR_LINES_PX
+    t_expr = _thr_expr()
     lv_rows = ", ".join(f"({li}, {thr!r}e0)"
-                        for li, thr in enumerate(thresholds))
+                        for li, thr in enumerate(LEVELS))
     m_rows = ", ".join(f"({ci}, {ea}, {eb})"
                        for ci, pairs in CASES.items()
                        for ea, eb in pairs)
-    v, bnd = _seg_exprs(w, "duckdb", thresholds)
+    v, bnd = _seg_exprs(w)
 
     def elev(xx: str, yy: str) -> str:
         return (f"((({xx}) * ({xx}) * 5 + ({yy}) * ({yy}) * 3"
@@ -442,9 +436,7 @@ def _micro(c: np.ndarray) -> np.ndarray:
 
 
 def contour_linestrings(tiles: DataFrame,
-                        raster_px: int = CONTOUR_LINES_PX,
-                        thresholds=LEVELS,
-                        driver_merge_max: int = 200_000) -> DataFrame:
+                        raster_px: int = CONTOUR_LINES_PX) -> DataFrame:
     """Stitched contour LINESTRINGS: one row per connected line per
     level with ordered-vertex geometry (the real GDALContourGenerate
     output shape, alg/contour.cpp:393 + alg/marching_squares/).
@@ -467,10 +459,9 @@ def contour_linestrings(tiles: DataFrame,
     """
     import struct
 
-    per_seg = _labeled_segments(tiles, raster_px, thresholds,
-                                driver_merge_max)
+    per_seg = _labeled_segments(tiles, raster_px)
     w = raster_px
-    levels = list(thresholds)
+    levels = list(LEVELS)
 
     def trace(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         li, comp = int(key[0]), int(key[1])
@@ -519,7 +510,7 @@ def contour_linestrings(tiles: DataFrame,
         })
 
     out = per_seg.groupBy("li", "comp").applyInPandas(trace, _LS_SCHEMA)
-    t_expr = _thr_expr(thresholds)
+    t_expr = _thr_expr()
     return out.selectExpr(
         f"{t_expr} as level",
         # canonical component id: min crossing node (comp labels are
@@ -528,22 +519,21 @@ def contour_linestrings(tiles: DataFrame,
         "n_points", "closed", "len_sum", "geom", "wkb")
 
 
-def contour_linestrings_oracle_sql(raster_px: int = CONTOUR_LINES_PX,
-                                   thresholds=LEVELS) -> str:
+def contour_linestrings_oracle_sql() -> str:
     """DuckDB ground truth for contour_linestrings (minus the WKB
     column): components via the flat min-label CTE, then a recursive
     deterministic path walk — seeded at the canonical start, stepping
     to the only non-previous neighbor — serialized with the identical
     micro-unit expression text."""
-    w = raster_px
-    t_expr = _thr_expr(thresholds)
+    w = CONTOUR_LINES_PX
+    t_expr = _thr_expr()
     lv_rows = ", ".join(f"({li}, {thr!r}e0)"
-                        for li, thr in enumerate(thresholds))
+                        for li, thr in enumerate(LEVELS))
     m_rows = ", ".join(f"({ci}, {ea}, {eb})"
                        for ci, pairs in CASES.items()
                        for ea, eb in pairs)
-    v, bnd = _seg_exprs(w, "duckdb", thresholds)
-    cxw, cyw, _b = _node_xy("cur", w, "t", "duckdb")
+    v, bnd = _seg_exprs(w)
+    cxw, cyw, _b = _node_xy("cur", w, "t")
 
     def elev(xx: str, yy: str) -> str:
         return (f"((({xx}) * ({xx}) * 5 + ({yy}) * ({yy}) * 3"

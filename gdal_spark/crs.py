@@ -96,6 +96,8 @@ BETA = (
 
 UTM_K0 = 0.9996
 UTM_FE = 500000.0
+# Fixed-point / Newton steps of every ellipsoidal inverse, numpy and SQL
+INV_ITERS = 8
 MAX_MERC_LAT = 89.9999999  # beyond this WebMercator y diverges → failure flag
 
 
@@ -136,8 +138,7 @@ def webmercator_inv_np(x, y):
     return lon, lat, ok
 
 
-def tmerc_fwd_np(lon, lat, lon0_deg: float, k0: float = UTM_K0,
-                 fe: float = UTM_FE, fn: float = 0.0):
+def tmerc_fwd_np(lon, lat, lon0_deg: float, fn: float = 0.0):
     """Krüger-series forward transverse Mercator. Returns (E, N, ok)."""
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
@@ -158,20 +159,19 @@ def tmerc_fwd_np(lon, lat, lon0_deg: float, k0: float = UTM_K0,
     for j, a in enumerate(ALPHA, start=1):
         xi += a * np.sin(2 * j * xi_p) * np.cosh(2 * j * eta_p)
         eta += a * np.cos(2 * j * xi_p) * np.sinh(2 * j * eta_p)
-    E = fe + k0 * KRUGER_A * eta
-    N = fn + k0 * KRUGER_A * xi
+    E = UTM_FE + UTM_K0 * KRUGER_A * eta
+    N = fn + UTM_K0 * KRUGER_A * xi
     E = np.where(ok, E, np.nan)
     N = np.where(ok, N, np.nan)
     return E, N, ok
 
 
-def tmerc_inv_np(E, N, lon0_deg: float, k0: float = UTM_K0,
-                 fe: float = UTM_FE, fn: float = 0.0):
+def tmerc_inv_np(E, N, lon0_deg: float, fn: float = 0.0):
     """Inverse transverse Mercator (Krüger + Newton on tau). (lon, lat, ok)."""
     E = np.asarray(E, dtype=np.float64)
     N = np.asarray(N, dtype=np.float64)
-    xi = (N - fn) / (k0 * KRUGER_A)
-    eta = (E - fe) / (k0 * KRUGER_A)
+    xi = (N - fn) / (UTM_K0 * KRUGER_A)
+    eta = (E - UTM_FE) / (UTM_K0 * KRUGER_A)
     xi_p = xi.copy()
     eta_p = eta.copy()
     for j, b in enumerate(BETA, start=1):
@@ -246,7 +246,6 @@ def webmercator_sql_stages(lon: str, lat: str) -> list[tuple[str, str]]:
 
 
 def tmerc_sql_stages(lon: str, lat: str, lon0_deg: float,
-                     k0: float = UTM_K0, fe: float = UTM_FE,
                      fn: float = 0.0) -> list[tuple[str, str]]:
     """Stages computing easting/northing/ok — Krüger forward, shared text.
 
@@ -277,8 +276,9 @@ def tmerc_sql_stages(lon: str, lat: str, lon0_deg: float,
         stages.append((f"_sh{j}", f"(exp({2*j} * _etap) - exp({-2*j} * _etap)) / 2.0"))
         stages.append(("_xi", f"_xi + {_fmt(a)} * sin({2*j} * _xip) * _ch{j}"))
         stages.append(("_eta", f"_eta + {_fmt(a)} * cos({2*j} * _xip) * _sh{j}"))
-    ka = _fmt(k0 * KRUGER_A)
-    stages.append(("easting", f"case when ok then {_fmt(fe)} + {ka} * _eta"
+    ka = _fmt(UTM_K0 * KRUGER_A)
+    stages.append(("easting", f"case when ok then {_fmt(UTM_FE)}"
+                              f" + {ka} * _eta"
                               f" else cast('nan' as double) end"))
     stages.append(("northing", f"case when ok then {_fmt(fn)} + {ka} * _xi"
                                f" else cast('nan' as double) end"))
@@ -352,7 +352,7 @@ def lcc_fwd_np(lon, lat, p: LccParams = LCC_2154):
     return easting, northing, ok
 
 
-def lcc_inv_np(E, N, p: LccParams = LCC_2154, iters: int = 8):
+def lcc_inv_np(E, N, p: LccParams = LCC_2154):
     """LCC 2SP inverse (fixed-point iteration on φ)."""
     E = np.asarray(E, dtype=np.float64)
     N = np.asarray(N, dtype=np.float64)
@@ -364,7 +364,7 @@ def lcc_inv_np(E, N, p: LccParams = LCC_2154, iters: int = 8):
     lon = np.degrees(th / p.n + math.radians(p.lon0_deg))
     lon = lon - 360.0 * np.floor((lon + 180.0) / 360.0)
     phi = np.pi / 2.0 - 2.0 * np.arctan(t)
-    for _ in range(iters):
+    for _ in range(INV_ITERS):
         s = p.e * np.sin(phi)
         phi = (np.pi / 2.0
                - 2.0 * np.arctan(t * ((1.0 - s) / (1.0 + s)) ** (p.e / 2.0)))
@@ -470,7 +470,7 @@ def ps_fwd_np(lon, lat, p: PsParams = PS_3031):
     return easting, northing, ok
 
 
-def ps_inv_np(E, N, p: PsParams = PS_3031, iters: int = 8):
+def ps_inv_np(E, N, p: PsParams = PS_3031):
     """Polar Stereographic inverse (fixed-point on the south-equivalent
     ψ, then φ = sgn·ψ)."""
     E = np.asarray(E, dtype=np.float64)
@@ -479,7 +479,7 @@ def ps_inv_np(E, N, p: PsParams = PS_3031, iters: int = 8):
     y = p.sgn * (N - p.fn)
     t = np.sqrt(x * x + y * y) / p.k_rho
     phi = 2.0 * np.arctan(t) - np.pi / 2.0
-    for _ in range(iters):
+    for _ in range(INV_ITERS):
         s = p.e * np.sin(phi)
         phi = 2.0 * np.arctan(
             t * np.exp((p.e / 2.0) * np.log((1.0 + s) / (1.0 - s)))) \
@@ -583,7 +583,7 @@ def aea_fwd_np(lon, lat, p: AeaParams = AEA_3577):
     return easting, northing, ok
 
 
-def aea_inv_np(E, N, p: AeaParams = AEA_3577, iters: int = 8):
+def aea_inv_np(E, N, p: AeaParams = AEA_3577):
     """Albers Equal Area inverse (fixed-point on φ, Snyder eq. 3-16)."""
     E = np.asarray(E, dtype=np.float64)
     N = np.asarray(N, dtype=np.float64)
@@ -597,7 +597,7 @@ def aea_inv_np(E, N, p: AeaParams = AEA_3577, iters: int = 8):
     lon = lon - 360.0 * np.floor((lon + 180.0) / 360.0)
     qp = (p.c - rho * rho * p.n * p.n / (p.a * p.a)) / p.n
     phi = np.arcsin(np.clip(qp / 2.0, -1.0, 1.0))
-    for _ in range(iters):
+    for _ in range(INV_ITERS):
         s = np.sin(phi)
         es = p.e * s
         phi = phi + ((1.0 - e2 * s * s) ** 2 / (2.0 * np.cos(phi))) * (
@@ -702,7 +702,7 @@ def laea_fwd_np(lon, lat, p: LaeaParams = LAEA_3035):
     return np.where(ok, E, np.nan), np.where(ok, N, np.nan), ok
 
 
-def laea_inv_np(E, N, p: LaeaParams = LAEA_3035, iters: int = 8):
+def laea_inv_np(E, N, p: LaeaParams = LAEA_3035):
     """LAEA oblique inverse (Snyder 24-26..24-29 + 3-16 fixed-point)."""
     E = np.asarray(E, dtype=np.float64)
     N = np.asarray(N, dtype=np.float64)
@@ -724,7 +724,7 @@ def laea_inv_np(E, N, p: LaeaParams = LAEA_3035, iters: int = 8):
     lam = np.where(at_centre, 0.0, lam)
     q = p.qp * sin_bp
     phi = np.arcsin(np.clip(q / 2.0, -1.0, 1.0))
-    for _ in range(iters):
+    for _ in range(INV_ITERS):
         s = np.sin(phi)
         phi = phi + ((1.0 - e2 * s * s) ** 2 / (2.0 * np.cos(phi))) * (
             q / (1.0 - e2) - s / (1.0 - e2 * s * s)
@@ -770,13 +770,10 @@ def laea_sql_stages(lon: str, lat: str,
     ]
 
 
-def laea_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
-                        out_lat: str = "lat",
-                        p: LaeaParams = LAEA_3035
-                        ) -> list[tuple[str, str]]:
+def laea_inv_sql_stages(x: str, y: str,
+                        p: LaeaParams = LAEA_3035) -> list[tuple[str, str]]:
     """LAEA oblique inverse, Snyder 3-16 fixed-point unrolled (mirrors
-    laea_inv_np). Defined below INV_ITERS; declared here to keep the
-    family's four surfaces adjacent."""
+    laea_inv_np)."""
     e = _fmt(p.e)
     e2 = _fmt(p.e * p.e)
     d = _fmt(p.d)
@@ -802,7 +799,7 @@ def laea_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
         ("_iq", f"{_fmt(p.qp)} * _isbp"),
         ("_iphi", "asin(greatest(-1.0, least(1.0, _iq / 2.0)))"),
     ]
-    for _ in range(8):  # INV_ITERS (defined just below this section)
+    for _ in range(INV_ITERS):
         stages.append(("_is", "sin(_iphi)"))
         stages.append((
             "_iphi",
@@ -812,12 +809,12 @@ def laea_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
             f" + (1.0 / (2.0 * {e}))"
             f" * ln((1.0 - {e} * _is) / (1.0 + {e} * _is)))"))
     stages.append(("_lonu", f"degrees(_ilam) + {_fmt(p.lon0_deg)}"))
-    stages.append((out_lon,
+    stages.append(("lon",
                    "(_lonu + 180.0) - 360.0"
                    " * floor((_lonu + 180.0) / 360.0) - 180.0"))
-    stages.append((out_lat, "degrees(_iphi)"))
-    stages.append(("ok", f"(isnan({out_lon}) = false"
-                         f" and isnan({out_lat}) = false)"))
+    stages.append(("lat", "degrees(_iphi)"))
+    stages.append(("ok", "(isnan(lon) = false"
+                         " and isnan(lat) = false)"))
     return stages
 
 
@@ -830,23 +827,18 @@ def laea_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
 # coordinate path stays oracle-checkable bit-for-bit.
 # ---------------------------------------------------------------------------
 
-INV_ITERS = 8
 
-
-def webmercator_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
-                               out_lat: str = "lat"
-                               ) -> list[tuple[str, str]]:
+def webmercator_inv_sql_stages(x: str, y: str) -> list[tuple[str, str]]:
     """WebMercator inverse (closed form): x/y meters → lon/lat degrees."""
     a = _fmt(WGS84_A)
     return [
-        (out_lon, f"degrees({x} / {a})"),
-        (out_lat, f"degrees(2.0 * atan(exp({y} / {a})) - pi() / 2.0)"),
-        ("ok", f"(isnan({out_lon}) = false and isnan({out_lat}) = false)"),
+        ("lon", f"degrees({x} / {a})"),
+        ("lat", f"degrees(2.0 * atan(exp({y} / {a})) - pi() / 2.0)"),
+        ("ok", "(isnan(lon) = false and isnan(lat) = false)"),
     ]
 
 
-def lcc_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
-                       out_lat: str = "lat",
+def lcc_inv_sql_stages(x: str, y: str,
                        p: LccParams = LCC_2154) -> list[tuple[str, str]]:
     """LCC 2SP inverse, fixed-point on φ unrolled INV_ITERS times
     (mirrors lcc_inv_np)."""
@@ -859,7 +851,7 @@ def lcc_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
         ("_it", f"exp(ln(_ir / {_fmt(p.a * p.big_f)}) / {_fmt(p.n)})"),
         ("_lonu", f"degrees(atan2(_ix, _iy) / {_fmt(p.n)}"
                   f" + radians({_fmt(p.lon0_deg)}))"),
-        (out_lon, "_lonu - 360.0 * floor((_lonu + 180.0) / 360.0)"),
+        ("lon", "_lonu - 360.0 * floor((_lonu + 180.0) / 360.0)"),
         ("_iphi", "pi() / 2.0 - 2.0 * atan(_it)"),
     ]
     for _ in range(INV_ITERS):
@@ -867,14 +859,13 @@ def lcc_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
         stages.append(("_iphi",
                        f"pi() / 2.0 - 2.0 * atan(_it * exp(({e} / 2.0)"
                        f" * ln((1.0 - _is) / (1.0 + _is))))"))
-    stages.append((out_lat, "degrees(_iphi)"))
-    stages.append(("ok", f"(isnan({out_lon}) = false"
-                         f" and isnan({out_lat}) = false)"))
+    stages.append(("lat", "degrees(_iphi)"))
+    stages.append(("ok", "(isnan(lon) = false"
+                         " and isnan(lat) = false)"))
     return stages
 
 
-def ps_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
-                      out_lat: str = "lat",
+def ps_inv_sql_stages(x: str, y: str,
                       p: PsParams = PS_3031) -> list[tuple[str, str]]:
     """Polar Stereographic inverse, fixed-point on the south-equivalent
     ψ unrolled INV_ITERS times (mirrors ps_inv_np)."""
@@ -892,25 +883,23 @@ def ps_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
                        f" * ln((1.0 + _is) / (1.0 - _is)))) - pi() / 2.0"))
     stages.append(("_lonu", f"degrees(atan2(_ix, _iy)"
                             f" + radians({_fmt(p.lon0_deg)}))"))
-    stages.append((out_lon, "_lonu - 360.0 * floor((_lonu + 180.0) / 360.0)"))
-    stages.append((out_lat, f"{_fmt(p.sgn)} * degrees(_iphi)"))
-    stages.append(("ok", f"(isnan({out_lon}) = false"
-                         f" and isnan({out_lat}) = false)"))
+    stages.append(("lon", "_lonu - 360.0 * floor((_lonu + 180.0) / 360.0)"))
+    stages.append(("lat", f"{_fmt(p.sgn)} * degrees(_iphi)"))
+    stages.append(("ok", "(isnan(lon) = false"
+                         " and isnan(lat) = false)"))
     return stages
 
 
-def tmerc_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
-                         out_lat: str = "lat", lon0_deg: float = 3.0,
-                         k0: float = UTM_K0, fe: float = UTM_FE,
+def tmerc_inv_sql_stages(x: str, y: str, lon0_deg: float = 3.0,
                          fn: float = 0.0) -> list[tuple[str, str]]:
     """Krüger-series inverse transverse Mercator + Newton on τ (5
     iterations, mirrors tmerc_inv_np / Karney 2011 eqs. 19-21)."""
     e = _fmt(WGS84_E)
     ome2 = _fmt(1.0 - WGS84_E2)
-    ka = _fmt(k0 * KRUGER_A)
+    ka = _fmt(UTM_K0 * KRUGER_A)
     stages: list[tuple[str, str]] = [
         ("_xi", f"(({y} - {_fmt(fn)}) / {ka})"),
-        ("_eta", f"(({x} - {_fmt(fe)}) / {ka})"),
+        ("_eta", f"(({x} - {_fmt(UTM_FE)}) / {ka})"),
         ("_xip", "_xi"),
         ("_etap", "_eta"),
     ]
@@ -943,16 +932,15 @@ def tmerc_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
             ("_tau", "_tau - _ft / _dt"),
         ]
     stages += [
-        (out_lat, "degrees(atan(_tau))"),
+        ("lat", "degrees(atan(_tau))"),
         ("_lonu", f"degrees(atan2(_shp, _cx)) + {_fmt(lon0_deg)}"),
-        (out_lon, "_lonu - 360.0 * floor((_lonu + 180.0) / 360.0)"),
-        ("ok", f"(isnan({out_lon}) = false and isnan({out_lat}) = false)"),
+        ("lon", "_lonu - 360.0 * floor((_lonu + 180.0) / 360.0)"),
+        ("ok", "(isnan(lon) = false and isnan(lat) = false)"),
     ]
     return stages
 
 
-def aea_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
-                       out_lat: str = "lat",
+def aea_inv_sql_stages(x: str, y: str,
                        p: AeaParams = AEA_3577) -> list[tuple[str, str]]:
     """Albers Equal Area inverse, fixed-point on φ unrolled INV_ITERS
     times (mirrors aea_inv_np)."""
@@ -965,7 +953,7 @@ def aea_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
         ("_ir", "sqrt(_ix * _ix + _iy * _iy)"),
         ("_lonu", f"degrees(atan2({sgn} * _ix, {sgn} * _iy) / {_fmt(p.n)}"
                   f" + radians({_fmt(p.lon0_deg)}))"),
-        (out_lon, "_lonu - 360.0 * floor((_lonu + 180.0) / 360.0)"),
+        ("lon", "_lonu - 360.0 * floor((_lonu + 180.0) / 360.0)"),
         ("_qp", f"({_fmt(p.c)} - _ir * _ir * {_fmt(p.n * p.n)}"
                 f" / {_fmt(p.a * p.a)}) / {_fmt(p.n)}"),
         ("_iphi", "asin(greatest(-1.0, least(1.0, _qp / 2.0)))"),
@@ -979,9 +967,9 @@ def aea_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
                        f" - _is / (1.0 - {e2} * _is * _is)"
                        f" + (1.0 / (2.0 * {e}))"
                        f" * ln((1.0 - {e} * _is) / (1.0 + {e} * _is)))"))
-    stages.append((out_lat, "degrees(_iphi)"))
-    stages.append(("ok", f"(isnan({out_lon}) = false"
-                         f" and isnan({out_lat}) = false)"))
+    stages.append(("lat", "degrees(_iphi)"))
+    stages.append(("ok", "(isnan(lon) = false"
+                         " and isnan(lat) = false)"))
     return stages
 
 
@@ -995,48 +983,48 @@ def aea_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
 # ---------------------------------------------------------------------------
 
 MODIS_SPHERE_R = 6371007.181
+SINU_LON0_DEG = 0.0
 
 
-def sinu_fwd_np(lon, lat, r: float = MODIS_SPHERE_R,
-                lon0_deg: float = 0.0):
+def sinu_fwd_np(lon, lat):
     """Spherical sinusoidal forward: x = R dlam cos(phi), y = R phi."""
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
     ok = np.isfinite(lon) & np.isfinite(lat) & (np.abs(lat) <= 90.0)
     phi = np.radians(lat)
-    dlam = np.radians(lon - lon0_deg)
+    dlam = np.radians(lon - SINU_LON0_DEG)
     dlam = np.arctan2(np.sin(dlam), np.cos(dlam))
-    E = r * dlam * np.cos(phi)
-    N = r * phi
+    E = MODIS_SPHERE_R * dlam * np.cos(phi)
+    N = MODIS_SPHERE_R * phi
     return np.where(ok, E, np.nan), np.where(ok, N, np.nan), ok
 
 
-def sinu_inv_np(E, N, r: float = MODIS_SPHERE_R,
-                lon0_deg: float = 0.0):
+def sinu_inv_np(E, N):
     E = np.asarray(E, dtype=np.float64)
     N = np.asarray(N, dtype=np.float64)
-    phi = N / r
+    phi = N / MODIS_SPHERE_R
     ok = np.abs(phi) <= np.pi / 2.0 + 1e-12
     cphi = np.cos(np.where(ok, phi, 0.0))
     pole = cphi < 1e-12
-    lam = np.where(pole, 0.0, E / (r * np.where(pole, 1.0, cphi)))
+    lam = np.where(pole, 0.0,
+                   E / (MODIS_SPHERE_R * np.where(pole, 1.0, cphi)))
     ok = ok & (np.abs(lam) <= np.pi + 1e-9)
-    lon = np.degrees(lam) + lon0_deg
+    lon = np.degrees(lam) + SINU_LON0_DEG
     lon = (lon + 180.0) % 360.0 - 180.0
     return lon, np.degrees(phi), ok & np.isfinite(lon)
 
 
-def sinu_sql_stages(lon: str, lat: str, r: float = MODIS_SPHERE_R,
-                    lon0_deg: float = 0.0) -> list[tuple[str, str]]:
+def sinu_sql_stages(lon: str, lat: str) -> list[tuple[str, str]]:
+    r = _fmt(MODIS_SPHERE_R)
     return [
         ("ok", f"(isnan({lon}) = false and isnan({lat}) = false"
                f" and abs({lat}) <= 90.0)"),
         ("_phi", f"radians({lat})"),
-        ("_dl0", f"radians({lon} - {_fmt(lon0_deg)})"),
+        ("_dl0", f"radians({lon} - {_fmt(SINU_LON0_DEG)})"),
         ("_dl", "atan2(sin(_dl0), cos(_dl0))"),
-        ("easting", f"case when ok then {_fmt(r)} * _dl * cos(_phi)"
+        ("easting", f"case when ok then {r} * _dl * cos(_phi)"
                     f" else cast(\'nan\' as double) end"),
-        ("northing", f"case when ok then {_fmt(r)} * _phi"
+        ("northing", f"case when ok then {r} * _phi"
                      f" else cast(\'nan\' as double) end"),
     ]
 
@@ -1044,6 +1032,7 @@ def sinu_sql_stages(lon: str, lat: str, r: float = MODIS_SPHERE_R,
 # Equal Earth polynomial constants (published A1..A4) and M = sqrt(3)/2
 EE_A1, EE_A2, EE_A3, EE_A4 = 1.340264, -0.081106, 0.000893, 0.003796
 EE_M = math.sqrt(3.0) / 2.0
+EE_ITERS = 10  # Newton on theta
 
 
 class EqualEarthParams:
@@ -1103,8 +1092,7 @@ def equal_earth_fwd_np(lon, lat,
     return np.where(ok, E, np.nan), np.where(ok, N, np.nan), ok
 
 
-def equal_earth_inv_np(E, N, p: EqualEarthParams = EQUAL_EARTH_8857,
-                       iters: int = 10):
+def equal_earth_inv_np(E, N, p: EqualEarthParams = EQUAL_EARTH_8857):
     """Newton on theta from y, then beta, then the LAEA-family series
     back from authalic to geodetic latitude."""
     E = np.asarray(E, dtype=np.float64)
@@ -1112,13 +1100,13 @@ def equal_earth_inv_np(E, N, p: EqualEarthParams = EQUAL_EARTH_8857,
     e, e2 = p.e, p.e * p.e
     yr = N / p.rq
     theta = yr.copy()
-    for _ in range(iters):
+    for _ in range(EE_ITERS):
         theta = theta - (_ee_poly(theta) - yr) / _ee_dpoly(theta)
     sb = np.clip(np.sin(theta) / EE_M, -1.0, 1.0)
     beta = np.arcsin(sb)
     q = p.qp * sb
     phi = beta.copy()
-    for _ in range(iters):
+    for _ in range(EE_ITERS):
         s = np.sin(phi)
         phi = phi + ((1.0 - e2 * s * s) ** 2 / (2.0 * np.cos(phi))) * (
             q / (1.0 - e2) - s / (1.0 - e2 * s * s)
@@ -1168,28 +1156,25 @@ def equal_earth_sql_stages(lon: str, lat: str,
     ]
 
 
-def sinu_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
-                        out_lat: str = "lat",
-                        r: float = MODIS_SPHERE_R,
-                        lon0_deg: float = 0.0) -> list[tuple[str, str]]:
+def sinu_inv_sql_stages(x: str, y: str) -> list[tuple[str, str]]:
     """Spherical sinusoidal inverse, shared text (mirrors
     sinu_inv_np): phi = y/R; lam = x / (R cos phi)."""
+    r = _fmt(MODIS_SPHERE_R)
     return [
-        ("_iphi", f"({y} / {_fmt(r)})"),
+        ("_iphi", f"({y} / {r})"),
         ("ok", "(abs(_iphi) <= pi() / 2.0 + 1e-12)"),
         ("_icphi", "cos(case when ok then _iphi else 0.0 end)"),
         ("_ipole", "(_icphi < 1e-12)"),
         ("_ilam", f"case when _ipole then 0.0 else {x}"
-                  f" / ({_fmt(r)} * _icphi) end"),
+                  f" / ({r} * _icphi) end"),
         ("ok", "(ok and abs(_ilam) <= pi() + 1e-9)"),
-        (out_lon, f"(mod(degrees(_ilam) + {_fmt(lon0_deg)}"
+        ("lon", f"(mod(degrees(_ilam) + {_fmt(SINU_LON0_DEG)}"
                   f" + 180.0 + 360.0, 360.0) - 180.0)"),
-        (out_lat, "degrees(_iphi)"),
+        ("lat", "degrees(_iphi)"),
     ]
 
 
-def equal_earth_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
-                               out_lat: str = "lat",
+def equal_earth_inv_sql_stages(x: str, y: str,
                                p: "EqualEarthParams" = None
                                ) -> list[tuple[str, str]]:
     """Equal Earth inverse, shared text: Newton on theta (unrolled,
@@ -1216,7 +1201,7 @@ def equal_earth_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
         ("_eyr", f"({y} / {_fmt(p.rq)})"),
         ("_et", "_eyr"),
     ]
-    for _ in range(10):
+    for _ in range(EE_ITERS):
         stages.append(("_et", f"(_et - ({poly('_et')} - _eyr)"
                               f" / {dpoly('_et')})"))
     stages += [
@@ -1238,9 +1223,9 @@ def equal_earth_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
                   f" / ({_fmt(p.rq)} * cos(_et)))"),
         ("ok", "(abs(_elam) <= pi() + 1e-9"
                " and isnan(_ephi) = false)"),
-        (out_lon, f"(mod(degrees(_elam) + {_fmt(p.lon0_deg)}"
+        ("lon", f"(mod(degrees(_elam) + {_fmt(p.lon0_deg)}"
                   f" + 180.0 + 360.0, 360.0) - 180.0)"),
-        (out_lat, "degrees(_ephi)"),
+        ("lat", "degrees(_ephi)"),
     ]
     return stages
 
@@ -1257,9 +1242,11 @@ MOLL_R = WGS84_A
 MOLL_S2 = math.sqrt(2.0)
 MOLL_CX = 2.0 * math.sqrt(2.0) / math.pi
 MOLL_ITERS = 12  # Newton on θ'; pole-guarded (denominator 1+cos θ' → 0)
+MOLL_LON0_DEG = 0.0
 
 
-def moll_fwd_np(lon, lat, r: float = MOLL_R, lon0_deg: float = 0.0):
+def moll_fwd_np(lon, lat, r: float = MOLL_R,
+                lon0_deg: float = MOLL_LON0_DEG):
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
     ok = np.isfinite(lon) & np.isfinite(lat) & (np.abs(lat) <= 90.0)
@@ -1280,10 +1267,10 @@ def moll_fwd_np(lon, lat, r: float = MOLL_R, lon0_deg: float = 0.0):
     return np.where(ok, E, np.nan), np.where(ok, N, np.nan), ok
 
 
-def moll_inv_np(E, N, r: float = MOLL_R, lon0_deg: float = 0.0):
+def moll_inv_np(E, N):
     E = np.asarray(E, dtype=np.float64)
     N = np.asarray(N, dtype=np.float64)
-    sth = N / (MOLL_S2 * r)
+    sth = N / (MOLL_S2 * MOLL_R)
     ok = np.abs(sth) <= 1.0 + 1e-12
     theta = np.arcsin(np.clip(sth, -1.0, 1.0))
     phi = np.arcsin(np.clip((2.0 * theta + np.sin(2.0 * theta)) / np.pi,
@@ -1291,20 +1278,19 @@ def moll_inv_np(E, N, r: float = MOLL_R, lon0_deg: float = 0.0):
     cth = np.cos(theta)
     pole = cth < 1e-12
     lam = np.where(pole, 0.0,
-                   E / (MOLL_CX * r * np.where(pole, 1.0, cth)))
+                   E / (MOLL_CX * MOLL_R * np.where(pole, 1.0, cth)))
     ok = ok & (np.abs(lam) <= np.pi + 1e-9)
-    lon = np.degrees(lam) + lon0_deg
+    lon = np.degrees(lam) + MOLL_LON0_DEG
     lon = (lon + 180.0) % 360.0 - 180.0
     return lon, np.degrees(phi), ok & np.isfinite(lon)
 
 
-def moll_sql_stages(lon: str, lat: str, r: float = MOLL_R,
-                    lon0_deg: float = 0.0) -> list[tuple[str, str]]:
+def moll_sql_stages(lon: str, lat: str) -> list[tuple[str, str]]:
     """Forward Mollweide, shared text (mirrors moll_fwd_np): unrolled
     pole-guarded Newton on θ' = 2θ. Constant products are folded in
     Python — DuckDB would multiply two DECIMAL literals and overflow."""
-    cx_r = _fmt(MOLL_CX * r)
-    s2_r = _fmt(MOLL_S2 * r)
+    cx_r = _fmt(MOLL_CX * MOLL_R)
+    s2_r = _fmt(MOLL_S2 * MOLL_R)
     stages: list[tuple[str, str]] = [
         ("ok", f"(isnan({lon}) = false and isnan({lat}) = false"
                f" and abs({lat}) <= 90.0)"),
@@ -1319,7 +1305,7 @@ def moll_sql_stages(lon: str, lat: str, r: float = MOLL_R,
             " else (_mtp + sin(_mtp) - _mps) / (1.0 + cos(_mtp)) end)"))
     stages += [
         ("_mth", "(_mtp / 2.0)"),
-        ("_mdl0", f"radians({lon}) - radians({_fmt(lon0_deg)})"),
+        ("_mdl0", f"radians({lon}) - radians({_fmt(MOLL_LON0_DEG)})"),
         ("_mdl", "atan2(sin(_mdl0), cos(_mdl0))"),
         ("easting", f"case when ok then {cx_r} * _mdl"
                     f" * cos(_mth) else cast('nan' as double) end"),
@@ -1329,13 +1315,11 @@ def moll_sql_stages(lon: str, lat: str, r: float = MOLL_R,
     return stages
 
 
-def moll_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
-                        out_lat: str = "lat", r: float = MOLL_R,
-                        lon0_deg: float = 0.0) -> list[tuple[str, str]]:
+def moll_inv_sql_stages(x: str, y: str) -> list[tuple[str, str]]:
     """Mollweide inverse, shared text (mirrors moll_inv_np): closed
     form — θ from y, φ from the defining equation, λ from x."""
-    cx_r = _fmt(MOLL_CX * r)
-    s2_r = _fmt(MOLL_S2 * r)
+    cx_r = _fmt(MOLL_CX * MOLL_R)
+    s2_r = _fmt(MOLL_S2 * MOLL_R)
     return [
         ("_msth", f"({y} / {s2_r})"),
         ("ok", "(abs(_msth) <= 1.0 + 1e-12)"),
@@ -1347,9 +1331,9 @@ def moll_inv_sql_stages(x: str, y: str, out_lon: str = "lon",
         ("_milam", f"case when _mipole then 0.0 else {x}"
                    f" / ({cx_r} * _micth) end"),
         ("ok", "(ok and abs(_milam) <= pi() + 1e-9)"),
-        (out_lon, f"(mod(degrees(_milam) + {_fmt(lon0_deg)}"
+        ("lon", f"(mod(degrees(_milam) + {_fmt(MOLL_LON0_DEG)}"
                   f" + 180.0 + 360.0, 360.0) - 180.0)"),
-        (out_lat, "degrees(_miphi)"),
+        ("lat", "degrees(_miphi)"),
     ]
 
 
@@ -1438,14 +1422,15 @@ def _epsg_entry(code: int) -> tuple[str, object]:
                    f"pair via PROJ, ogr/ogrct.cpp:1705-1803)")
 
 
-def epsg_fwd_stages(code: int, lon: str, lat: str,
-                    out_x: str = "x", out_y: str = "y",
+def epsg_fwd_stages(code: int, out_x: str = "x", out_y: str = "y",
                     ok_col: str = "ok") -> list[tuple[str, str]]:
-    """Forward staged SQL for 4326 → code; output columns renamed to
-    (out_x, out_y) plus the per-point failure flag (``ok_col`` — pass a
-    distinct name when composing several projections over one row so a
-    later stage list does not overwrite an earlier flag)."""
+    """Forward staged SQL for 4326 → code from the ``lon``/``lat``
+    columns; output columns renamed to (out_x, out_y) plus the
+    per-point failure flag (``ok_col`` — pass a distinct name when
+    composing several projections over one row so a later stage list
+    does not overwrite an earlier flag)."""
     method, p = _epsg_entry(code)
+    lon, lat = "lon", "lat"
     if method == "geographic":
         st = [("ok", f"(isnan({lon}) = false and isnan({lat}) = false)"),
               (out_x, lon), (out_y, lat)]
@@ -1525,7 +1510,6 @@ def epsg_inv_np(code: int):
 
 
 def epsg_inv_stages(code: int, x: str, y: str,
-                    out_lon: str = "lon", out_lat: str = "lat",
                     ok_col: str = "ok") -> list[tuple[str, str]]:
     """Inverse staged SQL for code → 4326 (projected x/y → lon/lat),
     the dst-CRS⁻¹ leg of a general cross-CRS warp. Same alias rule as
@@ -1535,24 +1519,21 @@ def epsg_inv_stages(code: int, x: str, y: str,
     st = {
         "geographic": lambda: [
             ("ok", f"(isnan({x}) = false and isnan({y}) = false)"),
-            (out_lon, x), (out_lat, y)],
-        "webmerc": lambda: webmercator_inv_sql_stages(x, y, out_lon,
-                                                      out_lat),
-        "lcc": lambda: lcc_inv_sql_stages(x, y, out_lon, out_lat, p),
-        "ps": lambda: ps_inv_sql_stages(x, y, out_lon, out_lat, p),
-        "aea": lambda: aea_inv_sql_stages(x, y, out_lon, out_lat, p),
-        "laea": lambda: laea_inv_sql_stages(x, y, out_lon, out_lat, p),
-        "sinu": lambda: sinu_inv_sql_stages(x, y, out_lon, out_lat),
-        "moll": lambda: moll_inv_sql_stages(x, y, out_lon, out_lat),
-        "equal_earth": lambda: equal_earth_inv_sql_stages(
-            x, y, out_lon, out_lat, p),
-        "tmerc_wgs84": lambda: tmerc_inv_sql_stages(x, y, out_lon,
-                                                    out_lat, p[0],
+            ("lon", x), ("lat", y)],
+        "webmerc": lambda: webmercator_inv_sql_stages(x, y),
+        "lcc": lambda: lcc_inv_sql_stages(x, y, p),
+        "ps": lambda: ps_inv_sql_stages(x, y, p),
+        "aea": lambda: aea_inv_sql_stages(x, y, p),
+        "laea": lambda: laea_inv_sql_stages(x, y, p),
+        "sinu": lambda: sinu_inv_sql_stages(x, y),
+        "moll": lambda: moll_inv_sql_stages(x, y),
+        "equal_earth": lambda: equal_earth_inv_sql_stages(x, y, p),
+        "tmerc_wgs84": lambda: tmerc_inv_sql_stages(x, y, p[0],
                                                     fn=p[1]),
-        "tmerc": lambda: tmerc_inv_sql_stages_p(x, y, out_lon, out_lat,
+        "tmerc": lambda: tmerc_inv_sql_stages_p(x, y, "lon", "lat",
                                                 p),
         "datum_tmerc": lambda: datum_tmerc_inv_sql_stages(
-            x, y, out_lon, out_lat, *p),
+            x, y, "lon", "lat", *p),
     }[method]()
     if ok_col != "ok":
         st = st + [(ok_col, "ok")]
@@ -1799,11 +1780,11 @@ def _geo_to_xyz_np(lon, lat, a: float, e2: float):
             nu * (1.0 - e2) * np.sin(phi))
 
 
-def _xyz_to_geo_np(X, Y, Z, a: float, e2: float, iters: int = 8):
+def _xyz_to_geo_np(X, Y, Z, a: float, e2: float):
     lon = np.degrees(np.arctan2(Y, X))
     pr = np.hypot(X, Y)
     phi = np.arctan2(Z, pr * (1.0 - e2))
-    for _ in range(iters):
+    for _ in range(INV_ITERS):
         nu = a / np.sqrt(1.0 - e2 * np.sin(phi) ** 2)
         phi = np.arctan2(Z + e2 * nu * np.sin(phi), pr)
     return lon, np.degrees(phi)
@@ -1867,62 +1848,60 @@ def osgb36_inv_np(E, N):
                               TMERC_27700)
 
 
-def _geo_to_xyz_stages(lon: str, lat: str, a: float, e2: float,
-                       px: str, py: str, pz: str) -> list[tuple[str, str]]:
+def _geo_to_xyz_stages(lon: str, lat: str, a: float,
+                       e2: float) -> list[tuple[str, str]]:
     return [
         ("_gphi", f"radians({lat})"),
         ("_glam", f"radians({lon})"),
         ("_gs", "sin(_gphi)"),
         ("_gnu", f"{_fmt(a)} / sqrt(1.0 - {_fmt(e2)} * _gs * _gs)"),
         ("_gc", "cos(_gphi)"),
-        (px, "_gnu * _gc * cos(_glam)"),
-        (py, "_gnu * _gc * sin(_glam)"),
-        (pz, f"_gnu * (1.0 - {_fmt(e2)}) * _gs"),
+        ("_hx", "_gnu * _gc * cos(_glam)"),
+        ("_hy", "_gnu * _gc * sin(_glam)"),
+        ("_hz", f"_gnu * (1.0 - {_fmt(e2)}) * _gs"),
     ]
 
 
-def _xyz_to_geo_stages(px: str, py: str, pz: str, a: float, e2: float,
-                       out_lon: str, out_lat: str,
-                       iters: int = INV_ITERS) -> list[tuple[str, str]]:
+def _xyz_to_geo_stages(a: float, e2: float,
+                       out_lon: str, out_lat: str) -> list[tuple[str, str]]:
     st = [
-        (out_lon, f"degrees(atan2({py}, {px}))"),
-        ("_gpr", f"sqrt({px} * {px} + {py} * {py})"),
-        ("_gphi", f"atan2({pz}, _gpr * (1.0 - {_fmt(e2)}))"),
+        (out_lon, "degrees(atan2(_hy2, _hx2))"),
+        ("_gpr", "sqrt(_hx2 * _hx2 + _hy2 * _hy2)"),
+        ("_gphi", f"atan2(_hz2, _gpr * (1.0 - {_fmt(e2)}))"),
     ]
-    for _ in range(iters):
+    for _ in range(INV_ITERS):
         st.append(("_gs", "sin(_gphi)"))
         st.append(("_gnu", f"{_fmt(a)} / sqrt(1.0 - {_fmt(e2)}"
                            f" * _gs * _gs)"))
-        st.append(("_gphi", f"atan2({pz} + {_fmt(e2)} * _gnu * _gs,"
+        st.append(("_gphi", f"atan2(_hz2 + {_fmt(e2)} * _gnu * _gs,"
                             f" _gpr)"))
     st.append((out_lat, "degrees(_gphi)"))
     return st
 
 
-def _helmert_stages(px: str, py: str, pz: str, h: HelmertParams,
-                    ox: str, oy: str, oz: str,
+def _helmert_stages(h: HelmertParams,
                     inverse: bool = False) -> list[tuple[str, str]]:
     if inverse:
         m, t = h.minv, h.t
-        dx = f"({px} - {_fmt(t[0])})"
-        dy = f"({py} - {_fmt(t[1])})"
-        dz = f"({pz} - {_fmt(t[2])})"
+        dx = f"(_hx - {_fmt(t[0])})"
+        dy = f"(_hy - {_fmt(t[1])})"
+        dz = f"(_hz - {_fmt(t[2])})"
         return [
-            (ox, f"{_fmt(m[0][0])} * {dx} + {_fmt(m[0][1])} * {dy}"
-                 f" + {_fmt(m[0][2])} * {dz}"),
-            (oy, f"{_fmt(m[1][0])} * {dx} + {_fmt(m[1][1])} * {dy}"
-                 f" + {_fmt(m[1][2])} * {dz}"),
-            (oz, f"{_fmt(m[2][0])} * {dx} + {_fmt(m[2][1])} * {dy}"
-                 f" + {_fmt(m[2][2])} * {dz}"),
+            ("_hx2", f"{_fmt(m[0][0])} * {dx} + {_fmt(m[0][1])} * {dy}"
+                     f" + {_fmt(m[0][2])} * {dz}"),
+            ("_hy2", f"{_fmt(m[1][0])} * {dx} + {_fmt(m[1][1])} * {dy}"
+                     f" + {_fmt(m[1][2])} * {dz}"),
+            ("_hz2", f"{_fmt(m[2][0])} * {dx} + {_fmt(m[2][1])} * {dy}"
+                     f" + {_fmt(m[2][2])} * {dz}"),
         ]
     m, t = h.m, h.t
     return [
-        (ox, f"{_fmt(t[0])} + {_fmt(m[0][0])} * {px}"
-             f" + {_fmt(m[0][1])} * {py} + {_fmt(m[0][2])} * {pz}"),
-        (oy, f"{_fmt(t[1])} + {_fmt(m[1][0])} * {px}"
-             f" + {_fmt(m[1][1])} * {py} + {_fmt(m[1][2])} * {pz}"),
-        (oz, f"{_fmt(t[2])} + {_fmt(m[2][0])} * {px}"
-             f" + {_fmt(m[2][1])} * {py} + {_fmt(m[2][2])} * {pz}"),
+        ("_hx2", f"{_fmt(t[0])} + {_fmt(m[0][0])} * _hx"
+                 f" + {_fmt(m[0][1])} * _hy + {_fmt(m[0][2])} * _hz"),
+        ("_hy2", f"{_fmt(t[1])} + {_fmt(m[1][0])} * _hx"
+                 f" + {_fmt(m[1][1])} * _hy + {_fmt(m[1][2])} * _hz"),
+        ("_hz2", f"{_fmt(t[2])} + {_fmt(m[2][0])} * _hx"
+                 f" + {_fmt(m[2][1])} * _hy + {_fmt(m[2][2])} * _hz"),
     ]
 
 
@@ -2028,11 +2007,9 @@ def datum_tmerc_sql_stages(lon: str, lat: str, h: HelmertParams,
                   f" and abs({lat}) <= 90.0)"),
           ("_slon", f"case when ok0 then {lon} else 0.0 end"),
           ("_slat", f"case when ok0 then {lat} else 0.0 end")]
-    st += _geo_to_xyz_stages("_slon", "_slat", h.src_a, h.src_e2,
-                             "_hx", "_hy", "_hz")
-    st += _helmert_stages("_hx", "_hy", "_hz", h, "_hx2", "_hy2", "_hz2")
-    st += _xyz_to_geo_stages("_hx2", "_hy2", "_hz2", h.dst_a, h.dst_e2,
-                             "_olon", "_olat")
+    st += _geo_to_xyz_stages("_slon", "_slat", h.src_a, h.src_e2)
+    st += _helmert_stages(h)
+    st += _xyz_to_geo_stages(h.dst_a, h.dst_e2, "_olon", "_olat")
     st += tmerc_sql_stages_p("_olon", "_olat", tm)
     st += [("ok", "(ok0 and ok)")]
     return st
@@ -2045,12 +2022,9 @@ def datum_tmerc_inv_sql_stages(x: str, y: str, out_lon: str,
     ellipsoid → geodetic→XYZ → exact inverse Helmert → XYZ→geodetic
     (WGS84, unrolled)."""
     st = tmerc_inv_sql_stages_p(x, y, "_ilon", "_ilat", tm)
-    st += _geo_to_xyz_stages("_ilon", "_ilat", h.dst_a, h.dst_e2,
-                             "_hx", "_hy", "_hz")
-    st += _helmert_stages("_hx", "_hy", "_hz", h, "_hx2", "_hy2", "_hz2",
-                          inverse=True)
-    st += _xyz_to_geo_stages("_hx2", "_hy2", "_hz2", h.src_a, h.src_e2,
-                             out_lon, out_lat)
+    st += _geo_to_xyz_stages("_ilon", "_ilat", h.dst_a, h.dst_e2)
+    st += _helmert_stages(h, inverse=True)
+    st += _xyz_to_geo_stages(h.src_a, h.src_e2, out_lon, out_lat)
     st += [("ok", f"(isnan({out_lon}) = false"
                   f" and isnan({out_lat}) = false)")]
     return st

@@ -32,6 +32,13 @@ from gdal_spark.textops import (NEAR_DUP_SUFFIX, P32, SIMHASH_BANDS, SPARK,
                                 simhash_sql, tokens_sql)
 
 BAND_BITS = 15  # simhash band width: 60 bits / 4 bands
+LSH_BANDS, LSH_ROWS = 32, 4  # MinHash banding: 32 bands x 4 rows
+EVAL_MOD, EVAL_REM = 41, 7  # eval split: crawl_id % EVAL_MOD == EVAL_REM
+MINHASH_JACCARD = 0.8  # verified Jaccard of a MinHash near-dup pair
+NGRAM_K, NGRAM_JACCARD = 2, 0.7  # exact n-gram Jaccard join
+DECONTAM_K = 3  # shingle width of the decontamination check
+DECONTAM_CONTAINMENT = 0.3  # eval-shingle share that contaminates
+SIMHASH_MAX_HAMMING = 3  # pigeonhole-safe with 4 bands
 
 
 def crawl_from_documents(docs: DataFrame) -> DataFrame:
@@ -56,11 +63,11 @@ def crawl_from_documents(docs: DataFrame) -> DataFrame:
 
 def shingle_rows(crawl: DataFrame, k: int = 3) -> DataFrame:
     """(crawl_id, sh, h32): distinct k-word shingles + 32-bit hash."""
-    toks = tokens_sql("text", SPARK)
+    toks = tokens_sql(SPARK)
     return (
         crawl.withColumn("_toks", F.expr(toks))
         .select("crawl_id",
-                F.explode(F.expr(shingles_sql("_toks", k, SPARK))).alias("sh"))
+                F.explode(F.expr(shingles_sql(k, SPARK))).alias("sh"))
         .distinct()
         .withColumn("h32", F.expr(f"({h60_sql('sh', SPARK)}) % {P32}"))
     )
@@ -85,18 +92,18 @@ def minhash_signatures(sh: DataFrame) -> DataFrame:
         *[F.expr(e) for e in minhash_agg_exprs()])
 
 
-def lsh_candidate_pairs(sig: DataFrame, bands: int = 32,
-                        rows: int = 4) -> DataFrame:
+def lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
     """Banded LSH: signature → (band, md5-of-row-slice) keys → self
     equi-join → distinct candidate (id_a < id_b) pairs."""
     band_structs = [
         F.struct(
             F.lit(j).alias("band"),
             F.md5(F.concat_ws(",", *[
-                F.col(f"s{j * rows + i}").cast("string") for i in range(rows)
+                F.col(f"s{j * LSH_ROWS + i}").cast("string")
+                for i in range(LSH_ROWS)
             ])).alias("key"),
         )
-        for j in range(bands)
+        for j in range(LSH_BANDS)
     ]
     keyed = sig.select(
         "crawl_id", F.explode(F.array(*band_structs)).alias("b")
@@ -134,10 +141,9 @@ def verify_jaccard(pairs: DataFrame, sh: DataFrame,
     return out.select("id_a", "id_b", F.round("_j", 6).alias("jaccard"))
 
 
-def minhash_neardup_pairs(crawl: DataFrame,
-                          threshold: float = 0.8) -> DataFrame:
+def minhash_neardup_pairs(crawl: DataFrame) -> DataFrame:
     """MinHash+LSH near-duplicate pairs, verification-exact: candidates
-    from banding, output filtered by true Jaccard ≥ threshold (so
+    from banding, output filtered by true Jaccard ≥ MINHASH_JACCARD (so
     precision is exact; recall at J≥0.8 is 1-(1-0.8^4)^32 ≈ 1-5e-8)."""
     # the shingle table feeds four consumers (signatures, both sides of
     # the verify join, set sizes); Catalyst's ReuseExchange already
@@ -145,16 +151,15 @@ def minhash_neardup_pairs(crawl: DataFrame,
     # with one — materialization overhead without saved work)
     sh = shingle_rows(crawl, k=3)
     cand = lsh_candidate_pairs(minhash_signatures(sh))
-    return verify_jaccard(cand, sh, threshold)
+    return verify_jaccard(cand, sh, MINHASH_JACCARD)
 
 
-def ngram_jaccard_pairs(crawl: DataFrame, k: int = 2,
-                        threshold: float = 0.7) -> DataFrame:
+def ngram_jaccard_pairs(crawl: DataFrame) -> DataFrame:
     """Exact n-gram Jaccard similarity join: shingle equi-join, no LSH.
     The shuffle is keyed by shingle; stopword-like hot shingles are the
     skew risk at scale — AQE skew-join plus the distinct() pre-shrink
     keep partitions bounded."""
-    sh = shingle_rows(crawl, k=k)
+    sh = shingle_rows(crawl, k=NGRAM_K)
     sa = sh.select(F.col("crawl_id").alias("id_a"), "sh")
     sb = sh.select(F.col("crawl_id").alias("id_b"), "sh")
     pairs = (
@@ -169,44 +174,44 @@ def ngram_jaccard_pairs(crawl: DataFrame, k: int = 2,
         .join(sz.select(F.col("crawl_id").alias("id_b"),
                         F.col("n").alias("nb")), "id_b")
         .withColumn("_j", F.expr("cast(c as double) / (na + nb - c)"))
-        .filter(F.col("_j") >= threshold)
+        .filter(F.col("_j") >= NGRAM_JACCARD)
     )
     return out.select("id_a", "id_b", F.round("_j", 6).alias("jaccard"))
 
 
-def decontaminate(crawl: DataFrame, k: int = 3, threshold: float = 0.3,
-                  eval_mod: int = 41, eval_rem: int = 7) -> DataFrame:
+def decontaminate(crawl: DataFrame) -> DataFrame:
     """Benchmark decontamination: directional k-shingle containment of a
     (small) eval split inside the training corpus — the pretraining-
     pipeline guard against test-set leakage (the n-gram-overlap rule of
     the GPT-3/C4 cleanup recipes). A corpus doc is contaminated by an
-    eval doc when it contains ≥ ``threshold`` of the eval doc's distinct
-    k-word shingles: containment = |S_eval ∩ S_corpus| / |S_eval|.
+    eval doc when it contains ≥ DECONTAM_CONTAINMENT of the eval doc's
+    distinct DECONTAM_K-word shingles:
+    containment = |S_eval ∩ S_corpus| / |S_eval|.
 
     Plan shape for 100 TB: the eval split is tiny by construction, so
     its shingle table is **broadcast** — the corpus shingle stream is
     never shuffled against itself (unlike the symmetric Jaccard join);
     the only wide op is the (corpus_id, eval_id) count aggregation,
     keyed by hit pairs (O(actual overlaps), not O(corpus))."""
-    sh = shingle_rows(crawl, k=k).select("crawl_id", "sh")
-    ev = (sh.filter(F.col("crawl_id") % eval_mod == eval_rem)
+    sh = shingle_rows(crawl, k=DECONTAM_K).select("crawl_id", "sh")
+    ev = (sh.filter(F.col("crawl_id") % EVAL_MOD == EVAL_REM)
           .select(F.col("crawl_id").alias("eval_id"), "sh"))
     ev_sz = ev.groupBy("eval_id").agg(F.count(F.lit(1)).alias("n_eval"))
-    corpus = (sh.filter(F.col("crawl_id") % eval_mod != eval_rem)
+    corpus = (sh.filter(F.col("crawl_id") % EVAL_MOD != EVAL_REM)
               .select(F.col("crawl_id").alias("corpus_id"), "sh"))
     hits = (corpus.join(F.broadcast(ev), "sh")
             .groupBy("corpus_id", "eval_id")
             .agg(F.count(F.lit(1)).alias("n_common")))
     return (hits.join(F.broadcast(ev_sz), "eval_id")
             .withColumn("_c", F.expr("cast(n_common as double) / n_eval"))
-            .filter(F.col("_c") >= threshold)
+            .filter(F.col("_c") >= DECONTAM_CONTAINMENT)
             .select("eval_id", "corpus_id", "n_common",
                     F.round("_c", 6).alias("containment")))
 
 
 def simhash_table(crawl: DataFrame) -> DataFrame:
     """(crawl_id, simhash): 60-bit SimHash over the distinct-word set."""
-    toks = tokens_sql("text", SPARK)
+    toks = tokens_sql(SPARK)
     words = (
         crawl.withColumn("_toks", F.expr(toks))
         .select("crawl_id", F.explode("_toks").alias("w"))
@@ -217,8 +222,8 @@ def simhash_table(crawl: DataFrame) -> DataFrame:
         F.expr(simhash_sql(SPARK)).alias("simhash"))
 
 
-def simhash_neardup_pairs(crawl: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """SimHash near-duplicate pairs with hamming ≤ max_hamming via
+def simhash_neardup_pairs(crawl: DataFrame) -> DataFrame:
+    """SimHash near-duplicate pairs with hamming ≤ SIMHASH_MAX_HAMMING via
     band blocking: 4 bands × 15 bits; any pair within hamming 3 shares at
     least one identical band (pigeonhole over 4 bands), so the blocked
     equi-join finds exactly the same pairs as a quadratic scan."""
@@ -244,7 +249,7 @@ def simhash_neardup_pairs(crawl: DataFrame, max_hamming: int = 3) -> DataFrame:
                 F.expr("cast(bit_count(sim_a ^ sim_b) as bigint)")
                 .alias("hamming"))
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
 
 

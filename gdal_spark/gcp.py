@@ -119,12 +119,11 @@ def gcp_transform_sql(fit_dir: tuple, xe: str, ye: str) -> tuple[str, str]:
         _poly_sql(cv, f"({xn})", f"({yn})")
 
 
-def warp_gcp_pixel_sql(fit: dict, dst_gt: list[float],
-                       di: str = "di", dj: str = "dj") -> tuple[str, str]:
+def warp_gcp_pixel_sql(fit: dict, dst_gt: list[float]) -> tuple[str, str]:
     """dst pixel (di, dj) → dst world (affine dst_gt) → src pixel via
     the fitted world→pixel GCP polynomial → floor (nearest)."""
-    wx = f"({_lit(dst_gt[0])} + ({di} + 0.5) * {_lit(dst_gt[1])})"
-    wy = f"({_lit(dst_gt[3])} + ({dj} + 0.5) * {_lit(dst_gt[5])})"
+    wx = f"({_lit(dst_gt[0])} + (di + 0.5) * {_lit(dst_gt[1])})"
+    wy = f"({_lit(dst_gt[3])} + (dj + 0.5) * {_lit(dst_gt[5])})"
     spx, spy = gcp_transform_sql(fit["inv"], wx, wy)
     return (f"cast(floor({spx}) as bigint)",
             f"cast(floor({spy}) as bigint)")

@@ -36,13 +36,13 @@ def _jint(js: str, path: str, engine: str) -> str:
     return f"cast({_jstr(js, path, engine)} as bigint)"
 
 
-def geojson_feature_sql(doc_id: str = "doc_id") -> str:
+def geojson_feature_sql() -> str:
     """Shared ANSI: one GeoJSON Feature string per page — Points for
     doc_id % 3 != 0, rectangle Polygons otherwise (ring closed, CCW,
     integer-microdegree vertices; width/height are doc-derived)."""
     lon, lat = "lon_mic", "lat_mic"
-    w, h = f"(10000 + ({doc_id} % 50) * 1000)", \
-        f"(8000 + ({doc_id} % 30) * 1000)"
+    w, h = "(10000 + (doc_id % 50) * 1000)", \
+        "(8000 + (doc_id % 30) * 1000)"
     point = (f"concat('{{\"type\":\"Point\",\"coordinates\":[',"
              f" {lon}, ',', {lat}, ']}}')")
     ring = (f"concat('[[', {lon}, ',', {lat}, '],"
@@ -52,13 +52,13 @@ def geojson_feature_sql(doc_id: str = "doc_id") -> str:
             f"[', {lon}, ',', {lat}, ']]')")
     poly = (f"concat('{{\"type\":\"Polygon\",\"coordinates\":[',"
             f" {ring}, ']}}')")
-    geom = f"case when {doc_id} % 3 = 0 then {poly} else {point} end"
+    geom = f"case when doc_id % 3 = 0 then {poly} else {point} end"
     return (f"concat('{{\"type\":\"Feature\",\"properties\":"
-            f"{{\"name\":\"p', {doc_id}, '\",\"cls\":', {doc_id} % 7,"
+            f"{{\"name\":\"p', doc_id, '\",\"cls\":', doc_id % 7,"
             f" '}},\"geometry\":', {geom}, '}}')")
 
 
-def geojson_ingest_sql(doc_view: str, engine: str) -> str:
+def geojson_ingest_sql(engine: str) -> str:
     """Parse the synthesized Feature strings back into typed rows:
     geometry type, properties (name, cls), the representative point
     (Points: the coordinate; Polygons: vertex 0), the ring vertex
@@ -68,8 +68,8 @@ def geojson_ingest_sql(doc_view: str, engine: str) -> str:
     from gdal_spark.crs import stages_to_duckdb_sql
     from gdal_spark.pages import synth_stages
 
-    base = f"select doc_id from {doc_view}"
-    inner = stages_to_duckdb_sql(base, synth_stages("doc_id"),
+    base = "select doc_id from documents"
+    inner = stages_to_duckdb_sql(base, synth_stages(),
                                  ["doc_id", "lon_mic", "lat_mic"])
     js = "feature"
     gtyp = _jstr(js, "$.geometry.type", engine)
@@ -95,7 +95,7 @@ def geojson_ingest_sql(doc_view: str, engine: str) -> str:
     return f"""
 with pts as ({inner}),
 f as (
-  select doc_id, {geojson_feature_sql("doc_id")} as feature from pts)
+  select doc_id, {geojson_feature_sql()} as feature from pts)
 select doc_id,
        {gtyp} as gtype,
        {name} as name,

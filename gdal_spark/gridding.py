@@ -44,12 +44,12 @@ def _lit(v: float) -> str:
     return r if "e" in r or "E" in r else r + "e0"
 
 
-def _grid_candidates(engine: str, doc_view: str = "documents") -> str:
+def _grid_candidates(engine: str) -> str:
     """Shared CTE prelude ending in ``c(i, j, doc_id, v, d2)``: fixture
     pixel grid ⋈ points via the k-ring cell prejoin + exact radius test
     (the quadtree candidate search of alg/gdalgrid.cpp:260-276 restated
     as a pruned equi-join)."""
-    pts = points_oracle_sql(doc_view)
+    pts = points_oracle_sql()
     r2 = _lit(RADIUS * RADIUS)
     pad = _lit(RADIUS)
     cell = _lit(RADIUS)
@@ -99,7 +99,7 @@ c as (
 )"""
 
 
-def grid_kernels_sql(engine: str, doc_view: str = "documents") -> str:
+def grid_kernels_sql(engine: str) -> str:
     """The full gridding kernel suite in ONE keyed aggregation pass:
     IDW (GDALGridInverseDistanceToAPower), moving average
     (GDALGridMovingAverage), nearest neighbor (GDALGridNearestNeighbor),
@@ -137,7 +137,7 @@ def grid_kernels_sql(engine: str, doc_view: str = "documents") -> str:
         pick = ("list_extract(list_sort(list("
                 "{'d2': d2, 'doc_id': doc_id, 'v': v})), 1)")
     return f"""
-with {_grid_candidates(engine, doc_view)},
+with {_grid_candidates(engine)},
 packed as (
   select i, j, count(*) as n_pts,
          min(d2) as min_d2, max(d2) as max_d2,

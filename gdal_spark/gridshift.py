@@ -107,15 +107,14 @@ def grid_cells_duckdb(grid: dict = UK_GRID) -> str:
             f" range(0, {nci * (grid['nj'] - 1)})) t")
 
 
-def cell_key_stages(lon: str, lat: str,
-                    grid: dict = UK_GRID) -> list[tuple[str, str]]:
+def cell_key_stages(grid: dict = UK_GRID) -> list[tuple[str, str]]:
     """Point-side stages: cell index + in-grid flag (shared text).
     Out-of-grid points get key (-1, -1) so the left join never
     matches them."""
     lon0, lat0, step = grid["lon0"], grid["lat0"], grid["step"]
     return [
-        ("_gci", f"cast(floor((({lon}) - {lon0!r}) / {step!r}) as int)"),
-        ("_gcj", f"cast(floor((({lat}) - {lat0!r}) / {step!r}) as int)"),
+        ("_gci", f"cast(floor(((lon) - {lon0!r}) / {step!r}) as int)"),
+        ("_gcj", f"cast(floor(((lat) - {lat0!r}) / {step!r}) as int)"),
         ("in_grid", f"(_gci >= 0 and _gci <= {grid['ni'] - 2}"
                     f" and _gcj >= 0 and _gcj <= {grid['nj'] - 2})"),
         ("ci", f"case when in_grid then _gci else -1 end"),
@@ -123,8 +122,7 @@ def cell_key_stages(lon: str, lat: str,
     ]
 
 
-def bilinear_shift_stages(lon: str, lat: str,
-                          out_lon: str = "_glon",
+def bilinear_shift_stages(out_lon: str = "_glon",
                           out_lat: str = "_glat",
                           grid: dict = UK_GRID) -> list[tuple[str, str]]:
     """Post-join stages: bilinear blend of the four corner shifts,
@@ -132,8 +130,8 @@ def bilinear_shift_stages(lon: str, lat: str,
     source coordinate). Out-of-grid rows become NaN — the projection
     stages downstream then fail them exactly like any invalid input."""
     lon0, lat0, step = grid["lon0"], grid["lat0"], grid["step"]
-    fx = f"((({lon}) - {lon0!r}) / {step!r} - ci)"
-    fy = f"((({lat}) - {lat0!r}) / {step!r} - cj)"
+    fx = f"(((lon) - {lon0!r}) / {step!r} - ci)"
+    fy = f"(((lat) - {lat0!r}) / {step!r} - cj)"
 
     def blend(p: str) -> str:
         return (f"({p}00 * (1.0 - _fx) * (1.0 - _fy)"
@@ -146,16 +144,15 @@ def bilinear_shift_stages(lon: str, lat: str,
         ("_fy", f"case when in_grid then {fy} else 0.0 end"),
         ("_dlat", f"case when in_grid then {blend('dlat')} else 0.0 end"),
         ("_dlon", f"case when in_grid then {blend('dlon')} else 0.0 end"),
-        (out_lat, f"case when in_grid then ({lat}) + _dlat / 3600.0"
+        (out_lat, f"case when in_grid then (lat) + _dlat / 3600.0"
                   f" else cast('nan' as double) end"),
-        (out_lon, f"case when in_grid then ({lon}) + _dlon / 3600.0"
+        (out_lon, f"case when in_grid then (lon) + _dlon / 3600.0"
                   f" else cast('nan' as double) end"),
     ]
 
 
 def grid_datum_fwd(spark: SparkSession, pts: DataFrame, grid: dict,
-                   tmerc_params, lon: str = "lon",
-                   lat: str = "lat") -> DataFrame:
+                   tmerc_params) -> DataFrame:
     """The generic GRID datum path: broadcast cell join → bilinear
     shift → transverse-Mercator projection on the target datum's
     ellipsoid. Adds easting / northing / ok (+ in_grid). On the
@@ -163,20 +160,19 @@ def grid_datum_fwd(spark: SparkSession, pts: DataFrame, grid: dict,
     (tests pin node-exactness and an independent numpy bilinear)."""
     from gdal_spark.crs import apply_sql_stages, tmerc_sql_stages_p
 
-    pts = apply_sql_stages(pts, cell_key_stages(lon, lat, grid))
+    pts = apply_sql_stages(pts, cell_key_stages(grid))
     joined = pts.join(F.broadcast(grid_cells(spark, grid)),
                       ["ci", "cj"], "left")
     # one staged pipeline: apply_sql_stages drops _-temporaries at the
     # end, so the bilinear outputs must stay in scope for the Krüger
     # stages that consume them
-    stages = (bilinear_shift_stages(lon, lat, grid=grid)
+    stages = (bilinear_shift_stages(grid=grid)
               + tmerc_sql_stages_p("_glon", "_glat", tmerc_params)
               + [("ok", "(in_grid and ok)")])
     return apply_sql_stages(joined, stages)
 
 
 def grid_datum_duckdb_sql(pts_select: str, grid: dict, tmerc_params,
-                          lon: str = "lon", lat: str = "lat",
                           keep: list[str] | None = None) -> str:
     """The identical chain as one DuckDB statement: pts → cell keys →
     left join grid → bilinear → Krüger; same stage text."""
@@ -184,16 +180,16 @@ def grid_datum_duckdb_sql(pts_select: str, grid: dict, tmerc_params,
 
     keep = keep or []
     key_inner = stages_to_duckdb_sql(
-        pts_select, cell_key_stages(lon, lat, grid),
-        keep + [lon, lat, "in_grid", "ci", "cj"])
+        pts_select, cell_key_stages(grid),
+        keep + ["lon", "lat", "in_grid", "ci", "cj"])
     grid_cols = [name for name, _ in _cell_cols(grid)]
     joined = (f"select p.*, {', '.join('g.' + c for c in grid_cols)}"
               f" from ({key_inner}) p left join"
               f" ({grid_cells_duckdb(grid)}) g"
               f" using (ci, cj)")
     shifted = stages_to_duckdb_sql(
-        joined, bilinear_shift_stages(lon, lat, grid=grid),
-        keep + [lon, lat, "in_grid", "_glon", "_glat"])
+        joined, bilinear_shift_stages(grid=grid),
+        keep + ["lon", "lat", "in_grid", "_glon", "_glat"])
     final = stages_to_duckdb_sql(
         shifted, tmerc_sql_stages_p("_glon", "_glat", tmerc_params),
         keep + ["in_grid", "easting", "northing", "ok"])
@@ -201,23 +197,20 @@ def grid_datum_duckdb_sql(pts_select: str, grid: dict, tmerc_params,
             f" easting, northing, (in_grid and ok) as ok from ({final}) q")
 
 
-def osgb36_grid_fwd(spark: SparkSession, pts: DataFrame,
-                    lon: str = "lon", lat: str = "lat") -> DataFrame:
+def osgb36_grid_fwd(spark: SparkSession, pts: DataFrame) -> DataFrame:
     """EPSG:4326 → EPSG:27700 with the GRID datum path (the flag-gated
     alternative to the single Helmert of crs.datum_tmerc_sql_stages with
     HELMERT_WGS84_TO_OSGB36): UK grid → Airy Krüger."""
     from gdal_spark.crs import TMERC_27700
 
-    return grid_datum_fwd(spark, pts, UK_GRID, TMERC_27700, lon, lat)
+    return grid_datum_fwd(spark, pts, UK_GRID, TMERC_27700)
 
 
-def osgb36_grid_duckdb_sql(pts_select: str, lon: str = "lon",
-                           lat: str = "lat",
+def osgb36_grid_duckdb_sql(pts_select: str,
                            keep: list[str] | None = None) -> str:
     from gdal_spark.crs import TMERC_27700
 
-    return grid_datum_duckdb_sql(pts_select, UK_GRID, TMERC_27700,
-                                 lon, lat, keep)
+    return grid_datum_duckdb_sql(pts_select, UK_GRID, TMERC_27700, keep)
 
 
 def _nad83_utm14() -> object:
@@ -226,19 +219,16 @@ def _nad83_utm14() -> object:
     return _grs80_utm_params(14, fn=0.0)  # EPSG:26914
 
 
-def nad27_grid_fwd(spark: SparkSession, pts: DataFrame,
-                   lon: str = "lon", lat: str = "lat") -> DataFrame:
+def nad27_grid_fwd(spark: SparkSession, pts: DataFrame) -> DataFrame:
     """NAD27 lon/lat → NAD83 / UTM 14N (EPSG:26914) with the NADCON
     grid path: the CONUS grid shifts NAD27 coordinates onto NAD83
     (PROJ's conus.las/.los precedent), then the GRS80 Krüger projects.
     The Helmert alternative is crs' reproject_nad27 family; on the
     synthetic fixture the grid path is datum-exact by construction."""
-    return grid_datum_fwd(spark, pts, CONUS_GRID, _nad83_utm14(),
-                          lon, lat)
+    return grid_datum_fwd(spark, pts, CONUS_GRID, _nad83_utm14())
 
 
-def nad27_grid_duckdb_sql(pts_select: str, lon: str = "lon",
-                          lat: str = "lat",
+def nad27_grid_duckdb_sql(pts_select: str,
                           keep: list[str] | None = None) -> str:
     return grid_datum_duckdb_sql(pts_select, CONUS_GRID,
-                                 _nad83_utm14(), lon, lat, keep)
+                                 _nad83_utm14(), keep)

@@ -41,7 +41,7 @@ def _parse_mic_sql(s: str) -> str:
             f" cast(split_part(replace({s}, '-', ''), '.', 2) as bigint))")
 
 
-def kml_ingest_sql(doc_view: str, engine: str) -> str:
+def kml_ingest_sql(engine: str) -> str:
     """Placemark-per-page KML documents (one per doc_id % KML_FILES
     file), parsed back to typed rows: name, the ExtendedData ``cls``
     value, and the exact microdegree coordinates. Output:
@@ -58,8 +58,8 @@ def kml_ingest_sql(doc_view: str, engine: str) -> str:
         agg = "string_agg(pm, '' order by doc_id)"
         split_pm = "string_split(doc, '</Placemark>')"
         explode = "unnest(pms)"
-    base = f"select doc_id from {doc_view}"
-    inner = stages_to_duckdb_sql(base, synth_stages("doc_id"),
+    base = "select doc_id from documents"
+    inner = stages_to_duckdb_sql(base, synth_stages(),
                                  ["doc_id", "lon_mic", "lat_mic"])
     lon_s = _dec_deg_sql("lon_mic", engine)
     lat_s = _dec_deg_sql("lat_mic", engine)

@@ -42,6 +42,7 @@ from gdal_spark import geom as G
 
 SPARK = "spark"
 DUCKDB = "duckdb"
+SHIFT_DX, SHIFT_DY = 0.31, 0.17  # offset of the method layer
 
 
 # ---------------------------------------------------------------------------
@@ -93,12 +94,13 @@ def _fmt(v: float) -> str:
         else r + "e0"
 
 
-def shift_defs(defs: list[dict], dx: float, dy: float) -> list[dict]:
-    """Shifted copy of a zone layer (vertices re-rounded to 6 decimals so
-    the literals stay short and exact)."""
+def shift_defs(defs: list[dict]) -> list[dict]:
+    """Copy of a zone layer shifted by (SHIFT_DX, SHIFT_DY) (vertices
+    re-rounded to 6 decimals so the literals stay short and exact)."""
     out = []
     for z in defs:
-        rings = [np.round(r + np.array([dx, dy]), 6) for r in z["rings"]]
+        rings = [np.round(r + np.array([SHIFT_DX, SHIFT_DY]), 6)
+                 for r in z["rings"]]
         out.append({**z, "rings": rings})
     return out
 

@@ -72,12 +72,12 @@ def _convex(ring: np.ndarray) -> bool:
     return True
 
 
-def segments_sql(engine: str, doc_view: str = "documents") -> str:
+def segments_sql(engine: str) -> str:
     """Site trajectories: consecutive geotagged points of the same site
     bucket (doc_id % 50) by doc_id order → segments. Same SQL text in
     both dialects."""
     _ = engine
-    pts = points_oracle_sql(doc_view)
+    pts = points_oracle_sql()
     return f"""
 select site, seg_id, x0, y0, x1, y1 from (
   select (doc_id % 50) as site, doc_id as seg_id,
@@ -91,13 +91,12 @@ select site, seg_id, x0, y0, x1, y1 from (
 """
 
 
-def clip_lines_sql(defs: list[dict], engine: str,
-                   doc_view: str = "documents") -> str:
+def clip_lines_sql(defs: list[dict], engine: str) -> str:
     """Full clip query: (seg_id, zone_id, t0, t1, clip_len) per segment ×
     zone with a non-degenerate intersection."""
     edges = ccw_edge_values_sql(defs)
     return f"""
-with seg as ({segments_sql(engine, doc_view)}),
+with seg as ({segments_sql(engine)}),
 c as (
   select seg.seg_id, ce.zone_id, seg.x0, seg.y0, seg.x1, seg.y1,
          ce.nx * (seg.x1 - seg.x0) + ce.ny * (seg.y1 - seg.y0) as denom,

@@ -106,8 +106,7 @@ DECODE_REAL_SCHEMA = (
 )
 
 
-def decode_real_stats(payloads: DataFrame, id_col: str = "doc_id",
-                      payload_col: str = "payload") -> DataFrame:
+def decode_real_stats(payloads: DataFrame) -> DataFrame:
     """(id, binary payload) → decoded per-item statistics via
     mapInPandas: format sniff + full pixel/sample decode, then
     count/first/sum over the decoded values. The payload bytes never
@@ -117,7 +116,7 @@ def decode_real_stats(payloads: DataFrame, id_col: str = "doc_id",
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for did, p in zip(pdf[id_col], pdf[payload_col]):
+            for did, p in zip(pdf["doc_id"], pdf["payload"]):
                 d = decode_real(p)
                 v = d["values"]
                 rows.append((int(did), d["format"], d["width"],
@@ -127,7 +126,7 @@ def decode_real_stats(payloads: DataFrame, id_col: str = "doc_id",
                 "doc_id", "format", "width", "height", "rate",
                 "n_vals", "val_first", "val_sum"])
 
-    return payloads.select(id_col, payload_col).mapInPandas(
+    return payloads.select("doc_id", "payload").mapInPandas(
         _decode, schema=DECODE_REAL_SCHEMA)
 
 
@@ -142,13 +141,13 @@ def _stub_fields(digest_hex: str) -> tuple[int, int, int, float]:
     return w, h, frames, feat
 
 
-def decode_stub_meta(pages: DataFrame, payload_col: str = "html") -> DataFrame:
+def decode_stub_meta(pages: DataFrame) -> DataFrame:
     """pages → (url, n_bytes, width, height, n_frames, feat) via
     mapInPandas over the binary payload column."""
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = pdf[payload_col]
+            payloads = pdf["html"]
             rows = {
                 "url": pdf["url"],
                 "n_bytes": payloads.map(len).astype("int64"),
@@ -162,11 +161,11 @@ def decode_stub_meta(pages: DataFrame, payload_col: str = "html") -> DataFrame:
             rows["feat"] = pd.Series([m[3] for m in metas], dtype="float64")
             yield pd.DataFrame(rows)
 
-    return pages.select("url", payload_col).mapInPandas(
+    return pages.select("url", "html").mapInPandas(
         _decode, schema=DECODE_SCHEMA)
 
 
-def synth_payloads(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_payloads(ids: DataFrame) -> DataFrame:
     """Deterministic multimodal fixture payloads: each id becomes a REAL
     encoded file — BMP / PNG / WAV round-robin by id % 3 — whose
     dimensions and content are pure functions of the id, so a DuckDB
@@ -184,7 +183,7 @@ def synth_payloads(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids_, payloads = [], []
-            for did in pdf[id_col]:
+            for did in pdf["doc_id"]:
                 did = int(did)
                 if did % 3 < 2:
                     w, h = 4 + did % 13, 3 + did % 11
@@ -204,11 +203,11 @@ def synth_payloads(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                                 "payload": pd.Series(payloads,
                                                      dtype="object")})
 
-    return ids.select(id_col).mapInPandas(
+    return ids.select("doc_id").mapInPandas(
         _synth, schema="doc_id long, payload binary")
 
 
-def synth_jpeg_payloads(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_jpeg_payloads(ids: DataFrame) -> DataFrame:
     """Deterministic baseline-JFIF fixture payloads: every id becomes a
     REAL encoded JPEG (gdal_spark.codecs.encode_jpeg — Annex K Huffman
     tables, unit quant). Content is constant per 8x8 block, which a
@@ -236,7 +235,7 @@ def synth_jpeg_payloads(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids_, payloads = [], []
-            for did in pdf[id_col]:
+            for did in pdf["doc_id"]:
                 did = int(did)
                 if did % 4 == 1:
                     bw, bh, sub = 4, 2, "420"
@@ -257,7 +256,7 @@ def synth_jpeg_payloads(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                                 "payload": pd.Series(payloads,
                                                      dtype="object")})
 
-    return ids.select(id_col).mapInPandas(
+    return ids.select("doc_id").mapInPandas(
         _synth, schema="doc_id long, payload binary")
 
 
@@ -280,7 +279,7 @@ def _synth_avi_frames(did: int) -> tuple[list[np.ndarray], int]:
     return frames, 5 + did % 4
 
 
-def synth_avi_payloads(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_avi_payloads(ids: DataFrame) -> DataFrame:
     """Deterministic MJPEG-in-AVI fixture payloads: every id becomes a
     REAL multi-frame AVI (gdal_spark.codecs.encode_avi_mjpeg — each
     frame a complete baseline JFIF), per the _synth_avi_frames content
@@ -292,7 +291,7 @@ def synth_avi_payloads(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids_, payloads = [], []
-            for did in pdf[id_col]:
+            for did in pdf["doc_id"]:
                 did = int(did)
                 frames, fps = _synth_avi_frames(did)
                 payloads.append(C.encode_avi_mjpeg(frames, fps=fps))
@@ -301,7 +300,7 @@ def synth_avi_payloads(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                                 "payload": pd.Series(payloads,
                                                      dtype="object")})
 
-    return ids.select(id_col).mapInPandas(
+    return ids.select("doc_id").mapInPandas(
         _synth, schema="doc_id long, payload binary")
 
 
@@ -348,8 +347,7 @@ def _synth_png_variant(did: int):
                "interlace": interlace}, a
 
 
-def synth_png_variant_payloads(ids: DataFrame,
-                               id_col: str = "doc_id") -> DataFrame:
+def synth_png_variant_payloads(ids: DataFrame) -> DataFrame:
     """Deterministic PNG payloads across the FULL RFC 2083 variant
     surface (all five color types, 4/8/16-bit, Adam7 on odd ids) —
     the realistic web-crawl PNG mix."""
@@ -358,7 +356,7 @@ def synth_png_variant_payloads(ids: DataFrame,
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids_, payloads = [], []
-            for did in pdf[id_col]:
+            for did in pdf["doc_id"]:
                 did = int(did)
                 arr, kw, _ = _synth_png_variant(did)
                 payloads.append(C.encode_png(arr, **kw))
@@ -367,7 +365,7 @@ def synth_png_variant_payloads(ids: DataFrame,
                                 "payload": pd.Series(payloads,
                                                      dtype="object")})
 
-    return ids.select(id_col).mapInPandas(
+    return ids.select("doc_id").mapInPandas(
         _synth, schema="doc_id long, payload binary")
 
 
@@ -399,8 +397,7 @@ def _synth_wav_variant(did: int):
     return _mulaw_expand(codes), "mulaw"
 
 
-def synth_wav_variant_payloads(ids: DataFrame,
-                               id_col: str = "doc_id") -> DataFrame:
+def synth_wav_variant_payloads(ids: DataFrame) -> DataFrame:
     """Deterministic WAV payloads across the PCM-8/16/24, float32 and
     mu-law lanes, per the _synth_wav_variant contract."""
     from gdal_spark import codecs as C
@@ -408,7 +405,7 @@ def synth_wav_variant_payloads(ids: DataFrame,
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids_, payloads = [], []
-            for did in pdf[id_col]:
+            for did in pdf["doc_id"]:
                 did = int(did)
                 samples, fmt = _synth_wav_variant(did)
                 rate = 8000 + (did % 4) * 4000
@@ -418,7 +415,7 @@ def synth_wav_variant_payloads(ids: DataFrame,
                                 "payload": pd.Series(payloads,
                                                      dtype="object")})
 
-    return ids.select(id_col).mapInPandas(
+    return ids.select("doc_id").mapInPandas(
         _synth, schema="doc_id long, payload binary")
 
 
@@ -441,8 +438,7 @@ def _synth_gif(did: int):
     return frames, pal, bool(did % 2)
 
 
-def synth_gif_payloads(ids: DataFrame,
-                       id_col: str = "doc_id") -> DataFrame:
+def synth_gif_payloads(ids: DataFrame) -> DataFrame:
     """Deterministic multi-frame GIF fixture payloads (GIF-flavor LZW,
     half interlaced), per the _synth_gif content contract."""
     from gdal_spark import codecs as C
@@ -450,7 +446,7 @@ def synth_gif_payloads(ids: DataFrame,
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids_, payloads = [], []
-            for did in pdf[id_col]:
+            for did in pdf["doc_id"]:
                 did = int(did)
                 frames, pal, inter = _synth_gif(did)
                 payloads.append(C.encode_gif(frames, pal,
@@ -460,7 +456,7 @@ def synth_gif_payloads(ids: DataFrame,
                                 "payload": pd.Series(payloads,
                                                      dtype="object")})
 
-    return ids.select(id_col).mapInPandas(
+    return ids.select("doc_id").mapInPandas(
         _synth, schema="doc_id long, payload binary")
 
 
@@ -496,8 +492,7 @@ def _synth_geotiff(did: int) -> tuple[np.ndarray, tuple, str, bool, bool, bool]:
     return px, gt, comp, pred, did % 3 == 2, did % 7 == 1
 
 
-def synth_geotiff_payloads(ids: DataFrame,
-                           id_col: str = "doc_id") -> DataFrame:
+def synth_geotiff_payloads(ids: DataFrame) -> DataFrame:
     """Deterministic GeoTIFF fixture payloads: every id becomes a REAL
     classic-TIFF file (gdal_spark.codecs.encode_tiff) with
     ModelPixelScale/ModelTiepoint georeferencing, per the
@@ -507,7 +502,7 @@ def synth_geotiff_payloads(ids: DataFrame,
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids_, payloads = [], []
-            for did in pdf[id_col]:
+            for did in pdf["doc_id"]:
                 did = int(did)
                 px, gt, comp, pred, tiled, big = _synth_geotiff(did)
                 payloads.append(C.encode_tiff(
@@ -518,16 +513,14 @@ def synth_geotiff_payloads(ids: DataFrame,
                                 "payload": pd.Series(payloads,
                                                      dtype="object")})
 
-    return ids.select(id_col).mapInPandas(
+    return ids.select("doc_id").mapInPandas(
         _synth, schema="doc_id long, payload binary")
 
 
 GEOTIFF_TILE_SCHEMA = "tile_x long, tile_y long, n_px long, val_sum long"
 
 
-def geotiff_tile_partials(payloads: DataFrame, tile_size: float,
-                          id_col: str = "doc_id",
-                          payload_col: str = "payload") -> DataFrame:
+def geotiff_tile_partials(payloads: DataFrame, tile_size: float) -> DataFrame:
     """The multimodal→raster-engine bridge: decode each GeoTIFF, place
     every pixel in world coordinates THROUGH ITS DECODED GEOTRANSFORM
     (pixel-center convention, gdal_translate's
@@ -542,7 +535,7 @@ def geotiff_tile_partials(payloads: DataFrame, tile_size: float,
     def _tiles(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: dict[tuple[int, int], list[int]] = {}
-            for p in pdf[payload_col]:
+            for p in pdf["payload"]:
                 px, gt = C.decode_tiff(bytes(p))
                 if gt is None:
                     raise ValueError("payload is not a GeoTIFF")
@@ -569,7 +562,7 @@ def geotiff_tile_partials(payloads: DataFrame, tile_size: float,
                 [(x, y, n, s) for (x, y), (n, s) in out.items()],
                 columns=["tile_x", "tile_y", "n_px", "val_sum"])
 
-    return payloads.select(id_col, payload_col).mapInPandas(
+    return payloads.select("doc_id", "payload").mapInPandas(
         _tiles, schema=GEOTIFF_TILE_SCHEMA)
 
 
@@ -579,10 +572,11 @@ FRAME_STATS_SCHEMA = (
 )
 
 
-def frame_sample_real_stats(payloads: DataFrame, step: int = 2,
-                            id_col: str = "doc_id",
-                            payload_col: str = "payload") -> DataFrame:
-    """(id, AVI payload) → one row per SAMPLED frame (every `step`-th)
+FRAME_STEP = 2  # every FRAME_STEP-th frame is sampled
+
+
+def frame_sample_real_stats(payloads: DataFrame) -> DataFrame:
+    """(id, AVI payload) → one row per SAMPLED frame (every FRAME_STEP-th)
     with that frame's decoded pixel sum: the real-decode upgrade of
     frame_sample_stub and the canonical video shape for a training
     pipeline (sample frames → featurize). One-to-many mapInPandas;
@@ -593,9 +587,9 @@ def frame_sample_real_stats(payloads: DataFrame, step: int = 2,
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for did, p in zip(pdf[id_col], pdf[payload_col]):
+            for did, p in zip(pdf["doc_id"], pdf["payload"]):
                 _, frames = C.decode_avi_mjpeg(bytes(p))
-                for fi in range(0, len(frames), step):
+                for fi in range(0, len(frames), FRAME_STEP):
                     fr = frames[fi]
                     rows.append((int(did), fi, len(frames),
                                  fr.shape[1], fr.shape[0],
@@ -605,12 +599,11 @@ def frame_sample_real_stats(payloads: DataFrame, step: int = 2,
                 "doc_id", "frame_idx", "n_frames", "width", "height",
                 "frame_sum"])
 
-    return payloads.select(id_col, payload_col).mapInPandas(
+    return payloads.select("doc_id", "payload").mapInPandas(
         _sample, schema=FRAME_STATS_SCHEMA)
 
 
-def resize_stub(pages: DataFrame, out_w: int, out_h: int,
-                payload_col: str = "html") -> DataFrame:
+def resize_stub(pages: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Binary→binary resize plumbing: the UDF consumes the payload column
     and emits a NEW payload of the target dimensions plus its metadata —
     the exact signature a real thumbnailer has. The stub's output bytes
@@ -623,7 +616,7 @@ def resize_stub(pages: DataFrame, out_w: int, out_h: int,
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out_payloads = []
-            for p in pdf[payload_col]:
+            for p in pdf["html"]:
                 hexd = hashlib.md5(p).hexdigest()
                 out_payloads.append((hexd * reps)[:n_bytes]
                                     .encode("ascii"))
@@ -636,14 +629,13 @@ def resize_stub(pages: DataFrame, out_w: int, out_h: int,
                                 for b in out_payloads],
             })
 
-    return pages.select("url", payload_col).mapInPandas(
+    return pages.select("url", "html").mapInPandas(
         _resize,
         "url string, width long, height long, n_bytes long,"
         " resized_md5 string")
 
 
-def frame_sample_stub(pages: DataFrame, step: int = 2,
-                      payload_col: str = "html") -> DataFrame:
+def frame_sample_stub(pages: DataFrame, step: int = FRAME_STEP) -> DataFrame:
     """One-to-many frame sampling plumbing (video stand-in): each payload
     fans out to its sampled frame indices (every ``step``-th of the
     stub-decoded n_frames) with a per-frame feature — the mapInPandas
@@ -652,7 +644,7 @@ def frame_sample_stub(pages: DataFrame, step: int = 2,
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             urls, idxs, feats = [], [], []
-            for url, p in zip(pdf["url"], pdf[payload_col]):
+            for url, p in zip(pdf["url"], pdf["html"]):
                 hexd = hashlib.md5(p).hexdigest()
                 n_frames = 1 + int(hexd[4:6], 16) % 8
                 base = int(hexd[6:10], 16)
@@ -666,19 +658,19 @@ def frame_sample_stub(pages: DataFrame, step: int = 2,
                 "frame_feat": pd.Series(feats, dtype="float64"),
             })
 
-    return pages.select("url", payload_col).mapInPandas(
+    return pages.select("url", "html").mapInPandas(
         _sample, "url string, frame_idx long, frame_feat double")
 
 
-def payload_meta(pages: DataFrame, payload_col: str = "html") -> DataFrame:
+def payload_meta(pages: DataFrame) -> DataFrame:
     """Pure-Catalyst payload metadata: byte length, content digest, and a
     magic-prefix format sniff — the cheap pass run before any decode."""
     return pages.select(
         "url",
-        F.length(F.col(payload_col)).cast("long").alias("n_bytes"),
-        F.md5(F.col(payload_col)).alias("content_md5"),
+        F.length(F.col("html")).cast("long").alias("n_bytes"),
+        F.md5(F.col("html")).alias("content_md5"),
         F.when(
-            F.decode(F.col(payload_col), "utf-8").startswith("<html>"),
+            F.decode(F.col("html"), "utf-8").startswith("<html>"),
             F.lit("text/html"),
         ).otherwise(F.lit("application/octet-stream")).alias("format"),
     )
@@ -705,12 +697,11 @@ def _synth_shp(did: int) -> tuple[bytes, bytes]:
     if did % 2 == 0:
         shapes = [(vx(j), vy(j)) for j in range(n)]
         shp = C.encode_shp(shapes, 1)
-        dbf = C.encode_dbf("val", [(did * 11 + j) % 1000
-                                   for j in range(n)])
+        dbf = C.encode_dbf([(did * 11 + j) % 1000 for j in range(n)])
     else:
         pts = [(vx(j), vy(j)) for j in range(n + 1)]
         shp = C.encode_shp([pts], 3)
-        dbf = C.encode_dbf("val", [(did * 11) % 1000])
+        dbf = C.encode_dbf([(did * 11) % 1000])
     return shp, dbf
 
 
@@ -719,8 +710,7 @@ SHP_STATS_SCHEMA = ("doc_id long, shape_type long, n_shapes long,"
                     " attr_sum long")
 
 
-def shapefile_ingest_stats(ids: DataFrame,
-                           id_col: str = "doc_id") -> DataFrame:
+def shapefile_ingest_stats(ids: DataFrame) -> DataFrame:
     """Synthesize a REAL (.shp, .dbf) pair per id (mixed-endian format
     headers, little-endian payload doubles; dBASE III attributes),
     decode both through gdal_spark.codecs, and emit per-file decoded
@@ -732,7 +722,7 @@ def shapefile_ingest_stats(ids: DataFrame,
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for did in pdf[id_col]:
+            for did in pdf["doc_id"]:
                 did = int(did)
                 shp, dbf = _synth_shp(did)
                 stype, shapes = C.decode_shp(shp)
@@ -748,4 +738,4 @@ def shapefile_ingest_stats(ids: DataFrame,
                 })
             yield pd.DataFrame(rows)
 
-    return ids.select(id_col).mapInPandas(_stats, SHP_STATS_SCHEMA)
+    return ids.select("doc_id").mapInPandas(_stats, SHP_STATS_SCHEMA)

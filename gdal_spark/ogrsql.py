@@ -25,59 +25,63 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def summary_record(df: DataFrame, col: str) -> DataFrame:
-    """OGR SWQM_SUMMARY_RECORD: one row of MIN/MAX/AVG/SUM/COUNT/STDDEV.
+def summary_record(df: DataFrame) -> DataFrame:
+    """OGR SWQM_SUMMARY_RECORD: one row of MIN/MAX/AVG/SUM/COUNT/STDDEV
+    of ``l_quantity``.
 
     Accumulation semantics follow ogr/swq.cpp:335-473 (single pass;
     stddev via Welford accumulators ≡ Spark's built-in stddev_pop/samp).
     Money-like sums go through decimal so the result is order-independent
     (a distributed sum of doubles is not reproducible — decimals are).
     """
-    c = F.col(col)
+    c = F.col("l_quantity")
     dec = c.cast("decimal(28,6)")
     return df.agg(
-        F.min(c).alias(f"min_{col}"),
-        F.max(c).alias(f"max_{col}"),
-        F.round(F.sum(dec).cast("double") / F.count(c), 6).alias(f"avg_{col}"),
+        F.min(c).alias("min_l_quantity"),
+        F.max(c).alias("max_l_quantity"),
+        F.round(F.sum(dec).cast("double") / F.count(c),
+                6).alias("avg_l_quantity"),
         # final cast to double: the correctness gate hashes the string form
         # of values, and Decimal('1524135.000000') != DuckDB's float64 repr;
         # the decimal SUM keeps order-independence, the cast normalizes the
         # output representation (exact: unscaled values < 2^53).
-        F.sum(dec).cast("double").alias(f"sum_{col}"),
-        F.count(c).alias(f"count_{col}"),
+        F.sum(dec).cast("double").alias("sum_l_quantity"),
+        F.count(c).alias("count_l_quantity"),
         F.count(F.lit(1)).alias("count_star"),
-        F.round(F.stddev_pop(c), 6).alias(f"stddev_pop_{col}"),
-        F.round(F.stddev_samp(c), 6).alias(f"stddev_samp_{col}"),
+        F.round(F.stddev_pop(c), 6).alias("stddev_pop_l_quantity"),
+        F.round(F.stddev_samp(c), 6).alias("stddev_samp_l_quantity"),
     )
 
 
-def distinct_list(df: DataFrame, col: str) -> DataFrame:
-    """OGR SWQM_DISTINCT_LIST: sorted distinct values incl. NULL."""
-    return df.select(col).distinct().orderBy(F.col(col).asc_nulls_first())
+def distinct_list(df: DataFrame) -> DataFrame:
+    """OGR SWQM_DISTINCT_LIST: sorted distinct ``p_brand`` values incl.
+    NULL."""
+    return df.select("p_brand").distinct().orderBy(
+        F.col("p_brand").asc_nulls_first())
 
 
-def first_match_join(primary: DataFrame, secondary: DataFrame,
-                     on_primary: str, on_secondary: str,
-                     order_secondary: list[str],
-                     how: str = "left") -> DataFrame:
-    """OGR SQL JOIN: exactly one secondary row per primary row — the first
-    match in the secondary's iteration order (ogr_gensql.cpp:1493-1523).
+def first_match_join(primary: DataFrame, secondary: DataFrame) -> DataFrame:
+    """OGR SQL LEFT JOIN of orders (``o_orderkey``) to lineitem
+    (``l_orderkey``): exactly one secondary row per primary row — the
+    first match in the secondary's iteration order
+    (ogr_gensql.cpp:1493-1523).
 
     Spark-first: instead of the reference's per-row filter loop, dedupe
     the secondary to its first row per key with a window, then a plain
-    (broadcastable) equi-join. 'first' is defined by ``order_secondary``
-    (the reference's layer iteration order ≡ FID order).
+    (broadcastable) equi-join. 'first' is (l_linenumber, l_quantity)
+    order (the reference's layer iteration order ≡ FID order).
     """
-    w = Window.partitionBy(on_secondary).orderBy(
-        *[F.col(c) for c in order_secondary])
+    w = Window.partitionBy("l_orderkey").orderBy(
+        F.col("l_linenumber"), F.col("l_quantity"))
     first = (secondary.withColumn("_rn", F.row_number().over(w))
              .filter(F.col("_rn") == 1).drop("_rn"))
-    return primary.join(first, primary[on_primary] == first[on_secondary], how)
+    return primary.join(first, primary["o_orderkey"] == first["l_orderkey"],
+                        "left")
 
 
-def ogr_like(col: Column, pattern: str, escape: str | None = None) -> Column:
+def ogr_like(col: Column, pattern: str) -> Column:
     """OGR LIKE: case-sensitive (swq_op_general.cpp:41-95,1102)."""
-    return col.like(pattern, escape) if escape else col.like(pattern)
+    return col.like(pattern)
 
 
 def ogr_ilike(col: Column, pattern: str) -> Column:

@@ -407,7 +407,7 @@ def union_contract_defs() -> tuple[list[dict], list[dict]]:
     from gdal_spark.zones import zone_defs
 
     a = disjoint_method_defs(zone_defs())
-    b = disjoint_method_defs(shift_defs(zone_defs(), 0.31, 0.17))
+    b = disjoint_method_defs(shift_defs(zone_defs()))
     return a, b
 
 

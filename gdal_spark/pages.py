@@ -33,7 +33,7 @@ HASH_MULT = 2654435761  # Knuth multiplicative hash
 HASH_MOD = 1000000007
 
 
-def synth_stages(d: str = "doc_id") -> list[tuple[str, str]]:
+def synth_stages() -> list[tuple[str, str]]:
     """Staged shared-SQL derivation of (has_geo, lat_mic, lon_mic, lon, lat).
 
     lat_mic/lon_mic are integer microdegrees; lon/lat the float view,
@@ -42,15 +42,15 @@ def synth_stages(d: str = "doc_id") -> list[tuple[str, str]]:
     both Spark SQL and DuckDB.
     """
     return [
-        ("_h1", f"({d} * {HASH_MULT}) % {HASH_MOD}"),
+        ("_h1", f"(doc_id * {HASH_MULT}) % {HASH_MOD}"),
         ("has_geo", "(_h1 % 100) < 60"),
         ("_hot", "(_h1 % 10) < 8"),
         ("_city", "_h1 % 20"),
         # city centers: lon in [-175, 175), lat in [-60, 60) degrees
         ("_clon", "(-175 + ((_city * 77) % 350)) * 1000000"),
         ("_clat", "(-60 + ((_city * 131) % 120)) * 1000000"),
-        ("_dlon", f"(({d} * 40503) % 2000001) - 1000000"),
-        ("_dlat", f"(({d} * 69621) % 1400001) - 700000"),
+        ("_dlon", "((doc_id * 40503) % 2000001) - 1000000"),
+        ("_dlat", "((doc_id * 69621) % 1400001) - 700000"),
         ("_ulon", "((_h1 * 97) % 360000001) - 180000000"),
         ("_ulat", "((_h1 * 89) % 160000001) - 80000000"),
         ("lon_mic", "case when _hot then _clon + _dlon else _ulon end"),
@@ -60,12 +60,12 @@ def synth_stages(d: str = "doc_id") -> list[tuple[str, str]]:
     ]
 
 
-def geotag_text_sql(text: str = "text") -> str:
+def geotag_text_sql() -> str:
     """Embed the geotag token inside the document text (shared SQL)."""
     return (
-        f"case when has_geo then concat(substr({text}, 1, 40), ' geo:',"
-        f" lat_mic, ',', lon_mic, ' ', substr({text}, 41))"
-        f" else {text} end"
+        "case when has_geo then concat(substr(text, 1, 40), ' geo:',"
+        " lat_mic, ',', lon_mic, ' ', substr(text, 41))"
+        " else text end"
     )
 
 
@@ -81,7 +81,7 @@ def _staged_documents(spark: SparkSession, sf_dir: str,
     added (JVM-only math) in one projection: a stage names the ones
     before it as lateral column aliases, so the plan is analysed once,
     not once per stage."""
-    stages = [*synth_stages("doc_id"), *extra]
+    stages = [*synth_stages(), *extra]
     return read_documents(spark, sf_dir).selectExpr(
         "*", *(f"{expr} as {name}" for name, expr in stages))
 
@@ -102,7 +102,7 @@ def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages schema from BASELINE.json input_hint.
     """
     return _staged_documents(
-        spark, sf_dir, ("_text", geotag_text_sql("text")),
+        spark, sf_dir, ("_text", geotag_text_sql()),
     ).selectExpr(
         "concat('https://site', doc_id % 100, '.example/p/', doc_id) as url",
         "timestamp_seconds(1735689600 + doc_id * 7) as warc_ts",
@@ -122,7 +122,7 @@ def points_oracle_sql(doc_view: str = "documents",
     base = f"select doc_id, lang from {doc_view}"
     where = "where has_geo" if geotagged_only else ""
     inner = stages_to_duckdb_sql(
-        base, synth_stages("doc_id"),
+        base, synth_stages(),
         ["doc_id", "lang", "has_geo", "lon", "lat", "lon_mic", "lat_mic"],
     )
     return f"select doc_id, lon, lat, lang, lon_mic, lat_mic from ({inner}) p {where}"

@@ -31,7 +31,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gdal_spark.raster import TILE_DTYPE, TILE_PX
+from gdal_spark.raster import TILE_DTYPE, TILE_PX, TILE_PX_LOG2
+
+# Round cap of propagate_labels (pointer jumping converges in
+# O(log diameter) rounds)
+MAX_LABEL_ROUNDS = 50
 
 
 def _label_tile(mask: np.ndarray, pid: np.ndarray) -> np.ndarray:
@@ -164,7 +168,6 @@ def tile_components_values(tiles: DataFrame, grid_w: int,
 
 
 def cross_tile_edges_values(borders: DataFrame,
-                            tile_px: int = TILE_PX,
                             connect8: bool = False) -> DataFrame:
     """(la, lb) label pairs for adjacent EQUAL-VALUED pixels in
     different tiles (4-adjacency; ``connect8`` adds the two downward
@@ -178,22 +181,22 @@ def cross_tile_edges_values(borders: DataFrame,
                        F.col("value").alias("vb"))
     right = a.join(b, (F.col("bx") == F.col("ax") + 1)
                    & (F.col("by") == F.col("ay"))
-                   & (F.expr(f"ax % {tile_px}") == tile_px - 1))
+                   & (F.expr(f"ax % {TILE_PX}") == TILE_PX - 1))
     down = a.join(b, (F.col("by") == F.col("ay") + 1)
                   & (F.col("bx") == F.col("ax"))
-                  & (F.expr(f"ay % {tile_px}") == tile_px - 1))
+                  & (F.expr(f"ay % {TILE_PX}") == TILE_PX - 1))
     parts = [right.select("la", "lb", "va", "vb"),
              down.select("la", "lb", "va", "vb")]
     if connect8:
-        t1 = tile_px - 1
+        t1 = TILE_PX - 1
         dr = a.join(b, (F.col("bx") == F.col("ax") + 1)
                     & (F.col("by") == F.col("ay") + 1)
-                    & ((F.expr(f"ax % {tile_px}") == t1)
-                       | (F.expr(f"ay % {tile_px}") == t1)))
+                    & ((F.expr(f"ax % {TILE_PX}") == t1)
+                       | (F.expr(f"ay % {TILE_PX}") == t1)))
         dl = a.join(b, (F.col("bx") == F.col("ax") - 1)
                     & (F.col("by") == F.col("ay") + 1)
-                    & ((F.expr(f"ax % {tile_px}") == 0)
-                       | (F.expr(f"ay % {tile_px}") == t1)))
+                    & ((F.expr(f"ax % {TILE_PX}") == 0)
+                       | (F.expr(f"ay % {TILE_PX}") == t1)))
         parts += [dr.select("la", "lb", "va", "vb"),
                   dl.select("la", "lb", "va", "vb")]
     out = parts[0]
@@ -346,7 +349,7 @@ def tile_components(tiles: DataFrame,
     return parts, borders
 
 
-def cross_tile_edges(borders: DataFrame, tile_px: int = TILE_PX) -> DataFrame:
+def cross_tile_edges(borders: DataFrame) -> DataFrame:
     """(la, lb) label pairs for 4-adjacent occupied pixels in *different*
     tiles (same-tile adjacency is already merged)."""
     a = borders.select(F.col("gx").alias("ax"), F.col("gy").alias("ay"),
@@ -355,16 +358,15 @@ def cross_tile_edges(borders: DataFrame, tile_px: int = TILE_PX) -> DataFrame:
                        F.col("lbl").alias("lb"))
     right = a.join(b, (F.col("bx") == F.col("ax") + 1)
                    & (F.col("by") == F.col("ay"))
-                   & (F.expr(f"ax % {tile_px}") == tile_px - 1))
+                   & (F.expr(f"ax % {TILE_PX}") == TILE_PX - 1))
     down = a.join(b, (F.col("by") == F.col("ay") + 1)
                   & (F.col("bx") == F.col("ax"))
-                  & (F.expr(f"ay % {tile_px}") == tile_px - 1))
+                  & (F.expr(f"ay % {TILE_PX}") == TILE_PX - 1))
     return (right.select("la", "lb").unionByName(down.select("la", "lb"))
             .filter("la <> lb").distinct())
 
 
-def propagate_labels(parts: DataFrame, edges: DataFrame,
-                     max_iter: int = 50) -> DataFrame:
+def propagate_labels(parts: DataFrame, edges: DataFrame) -> DataFrame:
     """Distributed min-label propagation to fixpoint: (lbl, comp).
 
     Each round takes the min over graph neighbors AND path-halves
@@ -384,7 +386,7 @@ def propagate_labels(parts: DataFrame, edges: DataFrame,
     sym = edges.unionByName(
         edges.select(F.col("lb").alias("la"), F.col("la").alias("lb"))
     ).distinct().localCheckpoint(eager=True)
-    for _ in range(max_iter):
+    for _ in range(MAX_LABEL_ROUNDS):
         neigh = (
             sym.join(labels.withColumnRenamed("lbl", "lb")
                      .withColumnRenamed("comp", "nc"), "lb")
@@ -430,10 +432,13 @@ def polygonize_summary(tiles: DataFrame, grid_w: int) -> DataFrame:
     )
 
 
+SIEVE_MIN_PIXELS = 2  # smallest component the sieve keeps
+
+
 def sieve_pixels(px: DataFrame, grid_w: int,
-                 min_pixels: int = 2, connect8: bool = False) -> DataFrame:
+                 connect8: bool = False) -> DataFrame:
     """Sieve filter (alg/gdalsievefilter.cpp:178): drop pixels whose
-    4-connected occupancy component is smaller than ``min_pixels``.
+    4-connected occupancy component is smaller than SIEVE_MIN_PIXELS.
     (GDAL merges small polygons into their largest neighbour; on a
     sparse occupancy raster removal ≡ merging into the zero background —
     the binary-mask case.)
@@ -446,7 +451,7 @@ def sieve_pixels(px: DataFrame, grid_w: int,
     """
     labeled = label_pixels(px, grid_w, connect8)
     sizes = labeled.groupBy("comp").agg(F.count(F.lit(1)).alias("_n"))
-    keep = sizes.filter(F.col("_n") >= min_pixels).select("comp")
+    keep = sizes.filter(F.col("_n") >= SIEVE_MIN_PIXELS).select("comp")
     return (
         labeled.join(keep, "comp", "left_semi")
         .select("gx", "gy", "cnt")
@@ -482,16 +487,15 @@ def label_pixels(px: DataFrame, grid_w: int,
     return pix.join(labels, pix.pid == labels.lbl).drop("lbl", "pid")
 
 
-def sieve_checksum_oracle_sql(points_sql: str, z: int, min_pixels: int = 2,
-                              tile_px_log2: int = 6,
+def sieve_checksum_oracle_sql(points_sql: str, z: int,
                               connect8: bool = False) -> str:
     """DuckDB ground truth: recursive-CTE components over the occupancy
     graph, then the GDAL checksum of the sieved count raster per tile."""
     from gdal_spark.raster import CHECKSUM_PRIMES, gpixel_exprs
 
-    gxe, gye = gpixel_exprs("lon", "lat", z)
-    grid_w = 1 << (z + tile_px_log2)
-    t = 1 << tile_px_log2
+    gxe, gye = gpixel_exprs(z)
+    grid_w = 1 << (z + TILE_PX_LOG2)
+    t = 1 << TILE_PX_LOG2
     primes = ", ".join(str(p) for p in CHECKSUM_PRIMES)
     diag = ("or (b.gx = a.gx + 1 and b.gy = a.gy + 1)"
             " or (b.gx = a.gx - 1 and b.gy = a.gy + 1)"
@@ -521,7 +525,7 @@ kept as (
   select px.* from px
   join final on final.pid = px.pid
   join sizes on sizes.comp = final.comp
-  where sizes.n >= {min_pixels}
+  where sizes.n >= {SIEVE_MIN_PIXELS}
 )
 select {z} as z, gx // {t} as tx, gy // {t} as ty,
        cast(sum(cnt % ([{primes}])[(((gy % {t}) * {t} + (gx % {t})) % 11) + 1])
@@ -531,13 +535,13 @@ from kept group by 1, 2, 3
 """
 
 
-def polygonize_oracle_sql(points_sql: str, z: int, tile_px_log2: int = 6) -> str:
+def polygonize_oracle_sql(points_sql: str, z: int) -> str:
     """DuckDB recursive-CTE ground truth: min-label propagation over the
     occupied-pixel adjacency graph of the z-zoom point burn."""
     from gdal_spark.raster import gpixel_exprs
 
-    gxe, gye = gpixel_exprs("lon", "lat", z)
-    grid_w = 1 << (z + tile_px_log2)
+    gxe, gye = gpixel_exprs(z)
+    grid_w = 1 << (z + TILE_PX_LOG2)
     return f"""
 with recursive px as (
   select gx, gy, gy * {grid_w} + gx as pid from (
@@ -611,13 +615,13 @@ def polygonize_rings_summary(labeled: DataFrame, grid_w: int) -> DataFrame:
     )
 
 
-def rings_oracle_sql(points_sql: str, z: int, tile_px_log2: int = 6) -> str:
+def rings_oracle_sql(points_sql: str, z: int) -> str:
     """DuckDB ground truth: recursive-CTE components + the identical
     corner/side DISTINCT counts."""
     from gdal_spark.raster import gpixel_exprs
 
-    gxe, gye = gpixel_exprs("lon", "lat", z)
-    grid_w = 1 << (z + tile_px_log2)
+    gxe, gye = gpixel_exprs(z)
+    grid_w = 1 << (z + TILE_PX_LOG2)
     w1 = grid_w + 1
     return f"""
 with recursive px as (

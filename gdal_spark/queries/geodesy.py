@@ -64,11 +64,9 @@ def q_reproject_lcc93(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct per-projection flags: the two stage lists each define an
     # internal ``ok``; aliasing per projection keeps the LCC flag from
     # being overwritten by the PS one (a lat=-90 row is ps-ok, not lcc-ok)
-    out = apply_sql_stages(pts, epsg_fwd_stages(2154, "lon", "lat",
-                                                "easting", "northing",
+    out = apply_sql_stages(pts, epsg_fwd_stages(2154, "easting", "northing",
                                                 ok_col="lcc_ok"))
-    out = apply_sql_stages(out, epsg_fwd_stages(3031, "lon", "lat",
-                                                "ps_easting",
+    out = apply_sql_stages(out, epsg_fwd_stages(3031, "ps_easting",
                                                 "ps_northing",
                                                 ok_col="ps_ok"))
     return out.select(
@@ -90,8 +88,7 @@ def q_reproject_utm_south(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = points_from_documents(spark, sf_dir).filter(
         "lon >= -3.0 and lon <= 9.0 and lat < 0.0")
-    out = apply_sql_stages(pts, epsg_fwd_stages(32731, "lon", "lat",
-                                                "easting", "northing"))
+    out = apply_sql_stages(pts, epsg_fwd_stages(32731, "easting", "northing"))
     return out.select(
         "doc_id",
         F.round("easting", 3).alias("easting"),
@@ -109,8 +106,7 @@ def q_reproject_albers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.crs import epsg_fwd_stages
 
     pts = points_from_documents(spark, sf_dir)
-    out = apply_sql_stages(pts, epsg_fwd_stages(3577, "lon", "lat",
-                                                "easting", "northing"))
+    out = apply_sql_stages(pts, epsg_fwd_stages(3577, "easting", "northing"))
     return out.select(
         "doc_id",
         F.round("easting", 3).alias("easting"),
@@ -133,8 +129,7 @@ def q_reproject_osgb36(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = points_from_documents(spark, sf_dir).filter(
         "lon >= -20.0 and lon <= 20.0")
-    out = apply_sql_stages(pts, epsg_fwd_stages(27700, "lon", "lat",
-                                                "easting", "northing"))
+    out = apply_sql_stages(pts, epsg_fwd_stages(27700, "easting", "northing"))
     return out.select(
         "doc_id",
         F.round("easting", 3).alias("easting"),
@@ -153,8 +148,7 @@ def q_reproject_etrs89(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = points_from_documents(spark, sf_dir).filter(
         "lon >= 3.0 and lon <= 15.0")
-    out = apply_sql_stages(pts, epsg_fwd_stages(25832, "lon", "lat",
-                                                "easting", "northing"))
+    out = apply_sql_stages(pts, epsg_fwd_stages(25832, "easting", "northing"))
     return out.select(
         "doc_id",
         F.round("easting", 3).alias("easting"),
@@ -175,8 +169,7 @@ def q_reproject_nad27(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = points_from_documents(spark, sf_dir).filter(
         "lon >= -81.0 and lon <= -69.0")
-    out = apply_sql_stages(pts, epsg_fwd_stages(26718, "lon", "lat",
-                                                "easting", "northing"))
+    out = apply_sql_stages(pts, epsg_fwd_stages(26718, "easting", "northing"))
     return out.select(
         "doc_id",
         F.round("easting", 3).alias("easting"),
@@ -211,8 +204,7 @@ def q_reproject_laea_europe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.crs import epsg_fwd_stages
 
     pts = points_from_documents(spark, sf_dir)
-    out = apply_sql_stages(pts, epsg_fwd_stages(3035, "lon", "lat",
-                                                "easting", "northing"))
+    out = apply_sql_stages(pts, epsg_fwd_stages(3035, "easting", "northing"))
     return out.select(
         "doc_id",
         F.round("easting", 3).alias("easting"),
@@ -231,8 +223,7 @@ def q_reproject_ps_north(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.crs import epsg_fwd_stages
 
     pts = points_from_documents(spark, sf_dir).filter("lat > 0.0")
-    out = apply_sql_stages(pts, epsg_fwd_stages(3413, "lon", "lat",
-                                                "easting", "northing"))
+    out = apply_sql_stages(pts, epsg_fwd_stages(3413, "easting", "northing"))
     return out.select(
         "doc_id",
         F.round("easting", 3).alias("easting"),
@@ -272,8 +263,7 @@ def q_reproject_equal_earth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.crs import epsg_fwd_stages
 
     pts = points_from_documents(spark, sf_dir)
-    out = apply_sql_stages(pts, epsg_fwd_stages(8857, "lon", "lat",
-                                                "easting", "northing"))
+    out = apply_sql_stages(pts, epsg_fwd_stages(8857, "easting", "northing"))
     return out.select(
         "doc_id",
         F.round("easting", 3).alias("easting"),
@@ -291,8 +281,7 @@ def q_reproject_sinusoidal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.crs import epsg_fwd_stages
 
     pts = points_from_documents(spark, sf_dir)
-    out = apply_sql_stages(pts, epsg_fwd_stages(6842, "lon", "lat",
-                                                "easting", "northing"))
+    out = apply_sql_stages(pts, epsg_fwd_stages(6842, "easting", "northing"))
     return out.select(
         "doc_id",
         F.round("easting", 3).alias("easting"),
@@ -312,8 +301,7 @@ def q_reproject_mollweide(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.crs import epsg_fwd_stages
 
     pts = points_from_documents(spark, sf_dir)
-    out = apply_sql_stages(pts, epsg_fwd_stages(54009, "lon", "lat",
-                                                "easting", "northing"))
+    out = apply_sql_stages(pts, epsg_fwd_stages(54009, "easting", "northing"))
     return out.select(
         "doc_id",
         F.round("easting", 3).alias("easting"),
@@ -394,10 +382,9 @@ def _osgb36_grid_oracle() -> str:
 def _lcc_oracle() -> str:
     from gdal_spark.crs import epsg_fwd_stages
 
-    stages = (epsg_fwd_stages(2154, "lon", "lat", "easting", "northing",
+    stages = (epsg_fwd_stages(2154, "easting", "northing",
                               ok_col="lcc_ok")
-              + epsg_fwd_stages(3031, "lon", "lat",
-                                "ps_easting", "ps_northing",
+              + epsg_fwd_stages(3031, "ps_easting", "ps_northing",
                                 ok_col="ps_ok"))
     inner = stages_to_duckdb_sql(
         f"select doc_id, lon, lat from ({_PTS}) p", stages,
@@ -437,7 +424,7 @@ def _utm_south_oracle() -> str:
     inner = stages_to_duckdb_sql(
         f"select doc_id, lon, lat from ({_PTS}) p"
         f" where lon >= -3.0 and lon <= 9.0 and lat < 0.0",
-        epsg_fwd_stages(32731, "lon", "lat", "easting", "northing"),
+        epsg_fwd_stages(32731, "easting", "northing"),
         ["doc_id", "easting", "northing", "ok"],
     )
     return (f"select doc_id, round(easting, 3) as easting,"
@@ -449,7 +436,7 @@ def _albers_oracle() -> str:
 
     inner = stages_to_duckdb_sql(
         f"select doc_id, lon, lat from ({_PTS}) p",
-        epsg_fwd_stages(3577, "lon", "lat", "easting", "northing"),
+        epsg_fwd_stages(3577, "easting", "northing"),
         ["doc_id", "easting", "northing", "ok"],
     )
     return (f"select doc_id, round(easting, 3) as easting,"
@@ -462,7 +449,7 @@ def _osgb36_oracle() -> str:
     inner = stages_to_duckdb_sql(
         f"select doc_id, lon, lat from ({_PTS}) p"
         f" where lon >= -20.0 and lon <= 20.0",
-        epsg_fwd_stages(27700, "lon", "lat", "easting", "northing"),
+        epsg_fwd_stages(27700, "easting", "northing"),
         ["doc_id", "easting", "northing", "ok"],
     )
     return (f"select doc_id, round(easting, 3) as easting,"
@@ -474,7 +461,7 @@ def _epsg_pts_oracle(code: int, where: str) -> str:
 
     inner = stages_to_duckdb_sql(
         f"select doc_id, lon, lat from ({_PTS}) p where {where}",
-        epsg_fwd_stages(code, "lon", "lat", "easting", "northing"),
+        epsg_fwd_stages(code, "easting", "northing"),
         ["doc_id", "easting", "northing", "ok"],
     )
     return (f"select doc_id, round(easting, 3) as easting,"

@@ -1006,7 +1006,7 @@ def q_sieve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = points_from_documents(spark, sf_dir)
     grid_w = 1 << (RASTER_Z + 6)
-    kept = sieve_pixels(pixel_counts(pts, RASTER_Z), grid_w, min_pixels=2)
+    kept = sieve_pixels(pixel_counts(pts, RASTER_Z), grid_w)
     return tile_checksums(tiles_from_pixel_counts(kept, RASTER_Z))
 
 
@@ -1021,7 +1021,7 @@ def q_sieve8(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = points_from_documents(spark, sf_dir)
     grid_w = 1 << (RASTER_Z + 6)
     kept = sieve_pixels(pixel_counts(pts, RASTER_Z), grid_w,
-                        min_pixels=2, connect8=True)
+                        connect8=True)
     return tile_checksums(tiles_from_pixel_counts(kept, RASTER_Z))
 
 
@@ -1679,7 +1679,7 @@ def q_pansharpen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sample_oracle() -> str:
-    gxe, gye = gpixel_exprs("lon", "lat", RASTER_Z)
+    gxe, gye = gpixel_exprs(RASTER_Z)
     return f"""
 with px as (
   select {gxe} as gx, {gye} as gy, count(*) as cnt
@@ -1815,7 +1815,7 @@ from m where ms_case <> 0 and ms_case <> 15
 
 
 def _warp_oracle() -> str:
-    sgx_e, sgy_e = warp_pixel_sql(_DST_GT, _SRC_GT, "di", "dj")
+    sgx_e, sgy_e = warp_pixel_sql(_DST_GT, _SRC_GT)
     return gather_dem_oracle_sql(
         f"(select di, dj, {sgx_e} as gx, {sgy_e} as gy"
         f" from {dst_grid_sql(_DST_PX)} d) m", DEM_PX)
@@ -2046,11 +2046,10 @@ select *, 'calc' as op from (
     "raster_histogram": histogram_oracle_sql(_PTS, RASTER_Z),
     "raster_sieve": __import__(
         "gdal_spark.polygonize", fromlist=["sieve_checksum_oracle_sql"]
-    ).sieve_checksum_oracle_sql(_PTS, RASTER_Z, min_pixels=2),
+    ).sieve_checksum_oracle_sql(_PTS, RASTER_Z),
     "raster_sieve8": __import__(
         "gdal_spark.polygonize", fromlist=["sieve_checksum_oracle_sql"]
-    ).sieve_checksum_oracle_sql(_PTS, RASTER_Z, min_pixels=2,
-                                connect8=True),
+    ).sieve_checksum_oracle_sql(_PTS, RASTER_Z, connect8=True),
     "raster_viewshed_exact": __import__(
         "gdal_spark.viewshed_exact",
         fromlist=["viewshed_exact_oracle_sql"]

@@ -28,7 +28,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def q_summary_record(spark, sf_dir):
     """OGR SWQM_SUMMARY_RECORD: whole-table aggregate, single row."""
-    return summary_record(_t(spark, sf_dir, "lineitem"), "l_quantity")
+    return summary_record(_t(spark, sf_dir, "lineitem"))
 
 
 def q_groupby_agg(spark, sf_dir):
@@ -66,7 +66,7 @@ def q_count_distinct(spark, sf_dir):
 
 def q_distinct_list(spark, sf_dir):
     """OGR SWQM_DISTINCT_LIST: sorted distinct values."""
-    return distinct_list(_t(spark, sf_dir, "part"), "p_brand")
+    return distinct_list(_t(spark, sf_dir, "part"))
 
 
 # --- §2.3 joins ------------------------------------------------------------
@@ -96,8 +96,7 @@ def q_first_match_join(spark, sf_dir):
         "l_orderkey", "l_linenumber", "l_quantity")
     # the synthetic lineitem has duplicate (orderkey, linenumber) pairs, so
     # "first" needs a total order — tiebreak on quantity
-    j = first_match_join(o, li, "o_orderkey", "l_orderkey",
-                         ["l_linenumber", "l_quantity"], how="left")
+    j = first_match_join(o, li)
     return j.select("o_orderkey", "l_linenumber", "l_quantity")
 
 

@@ -43,8 +43,8 @@ def q_tile_counts_z8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tile-assignment aggregation (gdal raster tile GetTileIndices math)."""
     pts = points_from_documents(spark, sf_dir)
     return (
-        pts.withColumn("tile_x", cells.tile_x_col("lon", 8))
-        .withColumn("tile_y", cells.tile_y_col("lat", 8))
+        pts.withColumn("tile_x", cells.tile_x_col(8))
+        .withColumn("tile_y", cells.tile_y_col(8))
         .groupBy("tile_x", "tile_y")
         .agg(F.count(F.lit(1)).alias("n_points"))
     )
@@ -151,7 +151,7 @@ def q_layer_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _ = sf_dir  # layer-vs-layer op; inputs are the zone fixtures
     defs = zone_defs()
-    return overlay_areas(spark, defs, shift_defs(defs, 0.31, 0.17))
+    return overlay_areas(spark, defs, shift_defs(defs))
 
 
 def q_layer_identity_update(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -164,7 +164,7 @@ def q_layer_identity_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _ = sf_dir
     defs = zone_defs()
-    method = disjoint_method_defs(shift_defs(defs, 0.31, 0.17))
+    method = disjoint_method_defs(shift_defs(defs))
     return identity_update(spark, defs, method)
 
 
@@ -183,7 +183,7 @@ def q_layer_intersection_nonconvex(spark: SparkSession,
 
     _ = sf_dir
     defs = zone_defs()
-    return intersection_agg(spark, defs, shift_defs(defs, 0.31, 0.17))
+    return intersection_agg(spark, defs, shift_defs(defs))
 
 
 def q_layer_union_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -371,7 +371,7 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _extract_oracle() -> str:
     synth = stages_to_duckdb_sql(
         "select doc_id, text from documents",
-        synth_stages("doc_id") + [("gtext", geotag_text_sql("text"))],
+        synth_stages() + [("gtext", geotag_text_sql())],
         ["doc_id", "has_geo", "gtext"],
     )
     pat = "'geo:([+-]?[0-9]+),([+-]?[0-9]+)'"
@@ -655,7 +655,7 @@ def _overlay_oracle() -> str:
                                           shift_defs)
 
     defs = zone_defs()
-    return overlay_areas_sql(defs, shift_defs(defs, 0.31, 0.17), _D)
+    return overlay_areas_sql(defs, shift_defs(defs), _D)
 
 
 def _ogr2ogr_oracle() -> str:
@@ -676,7 +676,7 @@ def _nonconvex_oracle() -> str:
     from gdal_spark.overlay_features import intersection_agg_sql
 
     defs = zone_defs()
-    return intersection_agg_sql(defs, shift_defs(defs, 0.31, 0.17), _D)
+    return intersection_agg_sql(defs, shift_defs(defs), _D)
 
 
 def _identity_update_oracle() -> str:
@@ -684,7 +684,7 @@ def _identity_update_oracle() -> str:
                                           identity_update_sql, shift_defs)
 
     defs = zone_defs()
-    method = disjoint_method_defs(shift_defs(defs, 0.31, 0.17))
+    method = disjoint_method_defs(shift_defs(defs))
     return identity_update_sql(defs, method, _D)
 
 ORACLES = {

@@ -15,7 +15,9 @@ from pyspark.sql import functions as F
 
 from gdal_spark import simsearch, textops
 from gdal_spark.crs import apply_sql_stages, stages_to_duckdb_sql
-from gdal_spark.dedup import (crawl_from_documents, dedup_exact,
+from gdal_spark.dedup import (DECONTAM_CONTAINMENT, DECONTAM_K, EVAL_MOD,
+                              EVAL_REM, MINHASH_JACCARD, NGRAM_JACCARD,
+                              NGRAM_K, crawl_from_documents, dedup_exact,
                               minhash_neardup_pairs, ngram_jaccard_pairs,
                               simhash_neardup_pairs)
 from gdal_spark.multimodal import decode_stub_meta, payload_meta
@@ -51,11 +53,11 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_neardup_pairs(_crawl(spark, sf_dir), threshold=0.8)
+    return minhash_neardup_pairs(_crawl(spark, sf_dir))
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash_neardup_pairs(_crawl(spark, sf_dir), max_hamming=3)
+    return simhash_neardup_pairs(_crawl(spark, sf_dir))
 
 
 def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,8 +70,7 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.dedup import neardup_clusters
 
     crawl = _crawl(spark, sf_dir)
-    return neardup_clusters(crawl, minhash_neardup_pairs(crawl,
-                                                         threshold=0.8))
+    return neardup_clusters(crawl, minhash_neardup_pairs(crawl))
 
 
 def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -77,7 +78,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters): distinct-word fraction + top-2-gram fraction per doc,
     dual-dialect SQL (textops.repetition_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.repetition_sql("documents", textops.SPARK))
+    return spark.sql(textops.repetition_sql(textops.SPARK))
 
 
 def q_text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,7 +87,7 @@ def q_text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared by ≥3 distinct docs. Engine and oracle run the same
     dual-dialect SQL (textops.boilerplate_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.boilerplate_sql("documents", textops.SPARK))
+    return spark.sql(textops.boilerplate_sql(textops.SPARK))
 
 
 def q_text_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,7 +98,7 @@ def q_text_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     is embarrassingly parallel; both engines run backslash-free regex
     classes that behave identically under Java regex and RE2."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.pii_scan_sql("documents", textops.SPARK))
+    return spark.sql(textops.pii_scan_sql(textops.SPARK))
 
 
 def q_text_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,7 +109,7 @@ def q_text_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bernoulli sampling breaks); per-stratum totals ride a window."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
     return spark.sql(
-        textops.stratified_sample_sql("documents", textops.SPARK))
+        textops.stratified_sample_sql(textops.SPARK))
 
 
 _HOST_STATS_SQL = """
@@ -145,7 +146,7 @@ def _host_stats_oracle() -> str:
 
     synth = stages_to_duckdb_sql(
         "select doc_id, text, lang from documents",
-        synth_stages("doc_id") + [("gtext", geotag_text_sql("text"))],
+        synth_stages() + [("gtext", geotag_text_sql())],
         ["doc_id", "lang", "gtext"],
     )
     src = (f"(select concat('https://site', doc_id % 100,"
@@ -155,7 +156,7 @@ def _host_stats_oracle() -> str:
 
 
 def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_jaccard_pairs(_crawl(spark, sf_dir), k=2, threshold=0.7)
+    return ngram_jaccard_pairs(_crawl(spark, sf_dir))
 
 
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -164,36 +165,35 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     41 == 7) inside the rest of the corpus, broadcast-eval plan."""
     from gdal_spark.dedup import decontaminate
 
-    return decontaminate(_crawl(spark, sf_dir), k=3, threshold=0.3)
+    return decontaminate(_crawl(spark, sf_dir))
 
 
-def _decontaminate_oracle(k: int = 3, threshold: float = 0.3,
-                          eval_mod: int = 41, eval_rem: int = 7) -> str:
-    sh = textops.shingle_rows_sql("documents", DUCKDB, k=k)
+def _decontaminate_oracle() -> str:
+    sh = textops.shingle_rows_sql(DUCKDB, k=DECONTAM_K)
     return f"""
 with sh as ({sh}),
 ev as (select crawl_id as eval_id, sh from sh
-       where crawl_id % {eval_mod} = {eval_rem}),
+       where crawl_id % {EVAL_MOD} = {EVAL_REM}),
 sz as (select eval_id, count(*) as n_eval from ev group by 1),
 hits as (
   select c.crawl_id as corpus_id, e.eval_id, count(*) as n_common
   from sh c join ev e on c.sh = e.sh
-  where c.crawl_id % {eval_mod} <> {eval_rem}
+  where c.crawl_id % {EVAL_MOD} <> {EVAL_REM}
   group by 1, 2
 )
 select h.eval_id, h.corpus_id, h.n_common,
        round(cast(h.n_common as double) / s.n_eval, 6) as containment
 from hits h join sz s on h.eval_id = s.eval_id
-where cast(h.n_common as double) / s.n_eval >= {threshold}
+where cast(h.n_common as double) / s.n_eval >= {DECONTAM_CONTAINMENT}
 """
 
 
 def _crawl_d() -> str:
-    return textops.crawl_sql("documents", DUCKDB)
+    return textops.crawl_sql(DUCKDB)
 
 
 def _exact_jaccard_oracle(k: int, threshold: float) -> str:
-    sh = textops.shingle_rows_sql("documents", DUCKDB, k=k)
+    sh = textops.shingle_rows_sql(DUCKDB, k=k)
     return f"""
 with sh as ({sh}),
 sz as (select crawl_id, count(*) as n from sh group by crawl_id),
@@ -211,12 +211,12 @@ where cast(c as double) / (za.n + zb.n - c) >= {threshold}
 """
 
 
-def _cluster_oracle(k: int, threshold: float) -> str:
-    """Components of the exact near-dup pair graph via a recursive-CTE
-    transitive closure (fixture-scale oracle only — the engine side is
-    the O(log diameter) distributed loop)."""
-    sh = textops.shingle_rows_sql("documents", DUCKDB, k=k)
-    crawl = textops.crawl_sql("documents", DUCKDB)
+def _cluster_oracle() -> str:
+    """Components of the exact MinHash near-dup pair graph via a
+    recursive-CTE transitive closure (fixture-scale oracle only — the
+    engine side is the O(log diameter) distributed loop)."""
+    sh = textops.shingle_rows_sql(DUCKDB, k=3)
+    crawl = textops.crawl_sql(DUCKDB)
     return f"""
 with recursive
 sh as ({sh}),
@@ -231,7 +231,7 @@ p as (
   from i
   join sz za on i.id_a = za.crawl_id
   join sz zb on i.id_b = zb.crawl_id
-  where cast(c as double) / (za.n + zb.n - c) >= {threshold}
+  where cast(c as double) / (za.n + zb.n - c) >= {MINHASH_JACCARD}
 ),
 e(a, b) as (
   select id_a, id_b from p union select id_b, id_a from p
@@ -253,7 +253,7 @@ select crawl_id, cluster_id, crawl_id = cluster_id as keep from comp
 
 
 def _simhash_oracle() -> str:
-    s = textops.simhash_table_sql("documents", DUCKDB)
+    s = textops.simhash_table_sql(DUCKDB)
     return f"""
 with s as ({s})
 select a.crawl_id as id_a, b.crawl_id as id_b,
@@ -272,7 +272,7 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs via banded sign-LSH candidates + exact cosine verify
     (never quadratic); the oracle is the exact all-pairs SQL, so the LSH
     recall margin is asserted by the hash compare itself."""
-    return neardup_pairs(aug_embeddings(_emb(spark, sf_dir)), threshold=0.9)
+    return neardup_pairs(aug_embeddings(_emb(spark, sf_dir)))
 
 
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -289,11 +289,11 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.simsearch import ivf_topk
 
     return ivf_topk(aug_embeddings(_emb(spark, sf_dir)),
-                    ANN_QUERY_FILTER, k=10, n_probe=3)
+                    ANN_QUERY_FILTER, k=10)
 
 
 def _aug_d() -> str:
-    return simsearch.aug_sql("embeddings", DUCKDB)
+    return simsearch.aug_sql(DUCKDB)
 
 
 def _embed_neardup_oracle() -> str:
@@ -356,7 +356,7 @@ def _rare_terms_sql(engine: str) -> str:
     with the lowest corpus document-frequency (pure integer ranking —
     the idf ordering without the float logarithm). One shuffle keyed by
     term for the df, one window keyed by doc."""
-    toks = textops.tokens_sql("text", engine)
+    toks = textops.tokens_sql(engine)
     ex = textops.explode_sql("_toks", "w", engine)
     return f"""
 with tok as (
@@ -423,8 +423,7 @@ def q_text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     without ln(), so no cross-engine float drift). Engine and oracle
     run the same dual-dialect SQL (textops.tfidf_topterms_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.tfidf_topterms_sql("documents",
-                                                textops.SPARK))
+    return spark.sql(textops.tfidf_topterms_sql(textops.SPARK))
 
 
 def q_train_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -437,8 +436,7 @@ def q_train_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition — see textops.pack_sequences_sql. Engine and oracle run
     the same dual-dialect SQL."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.pack_sequences_sql("documents",
-                                                textops.SPARK))
+    return spark.sql(textops.pack_sequences_sql(textops.SPARK))
 
 
 def q_text_bigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -448,8 +446,7 @@ def q_text_bigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     word bigrams. Engine and oracle run the same dual-dialect SQL
     (textops.bigram_novelty_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.bigram_novelty_sql("documents",
-                                                textops.SPARK))
+    return spark.sql(textops.bigram_novelty_sql(textops.SPARK))
 
 
 def q_dedup_substring_spans(spark: SparkSession,
@@ -463,8 +460,7 @@ def q_dedup_substring_spans(spark: SparkSession,
     gaps-and-islands window; textops.substr_dup_spans_sql). Engine and
     oracle run the same dual-dialect SQL."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.substr_dup_spans_sql("documents",
-                                                  textops.SPARK))
+    return spark.sql(textops.substr_dup_spans_sql(textops.SPARK))
 
 
 def q_dedup_paragraph_exact(spark: SparkSession,
@@ -476,8 +472,7 @@ def q_dedup_paragraph_exact(spark: SparkSession,
     (textops.dedup_paragraph_sql). Engine and oracle run the same
     dual-dialect SQL."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.dedup_paragraph_sql("documents",
-                                                 textops.SPARK))
+    return spark.sql(textops.dedup_paragraph_sql(textops.SPARK))
 
 
 def q_crawl_url_canonicalize(spark: SparkSession,
@@ -490,8 +485,7 @@ def q_crawl_url_canonicalize(spark: SparkSession,
     oracle run the same dual-dialect SQL
     (textops.url_canonicalize_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.url_canonicalize_sql("documents",
-                                                  textops.SPARK))
+    return spark.sql(textops.url_canonicalize_sql(textops.SPARK))
 
 
 def q_crawl_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -508,8 +502,7 @@ def q_crawl_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages. Engine and oracle run the same dual-dialect SQL
     (textops.link_graph_pagerank_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.link_graph_pagerank_sql("documents",
-                                                     textops.SPARK))
+    return spark.sql(textops.link_graph_pagerank_sql(textops.SPARK))
 
 
 def q_train_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -526,7 +519,7 @@ def q_train_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of corpus size. Engine and oracle run the same
     dual-dialect SQL (textops.bpe_merges_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.bpe_merges_sql("documents", textops.SPARK))
+    return spark.sql(textops.bpe_merges_sql(textops.SPARK))
 
 
 def q_crawl_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -538,8 +531,7 @@ def q_crawl_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     join shuffles url + md5 only — page bodies never move. Engine and
     oracle run the same dual-dialect SQL (textops.snapshot_delta_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.snapshot_delta_sql("documents",
-                                                textops.SPARK))
+    return spark.sql(textops.snapshot_delta_sql(textops.SPARK))
 
 
 def q_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -553,7 +545,7 @@ def q_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ccnet/dsir precedent). Engine and oracle run the same dual-dialect
     SQL (textops.bm25_topk_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.bm25_topk_sql("documents", textops.SPARK))
+    return spark.sql(textops.bm25_topk_sql(textops.SPARK))
 
 
 def q_crawl_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -567,8 +559,7 @@ def q_crawl_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     one truncating division); engine and oracle run the same
     dual-dialect SQL (textops.hll_distinct_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.hll_distinct_sql("documents",
-                                              textops.SPARK))
+    return spark.sql(textops.hll_distinct_sql(textops.SPARK))
 
 
 def q_text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -580,8 +571,7 @@ def q_text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     train_pack_sequences' cross-doc prefix-sum packing). Engine and
     oracle run the same dual-dialect SQL (textops.chunk_windows_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.chunk_windows_sql("documents",
-                                               textops.SPARK))
+    return spark.sql(textops.chunk_windows_sql(textops.SPARK))
 
 
 def q_crawl_robots_filter(spark: SparkSession,
@@ -593,8 +583,7 @@ def q_crawl_robots_filter(spark: SparkSession,
     equi-join); pages never shuffle. Engine and oracle run the same
     dual-dialect SQL (textops.robots_filter_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.robots_filter_sql("documents",
-                                               textops.SPARK))
+    return spark.sql(textops.robots_filter_sql(textops.SPARK))
 
 
 def q_crawl_sitemap_coverage(spark: SparkSession,
@@ -609,8 +598,7 @@ def q_crawl_sitemap_coverage(spark: SparkSession,
     pairs only; page text never shuffles. Engine and oracle run the
     same dual-dialect SQL (textops.sitemap_coverage_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.sitemap_coverage_sql("documents",
-                                                  textops.SPARK))
+    return spark.sql(textops.sitemap_coverage_sql(textops.SPARK))
 
 
 def q_text_dsir_importance(spark: SparkSession,
@@ -623,8 +611,7 @@ def q_text_dsir_importance(spark: SparkSession,
     Engine and oracle run the same dual-dialect SQL
     (textops.dsir_importance_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.dsir_importance_sql("documents",
-                                                 textops.SPARK))
+    return spark.sql(textops.dsir_importance_sql(textops.SPARK))
 
 
 def q_crawl_html_extract(spark: SparkSession,
@@ -641,8 +628,7 @@ def q_crawl_html_extract(spark: SparkSession,
     codegen, zero shuffles/joins/Python) — scan-bound at 100 TB.
     Engine and oracle share the SQL (textops.html_extract_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.html_extract_sql("documents",
-                                              textops.SPARK))
+    return spark.sql(textops.html_extract_sql(textops.SPARK))
 
 
 def q_warc_ingest_records(spark: SparkSession,
@@ -657,8 +643,7 @@ def q_warc_ingest_records(spark: SparkSession,
     string work, no shuffle. Engine and oracle share the SQL
     (textops.warc_ingest_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.warc_ingest_sql("documents",
-                                             textops.SPARK))
+    return spark.sql(textops.warc_ingest_sql(textops.SPARK))
 
 
 def _charset_html_sql() -> str:
@@ -767,7 +752,7 @@ def q_crawl_cdx_index(spark: SparkSession,
     exchange: the file_id-partitioned window cumsum over record
     lengths. Engine and oracle share the SQL (textops.cdx_index_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.cdx_index_sql("documents", textops.SPARK))
+    return spark.sql(textops.cdx_index_sql(textops.SPARK))
 
 
 def q_text_gopher_rules(spark: SparkSession,
@@ -782,7 +767,7 @@ def q_text_gopher_rules(spark: SparkSession,
     (textops.gopher_rules_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
     return spark.sql(textops.gopher_rules_sql(
-        "documents", textops.SPARK, textops.FIXTURE_STOPWORDS))
+        textops.SPARK, textops.FIXTURE_STOPWORDS))
 
 
 def q_train_mixture_sample(spark: SparkSession,
@@ -796,8 +781,7 @@ def q_train_mixture_sample(spark: SparkSession,
     aggregate + one source-keyed window. Engine and oracle share the
     SQL (textops.mixture_sample_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.mixture_sample_sql("documents",
-                                                textops.SPARK))
+    return spark.sql(textops.mixture_sample_sql(textops.SPARK))
 
 
 def q_vector_geojson_ingest(spark: SparkSession,
@@ -813,8 +797,7 @@ def q_vector_geojson_ingest(spark: SparkSession,
     from gdal_spark import geojson
 
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(geojson.geojson_ingest_sql("documents",
-                                                geojson.SPARK))
+    return spark.sql(geojson.geojson_ingest_sql(geojson.SPARK))
 
 
 def q_vector_shapefile_ingest(spark: SparkSession,
@@ -871,7 +854,7 @@ def q_vector_kml_ingest(spark: SparkSession,
     from gdal_spark import kml
 
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(kml.kml_ingest_sql("documents", kml.SPARK))
+    return spark.sql(kml.kml_ingest_sql(kml.SPARK))
 
 
 def q_text_ccnet_ppl_bucket(spark: SparkSession,
@@ -884,8 +867,7 @@ def q_text_ccnet_ppl_bucket(spark: SparkSession,
     functions. Engine and oracle share the SQL
     (textops.ccnet_ppl_bucket_sql)."""
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(textops.ccnet_ppl_bucket_sql("documents",
-                                                  textops.SPARK))
+    return spark.sql(textops.ccnet_ppl_bucket_sql(textops.SPARK))
 
 
 def q_crawl_geocode_from_html(spark: SparkSession,
@@ -910,10 +892,10 @@ def q_crawl_geocode_from_html(spark: SparkSession,
 def _geocode_from_html_sql(engine: str, cell_id_sql) -> str:
     inner = stages_to_duckdb_sql(
         "select doc_id, text from documents",
-        synth_stages("doc_id") + [("gtext", geotag_text_sql("text"))],
+        synth_stages() + [("gtext", geotag_text_sql())],
         ["doc_id", "has_geo", "lat_mic", "lon_mic", "gtext"],
     )
-    html_expr = textops.rich_html_sql("gtext", "doc_id")
+    html_expr = textops.rich_html_sql("gtext")
     if engine == textops.SPARK:
         html_col = f"decode(encode({html_expr}, 'utf-8'), 'utf-8')"
     else:
@@ -958,7 +940,7 @@ def q_embed_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests. Engine and oracle share the SQL (simsearch.sq8_topk_sql)."""
     _emb(spark, sf_dir).createOrReplaceTempView("embeddings")
     return spark.sql(simsearch.sq8_topk_sql(
-        "embeddings", ANN_QUERY_FILTER, 10, simsearch.SPARK))
+        ANN_QUERY_FILTER, simsearch.SPARK))
 
 
 def q_embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -970,8 +952,7 @@ def q_embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (simsearch.kmeans_sql); per-round work is a bounded k-wide
     broadcast product + a per-vector rank + a (cid, dim) aggregate."""
     _emb(spark, sf_dir).createOrReplaceTempView("embeddings")
-    return spark.sql(simsearch.kmeans_sql("embeddings",
-                                          simsearch.SPARK))
+    return spark.sql(simsearch.kmeans_sql(simsearch.SPARK))
 
 
 def q_multimodal_decode_real(spark: SparkSession,
@@ -1073,7 +1054,7 @@ def q_multimodal_video_framestats(spark: SparkSession,
     docs = read_documents(spark, sf_dir)
     ids = docs.select("doc_id").repartition(
         spark.sparkContext.defaultParallelism)
-    return frame_sample_real_stats(synth_avi_payloads(ids), step=2)
+    return frame_sample_real_stats(synth_avi_payloads(ids))
 
 
 def q_multimodal_decode_tiff(spark: SparkSession,
@@ -1396,7 +1377,7 @@ from documents
 def _html_src_sql() -> str:
     inner = stages_to_duckdb_sql(
         "select doc_id, text from documents",
-        synth_stages("doc_id") + [("gtext", geotag_text_sql("text"))],
+        synth_stages() + [("gtext", geotag_text_sql())],
         ["doc_id", "gtext"],
     )
     return (
@@ -1528,47 +1509,42 @@ ORACLES = {
 select min(crawl_id) as rep_id, count(*) as n_copies
 from ({_crawl_d()}) c group by md5(text) having count(*) >= 2
 """,
-    "dedup_minhash_lsh": _exact_jaccard_oracle(k=3, threshold=0.8),
-    "dedup_cluster_canonical": _cluster_oracle(k=3, threshold=0.8),
+    "dedup_minhash_lsh": _exact_jaccard_oracle(k=3,
+                                               threshold=MINHASH_JACCARD),
+    "dedup_cluster_canonical": _cluster_oracle(),
     "dedup_simhash": _simhash_oracle(),
-    "dedup_ngram_jaccard": _exact_jaccard_oracle(k=2, threshold=0.7),
-    "dedup_substring_spans": textops.substr_dup_spans_sql("documents",
-                                                          DUCKDB),
-    "dedup_paragraph_exact": textops.dedup_paragraph_sql("documents",
-                                                         DUCKDB),
-    "crawl_url_canonicalize": textops.url_canonicalize_sql("documents",
-                                                           DUCKDB),
-    "crawl_pagerank": textops.link_graph_pagerank_sql("documents", DUCKDB),
-    "train_bpe_merges": textops.bpe_merges_sql("documents", DUCKDB),
-    "crawl_snapshot_delta": textops.snapshot_delta_sql("documents", DUCKDB),
-    "text_bm25_topk": textops.bm25_topk_sql("documents", DUCKDB),
-    "crawl_hll_distinct": textops.hll_distinct_sql("documents", DUCKDB),
-    "text_chunk_windows": textops.chunk_windows_sql("documents", DUCKDB),
-    "embed_kmeans": simsearch.kmeans_sql("embeddings", simsearch.DUCKDB),
-    "crawl_robots_filter": textops.robots_filter_sql("documents", DUCKDB),
-    "crawl_sitemap_coverage": textops.sitemap_coverage_sql("documents",
-                                                           DUCKDB),
-    "text_dsir_importance": textops.dsir_importance_sql("documents",
-                                                        DUCKDB),
-    "crawl_html_extract": textops.html_extract_sql("documents", DUCKDB),
-    "warc_ingest_records": textops.warc_ingest_sql("documents", DUCKDB),
+    "dedup_ngram_jaccard": _exact_jaccard_oracle(k=NGRAM_K,
+                                                 threshold=NGRAM_JACCARD),
+    "dedup_substring_spans": textops.substr_dup_spans_sql(DUCKDB),
+    "dedup_paragraph_exact": textops.dedup_paragraph_sql(DUCKDB),
+    "crawl_url_canonicalize": textops.url_canonicalize_sql(DUCKDB),
+    "crawl_pagerank": textops.link_graph_pagerank_sql(DUCKDB),
+    "train_bpe_merges": textops.bpe_merges_sql(DUCKDB),
+    "crawl_snapshot_delta": textops.snapshot_delta_sql(DUCKDB),
+    "text_bm25_topk": textops.bm25_topk_sql(DUCKDB),
+    "crawl_hll_distinct": textops.hll_distinct_sql(DUCKDB),
+    "text_chunk_windows": textops.chunk_windows_sql(DUCKDB),
+    "embed_kmeans": simsearch.kmeans_sql(simsearch.DUCKDB),
+    "crawl_robots_filter": textops.robots_filter_sql(DUCKDB),
+    "crawl_sitemap_coverage": textops.sitemap_coverage_sql(DUCKDB),
+    "text_dsir_importance": textops.dsir_importance_sql(DUCKDB),
+    "crawl_html_extract": textops.html_extract_sql(DUCKDB),
+    "warc_ingest_records": textops.warc_ingest_sql(DUCKDB),
     "crawl_charset_decode": _crawl_charset_decode_oracle(),
-    "crawl_cdx_index": textops.cdx_index_sql("documents", DUCKDB),
+    "crawl_cdx_index": textops.cdx_index_sql(DUCKDB),
     "text_gopher_rules": textops.gopher_rules_sql(
-        "documents", DUCKDB, textops.FIXTURE_STOPWORDS),
-    "train_mixture_sample": textops.mixture_sample_sql("documents",
-                                                       DUCKDB),
+        DUCKDB, textops.FIXTURE_STOPWORDS),
+    "train_mixture_sample": textops.mixture_sample_sql(DUCKDB),
     "embed_sq8_topk": simsearch.sq8_topk_sql(
-        "embeddings", ANN_QUERY_FILTER, 10, simsearch.DUCKDB),
+        ANN_QUERY_FILTER, simsearch.DUCKDB),
     "vector_geojson_ingest": __import__(
         "gdal_spark.geojson", fromlist=["geojson_ingest_sql"]
-    ).geojson_ingest_sql("documents", "duckdb"),
+    ).geojson_ingest_sql("duckdb"),
     "vector_shapefile_ingest": _vector_shapefile_oracle(),
     "vector_kml_ingest": __import__(
         "gdal_spark.kml", fromlist=["kml_ingest_sql"]
-    ).kml_ingest_sql("documents", "duckdb"),
-    "text_ccnet_ppl_bucket": textops.ccnet_ppl_bucket_sql("documents",
-                                                          DUCKDB),
+    ).kml_ingest_sql("duckdb"),
+    "text_ccnet_ppl_bucket": textops.ccnet_ppl_bucket_sql(DUCKDB),
     "crawl_geocode_from_html": _geocode_from_html_sql(
         DUCKDB, __import__("gdal_spark.cells",
                            fromlist=["cell_id_sql"]).cell_id_sql),
@@ -1581,18 +1557,18 @@ from ({_crawl_d()}) c group by md5(text) having count(*) >= 2
     "ann_lsh_topk": simsearch.lsh_topk_oracle_sql(
         _aug_d(), ANN_QUERY_FILTER, k=10),
     "ann_ivf_topk": simsearch.ivf_topk_oracle_sql(
-        _aug_d(), ANN_QUERY_FILTER, k=10, n_probe=3),
+        _aug_d(), ANN_QUERY_FILTER, k=10),
     "text_langid": _staged_oracle(textops.langid_stages, _LANG_COLS),
     "text_quality": _staged_oracle(textops.quality_stages, _QUALITY_COLS),
     "text_token_counts": _staged_oracle(textops.token_count_stages,
                                         _TOKEN_COLS),
     "text_fingerprint": _staged_oracle(textops.fingerprint_stages, _FP_COLS),
     "text_rare_terms": _rare_terms_sql(DUCKDB),
-    "text_boilerplate": textops.boilerplate_sql("documents", DUCKDB),
-    "text_repetition": textops.repetition_sql("documents", DUCKDB),
-    "text_pii_scan": textops.pii_scan_sql("documents", DUCKDB),
+    "text_boilerplate": textops.boilerplate_sql(DUCKDB),
+    "text_repetition": textops.repetition_sql(DUCKDB),
+    "text_pii_scan": textops.pii_scan_sql(DUCKDB),
     "text_stratified_sample":
-        textops.stratified_sample_sql("documents", DUCKDB),
+        textops.stratified_sample_sql(DUCKDB),
     "crawl_host_stats": _host_stats_oracle(),
     "multimodal_inspect": f"""
 select m.url, m.n_bytes, m.content_md5, m.format,
@@ -1614,9 +1590,9 @@ join ({_multimodal_decode_oracle()}) d on d.url = m.url
     "multimodal_decode_wav_variants":
         _multimodal_decode_wav_variants_oracle(),
     "text_tfidf_topterms":
-        textops.tfidf_topterms_sql("documents", DUCKDB),
+        textops.tfidf_topterms_sql(DUCKDB),
     "train_pack_sequences":
-        textops.pack_sequences_sql("documents", DUCKDB),
+        textops.pack_sequences_sql(DUCKDB),
     "text_bigram_novelty":
-        textops.bigram_novelty_sql("documents", DUCKDB),
+        textops.bigram_novelty_sql(DUCKDB),
 }

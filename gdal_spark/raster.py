@@ -64,21 +64,20 @@ TILE_SCHEMA = ("z int, tx long, ty long, band int, gt array<double>, "
 TILE_DTYPE = np.int64
 
 
-def gpixel_exprs(lon: str, lat: str, z: int,
-                 tile_px_log2: int = TILE_PX_LOG2) -> tuple[str, str]:
-    """Global pixel indices at zoom z with 2**tile_px_log2-px tiles —
-    the cell formula evaluated at zoom z + tile_px_log2 (floor-consistent
-    with the tile index: tx == gx >> tile_px_log2)."""
-    pz = z + tile_px_log2
-    return tile_x_sql(lon, pz), tile_y_sql(lat, pz)
+def gpixel_exprs(z: int) -> tuple[str, str]:
+    """Global pixel indices of the ``lon``/``lat`` columns at zoom z with
+    TILE_PX-px tiles — the cell formula evaluated at zoom
+    z + TILE_PX_LOG2 (floor-consistent with the tile index:
+    tx == gx >> TILE_PX_LOG2)."""
+    pz = z + TILE_PX_LOG2
+    return tile_x_sql("lon", pz), tile_y_sql("lat", pz)
 
 
-def pixel_counts(points: DataFrame, z: int, lon: str = "lon",
-                 lat: str = "lat") -> DataFrame:
+def pixel_counts(points: DataFrame, z: int) -> DataFrame:
     """Burn points: (gx, gy, cnt) — MERGE_ALG=ADD with burn value 1
     (alg/gdalrasterize.cpp:779-817). One shuffle keyed by pixel. Points
     with an invalid coordinate (NULL pixel) burn nothing."""
-    gxe, gye = gpixel_exprs(lon, lat, z)
+    gxe, gye = gpixel_exprs(z)
     return (
         points.withColumns({"gx": F.expr(gxe), "gy": F.expr(gye)})
         .filter("gx is not null and gy is not null")
@@ -86,14 +85,13 @@ def pixel_counts(points: DataFrame, z: int, lon: str = "lon",
     )
 
 
-def tile_geotransform(tx: int, ty: int, z: int,
-                      tile_px: int = TILE_PX) -> list[float]:
+def tile_geotransform(tx: int, ty: int, z: int) -> list[float]:
     """WebMercator affine geotransform of a tile
     (gcore/gdal_misc.cpp:3297 apply semantics)."""
     n = 1 << z
-    res = EARTH_CIRCUM_M / (n * tile_px)
-    origin_x = -EARTH_CIRCUM_M / 2.0 + tx * tile_px * res
-    origin_y = EARTH_CIRCUM_M / 2.0 - ty * tile_px * res
+    res = EARTH_CIRCUM_M / (n * TILE_PX)
+    origin_x = -EARTH_CIRCUM_M / 2.0 + tx * TILE_PX * res
+    origin_y = EARTH_CIRCUM_M / 2.0 - ty * TILE_PX * res
     return [origin_x, res, 0.0, origin_y, 0.0, -res]
 
 
@@ -240,7 +238,7 @@ def checksum_oracle_sql(points_sql: str, z: int,
     plain counts; a CASE ladder for reclassify map algebra);
     ``px_remap`` optionally re-addresses the filtered pixels (a SELECT
     over ``px0`` producing gx, gy, cnt — e.g. -outsize decimation)."""
-    gxe, gye = gpixel_exprs("lon", "lat", z)
+    gxe, gye = gpixel_exprs(z)
     primes = ", ".join(str(p) for p in CHECKSUM_PRIMES)
     t = TILE_PX
     remap = px_remap or "select * from px0"
@@ -335,7 +333,7 @@ def _parent_pixels_cte(points_sql: str, z_child: int) -> str:
     """DuckDB CTE: z-1 parent pixels with the 4 child values laid out in
     window scan order (c00 c10 c01 c11 = (dy,dx) 00 01 10 11); absent
     children are 0 — matching the zero-filled tile buffers."""
-    gxe, gye = gpixel_exprs("lon", "lat", z_child)
+    gxe, gye = gpixel_exprs(z_child)
     return f"""
 px as (
   select {gxe} as gx, {gye} as gy, count(*) as cnt
@@ -436,7 +434,7 @@ def raster_stats(tiles: DataFrame) -> DataFrame:
 def raster_stats_oracle_sql(points_sql: str, z: int) -> str:
     """Oracle: a tile's pixel census from the nonzero-pixel counts —
     every materialized tile holds TILE_PX² pixels, zeros implicit."""
-    gxe, gye = gpixel_exprs("lon", "lat", z)
+    gxe, gye = gpixel_exprs(z)
     t2 = TILE_PX * TILE_PX
     return f"""
 with px as (
@@ -466,7 +464,10 @@ from g
 """
 
 
-def histogram(tiles: DataFrame, n_buckets: int = 10) -> DataFrame:
+HIST_BUCKETS = 10
+
+
+def histogram(tiles: DataFrame, n_buckets: int = HIST_BUCKETS) -> DataFrame:
     """GDALRasterBand::GetHistogram with integer buckets [0, n_buckets):
     values ≥ n_buckets clamp into the last bucket (bIncludeOutOfRange).
     Per-tile numpy bincount partials → one keyed reduction."""
@@ -486,9 +487,8 @@ def histogram(tiles: DataFrame, n_buckets: int = 10) -> DataFrame:
             .filter("n_pixels > 0"))
 
 
-def histogram_oracle_sql(points_sql: str, z: int,
-                         n_buckets: int = 10) -> str:
-    gxe, gye = gpixel_exprs("lon", "lat", z)
+def histogram_oracle_sql(points_sql: str, z: int) -> str:
+    gxe, gye = gpixel_exprs(z)
     t2 = TILE_PX * TILE_PX
     return f"""
 with px as (
@@ -496,7 +496,7 @@ with px as (
   from ({points_sql}) p group by 1, 2
 ),
 nz as (
-  select least(cnt, {n_buckets - 1}) as bucket, count(*) as n
+  select least(cnt, {HIST_BUCKETS - 1}) as bucket, count(*) as n
   from px group by 1
 ),
 zeros as (
@@ -715,13 +715,13 @@ where {inside}
 """
 
 
-def sample_at_points(tiles: DataFrame, points: DataFrame, z: int,
-                     point_id: str = "qid") -> DataFrame:
+def sample_at_points(tiles: DataFrame, points: DataFrame,
+                     z: int) -> DataFrame:
     """Nearest-neighbour raster sampling at world coordinates
     (InterpolateAtPoint nearest, gcore/gdalrasterband.cpp:9963): points
     outside any materialized tile sample 0 (sparse raster semantics)."""
     tile_px = TILE_PX
-    gxe, gye = gpixel_exprs("lon", "lat", z)
+    gxe, gye = gpixel_exprs(z)
     pts = (
         points.withColumn("gx", F.expr(gxe)).withColumn("gy", F.expr(gye))
         .withColumn("tx", F.expr(f"gx div {tile_px}"))
@@ -740,10 +740,10 @@ def sample_at_points(tiles: DataFrame, points: DataFrame, z: int,
                     tile_px, tile_px)
                 vals[i] = int(buf[int(gy) - int(ty) * tile_px,
                                   int(gx) - int(tx) * tile_px])
-            yield pd.DataFrame({point_id: pdf[point_id],
+            yield pd.DataFrame({"qid": pdf["qid"],
                                 "value": pd.Series(vals, dtype="int64")})
 
-    return joined.mapInPandas(gather, f"{point_id} long, value long")
+    return joined.mapInPandas(gather, "qid long, value long")
 
 
 # ---------------------------------------------------------------------------
@@ -1087,12 +1087,14 @@ def synth_overlay_tiles(spark, raster_px: int,
     return keys.groupBy("_tx", "_ty").applyInPandas(build, TILE_SCHEMA)
 
 
-def mosaic_tiles(tiles_a: DataFrame, tiles_b: DataFrame,
-                 nodata: int = 0) -> DataFrame:
+MOSAIC_NODATA = 0
+
+
+def mosaic_tiles(tiles_a: DataFrame, tiles_b: DataFrame) -> DataFrame:
     """gdal_merge / gdal raster mosaic compositing
     (swig/python/gdal-utils gdal_merge.py semantics; new CLI
     apps/gdalalg_raster_mosaic.cpp): the LATER source paints over the
-    earlier except where it is nodata. One full-outer equi-join on the
+    earlier except where it is MOSAIC_NODATA. One full-outer equi-join on the
     tile key + a per-tile numpy where() — compositing never shuffles
     pixels, only tile rows."""
     a = tiles_a.select("z", "tx", "ty", "band",
@@ -1108,11 +1110,13 @@ def mosaic_tiles(tiles_a: DataFrame, tiles_b: DataFrame,
             for _, r in pdf.iterrows():
                 buf_a = (np.frombuffer(r["data_a"], dtype=TILE_DTYPE)
                          .reshape(t, t) if r["data_a"] is not None
-                         else np.full((t, t), nodata, dtype=TILE_DTYPE))
+                         else np.full((t, t), MOSAIC_NODATA,
+                                      dtype=TILE_DTYPE))
                 buf_b = (np.frombuffer(r["data_b"], dtype=TILE_DTYPE)
                          .reshape(t, t) if r["data_b"] is not None
-                         else np.full((t, t), nodata, dtype=TILE_DTYPE))
-                buf = np.where(buf_b != nodata, buf_b, buf_a)
+                         else np.full((t, t), MOSAIC_NODATA,
+                                      dtype=TILE_DTYPE))
+                buf = np.where(buf_b != MOSAIC_NODATA, buf_b, buf_a)
                 out.append((int(r["z"]), int(r["tx"]), int(r["ty"]),
                             int(r["band"]),
                             tile_geotransform(int(r["tx"]), int(r["ty"]),
@@ -1177,36 +1181,39 @@ def reclassify_kernel(bounds: list[int]):
     return kernel
 
 
-def hillshade_np(num_x: np.ndarray, num_y: np.ndarray, cellsize: float,
-                 z_factor: float = 1.0, azimuth_deg: float = 315.0,
-                 altitude_deg: float = 45.0) -> np.ndarray:
-    """Horn hillshade from the integer gradient numerators
-    (apps/gdaldem_lib.cpp:812-835): x = z·num_x/(8·cellsize),
+DEM_CELLSIZE = 30.0  # ground size of a DEM pixel (gdaldem -s 1 units)
+HS_AZIMUTH_DEG = 315.0  # gdaldem hillshade -az default
+HS_ALTITUDE_DEG = 45.0  # gdaldem hillshade -alt default
+
+
+def hillshade_np(num_x: np.ndarray, num_y: np.ndarray) -> np.ndarray:
+    """Horn hillshade (z factor 1) from the integer gradient numerators
+    (apps/gdaldem_lib.cpp:812-835): x = num_x/(8·DEM_CELLSIZE),
     cang = sin(alt)·cos(slope) + cos(alt)·sin(slope)·cos(az − aspect),
     scaled to 1..255 (0 reserved for nodata), values < 0 clamped to 1."""
-    x = z_factor * np.asarray(num_x, dtype=np.float64) / (8.0 * cellsize)
-    y = z_factor * np.asarray(num_y, dtype=np.float64) / (8.0 * cellsize)
+    x = np.asarray(num_x, dtype=np.float64) / (8.0 * DEM_CELLSIZE)
+    y = np.asarray(num_y, dtype=np.float64) / (8.0 * DEM_CELLSIZE)
     slope = np.arctan(np.sqrt(x * x + y * y))
     aspect = np.arctan2(y, -x)
-    az = math.radians(360.0 - azimuth_deg + 90.0)
-    alt = math.radians(altitude_deg)
+    az = math.radians(360.0 - HS_AZIMUTH_DEG + 90.0)
+    alt = math.radians(HS_ALTITUDE_DEG)
     cang = (math.sin(alt) * np.cos(slope)
             + math.cos(alt) * np.sin(slope) * np.cos(az - aspect))
     return np.where(cang <= 0.0, 1.0,
                     1.0 + np.round(254.0 * cang)).astype(np.int64)
 
 
-# Precomputed double constants for az=315°, alt=45° (the gdaldem
-# defaults), emitted as exact repr literals so Spark SQL and DuckDB parse
-# the identical double — radians()/degrees() argument-reduction order
+# Precomputed double constants for HS_AZIMUTH_DEG / HS_ALTITUDE_DEG,
+# emitted as exact repr literals so Spark SQL and DuckDB parse the
+# identical double — radians()/degrees() argument-reduction order
 # differs between engines in the last ulp.
-_HS_AZ_RAD = repr(math.radians(360.0 - 315.0 + 90.0))  # 2.356194490192345
-_HS_SIN_ALT = repr(math.sin(math.radians(45.0)))
-_HS_COS_ALT = repr(math.cos(math.radians(45.0)))
+_HS_AZ_RAD = repr(math.radians(360.0 - HS_AZIMUTH_DEG + 90.0))
+_HS_SIN_ALT = repr(math.sin(math.radians(HS_ALTITUDE_DEG)))
+_HS_COS_ALT = repr(math.cos(math.radians(HS_ALTITUDE_DEG)))
 _DEG_PER_RAD = repr(math.degrees(1.0))
 
 
-def hillshade_aspect_sql(rel: str, cellsize: float = 30.0) -> str:
+def hillshade_aspect_sql(rel: str) -> str:
     """One SQL text (valid in Spark SQL and DuckDB) computing gdaldem
     hillshade (Horn, az 315 / alt 45 / z 1 — apps/gdaldem_lib.cpp:812-835)
     and compass aspect over a relation ``rel(gx, gy, num_x, num_y)`` of
@@ -1218,7 +1225,7 @@ def hillshade_aspect_sql(rel: str, cellsize: float = 30.0) -> str:
     are integers, so the value-hash compare survives last-ulp
     transcendental differences between the engines' libm implementations.
     """
-    div = repr(8.0 * cellsize)
+    div = repr(8.0 * DEM_CELLSIZE)
     return f"""
 with hb as (
   select gx, gy, num_x, num_y,
@@ -1376,6 +1383,7 @@ MS_BAND_SQL = {
 }
 PAN_SQL = ("(((gx * 7 + gy * 3) % 97 + 1) + ((gx * 5 + gy * 11) % 89 + 1)"
            " + ((gx * 3 + gy * 13) % 83 + 1) + ((gx + gy) % 7))")
+PAN_PX = 256  # edge of the synthetic MS and pan rasters
 
 
 def synth_band_tiles(spark, formula_np, raster_px: int = 256,
@@ -1402,8 +1410,7 @@ def synth_band_tiles(spark, formula_np, raster_px: int = 256,
     return keys.groupBy("_tx", "_ty").applyInPandas(build, TILE_SCHEMA)
 
 
-def pansharpen_brovey(spark, window_tx: int, window_ty: int,
-                      raster_px: int = 256) -> DataFrame:
+def pansharpen_brovey(spark, window_tx: int, window_ty: int) -> DataFrame:
     """Brovey pansharpening (alg/gdalpansharpen.cpp weighted-ratio path):
     3 synthetic MS bands + 1 pan band as tile tables, equi-joined on
     (tx, ty) — a co-partitioned multi-band join, never a pixel shuffle —
@@ -1414,15 +1421,15 @@ def pansharpen_brovey(spark, window_tx: int, window_ty: int,
     def _ms(coef_x, coef_y, mod):
         return lambda gx, gy: (gx * coef_x + gy * coef_y) % mod + 1
 
-    r = synth_band_tiles(spark, _ms(7, 3, 97), raster_px, band=1)
-    g = synth_band_tiles(spark, _ms(5, 11, 89), raster_px, band=2)
-    b = synth_band_tiles(spark, _ms(3, 13, 83), raster_px, band=3)
+    r = synth_band_tiles(spark, _ms(7, 3, 97), PAN_PX, band=1)
+    g = synth_band_tiles(spark, _ms(5, 11, 89), PAN_PX, band=2)
+    b = synth_band_tiles(spark, _ms(3, 13, 83), PAN_PX, band=3)
 
     def _pan(gx, gy):
         return ((gx * 7 + gy * 3) % 97 + 1) + ((gx * 5 + gy * 11) % 89 + 1) \
             + ((gx * 3 + gy * 13) % 83 + 1) + ((gx + gy) % 7)
 
-    pan = synth_band_tiles(spark, _pan, raster_px, band=0)
+    pan = synth_band_tiles(spark, _pan, PAN_PX, band=0)
     joined = (
         r.selectExpr("tx", "ty", "data as dr")
         .join(g.selectExpr("tx", "ty", "data as dg"), ["tx", "ty"])
@@ -1478,11 +1485,13 @@ from g
 # ---------------------------------------------------------------------------
 
 
-def fillnodata_sql(points_sql: str, z: int, engine: str,
-                   max_cheb: int = 2) -> str:
+FILL_MAX_CHEB = 2  # donor search radius (Chebyshev pixels)
+
+
+def fillnodata_sql(points_sql: str, z: int, engine: str) -> str:
     """IDW nodata fill of the z-level count raster: every zero-valued
     pixel of a materialized tile with ≥1 valid pixel within Chebyshev
-    distance ``max_cheb`` receives the inverse-distance-squared weighted
+    distance FILL_MAX_CHEB receives the inverse-distance-squared weighted
     mean of those donors.
 
     Deliberate divergence from GDALFillNodata's four-directional
@@ -1490,12 +1499,12 @@ def fillnodata_sql(points_sql: str, z: int, engine: str,
     order-free and purely relational — the same fill values regardless
     of partitioning. The per-pixel reduction folds the offset-sorted
     donor list sequentially for cross-engine exactness."""
-    gxe, gye = gpixel_exprs("lon", "lat", z)
+    gxe, gye = gpixel_exprs(z)
     t = TILE_PX
     offs = ", ".join(
         f"({ox}, {oy})"
-        for ox in range(-max_cheb, max_cheb + 1)
-        for oy in range(-max_cheb, max_cheb + 1)
+        for ox in range(-FILL_MAX_CHEB, FILL_MAX_CHEB + 1)
+        for oy in range(-FILL_MAX_CHEB, FILL_MAX_CHEB + 1)
         if not (ox == 0 and oy == 0))
     if engine == "spark":
         def idiv(col: str) -> str:
@@ -1564,14 +1573,14 @@ def _lit(v: float) -> str:
     return r if "e" in r or "E" in r else r + "e0"
 
 
-def warp_pixel_sql(dst_gt: list[float], src_gt: list[float],
-                   di: str = "di", dj: str = "dj") -> tuple[str, str]:
+def warp_pixel_sql(dst_gt: list[float],
+                   src_gt: list[float]) -> tuple[str, str]:
     """Shared SQL: destination pixel (di, dj) → source pixel (sgx, sgy)
     by composing the dst geotransform (pixel center → world,
     gcore/gdal_misc.cpp:3297 GDALApplyGeoTransform) with the inverted
     src geotransform (:3371 GDALInvGeoTransform) and nearest rounding
     (floor — GDALRasterIO nearest convention)."""
-    qx, qy = warp_fractional_sql(dst_gt, src_gt, di, dj)
+    qx, qy = warp_fractional_sql(dst_gt, src_gt)
     return f"cast(floor({qx}) as bigint)", f"cast(floor({qy}) as bigint)"
 
 
@@ -1593,13 +1602,13 @@ def dst_grid_sql(dst_px: int) -> str:
             f" from range(0, {dst_px}) a cross join range(0, {dst_px}) b)")
 
 
-def warp_fractional_sql(dst_gt: list[float], src_gt: list[float],
-                        di: str = "di", dj: str = "dj") -> tuple[str, str]:
+def warp_fractional_sql(dst_gt: list[float],
+                        src_gt: list[float]) -> tuple[str, str]:
     """Continuous dst pixel (di, dj) → fractional source pixel coords
     (no rounding — the tap-kernel input, alg/gdalwarpkernel.cpp
     GWKBilinear path)."""
-    wx = f"({_lit(dst_gt[0])} + ({di} + 0.5) * {_lit(dst_gt[1])})"
-    wy = f"({_lit(dst_gt[3])} + ({dj} + 0.5) * {_lit(dst_gt[5])})"
+    wx = f"({_lit(dst_gt[0])} + (di + 0.5) * {_lit(dst_gt[1])})"
+    wy = f"({_lit(dst_gt[3])} + (dj + 0.5) * {_lit(dst_gt[5])})"
     qx = f"(({wx} - {_lit(src_gt[0])}) / {_lit(src_gt[1])})"
     qy = f"(({wy} - {_lit(src_gt[3])}) / {_lit(src_gt[5])})"
     return qx, qy
@@ -1902,10 +1911,8 @@ def warp_nearest_crs(tiles: DataFrame, src_gt: list[float], raster_px: int,
     dst = dst_grid(tiles.sparkSession, dst_px, px_per_task=8192) \
         .selectExpr("di", "dj", f"{dx_e} as dwx", f"{dy_e} as dwy")
     dst = apply_sql_stages(dst, epsg_inv_stages(dst_epsg, "dwx", "dwy",
-                                                "lon", "lat",
                                                 ok_col="inv_ok"))
-    dst = apply_sql_stages(dst, epsg_fwd_stages(src_epsg, "lon", "lat",
-                                                "wx", "wy"))
+    dst = apply_sql_stages(dst, epsg_fwd_stages(src_epsg, "wx", "wy"))
     # pushdown barrier: predicate pushdown + CollapseProject would
     # substitute the unrolled fixed-point stages into the filter
     # condition level by level — exponential expression blowup (measured
@@ -1941,9 +1948,8 @@ def warp_nearest_crs_oracle_sql(src_gt: list[float], raster_px: int,
 select di, dj, {dx_e} as dwx, {dy_e} as dwy
 from {dst_grid_sql(dst_px)} g
 """
-    stages = (epsg_inv_stages(dst_epsg, "dwx", "dwy", "lon", "lat",
-                              ok_col="inv_ok")
-              + epsg_fwd_stages(src_epsg, "lon", "lat", "wx", "wy"))
+    stages = (epsg_inv_stages(dst_epsg, "dwx", "dwy", ok_col="inv_ok")
+              + epsg_fwd_stages(src_epsg, "wx", "wy"))
     proj = stages_to_duckdb_sql(
         base, stages, ["di", "dj", "wx", "wy", "inv_ok", "ok"])
     # materialized: DuckDB's filter pushdown would otherwise substitute
@@ -2005,9 +2011,13 @@ def _approx_ok_sql(tol_px: float) -> str:
             f" and abs({my} - msy) <= {_lit(tol_px)})")
 
 
-def _approx_uv_sql(block: int) -> tuple[str, str]:
-    u = f"((di + 0.5e0 - ci * {block}) / {_lit(float(block))})"
-    v = f"((dj + 0.5e0 - cj * {block}) / {_lit(float(block))})"
+APPROX_BLOCK = 16  # control-lattice cell edge in dst pixels
+
+
+def _approx_uv_sql() -> tuple[str, str]:
+    b = _lit(float(APPROX_BLOCK))
+    u = f"((di + 0.5e0 - ci * {APPROX_BLOCK}) / {b})"
+    v = f"((dj + 0.5e0 - cj * {APPROX_BLOCK}) / {b})"
     return u, v
 
 
@@ -2015,23 +2025,21 @@ def warp_nearest_crs_approx(tiles: DataFrame, src_gt: list[float],
                             raster_px: int, dst_gt: list[float],
                             dst_px: int, src_epsg: int,
                             dst_epsg: int = 4326,
-                            tol_px: float = 0.125,
-                            block: int = 16) -> DataFrame:
+                            tol_px: float = 0.125) -> DataFrame:
     """Cross-CRS nearest warp through the approximating transformer (see
     block comment above). ``tol_px`` is gdalwarp -et in SOURCE pixels;
-    ``block`` the lattice cell edge in dst pixels (GDAL's scanline
+    APPROX_BLOCK the lattice cell edge in dst pixels (GDAL's scanline
     subdivision granularity analogue)."""
     from gdal_spark.crs import (apply_sql_stages, epsg_fwd_stages,
                                 epsg_inv_stages)
 
     spark = tiles.sparkSession
-    ncell = (dst_px + block - 1) // block
+    ncell = (dst_px + APPROX_BLOCK - 1) // APPROX_BLOCK
     n_nodes = (ncell + 1) * (ncell + 1)
     n_mids = ncell * ncell
-    stages = (epsg_inv_stages(dst_epsg, "dwx", "dwy", "lon", "lat",
-                              ok_col="inv_ok")
-              + epsg_fwd_stages(src_epsg, "lon", "lat", "wx", "wy"))
-    half = _lit(block / 2.0)
+    stages = (epsg_inv_stages(dst_epsg, "dwx", "dwy", ok_col="inv_ok")
+              + epsg_fwd_stages(src_epsg, "wx", "wy"))
+    half = _lit(APPROX_BLOCK / 2.0)
     # one staged-projection pass over nodes ∪ midpoints — the ONLY rows
     # that pay the unrolled trig chain besides the fallback pixels
     ctl = (
@@ -2047,9 +2055,9 @@ def warp_nearest_crs_approx(tiles: DataFrame, src_gt: list[float],
             f" else (id - {n_nodes}) div {ncell} end as kj")
         .selectExpr(
             "kind", "ki", "kj",
-            f"{_lit(dst_gt[0])} + (ki * {block} + kind * {half})"
+            f"{_lit(dst_gt[0])} + (ki * {APPROX_BLOCK} + kind * {half})"
             f" * {_lit(dst_gt[1])} as dwx",
-            f"{_lit(dst_gt[3])} + (kj * {block} + kind * {half})"
+            f"{_lit(dst_gt[3])} + (kj * {APPROX_BLOCK} + kind * {half})"
             f" * {_lit(dst_gt[5])} as dwy")
     )
     ctl = apply_sql_stages(ctl, stages).selectExpr(
@@ -2081,12 +2089,12 @@ def warp_nearest_crs_approx(tiles: DataFrame, src_gt: list[float],
             "ci", "cj", "approx_ok",
             "c00x", "c10x", "c01x", "c11x",
             "c00y", "c10y", "c01y", "c11y",
-            f"explode(sequence(0, {block * block - 1})) as o")
-        .selectExpr("*", f"ci * {block} + o % {block} as di",
-                    f"cj * {block} + o div {block} as dj")
+            f"explode(sequence(0, {APPROX_BLOCK * APPROX_BLOCK - 1})) as o")
+        .selectExpr("*", f"ci * {APPROX_BLOCK} + o % {APPROX_BLOCK} as di",
+                    f"cj * {APPROX_BLOCK} + o div {APPROX_BLOCK} as dj")
         .filter(f"di < {dst_px} and dj < {dst_px}")
     )
-    u, v = _approx_uv_sql(block)
+    u, v = _approx_uv_sql()
     apx = px.filter("approx_ok").selectExpr(
         "di", "dj",
         f"{_bilerp_sql('c00x', 'c10x', 'c01x', 'c11x', u, v)} as sxf",
@@ -2112,25 +2120,23 @@ def warp_nearest_crs_approx_oracle_sql(src_gt: list[float],
                                        dst_gt: list[float], dst_px: int,
                                        src_epsg: int,
                                        dst_epsg: int = 4326,
-                                       tol_px: float = 0.125,
-                                       block: int = 16) -> str:
+                                       tol_px: float = 0.125) -> str:
     """Oracle: the identical lattice/bilerp/fallback arithmetic in
     DuckDB (shared expression text for every float op), closed-form DEM
     values."""
     from gdal_spark.crs import (epsg_fwd_stages, epsg_inv_stages,
                                 stages_to_duckdb_sql)
 
-    ncell = (dst_px + block - 1) // block
+    ncell = (dst_px + APPROX_BLOCK - 1) // APPROX_BLOCK
     n_nodes = (ncell + 1) * (ncell + 1)
-    stages = (epsg_inv_stages(dst_epsg, "dwx", "dwy", "lon", "lat",
-                              ok_col="inv_ok")
-              + epsg_fwd_stages(src_epsg, "lon", "lat", "wx", "wy"))
-    half = _lit(block / 2.0)
+    stages = (epsg_inv_stages(dst_epsg, "dwx", "dwy", ok_col="inv_ok")
+              + epsg_fwd_stages(src_epsg, "wx", "wy"))
+    half = _lit(APPROX_BLOCK / 2.0)
     ctl_base = f"""
 select kind, ki, kj,
-       {_lit(dst_gt[0])} + (ki * {block} + kind * {half})
+       {_lit(dst_gt[0])} + (ki * {APPROX_BLOCK} + kind * {half})
          * {_lit(dst_gt[1])} as dwx,
-       {_lit(dst_gt[3])} + (kj * {block} + kind * {half})
+       {_lit(dst_gt[3])} + (kj * {APPROX_BLOCK} + kind * {half})
          * {_lit(dst_gt[5])} as dwy
 from (select case when g.range < {n_nodes} then 0 else 1 end as kind,
              case when g.range < {n_nodes} then g.range % {ncell + 1}
@@ -2142,7 +2148,7 @@ from (select case when g.range < {n_nodes} then 0 else 1 end as kind,
     ctl_proj = stages_to_duckdb_sql(
         ctl_base, stages, ["kind", "ki", "kj", "wx", "wy",
                            "inv_ok", "ok"])
-    u, v = _approx_uv_sql(block)
+    u, v = _approx_uv_sql()
     ex_base = f"""
 select di, dj,
        {_lit(dst_gt[0])} + (di + 0.5e0) * {_lit(dst_gt[1])} as dwx,
@@ -2180,9 +2186,9 @@ cells as (
 cellsf as (select *, {_approx_ok_sql(tol_px)} as approx_ok from cells),
 px as materialized (
   select * from (
-    select c.*, c.ci * {block} + o.range % {block} as di,
-           c.cj * {block} + o.range // {block} as dj
-    from cellsf c cross join range(0, {block * block}) o
+    select c.*, c.ci * {APPROX_BLOCK} + o.range % {APPROX_BLOCK} as di,
+           c.cj * {APPROX_BLOCK} + o.range // {APPROX_BLOCK} as dj
+    from cellsf c cross join range(0, {APPROX_BLOCK * APPROX_BLOCK}) o
   ) q where di < {dst_px} and dj < {dst_px}
 ),
 apx as (
@@ -2230,14 +2236,14 @@ _HSV_CA127 = repr(127.0 * math.cos(math.radians(45.0)) / 8.0)
 _HSV_FLAT = repr(1.0 + 254.0 * math.sin(math.radians(45.0)))
 
 
-def hillshade_variants_sql(rel: str, cellsize: float = 30.0) -> str:
+def hillshade_variants_sql(rel: str) -> str:
     """One SQL text (Spark SQL ≡ DuckDB) computing the combined and
     multidirectional hillshades over ``rel(gx, gy, num_x, num_y)`` of
     integer Horn numerators (north-up raster: the GDAL kernels divide
-    num_y by the NEGATIVE ns resolution, hence hy = −num_y/cellsize).
+    num_y by the NEGATIVE ns resolution, hence hy = −num_y/DEM_CELLSIZE).
     Outputs round to integers so the hash compare survives last-ulp
     libm differences."""
-    c = repr(float(cellsize))
+    c = repr(float(DEM_CELLSIZE))
     return f"""
 with hv as (
   select gx, gy,
@@ -2287,7 +2293,7 @@ from hm
 """
 
 
-def slope_formats_sql(rel: str, cellsize: float = 30.0) -> str:
+def slope_formats_sql(rel: str) -> str:
     """gdaldem slope in both formats and both gradient algorithms
     (apps/gdaldem_lib.cpp GDALSlopeHornAlg:1293 /
     GDALSlopeZevenbergenThorneAlg:1311; -p percent, -alg
@@ -2296,7 +2302,7 @@ def slope_formats_sql(rel: str, cellsize: float = 30.0) -> str:
     numerators. deg = atan(√key / k)·180/π, pct = 100·√key / k with
     k = 8 (Horn) or 2 (ZT); round(…, 6) so the hash compare survives
     last-ulp libm differences."""
-    c = repr(float(cellsize))
+    c = repr(float(DEM_CELLSIZE))
     hk = f"(cast(num_x as double) * num_x + cast(num_y as double) * num_y)" \
          f" / ({c}e0 * {c}e0)"
     zk = f"(cast(zt_x as double) * zt_x + cast(zt_y as double) * zt_y)" \
@@ -2318,8 +2324,10 @@ from {rel}
 # ---------------------------------------------------------------------------
 
 
-def equalize_params(vmin: float, vmax: float,
-                    n_buckets: int = 256) -> tuple[float, float]:
+EQ_BUCKETS = 256  # GDALGetDefaultHistogram's bucket count
+
+
+def equalize_params(vmin: float, vmax: float) -> tuple[float, float]:
     """GDALGetDefaultHistogram's non-Byte bucket frame
     (gcore/gdalrasterband.cpp:4896-4900): min/max from statistics,
     expanded by half a bucket — transcribed with the identical double
@@ -2329,15 +2337,15 @@ def equalize_params(vmin: float, vmax: float,
     GetHistogram (gdalrasterband.cpp:4432) and gdalenhance's
     EnhancerCallback (apps/gdalenhance.cpp:503-528 — truncation and
     floor agree for the in-range positives)."""
-    half = (vmax - vmin) / (2 * (n_buckets - 1))
+    half = (vmax - vmin) / (2 * (EQ_BUCKETS - 1))
     lo = vmin - half
     hi = vmax + half
-    scale = n_buckets / (hi - lo)
+    scale = EQ_BUCKETS / (hi - lo)
     return lo, scale
 
 
-def equalize_map_sql(hist_sql: str, engine: str, vmin: float, vmax: float,
-                     n_buckets: int = 256) -> str:
+def equalize_map_sql(hist_sql: str, engine: str, vmin: float,
+                     vmax: float) -> str:
     """value → equalized-byte map (gdalenhance ComputeEqualizationLUTs,
     apps/gdalenhance.cpp:370-461): bucket the value histogram into the
     256 default-histogram bins, zero the extreme bins (":=0" of
@@ -2351,13 +2359,13 @@ def equalize_map_sql(hist_sql: str, engine: str, vmin: float, vmax: float,
     ``hist_sql`` must yield (value, n_pixels) — the ONE data pass; at
     100 TB that is per-tile bincount partials and a keyed reduction,
     everything here is a 256-row table."""
-    lo, scale = equalize_params(vmin, vmax, n_buckets)
-    last = n_buckets - 1
+    lo, scale = equalize_params(vmin, vmax)
+    last = EQ_BUCKETS - 1
     if engine == "spark":
         spine = f"select explode(sequence(0, {last})) as b"
         idiv = " div "
     else:
-        spine = f"select unnest(range(0, {n_buckets})) as b"
+        spine = f"select unnest(range(0, {EQ_BUCKETS})) as b"
         idiv = " // "
     bin_expr = (f"least(greatest(cast(floor((cast(value as double)"
                 f" - cast({lo!r} as double)) * cast({scale!r} as double))"
@@ -2381,7 +2389,7 @@ cum as (
   from hz),
 lut as (
   select b,
-         least(greatest((c * {n_buckets}){idiv}tot, cast(0 as bigint)),
+         least(greatest((c * {EQ_BUCKETS}){idiv}tot, cast(0 as bigint)),
                {last}) as lv
   from cum)
 select vh.value, cast(lut.lv as bigint) as out_val

@@ -69,13 +69,13 @@ def _minor(i: str) -> str:
             f" / (2.0 * mj)) as bigint) end")
 
 
-def _pix_cols(i: str) -> list[tuple[str, str]]:
-    mn_i = _minor(i)
+def _pix_cols() -> list[tuple[str, str]]:
+    mn_i = _minor("i")
     return [
-        ("gx", f"ix0 + (case when xmaj then {i} * sx"
+        ("gx", "ix0 + (case when xmaj then i * sx"
                f" else ({mn_i}) * sx end)"),
         ("gy", f"iy0 + (case when xmaj then ({mn_i}) * sy"
-               f" else {i} * sy end)"),
+               " else i * sy end)"),
     ]
 
 
@@ -101,7 +101,7 @@ def rasterize_lines(spark: SparkSession, defs: list[dict]) -> DataFrame:
         "zone_id", "eas_id", "ix0", "iy0", "sx", "sy", "mj", "mn", "xmaj",
         F.expr("explode(sequence(0, imax))").alias("i"),
     )
-    for name, expr in _pix_cols("i"):
+    for name, expr in _pix_cols():
         pix = pix.withColumn(name, F.expr(expr))
     # clip to the raster, like the reference's bounds check per point
     pix = pix.filter(f"gx >= 0 and gx < {_NPX} and gy >= 0 and gy < {_NPX}")
@@ -152,7 +152,7 @@ def rasterize_lines_oracle_sql(defs: list[dict]) -> str:
     walk = "\n         ".join(
         f", {e} as {n}" for n, e in _WALK_COLS if n != "imax")
     mn_i = _minor("i")
-    gx, gy = dict(_pix_cols("i"))["gx"], dict(_pix_cols("i"))["gy"]
+    gx, gy = dict(_pix_cols())["gx"], dict(_pix_cols())["gy"]
     prime = (f"([{_PRIMES}])"
              f"[cast(((gy % {_T}) * {_T} + (gx % {_T})) % 11 + 1 as int)]")
     return f"""

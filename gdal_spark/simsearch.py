@@ -18,12 +18,12 @@ Scale design (10^12 vectors):
   window rank — the baseline every ANN variant is measured against;
 - `lsh_bucket_topk` buckets vectors by an n-bit random-hyperplane sign
   sketch: candidate generation is an equi-join on the sketch (hamming≤1
-  multiprobe), never a cross join. `n_bits` scales with log2(N) — 6 bits
+  multiprobe), never a cross join. `ANN_N_BITS` scales with log2(N) — 6 bits
   at fixture scale (64 buckets over 625 vectors keeps every bucket
   non-starved), 20+ bits at 10^12;
 - `ivf_topk` assigns every vector to its nearest coarse centroid and
-  probes the query's n_probe nearest inverted lists — an equi-join on the
-  centroid id;
+  probes the query's IVF_N_PROBE nearest inverted lists — an equi-join
+  on the centroid id;
 - `neardup_pairs` (the contract near-dup path) generates candidates by
   banded sign-LSH (B bands × R bits: a pair is a candidate iff some band's
   R sketch bits all agree) and exact-verifies each candidate's cosine.
@@ -60,7 +60,7 @@ EMB_DIM = 64
 # near-dup bands (12 bands × 12 bits — R=12 prunes unrelated pairs to
 # ~2^-12 per band while B=12 keeps the miss probability per true pair at
 # (1-(1-p)^12)^12 ≈ 1.2e-6 for the fixture's p≈0.032); the ANN sketch
-# reuses the first `n_bits`.
+# reuses the first `ANN_N_BITS`.
 _N_PLANES_TOTAL = 144
 NEARDUP_BANDS = 12
 NEARDUP_BITS = 12
@@ -95,37 +95,38 @@ def norm2_sql(a: str, engine: str) -> str:
     return dot_sql(a, a, engine)
 
 
-def as_double_list_sql(a: str, engine: str) -> str:
+def as_double_list_sql(engine: str) -> str:
     if engine == SPARK:
-        return f"transform({a}, x -> cast(x as double))"
-    return f"list_transform({a}, x -> x::double)"
+        return "transform(embedding, x -> cast(x as double))"
+    return "list_transform(embedding, x -> x::double)"
 
 
-def perturb_sql(a: str, engine: str) -> str:
+def perturb_sql(engine: str) -> str:
     """First element shifted by PERTURB_DELTA (cosine stays ≈0.999…)."""
     if engine == SPARK:
         return (
-            f"concat(array(cast(element_at({a}, 1) as double)"
+            "concat(array(cast(element_at(embedding, 1) as double)"
             f" + {PERTURB_DELTA}),"
-            f" transform(slice({a}, 2, size({a}) - 1),"
+            " transform(slice(embedding, 2, size(embedding) - 1),"
             f" x -> cast(x as double)))"
         )
     return (
-        f"list_concat([{a}[1]::double + {PERTURB_DELTA}],"
-        f" list_transform(list_slice({a}, 2, length({a})), x -> x::double))"
+        f"list_concat([embedding[1]::double + {PERTURB_DELTA}],"
+        " list_transform(list_slice(embedding, 2, length(embedding)),"
+        " x -> x::double))"
     )
 
 
-def aug_sql(emb_view: str, engine: str) -> str:
+def aug_sql(engine: str) -> str:
     """embeddings → augmented table with deterministic near-duplicates:
     every vector once ('orig'), vec_id % 4 == 1 perturbed (+100000).
     Vectors carried as double lists with precomputed squared norm."""
-    base = as_double_list_sql("embedding", engine)
-    pert = perturb_sql("embedding", engine)
+    base = as_double_list_sql(engine)
+    pert = perturb_sql(engine)
     inner = f"""
-select vec_id, {base} as vec, label from {emb_view}
+select vec_id, {base} as vec, label from embeddings
 union all
-select vec_id + 100000, {pert}, label from {emb_view} where vec_id % 4 = 1
+select vec_id + 100000, {pert}, label from embeddings where vec_id % 4 = 1
 """
     return (
         f"select vec_id, vec, label, {norm2_sql('vec', engine)} as n2"
@@ -137,19 +138,18 @@ def aug_embeddings(emb: DataFrame) -> DataFrame:
     """DataFrame version of aug_sql (same arithmetic)."""
     base = emb.select(
         "vec_id",
-        F.expr(as_double_list_sql("embedding", SPARK)).alias("vec"), "label")
+        F.expr(as_double_list_sql(SPARK)).alias("vec"), "label")
     pert = emb.filter("vec_id % 4 = 1").select(
         (F.col("vec_id") + 100000).alias("vec_id"),
-        F.expr(perturb_sql("embedding", SPARK)).alias("vec"), "label")
+        F.expr(perturb_sql(SPARK)).alias("vec"), "label")
     return (
         base.unionByName(pert)
         .withColumn("n2", F.expr(norm2_sql("vec", SPARK)))
     )
 
 
-def cosine_pair_expr(va: str, vb: str, na2: str, nb2: str,
-                     engine: str = SPARK) -> str:
-    return f"{dot_sql(va, vb, engine)} / (sqrt({na2}) * sqrt({nb2}))"
+def cosine_pair_expr(va: str, vb: str, na2: str, nb2: str) -> str:
+    return f"{dot_sql(va, vb, SPARK)} / (sqrt({na2}) * sqrt({nb2}))"
 
 
 # ---------------------------------------------------------------------------
@@ -181,28 +181,27 @@ def planes_literal_sql(engine: str) -> str:
     return f"{fn}({', '.join(rows)})"
 
 
-def _plane_dot_sql(plane_idx: int, vec: str, engine: str,
-                   pl: str = "_pl") -> str:
+def _plane_dot_sql(plane_idx: int, engine: str) -> str:
     """Fold dot(planes[plane_idx], vec): (0 + p1*v1) + p2*v2 + …"""
     if engine == SPARK:
         return (
             f"aggregate(transform(sequence(1, {EMB_DIM}),"
-            f" i -> element_at(element_at({pl}, {plane_idx + 1}), i)"
-            f" * element_at({vec}, i)), 0e0, (s, v) -> s + v)"
+            f" i -> element_at(element_at(_pl, {plane_idx + 1}), i)"
+            " * element_at(vec, i)), 0e0, (s, v) -> s + v)"
         )
     return (
         f"list_reduce(list_concat([0e0],"
         f" list_transform(range(1, {EMB_DIM + 1}),"
-        f" i -> {pl}[{plane_idx + 1}][i] * {vec}[i])), (s, v) -> s + v)"
+        f" i -> _pl[{plane_idx + 1}][i] * vec[i])), (s, v) -> s + v)"
     )
 
 
-def sketch_bits_sql(vec: str, engine: str, first_plane: int, n_bits: int,
-                    pl: str = "_pl") -> str:
-    """n-bit integer sign sketch from planes[first_plane:first_plane+n]."""
+def sketch_bits_sql(engine: str) -> str:
+    """ANN_N_BITS-bit integer sign sketch of ``vec`` from the first
+    ANN_N_BITS planes."""
     parts = []
-    for b in range(n_bits):
-        dot = _plane_dot_sql(first_plane + b, vec, engine, pl)
+    for b in range(ANN_N_BITS):
+        dot = _plane_dot_sql(b, engine)
         parts.append(f"(case when {dot} > 0e0 then {1 << b} else 0 end)")
     return "(" + " + ".join(parts) + ")"
 
@@ -231,10 +230,9 @@ def _vec_matrix(v: pd.Series) -> np.ndarray:
     return np.asarray([np.asarray(x, dtype=np.float64) for x in v])
 
 
-def with_sketch(df: DataFrame, vec_col: str = "vec", out_col: str = "sketch",
-                n_bits: int = ANN_N_BITS) -> DataFrame:
+def with_sketch(df: DataFrame) -> DataFrame:
     def kern(v):
-        return pd.Series(_sketch_np(_vec_matrix(v), 0, n_bits))
+        return pd.Series(_sketch_np(_vec_matrix(v), 0, ANN_N_BITS))
 
     kern.__annotations__ = {"v": pd.Series, "return": pd.Series}
     # asNondeterministic is a planning barrier, not a semantic marker
@@ -242,7 +240,7 @@ def with_sketch(df: DataFrame, vec_col: str = "vec", out_col: str = "sketch",
     # consuming projection — the lsh plan showed SIX ArrowEvalPython
     # evaluations of the same sketch column
     udf = F.pandas_udf(kern, "long").asNondeterministic()
-    return df.withColumn(out_col, udf(F.col(vec_col)))
+    return df.withColumn("sketch", udf(F.col("vec")))
 
 
 # ---------------------------------------------------------------------------
@@ -250,7 +248,10 @@ def with_sketch(df: DataFrame, vec_col: str = "vec", out_col: str = "sketch",
 # ---------------------------------------------------------------------------
 
 
-def neardup_pairs(aug: DataFrame, threshold: float = 0.9) -> DataFrame:
+NEARDUP_COSINE = 0.9  # cosine of a near-duplicate pair
+
+
+def neardup_pairs(aug: DataFrame) -> DataFrame:
     """Near-duplicate pairs by banded sign-LSH candidates + exact cosine
     verification. Candidate generation is an equi-join on (band, sketch)
     — O(collisions), never O(N²); precision is exact (every candidate is
@@ -300,13 +301,12 @@ def neardup_pairs(aug: DataFrame, threshold: float = 0.9) -> DataFrame:
     cos_udf = F.pandas_udf(cos_kern, "double").asNondeterministic()
     pairs = (
         cand.withColumn("_cos", cos_udf("va", "vb", "na2", "nb2"))
-        .filter(F.col("_cos") >= threshold)
+        .filter(F.col("_cos") >= NEARDUP_COSINE)
     )
     return pairs.select("vec_a", "vec_b", F.round("_cos", 6).alias("cosine"))
 
 
-def neardup_pairs_bruteforce(aug: DataFrame,
-                             threshold: float = 0.9) -> DataFrame:
+def neardup_pairs_bruteforce(aug: DataFrame) -> DataFrame:
     """Exact all-pairs near-dup (verification-grade, O(N²)) — the in-Spark
     ground truth that the LSH-blocked contract path is tested against;
     never registered as a contract query."""
@@ -317,7 +317,7 @@ def neardup_pairs_bruteforce(aug: DataFrame,
     pairs = (
         a.crossJoin(b).filter("vec_a < vec_b")
         .withColumn("_cos", F.expr(cosine_pair_expr("va", "vb", "na2", "nb2")))
-        .filter(F.col("_cos") >= threshold)
+        .filter(F.col("_cos") >= NEARDUP_COSINE)
     )
     return pairs.select("vec_a", "vec_b", F.round("_cos", 6).alias("cosine"))
 
@@ -347,14 +347,14 @@ def brute_topk(aug: DataFrame, query_filter: str, k: int = 10) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def lsh_bucket_topk(aug: DataFrame, query_filter: str, k: int = 10,
-                    n_bits: int = ANN_N_BITS) -> DataFrame:
+def lsh_bucket_topk(aug: DataFrame, query_filter: str,
+                    k: int = 10) -> DataFrame:
     """ANN top-k: candidates share the query's n-bit sign sketch or differ
     in exactly one bit (multi-probe, hamming ≤ 1) — an equi-join on the
-    sketch key, never a cross join. n_bits is the density knob: 6 bits at
+    sketch key, never a cross join. ANN_N_BITS is the density knob: 6 bits at
     fixture scale (~1/9 of the corpus probed per query), grows with
     log2(N) so bucket sizes stay bounded at 10^12."""
-    sk = with_sketch(aug, n_bits=n_bits)
+    sk = with_sketch(aug)
     qs = sk.filter(query_filter).select(
         F.col("vec_id").alias("qid"), F.col("vec").alias("qv"),
         F.col("n2").alias("qn2"), F.col("sketch").alias("qsk"))
@@ -362,7 +362,7 @@ def lsh_bucket_topk(aug: DataFrame, query_filter: str, k: int = 10,
         "sketch",
         F.explode(F.expr(
             "concat(array(qsk), transform(sequence(0, %d),"
-            " b -> cast(qsk as bigint) ^ shiftleft(1L, b)))" % (n_bits - 1)
+            " b -> cast(qsk as bigint) ^ shiftleft(1L, b)))" % (ANN_N_BITS - 1)
         )),
     )
     cand = probes.join(sk.select("vec_id", "vec", "n2", "sketch"), "sketch")
@@ -378,12 +378,12 @@ def lsh_bucket_topk(aug: DataFrame, query_filter: str, k: int = 10,
     )
 
 
-def lsh_topk_oracle_sql(aug_view_sql: str, query_filter: str, k: int = 10,
-                        n_bits: int = ANN_N_BITS) -> str:
+def lsh_topk_oracle_sql(aug_view_sql: str, query_filter: str,
+                        k: int = 10) -> str:
     """DuckDB replication of lsh_bucket_topk (bit-exact)."""
-    sk = sketch_bits_sql("vec", DUCKDB, 0, n_bits)
+    sk = sketch_bits_sql(DUCKDB)
     probes = ", ".join(["q.qsk"] +
-                       [f"xor(q.qsk, {1 << b})" for b in range(n_bits)])
+                       [f"xor(q.qsk, {1 << b})" for b in range(ANN_N_BITS)])
     cos = (f"{dot_sql('qv', 'vec', DUCKDB)}"
            f" / (sqrt(qn2) * sqrt(n2))")
     return f"""
@@ -411,18 +411,17 @@ qualify "rank" <= {k}
 # ---------------------------------------------------------------------------
 
 IVF_CENTROID_FILTER = "vec_id % 125 = 7 and vec_id < 100000"
+IVF_N_PROBE = 3  # inverted lists each query probes
 
 
-def ivf_topk(aug: DataFrame, query_filter: str, k: int = 10,
-             n_probe: int = 3,
-             centroid_filter: str = IVF_CENTROID_FILTER) -> DataFrame:
+def ivf_topk(aug: DataFrame, query_filter: str, k: int = 10) -> DataFrame:
     """IVF ANN: coarse quantizer = a deterministic centroid subset;
     every vector joins its nearest centroid's inverted list, queries
-    probe their ``n_probe`` nearest lists. Candidate generation is an
+    probe their IVF_N_PROBE nearest lists. Candidate generation is an
     equi-join on the centroid id — the inverted-file structure — so the
-    O(N·Q) term is gone; recall is governed by n_probe (near-duplicate
+    O(N·Q) term is gone; recall is governed by IVF_N_PROBE (near-duplicate
     neighbors share their original's list with near-certainty)."""
-    cents = aug.filter(centroid_filter).select(
+    cents = aug.filter(IVF_CENTROID_FILTER).select(
         F.col("vec_id").alias("cid"), F.col("vec").alias("cvec"),
         F.col("n2").alias("cn2"))
 
@@ -440,7 +439,7 @@ def ivf_topk(aug: DataFrame, query_filter: str, k: int = 10,
             F.col("vec_id").alias("qid"), F.col("vec").alias("qv"),
             F.col("n2").alias("qn2"))
         .withColumnRenamed("qv", "vec").withColumnRenamed("qn2", "n2"),
-        "qid", n_probe,
+        "qid", IVF_N_PROBE,
     ).select("cid", "qid", F.col("vec").alias("qv"),
              F.col("n2").alias("qn2"))
 
@@ -456,9 +455,8 @@ def ivf_topk(aug: DataFrame, query_filter: str, k: int = 10,
     )
 
 
-def ivf_topk_oracle_sql(aug_view_sql: str, query_filter: str, k: int = 10,
-                        n_probe: int = 3,
-                        centroid_filter: str = IVF_CENTROID_FILTER) -> str:
+def ivf_topk_oracle_sql(aug_view_sql: str, query_filter: str,
+                        k: int = 10) -> str:
     """DuckDB replication of ivf_topk (bit-exact)."""
     cc = (f"{dot_sql('x.vec', 'c.cvec', DUCKDB)}"
           f" / (sqrt(x.n2) * sqrt(c.cn2))")
@@ -467,7 +465,7 @@ def ivf_topk_oracle_sql(aug_view_sql: str, query_filter: str, k: int = 10,
     return f"""
 with a as ({aug_view_sql}),
 c as (select vec_id as cid, vec as cvec, n2 as cn2 from a
-      where {centroid_filter}),
+      where {IVF_CENTROID_FILTER}),
 asn as (
   select x.vec_id, x.vec, x.n2, c.cid,
          row_number() over (partition by x.vec_id
@@ -481,7 +479,7 @@ qasn as (
                             order by {cc} desc, c.cid) as rn
   from (select * from a where {query_filter}) x cross join c
 ),
-probes as (select cid, qid, qv, qn2 from qasn where rn <= {n_probe}),
+probes as (select cid, qid, qv, qn2 from qasn where rn <= {IVF_N_PROBE}),
 cand as (
   select distinct q.qid, q.qv, q.qn2, l.vec_id, l.vec, l.n2
   from probes q join lists l on q.cid = l.cid
@@ -496,20 +494,24 @@ qualify "rank" <= {k}
 """
 
 
-def kmeans_sql(emb_view: str, engine: str, k: int = 8,
-               rounds: int = 3, quant: int = 1000000) -> str:
+KMEANS_K = 8
+KMEANS_ROUNDS = 3
+KMEANS_QUANT = 1000000  # centroid means are exact sums of round(v·QUANT)
+
+
+def kmeans_sql(engine: str) -> str:
     """Distributed Lloyd k-means over the embedding corpus (the
     semantic-clustering stage LLM pipelines run for cluster-balanced
-    data mixing and SemDeDup-style semantic dedup) — ``rounds``
+    data mixing and SemDeDup-style semantic dedup) — KMEANS_ROUNDS
     assignment/update iterations UNROLLED into one shared dual-dialect
     SQL text, so the oracle runs the identical arithmetic.
 
     Determinism design (the reason this is oracle-checkable at all):
-    - init = the k smallest vec_ids (no RNG);
+    - init = the KMEANS_K smallest vec_ids (no RNG);
     - assignment distances are sequential-fold dot products (dot_sql) —
       IEEE ops in identical order on both engines;
     - the centroid update is an INTEGER-DETERMINISTIC mean: per-dim
-      values are quantized to round(val·quant) BIGINTs, summed exactly
+      values are quantized to round(val·KMEANS_QUANT) BIGINTs, summed exactly
       (associative — immune to partial-aggregation order), and divided
       back — so cross-row float summation order, the classic source of
       distributed-float nondeterminism, never occurs. Ties break by cid.
@@ -519,18 +521,18 @@ def kmeans_sql(emb_view: str, engine: str, k: int = 8,
     + a per-vector window rank + a (cid, dim)-keyed aggregate with
     map-side partials. Nothing is ever quadratic in N.
     """
-    base = as_double_list_sql("embedding", engine)
+    base = as_double_list_sql(engine)
     dot = dot_sql("vec", "cvec", engine)
-    q = float(quant)
+    q = float(KMEANS_QUANT)
     parts = [f"""
-with a as (select vec_id, {base} as vec from {emb_view}),
+with a as (select vec_id, {base} as vec from embeddings),
 v as (select vec_id, vec, {norm2_sql('vec', engine)} as n2 from a),
 c0 as (
   select vec_id as cid, vec as cvec, n2 as cn2
   from (select vec_id, vec, n2,
                row_number() over (order by vec_id) as _r from v) i
-  where _r <= {k})"""]
-    for r in range(rounds):
+  where _r <= {KMEANS_K})"""]
+    for r in range(KMEANS_ROUNDS):
         parts.append(f""",
 s{r} as (
   select vec_id, vec, n2, cid,
@@ -541,7 +543,7 @@ a{r} as (
     select *, row_number() over (partition by vec_id
                                  order by dist, cid) as rn from s{r}) z
   where rn = 1)""")
-        if r == rounds - 1:
+        if r == KMEANS_ROUNDS - 1:
             break
         if engine == SPARK:
             expl = (f"select cid, posexplode(vec) as (dim, val)"
@@ -565,7 +567,7 @@ c{r + 1} as (
     parts.append(f"""
 select cast(vec_id as bigint) as vec_id, cast(cid as bigint) as cluster,
        round(dist, 6) as dist_sq
-from a{rounds - 1}""")
+from a{KMEANS_ROUNDS - 1}""")
     return "".join(parts)
 
 
@@ -574,24 +576,26 @@ from a{rounds - 1}""")
 # ---------------------------------------------------------------------------
 
 
-def int_dot_sql(a: str, b: str, engine: str) -> str:
+def int_dot_sql(engine: str) -> str:
     """Integer dot product over bigint lists — EXACT, so rank order is
     engine-independent by arithmetic, not by shared fold order."""
     if engine == SPARK:
         return (
-            f"aggregate(transform(sequence(1, size({a})),"
-            f" i -> element_at({a}, i) * element_at({b}, i)),"
+            "aggregate(transform(sequence(1, size(c.qvec)),"
+            " i -> element_at(c.qvec, i) * element_at(q.qq, i)),"
             f" cast(0 as bigint), (x, y) -> x + y)"
         )
     return (
         f"list_reduce(list_concat([cast(0 as bigint)],"
-        f" list_transform(range(1, length({a})+1),"
-        f" i -> {a}[i] * {b}[i])), (x, y) -> x + y)"
+        " list_transform(range(1, length(c.qvec)+1),"
+        " i -> c.qvec[i] * q.qq[i])), (x, y) -> x + y)"
     )
 
 
-def sq8_topk_sql(emb_view: str, query_filter: str, k: int,
-                 engine: str) -> str:
+SQ8_TOPK = 10
+
+
+def sq8_topk_sql(query_filter: str, engine: str) -> str:
     """Scalar-quantized int8 ANN top-k (the SQ8 storage layout of
     FAISS/Milvus-class engines): per-dimension symmetric scales
     s_d = max|v_d| over the corpus, q_d = round(v_d/s_d*127) clamped to
@@ -607,7 +611,7 @@ def sq8_topk_sql(emb_view: str, query_filter: str, k: int,
     broadcast bounded-query-set product of the brute baseline
     (BOUNDED_PRODUCTS; the scale path for unbounded query sets remains
     ann_lsh/ann_ivf, which this composes with)."""
-    aug = aug_sql(emb_view, engine)
+    aug = aug_sql(engine)
     if engine == SPARK:
         d_gen = "explode(sequence(1, size(vec))) as d"
         elem = "element_at(vec, d)"
@@ -616,7 +620,7 @@ def sq8_topk_sql(emb_view: str, query_filter: str, k: int,
         d_gen = "unnest(range(1, length(vec)+1)) as d"
         elem = "vec[d]"
         reasm = "list(q order by d)"
-    qdot = int_dot_sql("c.qvec", "q.qq", engine)
+    qdot = int_dot_sql(engine)
     return f"""
 with aug as ({aug}),
 ex as (select vec_id, {d_gen}, vec from aug),
@@ -639,5 +643,5 @@ ranked as (
                             order by qdot desc, vec_id) as rank
   from scored)
 select qid, vec_id, cast(rank as bigint) as rank, qdot
-from ranked where rank <= {k}
+from ranked where rank <= {SQ8_TOPK}
 """

@@ -30,6 +30,7 @@ import random
 
 SPARK = "spark"
 DUCKDB = "duckdb"
+DOC_VIEW = "documents"  # the view every text builder reads
 
 P32 = 4294967291  # largest prime < 2^32: minhash permutation modulus
 FP_MOD = 1000000007  # polynomial fingerprint modulus
@@ -59,24 +60,24 @@ def h60_sql(expr: str, engine: str) -> str:
     return f"cast(('0x' || substr(md5({expr}),1,15)) as bigint)"
 
 
-def tokens_sql(text: str, engine: str) -> str:
+def tokens_sql(engine: str) -> str:
     """Whitespace word tokens (regex ' +' after trim)."""
     if engine == SPARK:
-        return f"split(trim({text}), ' +')"
-    return f"string_split_regex(trim({text}), ' +')"
+        return "split(trim(text), ' +')"
+    return "string_split_regex(trim(text), ' +')"
 
 
-def shingles_sql(toks: str, k: int, engine: str) -> str:
+def shingles_sql(k: int, engine: str) -> str:
     """k-word shingles joined by single spaces; a doc shorter than k words
     yields its single full-token shingle."""
     if engine == SPARK:
         return (
-            f"transform(sequence(1, greatest(size({toks})-{k - 1}, 1)),"
-            f" i -> concat_ws(' ', slice({toks}, i, {k})))"
+            f"transform(sequence(1, greatest(size(_toks)-{k - 1}, 1)),"
+            f" i -> concat_ws(' ', slice(_toks, i, {k})))"
         )
     return (
-        f"list_transform(range(1, greatest(length({toks})-{k - 1}, 1)+1),"
-        f" i -> array_to_string(list_slice({toks}, i, i+{k - 1}), ' '))"
+        f"list_transform(range(1, greatest(length(_toks)-{k - 1}, 1)+1),"
+        f" i -> array_to_string(list_slice(_toks, i, i+{k - 1}), ' '))"
     )
 
 
@@ -97,17 +98,21 @@ def segments_sql(toks: str, k: int, engine: str) -> str:
     )
 
 
-def boilerplate_sql(doc_view: str, engine: str, k: int = 8,
-                    min_docs: int = 3) -> str:
+BOILERPLATE_K = 8  # words per segment
+BOILERPLATE_MIN_DOCS = 3  # docs a segment must repeat in
+
+
+def boilerplate_sql(engine: str) -> str:
     """Boilerplate-segment analysis (the repeated-paragraph removal
     stage of a pretraining pipeline, CCNet/RefinedWeb style): a segment
-    is boilerplate when it appears in >= min_docs distinct crawl docs;
+    is boilerplate when it appears in >= BOILERPLATE_MIN_DOCS distinct
+    crawl docs;
     output is the per-doc segment count, boilerplate count and ratio.
     One shuffle keyed by segment text + one by doc — both with map-side
     partials; the 'common' side of the join is the tiny distinct
     boilerplate list (broadcastable)."""
-    crawl = crawl_sql(doc_view, engine)
-    segs = segments_sql(tokens_sql("text", engine), k, engine)
+    crawl = crawl_sql(engine)
+    segs = segments_sql(tokens_sql(engine), BOILERPLATE_K, engine)
     return f"""
 with crawl as ({crawl}),
 seg_pos as (
@@ -115,7 +120,7 @@ seg_pos as (
 ),
 common as (
   select seg from seg_pos
-  group by seg having count(distinct crawl_id) >= {min_docs}
+  group by seg having count(distinct crawl_id) >= {BOILERPLATE_MIN_DOCS}
 ),
 per_doc as (
   select s.crawl_id,
@@ -131,18 +136,18 @@ from per_doc
 """
 
 
-def repetition_sql(doc_view: str, engine: str) -> str:
+def repetition_sql(engine: str) -> str:
     """Intra-document repetition metrics (the Gopher/RefinedWeb
     repetition filters): per doc the token count, the distinct-word
     fraction and the fraction of all 2-grams taken by the single most
     frequent 2-gram — high top-bigram fraction flags machine-generated
     or boilerplate-looping pages. Two shuffles keyed by doc (word and
     bigram counts), both with map-side partials; never cross-doc."""
-    toks = tokens_sql("text", engine)
-    bigrams = shingles_sql("_toks", 2, engine)
+    toks = tokens_sql(engine)
+    bigrams = shingles_sql(2, engine)
     return f"""
 with t as (
-  select doc_id, {toks} as _toks from {doc_view}
+  select doc_id, {toks} as _toks from {DOC_VIEW}
 ),
 w as (
   select doc_id, {explode_sql('_toks', 'w', engine)} from t
@@ -177,27 +182,26 @@ def explode_sql(arr_expr: str, alias: str, engine: str) -> str:
     return f"unnest({arr_expr}) as {alias}"
 
 
-def bit_sql(expr: str, b: int, engine: str) -> str:
+def bit_sql(b: int, engine: str) -> str:
     """(expr >> b) & 1 in each dialect."""
     if engine == SPARK:
-        return f"(shiftright({expr}, {b}) % 2)"
-    return f"(({expr} >> {b}) & 1)"
+        return f"(shiftright(wh, {b}) % 2)"
+    return f"((wh >> {b}) & 1)"
 
 
-def char_fold_sql(text: str, engine: str, mod: int = FP_MOD,
-                  base: int = FP_BASE) -> str:
+def char_fold_sql(text: str, engine: str) -> str:
     """Polynomial rolling fingerprint over characters:
-    h = fold(chars, (h,c) -> (h*base + ascii(c)) % mod) — the document
-    fingerprint (Karp–Rabin family)."""
+    h = fold(chars, (h,c) -> (h*FP_BASE + ascii(c)) % FP_MOD) — the
+    document fingerprint (Karp–Rabin family)."""
     if engine == SPARK:
         return (
             f"aggregate(split({text}, ''), 0L,"
-            f" (h, c) -> (h * {base} + ascii(c)) % {mod})"
+            f" (h, c) -> (h * {FP_BASE} + ascii(c)) % {FP_MOD})"
         )
     return (
         f"list_reduce(list_concat([0],"
         f" list_transform(string_split({text}, ''), c -> ascii(c)::bigint)),"
-        f" (h, c) -> (h * {base} + c) % {mod})"
+        f" (h, c) -> (h * {FP_BASE} + c) % {FP_MOD})"
     )
 
 
@@ -208,7 +212,7 @@ def char_fold_sql(text: str, engine: str, mod: int = FP_MOD,
 NEAR_DUP_SUFFIX = " updatednote"  # one appended word: J = (w-2)/(w-1) >= 8/9
 
 
-def crawl_sql(doc_view: str, engine: str) -> str:
+def crawl_sql(engine: str) -> str:
     """documents → crawl table with deterministic duplicate structure:
 
     - every doc appears once as kind 'orig' (crawl_id = doc_id)
@@ -222,25 +226,25 @@ def crawl_sql(doc_view: str, engine: str) -> str:
     _ = engine  # shared spelling
     return f"""
 select doc_id as crawl_id, doc_id as orig_id, text, lang, 'orig' as crawl_kind
-from {doc_view}
+from {DOC_VIEW}
 union all
-select doc_id + 1000000, doc_id, text, lang, 'dup' from {doc_view}
+select doc_id + 1000000, doc_id, text, lang, 'dup' from {DOC_VIEW}
 where doc_id % 5 = 2
 union all
 select doc_id + 2000000, doc_id, concat(text, '{NEAR_DUP_SUFFIX}'), lang, 'near'
-from {doc_view} where doc_id % 7 = 3
+from {DOC_VIEW} where doc_id % 7 = 3
 """
 
 
-def shingle_rows_sql(doc_view: str, engine: str, k: int = 3) -> str:
+def shingle_rows_sql(engine: str, k: int = 3) -> str:
     """crawl → distinct (crawl_id, sh) shingle rows with 32-bit hash h32."""
-    toks = tokens_sql("text", engine)
-    sh = shingles_sql("_toks", k, engine)
+    toks = tokens_sql(engine)
+    sh = shingles_sql(k, engine)
     h = h60_sql("sh", engine)
     return f"""
 select crawl_id, sh, ({h}) % {P32} as h32 from (
   select distinct crawl_id, {explode_sql(sh, 'sh', engine)} from (
-    select crawl_id, {toks} as _toks from ({crawl_sql(doc_view, engine)}) c
+    select crawl_id, {toks} as _toks from ({crawl_sql(engine)}) c
   ) t
 ) s
 """
@@ -262,7 +266,7 @@ def simhash_sql(engine: str) -> str:
     sum(±1 per word, + if word-hash bit b set) > 0."""
     parts = []
     for b in range(SIMHASH_BITS):
-        bit = bit_sql("wh", b, engine)
+        bit = bit_sql(b, engine)
         parts.append(
             f"(case when sum(case when {bit} = 1 then 1 else -1 end) > 0"
             f" then cast({1 << b} as bigint) else 0 end)"
@@ -270,24 +274,24 @@ def simhash_sql(engine: str) -> str:
     return " + ".join(parts)
 
 
-def word_hash_rows_sql(doc_view: str, engine: str) -> str:
+def word_hash_rows_sql(engine: str) -> str:
     """crawl → distinct (crawl_id, wh) word-hash rows (simhash features)."""
-    toks = tokens_sql("text", engine)
+    toks = tokens_sql(engine)
     h = h60_sql("w", engine)
     return f"""
 select distinct crawl_id, {h} as wh from (
   select crawl_id, {explode_sql('_toks', 'w', engine)} from (
-    select crawl_id, {toks} as _toks from ({crawl_sql(doc_view, engine)}) c
+    select crawl_id, {toks} as _toks from ({crawl_sql(engine)}) c
   ) t
 ) s
 """
 
 
-def simhash_table_sql(doc_view: str, engine: str) -> str:
+def simhash_table_sql(engine: str) -> str:
     """crawl → (crawl_id, simhash)."""
     return (
         f"select crawl_id, {simhash_sql(engine)} as simhash"
-        f" from ({word_hash_rows_sql(doc_view, engine)}) w group by crawl_id"
+        f" from ({word_hash_rows_sql(engine)}) w group by crawl_id"
     )
 
 
@@ -305,13 +309,13 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def lang_hits_sql(toks: str, lang: str, engine: str) -> str:
+def lang_hits_sql(lang: str, engine: str) -> str:
     words = ", ".join(f"'{w}'" for w in LANG_MARKERS[lang])
     if engine == SPARK:
         return (
-            f"size(filter({toks}, t -> array_contains(array({words}), t)))"
+            f"size(filter(_toks, t -> array_contains(array({words}), t)))"
         )
-    return f"length(list_filter({toks}, t -> list_contains([{words}], t)))"
+    return f"length(list_filter(_toks, t -> list_contains([{words}], t)))"
 
 
 def langid_pred_sql(engine: str) -> str:
@@ -355,10 +359,10 @@ def arr_len_sql(arr: str, engine: str) -> str:
 
 
 def langid_stages(engine: str) -> list[tuple[str, str]]:
-    stages = [("_toks", tokens_sql("text", engine))]
+    stages = [("_toks", tokens_sql(engine))]
     for lg in LANG_MARKERS:
         stages.append((f"hits_{lg}",
-                       f"cast({lang_hits_sql('_toks', lg, engine)} as bigint)"))
+                       f"cast({lang_hits_sql(lg, engine)} as bigint)"))
     stages.append(("lang_pred", langid_pred_sql(engine)))
     return stages
 
@@ -367,12 +371,12 @@ def quality_stages(engine: str) -> list[tuple[str, str]]:
     """Quality scoring: length/stopword/punctuation ratios combined into a
     [0,1] score. Raw doubles feed the score; rounded views are emitted."""
     return [
-        ("_toks", tokens_sql("text", engine)),
+        ("_toks", tokens_sql(engine)),
         ("n_tokens", arr_len_sql("_toks", engine)),
         ("n_chars_t", "cast(length(text) as bigint)"),
         ("punct_cnt", regex_count_sql("text", "[.,!?;:]", engine)),
         ("stop_hits",
-         f"cast({lang_hits_sql('_toks', 'en', engine)} as bigint)"),
+         f"cast({lang_hits_sql('en', engine)} as bigint)"),
         ("_awl", "cast(length(replace(text, ' ', '')) as double) / n_tokens"),
         ("_pr", "cast(punct_cnt as double) / n_chars_t"),
         ("_sr", "cast(stop_hits as double) / n_tokens"),
@@ -387,7 +391,7 @@ def quality_stages(engine: str) -> list[tuple[str, str]]:
 
 def token_count_stages(engine: str) -> list[tuple[str, str]]:
     return [
-        ("_toks", tokens_sql("text", engine)),
+        ("_toks", tokens_sql(engine)),
         ("ws_tokens", arr_len_sql("_toks", engine)),
         ("re_tokens", regex_count_sql("text", TOKEN_REGEX, engine)),
     ]
@@ -412,13 +416,13 @@ PII_EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z][A-Za-z]+"
 PII_PHONE_RE = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
 
 
-def pii_text_sql(text: str) -> str:
+def pii_text_sql() -> str:
     """Deterministic PII injection over the synthetic corpus (shared
     ANSI text): docs with doc_id % 7 = 0 gain an email token, docs with
     doc_id % 11 = 0 a phone token, so the scan has a non-trivial,
     exactly-reproducible ground truth on the fixture tables."""
     return (
-        f"concat({text},"
+        "concat(text,"
         f" case when doc_id % 7 = 0 then"
         f" concat(' user', doc_id, '@example.com') else '' end,"
         f" case when doc_id % 11 = 0 then"
@@ -451,9 +455,9 @@ def pii_scan_stages(engine: str) -> list[tuple[str, str]]:
     ]
 
 
-def pii_scan_sql(doc_view: str, engine: str) -> str:
-    base = (f"select doc_id, {pii_text_sql('text')} as _pii_text"
-            f" from {doc_view}")
+def pii_scan_sql(engine: str) -> str:
+    base = (f"select doc_id, {pii_text_sql()} as _pii_text"
+            f" from {DOC_VIEW}")
     from gdal_spark.crs import stages_to_duckdb_sql
 
     # the stage renderer is engine-agnostic nested selects; Spark parses
@@ -480,7 +484,7 @@ SAMPLE_DEFAULT_PERMIL = 100
 SAMPLE_HASH = "((abs(doc_id % 2147483647) * 2654435761) % 1000)"
 
 
-def stratified_sample_sql(doc_view: str, engine: str) -> str:
+def stratified_sample_sql(engine: str) -> str:
     """Deterministic stratified sampling by (lang, length bucket): every
     doc carries its stratum, hash slot and keep decision; per-stratum
     totals ride along via a window so the realized rate is checkable in
@@ -501,13 +505,16 @@ from (
                                 else 'short' end) as stratum,
          {SAMPLE_HASH} < (case lang {rates}
                           else {SAMPLE_DEFAULT_PERMIL} end) as keep
-  from {doc_view}
+  from {DOC_VIEW}
 ) s
 """
 
 
-def tfidf_topterms_sql(doc_view: str, engine: str, k: int = 5,
-                       min_len: int = 3) -> str:
+TFIDF_K = 5  # terms kept per document
+TFIDF_MIN_LEN = 3  # shortest term considered
+
+
+def tfidf_topterms_sql(engine: str) -> str:
     """TF-IDF-style top-k salient terms per document (the keyword /
     topic-signal stage of a training-data pipeline), with an
     INTEGER-DETERMINISTIC ranking: terms order by tf desc (most
@@ -523,19 +530,19 @@ def tfidf_topterms_sql(doc_view: str, engine: str, k: int = 5,
     ALREADY-DISTINCT tf rows (no count-distinct shuffle of raw
     tokens); the tf⋈df term join and the per-doc top-k window are the
     two real exchanges. Term-frequency skew (stopword-like terms)
-    stays bounded because min_len filtering happens before the first
+    stays bounded because TFIDF_MIN_LEN filtering happens before the first
     shuffle and AQE splits hot term partitions."""
     split = ("string_split_regex(lower(text), '[^a-z0-9]+')"
              if engine == DUCKDB
              else "split(lower(text), '[^a-z0-9]+')")
-    unnest = (f"select doc_id, t.term from {doc_view},"
+    unnest = (f"select doc_id, t.term from {DOC_VIEW},"
               f" unnest({split}) as t(term)"
               if engine == DUCKDB
               else f"select doc_id, explode({split}) as term"
-              f" from {doc_view}")
+              f" from {DOC_VIEW}")
     return f"""
 with tok as (
-  select doc_id, term from ({unnest}) u where length(term) >= {min_len}
+  select doc_id, term from ({unnest}) u where length(term) >= {TFIDF_MIN_LEN}
 ),
 tf as (
   select doc_id, term, count(*) as tf from tok group by doc_id, term
@@ -551,11 +558,11 @@ select doc_id, rank, term, tf, df from (
               order by tf.tf desc, df.df asc, tf.term asc)
               as bigint) as rank
   from tf join df on tf.term = df.term
-) s where rank <= {k}
+) s where rank <= {TFIDF_K}
 """
 
 
-def pack_sequences_sql(doc_view: str, engine: str, ctx: int = 256,
+def pack_sequences_sql(engine: str, ctx: int = 256,
                        bucket: int = 50) -> str:
     """GPT-style sequence packing (concatenate every document's tokens
     plus one EOS separator in doc_id order, then cut the stream into
@@ -574,13 +581,13 @@ def pack_sequences_sql(doc_view: str, engine: str, ctx: int = 256,
     All outputs are exact integers (no floats to drift cross-engine);
     DuckDB sums are cast to bigint so pandas doesn't lift HUGEINT to
     float64."""
-    nt = f"{arr_len_sql(tokens_sql('text', engine), engine)} + 1"
+    nt = f"{arr_len_sql(tokens_sql(engine), engine)} + 1"
     idiv = "//" if engine == DUCKDB else "div"
     return f"""
 with tok as (
   select doc_id, cast({nt} as bigint) as n_tok,
          cast(doc_id {idiv} {bucket} as bigint) as b
-  from {doc_view}
+  from {DOC_VIEW}
 ),
 within as (
   select doc_id, b, n_tok,
@@ -611,20 +618,20 @@ from (
 """
 
 
-def bigrams_sql(toks: str, engine: str) -> str:
+def bigrams_sql(engine: str) -> str:
     """Adjacent-word bigram array ('w1 w2' strings); <2-token docs
     yield an empty array."""
     if engine == SPARK:
-        return (f"case when size({toks}) >= 2 then"
-                f" transform(sequence(1, size({toks})-1),"
-                f" i -> concat(element_at({toks}, i), ' ',"
-                f" element_at({toks}, i+1)))"
+        return ("case when size(_toks) >= 2 then"
+                " transform(sequence(1, size(_toks)-1),"
+                " i -> concat(element_at(_toks, i), ' ',"
+                " element_at(_toks, i+1)))"
                 f" else array() end")
-    return (f"list_transform(range(1, length({toks})),"
-            f" i -> {toks}[i] || ' ' || {toks}[i+1])")
+    return ("list_transform(range(1, length(_toks)),"
+            " i -> _toks[i] || ' ' || _toks[i+1])")
 
 
-def bigram_novelty_sql(doc_view: str, engine: str) -> str:
+def bigram_novelty_sql(engine: str) -> str:
     """Bigram-context novelty features (the corpus-statistics half of a
     CCNet-style LM quality filter, integer-deterministic): for each
     document, how unusual its adjacent-word bigrams are corpus-wide.
@@ -639,14 +646,14 @@ def bigram_novelty_sql(doc_view: str, engine: str) -> str:
     (doc, bigram) and df groupBys are the only shuffles, both carrying
     map-side partial aggregation; the df join back is an equi-join on
     the bigram key with AQE handling hot stopword-pair skew."""
-    toks = tokens_sql("text", engine)
-    bg = bigrams_sql("_toks", engine)
+    toks = tokens_sql(engine)
+    bg = bigrams_sql(engine)
     if engine == SPARK:
         unnest = (f"select doc_id, explode({bg}) as bigram from"
-                  f" (select doc_id, {toks} as _toks from {doc_view})")
+                  f" (select doc_id, {toks} as _toks from {DOC_VIEW})")
     else:
         unnest = (f"select doc_id, unnest({bg}) as bigram from"
-                  f" (select doc_id, {toks} as _toks from {doc_view})")
+                  f" (select doc_id, {toks} as _toks from {DOC_VIEW})")
     return f"""
 with dbg as (
   select distinct doc_id, bigram from ({unnest}) u
@@ -667,13 +674,17 @@ group by d.doc_id
 """
 
 
-def substr_dup_spans_sql(doc_view: str, engine: str, L: int = 8) -> str:
+DUP_SPAN_TOKENS = 8  # token window of an exact-substring match
+
+
+def substr_dup_spans_sql(engine: str) -> str:
     """ExactSubstr deduplication spans (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better", arXiv:2107.06499): a
-    token window of length ``L`` whose text occurs at two or more
+    token window of length DUP_SPAN_TOKENS whose text occurs at two or more
     (document, position) locations anywhere in the crawl is duplicated;
     per document, overlapping duplicated windows merge into maximal
-    spans (consecutive hit positions closer than ``L`` share tokens).
+    spans (consecutive hit positions closer than DUP_SPAN_TOKENS share
+    tokens).
 
     Spark-first restatement of the paper's suffix-array pass: window
     fingerprints are generated NARROWLY per document (transform +
@@ -688,22 +699,23 @@ def substr_dup_spans_sql(doc_view: str, engine: str, L: int = 8) -> str:
     engines compute the identical hash, so the 2^-60 collision class is
     shared arithmetic, not a compare tolerance.
     """
-    crawl = crawl_sql(doc_view, engine)
-    toks = tokens_sql("text", engine)
+    crawl = crawl_sql(engine)
+    toks = tokens_sql(engine)
     if engine == SPARK:
         posg = f"""
 select crawl_id, posexplode(
-  case when size(ts) >= {L}
-       then transform(sequence(0, size(ts)-{L}),
-                      i -> concat_ws(' ', slice(ts, i+1, {L})))
+  case when size(ts) >= {DUP_SPAN_TOKENS}
+       then transform(sequence(0, size(ts)-{DUP_SPAN_TOKENS}),
+                      i -> concat_ws(' ', slice(ts, i+1, {DUP_SPAN_TOKENS})))
        else cast(array() as array<string>) end) as (pos, g)
 from toks
 """
         posg = f"select crawl_id, pos, {h60_sql('g', engine)} as k from ({posg}) pg"
     else:
-        inner = (f"select crawl_id, ts, unnest(range(0, greatest(len(ts)-{L}+1, 0)))"
+        inner = (f"select crawl_id, ts, unnest(range(0,"
+                 f" greatest(len(ts)-{DUP_SPAN_TOKENS}+1, 0)))"
                  f" as i from toks")
-        g = f"array_to_string(list_slice(ts, i+1, i+{L}), ' ')"
+        g = f"array_to_string(list_slice(ts, i+1, i+{DUP_SPAN_TOKENS}), ' ')"
         posg = (f"select crawl_id, i as pos, {h60_sql(g, engine)} as k"
                 f" from ({inner}) u")
     return f"""
@@ -716,7 +728,7 @@ brks as (
   select crawl_id, pos,
          case when lag(pos) over (partition by crawl_id order by pos) is null
                 or pos - lag(pos) over (partition by crawl_id order by pos)
-                   >= {L}
+                   >= {DUP_SPAN_TOKENS}
               then 1 else 0 end as brk
   from hits),
 isl as (
@@ -725,20 +737,23 @@ isl as (
   from brks)
 select crawl_id,
        cast(min(pos) as bigint) as span_start,
-       cast(max(pos) + {L - 1} as bigint) as span_end,
-       cast(max(pos) - min(pos) + {L} as bigint) as span_tokens,
+       cast(max(pos) + {DUP_SPAN_TOKENS - 1} as bigint) as span_end,
+       cast(max(pos) - min(pos) + {DUP_SPAN_TOKENS} as bigint) as span_tokens,
        cast(count(*) as bigint) as n_windows
 from isl
 group by crawl_id, island
 """
 
 
-def dedup_paragraph_sql(doc_view: str, engine: str, k: int = 8) -> str:
+PARA_K = 8  # words per paragraph segment
+
+
+def dedup_paragraph_sql(engine: str) -> str:
     """Paragraph-granular exact dedup (the dedup ACTION of CCNet, Wenzek
     et al. 2020 — drop every repeated paragraph, keeping the first
     occurrence in (crawl_id, position) order; boilerplate_sql is the
     companion ANALYSIS stage). Paragraph stand-in on the newline-free
-    fixture corpus = the same non-overlapping k-word segments
+    fixture corpus = the same non-overlapping PARA_K-word segments
     boilerplate detection uses (segments_sql).
 
     Output: one row per DROPPED paragraph occurrence —
@@ -752,16 +767,18 @@ def dedup_paragraph_sql(doc_view: str, engine: str, k: int = 8) -> str:
     integer arithmetic in both engines; seg_idx < 2^20 holds whenever
     documents are under ~8M tokens (enforce upstream at ingest).
     """
-    crawl = crawl_sql(doc_view, engine)
-    toks = tokens_sql("text", engine)
-    segs = segments_sql("ts", k, engine)
+    crawl = crawl_sql(engine)
+    toks = tokens_sql(engine)
+    segs = segments_sql("ts", PARA_K, engine)
     if engine == SPARK:
         seg_rows = (f"select crawl_id, posexplode({segs}) as (seg_idx, seg)"
                     f" from toks")
     else:
         inner = (f"select crawl_id, ts,"
-                 f" unnest(range(0, ((length(ts)-1)//{k})+1)) as i from toks")
-        seg = f"array_to_string(list_slice(ts, i*{k}+1, i*{k}+{k}), ' ')"
+                 f" unnest(range(0, ((length(ts)-1)//{PARA_K})+1))"
+                 f" as i from toks")
+        seg = (f"array_to_string(list_slice(ts, i*{PARA_K}+1,"
+               f" i*{PARA_K}+{PARA_K}), ' ')")
         seg_rows = f"select crawl_id, i as seg_idx, {seg} as seg from ({inner}) u"
     return f"""
 with crawl as ({crawl}),
@@ -809,7 +826,7 @@ MESSY_URL_SQL = """concat(
   case when doc_id % 2 = 1 then '#sec' else '' end)"""
 
 
-def url_canonicalize_sql(doc_view: str, engine: str) -> str:
+def url_canonicalize_sql(engine: str) -> str:
     """Crawl URL canonicalization + exact-URL dedup stats (the
     frontier/dedup normalization every crawler runs — cf. the rules
     shared by CommonCrawl tooling and RFC 3986 §6): lowercase scheme
@@ -826,7 +843,7 @@ def url_canonicalize_sql(doc_view: str, engine: str) -> str:
     only shuffle is the url_canon count window (at crawl scale: a
     groupBy with map-side partials instead).
     """
-    parts = url_parts_cte(doc_view, engine)
+    parts = url_parts_cte(engine)
     return f"""
 with {parts},
 c as (
@@ -841,14 +858,14 @@ from c
 """
 
 
-def url_parts_cte(doc_view: str, engine: str) -> str:
+def url_parts_cte(engine: str) -> str:
     """The canonicalization CTE chain up to ``pp`` — per page the
     normalized (scheme, host, path1, qs1). Shared by
     url_canonicalize_sql and robots_filter_sql."""
     strip_utm = _re_replace_all("concat(qs, '&')",
                                 "(utm_[a-z]+|fbclid)=[^&]*&", "", engine)
     strip_frag = _re_replace_all("pathq0", "#.*$", "", engine)
-    return f"""urls as (select doc_id, {MESSY_URL_SQL} as url from {doc_view}),
+    return f"""urls as (select doc_id, {MESSY_URL_SQL} as url from {DOC_VIEW}),
 p as (
   select doc_id, url,
          lower(substr(url, 1, position('://' in url) - 1)) as scheme,
@@ -891,7 +908,7 @@ pp as (
   from q2)"""
 
 
-def robots_filter_sql(doc_view: str, engine: str) -> str:
+def robots_filter_sql(engine: str) -> str:
     """Robots-exclusion filtering (RFC 9309 §2.2.2 longest-match rule —
     the crawl-politeness gate every fetcher applies): each page's
     canonical path is matched against its host's Allow/Disallow rules;
@@ -910,7 +927,7 @@ def robots_filter_sql(doc_view: str, engine: str) -> str:
     the host equi-key; the prefix test and longest-match rank run
     per page. No shuffle ever carries page text.
     """
-    parts = url_parts_cte(doc_view, engine)
+    parts = url_parts_cte(engine)
     if engine == SPARK:
         hosts = "select id as hh from range(0, 50)"
     else:
@@ -948,7 +965,7 @@ from c left join (select doc_id, prefix, allow from m where rn = 1) m
 """
 
 
-def sitemap_coverage_sql(doc_view: str, engine: str) -> str:
+def sitemap_coverage_sql(engine: str) -> str:
     """Sitemap ingest + crawl-frontier coverage (the companion to the
     robots filter: sitemaps.org protocol 0.9, the discovery side of
     RFC 9309's politeness side — every production crawler reconciles
@@ -975,7 +992,7 @@ def sitemap_coverage_sql(doc_view: str, engine: str) -> str:
     the crawl side pre-aggregates to distinct (host, path) with
     map-side partials before either join.
     """
-    parts = url_parts_cte(doc_view, engine)
+    parts = url_parts_cte(engine)
     if engine == SPARK:
         hosts = "select id as hh from range(0, 50)"
         seq = ("filter(sequence(0, 14 + hh % 10),"
@@ -1070,7 +1087,7 @@ def _html_unescape(expr: str) -> str:
             ", '&lt;', '<'), '&gt;', '>'), '&amp;', '&')")
 
 
-def rich_html_sql(text: str = "text", doc_id: str = "doc_id") -> str:
+def rich_html_sql(text: str = "text") -> str:
     """Deterministic messy-HTML synthesis (shared ANSI): the page text
     split into segments and wrapped in realistic markup — head with
     title/meta/style and a script whose body contains raw ``<``/``&``
@@ -1086,12 +1103,12 @@ def rich_html_sql(text: str = "text", doc_id: str = "doc_id") -> str:
                      f"substr({text}, 91, 30)")
     s3 = f"substr({text}, 121)"
     return f"""concat(
-  '<html><head><title>Doc ', {doc_id}, '</title>',
+  '<html><head><title>Doc ', doc_id, '</title>',
   '<meta charset="utf-8"><meta name="robots" content="index">',
-  '<style>body{{margin:0;font-size:', 10 + {doc_id} % 8, 'px}}</style>',
-  '<script>var n=', {doc_id}, ';if(n<99&&n>0){{n=n+1}}</script>',
+  '<style>body{{margin:0;font-size:', 10 + doc_id % 8, 'px}}</style>',
+  '<script>var n=', doc_id, ';if(n<99&&n>0){{n=n+1}}</script>',
   '</head><body>',
-  '<!-- warc-record ', {doc_id}, ' <p>not text</p> -->',
+  '<!-- warc-record ', doc_id, ' <p>not text</p> -->',
   '<h1 class="t">', {e(s1)}, '</h1>',
   '<p id="m">', {e(s2a)}, '<a href="/r?a=1&amp;b=2">', {e(s2b)},
   '</a><b>', {e(s2c)}, '</b></p>',
@@ -1100,8 +1117,7 @@ def rich_html_sql(text: str = "text", doc_id: str = "doc_id") -> str:
   '</body></html>')"""
 
 
-def html_extract_stages(engine: str,
-                        html: str = "html_str") -> list[tuple[str, str]]:
+def html_extract_stages(engine: str) -> list[tuple[str, str]]:
     """Staged HTML->text extraction (shared dual-dialect SQL).
 
     Stage order is semantic, not cosmetic: head/script bodies may
@@ -1112,7 +1128,7 @@ def html_extract_stages(engine: str,
     '&lt;'/'&gt;' — see _html_unescape)."""
     r = _re_replace_all
     return [
-        ("_e0", r(html, '(?s)<head>.*?</head>', '', engine)),
+        ("_e0", r("html_str", '(?s)<head>.*?</head>', '', engine)),
         ("_e1", r("_e0", '(?s)<script[^>]*>.*?</script>', '', engine)),
         ("_e2", r("_e1", '(?s)<!--.*?-->', '', engine)),
         ("_e3", "replace(replace(_e2, '</h1>', chr(10)),"
@@ -1122,7 +1138,7 @@ def html_extract_stages(engine: str,
     ]
 
 
-def html_extract_sql(doc_view: str, engine: str) -> str:
+def html_extract_sql(engine: str) -> str:
     """HTML -> text extraction over the pages html column, verified
     byte-identical per url against the known source text (the
     north-rule invariant: 'byte-identical extracted text per url').
@@ -1143,7 +1159,7 @@ def html_extract_sql(doc_view: str, engine: str) -> str:
     html:binary column); DuckDB extracts from the same string directly
     — the extraction arithmetic is the shared part.
     """
-    html_expr = rich_html_sql("text", "doc_id")
+    html_expr = rich_html_sql("text")
     if engine == SPARK:
         html_col = f"decode(encode({html_expr}, 'utf-8'), 'utf-8')"
     else:
@@ -1157,7 +1173,7 @@ def html_extract_sql(doc_view: str, engine: str) -> str:
                 " substr(text, 121), chr(10))")
     return f"""
 with rh as (
-  select doc_id, text, {html_col} as html_str from {doc_view}),
+  select doc_id, text, {html_col} as html_str from {DOC_VIEW}),
 ex as (
   select doc_id, text, html_str,
 {stage_sql}
@@ -1178,7 +1194,7 @@ from ex
 WARC_FILES = 37  # files per corpus in the synthetic layout (doc_id % 37)
 
 
-def warc_records_cte(doc_view: str) -> str:
+def warc_records_cte() -> str:
     """The WARC record synthesis CTE chain up to ``recs0`` (per page:
     file_id + the full serialized record string) — shared ANSI, used
     by warc_ingest_sql (record parsing) and cdx_index_sql (byte-offset
@@ -1192,7 +1208,7 @@ def warc_records_cte(doc_view: str) -> str:
          1735689600 + doc_id * 7 as epoch,
          concat('<html><body><p>', replace(text, chr(13), ''),
                 '</p></body></html>') as payload
-  from {doc_view}),
+  from {DOC_VIEW}),
 http as (
   select doc_id, url, epoch, payload,
          concat('HTTP/1.1 200 OK', {crlf},
@@ -1211,7 +1227,7 @@ recs0 as (
   from http)"""
 
 
-def cdx_index_sql(doc_view: str, engine: str) -> str:
+def cdx_index_sql(engine: str) -> str:
     """CDX(J)-style capture index over the WARC layout — the lookup
     structure Common Crawl publishes next to every crawl (SURT key,
     capture time, content digest, and the (file, offset, length)
@@ -1238,7 +1254,7 @@ def cdx_index_sql(doc_view: str, engine: str) -> str:
     else:
         rev = f"array_to_string(list_reverse(string_split({host}, '.')), ',')"
     return f"""
-with {warc_records_cte(doc_view)},
+with {warc_records_cte()},
 idx as (
   select doc_id, url, epoch, payload, file_id,
          length(rec) as rlen,
@@ -1257,7 +1273,7 @@ from idx
 """
 
 
-def warc_ingest_sql(doc_view: str, engine: str) -> str:
+def warc_ingest_sql(engine: str) -> str:
     """WARC (ISO 28500) record ingest: the pages corpus serialized
     into Common-Crawl-style WARC files (one binary blob per file,
     records concatenated in doc order), then parsed back into typed
@@ -1297,7 +1313,7 @@ def warc_ingest_sql(doc_view: str, engine: str) -> str:
                       " concat('WARC/1[.]0', chr(13), chr(10)))")
         explode = "unnest(recs)"
     return f"""
-with {warc_records_cte(doc_view)},
+with {warc_records_cte()},
 files as (
   select file_id, {agg} as blob from recs0 group by file_id),
 exploded as (
@@ -1343,8 +1359,7 @@ from parsed
 MIXTURE_BUDGET = 200  # total docs the mixture targets
 
 
-def mixture_sample_sql(doc_view: str, engine: str,
-                       budget: int = MIXTURE_BUDGET) -> str:
+def mixture_sample_sql(engine: str) -> str:
     """Temperature-weighted mixture sampling across sources — the data-
     mixing stage of LLM pretraining (cf. the alpha-scaled multinomial
     weights of multilingual/CC-mix recipes): source i gets a document
@@ -1369,10 +1384,10 @@ def mixture_sample_sql(doc_view: str, engine: str,
 with w as (
   select source,
          cast(round(sqrt(sum(n_chars)) * 1000) as bigint) as wgt
-  from {doc_view} group by source),
+  from {DOC_VIEW} group by source),
 tgt as (
   select source, wgt,
-         cast(floor(({budget} * wgt) / (sum(wgt) over ()))
+         cast(floor(({MIXTURE_BUDGET} * wgt) / (sum(wgt) over ()))
               as bigint) as target_n
   from w),
 r as (
@@ -1380,7 +1395,7 @@ r as (
          row_number() over (
            partition by d.source
            order by {SAMPLE_HASH}, d.doc_id) as samp_rank
-  from {doc_view} d)
+  from {DOC_VIEW} d)
 select r.doc_id, r.source, cast(r.samp_rank as bigint) as samp_rank,
        g.target_n, g.wgt,
        r.samp_rank <= g.target_n as keep
@@ -1388,25 +1403,25 @@ from r join tgt g on g.source = r.source
 """
 
 
-def _arr_len_sum(toks: str, engine: str) -> str:
+def _arr_len_sum(engine: str) -> str:
     """Sum of token lengths (bigint) in each dialect."""
     if engine == SPARK:
-        return (f"aggregate({toks}, cast(0 as bigint),"
+        return ("aggregate(_toks, cast(0 as bigint),"
                 f" (acc, w) -> acc + length(w))")
-    return f"cast(list_sum(list_transform({toks}, w -> length(w))) as bigint)"
+    return "cast(list_sum(list_transform(_toks, w -> length(w))) as bigint)"
 
 
-def _arr_count_alpha(toks: str, engine: str) -> str:
+def _arr_count_alpha(engine: str) -> str:
     """Count of tokens containing at least one ASCII letter."""
     if engine == SPARK:
-        return f"size(filter({toks}, w -> w rlike '[a-zA-Z]'))"
-    return (f"length(list_filter({toks},"
+        return "size(filter(_toks, w -> w rlike '[a-zA-Z]'))"
+    return ("length(list_filter(_toks,"
             f" w -> regexp_matches(w, '[a-zA-Z]')))")
 
 
-def _arr_contains(toks: str, word: str, engine: str) -> str:
+def _arr_contains(word: str, engine: str) -> str:
     fn = "array_contains" if engine == SPARK else "list_contains"
-    return f"{fn}({toks}, '{word}')"
+    return f"{fn}(_toks, '{word}')"
 
 
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
@@ -1419,7 +1434,7 @@ FIXTURE_STOPWORDS = ("join", "hash", "row", "batch", "scan", "filter",
                      "order", "data")
 
 
-def gopher_rules_sql(doc_view: str, engine: str,
+def gopher_rules_sql(engine: str,
                      stopwords: tuple = GOPHER_STOPWORDS) -> str:
     """The Gopher quality-rule battery (Rae et al. 2021, Appendix A —
     the rule set MassiveWeb/RefinedWeb-style pipelines start from):
@@ -1435,20 +1450,20 @@ def gopher_rules_sql(doc_view: str, engine: str,
     booleans ride along so downstream can audit WHY a page dropped
     (the operational difference between a filter and a filter you can
     debug at 100 TB)."""
-    toks = tokens_sql("text", engine)
+    toks = tokens_sql(engine)
     nw = "cast(n_words as double)"
     stop_hits = " + ".join(
-        f"(case when {_arr_contains('_toks', w, engine)} then 1 else 0 end)"
+        f"(case when {_arr_contains(w, engine)} then 1 else 0 end)"
         for w in stopwords)
     return f"""
 with t as (
-  select doc_id, text, {toks} as _toks from {doc_view}),
+  select doc_id, text, {toks} as _toks from {DOC_VIEW}),
 sig as (
   select doc_id,
          cast({('size' if engine == SPARK else 'length')}(_toks)
               as bigint) as n_words,
-         {_arr_len_sum('_toks', engine)} as char_sum,
-         cast({_arr_count_alpha('_toks', engine)} as bigint)
+         {_arr_len_sum(engine)} as char_sum,
+         cast({_arr_count_alpha(engine)} as bigint)
            as n_alpha_words,
          cast(length(text) - length(replace(text, '#', '')) +
               (length(text) - length(replace(text, '...', ''))) / 3
@@ -1469,7 +1484,7 @@ from sig
 """
 
 
-def ccnet_ppl_bucket_sql(doc_view: str, engine: str) -> str:
+def ccnet_ppl_bucket_sql(engine: str) -> str:
     """CCNet-style quality bucketing (Wenzek et al. 2020): score each
     doc by a language-model proxy — here the corpus-unigram mean
     negative log-probability (the LM is a seam: swap in real LM scores
@@ -1490,12 +1505,12 @@ def ccnet_ppl_bucket_sql(doc_view: str, engine: str) -> str:
     (doc-keyed) → rank window over the per-doc scores. At 100 TB the
     vocabulary table is the small side (broadcast); per-doc rows are
     tiny. Output: (doc_id, n_words, nll_nano, bucket)."""
-    toks = tokens_sql("text", engine)
+    toks = tokens_sql(engine)
     idiv = "nll_sum div n_words" if engine == SPARK \
         else "nll_sum // n_words"
     return f"""
 with t as (
-  select doc_id, {toks} as _toks from {doc_view}),
+  select doc_id, {toks} as _toks from {DOC_VIEW}),
 w as (
   select doc_id, {explode_sql('_toks', 'word', engine)} from t),
 tot as (
@@ -1528,8 +1543,10 @@ from ranked
 """
 
 
-def dsir_importance_sql(doc_view: str, engine: str,
-                        n_buckets: int = 256) -> str:
+DSIR_BUCKETS = 256  # hashed-feature buckets
+
+
+def dsir_importance_sql(engine: str) -> str:
     """DSIR-style data selection (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling", arXiv:2302.03169):
     score every document by the hashed-unigram importance log-ratio
@@ -1539,8 +1556,8 @@ def dsir_importance_sql(doc_view: str, engine: str,
 
     Mechanics, kept exact and engine-agreeing:
 
-    - features: words hash (h60) into ``n_buckets`` buckets; both
-      corpora reduce to bucket-count tables (tiny: ``n_buckets`` rows).
+    - features: words hash (h60) into DSIR_BUCKETS buckets; both
+      corpora reduce to bucket-count tables (tiny: DSIR_BUCKETS rows).
     - per-bucket log-ratio ln(p_b/q_b) with Laplace smoothing
       ((c+1)/(tot+B) on both sides), materialized once per bucket in
       integer NANO-NAT units — identical expression text in both
@@ -1555,20 +1572,20 @@ def dsir_importance_sql(doc_view: str, engine: str,
       corpus, no engine quantile interpolation.
 
     Shape at 100 TB: word explode → two bucket-count aggregates (one
-    shuffle each, map-side partials, output = n_buckets rows each —
+    shuffle each, map-side partials, output = DSIR_BUCKETS rows each —
     broadcast); per-doc bucket counts groupBy (doc-keyed shuffle);
     bucket log-ratio join is broadcast; the histogram aggregate
     carries one row per milli-nat bin; only the threshold BIN pays a
     window, partitioned on the bin key. Output:
     (doc_id, n_words, w_nano, kept).
     """
-    toks = tokens_sql("text", engine)
+    toks = tokens_sql(engine)
     h = h60_sql("word", engine)
-    b = n_buckets
+    b = DSIR_BUCKETS
     idiv = "div" if engine == SPARK else "//"
     return f"""
 with t as (
-  select doc_id, lang, {toks} as _toks from {doc_view}),
+  select doc_id, lang, {toks} as _toks from {DOC_VIEW}),
 w as (
   select doc_id, lang, {explode_sql('_toks', 'word', engine)} from t),
 wb as (
@@ -1644,21 +1661,22 @@ from binned where w_milli < (select w_milli from thr)
 # ---------------------------------------------------------------------------
 
 
-def href_host_ctes(hr: str) -> str:
+def href_host_ctes() -> str:
     """CTEs ``dst0`` … ``resolved``: the canonical destination host of
-    every (src_host, href) row of ``hr``. Absolute hrefs (containing
-    ``://``) lose their scheme, everything from the first ``/``, a
-    ``:443`` / ``:80`` port and a leading ``www.``, and are lowercased.
+    every (src_host, href) row of the ``hr`` relation. Absolute hrefs
+    (containing ``://``) lose their scheme, everything from the first
+    ``/``, a ``:443`` / ``:80`` port and a leading ``www.``, and are
+    lowercased.
     Every other href — root-relative ``/x``, scheme-relative ``//host/x``,
     ``mailto:…``, bare relative ``a/b`` — resolves to the page's own host
     (RFC 3986 §5.1 base resolution, collapsed to the host level). Shared
     SQL text for Spark and DuckDB."""
-    return f"""dst0 as (
+    return """dst0 as (
   select src_host,
          case when position('://' in href) > 0
               then lower(substr(href, position('://' in href) + 3))
               else src_host end as rest
-  from {hr}),
+  from hr),
 dst1 as (
   select src_host,
          case when position('/' in rest) = 0 then rest
@@ -1677,9 +1695,12 @@ resolved as (
   from dst2)"""
 
 
-def link_graph_pagerank_sql(doc_view: str, engine: str,
-                            n_hosts: int = 50, rounds: int = 3,
-                            damp_milli: int = 850) -> str:
+N_HOSTS = 50  # hosts of the synthetic crawl (site0..site49)
+PAGERANK_ROUNDS = 3
+PAGERANK_DAMP_MILLI = 850  # damping 0.85 in integer milli-units
+
+
+def link_graph_pagerank_sql(engine: str) -> str:
     """Outlink extraction → host-level link graph → PageRank (Page et
     al. 1999 / Brin & Page WWW'98) — the crawl-frontier prioritization
     and quality signal every web-corpus pipeline computes (Common Crawl
@@ -1701,12 +1722,12 @@ def link_graph_pagerank_sql(doc_view: str, engine: str,
        convention). The edge table is host×host — at web scale ~10⁷
        hosts, *independent of page count*: the one full-corpus shuffle
        carries host-pair rows only, never page text.
-    3. **Power iteration, unrolled ``rounds`` times** — EXACT integer
+    3. **Power iteration, unrolled PAGERANK_ROUNDS times** — EXACT integer
        arithmetic: ranks live in micro-units summing to ~10¹²;
        per-edge flow is ``(rank*weight) div out_weight`` (truncating
        integer division — deterministic and identical in both engines,
        the embed_kmeans unrolled-iteration pattern), damped as
-       ``base + damp_milli*inflow div 1000``. Dangling hosts (none in
+       ``base + PAGERANK_DAMP_MILLI*inflow div 1000``. Dangling hosts (none in
        the synthesized graph, guarded anyway) contribute only the
        teleport base. Each round is one equi-join rank⋈edges + one
        dst-keyed groupBy over the HOST table — tiny vs the corpus, and
@@ -1726,14 +1747,14 @@ def link_graph_pagerank_sql(doc_view: str, engine: str,
   case when doc_id % 2 = 0 then 'https://' else 'HTTP://' end,
   case when doc_id % 3 = 0 then 'WWW.' else '' end,
   case when doc_id % 4 < 2 then 'Site' else 'site' end,
-  (doc_id * 7 + 13) % {n_hosts}, '.Example/a/', (doc_id + 1) % 20,
+  (doc_id * 7 + 13) % {N_HOSTS}, '.Example/a/', (doc_id + 1) % 20,
   '">one</a> text <a href="/local/', doc_id % 9,
   '">rel</a>',
   case when doc_id % 3 <> 1 then concat(
-    '<a href="https://site', (doc_id * 11 + 29) % {n_hosts},
+    '<a href="https://site', (doc_id * 11 + 29) % {N_HOSTS},
     '.example/b/', (doc_id + 2) % 20, '">two</a>') else '' end,
   case when doc_id % 5 = 0 then concat(
-    '<a href="HTTPS://Site', (doc_id * 3 + 41) % {n_hosts},
+    '<a href="HTTPS://Site', (doc_id * 3 + 41) % {N_HOSTS},
     '.EXAMPLE:443/c/', doc_id % 20, '">three</a>') else '' end)"""
     if engine == SPARK:
         hrefs = "explode(regexp_extract_all(html, 'href=\"([^\"]*)\"', 1))"
@@ -1741,14 +1762,14 @@ def link_graph_pagerank_sql(doc_view: str, engine: str,
     else:
         href_rows = ("select src_host, unnest(regexp_extract_all("
                      "html, 'href=\"([^\"]*)\"', 1)) as href from pages")
-    dst_ctes = href_host_ctes("hr")
+    dst_ctes = href_host_ctes()
     rounds_ctes = []
     prev = "r0"
-    for i in range(1, rounds + 1):
+    for i in range(1, PAGERANK_ROUNDS + 1):
         rounds_ctes.append(f"""r{i} as (
   select h.host,
          (select base from params)
-           + ({damp_milli} * coalesce(f.inflow, 0)){idiv}1000 as r
+           + ({PAGERANK_DAMP_MILLI} * coalesce(f.inflow, 0)){idiv}1000 as r
   from hosts h left join (
     select e.dst as host,
            sum((p.r * e.w){idiv}o.ow) as inflow
@@ -1759,15 +1780,17 @@ def link_graph_pagerank_sql(doc_view: str, engine: str,
         prev = f"r{i}"
     rounds_sql = ",\n".join(rounds_ctes)
     rank_cols = ", ".join(
-        f"cast(r{i}.r as bigint) as r{i}" for i in range(1, rounds + 1))
+        f"cast(r{i}.r as bigint) as r{i}"
+        for i in range(1, PAGERANK_ROUNDS + 1))
     rank_joins = "\n".join(
-        f"join r{i} on r{i}.host = h.host" for i in range(1, rounds + 1))
+        f"join r{i} on r{i}.host = h.host"
+        for i in range(1, PAGERANK_ROUNDS + 1))
     return f"""
 with pages as (
   select doc_id,
-         concat('site', doc_id % {n_hosts}, '.example') as src_host,
+         concat('site', doc_id % {N_HOSTS}, '.example') as src_host,
          {html} as html
-  from {doc_view}),
+  from {DOC_VIEW}),
 hr as ({href_rows}),
 {dst_ctes},
 edges as (
@@ -1787,7 +1810,7 @@ hosts as (
 params as (
   select cast(1000000000000{idiv}(select count(*) from hosts) as bigint)
            as r0,
-         cast((1000000000000 * (1000 - {damp_milli}))
+         cast((1000000000000 * (1000 - {PAGERANK_DAMP_MILLI}))
               {idiv}1000{idiv}(select count(*) from hosts) as bigint)
            as base),
 r0 as (
@@ -1810,12 +1833,15 @@ left join inw i on i.dst = h.host
 # ---------------------------------------------------------------------------
 
 
-def bpe_merges_sql(doc_view: str, engine: str,
-                   rounds: int = 3, topk: int = 8) -> str:
+BPE_ROUNDS = 3  # merges learned
+BPE_TOPK = 8  # candidate pairs reported per round
+
+
+def bpe_merges_sql(engine: str) -> str:
     """Byte-pair-encoding merge learning (Sennrich, Haddow & Birch,
     ACL 2016 "Neural Machine Translation of Rare Words with Subword
     Units" — the tokenizer-training algorithm behind GPT-2/RoBERTa
-    vocabularies): learn the first ``rounds`` merges of a BPE
+    vocabularies): learn the first BPE_ROUNDS merges of a BPE
     vocabulary from the corpus, exactly as a distributed trainer
     would at 100 TB.
 
@@ -1830,7 +1856,7 @@ def bpe_merges_sql(doc_view: str, engine: str,
        iterates merges over the vocab).
     2. **Spelling** — each word becomes space-separated single-char
        symbols plus the Sennrich end-of-word marker ``</w>``.
-    3. **Per-round merge learning**, unrolled ``rounds`` times over
+    3. **Per-round merge learning**, unrolled BPE_ROUNDS times over
        the vocab table only:
        a. *pair counting*: explode adjacent symbol positions; each
           occurrence contributes the word's corpus count (overlapping
@@ -1848,14 +1874,14 @@ def bpe_merges_sql(doc_view: str, engine: str,
           sequential scan.
        Each round is two vocab-sized exchanges (pair groupBy + word
        rebuild groupBy); the best-pair scalar subquery broadcasts.
-    4. **Output** — per round, the ``topk`` candidate pairs with
+    4. **Output** — per round, the BPE_TOPK candidate pairs with
        count, deterministic rank, the merged flag, and the round's
        distinct-pair universe size. Everything integer/string →
        bit-stable cross-engine.
     """
     if engine == SPARK:
         words = (f"select explode(split(lower(text), '[^a-z]+')) as w"
-                 f" from {doc_view}")
+                 f" from {DOC_VIEW}")
         spell = "concat(regexp_replace(w, '(.)', '$1 '), '</w>')"
 
         def pos_cte(i: int) -> str:
@@ -1870,7 +1896,7 @@ def bpe_merges_sql(doc_view: str, engine: str,
         split_syms = "split(syms, ' ')"
     else:
         words = (f"select unnest(string_split_regex(lower(text),"
-                 f" '[^a-z]+')) as w from {doc_view}")
+                 f" '[^a-z]+')) as w from {DOC_VIEW}")
         spell = r"concat(regexp_replace(w, '(.)', '\1 ', 'g'), '</w>')"
 
         def pos_cte(i: int) -> str:
@@ -1885,7 +1911,7 @@ def bpe_merges_sql(doc_view: str, engine: str,
 
     round_ctes = []
     out_rows = []
-    for i in range(1, rounds + 1):
+    for i in range(1, BPE_ROUNDS + 1):
         prev = f"v{i - 1}"
         round_ctes.append(f"""a{i} as (
   select w, cnt, {split_syms} as a from {prev}),
@@ -1927,7 +1953,7 @@ v{i} as (
        s1 as left_sym, s2 as right_sym, pcnt as pair_cnt,
        cast(case when rnk = 1 then 1 else 0 end as int) as merged,
        n_pairs
-from rk{i} where rnk <= {topk}""")
+from rk{i} where rnk <= {BPE_TOPK}""")
     rounds_sql = ",\n".join(round_ctes)
     union_sql = "\nunion all\n".join(out_rows)
     return f"""
@@ -1946,8 +1972,7 @@ v0 as (select w, cnt, {spell} as syms from vocab),
 # ---------------------------------------------------------------------------
 
 
-def snapshot_delta_sql(doc_view: str, engine: str,
-                       n_hosts: int = 50) -> str:
+def snapshot_delta_sql(engine: str) -> str:
     """Cross-snapshot crawl delta — the incremental-crawl comparison
     job every recurring web corpus runs (Common Crawl publishes
     new-vs-seen URL overlap per crawl; refresh pipelines schedule
@@ -1968,24 +1993,24 @@ def snapshot_delta_sql(doc_view: str, engine: str,
     _ = engine  # shared text: md5/concat/full join are identical
     return f"""
 with a as (
-  select concat('https://site', doc_id % {n_hosts}, '.example/p/', doc_id)
+  select concat('https://site', doc_id % {N_HOSTS}, '.example/p/', doc_id)
            as url,
-         concat('site', doc_id % {n_hosts}, '.example') as host,
+         concat('site', doc_id % {N_HOSTS}, '.example') as host,
          md5(text) as h
-  from {doc_view}),
+  from {DOC_VIEW}),
 b as (
-  select concat('https://site', doc_id % {n_hosts}, '.example/p/', doc_id)
+  select concat('https://site', doc_id % {N_HOSTS}, '.example/p/', doc_id)
            as url,
-         concat('site', doc_id % {n_hosts}, '.example') as host,
+         concat('site', doc_id % {N_HOSTS}, '.example') as host,
          case when doc_id % 10 in (5, 6) then md5(concat(text, ' v2'))
               else md5(text) end as h
-  from {doc_view} where doc_id % 10 <> 7
+  from {DOC_VIEW} where doc_id % 10 <> 7
   union all
-  select concat('https://site', doc_id % {n_hosts}, '.example/new/',
+  select concat('https://site', doc_id % {N_HOSTS}, '.example/new/',
                 doc_id) as url,
-         concat('site', doc_id % {n_hosts}, '.example') as host,
+         concat('site', doc_id % {N_HOSTS}, '.example') as host,
          md5(concat('new ', text)) as h
-  from {doc_view} where doc_id % 7 = 0),
+  from {DOC_VIEW} where doc_id % 7 = 0),
 j as (
   select coalesce(a.host, b.host) as host,
          case when b.url is null then 'gone'
@@ -2021,9 +2046,10 @@ BM25_QUERIES = (
 )
 
 
-def bm25_topk_sql(doc_view: str, engine: str,
-                  queries: tuple = BM25_QUERIES,
-                  topk: int = 10) -> str:
+BM25_TOPK = 10
+
+
+def bm25_topk_sql(engine: str) -> str:
     """Okapi BM25 ranked retrieval (Robertson & Walker SIGIR'94; the
     Lucene/Elasticsearch default scorer) — top-k documents per query:
 
@@ -2051,14 +2077,14 @@ def bm25_topk_sql(doc_view: str, engine: str,
     the OGR SQL string/LIKE surface (ogr/swq_op_general.cpp) is the
     reference's retrieval primitive; BM25 is the web-corpus extension.
     """
-    toks = tokens_sql("text", engine)
-    all_terms = sorted({t for _, ts in queries for t in ts})
+    toks = tokens_sql(engine)
+    all_terms = sorted({t for _, ts in BM25_QUERIES for t in ts})
     in_list = ", ".join(f"'{t}'" for t in all_terms)
-    qvals = ", ".join(f"({qid}, '{t}')" for qid, ts in queries
+    qvals = ", ".join(f"({qid}, '{t}')" for qid, ts in BM25_QUERIES
                       for t in ts)
     return f"""
 with t as (
-  select doc_id, {toks} as _toks from {doc_view}),
+  select doc_id, {toks} as _toks from {DOC_VIEW}),
 w as (
   select doc_id, {explode_sql('_toks', 'word', engine)} from t),
 dl as (
@@ -2099,7 +2125,7 @@ ranked as (
   from scored)
 select cast(query_id as bigint) as query_id, cast(rnk as bigint) as rnk,
        doc_id, score_nano, n_terms_hit
-from ranked where rnk <= {topk}
+from ranked where rnk <= {BM25_TOPK}
 """
 
 # ---------------------------------------------------------------------------
@@ -2113,7 +2139,7 @@ HLL_ALPHA_MILLI = 709  # alpha_64 = 0.709 (Flajolet et al. 2007, Fig. 3)
 _HLL_NUM = HLL_ALPHA_MILLI * HLL_M * HLL_M * (1 << HLL_W)
 
 
-def hll_distinct_sql(doc_view: str, engine: str) -> str:
+def hll_distinct_sql(engine: str) -> str:
     """HyperLogLog distinct-count sketch (Flajolet, Fusy, Gandouet &
     Meunier, AofA 2007 — the cardinality estimator behind BigQuery's
     APPROX_COUNT_DISTINCT and Redis PFCOUNT), m=64 registers, with the
@@ -2136,18 +2162,18 @@ def hll_distinct_sql(doc_view: str, engine: str) -> str:
     merge by register max (the property that makes HLL the standard
     crawl-scale uniques counter). The exact lane here is the oracle's
     cross-check, not the scale path."""
-    toks = tokens_sql("text", engine)
+    toks = tokens_sql(engine)
     h = h60_sql("v", engine)
     idiv = "div" if engine == SPARK else "//"
     two_w = 1 << HLL_W
     return f"""
 with items as (
-  select 'url' as entity, concat('u', doc_id) as v from {doc_view}
+  select 'url' as entity, concat('u', doc_id) as v from {DOC_VIEW}
   union all
-  select 'host' as entity, concat('h', doc_id % 50) as v from {doc_view}
+  select 'host' as entity, concat('h', doc_id % 50) as v from {DOC_VIEW}
   union all
   select 'word' as entity, word as v
-  from (select {explode_sql(toks, 'word', engine)} from {doc_view})),
+  from (select {explode_sql(toks, 'word', engine)} from {DOC_VIEW})),
 exact as (
   select entity, cast(count(distinct v) as bigint) as n_exact
   from items group by entity),
@@ -2200,9 +2226,7 @@ CHUNK_WINDOW = 32  # tokens per chunk
 CHUNK_STRIDE = 24  # new tokens per step (8-token overlap)
 
 
-def chunk_windows_sql(doc_view: str, engine: str,
-                      window: int = CHUNK_WINDOW,
-                      stride: int = CHUNK_STRIDE) -> str:
+def chunk_windows_sql(engine: str) -> str:
     """Sliding-window document chunking — the overlapping fixed-token
     splitter every RAG indexer and long-context preprocessor runs
     (LangChain's TokenTextSplitter / HF tokenizers' stride semantics):
@@ -2222,8 +2246,8 @@ def chunk_windows_sql(doc_view: str, engine: str,
     exactly like the scan. Complements train_pack_sequences (packing
     ACROSS docs, which needs the prefix-sum shuffle) — within-doc
     windowing is the shuffle-free half of the pair."""
-    toks = tokens_sql("text", engine)
-    w, s = window, stride
+    toks = tokens_sql(engine)
+    w, s = CHUNK_WINDOW, CHUNK_STRIDE
     if engine == SPARK:
         nchunks = f"(1 + (greatest(size(_toks) - {w}, 0) + {s - 1}) div {s})"
         chunk = f"slice(_toks, 1 + i * {s}, {w})"
@@ -2239,7 +2263,7 @@ def chunk_windows_sql(doc_view: str, engine: str,
         clen = "length(_chunk)"
     return f"""
 with t as (
-  select doc_id, {toks} as _toks from {doc_view}),
+  select doc_id, {toks} as _toks from {DOC_VIEW}),
 idx as (
   select doc_id, _toks, {iexpr} from t),
 c as (

@@ -39,10 +39,12 @@ from pyspark.sql import functions as F
 
 from gdal_spark.raster import TILE_DTYPE, TILE_PX
 
+OBS_Z = 0.0  # observer height above the DEM
+TARGET_HEIGHT = 0.0  # target height above the DEM
+
 
 def wang_viewshed_np(dem: np.ndarray, ox: int, oy: int,
-                     obs_z: float = 0.0,
-                     target_height: float = 0.0) -> np.ndarray:
+                     obs_z: float = OBS_Z) -> np.ndarray:
     """Line-sweep transcription of ViewshedExecutor (uint8 visibility)."""
     h = np.asarray(dem, dtype=np.float64)
     ny, nx = h.shape
@@ -59,7 +61,7 @@ def wang_viewshed_np(dem: np.ndarray, ox: int, oy: int,
             for x in range(ox - 2, -1, -1):
                 d = ox - x
                 z = line[x + 1] * d / (d - 1)
-                vis[oy, x] = 1 if line[x] + target_height >= z else 0
+                vis[oy, x] = 1 if line[x] + TARGET_HEIGHT >= z else 0
                 line[x] = max(line[x], z)
         # right
         if ox + 1 < nx:
@@ -67,7 +69,7 @@ def wang_viewshed_np(dem: np.ndarray, ox: int, oy: int,
             for x in range(ox + 2, nx):
                 d = x - ox
                 z = line[x - 1] * d / (d - 1)
-                vis[oy, x] = 1 if line[x] + target_height >= z else 0
+                vis[oy, x] = 1 if line[x] + TARGET_HEIGHT >= z else 0
                 line[x] = max(line[x], z)
         return line
 
@@ -82,7 +84,7 @@ def wang_viewshed_np(dem: np.ndarray, ox: int, oy: int,
             z = line[ox]
         else:
             z = last[ox] * dy / (dy - 1)
-        vis[y, ox] = 1 if line[ox] + target_height >= z else 0
+        vis[y, ox] = 1 if line[ox] + TARGET_HEIGHT >= z else 0
         line[ox] = max(line[ox], z)
         # left sweep
         for x in range(ox - 1, -1, -1):
@@ -93,7 +95,7 @@ def wang_viewshed_np(dem: np.ndarray, ox: int, oy: int,
                 z = edge(dy, dx, last[x + 1], line[x + 1])
             else:
                 z = edge(dx, dy, last[x + 1], last[x])
-            vis[y, x] = 1 if line[x] + target_height >= z else 0
+            vis[y, x] = 1 if line[x] + TARGET_HEIGHT >= z else 0
             line[x] = max(line[x], z)
         # right sweep
         for x in range(ox + 1, nx):
@@ -104,7 +106,7 @@ def wang_viewshed_np(dem: np.ndarray, ox: int, oy: int,
                 z = edge(dy, dx, last[x - 1], line[x - 1])
             else:
                 z = edge(dx, dy, last[x - 1], last[x])
-            vis[y, x] = 1 if line[x] + target_height >= z else 0
+            vis[y, x] = 1 if line[x] + TARGET_HEIGHT >= z else 0
             line[x] = max(line[x], z)
         return line
 
@@ -118,16 +120,14 @@ def wang_viewshed_np(dem: np.ndarray, ox: int, oy: int,
     return vis
 
 
-def wang_viewshed_memo(dem: np.ndarray, ox: int, oy: int,
-                       obs_z: float = 0.0,
-                       target_height: float = 0.0) -> np.ndarray:
+def wang_viewshed_memo(dem: np.ndarray, ox: int, oy: int) -> np.ndarray:
     """INDEPENDENT oracle implementation: the same Wang/Edge spec as a
     memoized cell recursion (observable height H(x, y) defined from the
     geometric rules directly), no line sweeps, no in-place updates —
     the structural cross-check for the engine kernel."""
     h = np.asarray(dem, dtype=np.float64)
     ny, nx = h.shape
-    z_obs = h[oy, ox] + obs_z
+    z_obs = h[oy, ox] + OBS_Z
     g = h - z_obs
     H: dict[tuple[int, int], float] = {}
 
@@ -192,7 +192,7 @@ def wang_viewshed_memo(dem: np.ndarray, ox: int, oy: int,
                 else:
                     z = (H[(x - sx, y - sy)] * dx
                          + H[(x, y - sy)] * (dy - dx)) / (dy - 1)
-                vis[y, x] = 1 if g[y, x] + target_height >= z else 0
+                vis[y, x] = 1 if g[y, x] + TARGET_HEIGHT >= z else 0
     finally:
         sys.setrecursionlimit(old)
     return vis

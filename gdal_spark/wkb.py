@@ -95,8 +95,8 @@ def _read_coords(buf: bytes, off: int, n: int, little: bool):
     return arr.reshape(n, 2).astype(np.float64), off + 16 * n
 
 
-def loads(buf: bytes, off: int = 0):
-    geom, _ = _loads_at(bytes(buf), off)
+def loads(buf: bytes):
+    geom, _ = _loads_at(bytes(buf), 0)
     return geom
 
 

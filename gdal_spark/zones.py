@@ -131,10 +131,10 @@ def zone_bbox_values_sql() -> str:
             + ") as b(zone_id, eas_id, minx, miny, maxx, maxy)")
 
 
-def pip_oracle_sql(points_sql: str, point_id: str = "doc_id") -> str:
+def pip_oracle_sql(points_sql: str) -> str:
     """DuckDB SQL: even-odd ray-cast PIP of points against all zones.
 
-    Emits ({point_id}, zone_id) for every point strictly inside a zone —
+    Emits (doc_id, zone_id) for every point strictly inside a zone —
     the same arithmetic (same expression text) as the numpy kernel in
     gdal_spark.geom.points_in_ring, so results match bit-for-bit.
     """
@@ -148,13 +148,13 @@ cand as (
    and p.lat >= b.miny and p.lat <= b.maxy
 ),
 crossed as (
-  select c.{point_id}, c.zid,
+  select c.doc_id, c.zid,
          sum(case when ((e.y0 > c.lat) != (e.y1 > c.lat))
                    and c.lon < (e.x1 - e.x0) * (c.lat - e.y0) / (e.y1 - e.y0) + e.x0
               then 1 else 0 end) as crossings
   from cand c
   join {zone_edges_values_sql()} on e.zone_id = c.zid
-  group by c.{point_id}, c.zid
+  group by c.doc_id, c.zid
 )
-select {point_id}, zid as zone_id from crossed where crossings % 2 = 1
+select doc_id, zid as zone_id from crossed where crossings % 2 = 1
 """

@@ -931,7 +931,7 @@ def test_shapefile_pair_roundtrip():
              [(5.0, 5.0), (6.0, 7.0)]]
     st, back = decode_shp(encode_shp(lines, 3))
     assert st == 3 and back == lines
-    name, vals = decode_dbf(encode_dbf("val", [0, 42, -7, 123456]))
+    name, vals = decode_dbf(encode_dbf([0, 42, -7, 123456]))
     assert name == "val" and vals == [0, 42, -7, 123456]
     # header invariants: magic 9994 big-endian, version 1000 LE,
     # declared file length covers the body exactly

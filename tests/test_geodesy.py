@@ -561,7 +561,7 @@ def test_osgb36_sql_stages_match_numpy(ddb):
     ddb.register("gb_pts", pd.DataFrame({"lon": lon, "lat": lat}))
     sql = stages_to_duckdb_sql(
         "select lon, lat from gb_pts",
-        epsg_fwd_stages(27700, "lon", "lat", "e", "n"), ["e", "n", "ok"])
+        epsg_fwd_stages(27700, "e", "n"), ["e", "n", "ok"])
     out = ddb.execute(sql).df()
     E, N, _ = osgb36_fwd_np(lon, lat)
     assert out["ok"].all()
@@ -638,7 +638,7 @@ def test_epsg_table_unknown_code_message():
     from gdal_spark.crs import epsg_fwd_stages
 
     with pytest.raises(KeyError, match="parameter table"):
-        epsg_fwd_stages(2056, "lon", "lat")
+        epsg_fwd_stages(2056)
 
 
 # ---------------------------------------------------------------------------
@@ -749,7 +749,7 @@ def test_new_codes_fwd_sql_matches_numpy(ddb):
         ddb.register("fwd_pts_r4", pd.DataFrame({"lon": lon, "lat": lat}))
         sql = stages_to_duckdb_sql(
             "select lon, lat from fwd_pts_r4",
-            epsg_fwd_stages(code, "lon", "lat", "e", "n"),
+            epsg_fwd_stages(code, "e", "n"),
             ["e", "n", "ok"])
         out = ddb.execute(sql).df()
         assert out["ok"].all(), code
@@ -773,7 +773,7 @@ def test_equal_earth_and_sinusoidal_fwd_sql_matches_numpy(ddb):
         ddb.register("fwd_pts_r5", pd.DataFrame({"lon": lon, "lat": lat}))
         sql = stages_to_duckdb_sql(
             "select lon, lat from fwd_pts_r5",
-            epsg_fwd_stages(code, "lon", "lat", "e", "n"),
+            epsg_fwd_stages(code, "e", "n"),
             ["e", "n", "ok"])
         out = ddb.execute(sql).df()
         assert out["ok"].all(), code

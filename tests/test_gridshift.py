@@ -27,10 +27,10 @@ def _shift_df(spark, pts):
     from gdal_spark.crs import apply_sql_stages
 
     df = spark.createDataFrame(pts, "pid int, lon double, lat double")
-    df = apply_sql_stages(df, cell_key_stages("lon", "lat"))
+    df = apply_sql_stages(df, cell_key_stages())
     df = df.join(F.broadcast(grid_cells(spark)), ["ci", "cj"], "left")
     # keep the bilinear temporaries observable via output columns
-    stages = bilinear_shift_stages("lon", "lat", "glon", "glat")
+    stages = bilinear_shift_stages("glon", "glat")
     return apply_sql_stages(df, stages)
 
 
@@ -147,10 +147,10 @@ def test_conus_grid_bilinear_matches_independent_numpy(spark):
                                           (g["nj"] - 1) * g["step"] - .01)))
            for k in range(30)]
     df = spark.createDataFrame(pts, "pid int, lon double, lat double")
-    df = apply_sql_stages(df, cell_key_stages("lon", "lat", g))
+    df = apply_sql_stages(df, cell_key_stages(g))
     df = df.join(F.broadcast(grid_cells(spark, g)), ["ci", "cj"], "left")
     out = {r["pid"]: r for r in apply_sql_stages(
-        df, bilinear_shift_stages("lon", "lat", "glon", "glat",
+        df, bilinear_shift_stages("glon", "glat",
                                   grid=g)).collect()}
     for pid, lon, lat in pts:
         ci = int(np.floor((lon - g["lon0"]) / g["step"]))

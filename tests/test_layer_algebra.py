@@ -19,8 +19,8 @@ from gdal_spark.zones import zone_defs
 @pytest.fixture(scope="module")
 def overlay(spark):
     defs = zone_defs()
-    return (defs, shift_defs(defs, 0.31, 0.17),
-            overlay_areas(spark, defs, shift_defs(defs, 0.31, 0.17))
+    return (defs, shift_defs(defs),
+            overlay_areas(spark, defs, shift_defs(defs))
             .toPandas())
 
 
@@ -71,7 +71,7 @@ def test_identity_update_against_numpy(spark):
                                           identity_update)
 
     defs = zone_defs()
-    method = disjoint_method_defs(shift_defs(defs, 0.31, 0.17))
+    method = disjoint_method_defs(shift_defs(defs))
     assert 1 <= len(method) < len(defs) + 1
     res = identity_update(spark, defs, method).toPandas()
     assert len(res) >= 5
@@ -96,7 +96,7 @@ def test_identity_update_against_numpy(spark):
 def test_disjoint_method_defs_are_disjoint():
     from gdal_spark.layer_algebra import disjoint_method_defs
 
-    method = disjoint_method_defs(shift_defs(zone_defs(), 0.31, 0.17))
+    method = disjoint_method_defs(shift_defs(zone_defs()))
     for i, a in enumerate(method):
         for b in method[i + 1:]:
             ba, bb = G.rings_bbox(a["rings"]), G.rings_bbox(b["rings"])
@@ -145,7 +145,7 @@ def test_nonconvex_intersection_features(spark):
     from gdal_spark.zones import zone_defs
 
     defs = zone_defs()
-    method = shift_defs(defs, 0.31, 0.17)
+    method = shift_defs(defs)
     by_a = {z["zone_id"]: z for z in defs}
     by_b = {z["zone_id"]: z for z in method}
     feats = intersection_features(spark, defs, method).toPandas()
@@ -189,7 +189,7 @@ def test_erase_features_geometry_and_area(spark):
     from gdal_spark.zones import zone_defs
 
     defs = zone_defs()
-    method = disjoint_method_defs(shift_defs(defs, 0.31, 0.17))
+    method = disjoint_method_defs(shift_defs(defs))
     out = {r["input_zone"]: r
            for r in erase_features(spark, defs, method).collect()}
     assert set(out) == {z["zone_id"] for z in defs}
@@ -255,7 +255,7 @@ def test_union_features_partitions_input(spark):
     from gdal_spark.zones import zone_defs
 
     defs = zone_defs()
-    method = disjoint_method_defs(shift_defs(defs, 0.31, 0.17))
+    method = disjoint_method_defs(shift_defs(defs))
     rows = union_features(spark, defs, method).collect()
 
     def multi_area(blob):

@@ -306,7 +306,7 @@ def test_page_tables_keep_columns_types_and_rows(spark):
         assert compare_frames(points, con, points_oracle_sql()) > 0
         gtext = stages_to_duckdb_sql(
             "select doc_id, text, lang from documents",
-            synth_stages("doc_id") + [("gtext", geotag_text_sql("text"))],
+            synth_stages() + [("gtext", geotag_text_sql())],
             ["doc_id", "lang", "gtext"])
         want = sorted(con.execute(
             "select concat('https://site', doc_id % 100, '.example/p/',"

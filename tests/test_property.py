@@ -151,7 +151,7 @@ def test_html_extract_roundtrip_hostile_text(spark, text):
         [(1, text, "en")], "doc_id long, text string, lang string") \
         .createOrReplaceTempView("documents")
     r = spark.sql(textops.html_extract_sql(
-        "documents", textops.SPARK)).collect()[0]
+        textops.SPARK)).collect()[0]
     assert r.byte_identical, repr(text)
 
 

@@ -156,7 +156,7 @@ def test_polygonize_matches_bfs(pts, tiles):
            polygonize_summary(tiles, grid_w).collect()}
     from gdal_spark.raster import gpixel_exprs
 
-    gxe, gye = gpixel_exprs("lon", "lat", Z)
+    gxe, gye = gpixel_exprs(Z)
     pix = {(r["gx"], r["gy"]) for r in
            pts.selectExpr(f"{gxe} as gx", f"{gye} as gy").collect()}
     comps = _bfs_components(pix)
@@ -488,7 +488,7 @@ def test_hillshade_aspect_matches_numpy_and_oracle(spark, ddb):
              - (w[:-2, 2:] + 2 * w[1:-1, 2:] + w[2:, 2:]))
     num_y = ((w[2:, :-2] + 2 * w[2:, 1:-1] + w[2:, 2:])
              - (w[:-2, :-2] + 2 * w[:-2, 1:-1] + w[:-2, 2:]))
-    hs = hillshade_np(num_x.ravel(), num_y.ravel(), cellsize=30.0)
+    hs = hillshade_np(num_x.ravel(), num_y.ravel())
     for y, x in [(1, 1), (63, 64), (64, 64), (128, 7), (254, 254)]:
         assert got.loc[(y, x)]["hillshade"] == hs[
             (y - 1) * (px - 2) + (x - 1)], (y, x)

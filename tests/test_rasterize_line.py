@@ -171,7 +171,7 @@ def test_spark_pixels_match_reference_loop(spark):
     pix = segs.filter("imax >= 0").select(
         "zone_id", "ix0", "iy0", "sx", "sy", "mj", "mn", "xmaj",
         F.expr("explode(sequence(0, imax))").alias("i"))
-    for name, expr in _pix_cols("i"):
+    for name, expr in _pix_cols():
         pix = pix.withColumn(name, F.expr(expr))
     got = pix.groupBy("zone_id").agg(
         F.sort_array(F.collect_list(F.struct("gx", "gy"))).alias("px"))

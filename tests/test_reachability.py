@@ -14,6 +14,10 @@ reference is any identifier a definition's body names (``Name``,
 ``"gdal_spark.pydaemon"``). References resolve by name alone, so a name
 shared by two modules keeps both alive: the check can miss dead code but
 never flags live code.
+
+Two more AST checks ride along: every default parameter of a public
+package function is set by some call (tests count as callers here), and
+every import is used in its scope.
 """
 
 from __future__ import annotations
@@ -146,3 +150,139 @@ def test_graph_sees_dynamic_imports():
     defs, _ = package_graph()
     assert "kml_ingest_sql" in defs[("queries.textpipe", "ORACLES")]
     assert "pydaemon" in defs[("session", "_worker_daemon")]
+
+
+# Keyword defaults no call sets, each kept for the reason given.
+DEFAULT_ALLOW = {
+    ("session", "get_spark", "extra_conf"):
+        "deployment option: a job passes its own Spark settings",
+}
+
+
+def _call_roots() -> list[Path]:
+    """Every file whose calls can set a package parameter, tests
+    included."""
+    return [*sorted(PACKAGE.rglob("*.py")), ROOT / "__spark_entry__.py",
+            ROOT / "bench.py", *sorted((ROOT / "scripts").glob("*.py")),
+            *sorted((ROOT / "perfbench").rglob("*.py")),
+            *sorted((ROOT / "tests").rglob("*.py"))]
+
+
+def _public_functions():
+    """(module, qualified name, FunctionDef) of every public top-level
+    function and public method of a public class in the package."""
+    for path in sorted(PACKAGE.rglob("*.py")):
+        mod = _module_name(path)
+        for stmt in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(stmt, ast.FunctionDef) \
+                    and not stmt.name.startswith("_"):
+                yield mod, stmt.name, stmt
+            elif isinstance(stmt, ast.ClassDef) \
+                    and not stmt.name.startswith("_"):
+                for m in stmt.body:
+                    if isinstance(m, ast.FunctionDef) \
+                            and not m.name.startswith("_"):
+                        yield mod, f"{stmt.name}.{m.name}", m
+
+
+def unset_defaults() -> list[tuple[str, str, str]]:
+    """(module, function, parameter) for every default parameter that no
+    call sets. Calls resolve by name alone; a call sets a parameter when
+    it passes it by keyword, by position, or through ``*``/``**``."""
+    calls: dict[str, list[ast.Call]] = {}
+    for path in _call_roots():
+        for n in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.id if isinstance(f, ast.Name) else \
+                    f.attr if isinstance(f, ast.Attribute) else None
+                if name:
+                    calls.setdefault(name, []).append(n)
+    out = []
+    for mod, qual, fn in _public_functions():
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        first_default = len(pos) - len(a.defaults)
+        self_arg = 1 if "." in qual else 0  # a call does not pass ``self``
+        params = [(p.arg, i - self_arg)
+                  for i, p in enumerate(pos) if i >= first_default]
+        params += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                   if d is not None]
+        sites = calls.get(qual.rsplit(".", 1)[-1], [])
+        for name, index in params:
+            if not any(
+                    any(k.arg in (name, None) for k in c.keywords)
+                    or (index is not None
+                        and (len(c.args) > index
+                             or any(isinstance(x, ast.Starred)
+                                    for x in c.args)))
+                    for c in sites):
+                out.append((mod, qual, name))
+    return out
+
+
+def test_every_default_is_set_by_a_caller():
+    unset = unset_defaults()
+    assert set(DEFAULT_ALLOW) <= set(unset), \
+        set(DEFAULT_ALLOW) - set(unset)  # a stale allow-list entry
+    unset = [k for k in unset if k not in DEFAULT_ALLOW]
+    assert not unset, "default no call sets (fold it into its value): " \
+        + ", ".join(f"{m}.{f}({p})" for m, f, p in unset)
+
+
+def _bound_names(node: ast.AST) -> list[tuple[str, int]]:
+    """(name, line) of every name an import directly in ``node``'s body
+    binds (nested function and class bodies are their own scopes)."""
+    out = []
+    todo = list(ast.iter_child_nodes(node))
+    while todo:
+        n = todo.pop()
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef,
+                          ast.ClassDef)):
+            continue
+        if isinstance(n, ast.Import):
+            out += [(al.asname or al.name.split(".")[0], n.lineno)
+                    for al in n.names]
+        elif isinstance(n, ast.ImportFrom) and n.module != "__future__":
+            out += [(al.asname or al.name, n.lineno) for al in n.names
+                    if al.name != "*"]
+        todo.extend(ast.iter_child_nodes(n))
+    return out
+
+
+def _used_names(node: ast.AST) -> set[str]:
+    """Identifiers ``node`` uses: ``_names`` without the import
+    statements' own aliases."""
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) \
+                and _IDENT.match(n.value):
+            out.update(n.value.split("."))
+    return out
+
+
+def unused_imports() -> list[tuple[str, int, str]]:
+    """(module, line, name) of every import whose name its scope (the
+    module, or the function that imports it) never uses. ``__init__``
+    modules are skipped: their imports are re-exports."""
+    out = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        scopes = [tree] + [n for n in ast.walk(tree) if isinstance(
+            n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+        for scope in scopes:
+            used = _used_names(scope)
+            out += [(_module_name(path), line, name)
+                    for name, line in _bound_names(scope)
+                    if name not in used]
+    return sorted(out)
+
+
+def test_no_unused_import():
+    unused = unused_imports()
+    assert not unused, "unused import: " + ", ".join(
+        f"{m}:{line} {n}" for m, line, n in unused)

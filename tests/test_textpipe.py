@@ -54,7 +54,7 @@ def test_dedup_exact_matches_dup_synthesis(docs, crawl):
 
 def test_minhash_catches_all_synthetic_neardups(docs, crawl):
     pairs = {(r["id_a"], r["id_b"]): r["jaccard"]
-             for r in minhash_neardup_pairs(crawl, threshold=0.8).collect()}
+             for r in minhash_neardup_pairs(crawl).collect()}
     # exact duplicates: J = 1.0 exactly
     for r in docs.filter("doc_id % 5 = 2").select("doc_id").collect():
         d = r["doc_id"]
@@ -71,7 +71,7 @@ def test_simhash_banding_equals_quadratic(spark, crawl):
     quadratic scan finds (pigeonhole guarantee, not an approximation)."""
     sample = crawl.filter("crawl_id % 3 = 0")
     blocked = {(r["id_a"], r["id_b"], r["hamming"])
-               for r in simhash_neardup_pairs(sample, max_hamming=3).collect()}
+               for r in simhash_neardup_pairs(sample).collect()}
     s = simhash_table(sample).collect()
     quad = set()
     for i, a in enumerate(s):
@@ -84,7 +84,7 @@ def test_simhash_banding_equals_quadratic(spark, crawl):
 
 
 def test_ngram_jaccard_bounds(crawl):
-    rows = ngram_jaccard_pairs(crawl, k=2, threshold=0.7).collect()
+    rows = ngram_jaccard_pairs(crawl).collect()
     assert all(0.7 <= r["jaccard"] <= 1.0 for r in rows)
     exact = [r for r in rows if r["jaccard"] == 1.0]
     assert len(exact) >= 1
@@ -101,9 +101,9 @@ def test_embed_neardup_is_exactly_the_perturbed_pairs(spark, aug):
     expect = {(r["vec_id"], r["vec_id"] + 100000)
               for r in emb.filter("vec_id % 4 = 1").collect()}
     got = {(r["vec_a"], r["vec_b"])
-           for r in neardup_pairs(aug, threshold=0.9).collect()}
+           for r in neardup_pairs(aug).collect()}
     assert got == expect  # natural pairs max out near cos 0.5
-    for r in neardup_pairs(aug, threshold=0.9).collect():
+    for r in neardup_pairs(aug).collect():
         assert r["cosine"] > 0.99
 
 
@@ -128,7 +128,7 @@ def test_ivf_recalls_near_duplicates(spark, aug):
     from gdal_spark.simsearch import ivf_topk
 
     out = ivf_topk(aug, "vec_id % 20 = 1 and vec_id < 100000",
-                   k=5, n_probe=3).toPandas()
+                   k=5).toPandas()
     assert len(out) > 0
     rank1 = out[out["rank"] == 1].set_index("qid")
     n_hit = 0
@@ -166,13 +166,13 @@ def test_neardup_lsh_path_equals_bruteforce_and_never_crossjoins(aug):
     cartesian/nested-loop join."""
     from gdal_spark.simsearch import neardup_pairs_bruteforce
 
-    lsh = neardup_pairs(aug, threshold=0.9)
+    lsh = neardup_pairs(aug)
     plan = lsh._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     got = {(r["vec_a"], r["vec_b"], r["cosine"]) for r in lsh.collect()}
     want = {(r["vec_a"], r["vec_b"], r["cosine"])
-            for r in neardup_pairs_bruteforce(aug, threshold=0.9).collect()}
+            for r in neardup_pairs_bruteforce(aug).collect()}
     assert got == want
 
 
@@ -181,13 +181,13 @@ def test_hillshade_kernel_bounds_and_flat():
 
     from gdal_spark.raster import hillshade_np
 
-    flat = hillshade_np(np.zeros(5), np.zeros(5), cellsize=30.0)
+    flat = hillshade_np(np.zeros(5), np.zeros(5))
     import math
     expect = 1.0 + round(254.0 * math.sin(math.radians(45.0)))
     assert (flat == expect).all()
     rng = np.random.default_rng(7)
     hs = hillshade_np(rng.integers(-800, 800, 100),
-                      rng.integers(-800, 800, 100), cellsize=30.0)
+                      rng.integers(-800, 800, 100))
     assert hs.min() >= 1 and hs.max() <= 255
 
 
@@ -270,7 +270,7 @@ def test_boilerplate_segments_known_fixture(spark):
               " n_chars long").createOrReplaceTempView("documents")
     out = {r["crawl_id"]: (r["n_segments"], r["n_boiler"])
            for r in spark.sql(
-               boilerplate_sql("documents", SPARK, k=8, min_docs=3))
+               boilerplate_sql(SPARK))
            .collect() if r["crawl_id"] < 100}
     # 16 words -> 2 segments; the boiler segment flagged, the tail not
     assert all(v == (2, 1) for k, v in out.items() if k < 9)
@@ -290,7 +290,7 @@ def test_decontaminate_flags_planted_copies(docs, crawl):
     and containment stays in (0, 1]."""
     from gdal_spark.dedup import decontaminate
 
-    rows = decontaminate(crawl, k=3, threshold=0.3).collect()
+    rows = decontaminate(crawl).collect()
     assert rows
     for r in rows:
         assert r["eval_id"] % 41 == 7
@@ -324,7 +324,7 @@ def test_pii_scan_injection_ground_truth(spark):
 
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
         .createOrReplaceTempView("documents")
-    df = spark.sql(T.pii_scan_sql("documents", T.SPARK)).toPandas()
+    df = spark.sql(T.pii_scan_sql(T.SPARK)).toPandas()
     assert (df["n_email"] == (df["doc_id"] % 7 == 0).astype(int)).all()
     assert (df["n_phone"] == (df["doc_id"] % 11 == 0).astype(int)).all()
     import numpy as np
@@ -345,9 +345,9 @@ def test_stratified_sample_deterministic_and_rated(spark):
 
     spark.read.parquet("/root/testdata/sf0.01/documents.parquet") \
         .createOrReplaceTempView("documents")
-    a = spark.sql(T.stratified_sample_sql("documents", T.SPARK)) \
+    a = spark.sql(T.stratified_sample_sql(T.SPARK)) \
         .toPandas().sort_values("doc_id").reset_index(drop=True)
-    b = spark.sql(T.stratified_sample_sql("documents", T.SPARK)) \
+    b = spark.sql(T.stratified_sample_sql(T.SPARK)) \
         .toPandas().sort_values("doc_id").reset_index(drop=True)
     assert a.equals(b)
     for stratum, g in a.groupby("stratum"):
@@ -389,7 +389,7 @@ def test_tfidf_topterms_ranking_properties(spark):
 
     spark.read.parquet("/root/testdata/sf0.01/documents.parquet") \
         .createOrReplaceTempView("documents")
-    df = spark.sql(T.tfidf_topterms_sql("documents", T.SPARK)).toPandas()
+    df = spark.sql(T.tfidf_topterms_sql(T.SPARK)).toPandas()
     g = df.groupby("doc_id")
     assert (g["rank"].max() <= 5).all() and (g["rank"].min() == 1).all()
     for _, grp in list(g)[:10]:
@@ -426,7 +426,7 @@ def test_pack_sequences_matches_bruteforce_concat(spark):
     _tiny_docs(spark, texts).createOrReplaceTempView("documents")
     ctx, bucket = 4, 3
     got = {r["doc_id"]: r for r in spark.sql(
-        textops.pack_sequences_sql("documents", textops.SPARK,
+        textops.pack_sequences_sql(textops.SPARK,
                                    ctx=ctx, bucket=bucket)).collect()}
     # brute force: one global stream, n_tok = words + 1 EOS
     off = 0
@@ -442,7 +442,7 @@ def test_pack_sequences_matches_bruteforce_concat(spark):
     # bucketed two-level scan must equal the naive single scan for any
     # bucket size, including one larger than the corpus
     got1 = sorted(spark.sql(textops.pack_sequences_sql(
-        "documents", textops.SPARK, ctx=ctx, bucket=1000)).collect())
+        textops.SPARK, ctx=ctx, bucket=1000)).collect())
     gotb = sorted(got.values())
     assert got1 == gotb
 
@@ -455,7 +455,7 @@ def test_pack_sequences_window_is_bucket_partitioned(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.createOrReplaceTempView("documents")
     plan = spark.sql(textops.pack_sequences_sql(
-        "documents", textops.SPARK))._jdf.queryExecution() \
+        textops.SPARK))._jdf.queryExecution() \
         .executedPlan().toString()
     # one window partitioned by the bucket key, one global over btot
     assert plan.count("Window") >= 2
@@ -472,8 +472,7 @@ def test_bigram_novelty_matches_bruteforce(spark):
              "the cat sat", "lonely"]
     _tiny_docs(spark, texts).createOrReplaceTempView("documents")
     got = {r["doc_id"]: r for r in spark.sql(
-        textops.bigram_novelty_sql("documents",
-                                   textops.SPARK)).collect()}
+        textops.bigram_novelty_sql(textops.SPARK)).collect()}
     per_doc = [set(f"{a} {b}" for a, b in
                    zip(t.split(), t.split()[1:])) for t in texts]
     df = Counter(bg for s in per_doc for bg in s)
@@ -589,8 +588,7 @@ def test_substring_spans_brute_parity(spark):
     rows = [(i, t, "en") for i, t in texts.items()]
     spark.createDataFrame(rows, "doc_id long, text string, lang string") \
         .createOrReplaceTempView("documents")
-    out = spark.sql(textops.substr_dup_spans_sql("documents",
-                                                 textops.SPARK))
+    out = spark.sql(textops.substr_dup_spans_sql(textops.SPARK))
     got = sorted((r.crawl_id, r.span_start, r.span_end, r.span_tokens,
                   r.n_windows) for r in out.collect())
     assert got == expected
@@ -608,7 +606,7 @@ def test_substring_spans_window_is_doc_partitioned(spark):
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
         .createOrReplaceTempView("documents")
     plan = spark.sql(textops.substr_dup_spans_sql(
-        "documents", textops.SPARK))._jdf.queryExecution() \
+        textops.SPARK))._jdf.queryExecution() \
         .executedPlan().toString()
     assert "windowspecdefinition(crawl_id" in plan
     import re
@@ -632,8 +630,7 @@ def test_paragraph_dedup_keeper_semantics(spark):
     rows = [(i, t, "en") for i, t in texts.items()]
     spark.createDataFrame(rows, "doc_id long, text string, lang string") \
         .createOrReplaceTempView("documents")
-    out = spark.sql(textops.dedup_paragraph_sql("documents",
-                                                textops.SPARK))
+    out = spark.sql(textops.dedup_paragraph_sql(textops.SPARK))
     got = sorted((r.crawl_id, r.seg_idx, r.keeper_id, r.keeper_idx)
                  for r in out.collect())
     # doc 4's first segment == doc 1's first segment -> dropped, keeper
@@ -650,7 +647,7 @@ def test_url_canonicalize_rules(spark):
         .createOrReplaceTempView("documents")
     out = {r.doc_id: r.url_canon for r in
            spark.sql(textops.url_canonicalize_sql(
-               "documents", textops.SPARK)).collect()}
+               textops.SPARK)).collect()}
     # doc 0: https, WWW., Site0.Example, :443, /a/0/, no query
     assert out[0] == "https://site0.example/a/0"
     # doc 1: HTTPS scheme, site1, /a/1, ?id=1&utm_* -> id kept, #sec
@@ -699,7 +696,7 @@ def test_kmeans_matches_numpy_lloyd(spark):
 
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet") \
         .createOrReplaceTempView("embeddings")
-    out = spark.sql(simsearch.kmeans_sql("embeddings", simsearch.SPARK))
+    out = spark.sql(simsearch.kmeans_sql(simsearch.SPARK))
     got = {r.vec_id: r.cluster for r in out.collect()}
     expected = {int(i): int(a) for i, a in zip(ids, assign)}
     assert got == expected
@@ -724,7 +721,7 @@ def test_robots_longest_match_semantics(spark):
         .createOrReplaceTempView("documents")
     out = {r.doc_id: (r.allowed, r.matched_prefix) for r in
            spark.sql(textops.robots_filter_sql(
-               "documents", textops.SPARK)).collect()}
+               textops.SPARK)).collect()}
     assert out[3] == (0, "/a/")
     assert out[6] == (0, "/a/")
     assert out[46] == (1, "")
@@ -745,7 +742,7 @@ def test_sitemap_coverage_reconciliation(spark):
         .createOrReplaceTempView("documents")
     out = {r.host: r for r in
            spark.sql(textops.sitemap_coverage_sql(
-               "documents", textops.SPARK)).collect()}
+               textops.SPARK)).collect()}
 
     for h, crawled in ((7, {7, 17}), (24, {4, 14})):
         listed = [k for k in range(15 + h % 10) if (h + k) % 7 != 3]
@@ -790,7 +787,7 @@ def test_dsir_importance_selection_pressure(spark):
         .createOrReplaceTempView("documents")
     out = {r.doc_id: r for r in
            spark.sql(textops.dsir_importance_sql(
-               "documents", textops.SPARK)).collect()}
+               textops.SPARK)).collect()}
 
     assert len(out) == 12
     assert sum(r.kept for r in out.values()) == 3  # 12 // 4
@@ -803,7 +800,7 @@ def test_dsir_importance_selection_pressure(spark):
     # resume-stability: integer weights are identical on re-run
     out2 = {r.doc_id: r.w_nano for r in
             spark.sql(textops.dsir_importance_sql(
-                "documents", textops.SPARK)).collect()}
+                textops.SPARK)).collect()}
     assert out2 == {i: r.w_nano for i, r in out.items()}
 
 
@@ -829,7 +826,7 @@ def test_html_extract_byte_identical(spark):
         .createOrReplaceTempView("documents")
     out = {r.doc_id: r for r in
            spark.sql(textops.html_extract_sql(
-               "documents", textops.SPARK)).collect()}
+               textops.SPARK)).collect()}
     assert len(out) == len(texts)
     for i, t in texts.items():
         expected = t[:40] + "\n" + t[40:120] + "\n" + t[120:] + "\n"
@@ -854,7 +851,7 @@ def test_html_extract_strip_order_is_load_bearing(spark):
         .createOrReplaceTempView("documents")
     # rebuild the extracted text itself (not just its md5) by running
     # the stage chain with the final text exposed
-    html = textops.rich_html_sql("text", "doc_id")
+    html = textops.rich_html_sql("text")
     stages = textops.html_extract_stages(textops.SPARK)
     stage_sql = ",\n".join(f"{e} as {n}" for n, e in stages)
     row = spark.sql(f"""
@@ -883,7 +880,7 @@ def test_warc_ingest_record_arithmetic(spark):
                           "doc_id long, text string, lang string") \
         .createOrReplaceTempView("documents")
     r = spark.sql(textops.warc_ingest_sql(
-        "documents", textops.SPARK)).collect()[0]
+        textops.SPARK)).collect()[0]
     payload = f"<html><body><p>{text}</p></body></html>"
     http_block = ("HTTP/1.1 200 OK\r\n"
                   "Content-Type: text/html; charset=utf-8\r\n"
@@ -912,7 +909,7 @@ def test_warc_ingest_multirecord_files_lossless(spark):
     spark.createDataFrame(rows, "doc_id long, text string, lang string") \
         .createOrReplaceTempView("documents")
     out = spark.sql(textops.warc_ingest_sql(
-        "documents", textops.SPARK)).collect()
+        textops.SPARK)).collect()
     assert len(out) == n
     assert {r.url for r in out} == {
         f"https://site{i % 100}.example/p/{i}" for i in range(n)}
@@ -980,11 +977,11 @@ def test_cdx_offsets_address_the_real_blob(spark):
     spark.createDataFrame(rows, "doc_id long, text string, lang string") \
         .createOrReplaceTempView("documents")
     cdx = spark.sql(textops.cdx_index_sql(
-        "documents", textops.SPARK)).collect()
+        textops.SPARK)).collect()
     assert len(cdx) == 80
     # rebuild the blobs the same way warc_ingest does
     blobs = {r.file_id: r.blob for r in spark.sql(f"""
-        with {textops.warc_records_cte('documents')}
+        with {textops.warc_records_cte()}
         select file_id,
                array_join(transform(array_sort(collect_list(
                  struct(doc_id, rec))), x -> x.rec), '') as blob
@@ -1121,7 +1118,7 @@ def test_geojson_roundtrip_and_shoelace(spark):
     spark.read.parquet(f"{sf}/documents.parquet") \
         .createOrReplaceTempView("documents")
     out = {r.doc_id: r for r in spark.sql(
-        G.geojson_ingest_sql("documents", G.SPARK)).collect()}
+        G.geojson_ingest_sql(G.SPARK)).collect()}
     pts = {r.doc_id: r for r in
            points_from_documents(spark, sf, geotagged_only=False)
            .collect()}
@@ -1141,7 +1138,7 @@ def test_geojson_roundtrip_and_shoelace(spark):
     # the synthesized features are themselves valid JSON documents
     row = spark.sql(f"""
         with p as (select doc_id, 0 as _z from documents limit 1)
-        select {G.geojson_feature_sql('doc_id')} as f
+        select {G.geojson_feature_sql()} as f
         from (select doc_id,
                      cast(doc_id as bigint) * 0 + 1 as lon_mic,
                      2 as lat_mic from documents limit 3) t
@@ -1163,7 +1160,7 @@ def test_kml_coordinates_roundtrip_exactly(spark):
     sf = "/root/testdata/sf0.001"
     spark.read.parquet(f"{sf}/documents.parquet") \
         .createOrReplaceTempView("documents")
-    out = spark.sql(K.kml_ingest_sql("documents", K.SPARK)).collect()
+    out = spark.sql(K.kml_ingest_sql(K.SPARK)).collect()
     pts = {r.doc_id: r for r in
            points_from_documents(spark, sf, geotagged_only=False)
            .collect()}
@@ -1329,7 +1326,7 @@ def test_href_hosts_hand_derived(spark):
     values = ", ".join(f"('{src}', '{href}')"
                        for src, (href, _) in cases.items())
     sql = (f"with hr as (select * from (values {values})"
-           f" as t(src_host, href)),\n{href_host_ctes('hr')}\n"
+           f" as t(src_host, href)),\n{href_host_ctes()}\n"
            f"select src_host, dst_host from resolved")
     want = {src: dst for src, (_, dst) in cases.items()}
     assert {r.src_host: r.dst_host for r in spark.sql(sql).collect()} == want
