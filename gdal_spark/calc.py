@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gdal_spark.raster import TILE_DTYPE, TILE_SCHEMA
+from gdal_spark.raster import TILE_SCHEMA, decode_pixels, encode_tile
 
 # the numpy functions gdal_calc expressions conventionally use
 ALLOWED_FUNCS = (
@@ -93,13 +93,9 @@ def raster_calc(tiles: DataFrame, calc: str,
         for pdf in batches:
             res = []
             for _, row in pdf.iterrows():
-                bufs = {
-                    letter: np.frombuffer(row[f"_d_{letter}"],
-                                          dtype=TILE_DTYPE)
-                    for letter in letters
-                }
-                res.append(np.ascontiguousarray(
-                    np.asarray(kernel(bufs)).astype(TILE_DTYPE)).tobytes())
+                bufs = {letter: decode_pixels(row[f"_d_{letter}"])
+                        for letter in letters}
+                res.append(encode_tile(kernel(bufs)))
             yield pd.DataFrame({
                 "z": pdf["z"], "tx": pdf["tx"], "ty": pdf["ty"],
                 "band": 1, "gt": pdf["gt"], "data": res,

@@ -40,6 +40,23 @@ X_SHIFT = 29
 # ---------------------------------------------------------------------------
 
 
+def _lit(v: float) -> str:
+    """e0-suffixed double literal (a bare decimal literal is DECIMAL in
+    Spark SQL and would silently change the arithmetic)."""
+    r = repr(float(v))
+    return r if "e" in r or "E" in r else r + "e0"
+
+
+def _sum_fold_sql(e: str, engine: str) -> str:
+    """Left-to-right sum of the double array expression ``e``: one
+    association order, so Spark (``engine == "spark"``) and DuckDB sum
+    the same list to the same IEEE double."""
+    if engine == "spark":
+        return f"aggregate({e}, cast(0 as double), (s, v) -> s + v)"
+    return (f"list_reduce(list_concat([cast(0 as double)],"
+            f" {e}), (s, v) -> s + v)")
+
+
 def tile_x_floor_sql(lon: str, n: str) -> str:
     """Unclamped, unwrapped tile column of ``lon`` on an n-wide grid
     (``n`` is SQL: a literal or a column)."""

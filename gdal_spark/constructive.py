@@ -682,10 +682,10 @@ def _perimeter_rings(rings) -> float:
 
 
 def _st_perimeter(col: pd.Series) -> pd.Series:
-    from gdal_spark.stfuncs import _rings_of
+    from gdal_spark.wkb import polygon_rings
 
     return pd.Series([
-        np.nan if b is None else _perimeter_rings(_rings_of(b))
+        np.nan if b is None else _perimeter_rings(polygon_rings(b))
         for b in col], dtype="float64")
 
 

@@ -37,7 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gdal_spark.raster import TILE_PX
+from gdal_spark.raster import (TILE_PX, dem_elev_np, dem_elev_sql,
+                               halo_exchange, ms_case_index)
 
 # marching-squares case table: case idx (8·TL + 4·TR + 2·BR + 1·BL,
 # bit set = pixel above level) → iso-segments as edge-code pairs.
@@ -71,12 +72,9 @@ def _node_coords(n: np.ndarray, w: int,
     py = pix // w
     px = pix % w
 
-    def elev(x, y):
-        return ((x * x * 5 + y * y * 3 + x * y) % 211).astype(np.float64)
-
-    a = elev(px, py)
-    bh = elev(px + 1, py)
-    bv = elev(px, py + 1)
+    a = dem_elev_np(px, py).astype(np.float64)
+    bh = dem_elev_np(px + 1, py).astype(np.float64)
+    bv = dem_elev_np(px, py + 1).astype(np.float64)
     with np.errstate(divide="ignore", invalid="ignore"):
         frac_h = np.where(bh != a, (thr - a) / (bh - a), 0.0)
         frac_v = np.where(bv != a, (thr - a) / (bv - a), 0.0)
@@ -99,8 +97,23 @@ def _edge_nodes(code: int, cx: np.ndarray, cy: np.ndarray,
     return 2 * (cy * w + cx + 1) + 1    # right: vertical at (cx+1, cy)
 
 
+def _find(parent: dict[int, int], x: int) -> int:
+    """Union-find root of ``x`` (path halving); roots are min labels."""
+    while parent.setdefault(x, x) != x:
+        parent[x] = parent[parent[x]]
+        x = parent[x]
+    return x
+
+
+def _union(parent: dict[int, int], a: int, b: int) -> None:
+    ra, rb = _find(parent, a), _find(parent, b)
+    if ra != rb:
+        parent[max(ra, rb)] = min(ra, rb)
+
+
 def contour_segments(tiles: DataFrame, raster_px: int) -> DataFrame:
-    """Per-level iso-segments with tile-local component labels.
+    """Per-level iso-segments with tile-local component labels (a
+    halo_exchange kernel).
 
     Output rows (kind 0 = segment, kind 1 = seam link):
       kind 0: (li, na, nb, lroot)   — one marching-squares segment
@@ -111,43 +124,15 @@ def contour_segments(tiles: DataFrame, raster_px: int) -> DataFrame:
     """
     t = TILE_PX
     w = raster_px
-    n_tiles = raster_px // t
     span = 2 * w * w
     levels = list(LEVELS)
 
-    shifted = tiles.select(
-        "tx", "ty", "data",
-        F.explode(F.expr(
-            "transform(sequence(0, 8),"
-            " k -> struct(tx + k % 3 - 1 as htx, ty + k div 3 - 1 as hty))"
-        )).alias("h"),
-    ).select(F.col("h.htx").alias("htx"), F.col("h.hty").alias("hty"),
-             "tx", "ty", "data") \
-     .filter(f"htx >= 0 and htx < {n_tiles} and hty >= 0 and hty < {n_tiles}")
-
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        htx, hty = int(key[0]), int(key[1])
-        win = np.zeros((t + 2, t + 2), dtype=np.int64)
-        for _, row in pdf.iterrows():
-            buf = np.frombuffer(row["data"], dtype=np.int64).reshape(t, t)
-            dy = (int(row["ty"]) - hty) * t
-            dx = (int(row["tx"]) - htx) * t
-            ys = slice(max(0, 1 + dy), min(t + 2, 1 + dy + t))
-            xs = slice(max(0, 1 + dx), min(t + 2, 1 + dx + t))
-            win[ys, xs] = buf[ys.start - (1 + dy):ys.stop - (1 + dy),
-                              xs.start - (1 + dx):xs.stop - (1 + dx)]
-        gy, gx = np.mgrid[0:t, 0:t]
-        gx = gx + htx * t
-        gy = gy + hty * t
+    def kernel(win: np.ndarray, gx: np.ndarray,
+               gy: np.ndarray) -> pd.DataFrame:
         out_li, out_na, out_nb, out_lr, out_kind = [], [], [], [], []
         out_v, out_b = [], []
         for li, thr in enumerate(levels):
-            above = win > thr
-            tl = above[1:t + 1, 1:t + 1]
-            tr = above[1:t + 1, 2:t + 2]
-            br = above[2:t + 2, 2:t + 2]
-            bl = above[2:t + 2, 1:t + 1]
-            idx = 8 * tl + 4 * tr + 2 * br + 1 * bl
+            idx = ms_case_index(win, thr)
             valid = (gx < w - 1) & (gy < w - 1) & (idx != 0) & (idx != 15)
             nas, nbs = [], []
             for case, pairs in CASES.items():
@@ -164,17 +149,8 @@ def contour_segments(tiles: DataFrame, raster_px: int) -> DataFrame:
             nb = np.concatenate(nbs)
             # local union-find (root = min node id of the part)
             parent: dict[int, int] = {}
-
-            def find(x: int) -> int:
-                while parent.setdefault(x, x) != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
             for a, b in zip(na.tolist(), nb.tolist()):
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
+                _union(parent, a, b)
             off = li * span
             cxa, cya, bnda = _node_coords(na, w, thr)
             cxb, cyb, bndb = _node_coords(nb, w, thr)
@@ -186,7 +162,7 @@ def contour_segments(tiles: DataFrame, raster_px: int) -> DataFrame:
                 out_li.append(li)
                 out_na.append(a)
                 out_nb.append(b)
-                out_lr.append(off + find(a))
+                out_lr.append(off + _find(parent, a))
                 out_kind.append(0)
                 out_v.append(float(vs[j]))
                 out_b.append(int(bs[j]))
@@ -202,7 +178,7 @@ def contour_segments(tiles: DataFrame, raster_px: int) -> DataFrame:
                     out_li.append(li)
                     out_na.append(node)
                     out_nb.append(-1)
-                    out_lr.append(off + find(node))
+                    out_lr.append(off + _find(parent, node))
                     out_kind.append(1)
                     out_v.append(0.0)
                     out_b.append(0)
@@ -210,8 +186,7 @@ def contour_segments(tiles: DataFrame, raster_px: int) -> DataFrame:
                              "lroot": out_lr, "kind": out_kind,
                              "v": out_v, "b": out_b})
 
-    return shifted.groupBy("htx", "hty").applyInPandas(
-        assemble, _SEG_SCHEMA)
+    return halo_exchange(tiles, raster_px, kernel, _SEG_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -294,18 +269,9 @@ def _labeled_segments(tiles: DataFrame, raster_px: int) -> DataFrame:
     n_edges = edges.count()
     if n_edges <= DRIVER_MERGE_MAX:
         parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
         for la_, lb_ in edges.collect():
-            ra, rb = find(la_), find(lb_)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        rows = [(l, find(l)) for l in parent]
+            _union(parent, la_, lb_)
+        rows = [(l, _find(parent, l)) for l in parent]
         sub = tiles.sparkSession.createDataFrame(
             rows or [(int(-1), int(-1))], "lbl long, comp long")
     else:
@@ -342,31 +308,27 @@ def contour_lines(tiles: DataFrame,
     )
 
 
-def contour_lines_oracle_sql() -> str:
-    """DuckDB ground truth: the same marching-squares case table as a
-    VALUES relation, flat recursive-CTE min-label components over the
-    crossing-node graph, and the identical sorted-fold length sum."""
-    w = CONTOUR_LINES_PX
-    t_expr = _thr_expr()
+def _nid_sql(code: str, w: int) -> str:
+    """Global crossing-node id (_edge_nodes) of edge ``code`` of the cell
+    with top-left (x, y)."""
+    return (f"(case {code} when 0 then 2 * (y * {w} + x)"
+            f" when 1 then 2 * ((y + 1) * {w} + x)"
+            f" when 2 then 2 * (y * {w} + x) + 1"
+            f" else 2 * (y * {w} + x + 1) + 1 end)")
+
+
+def _segment_graph_ctes(w: int) -> str:
+    """The DuckDB CTEs both contour oracles start from: the levels ``lv``,
+    the case table ``m``, per-cell case indices ``c``, the iso-segments
+    ``s2`` (li, na, nb), their node set and symmetric edges, and the
+    recursive min-label propagation ``lbl`` (li, node, l)."""
     lv_rows = ", ".join(f"({li}, {thr!r}e0)"
                         for li, thr in enumerate(LEVELS))
     m_rows = ", ".join(f"({ci}, {ea}, {eb})"
                        for ci, pairs in CASES.items()
                        for ea, eb in pairs)
-    v, bnd = _seg_exprs(w)
-
-    def elev(xx: str, yy: str) -> str:
-        return (f"((({xx}) * ({xx}) * 5 + ({yy}) * ({yy}) * 3"
-                f" + ({xx}) * ({yy})) % 211)")
-
-    def nid(code: str) -> str:
-        return (f"(case {code} when 0 then 2 * (y * {w} + x)"
-                f" when 1 then 2 * ((y + 1) * {w} + x)"
-                f" when 2 then 2 * (y * {w} + x) + 1"
-                f" else 2 * (y * {w} + x + 1) + 1 end)")
-
-    return f"""
-with recursive
+    elev = dem_elev_sql
+    return f"""with recursive
 lv(li, t) as (select * from (values {lv_rows}) v(li, t)),
 m(ci, ea, eb) as (select * from (values {m_rows}) v(ci, ea, eb)),
 g as (
@@ -382,7 +344,7 @@ c as (
   from g cross join lv
 ),
 s2 as (
-  select c.li, {nid("m.ea")} as na, {nid("m.eb")} as nb
+  select c.li, {_nid_sql("m.ea", w)} as na, {_nid_sql("m.eb", w)} as nb
   from c join m on m.ci = c.ci
 ),
 nodes as (
@@ -399,7 +361,19 @@ lbl(li, node, l) as (
   select es.li, es.v, lbl.l
   from lbl join esym es on es.li = lbl.li and es.u = lbl.node
   where lbl.l < es.v
-),
+),"""
+
+
+def contour_lines_oracle_sql() -> str:
+    """DuckDB ground truth: the same marching-squares case table as a
+    VALUES relation, flat recursive-CTE min-label components over the
+    crossing-node graph, and the identical sorted-fold length sum."""
+    w = CONTOUR_LINES_PX
+    t_expr = _thr_expr()
+    v, bnd = _seg_exprs(w)
+
+    return f"""
+{_segment_graph_ctes(w)}
 fin as (select li, node, min(l) as comp from lbl group by li, node),
 sb as (
   select s2.li as li, f.comp as comp, s2.na as na, s2.nb as nb
@@ -527,59 +501,11 @@ def contour_linestrings_oracle_sql() -> str:
     micro-unit expression text."""
     w = CONTOUR_LINES_PX
     t_expr = _thr_expr()
-    lv_rows = ", ".join(f"({li}, {thr!r}e0)"
-                        for li, thr in enumerate(LEVELS))
-    m_rows = ", ".join(f"({ci}, {ea}, {eb})"
-                       for ci, pairs in CASES.items()
-                       for ea, eb in pairs)
     v, bnd = _seg_exprs(w)
     cxw, cyw, _b = _node_xy("cur", w, "t")
 
-    def elev(xx: str, yy: str) -> str:
-        return (f"((({xx}) * ({xx}) * 5 + ({yy}) * ({yy}) * 3"
-                f" + ({xx}) * ({yy})) % 211)")
-
-    def nid(code: str) -> str:
-        return (f"(case {code} when 0 then 2 * (y * {w} + x)"
-                f" when 1 then 2 * ((y + 1) * {w} + x)"
-                f" when 2 then 2 * (y * {w} + x) + 1"
-                f" else 2 * (y * {w} + x + 1) + 1 end)")
-
     return f"""
-with recursive
-lv(li, t) as (select * from (values {lv_rows}) v(li, t)),
-m(ci, ea, eb) as (select * from (values {m_rows}) v(ci, ea, eb)),
-g as (
-  select a.range as x, b.range as y
-  from range(0, {w - 1}) a cross join range(0, {w - 1}) b
-),
-c as (
-  select li, t, x, y,
-         8 * (case when {elev("x", "y")} > t then 1 else 0 end)
-       + 4 * (case when {elev("(x + 1)", "y")} > t then 1 else 0 end)
-       + 2 * (case when {elev("(x + 1)", "(y + 1)")} > t then 1 else 0 end)
-       + 1 * (case when {elev("x", "(y + 1)")} > t then 1 else 0 end) as ci
-  from g cross join lv
-),
-s2 as (
-  select c.li, {nid("m.ea")} as na, {nid("m.eb")} as nb
-  from c join m on m.ci = c.ci
-),
-nodes as (
-  select distinct li, na as node from s2
-  union select distinct li, nb from s2
-),
-esym as (
-  select li, na as u, nb as v from s2
-  union select li, nb, na from s2
-),
-lbl(li, node, l) as (
-  select li, node, node from nodes
-  union
-  select es.li, es.v, lbl.l
-  from lbl join esym es on es.li = lbl.li and es.u = lbl.node
-  where lbl.l < es.v
-),
+{_segment_graph_ctes(w)}
 fin as materialized (select li, node, min(l) as comp
                      from lbl group by li, node),
 -- materialized: DuckDB inlines plain CTEs, so the recursive walk would

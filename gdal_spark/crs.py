@@ -526,6 +526,15 @@ def ps_sql_stages(lon: str, lat: str,
 # ---------------------------------------------------------------------------
 
 
+def _authalic_q(phi: float, e: float) -> float:
+    """Snyder's q(φ) (eq. 3-12) on an ellipsoid of eccentricity ``e``."""
+    e2 = e * e
+    s = math.sin(phi)
+    return (1.0 - e2) * (
+        s / (1.0 - e2 * s * s)
+        - (1.0 / (2.0 * e)) * math.log((1.0 - e * s) / (1.0 + e * s)))
+
+
 class AeaParams:
     """Precomputed 2SP constants for one Albers Equal Area definition."""
 
@@ -543,16 +552,11 @@ class AeaParams:
             return math.cos(phi) / math.sqrt(
                 1.0 - e2 * math.sin(phi) ** 2)
 
-        def q(phi):
-            s = math.sin(phi)
-            return (1.0 - e2) * (
-                s / (1.0 - e2 * s * s)
-                - (1.0 / (2.0 * e)) * math.log((1.0 - e * s) / (1.0 + e * s)))
-
         p1, p2, p0 = (math.radians(v) for v in (phi1_deg, phi2_deg, phi0_deg))
-        self.n = (m(p1) ** 2 - m(p2) ** 2) / (q(p2) - q(p1))
-        self.c = m(p1) ** 2 + self.n * q(p1)
-        self.rho0 = a * math.sqrt(self.c - self.n * q(p0)) / self.n
+        q1, q2, q0 = (_authalic_q(p, e) for p in (p1, p2, p0))
+        self.n = (m(p1) ** 2 - m(p2) ** 2) / (q2 - q1)
+        self.c = m(p1) ** 2 + self.n * q1
+        self.rho0 = a * math.sqrt(self.c - self.n * q0) / self.n
 
 
 AEA_3577 = AeaParams(phi1_deg=-18.0, phi2_deg=-36.0, phi0_deg=0.0,
@@ -658,15 +662,9 @@ class LaeaParams:
         self.e = e
         e2 = e * e
 
-        def q(phi):
-            s = math.sin(phi)
-            return (1.0 - e2) * (
-                s / (1.0 - e2 * s * s)
-                - (1.0 / (2.0 * e)) * math.log((1.0 - e * s) / (1.0 + e * s)))
-
         p0 = math.radians(phi0_deg)
-        self.qp = q(math.pi / 2.0)
-        self.beta0 = math.asin(q(p0) / self.qp)
+        self.qp = _authalic_q(math.pi / 2.0, e)
+        self.beta0 = math.asin(_authalic_q(p0, e) / self.qp)
         self.rq = a * math.sqrt(self.qp / 2.0)
         m0 = math.cos(p0) / math.sqrt(1.0 - e2 * math.sin(p0) ** 2)
         self.d = a * m0 / (self.rq * math.cos(self.beta0))

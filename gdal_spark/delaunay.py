@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from gdal_spark.cells import _lit
+
 SPARK = "spark"
 DUCKDB = "duckdb"
 
@@ -38,11 +40,6 @@ LON0, LAT0 = -176.2, -61.2
 STEP = 0.06
 NX = NY = 40
 N_SCATTER = 30
-
-
-def _lit(v: float) -> str:
-    r = repr(float(v))
-    return r if "e" in r or "E" in r else r + "e0"
 
 
 def scatter_points() -> np.ndarray:

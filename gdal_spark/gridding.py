@@ -24,6 +24,7 @@ engines, so Spark and the DuckDB oracle produce identical IEEE doubles.
 
 from __future__ import annotations
 
+from gdal_spark.cells import _lit, _sum_fold_sql
 from gdal_spark.pages import points_oracle_sql, read_documents
 
 SPARK = "spark"
@@ -35,13 +36,6 @@ GRID_LAT0 = -61.2
 GRID_STEP = 0.06
 GRID_N = 40
 RADIUS = 0.15
-
-
-def _lit(v: float) -> str:
-    """e0-suffixed double literal (a bare decimal literal is DECIMAL in
-    Spark SQL and would silently change the arithmetic)."""
-    r = repr(float(v))
-    return r if "e" in r or "E" in r else r + "e0"
 
 
 def _grid_candidates(engine: str) -> str:
@@ -116,9 +110,6 @@ def grid_kernels_sql(engine: str) -> str:
     if engine == SPARK:
         lst, srt, trn = "collect_list", "array_sort", "transform"
 
-        def fold(e: str) -> str:
-            return f"aggregate({e}, cast(0 as double), (s, v) -> s + v)"
-
         # did (unique per candidate) leads the struct, so the sort order
         # is the doc_id order regardless of the trailing fields
         mk = ("struct(cast(doc_id as double) as did, v / d2 as num_t,"
@@ -127,15 +118,12 @@ def grid_kernels_sql(engine: str) -> str:
                 "struct(d2, doc_id, v))), 1)")
     else:
         lst, srt, trn = "list", "list_sort", "list_transform"
-
-        def fold(e: str) -> str:
-            return (f"list_reduce(list_concat([cast(0 as double)],"
-                    f" {e}), (s, v) -> s + v)")
-
         mk = ("{'did': cast(doc_id as double), 'num_t': v / d2,"
               " 'den_t': 1.0 / d2, 'vv': v}")
         pick = ("list_extract(list_sort(list("
                 "{'d2': d2, 'doc_id': doc_id, 'v': v})), 1)")
+    num, den, vv = (_sum_fold_sql(f"{trn}(arr, a -> a.{f})", engine)
+                    for f in ("num_t", "den_t", "vv"))
     return f"""
 with {_grid_candidates(engine)},
 packed as (
@@ -147,9 +135,9 @@ packed as (
   from c group by i, j
 )
 select i, j, n_pts,
-       {fold(f"{trn}(arr, a -> a.num_t)")}
-     / {fold(f"{trn}(arr, a -> a.den_t)")} as idw_value,
-       {fold(f"{trn}(arr, a -> a.vv)")} / n_pts as avg_value,
+       {num}
+     / {den} as idw_value,
+       {vv} / n_pts as avg_value,
        best.doc_id as nn_doc_id, best.v as nn_value,
        sqrt(best.d2) as nn_dist,
        sqrt(min_d2) as min_dist, sqrt(max_d2) as max_dist, value_range

@@ -39,6 +39,7 @@ from __future__ import annotations
 import numpy as np
 
 from gdal_spark import geom as G
+from gdal_spark.cells import _sum_fold_sql
 
 SPARK = "spark"
 DUCKDB = "duckdb"
@@ -179,10 +180,6 @@ def overlay_areas_sql(defs_a: list[dict], defs_b: list[dict],
         pt_struct = "struct(x, y)"
         ang_struct = ("struct(atan2(p.y - cy, p.x - cx) as ang,"
                       " p.x as x, p.y as y)")
-
-        def fold_sum(list_expr: str) -> str:
-            return (f"aggregate({list_expr}, cast(0 as double),"
-                    f" (s, v) -> s + v)")
     else:
         lst, srt, trn, elem = ("list", "list_sort", "list_transform",
                                "list_extract")
@@ -191,9 +188,9 @@ def overlay_areas_sql(defs_a: list[dict], defs_b: list[dict],
         ang_struct = ("{'ang': atan2(p.y - cy, p.x - cx),"
                       " 'x': p.x, 'y': p.y}")
 
-        def fold_sum(list_expr: str) -> str:
-            return (f"list_reduce(list_concat([cast(0 as double)],"
-                    f" {list_expr}), (s, v) -> s + v)")
+    def fold_sum(list_expr: str) -> str:
+        return _sum_fold_sql(list_expr, engine)
+
     # candidate points: A-verts in B ∪ B-verts in A ∪ edge crossings
     def vert_in(vtab: str, valias: str, etab: str, ealias: str,
                 vside: str, eside: str) -> str:

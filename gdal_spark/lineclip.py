@@ -30,15 +30,11 @@ from __future__ import annotations
 import numpy as np
 
 from gdal_spark import geom as G
+from gdal_spark.cells import _lit
 from gdal_spark.pages import points_oracle_sql, read_documents
 
 SPARK = "spark"
 DUCKDB = "duckdb"
-
-
-def _lit(v: float) -> str:
-    r = repr(float(v))
-    return r if "e" in r or "E" in r else r + "e0"
 
 
 def ccw_edge_values_sql(defs: list[dict]) -> str:

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gdal_spark.raster import TILE_DTYPE, TILE_PX, TILE_PX_LOG2
+from gdal_spark.raster import TILE_PX, TILE_PX_LOG2, decode_tile
 
 # Round cap of propagate_labels (pointer jumping converges in
 # O(log diameter) rounds)
@@ -112,8 +112,7 @@ def tile_components_values(tiles: DataFrame, grid_w: int,
             out_parts = []
             out_borders = []
             for _, row in pdf.iterrows():
-                buf = np.frombuffer(row["data"], dtype=TILE_DTYPE) \
-                    .reshape(t, t).astype(np.int64)
+                buf = decode_tile(row["data"]).astype(np.int64)
                 ty0 = int(row["ty"]) * t
                 tx0 = int(row["tx"]) * t
                 gy, gx = np.mgrid[0:t, 0:t]
@@ -295,8 +294,7 @@ def tile_components(tiles: DataFrame,
             out_parts = []
             out_borders = []
             for _, row in pdf.iterrows():
-                buf = np.frombuffer(row["data"],
-                                    dtype=TILE_DTYPE).reshape(t, t)
+                buf = decode_tile(row["data"])
                 mask = buf != 0
                 if not mask.any():
                     continue
@@ -731,8 +729,7 @@ def near_pixels(tiles: DataFrame, threshold: float) -> DataFrame:
         for pdf in batches:
             outs = []
             for _, row in pdf.iterrows():
-                buf = np.frombuffer(row["data"], dtype=TILE_DTYPE) \
-                    .reshape(t, t)
+                buf = decode_tile(row["data"])
                 yy, xx = np.nonzero(buf <= threshold)
                 if len(xx):
                     outs.append(pd.DataFrame({

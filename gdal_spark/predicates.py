@@ -185,15 +185,6 @@ def line_crosses_polygon(line: np.ndarray, rings) -> bool:
 # ---------------------------------------------------------------------------
 
 
-def _rings_of(blob) -> list[np.ndarray]:
-    g = W.loads(bytes(blob))
-    if g["type"] == "Polygon":
-        return g["coords"]
-    if g["type"] == "MultiPolygon":
-        return [r for poly in g["coords"] for r in poly]
-    raise ValueError(f"not a polygon: {g['type']}")
-
-
 def _pair_kernel(name: str):
     def kern(a: pd.Series, b: pd.Series) -> pd.Series:
         out = []
@@ -201,7 +192,8 @@ def _pair_kernel(name: str):
             if ba is None or bb is None:
                 out.append(None)
                 continue
-            out.append(pair_predicates(_rings_of(ba), _rings_of(bb))[name])
+            out.append(pair_predicates(W.polygon_rings(ba),
+                                       W.polygon_rings(bb))[name])
         return pd.Series(out, dtype="boolean")
     return kern
 
@@ -209,7 +201,8 @@ def _pair_kernel(name: str):
 def _st_relate_flags(a: pd.Series, b: pd.Series) -> pd.DataFrame:
     rows = []
     for ba, bb in zip(a, b):
-        rows.append(pair_predicates(_rings_of(ba), _rings_of(bb)))
+        rows.append(pair_predicates(W.polygon_rings(ba),
+                                    W.polygon_rings(bb)))
     return pd.DataFrame(rows, columns=list(PREDICATE_COLS))
 
 
@@ -219,7 +212,7 @@ def _st_crosses(a: pd.Series, b: pd.Series) -> pd.Series:
     out = []
     for ba, bb in zip(a, b):
         ga = W.loads(bytes(ba))
-        rb = _rings_of(bb)
+        rb = W.polygon_rings(bb)
         if ga["type"] == "LineString":
             out.append(line_crosses_polygon(ga["coords"], rb))
         else:

@@ -25,16 +25,17 @@ from gdal_spark.pages import (points_from_documents, points_oracle_sql,
                               read_documents)
 from gdal_spark.raster import (DEM_ELEV_SQL, checksum_oracle_sql,
                                color_relief_oracle_sql, contour_cells,
-                               dem_elev_sql, dst_grid_sql, fillnodata_sql,
-                               gather_dem_oracle_sql, gpixel_exprs,
-                               halo_gradient, hillshade_aspect_sql,
-                               histogram, histogram_oracle_sql,
-                               interp_dem_oracle_sql,
+                               dem_elev_np, dem_elev_sql, dst_grid_sql,
+                               fillnodata_sql, gather_dem_oracle_sql,
+                               gpixel_exprs, halo_gradient,
+                               hillshade_aspect_sql, histogram,
+                               histogram_oracle_sql, interp_dem_oracle_sql,
                                overview_checksum_oracle_sql, overview_sum,
                                raster_stats, raster_stats_oracle_sql,
                                rasterize_points, sample_at_points,
-                               sample_interp, synth_dem_tiles,
-                               tile_checksums, tile_geotransform,
+                               sample_interp, synth_band_tiles,
+                               synth_dem_tiles, tile_checksums,
+                               tile_geotransform,
                                tri_tpi_roughness_oracle_sql, warp_average,
                                warp_average_oracle_sql, warp_interp,
                                warp_nearest, warp_order_stats_oracle_sql,
@@ -503,42 +504,26 @@ _CMP_DELTA_SQL = """case band
 def _synth_compare_tiles(spark: SparkSession, which: str) -> DataFrame:
     """Golden or perturbed-new 3-band tile table for the gdalcompare
     fixture (numpy transcription of _CMP_GVAL_SQL/_CMP_DELTA_SQL)."""
-    from gdal_spark.raster import TILE_PX, TILE_SCHEMA, tile_geotransform
     import numpy as np
-    import pandas as pd
 
-    n_tiles = _CMP_PX // TILE_PX
-    keys = spark.range(n_tiles * n_tiles * 3).select(
-        (F.col("id") % n_tiles).alias("_tx"),
-        ((F.col("id") / n_tiles).cast("long") % n_tiles).alias("_ty"),
-        ((F.col("id") / (n_tiles * n_tiles)).cast("long") + 1)
-        .cast("int").alias("_band"))
     perturbed = which == "new"
 
-    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, band = int(key[0]), int(key[1]), int(key[2])
-        gy, gx = np.mgrid[0:TILE_PX, 0:TILE_PX]
-        gx = (gx + tx * TILE_PX).astype(np.int64)
-        gy = (gy + ty * TILE_PX).astype(np.int64)
-        if band == 1:
-            val = (gx * gx * 5 + gy * gy * 3 + gx * gy) % 211
-        elif band == 2:
-            val = (gx * 7 + gy * gy * 11 + 13) % 199
-            if perturbed:
-                val = val + np.where((gx * 13 + gy * 7) % 997 == 0,
-                                     1 + (gx + gy) % 5, 0)
-        else:
-            val = (gx * 3 + gy * 5) % 251
-            if perturbed:
-                val = val + np.where((gx == gy) & (gx % 37 == 0), 100, 0)
-        return pd.DataFrame({
-            "z": [0], "tx": [tx], "ty": [ty], "band": [band],
-            "gt": [tile_geotransform(tx, ty, 0)],
-            "data": [val.astype(np.int64).tobytes()],
-        })
+    def band2(gx, gy):
+        val = (gx * 7 + gy * gy * 11 + 13) % 199
+        if perturbed:
+            val = val + np.where((gx * 13 + gy * 7) % 997 == 0,
+                                 1 + (gx + gy) % 5, 0)
+        return val
 
-    return keys.groupBy("_tx", "_ty", "_band").applyInPandas(
-        build, TILE_SCHEMA)
+    def band3(gx, gy):
+        val = (gx * 3 + gy * 5) % 251
+        if perturbed:
+            val = val + np.where((gx == gy) & (gx % 37 == 0), 100, 0)
+        return val
+
+    b1, b2, b3 = (synth_band_tiles(spark, f, _CMP_PX, band)
+                  for band, f in ((1, dem_elev_np), (2, band2), (3, band3)))
+    return b1.unionByName(b2).unionByName(b3)
 
 
 def q_raster_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1357,6 +1342,21 @@ def q_contour_linestrings(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTOUR_BANDS = [53, 106, 159]
 
 
+def _contour_bands(buf):
+    """Band index of each value: the count of CONTOUR_BANDS it reaches."""
+    import numpy as np
+
+    out = np.zeros_like(buf, dtype=np.int64)
+    for thr in CONTOUR_BANDS:
+        out += (buf >= thr).astype(np.int64)
+    return out
+
+
+def _banded_dem_np(gx, gy):
+    """The banded DEM of the contour-polygon fixtures at (gx, gy)."""
+    return _contour_bands(dem_elev_np(gx, gy))
+
+
 def q_contour_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     """gdal_contour -p (iso-band polygons, apps/gdal_contour_lib /
     alg/contour.cpp polygon writer): classify the DEM into threshold
@@ -1370,18 +1370,10 @@ def q_contour_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _ = sf_dir
 
-    def band_kernel(buf):
-        import numpy as np
-
-        out = np.zeros_like(buf, dtype=np.int64)
-        for thr in CONTOUR_BANDS:
-            out += (buf >= thr).astype(np.int64)
-        return out
-
     from gdal_spark.raster import map_algebra
 
     tiles = map_algebra(synth_dem_tiles(spark, CONTOUR_LINES_PX),
-                        band_kernel)
+                        _contour_bands)
     return polygonize_by_value(tiles, CONTOUR_LINES_PX)
 
 
@@ -1398,16 +1390,8 @@ def q_polygonize_components8(spark: SparkSession,
 
     _ = sf_dir
 
-    def band_kernel(buf):
-        import numpy as np
-
-        out = np.zeros_like(buf, dtype=np.int64)
-        for thr in CONTOUR_BANDS:
-            out += (buf >= thr).astype(np.int64)
-        return out
-
     tiles = map_algebra(synth_dem_tiles(spark, CONTOUR_LINES_PX),
-                        band_kernel)
+                        _contour_bands)
     return polygonize_by_value(tiles, CONTOUR_LINES_PX, connect8=True)
 
 
@@ -1415,32 +1399,14 @@ def _contour_polygons_oracle() -> str:
     from gdal_spark.contour import CONTOUR_LINES_PX
     from gdal_spark.polygonize import polygonize_values_oracle_sql
 
-    def band_np(gx, gy):
-        import numpy as np
-
-        v = (gx * gx * 5 + gy * gy * 3 + gx * gy) % 211  # DEM_ELEV_SQL
-        out = np.zeros_like(v, dtype=np.int64)
-        for thr in CONTOUR_BANDS:
-            out += (v >= thr).astype(np.int64)
-        return out
-
-    return polygonize_values_oracle_sql(CONTOUR_LINES_PX, band_np)
+    return polygonize_values_oracle_sql(CONTOUR_LINES_PX, _banded_dem_np)
 
 
 def _polygonize8_oracle() -> str:
     from gdal_spark.contour import CONTOUR_LINES_PX
     from gdal_spark.polygonize import polygonize_values_oracle_sql
 
-    def band_np(gx, gy):
-        import numpy as np
-
-        v = (gx * gx * 5 + gy * gy * 3 + gx * gy) % 211  # DEM_ELEV_SQL
-        out = np.zeros_like(v, dtype=np.int64)
-        for thr in CONTOUR_BANDS:
-            out += (v >= thr).astype(np.int64)
-        return out
-
-    return polygonize_values_oracle_sql(CONTOUR_LINES_PX, band_np,
+    return polygonize_values_oracle_sql(CONTOUR_LINES_PX, _banded_dem_np,
                                         connect8=True)
 
 
@@ -2053,16 +2019,12 @@ select *, 'calc' as op from (
     "raster_viewshed_exact": __import__(
         "gdal_spark.viewshed_exact",
         fromlist=["viewshed_exact_oracle_sql"]
-    ).viewshed_exact_oracle_sql(
-        DEM_PX, _VS_OBSERVERS,
-        lambda gx, gy: (gx * gx * 5 + gy * gy * 3 + gx * gy) % 211),
+    ).viewshed_exact_oracle_sql(DEM_PX, _VS_OBSERVERS, dem_elev_np),
     "raster_viewshed_exact_md": __import__(
         "gdal_spark.viewshed_exact",
         fromlist=["viewshed_exact_oracle_sql"]
-    ).viewshed_exact_oracle_sql(
-        DEM_PX, _VS_OBSERVERS,
-        lambda gx, gy: (gx * gx * 5 + gy * gy * 3 + gx * gy) % 211,
-        max_distance_px=_VS_MD),
+    ).viewshed_exact_oracle_sql(DEM_PX, _VS_OBSERVERS, dem_elev_np,
+                                max_distance_px=_VS_MD),
     "tile_pyramid_z5_z2": " union all ".join(
         f"select * from ({checksum_oracle_sql(_PTS, z)}) p{z}"
         for z in (RASTER_Z, RASTER_Z - 1, RASTER_Z - 2, RASTER_Z - 3)),

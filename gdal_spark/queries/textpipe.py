@@ -1411,11 +1411,14 @@ from ({_html_src_sql()}) p
 """
 
 
-def _multimodal_frames_oracle() -> str:
-    def hx(start: int, width: int) -> str:
-        return (f"cast(('0x' || substr(md5(html_str), {start}, {width}))"
-                f" as bigint)")
+def _md5_hex_sql(start: int, width: int) -> str:
+    """The integer of ``width`` hex digits of md5(html_str) from ``start``."""
+    return (f"cast(('0x' || substr(md5(html_str), {start}, {width}))"
+            f" as bigint)")
 
+
+def _multimodal_frames_oracle() -> str:
+    hx = _md5_hex_sql
     return f"""
 select url, f.range as frame_idx,
        (({hx(7, 4)} + 37 * f.range) % 1000) / 1000.0 as frame_feat
@@ -1426,10 +1429,7 @@ where f.range < 1 + ({hx(5, 2)} % 8) and f.range % {FRAME_STEP} = 0
 
 
 def _multimodal_decode_oracle() -> str:
-    def hx(start: int, width: int) -> str:
-        return (f"cast(('0x' || substr(md5(html_str), {start}, {width}))"
-                f" as bigint)")
-
+    hx = _md5_hex_sql
     return f"""
 select url, cast(strlen(html_str) as bigint) as n_bytes,
        16 + {hx(1, 2)} as width,

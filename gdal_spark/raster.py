@@ -22,17 +22,22 @@ Operators:
   (gcore/overview.cpp chunk-resampler semantics, SUM variant): a
   groupBy(parent tile) over 4 children.
 - sample_at_points  — InterpolateAtPoint nearest
-  (gcore/gdalrasterband.cpp:9963): join points → tiles on tile id, numpy
-  gather from the buffer.
+  (gcore/gdalrasterband.cpp:9963): the points' pixels are fetched through
+  gather_pixels (one buffer decode per tile), then left-joined back to
+  the queries (0 where no tile or no valid coordinate).
 - resampling, one core per direction (gdalwarp -r, alg/gdalwarpkernel.cpp):
   dst→src taps — sample_interp / warp_interp with ``kernel`` ∈
   INTERP_KERNELS (bilinear, cubic, cubicspline, lanczos) and the nearest
   warps, all fetching values through gather_pixels; src→dst areas —
   _area_partials behind warp_average (mean/sum/rms), warp_mode,
   warp_minmax and warp_quantile.
-- halo_exchange + slope gradient — the 3×3 focal pattern of gdaldem
-  (apps/gdaldem_lib.cpp:767-772, Horn 1981): every tile ships its buffer
-  to its 8 neighbors' assembly groups; kernels see tile_px+2 halos.
+- halo_exchange — the 3×3 focal pattern of gdaldem (apps/gdaldem_lib.cpp):
+  every tile ships its buffer to its own and its 8 neighbors' assembly
+  groups, each group zero-fills a (TILE_PX+2)² window and hands it to a
+  kernel — the Horn/ZT gradient (halo_gradient, :767-785), TRI/TPI/
+  roughness and the marching-squares contour cells.
+- tile codec — decode_tile / decode_pixels / encode_tile / tile_row, next
+  to TILE_SCHEMA: no other module reads or writes the ``data`` layout.
 
 Scale: pixel→tile assignment and all aggregations are Catalyst;
 buffers only exist inside Arrow batches, one tile per row (a 10^12-page
@@ -51,7 +56,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gdal_spark.cells import tile_x_sql, tile_y_sql
+from gdal_spark.cells import _lit, _sum_fold_sql, tile_x_sql, tile_y_sql
 
 CHECKSUM_PRIMES = np.array([7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43],
                            dtype=np.int64)
@@ -61,7 +66,30 @@ EARTH_CIRCUM_M = 2.0 * math.pi * 6378137.0
 
 TILE_SCHEMA = ("z int, tx long, ty long, band int, gt array<double>, "
                "data binary")
+TILE_COLUMNS = ["z", "tx", "ty", "band", "gt", "data"]
 TILE_DTYPE = np.int64
+
+
+def decode_pixels(data: bytes) -> np.ndarray:
+    """A ``data`` buffer as a flat read-only TILE_DTYPE view (no copy),
+    for the reductions that take a buffer of any length."""
+    return np.frombuffer(data, dtype=TILE_DTYPE)
+
+
+def decode_tile(data: bytes) -> np.ndarray:
+    """A tile's ``data`` as a read-only TILE_PX × TILE_PX view (no copy)."""
+    return decode_pixels(data).reshape(TILE_PX, TILE_PX)
+
+
+def encode_tile(buf: np.ndarray) -> bytes:
+    """The ``data`` bytes of a pixel array, cast to TILE_DTYPE."""
+    return np.asarray(buf, dtype=TILE_DTYPE).tobytes()
+
+
+def tile_row(z: int, tx: int, ty: int, band: int, buf: np.ndarray) -> tuple:
+    """One TILE_SCHEMA row (columns TILE_COLUMNS): the tile key, its
+    geotransform and the encoded ``buf``."""
+    return z, tx, ty, band, tile_geotransform(tx, ty, z), encode_tile(buf)
 
 
 def gpixel_exprs(z: int) -> tuple[str, str]:
@@ -105,11 +133,8 @@ def tiles_from_pixel_counts(px: DataFrame, z: int) -> DataFrame:
         py = (pdf["gy"].to_numpy() - ty * tile_px).astype(np.int64)
         pxx = (pdf["gx"].to_numpy() - tx * tile_px).astype(np.int64)
         buf[py, pxx] = pdf["cnt"].to_numpy()
-        return pd.DataFrame({
-            "z": [z], "tx": [tx], "ty": [ty], "band": [1],
-            "gt": [tile_geotransform(tx, ty, z)],
-            "data": [buf.tobytes()],
-        })
+        return pd.DataFrame([tile_row(z, tx, ty, 1, buf)],
+                            columns=TILE_COLUMNS)
 
     keyed = px.withColumns({"_tx": F.expr(f"gx div {tile_px}"),
                             "_ty": F.expr(f"gy div {tile_px}")})
@@ -136,7 +161,7 @@ def tile_checksums(tiles: DataFrame) -> DataFrame:
             sums = []
             nnz = []
             for raw in pdf["data"]:
-                buf = np.frombuffer(raw, dtype=TILE_DTYPE)
+                buf = decode_pixels(raw)
                 sums.append(checksum_np(buf))
                 nnz.append(int(np.count_nonzero(buf)))
             yield pd.DataFrame({
@@ -174,10 +199,10 @@ def compare_tile_bands(golden: DataFrame, new: DataFrame) -> DataFrame:
             raise ValueError(
                 f"duplicate tile rows for (band, tx, ty) = {tuple(key)}: "
                 f"{len(gpdf)} golden, {len(npdf)} new")
-        gbuf = (np.frombuffer(gpdf["data"].iloc[0], dtype=TILE_DTYPE)
-                .astype(np.int64) if len(gpdf) else None)
-        nbuf = (np.frombuffer(npdf["data"].iloc[0], dtype=TILE_DTYPE)
-                .astype(np.int64) if len(npdf) else None)
+        gbuf = (decode_pixels(gpdf["data"].iloc[0]).astype(np.int64)
+                if len(gpdf) else None)
+        nbuf = (decode_pixels(npdf["data"].iloc[0]).astype(np.int64)
+                if len(npdf) else None)
         primes = CHECKSUM_PRIMES[np.arange(
             (gbuf if gbuf is not None else nbuf).size) % 11]
         cks_g = int(np.sum(gbuf % primes)) if gbuf is not None else 0
@@ -276,8 +301,7 @@ def overview_sum(tiles: DataFrame, resampler: str = "sum") -> DataFrame:
         z = int(pdf["z"].iloc[0]) - 1
         out = np.zeros((tile_px, tile_px), dtype=TILE_DTYPE)
         for tx, ty, buf in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-            child = np.frombuffer(buf, dtype=TILE_DTYPE).reshape(
-                tile_px, tile_px)
+            child = decode_tile(buf)
             if resampler in ("mode", "rms"):
                 # blocks[..., k] in window scan order (dy, dx):
                 # (0,0) (0,1) (1,0) (1,1)
@@ -298,11 +322,8 @@ def overview_sum(tiles: DataFrame, resampler: str = "sum") -> DataFrame:
             oy = (int(ty) % 2) * (tile_px // 2)
             ox = (int(tx) % 2) * (tile_px // 2)
             out[oy:oy + tile_px // 2, ox:ox + tile_px // 2] = half
-        return pd.DataFrame({
-            "z": [z], "tx": [ptx], "ty": [pty], "band": [1],
-            "gt": [tile_geotransform(ptx, pty, z)],
-            "data": [out.tobytes()],
-        })
+        return pd.DataFrame([tile_row(z, ptx, pty, 1, out)],
+                            columns=TILE_COLUMNS)
 
     keyed = tiles.withColumns({"_ptx": F.expr("tx div 2"),
                                "_pty": F.expr("ty div 2")})
@@ -414,7 +435,7 @@ def raster_stats(tiles: DataFrame) -> DataFrame:
         for pdf in batches:
             rows = []
             for raw in pdf["data"]:
-                buf = np.frombuffer(raw, dtype=TILE_DTYPE).astype(np.int64)
+                buf = decode_pixels(raw).astype(np.int64)
                 rows.append((buf.size, int(buf.min()), int(buf.max()),
                              int(buf.sum()), int((buf * buf).sum())))
             yield pd.DataFrame(rows, columns=["n", "mn", "mx", "s", "sq"])
@@ -476,7 +497,7 @@ def histogram(tiles: DataFrame, n_buckets: int = HIST_BUCKETS) -> DataFrame:
         for pdf in batches:
             acc = np.zeros(n_buckets, dtype=np.int64)
             for raw in pdf["data"]:
-                buf = np.frombuffer(raw, dtype=TILE_DTYPE).astype(np.int64)
+                buf = decode_pixels(raw).astype(np.int64)
                 acc += np.bincount(np.minimum(buf, n_buckets - 1),
                                    minlength=n_buckets)
             yield pd.DataFrame({"bucket": np.arange(n_buckets),
@@ -534,7 +555,7 @@ def gather_pixels(pixels: DataFrame, tiles: DataFrame, raster_px: int,
         for pdf in batches:
             for raw, px, tx, ty in zip(pdf["data"], pdf["px"],
                                        pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
+                buf = decode_tile(raw)
                 p = pd.DataFrame(list(px))
                 ly = p["gy"].to_numpy(np.int64) - int(ty) * t
                 lx = p["gx"].to_numpy(np.int64) - int(tx) * t
@@ -719,31 +740,15 @@ def sample_at_points(tiles: DataFrame, points: DataFrame,
                      z: int) -> DataFrame:
     """Nearest-neighbour raster sampling at world coordinates
     (InterpolateAtPoint nearest, gcore/gdalrasterband.cpp:9963): points
-    outside any materialized tile sample 0 (sparse raster semantics)."""
-    tile_px = TILE_PX
+    (qid, lon, lat) → (qid, value), one row per query. The pixel fetch is
+    gather_pixels (one buffer decode per tile); a point over an
+    unmaterialized tile or with a NULL, NaN or out-of-range coordinate
+    samples 0 (sparse raster semantics)."""
     gxe, gye = gpixel_exprs(z)
-    pts = (
-        points.withColumn("gx", F.expr(gxe)).withColumn("gy", F.expr(gye))
-        .withColumn("tx", F.expr(f"gx div {tile_px}"))
-        .withColumn("ty", F.expr(f"gy div {tile_px}"))
-    )
-    joined = pts.join(tiles.select("tx", "ty", "data"), ["tx", "ty"], "left")
-
-    def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vals = np.zeros(len(pdf), dtype=np.int64)
-            for i, (raw, gx, gy, tx, ty) in enumerate(zip(
-                    pdf["data"], pdf["gx"], pdf["gy"], pdf["tx"], pdf["ty"])):
-                if raw is None:
-                    continue
-                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(
-                    tile_px, tile_px)
-                vals[i] = int(buf[int(gy) - int(ty) * tile_px,
-                                  int(gx) - int(tx) * tile_px])
-            yield pd.DataFrame({"qid": pdf["qid"],
-                                "value": pd.Series(vals, dtype="int64")})
-
-    return joined.mapInPandas(gather, "qid long, value long")
+    px = points.selectExpr("qid", f"{gxe} as gx", f"{gye} as gy")
+    vals = gather_pixels(px, tiles, TILE_PX << z, ["qid"])
+    return points.select("qid").join(vals, "qid", "left").selectExpr(
+        "cast(qid as bigint) as qid", "coalesce(value, 0) as value")
 
 
 # ---------------------------------------------------------------------------
@@ -751,12 +756,56 @@ def sample_at_points(tiles: DataFrame, points: DataFrame,
 # ---------------------------------------------------------------------------
 
 
+def halo_exchange(tiles: DataFrame, raster_px: int, kernel,
+                  schema: str) -> DataFrame:
+    """The 1-px halo exchange of every 3×3 focal op (gdaldem's
+    neighbourhood window, apps/gdaldem_lib.cpp; the contour cells): each
+    tile is shipped to the 9 assembly groups that need any of its pixels,
+    and each group zero-fills a (TILE_PX+2)² window around its tile —
+    pixels outside the raster or of an unmaterialized tile read 0. Then
+    ``kernel(win, gx, gy)`` gets the window and the global pixel indices
+    of the group tile's own pixels (``win[1:-1, 1:-1]``) and returns the
+    group's output rows, typed by ``schema``."""
+    t = TILE_PX
+    n_tiles = raster_px // t
+
+    shifted = tiles.select(
+        "tx", "ty", "data",
+        F.explode(F.expr(
+            "transform(sequence(0, 8),"
+            " k -> struct(tx + k % 3 - 1 as htx, ty + k div 3 - 1 as hty))"
+        )).alias("h"),
+    ).select(F.col("h.htx").alias("htx"), F.col("h.hty").alias("hty"),
+             "tx", "ty", "data") \
+     .filter(f"htx >= 0 and htx < {n_tiles} and hty >= 0 and hty < {n_tiles}")
+
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        htx, hty = int(key[0]), int(key[1])
+        win = np.zeros((t + 2, t + 2), dtype=np.int64)
+        for tx, ty, raw in zip(pdf["tx"], pdf["ty"], pdf["data"]):
+            dy = (int(ty) - hty) * t
+            dx = (int(tx) - htx) * t
+            ys = slice(max(0, 1 + dy), min(t + 2, 1 + dy + t))
+            xs = slice(max(0, 1 + dx), min(t + 2, 1 + dx + t))
+            win[ys, xs] = decode_tile(raw)[
+                ys.start - (1 + dy):ys.stop - (1 + dy),
+                xs.start - (1 + dx):xs.stop - (1 + dx)]
+        gy, gx = np.mgrid[0:t, 0:t]
+        return kernel(win, gx + htx * t, gy + hty * t)
+
+    return shifted.groupBy("htx", "hty").applyInPandas(assemble, schema)
+
+
+def _interior(gx: np.ndarray, gy: np.ndarray, raster_px: int) -> np.ndarray:
+    """Mask of the pixels with a full 3×3 window inside the raster."""
+    return (gx > 0) & (gx < raster_px - 1) & (gy > 0) & (gy < raster_px - 1)
+
+
 def halo_gradient(tiles: DataFrame, raster_px: int,
                   alg: str = "horn") -> DataFrame:
-    """3×3 gradient over a tiled integer raster with 1-px halo
-    exchange: every tile is shipped to the 9 assembly groups that need any
-    of its pixels; each group builds a (tile_px+2)² window and evaluates
-    the integer numerators. ``alg='horn'`` (apps/gdaldem_lib.cpp:767-772):
+    """3×3 gradient over a tiled integer raster (halo_exchange kernel):
+    the integer numerators of every interior pixel.
+    ``alg='horn'`` (apps/gdaldem_lib.cpp:767-772):
 
         num_x = (w0 + 2·w3 + w6) − (w2 + 2·w5 + w8)
         num_y = (w6 + 2·w7 + w8) − (w0 + 2·w1 + w2)
@@ -767,33 +816,9 @@ def halo_gradient(tiles: DataFrame, raster_px: int,
     Raster-edge pixels are skipped (gdaldem default: no edge values unless
     -compute_edges). Output: one row per interior pixel.
     """
-    tile_px = TILE_PX
-    n_tiles = raster_px // tile_px
 
-    shifted = tiles.select(
-        "tx", "ty", "data",
-        F.explode(F.expr(
-            "transform(sequence(0, 8),"
-            " k -> struct(tx + k % 3 - 1 as htx, ty + k div 3 - 1 as hty))"
-        )).alias("h"),
-    ).select(F.col("h.htx").alias("htx"), F.col("h.hty").alias("hty"),
-             "tx", "ty", "data") \
-     .filter(f"htx >= 0 and htx < {n_tiles} and hty >= 0 and hty < {n_tiles}")
-
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        htx, hty = int(key[0]), int(key[1])
-        win = np.zeros((tile_px + 2, tile_px + 2), dtype=np.int64)
-        for _, row in pdf.iterrows():
-            buf = np.frombuffer(row["data"], dtype=TILE_DTYPE).reshape(
-                tile_px, tile_px)
-            dy = (int(row["ty"]) - hty) * tile_px
-            dx = (int(row["tx"]) - htx) * tile_px
-            ys = slice(max(0, 1 + dy), min(tile_px + 2, 1 + dy + tile_px))
-            xs = slice(max(0, 1 + dx), min(tile_px + 2, 1 + dx + tile_px))
-            by = slice(ys.start - (1 + dy), ys.stop - (1 + dy))
-            bx = slice(xs.start - (1 + dx), xs.stop - (1 + dx))
-            win[ys, xs] = buf[by, bx]
-        w = win
+    def kernel(w: np.ndarray, gx: np.ndarray,
+               gy: np.ndarray) -> pd.DataFrame:
         if alg == "zt":
             num_x = w[1:-1, :-2] - w[1:-1, 2:]
             num_y = w[2:, 1:-1] - w[:-2, 1:-1]
@@ -802,57 +827,28 @@ def halo_gradient(tiles: DataFrame, raster_px: int,
                      - (w[:-2, 2:] + 2 * w[1:-1, 2:] + w[2:, 2:]))
             num_y = ((w[2:, :-2] + 2 * w[2:, 1:-1] + w[2:, 2:])
                      - (w[:-2, :-2] + 2 * w[:-2, 1:-1] + w[:-2, 2:]))
-        gy, gx = np.mgrid[0:tile_px, 0:tile_px]
-        gx = gx + htx * tile_px
-        gy = gy + hty * tile_px
-        interior = ((gx > 0) & (gx < raster_px - 1)
-                    & (gy > 0) & (gy < raster_px - 1))
+        interior = _interior(gx, gy, raster_px)
         return pd.DataFrame({
-            "gx": gx[interior].ravel(), "gy": gy[interior].ravel(),
-            "num_x": num_x[interior].ravel(),
-            "num_y": num_y[interior].ravel(),
+            "gx": gx[interior], "gy": gy[interior],
+            "num_x": num_x[interior], "num_y": num_y[interior],
         })
 
-    return shifted.groupBy("htx", "hty").applyInPandas(
-        assemble, "gx long, gy long, num_x long, num_y long")
+    return halo_exchange(tiles, raster_px, kernel,
+                         "gx long, gy long, num_x long, num_y long")
 
 
 def halo_tri_tpi_roughness(tiles: DataFrame, raster_px: int) -> DataFrame:
     """The remaining gdaldem 3×3 terrain kernels (apps/gdaldem_lib.cpp —
-    TRI Wilson, TPI, roughness) over the same 1-px halo exchange,
-    integer-scaled so both engines compare exactly:
+    TRI Wilson, TPI, roughness) over halo_exchange, integer-scaled so
+    both engines compare exactly:
 
         tri8  = Σ |center − neighbor|      (Wilson TRI × 8)
         tpi8  = 8·center − Σ neighbors     (TPI × 8)
         rough = max(window) − min(window)
     """
-    tile_px = TILE_PX
-    n_tiles = raster_px // tile_px
 
-    shifted = tiles.select(
-        "tx", "ty", "data",
-        F.explode(F.expr(
-            "transform(sequence(0, 8),"
-            " k -> struct(tx + k % 3 - 1 as htx, ty + k div 3 - 1 as hty))"
-        )).alias("h"),
-    ).select(F.col("h.htx").alias("htx"), F.col("h.hty").alias("hty"),
-             "tx", "ty", "data") \
-     .filter(f"htx >= 0 and htx < {n_tiles} and hty >= 0 and hty < {n_tiles}")
-
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        htx, hty = int(key[0]), int(key[1])
-        win = np.zeros((tile_px + 2, tile_px + 2), dtype=np.int64)
-        for _, row in pdf.iterrows():
-            buf = np.frombuffer(row["data"], dtype=TILE_DTYPE).reshape(
-                tile_px, tile_px)
-            dy = (int(row["ty"]) - hty) * tile_px
-            dx = (int(row["tx"]) - htx) * tile_px
-            ys = slice(max(0, 1 + dy), min(tile_px + 2, 1 + dy + tile_px))
-            xs = slice(max(0, 1 + dx), min(tile_px + 2, 1 + dx + tile_px))
-            by = slice(ys.start - (1 + dy), ys.stop - (1 + dy))
-            bx = slice(xs.start - (1 + dx), xs.stop - (1 + dx))
-            win[ys, xs] = buf[by, bx]
-        w = win
+    def kernel(w: np.ndarray, gx: np.ndarray,
+               gy: np.ndarray) -> pd.DataFrame:
         c = w[1:-1, 1:-1]
         nbs = [w[:-2, :-2], w[:-2, 1:-1], w[:-2, 2:],
                w[1:-1, :-2], w[1:-1, 2:],
@@ -861,20 +857,15 @@ def halo_tri_tpi_roughness(tiles: DataFrame, raster_px: int) -> DataFrame:
         tpi8 = 8 * c - sum(nbs)
         all9 = np.stack(nbs + [c])
         rough = all9.max(axis=0) - all9.min(axis=0)
-        gy, gx = np.mgrid[0:tile_px, 0:tile_px]
-        gx = gx + htx * tile_px
-        gy = gy + hty * tile_px
-        interior = ((gx > 0) & (gx < raster_px - 1)
-                    & (gy > 0) & (gy < raster_px - 1))
+        interior = _interior(gx, gy, raster_px)
         return pd.DataFrame({
-            "gx": gx[interior].ravel(), "gy": gy[interior].ravel(),
-            "tri8": tri8[interior].ravel(),
-            "tpi8": tpi8[interior].ravel(),
-            "rough": rough[interior].ravel(),
+            "gx": gx[interior], "gy": gy[interior],
+            "tri8": tri8[interior], "tpi8": tpi8[interior],
+            "rough": rough[interior],
         })
 
-    return shifted.groupBy("htx", "hty").applyInPandas(
-        assemble, "gx long, gy long, tri8 long, tpi8 long, rough long")
+    return halo_exchange(tiles, raster_px, kernel,
+                         "gx long, gy long, tri8 long, tpi8 long, rough long")
 
 
 def tri_tpi_roughness_oracle_sql(raster_px: int) -> str:
@@ -925,8 +916,7 @@ def color_relief(tiles: DataFrame, window_tx: int,
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for raw, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                e = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t) \
-                      .astype(np.float64)
+                e = decode_tile(raw).astype(np.float64)
                 chans = []
                 for ci in range(3):
                     out = np.full(e.shape, float(COLOR_RAMP[-1][1][ci]))
@@ -975,38 +965,46 @@ from m
 """
 
 
-def synth_dem_tiles(spark, raster_px: int = 256) -> DataFrame:
-    """Deterministic synthetic DEM: elev(gx, gy) = (gx·gx·5 + gy·gy·3 +
-    gx·gy) % 211 — closed-form, so the oracle can evaluate any neighbor
-    without tiles. Built as tile rows via applyInPandas."""
-    tile_px = TILE_PX
-    n_tiles = raster_px // tile_px
+DEM_ELEV_SQL = "((gx * gx * 5 + gy * gy * 3 + gx * gy) % 211)"
+
+
+def dem_elev_np(gx, gy):
+    """DEM_ELEV_SQL in numpy: the synthetic DEM's elevation at (gx, gy)."""
+    return (gx * gx * 5 + gy * gy * 3 + gx * gy) % 211
+
+
+def dem_elev_sql(x: str, y: str) -> str:
+    """DEM_ELEV_SQL at the pixel (x, y) — SQL expressions of gx, gy."""
+    return DEM_ELEV_SQL.replace("gx", f"({x})").replace("gy", f"({y})")
+
+
+def synth_band_tiles(spark, formula_np, raster_px: int,
+                     band: int) -> DataFrame:
+    """Tile rows (z 0) of one band of a synthetic raster_px² raster with
+    the closed-form value ``formula_np(gx, gy)`` — the builder of every
+    synthetic fixture; the oracles evaluate the same closed form in SQL
+    without tiles."""
+    n_tiles = raster_px // TILE_PX
     keys = spark.range(n_tiles * n_tiles).select(
         (F.col("id") % n_tiles).alias("_tx"),
         (F.col("id") / n_tiles).cast("long").alias("_ty"))
 
     def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
-        gy, gx = np.mgrid[0:tile_px, 0:tile_px]
-        gx = gx + tx * tile_px
-        gy = gy + ty * tile_px
-        elev = ((gx * gx * 5 + gy * gy * 3 + gx * gy) % 211) \
-            .astype(TILE_DTYPE)
-        return pd.DataFrame({
-            "z": [0], "tx": [tx], "ty": [ty], "band": [1],
-            "gt": [tile_geotransform(tx, ty, 0)],
-            "data": [elev.tobytes()],
-        })
+        gy, gx = np.mgrid[0:TILE_PX, 0:TILE_PX]
+        vals = formula_np(gx + tx * TILE_PX, gy + ty * TILE_PX)
+        return pd.DataFrame([tile_row(0, tx, ty, band, vals)],
+                            columns=TILE_COLUMNS)
 
     return keys.groupBy("_tx", "_ty").applyInPandas(build, TILE_SCHEMA)
 
 
-DEM_ELEV_SQL = "((gx * gx * 5 + gy * gy * 3 + gx * gy) % 211)"
+def synth_dem_tiles(spark, raster_px: int = 256) -> DataFrame:
+    """Deterministic synthetic DEM, elevation dem_elev_np(gx, gy) =
+    (gx·gx·5 + gy·gy·3 + gx·gy) % 211 — closed-form, so the oracle can
+    evaluate any neighbor without tiles."""
+    return synth_band_tiles(spark, dem_elev_np, raster_px, 1)
 
-
-def dem_elev_sql(x: str, y: str) -> str:
-    """DEM_ELEV_SQL at the pixel (x, y) — SQL expressions of gx, gy."""
-    return DEM_ELEV_SQL.replace("gx", f"({x})").replace("gy", f"({y})")
 
 OVERLAY_VAL_SQL = "((gx * 7 + gy * gy * 11 + 13) % 199)"
 
@@ -1030,31 +1028,16 @@ def collar_val_sql(raster_px: int) -> str:
 def synth_collar_tiles(spark, raster_px: int) -> DataFrame:
     """Tile rows of the nearblack fixture (see collar_val_sql — the
     numpy formula here is its transcription)."""
-    tile_px = TILE_PX
-    n_tiles = raster_px // tile_px
     w1 = raster_px - 1
-    keys = spark.range(n_tiles * n_tiles).select(
-        (F.col("id") % n_tiles).alias("_tx"),
-        (F.col("id") / n_tiles).cast("long").alias("_ty"))
 
-    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        gy, gx = np.mgrid[0:tile_px, 0:tile_px]
-        gx = gx + tx * tile_px
-        gy = gy + ty * tile_px
+    def collar(gx, gy):
         bd = np.minimum(np.minimum(gx, gy), np.minimum(w1 - gx, w1 - gy))
         dark = (bd < 3 + (gx * 7 + gy * 5) % 6) \
             | ((gx >= 40) & (gx <= 47) & (gy >= 40) & (gy <= 47)) \
             | ((gx >= 100) & (gx <= 105) & (gy >= 90) & (gy <= 96))
-        elev = (gx * gx * 5 + gy * gy * 3 + gx * gy) % 211
-        val = np.where(dark, (gx + gy) % 5, 8 + elev).astype(TILE_DTYPE)
-        return pd.DataFrame({
-            "z": [0], "tx": [tx], "ty": [ty], "band": [1],
-            "gt": [tile_geotransform(tx, ty, 0)],
-            "data": [val.tobytes()],
-        })
+        return np.where(dark, (gx + gy) % 5, 8 + dem_elev_np(gx, gy))
 
-    return keys.groupBy("_tx", "_ty").applyInPandas(build, TILE_SCHEMA)
+    return synth_band_tiles(spark, collar, raster_px, 1)
 
 
 def synth_overlay_tiles(spark, raster_px: int,
@@ -1063,28 +1046,13 @@ def synth_overlay_tiles(spark, raster_px: int,
     (x0, x1, y0, y1), 0 (= nodata) outside — the closed form lets the
     oracle evaluate it without tiles; in-window zeros exercise the
     nodata fall-through organically."""
-    tile_px = TILE_PX
-    n_tiles = raster_px // tile_px
     x0, x1, y0, y1 = window
-    keys = spark.range(n_tiles * n_tiles).select(
-        (F.col("id") % n_tiles).alias("_tx"),
-        (F.col("id") / n_tiles).cast("long").alias("_ty"))
 
-    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        gy, gx = np.mgrid[0:tile_px, 0:tile_px]
-        gx = gx + tx * tile_px
-        gy = gy + ty * tile_px
-        val = ((gx * 7 + gy * gy * 11 + 13) % 199).astype(TILE_DTYPE)
+    def overlay(gx, gy):
         inside = (gx >= x0) & (gx < x1) & (gy >= y0) & (gy < y1)
-        val = np.where(inside, val, 0).astype(TILE_DTYPE)
-        return pd.DataFrame({
-            "z": [0], "tx": [tx], "ty": [ty], "band": [1],
-            "gt": [tile_geotransform(tx, ty, 0)],
-            "data": [val.tobytes()],
-        })
+        return np.where(inside, (gx * 7 + gy * gy * 11 + 13) % 199, 0)
 
-    return keys.groupBy("_tx", "_ty").applyInPandas(build, TILE_SCHEMA)
+    return synth_band_tiles(spark, overlay, raster_px, 1)
 
 
 MOSAIC_NODATA = 0
@@ -1108,22 +1076,16 @@ def mosaic_tiles(tiles_a: DataFrame, tiles_b: DataFrame) -> DataFrame:
         for pdf in batches:
             out = []
             for _, r in pdf.iterrows():
-                buf_a = (np.frombuffer(r["data_a"], dtype=TILE_DTYPE)
-                         .reshape(t, t) if r["data_a"] is not None
+                buf_a = (decode_tile(r["data_a"]) if r["data_a"] is not None
                          else np.full((t, t), MOSAIC_NODATA,
                                       dtype=TILE_DTYPE))
-                buf_b = (np.frombuffer(r["data_b"], dtype=TILE_DTYPE)
-                         .reshape(t, t) if r["data_b"] is not None
+                buf_b = (decode_tile(r["data_b"]) if r["data_b"] is not None
                          else np.full((t, t), MOSAIC_NODATA,
                                       dtype=TILE_DTYPE))
                 buf = np.where(buf_b != MOSAIC_NODATA, buf_b, buf_a)
-                out.append((int(r["z"]), int(r["tx"]), int(r["ty"]),
-                            int(r["band"]),
-                            tile_geotransform(int(r["tx"]), int(r["ty"]),
-                                              int(r["z"])),
-                            buf.astype(TILE_DTYPE).tobytes()))
-            yield pd.DataFrame(out, columns=["z", "tx", "ty", "band",
-                                             "gt", "data"])
+                out.append(tile_row(int(r["z"]), int(r["tx"]), int(r["ty"]),
+                                    int(r["band"]), buf))
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return j.mapInPandas(composite, TILE_SCHEMA)
 
@@ -1158,13 +1120,8 @@ def map_algebra(tiles: DataFrame, kernel) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = pdf.copy()
-            out["data"] = [
-                np.ascontiguousarray(
-                    kernel(np.frombuffer(raw, dtype=TILE_DTYPE)
-                           .reshape(TILE_PX, TILE_PX)).astype(TILE_DTYPE)
-                ).tobytes()
-                for raw in pdf["data"]
-            ]
+            out["data"] = [encode_tile(kernel(decode_tile(raw)))
+                           for raw in pdf["data"]]
             yield out
 
     return tiles.mapInPandas(run, TILE_SCHEMA)
@@ -1259,6 +1216,16 @@ from hc
 """
 
 
+def ms_case_index(win: np.ndarray, level: float) -> np.ndarray:
+    """Marching-squares case index (alg/marching_squares/) of the 2×2
+    cells whose top-left pixel is a tile pixel of the halo window ``win``:
+    8·tl + 4·tr + 2·br + 1·bl, a bit set where the pixel is above
+    ``level``."""
+    above = win > level
+    return (8 * above[1:-1, 1:-1] + 4 * above[1:-1, 2:]
+            + 2 * above[2:, 2:] + 1 * above[2:, 1:-1])
+
+
 def contour_cells(tiles: DataFrame, raster_px: int,
                   threshold: float) -> DataFrame:
     """Marching-squares cell classification (alg/contour.cpp,
@@ -1270,55 +1237,24 @@ def contour_cells(tiles: DataFrame, raster_px: int,
 
     Emits the non-trivial cells (idx ∉ {0,15}) with their iso-segment
     count (saddle cases 5/10 carry two segments). Cross-tile blocks are
-    handled by the same 1-px halo exchange as the focal ops — the border
+    handled by the same halo_exchange as the focal ops — the border
     stitch that makes distributed contouring exact.
     """
-    t = TILE_PX
-    n_tiles = raster_px // t
 
-    shifted = tiles.select(
-        "tx", "ty", "data",
-        F.explode(F.expr(
-            "transform(sequence(0, 8),"
-            " k -> struct(tx + k % 3 - 1 as htx, ty + k div 3 - 1 as hty))"
-        )).alias("h"),
-    ).select(F.col("h.htx").alias("htx"), F.col("h.hty").alias("hty"),
-             "tx", "ty", "data") \
-     .filter(f"htx >= 0 and htx < {n_tiles} and hty >= 0 and hty < {n_tiles}")
-
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        htx, hty = int(key[0]), int(key[1])
-        win = np.zeros((t + 2, t + 2), dtype=np.int64)
-        for _, row in pdf.iterrows():
-            buf = np.frombuffer(row["data"], dtype=TILE_DTYPE).reshape(t, t)
-            dy = (int(row["ty"]) - hty) * t
-            dx = (int(row["tx"]) - htx) * t
-            ys = slice(max(0, 1 + dy), min(t + 2, 1 + dy + t))
-            xs = slice(max(0, 1 + dx), min(t + 2, 1 + dx + t))
-            win[ys, xs] = buf[ys.start - (1 + dy):ys.stop - (1 + dy),
-                              xs.start - (1 + dx):xs.stop - (1 + dx)]
-        above = win > threshold
-        # cells whose top-left pixel lives in this tile: window rows/cols
-        # 1..t (+ their right/bottom neighbors from the halo)
-        tl = above[1:t + 1, 1:t + 1]
-        tr = above[1:t + 1, 2:t + 2]
-        br = above[2:t + 2, 2:t + 2]
-        bl = above[2:t + 2, 1:t + 1]
-        idx = 8 * tl + 4 * tr + 2 * br + 1 * bl
-        gy, gx = np.mgrid[0:t, 0:t]
-        gx = gx + htx * t
-        gy = gy + hty * t
+    def kernel(win: np.ndarray, gx: np.ndarray,
+               gy: np.ndarray) -> pd.DataFrame:
+        idx = ms_case_index(win, threshold)
         valid = (gx < raster_px - 1) & (gy < raster_px - 1) \
             & (idx != 0) & (idx != 15)
         nseg = np.where((idx == 5) | (idx == 10), 2, 1)
         return pd.DataFrame({
-            "gx": gx[valid].ravel(), "gy": gy[valid].ravel(),
-            "ms_case": idx[valid].ravel().astype(np.int64),
-            "n_segments": nseg[valid].ravel().astype(np.int64),
+            "gx": gx[valid], "gy": gy[valid],
+            "ms_case": idx[valid].astype(np.int64),
+            "n_segments": nseg[valid].astype(np.int64),
         })
 
-    return shifted.groupBy("htx", "hty").applyInPandas(
-        assemble, "gx long, gy long, ms_case long, n_segments long")
+    return halo_exchange(tiles, raster_px, kernel,
+                         "gx long, gy long, ms_case long, n_segments long")
 
 
 # ---------------------------------------------------------------------------
@@ -1386,30 +1322,6 @@ PAN_SQL = ("(((gx * 7 + gy * 3) % 97 + 1) + ((gx * 5 + gy * 11) % 89 + 1)"
 PAN_PX = 256  # edge of the synthetic MS and pan rasters
 
 
-def synth_band_tiles(spark, formula_np, raster_px: int = 256,
-                     band: int = 1) -> DataFrame:
-    """Synthetic one-band tile table from a closed-form
-    ``formula_np(gx, gy) -> values`` (same pattern as synth_dem_tiles)."""
-    tile_px = TILE_PX
-    n_tiles = raster_px // tile_px
-    keys = spark.range(n_tiles * n_tiles).select(
-        (F.col("id") % n_tiles).alias("_tx"),
-        (F.col("id") / n_tiles).cast("long").alias("_ty"))
-
-    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        gy, gx = np.mgrid[0:tile_px, 0:tile_px]
-        vals = formula_np(gx + tx * tile_px, gy + ty * tile_px) \
-            .astype(TILE_DTYPE)
-        return pd.DataFrame({
-            "z": [0], "tx": [tx], "ty": [ty], "band": [band],
-            "gt": [tile_geotransform(tx, ty, 0)],
-            "data": [vals.tobytes()],
-        })
-
-    return keys.groupBy("_tx", "_ty").applyInPandas(build, TILE_SCHEMA)
-
-
 def pansharpen_brovey(spark, window_tx: int, window_ty: int) -> DataFrame:
     """Brovey pansharpening (alg/gdalpansharpen.cpp weighted-ratio path):
     3 synthetic MS bands + 1 pan band as tile tables, equi-joined on
@@ -1443,10 +1355,7 @@ def pansharpen_brovey(spark, window_tx: int, window_ty: int) -> DataFrame:
             for tx, ty, dr, dg, db_, dp in zip(
                     pdf["tx"], pdf["ty"], pdf["dr"], pdf["dg"],
                     pdf["db"], pdf["dp"]):
-                mr = np.frombuffer(dr, dtype=np.int64).reshape(t, t)
-                mg = np.frombuffer(dg, dtype=np.int64).reshape(t, t)
-                mb = np.frombuffer(db_, dtype=np.int64).reshape(t, t)
-                mp = np.frombuffer(dp, dtype=np.int64).reshape(t, t)
+                mr, mg, mb, mp = (decode_tile(d) for d in (dr, dg, db_, dp))
                 # expression order pinned to the SQL oracle:
                 # out = ms * (pan / (ms_r + ms_g + ms_b))
                 ratio = mp.astype(np.float64) / (mr + mg + mb)
@@ -1511,10 +1420,6 @@ def fillnodata_sql(points_sql: str, z: int, engine: str) -> str:
             return f"{col} div {t}"
 
         lst, srt, trn = "collect_list", "array_sort", "transform"
-
-        def fold(e: str) -> str:
-            return f"aggregate({e}, cast(0 as double), (s, v) -> s + v)"
-
         mk = ("struct(ox, oy, cast(cnt as double) as v,"
               " cast(ox * ox + oy * oy as double) as d2)")
     else:
@@ -1522,13 +1427,10 @@ def fillnodata_sql(points_sql: str, z: int, engine: str) -> str:
             return f"{col} // {t}"
 
         lst, srt, trn = "list", "list_sort", "list_transform"
-
-        def fold(e: str) -> str:
-            return (f"list_reduce(list_concat([cast(0 as double)],"
-                    f" {e}), (s, v) -> s + v)")
-
         mk = ("{'ox': ox, 'oy': oy, 'v': cast(cnt as double),"
               " 'd2': cast(ox * ox + oy * oy as double)}")
+    num, den = (_sum_fold_sql(f"{trn}(arr, a -> {term})", engine)
+                for term in ("a.v / a.d2", "1.0e0 / a.d2"))
     return f"""
 with px as (
   select {gxe} as gx, {gye} as gy, count(*) as cnt
@@ -1557,8 +1459,8 @@ packed as (
   from don group by gx, gy
 )
 select gx, gy, n_donors,
-       {fold(f"{trn}(arr, a -> a.v / a.d2)")}
-     / {fold(f"{trn}(arr, a -> 1.0e0 / a.d2)")} as fill_value
+       {num}
+     / {den} as fill_value
 from packed
 """
 
@@ -1566,11 +1468,6 @@ from packed
 # ---------------------------------------------------------------------------
 # Warp: reproject/resample between affine grids (gdalwarp semantics)
 # ---------------------------------------------------------------------------
-
-
-def _lit(v: float) -> str:
-    r = repr(float(v))
-    return r if "e" in r or "E" in r else r + "e0"
 
 
 def warp_pixel_sql(dst_gt: list[float],
@@ -1656,7 +1553,7 @@ def _area_partials(tiles: DataFrame, src_gt: list[float],
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for raw, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                buf = np.frombuffer(raw, dtype=TILE_DTYPE).reshape(t, t)
+                buf = decode_tile(raw)
                 gy, gx = np.mgrid[0:t, 0:t]
                 gx = gx + int(tx) * t
                 gy = gy + int(ty) * t
@@ -2414,7 +2311,7 @@ def equalize_tile_checksums(tiles: DataFrame,
         for pdf in batches:
             txs, tys, sums, outs = [], [], [], []
             for tx, ty, raw in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                buf = np.frombuffer(raw, dtype=TILE_DTYPE).astype(np.int64)
+                buf = decode_pixels(raw).astype(np.int64)
                 out = lut[buf]
                 txs.append(int(tx))
                 tys.append(int(ty))

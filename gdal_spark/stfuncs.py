@@ -24,15 +24,7 @@ from pyspark.sql import functions as F
 
 from gdal_spark import geom as G
 from gdal_spark import wkb as W
-
-
-def _rings_of(blob: bytes):
-    g = W.loads(bytes(blob))
-    if g["type"] == "Polygon":
-        return g["coords"]
-    if g["type"] == "MultiPolygon":
-        return [r for poly in g["coords"] for r in poly]
-    raise ValueError(f"not a polygon: {g['type']}")
+from gdal_spark.cells import _lit
 
 
 def _seq_sum(terms) -> float:
@@ -131,13 +123,15 @@ def _polygon_centroid_seq(rings) -> tuple[float, float]:
 
 
 def _st_centroid_x(col: pd.Series) -> pd.Series:
-    return pd.Series([_polygon_centroid_seq(_rings_of(b))[0] for b in col],
-                     dtype="float64")
+    return pd.Series(
+        [_polygon_centroid_seq(W.polygon_rings(b))[0] for b in col],
+        dtype="float64")
 
 
 def _st_centroid_y(col: pd.Series) -> pd.Series:
-    return pd.Series([_polygon_centroid_seq(_rings_of(b))[1] for b in col],
-                     dtype="float64")
+    return pd.Series(
+        [_polygon_centroid_seq(W.polygon_rings(b))[1] for b in col],
+        dtype="float64")
 
 
 def _st_contains_xy(col: pd.Series, xs: pd.Series,
@@ -149,7 +143,7 @@ def _st_contains_xy(col: pd.Series, xs: pd.Series,
         if b is None:
             continue
         out[i] = bool(G.points_in_polygon(xv[i:i + 1], yv[i:i + 1],
-                                          _rings_of(b))[0])
+                                          W.polygon_rings(b))[0])
     return pd.Series(out)
 
 
@@ -163,7 +157,7 @@ def _st_distance_xy(col: pd.Series, xs: pd.Series,
     for i, b in enumerate(col):
         if b is None:
             continue
-        rings = _rings_of(b)
+        rings = W.polygon_rings(b)
         if G.points_in_polygon(xv[i:i + 1], yv[i:i + 1], rings)[0]:
             out[i] = 0.0
             continue
@@ -374,7 +368,7 @@ def _st_centroid(col: pd.Series) -> pd.Series:
         g = W.loads(bytes(b))
         t = g["type"]
         if t in ("Polygon", "MultiPolygon"):
-            rings = _rings_of(b)
+            rings = W.polygon_rings(b)
             if all(_ring_area_seq(r) == 0.0 for r in rings):
                 # degenerate (zero-area, e.g. bowtie): vertex mean
                 v = np.vstack([np.asarray(r)[:-1] for r in rings])
@@ -488,7 +482,8 @@ def _st_issimple(col: pd.Series) -> pd.Series:
             out.append(not dup
                        and not _has_proper_self_intersection(arrs))
         else:
-            out.append(not _has_proper_self_intersection(_rings_of(b)))
+            out.append(
+                not _has_proper_self_intersection(W.polygon_rings(b)))
     return pd.Series(out, dtype="object")
 
 
@@ -772,11 +767,6 @@ def register_st_functions(spark: SparkSession) -> None:
 # ---------------------------------------------------------------------------
 # Contract fixture + DuckDB oracle for the ST_ surface
 # ---------------------------------------------------------------------------
-
-
-def _lit(v: float) -> str:
-    r = repr(float(v))
-    return r if "e" in r or "E" in r else r + "e0"
 
 
 def st_query_points(defs: list[dict]) -> list[tuple[int, float, float]]:

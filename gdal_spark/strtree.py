@@ -9,9 +9,9 @@ Arrow-batched UDFs with many points per call.
 
 Construction is Sort-Tile-Recursive (Leutenegger et al. 1997): sort leaf
 boxes by x into vertical slices, sort each slice by y, pack NODE_CAP boxes
-per node, repeat upward. Query returns candidate leaf indices whose boxes
-intersect the query box; the caller applies the exact predicate — the same
-bbox-first / exact-second staging as OGRLayer::FilterGeometry
+per node, repeat upward. A query returns (point, item) candidate pairs whose
+item box contains the point; the caller applies the exact predicate — the
+same bbox-first / exact-second staging as OGRLayer::FilterGeometry
 (ogr/ogrsf_frmts/generic/ogrlayer.cpp:2253-2325).
 """
 
@@ -31,7 +31,6 @@ class STRtree:
         self.n_items = len(boxes)
         if self.n_items == 0:
             self.levels: list[np.ndarray] = [np.empty((0, 4))]
-            self.level_children: list[np.ndarray] = []
             self.order = np.empty(0, dtype=np.int64)
             return
 
@@ -54,7 +53,6 @@ class STRtree:
 
         # build levels bottom-up: levels[0] = leaf boxes in packed order
         self.levels = [boxes[order]]
-        self.level_children = []
         while len(self.levels[-1]) > 1:
             child = self.levels[-1]
             m = math.ceil(len(child) / NODE_CAP)
@@ -67,32 +65,6 @@ class STRtree:
                 parent[i, 2] = seg[:, 2].max()
                 parent[i, 3] = seg[:, 3].max()
             self.levels.append(parent)
-            self.level_children.append(starts)
-
-    def query_box(self, minx: float, miny: float, maxx: float, maxy: float) -> np.ndarray:
-        """Original item indices whose boxes intersect the query box."""
-        if self.n_items == 0:
-            return np.empty(0, dtype=np.int64)
-        top = len(self.levels) - 1
-        nodes = np.arange(len(self.levels[top]))
-        for level in range(top, 0, -1):
-            b = self.levels[level][nodes]
-            hit = (
-                (b[:, 0] <= maxx) & (b[:, 2] >= minx)
-                & (b[:, 1] <= maxy) & (b[:, 3] >= miny)
-            )
-            nodes = nodes[hit]
-            if len(nodes) == 0:
-                return np.empty(0, dtype=np.int64)
-            child_count = len(self.levels[level - 1])
-            nodes = (nodes[:, None] * NODE_CAP + np.arange(NODE_CAP)[None, :]).ravel()
-            nodes = nodes[nodes < child_count]
-        b = self.levels[0][nodes]
-        hit = (
-            (b[:, 0] <= maxx) & (b[:, 2] >= minx)
-            & (b[:, 1] <= maxy) & (b[:, 3] >= miny)
-        )
-        return self.order[nodes[hit]]
 
     def query_points(self, px: np.ndarray, py: np.ndarray):
         """Bulk candidate generation for a batch of points.

@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gdal_spark.raster import TILE_DTYPE, TILE_PX
+from gdal_spark.raster import TILE_PX, decode_tile
 
 OBS_Z = 0.0  # observer height above the DEM
 TARGET_HEIGHT = 0.0  # target height above the DEM
@@ -250,8 +250,7 @@ def viewshed_exact(tiles: DataFrame, observers: DataFrame,
                 nty = py1 // t - twy0 + 1
                 buf = np.zeros((nty * t, ntx * t), dtype=np.float64)
                 for row in tl:
-                    b = np.frombuffer(row["data"],
-                                      dtype=TILE_DTYPE).reshape(t, t)
+                    b = decode_tile(row["data"])
                     y0 = (int(row["ty"]) - twy0) * t
                     x0 = (int(row["tx"]) - twx0) * t
                     buf[y0:y0 + t, x0:x0 + t] = b

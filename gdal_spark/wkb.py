@@ -224,6 +224,16 @@ def wkt_loads(text: str) -> dict:
     raise ValueError(f"unsupported WKT kind {kind}")
 
 
+def polygon_rings(buf: bytes) -> list[np.ndarray]:
+    """Every ring of a Polygon or MultiPolygon, members in order."""
+    g = loads(buf)
+    if g["type"] == "Polygon":
+        return g["coords"]
+    if g["type"] == "MultiPolygon":
+        return [r for poly in g["coords"] for r in poly]
+    raise ValueError(f"not a polygon: {g['type']}")
+
+
 def point_xy(buf: bytes) -> tuple[float, float]:
     """Fast path: decode a WKB point without building the dict."""
     bo, code, off = _read_header(bytes(buf), 0)

@@ -119,20 +119,6 @@ class TestWKB:
 
 
 class TestSTRtree:
-    def test_matches_bruteforce(self):
-        rng = np.random.default_rng(7)
-        lo = rng.uniform(0, 100, size=(300, 2))
-        boxes = np.hstack([lo, lo + rng.uniform(0.1, 8, size=(300, 2))])
-        tree = STRtree(boxes)
-        for qb in rng.uniform(0, 100, size=(25, 2)):
-            minx, miny = qb
-            maxx, maxy = minx + 5, miny + 5
-            got = set(tree.query_box(minx, miny, maxx, maxy).tolist())
-            want = set(np.flatnonzero(
-                (boxes[:, 0] <= maxx) & (boxes[:, 2] >= minx)
-                & (boxes[:, 1] <= maxy) & (boxes[:, 3] >= miny)).tolist())
-            assert got == want
-
     def test_query_points_matches_bruteforce(self):
         rng = np.random.default_rng(9)
         lo = rng.uniform(0, 50, size=(200, 2))
@@ -152,7 +138,8 @@ class TestSTRtree:
 
     def test_empty(self):
         tree = STRtree(np.empty((0, 4)))
-        assert len(tree.query_box(0, 0, 1, 1)) == 0
+        pt, it = tree.query_points(np.array([0.5]), np.array([0.5]))
+        assert len(pt) == 0 and len(it) == 0
 
 
 class TestZoneIndex:

@@ -82,6 +82,86 @@ def test_sample_at_points_hits_own_pixel(pts, tiles):
     assert all(r["value"] >= 1 for r in vals)
 
 
+def test_sample_at_points_sparse_and_invalid_queries(spark):
+    """One row per query; 0 over an unmaterialized tile and for a NULL,
+    NaN or out-of-range coordinate; duplicate coordinates each sample."""
+    import math
+
+    z, px = 1, 128  # 2×2 tiles of the synthetic DEM
+    tiles = synth_dem_tiles(spark, px).filter("not (tx = 1 and ty = 1)")
+
+    def center(gx, gy):  # WebMercator lon/lat of a pixel center
+        lon = (gx + 0.5) / px * 360.0 - 180.0
+        lat = math.degrees(math.atan(math.sinh(
+            math.pi * (1.0 - 2.0 * (gy + 0.5) / px))))
+        return lon, lat
+
+    gx, gy = 10, 20
+    elev = (gx * gx * 5 + gy * gy * 3 + gx * gy) % 211
+    assert elev != 0
+    lon, lat = center(gx, gy)
+    lon_sparse, lat_sparse = center(100, 100)  # in the dropped tile
+    nan = float("nan")
+    rows = [(1, lon, lat), (2, lon, lat), (3, lon_sparse, lat_sparse),
+            (4, None, lat), (5, lon, None), (6, nan, lat), (7, lon, nan),
+            (8, 200.0, lat), (9, lon, 95.0), (10, -180.5, lat)]
+    queries = spark.createDataFrame(rows, "qid long, lon double, lat double")
+    got = sample_at_points(tiles, queries, z).toPandas()
+    assert sorted(got["qid"]) == list(range(1, 11))
+    value = dict(zip(got["qid"], got["value"]))
+    assert value[1] == value[2] == elev
+    assert all(value[q] == 0 for q in range(3, 11)), value
+
+
+def _focal_np(w: np.ndarray) -> dict:
+    """The 3×3 focal numerators of every interior pixel of ``w``."""
+    c = w[1:-1, 1:-1]
+    nbs = [w[:-2, :-2], w[:-2, 1:-1], w[:-2, 2:], w[1:-1, :-2],
+           w[1:-1, 2:], w[2:, :-2], w[2:, 1:-1], w[2:, 2:]]
+    all9 = np.stack(nbs + [c])
+    return {
+        "horn_x": ((w[:-2, :-2] + 2 * w[1:-1, :-2] + w[2:, :-2])
+                   - (w[:-2, 2:] + 2 * w[1:-1, 2:] + w[2:, 2:])),
+        "horn_y": ((w[2:, :-2] + 2 * w[2:, 1:-1] + w[2:, 2:])
+                   - (w[:-2, :-2] + 2 * w[:-2, 1:-1] + w[:-2, 2:])),
+        "zt_x": w[1:-1, :-2] - w[1:-1, 2:],
+        "zt_y": w[2:, 1:-1] - w[:-2, 1:-1],
+        "tri8": sum(np.abs(c - n) for n in nbs),
+        "tpi8": 8 * c - sum(nbs),
+        "rough": all9.max(axis=0) - all9.min(axis=0),
+    }
+
+
+def test_halo_ops_on_sparse_tiles_match_zero_filled_numpy(spark):
+    """With one interior tile missing, every focal output equals numpy
+    over the whole raster with that tile's pixels read as 0."""
+    from gdal_spark.raster import halo_tri_tpi_roughness
+
+    px = 192  # 3×3 tiles; (1, 1) is the one interior tile
+    tiles = synth_dem_tiles(spark, px).filter("not (tx = 1 and ty = 1)")
+    gy, gx = np.mgrid[0:px, 0:px]
+    w = (gx * gx * 5 + gy * gy * 3 + gx * gy) % 211
+    w[TILE_PX:2 * TILE_PX, TILE_PX:2 * TILE_PX] = 0
+    want = _focal_np(w)
+
+    def grid(df, col):
+        pdf = df.toPandas().sort_values(["gy", "gx"])
+        assert len(pdf) == (px - 2) * (px - 2)
+        assert (pdf["gx"].to_numpy() == gx[1:-1, 1:-1].ravel()).all()
+        assert (pdf["gy"].to_numpy() == gy[1:-1, 1:-1].ravel()).all()
+        return pdf[col].to_numpy().reshape(px - 2, px - 2)
+
+    horn = halo_gradient(tiles, px)
+    zt = halo_gradient(tiles, px, alg="zt")
+    ttr = halo_tri_tpi_roughness(tiles, px)
+    np.testing.assert_array_equal(grid(horn, "num_x"), want["horn_x"])
+    np.testing.assert_array_equal(grid(horn, "num_y"), want["horn_y"])
+    np.testing.assert_array_equal(grid(zt, "num_x"), want["zt_x"])
+    np.testing.assert_array_equal(grid(zt, "num_y"), want["zt_y"])
+    for col in ("tri8", "tpi8", "rough"):
+        np.testing.assert_array_equal(grid(ttr, col), want[col])
+
+
 def test_halo_gradient_matches_whole_raster_numpy(spark):
     px = 128
     tiles = synth_dem_tiles(spark, px)

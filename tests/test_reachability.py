@@ -15,9 +15,10 @@ reference is any identifier a definition's body names (``Name``,
 shared by two modules keeps both alive: the check can miss dead code but
 never flags live code.
 
-Two more AST checks ride along: every default parameter of a public
-package function is set by some call (tests count as callers here), and
-every import is used in its scope.
+Three more AST checks ride along: every default parameter of a public
+package function is set by some call (tests count as callers here),
+every import is used in its scope, and no two package functions share
+argument names and body (a pasted copy).
 """
 
 from __future__ import annotations
@@ -286,3 +287,46 @@ def test_no_unused_import():
     unused = unused_imports()
     assert not unused, "unused import: " + ", ".join(
         f"{m}:{line} {n}" for m, line, n in unused)
+
+
+def _body_key(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> tuple:
+    """(argument names, AST dump of the body) of ``fn``, docstrings and
+    annotations left out at every nesting level."""
+
+    def strip(node: ast.AST) -> None:
+        for n in ast.walk(node):
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                n.returns = None
+                if n.body and isinstance(n.body[0], ast.Expr) \
+                        and isinstance(n.body[0].value, ast.Constant) \
+                        and isinstance(n.body[0].value.value, str):
+                    n.body = n.body[1:] or [ast.Pass()]
+            elif isinstance(n, ast.arg):
+                n.annotation = None
+            elif isinstance(n, ast.AnnAssign):
+                n.annotation = ast.Constant(None)
+
+    fn = ast.parse(ast.unparse(fn)).body[0]  # a copy to strip
+    strip(fn)
+    a = fn.args
+    names = tuple(p.arg for p in [*a.posonlyargs, *a.args, a.vararg,
+                                  *a.kwonlyargs, a.kwarg] if p)
+    return names, "\n".join(ast.dump(s) for s in fn.body)
+
+
+def duplicate_bodies() -> list[list[str]]:
+    """Groups of ``module:line name`` of functions in the package, nested
+    ones included, that share argument names and body."""
+    groups: dict[tuple, list[str]] = {}
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for n in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                groups.setdefault(_body_key(n), []).append(
+                    f"{_module_name(path)}:{n.lineno} {n.name}")
+    return [g for g in groups.values() if len(g) > 1]
+
+
+def test_no_duplicate_function_body():
+    dups = duplicate_bodies()
+    assert not dups, "pasted function bodies (fold into one): " + "; ".join(
+        ", ".join(g) for g in dups)
